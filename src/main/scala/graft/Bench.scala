@@ -14,58 +14,7 @@ object Bench {
     f"$s%d.$r%03d"
   }
 
-  /** FIFTH fingerprint session dependence, the ROOT of the r14 driver-vs-
-    * builder bimodal digests (28/261 queries, VERDICT r14 #3): Spark's
-    * canonicalizer orders commutative operands and comparison directions by
-    * hashCode, and EVERY canonicalized attribute's ExprId embeds
-    * `NamedExpression.jvmId` — a UUID randomized per JVM (normalized attrs
-    * are rebuilt as `ExprId(ordinal)` whose apply() fills in that module
-    * val). So any hash-ordering decision whose operands differ only
-    * through attributes is a cross-JVM coin flip — two stable digest
-    * states per query, reproduced at will in subset runs (q19's
-    * `isnotnull(x) AND multicommutativeop(...)` pair, url_canonicalize's
-    * lambda-side `'' = array_join(...)`, and the multi-distinct
-    * RewriteDistinctAggregates group-id assignment in the contamination
-    * card all diffed to exactly this). Fingerprinting is a TOOL concern,
-    * so the tool pins the UUID to a constant before any plan work —
-    * within a JVM nothing changes (all ExprIds share one module UUID
-    * either way); across JVMs hash-ordering becomes deterministic.
-    * Best-effort: if the reflective pin ever fails, the textual sorts in
-    * [[stripPlanText]] still bound the damage to multicommutativeop
-    * orderings. */
-  def pinCanonicalJvmId(): Boolean =
-    try {
-      val pinned = java.util.UUID.fromString("00000000-0000-4000-8000-000000000000")
-      val m = org.apache.spark.sql.catalyst.expressions.NamedExpression
-      val f = m.getClass.getDeclaredField("jvmId")
-      // a Scala object val compiles to a STATIC final — core reflection
-      // refuses those, so the write goes through Unsafe (jdk.unsupported,
-      // on the default module path). Called before any plan work, so no
-      // JIT has baked the old value into compiled code yet — and the
-      // read-back below verifies rather than assumes.
-      val uf = Class.forName("sun.misc.Unsafe").getDeclaredField("theUnsafe")
-      uf.setAccessible(true)
-      val unsafe = uf.get(null).asInstanceOf[sun.misc.Unsafe]
-      unsafe.putObject(unsafe.staticFieldBase(f), unsafe.staticFieldOffset(f), pinned)
-      // verify at FIELD level (reflective read): a getter read-back can lie
-      // in a WARM JVM, where the JIT may already have constant-folded the
-      // trusted static final into compiled ExprId.apply sites (observed in
-      // the shared test-suite JVM). Bench/FpDiag/PlanText call this before
-      // any Spark code runs, so no compiled reader exists yet and the field
-      // value is the one every later ExprId mint observes.
-      f.setAccessible(true)
-      f.get(m) == pinned
-    } catch { case _: Throwable => false }
-
   def main(args: Array[String]): Unit = {
-    // the pin is load-bearing for cross-JVM digest identity (ADVICE r15):
-    // surface a failure loudly (stderr + a JSON field below) instead of
-    // silently degrading to the textual-sort fallback
-    val jvmidPinned = pinCanonicalJvmId()
-    if (!jvmidPinned)
-      System.err.println("WARN Bench: pinCanonicalJvmId FAILED - plan " +
-        "fingerprints fall back to textual sorts only (digests may flap " +
-        "across JVMs; jvmid_pinned:false in the JSON line)")
     // Machine state BEFORE any of our own work. `load_start` (below) is
     // captured after the sf0.001 warmup pass, so it ALWAYS reads back our
     // own multi-minute local[32] warmup (~3-5) — three r13 runs chased a
@@ -85,12 +34,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.graft.rangejoin.bucketUs", "600000000")
-      // fingerprint determinism: scan-metadata lists (DataFilters etc.)
-      // truncate at this length on the PRE-normalized text, so the cut
-      // position shifts with the session-global exprId digit widths — print
-      // them whole; canonicalPlanText additionally collapses any list that
-      // still truncates
-      .config("spark.sql.maxMetadataStringLength", "100000")
       // StageStore read-back parallelism: the 4 MB default open-cost packs
       // a small staged relation's files into 1-2 splits, serializing every
       // downstream map stage; on local disk/tmpfs the real open cost is ~0
@@ -115,9 +58,12 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
       .filterNot(n => only.isEmpty && notBenched(n))
     val warmDir = "/root/testdata/sf0.001"
+    // failures outside the timed samples are counted, never swallowed
+    // silently: warm_failed / prime_failed / fp_err in the JSON line
+    var warmFailed, primeFailed, fpErr = 0
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
+      catch { case _: Throwable => warmFailed += 1 }
       finally graft.etl.CacheRegistry.releaseAll()
     }
 
@@ -132,7 +78,7 @@ object Bench {
     names.filter(SparkEntry.streamingQueries).foreach { name =>
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case _: Throwable => primeFailed += 1 }
       finally graft.etl.CacheRegistry.releaseAll()
       primeSecs(name) = (System.nanoTime() - t0) / 1e9
     }
@@ -172,12 +118,13 @@ object Bench {
         finally graft.etl.CacheRegistry.releaseAll()
       ((System.nanoTime() - t0) / 1e9, ok)
     }
-    // Physical-plan fingerprint: md5 of the canonicalized pre-execution plan
-    // (exprIds normalized, so the digest is stable across JVMs/rounds as
-    // long as the PLAN is the same). Round-over-round wall-time deltas on an
-    // identical fingerprint are machine noise by construction; a changed
-    // fingerprint pinpoints a real plan change. Written to the side file
-    // below (125 digests would blow the bounded stdout line).
+    // Physical-plan fingerprint: PlanWalk.digest of the pre-execution
+    // plan (a structural walk, independent of JVM, exprId allocation and
+    // session width, so the digest is stable across runs as long as the
+    // PLAN is the same). Round-over-round wall-time deltas on an identical
+    // fingerprint are machine noise by construction; a changed fingerprint
+    // pinpoints a real plan change. Written to the side file below (270
+    // digests would blow the bounded stdout line).
     def fingerprint(name: String): String =
       try {
         // Pristine cache state first: CacheManager substitutes any live
@@ -188,28 +135,25 @@ object Bench {
         // so clearing here costs nothing and makes the digest a function of
         // (code, fixture) only.
         spark.catalog.clearCache()
-        SparkEntry.consumeStreamPlanText() // drop any stale recording
-        val batchPlan = canonicalPlanText(SparkEntry.queries(name)(spark, sfDir))
+        SparkEntry.consumeStreamPlan() // drop any stale recording
+        val batchPlan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
         // streaming rows: the staged-replay memo makes the row's own plan a
         // scan of the staged sink — it says nothing about the STREAM's
         // computation, so a real plan change in the stream would not flip
         // the digest (ADVICE r15). SparkEntry records the re-constructed
         // streaming plan during row construction; fold it into the hash.
-        val plan = SparkEntry.consumeStreamPlanText() match {
-          case Some(sp) => batchPlan + "\n=== STREAM PLAN ===\n" + stripPlanText(sp)
-          case None => batchPlan
-        }
-        // adjudication aid: SPARK_GRAFT_FP_TEXT_DIR dumps the hashed text
-        // itself, so a flapped digest can be diffed token-by-token instead
-        // of re-derived from the 12-hex prefix
+        val plans = batchPlan +: SparkEntry.consumeStreamPlan().toSeq
+        // adjudication aid: SPARK_GRAFT_FP_TEXT_DIR dumps the hashed
+        // per-node token lines, so a flapped digest can be diffed node by
+        // node instead of re-derived from the 12-hex prefix
         sys.env.get("SPARK_GRAFT_FP_TEXT_DIR").foreach { d =>
           new java.io.File(d).mkdirs()
           val tw = new java.io.PrintWriter(s"$d/$name.txt", "UTF-8")
-          try tw.print(plan) finally tw.close()
+          try plans.flatMap(graft.etl.PlanWalk.tokens).foreach(tw.println)
+          finally tw.close()
         }
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.digest(plan.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-      } catch { case _: Throwable => "err" }
+        graft.etl.PlanWalk.digest(plans: _*)
+      } catch { case _: Throwable => fpErr += 1; "err" }
       finally graft.etl.CacheRegistry.releaseAll()
     val loadStart = loadavg()
     var escalated = 0
@@ -260,11 +204,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(fpOut, "UTF-8")
       try {
-        // cpus in the header (VERDICT r17 #7, second half): records the
-        // session width a digest set was produced under, so a reader can
-        // tell a cross-width comparison from a same-width one at a glance
-        // (digests themselves are width-normalized since r18)
-        w.println("{\"sf\":\"" + sfDir + "\",\"cpus\":" + cpus + ",\"queries\":{")
+        w.println(fpHeader(sfDir, cpus))
         w.println(samples.map { case (n, ts, l1) =>
           val ss = ts.map { case (t, ok) => if (ok) fmt(t) else "\"FAIL\"" }.mkString(",")
           // "prime" = the once-per-JVM FULL stream computation cost for the
@@ -275,7 +215,10 @@ object Bench {
         }.mkString(",\n"))
         w.println("}}")
       } finally w.close()
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"WARN Bench: fingerprint side file $fpOut not written: $e")
+    }
     val samplesNT = samples.map { case (n, ts, _) => (n, ts) }
     val failed = samplesNT.collect { case (n, ts) if ts.forall(!_._2) => n }
     // a query that crashed on SOME samples but succeeded on others still
@@ -339,365 +282,18 @@ object Bench {
     // warmup pass too (stages are keyed per fixture dir).
     val stagePrime = graft.etl.StageStore.primeSeconds
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":[$failedJson],"flaky":{$flaky},"iters":$iters,"load_entry":"$loadEntry","steal_s":$stealS,"steal_pct":$stealPct,"load_start":"$loadStart","load_end":"$loadEnd","escalated":$escalated,"jvmid_pinned":$jvmidPinned,"canon_converged":${!canonNonConverged.get()},"prime_s":${fmt(primeSecs.values.sum)},"total_with_prime":${fmt(total + primeSecs.values.sum)},"stage_prime":${fmt(stagePrime)},"noisy":{$noisy},"omitted_fastest":$omitted,"omitted_sec":$omittedSec,"queries":{${sb.toString}},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":[$failedJson],"flaky":{$flaky},"iters":$iters,"load_entry":"$loadEntry","steal_s":$stealS,"steal_pct":$stealPct,"load_start":"$loadStart","load_end":"$loadEnd","escalated":$escalated,"warm_failed":$warmFailed,"prime_failed":$primeFailed,"fp_err":$fpErr,"prime_s":${fmt(primeSecs.values.sum)},"total_with_prime":${fmt(total + primeSecs.values.sum)},"stage_prime":${fmt(stagePrime)},"noisy":{$noisy},"omitted_fastest":$omitted,"omitted_sec":$omittedSec,"queries":{${sb.toString}},"sf":"$sfDir"}"""
     )
     spark.stop()
   }
 
-  /** The text the plan fingerprint hashes: executedPlan canonicalized, then
-    * every session-order-dependent token stripped. canonicalized normalizes
-    * MOST exprIds, but several leak the session-global counters or JVM
-    * allocation state into the text:
-    *  - leaf nodes wrapping a physical payload (InMemoryRelation's cache
-    *    builder, scan RDDs) keep raw #N ids / [id=N] tags;
-    *  - broadcast variables print their session-sequential id
-    *    (`Broadcast(12)`);
-    *  - closures in object plans (mapPartitions) print JVM lambda class
-    *    names (`...$$Lambda$3050/0x00000008...`), numbered by
-    *    lambda-creation order;
-    *  - default @hex identity hashes on any object without toString.
-    * Custom expressions must ALSO have value-based (not identity)
-    * hashCode — canonicalization sorts commutative operands by hashCode, so
-    * an identity hash reorders them per-session (see FloatVectorDotConst /
-    * BloomMightContainLong). */
-  def canonicalPlanText(df: org.apache.spark.sql.DataFrame): String =
-    stripPlanText(df.queryExecution.executedPlan.canonicalized.toString)
-
-  /** The full text-normalization pipeline (split out so the digest's
-    * determinism properties are unit-testable on captured plan strings). */
-  private[graft] def stripPlanText(raw: String): String = {
-    val stripped = raw
-      .replaceAll("#\\d+", "#x")
-      .replaceAll("plan_id=\\d+", "plan_id=x")
-      .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-fA-F]+", "\\$\\$Lambda\\$x")
-      .replaceAll("@[0-9a-fA-F]+", "@x")
-      // JVM array toString ("[D@hex", "[F@hex", "[Ljava.lang.String;@hex")
-      // opens a bracket that never closes — it would permanently skew the
-      // depth counters every span/pair sort below relies on, leaving any
-      // containing DataFilters/multicommutativeop span unsorted (the
-      // sim_ann residual of the r15 full-run cross-check). Rewrite to a
-      // balanced token.
-      .replaceAll("\\[+(?:[ZBCSIJFD]|L[\\w.$]+;)@x", "arr@x")
-      .replaceAll("\\[id=\\d+\\]", "[id=x]")
-      .replaceAll("Broadcast\\((\\d+)\\)", "Broadcast(x)")
-      // a query that materializes its own cache during CONSTRUCTION (the
-      // curriculum family's driver-loop argmax pulls) embeds the executed
-      // child plan inside InMemoryRelation — including whole-stage-codegen
-      // ids (`*(N)`) and AQE stage numbers (`BroadcastQueryStage N`,
-      // `ShuffleQueryStage N`, `TableCacheQueryStage N`), both numbered by
-      // SESSION-GLOBAL counters (r14: pipeline_curriculum digest flapped
-      // between full runs on exactly these tokens). Anchored to the tree-
-      // art/operator position and the four stage-node names (ADVICE r14)
-      // so a literal "*(7)" inside expression/string content is preserved.
-      .replaceAll("(?m)^([\\s:+\\-|]*)\\*\\(\\d+\\)", "$1*(x)")
-      .replaceAll("(Broadcast|Shuffle|TableCache|Result)QueryStage \\d+",
-        "$1QueryStage x")
-      // a metadata list that still hit maxMetadataStringLength ends in an
-      // unclosed "...": its cut point tracks pre-normalization exprId
-      // widths, so the fragment is session-dependent garbage — collapse it
-      .replaceAll("(DataFilters|PartitionFilters|PushedFilters): \\[[^\\]]*?\\.\\.\\.", "$1: [truncated]")
-      // StageStore paths carry a per-JVM root (uuid) and a semanticHash
-      // segment that can differ across JVMs when the staged plan contains
-      // identity-hashed nodes — both are session tokens, not plan content
-      .replaceAll("graft_stage_[^\\]\\s,)]*", "graft_stage_x")
-      // logical streaming plans (hashed since r16 for the streaming rows)
-      // print per-INSTANCE java.util.UUIDs on nodes like EventTimeWatermark
-      // — a fresh random id every construction, never plan content (16/21
-      // streaming digests flapped on exactly this token in the r16 A/B
-      // cross-JVM check)
-      .replaceAll(
-        "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
-        "uuid-x")
-    // Width independence (VERDICT r17 #7): partition COUNTS in partitioning
-    // tokens are a function of `$SPARK_GRAFT_CPUS` (the sessions set
-    // spark.sql.shuffle.partitions = cpus), so the driver's 8-core scaling
-    // run and the committed 32-core file diverged on exactly these tokens
-    // (35 machinery-heavy rows). Normalizing EVERY partition count — also
-    // the literal ones (bucketed-write repartition(8), salt fan-outs) —
-    // makes digests comparable across widths; a pure bucket-count retune
-    // with no other plan change no longer flips a digest, which is the
-    // accepted trade (the count is config, the SHAPE is the plan). Runs
-    // BEFORE the fixpoint sorts so item ordering can't depend on width.
-    val widthNormalized = normalizePartitionCounts(stripped)
-    // Two session-order-dependent ORDERINGS survive the token stripping
-    // (both reproduced by flapping digests on the cluster-chain family,
-    // diffed via SPARK_GRAFT_FP_TEXT_DIR):
-    //  - multicommutativeop(...) prints commutative operands sorted by
-    //    hashCodes that depend on pre-normalization exprIds, i.e. on how
-    //    many expressions the session allocated before this query;
-    //  - RewriteDistinctAggregates emits the per-distinct-group partial
-    //    aggregates in hash-map iteration order, so two countDistinct
-    //    columns swap positions inside `functions=[...]` between sessions.
-    // Sorting the top-level items makes the digest a function of the
-    // MULTISET — the semantic content; any real change to an operand or
-    // aggregate still changes it.
-    //
-    // A THIRD session-order dependence (r13, diffed via the saved
-    // sim_pq_adc texts of a subset vs a full run): Spark's canonicalizer
-    // orders a commutative BINARY op's two children by hashCode, and
-    // MultiCommutativeOp's hashCode includes its `Class[_]` member — a
-    // per-JVM identity hash — so `(lit * multicommutativeop(...))` and
-    // `(multicommutativeop(...) * lit)` flip between sessions (observed on
-    // the whole PQ/quantize family: every floor(chain * 1e6) site). Other
-    // operand types hash structurally and are stable; the normalization
-    // therefore sorts ONLY pairs where a side is a multicommutativeop.
-    // Commutative binary pairs where a side is a multicommutativeop chain
-    // (the one JVM-random-hash operand class left after the jvmId pin):
-    // arithmetic since r13; AND/OR/= since r15 (q19 diffed to exactly an
-    // `isnotnull(x) AND multicommutativeop(...)` flip), plus comparison
-    // DIRECTION normalization (q11's `(5*x) < multicommutativeop(...)` ↔
-    // `multicommutativeop(...) > (5*x)`: Canonicalize picks the direction
-    // by hashCode, so the swap flips the operator too).
-    // Pass ORDER matters both ways (ADVICE r15): the pair/comparison
-    // passes rewrite item TEXT (a flipped comparison changes its first
-    // characters), so span-item sorts running first would bake a
-    // pre-canonical order (the r15 sim_ann residual) — but equally, a
-    // pair whose BOTH operands contain multicommutativeop spans is
-    // ordered on pre-canonical span-item text if the pair pass runs
-    // first. No single order is correct for every nesting, so the whole
-    // pass sequence iterates to a FIXPOINT: each iteration only ever
-    // rewrites toward the sorted form, so the sequence converges (every
-    // pass is a sort on a finite multiset); the bound is a backstop.
-    var cur = widthNormalized
-    var prev = ""
-    var rounds = 0
-    while (cur != prev && rounds < 5) {
-      prev = cur
-      val pairSorted = Seq(" * ", " + ", " AND ", " OR ", " = ")
-        .foldLeft(cur)(sortCommutativePairs)
-      val cmpSorted = Seq(" < " -> " > ", " <= " -> " >= ")
-        .foldLeft(pairSorted) { case (t, (lt, gt)) =>
-          normalizeComparisonPairs(normalizeComparisonPairs(t, lt, gt), gt, lt)
-        }
-      // Scan-metadata filter lists (DataFilters etc.) print the split
-      // conjunction in the same hash-decided order as the Filter node's
-      // AND chain; a conjunction is a set — sort the items.
-      val filterSorted = Seq("DataFilters: [", "PartitionFilters: [",
-        "PushedFilters: [").foldLeft(cmpSorted)(sortBracketSpans)
-      cur = sortBracketSpans(sortBracketSpans(filterSorted,
-        "multicommutativeop("), "functions=[")
-      rounds += 1
-    }
-    if (cur != prev) {
-      // loud failure, matching the round's stance elsewhere (jvmid_pinned
-      // WARN, setLastModified require): a silently non-converged
-      // canonicalization could reintroduce a cross-JVM digest flap with no
-      // diagnostic (ADVICE r16). Also surfaced as canon_converged:false in
-      // the bench JSON line.
-      canonNonConverged.set(true)
-      System.err.println("WARN: plan-text canonicalization hit the 5-round " +
-        "backstop without converging — fingerprint digests may be unstable " +
-        "across JVMs for the affected plan")
-    }
-    cur
-  }
-
-  /** Set when any [[stripPlanText]] call this JVM exited its fixpoint loop
-    * at the round backstop with the text still changing (ADVICE r16). */
-  private[graft] val canonNonConverged =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Rewrite the trailing numeric partition-count item of every
-    * `hashpartitioning(...)` / `rangepartitioning(...)` span to `n`
-    * (balanced-scan, not regex: the arguments contain nested parens, and
-    * only the LAST top-level item is the count), plus plain-regex
-    * `RoundRobinPartitioning(N)`. Partitioning expressions never nest
-    * inside each other, so a single left-to-right pass per marker covers
-    * every occurrence. */
-  private[graft] def normalizePartitionCounts(text: String): String = {
-    def pass(t: String, marker: String): String = {
-      val sb = new StringBuilder
-      var i = 0
-      var j = t.indexOf(marker, i)
-      while (j >= 0) {
-        sb.append(t.substring(i, j + marker.length))
-        var k = j + marker.length
-        var dp = 0
-        var lastComma = -1
-        var end = -1
-        while (end < 0 && k < t.length) {
-          val c = t.charAt(k)
-          if (c == '(' || c == '[') dp += 1
-          else if (c == ']') dp -= 1
-          else if (c == ')') { if (dp == 0) end = k else dp -= 1 }
-          else if (c == ',' && dp == 0) lastComma = k
-          k += 1
-        }
-        if (end < 0) { sb.append(t.substring(j + marker.length)); i = t.length }
-        else {
-          val inner = t.substring(j + marker.length, end)
-          val rewritten =
-            if (lastComma >= 0 &&
-                t.substring(lastComma + 1, end).trim.matches("\\d+"))
-              t.substring(j + marker.length, lastComma) + ", n"
-            else inner
-          sb.append(rewritten).append(')')
-          i = end + 1
-        }
-        j = t.indexOf(marker, i)
-      }
-      sb.append(t.substring(i))
-      sb.toString
-    }
-    pass(pass(text, "hashpartitioning("), "rangepartitioning(")
-      .replaceAll("RoundRobinPartitioning\\(\\d+\\)", "RoundRobinPartitioning(n)")
-  }
-
-  /** For every balanced `(...)` group whose content splits at top level on
-    * `sep` into EXACTLY two items, at least one being a
-    * `multicommutativeop(...)` chain, emit the two items sorted — the
-    * JVM-stable order for the one operand class whose hashCode is
-    * identity-based (see stripPlanText). Groups are processed innermost
-    * first so nested flips normalize before the outer pair is compared. */
-  private[graft] def sortCommutativePairs(text: String, sep: String): String = {
-    def process(s: String): String = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        if (s.charAt(i) == '(') {
-          var d = 0
-          var j = i
-          var end = -1
-          while (j < s.length && end < 0) {
-            val c = s.charAt(j)
-            if (c == '(') d += 1
-            else if (c == ')') { d -= 1; if (d == 0) end = j }
-            j += 1
-          }
-          if (end < 0) { sb.append(s.substring(i)); i = s.length }
-          else {
-            var inner = process(s.substring(i + 1, end))
-            // top-level split on sep
-            val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-            var dp = 0
-            var last = 0
-            var k = 0
-            while (k < inner.length) {
-              val c = inner.charAt(k)
-              if (c == '(' || c == '[') dp += 1
-              else if (c == ')' || c == ']') dp -= 1
-              else if (dp == 0 && inner.startsWith(sep, k)) {
-                parts += inner.substring(last, k); last = k + sep.length
-                k += sep.length - 1
-              }
-              k += 1
-            }
-            parts += inner.substring(last)
-            // contains, not startsWith (ADVICE r13): the identity-hashed
-            // MultiCommutativeOp can sit behind a wrapper — cast(...), a
-            // unary minus — and the wrapped pair flips between sessions
-            // exactly like the bare one
-            if (parts.length == 2 &&
-                (parts(0).contains("multicommutativeop(") ||
-                 parts(1).contains("multicommutativeop(")))
-              inner = parts.sorted.mkString(sep)
-            sb.append('(').append(inner).append(')')
-            i = end + 1
-          }
-        } else { sb.append(s.charAt(i)); i += 1 }
-      }
-      sb.toString
-    }
-    process(text)
-  }
-
-  /** Comparison-direction normalization for pairs with a
-    * multicommutativeop side: Spark's Canonicalize picks between `a OP b`
-    * and `b FLIP(OP) a` by operand hashCode, and multicommutativeop's
-    * Class-identity hash makes that a per-JVM coin flip. Canonical form:
-    * textually-smaller operand FIRST, operator flipped when the operands
-    * swap (so semantics-preserving: `(5*x) < M` and `M > (5*x)` both
-    * normalize to `(5*x) < M`). Same balanced-group scan as
-    * [[sortCommutativePairs]]. */
-  private[graft] def normalizeComparisonPairs(text: String, sep: String,
-      flip: String): String = {
-    def process(s: String): String = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        if (s.charAt(i) == '(') {
-          var d = 0
-          var j = i
-          var end = -1
-          while (j < s.length && end < 0) {
-            val c = s.charAt(j)
-            if (c == '(') d += 1
-            else if (c == ')') { d -= 1; if (d == 0) end = j }
-            j += 1
-          }
-          if (end < 0) { sb.append(s.substring(i)); i = s.length }
-          else {
-            val inner = process(s.substring(i + 1, end))
-            val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-            var dp = 0
-            var last = 0
-            var k = 0
-            while (k < inner.length) {
-              val c = inner.charAt(k)
-              if (c == '(' || c == '[') dp += 1
-              else if (c == ')' || c == ']') dp -= 1
-              else if (dp == 0 && inner.startsWith(sep, k)) {
-                parts += inner.substring(last, k); last = k + sep.length
-                k += sep.length - 1
-              }
-              k += 1
-            }
-            parts += inner.substring(last)
-            val out =
-              if (parts.length == 2 && parts(0) > parts(1) &&
-                  (parts(0).contains("multicommutativeop(") ||
-                   parts(1).contains("multicommutativeop(")))
-                parts(1) + flip + parts(0)
-              else inner
-            sb.append('(').append(out).append(')')
-            i = end + 1
-          }
-        } else { sb.append(s.charAt(i)); i += 1 }
-      }
-      sb.toString
-    }
-    process(text)
-  }
-
-  /** Sort the top-level comma-separated items inside every balanced span
-    * opened by `marker` (whose last char is the opening bracket). Nested
-    * `()`/`[]` inside items are tracked so their commas don't split. */
-  private[graft] def sortBracketSpans(text: String, marker: String): String = {
-    val close = if (marker.last == '(') ')' else ']'
-    val sb = new StringBuilder
-    var i = 0
-    var j = text.indexOf(marker, i)
-    while (j >= 0) {
-      sb.append(text.substring(i, j + marker.length))
-      var k = j + marker.length
-      var dp = 0
-      var db = 0
-      val items = scala.collection.mutable.ArrayBuffer.empty[String]
-      val item = new StringBuilder
-      var done = false
-      while (!done && k < text.length) {
-        val c = text.charAt(k)
-        // recurse into the finished item so a NESTED span sorts before the
-        // outer item order is decided
-        if (c == close && dp == 0 && db == 0) {
-          items += sortBracketSpans(item.toString, marker); done = true
-        }
-        else {
-          if (c == '(') dp += 1 else if (c == ')') dp -= 1
-          else if (c == '[') db += 1 else if (c == ']') db -= 1
-          if (c == ',' && dp == 0 && db == 0) {
-            items += sortBracketSpans(item.toString, marker); item.clear()
-            if (k + 1 < text.length && text.charAt(k + 1) == ' ') k += 1
-          } else item.append(c)
-        }
-        k += 1
-      }
-      if (done) { sb.append(items.sorted.mkString(", ")).append(close); i = k }
-      else i = j + marker.length // unbalanced span: leave verbatim, move on
-      j = text.indexOf(marker, i)
-    }
-    sb.append(text.substring(i))
-    sb.toString
+  /** First line of the fingerprint side file. `cpus` records the session
+    * width a digest set was produced under, so a reader can tell a
+    * cross-width comparison from a same-width one at a glance; it is a JSON
+    * number when numeric, else a string (`local[*]` gives "*"). */
+  private[graft] def fpHeader(sfDir: String, cpus: String): String = {
+    val c = cpus.toIntOption.fold("\"" + cpus + "\"")(_.toString)
+    "{\"sf\":\"" + sfDir + "\",\"cpus\":" + c + ",\"queries\":{"
   }
 
   /** Cumulative hypervisor steal jiffies (field 9 of /proc/stat's cpu

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -110,23 +111,23 @@ object SparkEntry {
     * per memo entry by construction. */
   private val stagePathSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The streaming plan text of the most recently constructed streaming
-    * row, for the bench fingerprint: the staged-replay memo means a timed
-    * or fingerprinted invocation scans the staged sink, whose plan says
-    * nothing about the STREAM's computation (ADVICE r15 — a real change
-    * in the stream would no longer flip the digest). Every [[replayStream]]
-    * call re-CONSTRUCTS the streaming DataFrame (plan-only, no execution)
-    * and records its canonicalized analyzed text here; Bench.fingerprint
+  /** The analyzed streaming plan of the most recently constructed
+    * streaming row, for the bench fingerprint: the staged-replay memo means
+    * a timed or fingerprinted invocation scans the staged sink, whose plan
+    * says nothing about the STREAM's computation (ADVICE r15 — a real
+    * change in the stream would no longer flip the digest). Every
+    * [[replayStream]] call re-CONSTRUCTS the streaming DataFrame (plan-only,
+    * no execution) and records its analyzed plan here; Bench.fingerprint
     * folds it into the digest for streaming rows. Volatile handoff is
     * safe: Bench/Verify invoke rows serially. */
-  @volatile private var lastStreamPlanText: Option[String] = None
+  @volatile private var lastStreamPlan: Option[LogicalPlan] = None
   private def recordStreamPlan(df: org.apache.spark.sql.Dataset[_]): Unit =
-    lastStreamPlanText =
-      try Some(df.queryExecution.analyzed.canonicalized.toString)
+    lastStreamPlan =
+      try Some(df.queryExecution.analyzed)
       catch { case _: Throwable => None }
-  def consumeStreamPlanText(): Option[String] = {
-    val p = lastStreamPlanText
-    lastStreamPlanText = None
+  def consumeStreamPlan(): Option[LogicalPlan] = {
+    val p = lastStreamPlan
+    lastStreamPlan = None
     p
   }
 

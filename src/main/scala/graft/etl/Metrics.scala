@@ -93,14 +93,8 @@ object Metrics {
         if (i >= 0 && !row.isNullAt(i)) row.getLong(i) else 0L
     }.sum
 
-  private val installed =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
-
-  /** Install once per session (idempotent); every subsequent action records
-    * metrics under the query-execution's funcName (collect/count/save/...). */
-  def installOnce(spark: SparkSession): Unit =
-    if (installed.add(String.valueOf(System.identityHashCode(spark)))) install(spark)
-
+  /** Every subsequent action records metrics under the query-execution's
+    * funcName (collect/count/save/...). */
   def install(spark: SparkSession): QueryExecutionListener = {
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {

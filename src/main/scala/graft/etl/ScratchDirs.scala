@@ -82,7 +82,7 @@ object ScratchDirs {
     * bucketed-layout row writes two catalog tables per run, and on the
     * default `./spark-warehouse` those writes were disk-bound; the
     * `graft_stage_`-prefixed path keeps plan fingerprints normalized
-    * (Bench.stripPlanText) exactly like the StageStore roots. Cluster
+    * (PlanWalk.digest) exactly like the StageStore roots. Cluster
     * deployments point the warehouse at HDFS/object storage as usual —
     * this is the single-host stand-in, same as [[sparkLocalDir]]. */
   def withLocalDir(
@@ -100,7 +100,7 @@ object ScratchDirs {
     * I/O, not the operator. Falls back to java.io.tmpdir when tmpfs is
     * unavailable. The name carries the `graft_stage_` prefix so plan
     * fingerprints normalize the per-JVM path token exactly like the
-    * StageStore roots (Bench.stripPlanText), keeping digests cross-JVM
+    * StageStore roots (PlanWalk.digest), keeping digests cross-JVM
     * stable. Deleted on JVM exit, and stale sibling dirs from crashed
     * runs are swept by owner-pid liveness, mirroring [[sparkLocalDir]]. */
   lazy val scratchOutputDir: String = {

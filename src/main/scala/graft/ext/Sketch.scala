@@ -635,7 +635,6 @@ object Sketch {
     * total ≤ 256: every partial sum fits in 28 mantissa bits), so the
     * estimate is a deterministic function of the key set on any engine and
     * any partitioning. */
-  def hllRegisterSqlPublic(hCol: String): (String, String) = hllRegisterSql(hCol)
   private[ext] def hllRegisterSql(hCol: String): (String, String) = {
     val hex = "'0123456789abcdef'"
     val d1 = s"(position(substr($hCol, 1, 1) IN $hex) - 1)"

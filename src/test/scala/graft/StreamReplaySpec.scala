@@ -50,18 +50,19 @@ class StreamReplaySpec extends AnyFunSuite {
     // test) the row must re-construct and record the streaming plan —
     // otherwise the bench digest hashes only the staged parquet scan and a
     // real change in the stream's computation would not flip it
-    SparkEntry.consumeStreamPlanText() // drain any prior recording
+    SparkEntry.consumeStreamPlan() // drain any prior recording
     SparkEntry.queries("events_stream_sliding")(spark, sf0001).count()
-    val sp = SparkEntry.consumeStreamPlanText()
-    assert(sp.nonEmpty, "streaming row must record its stream plan text")
-    assert(sp.get.contains("StreamingRelation") || sp.get.contains("streaming"),
-      s"recorded text must be the STREAMING plan, got head: ${sp.get.take(200)}")
-    assert(SparkEntry.consumeStreamPlanText().isEmpty,
+    val sp = SparkEntry.consumeStreamPlan()
+    assert(sp.nonEmpty, "streaming row must record its stream plan")
+    assert(sp.get.isStreaming && sp.get.collectLeaves().exists(
+        _.getClass.getSimpleName.startsWith("StreamingRelation")),
+      s"recorded plan must be the analyzed STREAMING plan, got: ${sp.get.treeString.take(200)}")
+    assert(SparkEntry.consumeStreamPlan().isEmpty,
       "consume must drain the recording (one-shot handoff)")
     // a batch row records nothing — a stale stream plan folded into a batch
     // row's digest would couple unrelated fingerprints
     SparkEntry.queries("q1_pricing_summary")(spark, sf0001).count()
-    assert(SparkEntry.consumeStreamPlanText().isEmpty,
+    assert(SparkEntry.consumeStreamPlan().isEmpty,
       "batch rows must not leave a stream-plan recording")
   }
 }

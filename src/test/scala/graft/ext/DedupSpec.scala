@@ -474,8 +474,13 @@ class DedupSpec extends AnyFunSuite {
     assert(a == b)
     // r18 grouped-sets shape: the corpus-sized shingle relation is never
     // self-joined — the only joins left are broadcasts of the
-    // |sources|²-bounded rollup, so no shuffle-side join may appear
+    // |sources|²-bounded rollup, so no shuffle-side join may appear.
+    // Release the rollups the collects above persisted first, so the
+    // asserted plan is the fresh shape, not a cache-substituted one.
+    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     val plan = Dedup.crossSourceOverlap(fx).queryExecution.executedPlan.toString
+    graft.etl.CacheRegistry.releaseAll()
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"))
   }
 
