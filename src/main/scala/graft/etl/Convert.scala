@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's end-to-end conversion as one engine call — the whole
@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * The reference's strategy selection (C1), pipelining, batching and memory
   * management dissolve into Catalyst/Tungsten; what remains is the declared
-  * dataflow. Row order is preserved end-to-end via per-file row positions
-  * (no global shuffle — see IngestOps.withFileRowPos).
+  * dataflow. Row order is preserved end-to-end: the xlsx path is one narrow
+  * scan → write job that keeps [[graft.sources.XlsxSource]]'s source order
+  * (no sort, no shuffle); the parquet path sorts on IngestOps.withFileRowPos.
   */
 object Convert {
 
@@ -55,7 +56,7 @@ object Convert {
     * header naming with index fallback (S4), shared-strings resolve (S5),
     * all-string cells (T5), blank normalization + empty-row drop (T2), and
     * the zip-bomb guards (S7/S8/C3) all run inside the source; what remains
-    * here is the positional skip (T3), order capture, and the sink. */
+    * here is the positional skip (T3) and the sink, in one scan → write job. */
   private def runXlsx(spark: SparkSession, config: EngineConfig): Result = {
     val first = graft.sources.XlsxParsing.listFiles(config.inputDir).head
     val zip = new java.util.zip.ZipFile(first)
@@ -68,38 +69,30 @@ object Convert {
       .option("maxEntrySizeBytes", config.maxEntrySizeBytes.toString)
       .option("minInflateRatio", config.minInflateRatio.toString)
       .load(config.inputDir)
-    // order capture: partitions are whole files in name order and the
-    // in-file stream is sequential, so the partition-prefixed monotonic id
-    // reproduces source order (the contract's row-order invariant)
-    val positioned = IngestOps.withRowId(df, "_pos")
     // T3: the source consumed the header; headerRow skips that many leading
     // DATA rows per FILE (each workbook carries its own preamble). The
     // in-file index unpacks narrowly from the monotonic id
     // (partitionId·2^33 + index — one partition per file), so the skip is a
-    // plain filter: no window, no shuffle.
-    val afterHeader =
+    // plain filter: no window, no shuffle, source order kept (all-string).
+    val rows =
       if (config.headerRow > 0)
-        positioned.filter(
-          col("_pos").bitwiseAND(lit((1L << 33) - 1)) >= config.headerRow)
-      else positioned
-    val ordered = afterHeader.orderBy("_pos").drop("_pos") // already all-string
+        IngestOps.withRowId(df, "_pos").filter(
+          col("_pos").bitwiseAND(lit((1L << 33) - 1)) >= config.headerRow).drop("_pos")
+      else df
     val out = config.outputPath.getOrElse(s"${config.inputDir}-${sheet}-chunks")
-    val rows = writeSink(ordered, out, config)
-    Result(sheet, config.format.toLowerCase, out, rows)
+    Result(sheet, config.format.toLowerCase, out, writeSink(rows, out, config))
   }
 
   private def writeSink(df: DataFrame, out: String, config: EngineConfig): Long =
     config.format.toLowerCase match {
-      case "ndjson" =>
-        Sinks.ndjson(df, out, overwrite = config.overwrite, singleFile = true) // K1
-        // rowsWritten = line count; the previous read.json paid a full
-        // schema-inference parse PLUS a count pass — NDJSON is one row per
-        // line by construction, so the text line count is the same number
-        df.sparkSession.read.text(out).count()
-      case "csv" =>
-        Sinks.chunkedCsv(df, out, config.batchSize, orderCol = None,
-          overwrite = config.overwrite) // K2 (df already ordered)
-        df.sparkSession.read.option("header", "true").csv(out).count()
+      case fmt @ ("ndjson" | "csv") => // the write job itself counts its rows
+        val written = Observation()
+        val counted = df.observe(written, count(lit(1)).as("n"))
+        if (fmt == "ndjson")
+          Sinks.ndjson(counted, out, overwrite = config.overwrite, singleFile = true) // K1
+        else
+          Sinks.chunkedCsv(counted, out, config.batchSize, overwrite = config.overwrite) // K2
+        written.get("n").asInstanceOf[Long]
       case "json" =>
         Sinks.jsonArray(df, out, overwrite = config.overwrite,
           pretty = config.prettyJson) // K3

@@ -59,10 +59,12 @@ object Sinks {
 
   /** K2 — chunked CSV sink: files of at most `batchSize` rows, header per
     * chunk (core/writers/CsvDataWriter.java:80-103,148-151). Guarantees the
-    * contract invariants (every chunk ≤ batchSize rows; concatenation in
-    * partition order preserves key order) — file boundaries fall at range
-    * partition edges, not necessarily at exact batchSize multiples; use
-    * `chunkedCsvNamed` for exact reference chunk boundaries. */
+    * contract invariants: every chunk ≤ batchSize rows, and concatenation in
+    * (part index, chunk number K) order preserves row order. Chunks are
+    * `part-NNNNN-<job>-cK.csv` with K padded to three digits only, so past
+    * 999 chunks in a task a name sort misplaces `c1000`: sort K as a number.
+    * File boundaries fall at partition edges, not necessarily at exact
+    * batchSize multiples; use `chunkedCsvNamed` for exact reference chunks. */
   def chunkedCsv(df: DataFrame, path: String, batchSize: Int,
       orderCol: Option[String] = None, overwrite: Boolean = false): Unit = {
     val d = orderCol.map(c => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))).getOrElse(df)
@@ -156,13 +158,10 @@ object Sinks {
     val (open, sep, close) = if (pretty) ("[\n  ", ",\n  ", "\n]") else ("[", ",", "]")
     var n = 0L
     import scala.jdk.CollectionConverters._
-    val t0 = System.nanoTime()
     try {
       // rendered rows never contain a raw newline (JSON escapes them), so
       // the text sink's one-line-per-row framing round-trips exactly
       df.toJSON.write.text(stage.toString)
-      if (sys.env.contains("SPARK_GRAFT_SINK_LOG")) println(
-        f"[jsonArray] render ${(System.nanoTime() - t0) / 1e9}%.2f s")
       out.write(open)
       val parts = Files.list(stage).iterator().asScala
         .filter(_.getFileName.toString.startsWith("part-")).toSeq
@@ -180,14 +179,15 @@ object Sinks {
         } finally rd.close()
       }
       out.write(close)
-      if (sys.env.contains("SPARK_GRAFT_SINK_LOG")) println(
-        f"[jsonArray] total ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
     } finally {
       out.close()
-      try {
+      if (Files.exists(stage)) try { // a failed render may leave no stage
         Files.walk(stage).iterator().asScala.toSeq
           .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-      } catch { case _: Throwable => () }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"WARN jsonArray: stage $stage not removed: $e")
+      }
     }
     n
   }

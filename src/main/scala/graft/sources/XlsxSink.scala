@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
-import java.util.zip.{ZipEntry, ZipOutputStream}
+import java.util.zip.{Deflater, ZipEntry, ZipOutputStream}
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
@@ -147,6 +147,10 @@ object XlsxSink {
     var n = 0L
     val zos = new ZipOutputStream(
       new BufferedOutputStream(new FileOutputStream(file)))
+    // Level 1: with one task per workbook this writer is on a conversion's
+    // critical path. 30 000 x 12 sheet, one task, 4-core box: ~300 vs ~520 ms
+    // at level 6, file 2.56 vs 2.08 MB. A fixed level keeps output deterministic.
+    zos.setLevel(Deflater.BEST_SPEED)
     val w = new OutputStreamWriter(zos, StandardCharsets.UTF_8)
     // fixed entry mtime: ZipEntry defaults to wall-clock, which would make
     // two attempts of the same partition byte-differ for no reason —
@@ -210,15 +214,16 @@ object XlsxSink {
       zos.putNextEntry(fixedEntry("xl/worksheets/sheet1.xml"))
       w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
       w.write("\n<worksheet xmlns=\"http://schemas.openxmlformats.org/spreadsheetml/2006/main\"><sheetData>")
-      def writeRow(r: Long, cells: Seq[String]): Unit = {
+      val cols = names.indices.map(colName).toArray
+      def writeRow(r: Long, cell: Int => String): Unit = {
         w.write(s"""<row r="$r">""")
         var c = 0
-        while (c < cells.length) {
-          val v = cells(c)
+        while (c < cols.length) {
+          val v = cell(c)
           if (v != null && v.nonEmpty)
             // xml:space keeps leading/trailing whitespace through
             // standards-conforming parsers
-            w.write(s"""<c r="${colName(c)}$r" t="inlineStr"><is><t xml:space="preserve">${escCell(v)}</t></is></c>""")
+            w.write(s"""<c r="${cols(c)}$r" t="inlineStr"><is><t xml:space="preserve">${escCell(v)}</t></is></c>""")
           c += 1
         }
         w.write("</row>")
@@ -227,8 +232,7 @@ object XlsxSink {
       var r = 2L
       while (it.hasNext) {
         val row = it.next()
-        writeRow(r, (0 until row.length).map(i =>
-          if (row.isNullAt(i)) "" else row.getString(i)))
+        writeRow(r, row.getString)
         r += 1; n += 1
       }
       w.write("</sheetData></worksheet>")

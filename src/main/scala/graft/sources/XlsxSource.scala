@@ -342,7 +342,9 @@ private[sources] object XlsxOptions {
   * via `unionSheets=true`: one partition per (file, sheet), all sheets
   * unioned under the inferred schema (header row consumed per sheet;
   * narrower sheets pad with ""), so a single many-sheet workbook spreads
-  * across cores. */
+  * across cores. Order guarantee ([[graft.etl.Convert]] relies on it in place
+  * of a sort): partitions follow file-name order (then sheet order under
+  * `unionSheets`), and each reader emits its sheet's rows in sheet order. */
 class XlsxSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "xlsx"
   override def supportsExternalMetadata(): Boolean = true
