@@ -123,10 +123,10 @@ class ConvertSpec extends AnyFunSuite {
     val zip = new ZipFile(f)
     try {
       val sheet = XlsxParsing.listSheets(zip, cap).head
-      val rows = new XlsxParsing.SheetRows(zip, zip.getEntry(sheet.target),
-        XlsxParsing.sharedStrings(zip, cap), cap)
-      try Iterator.continually(rows.nextRow()).takeWhile(_ != null)
-        .map(_.toSeq).toList.drop(1) // header row
+      val shared = XlsxParsing.sharedStrings(zip, cap)
+      val rows = new XlsxParsing.SheetRows(zip, zip.getEntry(sheet.target), shared.length, cap)
+      try Iterator.continually(rows.next()).takeWhile(identity)
+        .map(_ => rows.strings(shared).toSeq).toList.drop(1) // header row
       finally rows.close()
     } finally zip.close()
   }

@@ -2,6 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession.spark
@@ -158,5 +161,94 @@ class XlsxSourceSpec extends AnyFunSuite {
     assert(XlsxParsing.colIndex("Z9") == 25)
     assert(XlsxParsing.colIndex("AA27") == 26)
     assert(XlsxParsing.colIndex("BC12") == 54)
+    assert(XlsxParsing.colIndex("XFD1") == XlsxParsing.MaxColumns - 1)
+    // past XFD saturates instead of overflowing
+    assert(XlsxParsing.colIndex("XFE1") == XlsxParsing.MaxColumns)
+    assert(XlsxParsing.colIndex("ZZZZZZZZZZZZZZ1") == XlsxParsing.MaxColumns)
+  }
+
+  private val ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+  private val headRow =
+    s"""<?xml version="1.0" encoding="UTF-8"?><worksheet xmlns="$ns"><sheetData>""" +
+      """<row r="1"><c r="A1" t="inlineStr"><is><t>h</t></is></c></row>"""
+  private val tail = "</sheetData></worksheet>"
+
+  /** A one-sheet workbook around raw sheet XML, with a one-string table. */
+  private def rawBook(name: String, sheetXml: String): String = {
+    val f = tmp(name)
+    XlsxTestFiles.writeParts(f, Seq(("S", sheetXml.getBytes("UTF-8"))),
+      Some(s"""<sst xmlns="$ns"><si><t>only</t></si></sst>""".getBytes("UTF-8")))
+    f
+  }
+
+  /** The IllegalArgumentException `body` ends in, within a time bound. */
+  private def typedError(body: => Any): IllegalArgumentException = {
+    val e = intercept[Throwable](
+      Await.result(Future(body)(ExecutionContext.global), 60.seconds))
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+      .getOrElse(fail(s"no IllegalArgumentException in the causes of $e", e))
+  }
+
+  /** Fails at load() (schema inference) and, with the schema given, at scan. */
+  private def failsBothWays(f: String, message: String): Unit = {
+    val atLoad = typedError(spark.read.format("xlsx").load(f))
+    val atScan = typedError(spark.read.format("xlsx").schema("a STRING").load(f).collect())
+    for (e <- Seq(atLoad, atScan)) {
+      assert(e.getMessage.contains(message), e.getMessage)
+      assert(e.getMessage.contains(f) && e.getMessage.contains("xl/worksheets/sheet1.xml at byte"),
+        e.getMessage)
+    }
+  }
+
+  test("a cell past column XFD is a typed error, not an out-of-memory row") {
+    failsBothWays(rawBook("wide.xlsx",
+      headRow + """<row r="2"><c r="ZZZZZZ2"><v>1</v></c></row>""" + tail), "column XFD")
+    // a cell without r after XFD lands past it too
+    failsBothWays(rawBook("wide2.xlsx",
+      headRow + """<row r="2"><c r="XFD2"><v>1</v></c><c><v>2</v></c></row>""" + tail),
+      "column XFD")
+  }
+
+  test("malformed sheets end in a typed error, at load() and at scan time") {
+    val lol = (1 to 9).map(i => s"""<!ENTITY lol$i "${s"&lol${i - 1};" * 10}">""").mkString
+    val cases = Seq(
+      "truncated mid-tag" -> (headRow + """<row r="2"><c r="A2"><v>1</v></c><c r="B""",
+        "end of input inside <row>"),
+      "unterminated comment" -> (headRow + "<!-- never closed </sheetData>",
+        "end of input inside <sheetData>"),
+      "unterminated CDATA" -> (headRow +
+        """<row r="2"><c r="A2" t="inlineStr"><is><t><![CDATA[abc</t>""",
+        "end of input inside <t>"),
+      "unterminated attribute" -> (headRow + """<row r="2"><c r="A2><v>1</v></c></row>""" + tail,
+        "'<' in an attribute value"),
+      "entity-expansion DTD" -> (
+        s"""<?xml version="1.0"?><!DOCTYPE worksheet [<!ENTITY lol0 "lol">$lol]>""" +
+          s"""<worksheet xmlns="$ns"><sheetData><row><c t="inlineStr"><is><t>&lol9;</t>""" +
+          "</is></c></row>" + tail,
+        "DTD"),
+      "undeclared entity" -> (headRow + """<row r="2"><c r="A2"><v>&bogus;</v></c></row>""" + tail,
+        "undeclared entity &bogus;"),
+      "element nested in <v>" -> (headRow + """<row r="2"><c r="A2"><v>1<b/>2</v></c></row>""" + tail,
+        "element inside the text of <v>"),
+      "mismatched end tag" -> (headRow + """<row r="2"><c r="A2"><v>1</v></row>""" + tail,
+        "</row> does not close <c>"),
+      "out-of-range shared index" -> (headRow + """<row r="2"><c r="A2" t="s"><v>7</v></c></row>""" + tail,
+        "shared-string index 7 out of range (1 strings)"))
+    for (((name, (xml, message)), i) <- cases.zipWithIndex)
+      withClue(name)(failsBothWays(rawBook(s"bad$i.xlsx", xml), message))
+  }
+
+  test("pruned projection: blank-row drop is judged on the full physical row") {
+    val f = tmp("pruned.xlsx")
+    XlsxTestFiles.write(f, Seq(("S", Seq(
+      Seq(Some("a"), Some("b"), Some("c")),
+      Seq(Some("x"), None, Some("")), // blank in b and c only: kept
+      Seq(Some(""), None, Some("")), // present but all blank: dropped
+      Seq(None, Some("y"), None)))))
+    val df = spark.read.format("xlsx").load(f)
+    assert(df.select("b").collect().map(_.getString(0)).toSeq == Seq("", "y"))
+    assert(df.select("c").collect().map(_.getString(0)).toSeq == Seq("", ""))
+    assert(df.count() == 2) // no required column at all
   }
 }

@@ -42,45 +42,56 @@ object XlsxTestFiles {
          |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>$body</sheetData></worksheet>""".stripMargin
     }
 
+    val shared = if (strings.isEmpty) None else {
+      val sis = strings.keys.map(s => s"<si><t>${esc(s)}</t></si>").mkString
+      Some(s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
+           |<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="${strings.size}" uniqueCount="${strings.size}">$sis</sst>""".stripMargin)
+    }
+    writeParts(path, sheets.map { case (name, rows) => (name, utf8(sheetXml(rows))) },
+      shared.map(utf8))
+  }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+
+  /** A package around given sheet and shared-strings parts, written as
+    * they are (any encoding, any content, well-formed or not).
+    * @param sheets (name, sheet part bytes) */
+  def writeParts(path: String, sheets: Seq[(String, Array[Byte])],
+      sharedStrings: Option[Array[Byte]] = None): Unit = {
     val zos = new ZipOutputStream(new FileOutputStream(path))
-    def entry(name: String, content: String): Unit = {
+    def entry(name: String, content: Array[Byte]): Unit = {
       zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
+      zos.write(content)
       zos.closeEntry()
     }
     try {
-      entry("[Content_Types].xml",
+      entry("[Content_Types].xml", utf8(
         """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
           |<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">
           |<Default Extension="xml" ContentType="application/xml"/>
           |<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>
-          |</Types>""".stripMargin)
-      entry("_rels/.rels",
+          |</Types>""".stripMargin))
+      entry("_rels/.rels", utf8(
         """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
           |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
           |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>
-          |</Relationships>""".stripMargin)
+          |</Relationships>""".stripMargin))
       val sheetTags = sheets.zipWithIndex.map { case ((name, _), i) =>
         s"""<sheet name="${esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
       }.mkString
-      entry("xl/workbook.xml",
+      entry("xl/workbook.xml", utf8(
         s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
            |<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-           |<sheets>$sheetTags</sheets></workbook>""".stripMargin)
+           |<sheets>$sheetTags</sheets></workbook>""".stripMargin))
       val rels = sheets.indices.map { i =>
         s"""<Relationship Id="rId${i + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet${i + 1}.xml"/>"""
       }.mkString
-      entry("xl/_rels/workbook.xml.rels",
+      entry("xl/_rels/workbook.xml.rels", utf8(
         s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-           |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">$rels</Relationships>""".stripMargin)
-      if (strings.nonEmpty) {
-        val sis = strings.keys.map(s => s"<si><t>${esc(s)}</t></si>").mkString
-        entry("xl/sharedStrings.xml",
-          s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-             |<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="${strings.size}" uniqueCount="${strings.size}">$sis</sst>""".stripMargin)
-      }
-      sheets.zipWithIndex.foreach { case ((_, rows), i) =>
-        entry(s"xl/worksheets/sheet${i + 1}.xml", sheetXml(rows))
+           |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">$rels</Relationships>""".stripMargin))
+      sharedStrings.foreach(entry("xl/sharedStrings.xml", _))
+      sheets.zipWithIndex.foreach { case ((_, part), i) =>
+        entry(s"xl/worksheets/sheet${i + 1}.xml", part)
       }
     } finally zos.close()
   }
