@@ -1,123 +1,120 @@
 package graft.etl
 
-/** Spark local-scratch placement for the engine's driver sessions.
+import java.io.File
+
+/** Where the engine's scratch lives and when it is deleted. Every directory
+  * the engine writes for its own use sits under ONE per-JVM root, and this
+  * is the only module that chooses its place, sweeps stale roots and
+  * deletes them:
   *
-  * `spark.local.dir` is where Spark puts shuffle map outputs, DISK_ONLY /
-  * _SER block files, and sort/aggregate spills. Left unset it resolves to
-  * java.io.tmpdir, which on this host is disk-backed — the same tiny-
-  * synchronous-file-ops tax the streaming state store and StageStore
-  * already measured and moved off (NOTES: state stores 8→4 partitions +
-  * tmpfs checkpoint cut the micro-batch floor; StageStore stages to
-  * /dev/shm).
+  * {{{
+  * <parent>/graft_stage_jvm/      shared base, left in place (empty at rest)
+  *   pid<pid>_<uuid8>/            this JVM's root, deleted on exit
+  *     local/                     spark.local.dir: shuffle files, spills,
+  *                                DISK_ONLY / _SER blocks
+  *     warehouse/                 spark.sql.warehouse.dir
+  *     out/                       the e2e sink rows' output files and
+  *                                Sinks.jsonArray's part-file stage
+  *     stage/                     StageStore entries: batch stages,
+  *                                stream-replay sinks, the update-mode
+  *                                input stage
+  *     ck/                        one fresh checkpoint per stream run,
+  *                                deleted when the run ends
+  * }}}
   *
-  * SCALE NOTE (what the 100 TB deployment does instead): tmpfs here is a
-  * single-host SANDBOX STAND-IN for executor-local NVMe. On a real cluster
-  * `spark.local.dir` (or `yarn.nodemanager.local-dirs` / the k8s emptyDir)
-  * points at each executor's locally-attached SSD array — never RAM and
-  * never network storage: shuffle/spill volume at 100 TB input is far
-  * beyond memory, and the whole point of local dirs is to keep
-  * shuffle-write + spill I/O off the network until the shuffle fetch.
-  * Capacity planning is per-node disk ≳ (shuffle bytes / nodes) × safety
-  * factor, and the cluster manager owns cleanup of dead-executor dirs.
-  * The fixture-scale shuffles here are orders of magnitude below the
-  * 126 GiB mount, and tmpfs pages are reclaimable file cache, so the
-  * memory-pressure story is unchanged.
+  * `<parent>` is /dev/shm when it is a writable directory, else
+  * java.io.tmpdir; `SPARK_GRAFT_NO_SHM_LOCAL=1` forces java.io.tmpdir. That
+  * is the one placement switch. The one memo switch is StageStore's
+  * `SPARK_GRAFT_NO_STAGE`; the memo works wherever the root is placed.
   *
-  * Layout: one shared base (`/dev/shm/graft_spark_local`) holding a
-  * PER-JVM unique subdirectory (`pid<pid>_<uuid>`), deleted by a shutdown
-  * hook — mirroring StageStore.root, so a clean exit leaves nothing behind
-  * even when the JVM dies before Spark's own shutdown hooks run. Crashed /
-  * SIGKILLed runs can still leak (no hook runs), so startup additionally
-  * SWEEPS sibling dirs whose owning pid is no longer alive (ADVICE r14:
-  * the previous fixed shared dir leaked blockmgr-* and spark-* files
-  * across crashed runs, permanently occupying RAM-backed tmpfs).
+  * Why tmpfs: java.io.tmpdir on this host is disk-backed, and the
+  * shuffle/spill files, the streaming state store's many tiny synchronous
+  * file ops, the stage writes and the sink rows' write-and-read-back were
+  * all timing that disk, not the operator (NOTES: the tmpfs checkpoint and
+  * 4 state partitions cut the micro-batch floor).
   *
-  * `SPARK_GRAFT_NO_SHM_LOCAL=1` opts out (A/B adjudication aid, same
-  * convention as SPARK_GRAFT_NO_STAGE).
+  * The base name carries `graft_stage_`, so every path under the root that
+  * reaches a plan (stages, replay sinks, warehouse tables, sink outputs)
+  * renders as one token in plan digests (PlanWalk.digest), stable across
+  * JVMs.
+  *
+  * Lifetime: one shutdown hook deletes the root on a clean exit. A JVM
+  * killed before its hook ran leaves its root behind, so the next JVM's
+  * first use sweeps sibling roots whose owner pid is no longer alive; a live
+  * owner's /proc/<pid> exists, so two live JVMs never touch each other's
+  * root (ADVICE r14). A root is never shared across JVMs: a stage is only
+  * trusted by the JVM that holds the plan it was keyed on.
+  *
+  * SCALE NOTE: tmpfs here is a single-host stand-in for executor-local
+  * NVMe. On a cluster `spark.local.dir` (or `yarn.nodemanager.local-dirs` /
+  * the k8s emptyDir) points at each executor's local SSDs, the warehouse
+  * and stages at HDFS/object storage, and the cluster manager cleans up
+  * dead executors' dirs. The fixture-scale volumes here are orders of
+  * magnitude below the 126 GiB mount, and tmpfs pages are reclaimable file
+  * cache, so the memory-pressure story is unchanged.
   */
 object ScratchDirs {
 
-  private def delete(f: java.io.File): Unit = {
+  /** Recursive delete; best effort (a file that cannot go stays). */
+  def delete(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(delete))
     f.delete(); ()
   }
 
   private val PidDir = "pid(\\d+)_.*".r
 
-  /** Remove sibling per-JVM dirs owned by dead processes (a crashed run's
-    * shutdown hook never fired). Racing two live JVMs is safe: a LIVE
-    * owner's /proc/<pid> exists, so its dir is never touched. */
-  private def sweepStale(base: java.io.File): Unit =
+  /** Remove sibling roots under `base` owned by dead processes. */
+  private[etl] def sweepStale(base: File): Unit =
     Option(base.listFiles()).foreach(_.foreach { f =>
       f.getName match {
-        case PidDir(pid) if !new java.io.File(s"/proc/$pid").isDirectory =>
-          delete(f)
+        case PidDir(pid) if !new File(s"/proc/$pid").isDirectory => delete(f)
         case _ => ()
       }
     })
 
-  /** tmpfs-backed per-JVM spark.local.dir, when /dev/shm is usable.
-    * Memoized: spark.local.dir is read once at DiskBlockManager init, and
-    * every session in this JVM shares one scratch root. */
-  lazy val sparkLocalDir: Option[String] =
-    if (sys.env.get("SPARK_GRAFT_NO_SHM_LOCAL").contains("1")) None
-    else {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) {
-        val base = new java.io.File(shm, "graft_spark_local")
-        base.mkdirs()
-        try sweepStale(base) catch { case _: Throwable => () }
-        val pid = java.lang.ProcessHandle.current().pid()
-        val d = new java.io.File(base,
-          s"pid${pid}_${java.util.UUID.randomUUID.toString.take(8)}")
-        d.mkdirs()
-        Runtime.getRuntime.addShutdownHook(new Thread(() => delete(d)))
-        Some(d.getAbsolutePath)
-      } else None
-    }
+  /** This JVM's root; created, with the stale sweep and the shutdown hook,
+    * on first use. */
+  lazy val root: File = {
+    val shm = new File("/dev/shm")
+    val parent =
+      if (!sys.env.get("SPARK_GRAFT_NO_SHM_LOCAL").contains("1") &&
+          shm.isDirectory && shm.canWrite) shm
+      else new File(System.getProperty("java.io.tmpdir"))
+    val base = new File(parent, "graft_stage_jvm")
+    base.mkdirs()
+    try sweepStale(base) catch { case _: Throwable => () }
+    val d = new File(base, s"pid${ProcessHandle.current().pid()}_" +
+      java.util.UUID.randomUUID.toString.take(8))
+    d.mkdirs()
+    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(d)))
+    d
+  }
 
-  /** Apply to a session builder (must run before the SparkContext exists —
-    * spark.local.dir is read once at DiskBlockManager init). Also points
-    * the session WAREHOUSE at the per-JVM tmpfs scratch (r17): the
-    * bucketed-layout row writes two catalog tables per run, and on the
-    * default `./spark-warehouse` those writes were disk-bound; the
-    * `graft_stage_`-prefixed path keeps plan fingerprints normalized
-    * (PlanWalk.digest) exactly like the StageStore roots. Cluster
-    * deployments point the warehouse at HDFS/object storage as usual —
-    * this is the single-host stand-in, same as [[sparkLocalDir]]. */
+  /** `root/name`, created if missing. */
+  def dir(name: String): File = {
+    val d = new File(root, name)
+    d.mkdirs()
+    d
+  }
+
+  /** Run `body` on a fresh empty directory under `root/name`, deleted when
+    * `body` returns or throws. */
+  def withFreshDir[A](name: String)(body: String => A): A = {
+    val d = java.nio.file.Files.createTempDirectory(dir(name).toPath, "run").toFile
+    try body(d.getAbsolutePath) finally delete(d)
+  }
+
+  /** Point a session builder's local dir and warehouse under the root. Must
+    * run before the SparkContext exists: spark.local.dir is read once at
+    * DiskBlockManager init. The bucketed-layout row writes two catalog
+    * tables per run; on the default `./spark-warehouse` those writes were
+    * disk-bound (r17). */
   def withLocalDir(
-      b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder = {
-    val wh = new java.io.File(scratchOutputDir, "spark-warehouse")
-    sparkLocalDir.fold(b)(d => b.config("spark.local.dir", d))
-      .config("spark.sql.warehouse.dir", wh.getAbsolutePath)
-  }
+      b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
+    b.config("spark.local.dir", dir("local").getAbsolutePath)
+      .config("spark.sql.warehouse.dir", dir("warehouse").getAbsolutePath)
 
-  /** Per-JVM tmpfs scratch for the e2e sink rows' OUTPUT files (the
-    * convert/jsonarray/xlsx/orc/csv roundtrips write a real file and read
-    * it back inside one query) — the same NVMe stand-in rationale as
-    * [[sparkLocalDir]]: java.io.tmpdir on this host is disk-backed, so the
-    * write+read-back halves of those rows were timing synchronous disk
-    * I/O, not the operator. Falls back to java.io.tmpdir when tmpfs is
-    * unavailable. The name carries the `graft_stage_` prefix so plan
-    * fingerprints normalize the per-JVM path token exactly like the
-    * StageStore roots (PlanWalk.digest), keeping digests cross-JVM
-    * stable. Deleted on JVM exit, and stale sibling dirs from crashed
-    * runs are swept by owner-pid liveness, mirroring [[sparkLocalDir]]. */
-  lazy val scratchOutputDir: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (sys.env.get("SPARK_GRAFT_NO_SHM_LOCAL").contains("1") ||
-        !shm.isDirectory || !shm.canWrite)
-      System.getProperty("java.io.tmpdir")
-    else {
-      val base = new java.io.File(shm, "graft_stage_out")
-      base.mkdirs()
-      try sweepStale(base) catch { case _: Throwable => () }
-      val pid = java.lang.ProcessHandle.current().pid()
-      val d = new java.io.File(base,
-        s"pid${pid}_${java.util.UUID.randomUUID.toString.take(8)}")
-      d.mkdirs()
-      Runtime.getRuntime.addShutdownHook(new Thread(() => delete(d)))
-      d.getAbsolutePath
-    }
-  }
+  /** Output files of the e2e sink rows (convert/jsonarray/xlsx/orc/csv
+    * roundtrips write a real file and read it back inside one query). */
+  lazy val scratchOutputDir: String = dir("out").getAbsolutePath
 }

@@ -340,9 +340,10 @@ object Pipelines {
     * batch ([[Dedup.dropNearDuplicatesLsh]]).
     *
     * Shape (r12, after stage-level adjudication of the r11 6.4 s idle
-    * cost — NearDupProbe named the two salted joins + two rescore joins as
-    * the spend): ONE signature chain over the side-TAGGED union (signatures
-    * are per-document, so bucketing the union equals bucketing each side),
+    * cost — a stage-level profile, NOTES.md, named the two salted joins +
+    * two rescore joins as the spend): ONE signature chain over the
+    * side-TAGGED union (signatures are per-document, so bucketing the union
+    * equals bucketing each side),
     * ONE salted within-bucket pair join that prunes existing×existing
     * pairs IN the join condition (at production scale the existing corpus
     * dwarfs the batch, so (E,E) candidates would dominate — they must die
@@ -400,10 +401,10 @@ object Pipelines {
         Dedup.intersectCount(col("ta"), col("tb")), col("na"), col("nb")) >= threshold)
       .select("doc_a", "ex_a", "doc_b", "ex_b")
     // (r18) the scored pair relation is STAGED, not just persisted: it is
-    // the pipeline's dominant cost (NearDupProbe at sf0.1: 5.5 M candidate
-    // pairs → 2.4 M θ-similar pairs from 5 000 docs; rescore + loser
-    // passes ≈ the whole row) and a pure deterministic function of the
-    // (toks, buckets) inputs — exact integer/boolean columns, so the
+    // the pipeline's dominant cost (profiled at sf0.1, OPTIMIZATION_r18.md:
+    // 5.5 M candidate pairs → 2.4 M θ-similar pairs from 5 000 docs;
+    // rescore + loser passes ≈ the whole row) and a pure deterministic
+    // function of the (toks, buckets) inputs — exact integer/boolean columns, so the
     // parquet round-trip is row-exact. Every action used to re-run the
     // salted join + rescore from the caches; now the first action per JVM
     // materializes it (cost on record as `stage_prime`) and later actions

@@ -3,8 +3,8 @@ import org.apache.spark.sql.SparkSession
 /** Micro-batch-floor probe for the streaming oracle family (round-14
   * headroom work, VERDICT r13 Next #1a): times each events_stream_* query
   * end-to-end under the live SparkEntry harness so config changes inside
-  * runNarrowStream (state partitions, checkpoint filesystem) can be A/B
-  * measured without touching Bench. Prints per-query samples + family sum.
+  * EventStreams.narrowRun (state partitions, checkpoint filesystem) can be
+  * A/B measured without touching Bench. Prints per-query samples + family sum.
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), STREAM_ITERS (default 2),
   * STREAM_QUERIES (csv; default = every events_stream_* query).
@@ -20,16 +20,13 @@ object StreamFloor {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.graft.rangejoin.bucketUs", "600000000")
     // A/B aid (r18): SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies candidate
-    // session configs (state-store provider, stream knobs) — same contract
-    // as OptProbe
+    // session configs (state-store provider, stream knobs)
     val withExtra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .foldLeft(b) { (bb, kv) =>
         val Array(k, v) = kv.split("=", 2); bb.config(k, v)
       }
-    val spark = sys.env.get("STREAM_PARTS")
-      .fold(withExtra)(p => withExtra.config("spark.graft.stream.partitions", p))
-      .getOrCreate()
+    val spark = withExtra.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("STREAM_ITERS", "2").toInt

@@ -54,7 +54,8 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("UPDATE mode: staged-replay final per-key upsert equals the batch aggregate") {
-    val (schema, em) = EventStreams.tumblingUpdateEmissions(spark, sf0001)
+    val EventStreams.UpdateEmissions(schema, em, _) =
+      EventStreams.tumblingUpdateEmissions(spark, sf0001)
     assert(em.nonEmpty)
     // multiple micro-batches actually ran
     assert(em.map(_._1).distinct.size >= 2,
