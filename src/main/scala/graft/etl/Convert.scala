@@ -13,7 +13,11 @@ import org.apache.spark.sql.functions._
   * management dissolve into Catalyst/Tungsten; what remains is the declared
   * dataflow. Row order is preserved end-to-end: the xlsx path is one narrow
   * scan → write job that keeps [[graft.sources.XlsxSource]]'s source order
-  * (no sort, no shuffle); the parquet path sorts on IngestOps.withFileRowPos.
+  * (no sort, no shuffle). The source splits a large sheet into row ranges
+  * in sheet order, so the job runs on every core and each sink writes the
+  * ranges' output in range order (one part file, chunk set or workbook per
+  * range; ndjson and json join them into one file). The parquet path sorts
+  * on IngestOps.withFileRowPos.
   */
 object Convert {
 
@@ -54,9 +58,10 @@ object Convert {
   /** The reference's native path: a real .xlsx package in, streamed via the
     * [[graft.sources.XlsxSource]] DataSource V2. Sheet resolution (S3),
     * header naming with index fallback (S4), shared-strings resolve (S5),
-    * all-string cells (T5), blank normalization + empty-row drop (T2), and
-    * the zip-bomb guards (S7/S8/C3) all run inside the source; what remains
-    * here is the positional skip (T3) and the sink, in one scan → write job. */
+    * all-string cells (T5), blank normalization + empty-row drop (T2), the
+    * positional skip (T3: `headerRow` leading non-blank data rows of each
+    * workbook) and the zip-bomb guards (S7/S8/C3) all run inside the
+    * source; what remains here is the sink, in one scan → write job. */
   private def runXlsx(spark: SparkSession, config: EngineConfig): Result = {
     val first = graft.sources.XlsxParsing.listFiles(config.inputDir).head
     val zip = new java.util.zip.ZipFile(first)
@@ -64,21 +69,12 @@ object Convert {
       graft.sources.XlsxParsing.listSheets(zip, config.maxEntrySizeBytes),
       config.sheetName, config.sheetIndex).name
     finally zip.close()
-    val df = spark.read.format("xlsx")
+    val rows = spark.read.format("xlsx")
       .option("sheetName", sheet)
+      .option("headerRow", config.headerRow.toString)
       .option("maxEntrySizeBytes", config.maxEntrySizeBytes.toString)
       .option("minInflateRatio", config.minInflateRatio.toString)
       .load(config.inputDir)
-    // T3: the source consumed the header; headerRow skips that many leading
-    // DATA rows per FILE (each workbook carries its own preamble). The
-    // in-file index unpacks narrowly from the monotonic id
-    // (partitionId·2^33 + index — one partition per file), so the skip is a
-    // plain filter: no window, no shuffle, source order kept (all-string).
-    val rows =
-      if (config.headerRow > 0)
-        IngestOps.withRowId(df, "_pos").filter(
-          col("_pos").bitwiseAND(lit((1L << 33) - 1)) >= config.headerRow).drop("_pos")
-      else df
     val out = config.outputPath.getOrElse(s"${config.inputDir}-${sheet}-chunks")
     Result(sheet, config.format.toLowerCase, out, writeSink(rows, out, config))
   }
@@ -96,7 +92,7 @@ object Convert {
       case "json" =>
         Sinks.jsonArray(df, out, overwrite = config.overwrite,
           pretty = config.prettyJson) // K3
-      case "xlsx" => // outbound Excel: one workbook per partition, streamed
+      case "xlsx" => // outbound Excel: one workbook per partition (range), streamed
         graft.sources.XlsxSink.write(df,
           out, sheetName = config.sheetName.getOrElse("Sheet1"),
           overwrite = config.overwrite)

@@ -42,7 +42,9 @@ import java.io.File
   * killed before its hook ran leaves its root behind, so the next JVM's
   * first use sweeps sibling roots whose owner pid is no longer alive; a live
   * owner's /proc/<pid> exists, so two live JVMs never touch each other's
-  * root (ADVICE r14). A root is never shared across JVMs: a stage is only
+  * root (ADVICE r14). The same sweep removes the directories that builds
+  * before the per-JVM root left directly under `<parent>` (`graft_upd_*`,
+  * `graft_stage_out`, `graft_spark_local`). A root is never shared across JVMs: a stage is only
   * trusted by the JVM that holds the plan it was keyed on.
   *
   * SCALE NOTE: tmpfs here is a single-host stand-in for executor-local
@@ -61,16 +63,27 @@ object ScratchDirs {
     f.delete(); ()
   }
 
+  private final val Base = "graft_stage_jvm"
+
   private val PidDir = "pid(\\d+)_.*".r
 
-  /** Remove sibling roots under `base` owned by dead processes. */
-  private[etl] def sweepStale(base: File): Unit =
-    Option(base.listFiles()).foreach(_.foreach { f =>
+  /** Scratch names that builds before the per-JVM root wrote directly
+    * under `<parent>`; nothing writes them any more. */
+  private val PreRoot = "graft_upd_.*|graft_stage_out|graft_spark_local".r
+
+  /** Remove what dead JVMs left under `parent`: roots under its base owned
+    * by dead processes, and the pre-root scratch directories. */
+  private[etl] def sweep(parent: File): Unit = {
+    Option(parent.listFiles()).foreach(_.foreach { f =>
+      if (PreRoot.matches(f.getName)) delete(f)
+    })
+    Option(new File(parent, Base).listFiles()).foreach(_.foreach { f =>
       f.getName match {
         case PidDir(pid) if !new File(s"/proc/$pid").isDirectory => delete(f)
         case _ => ()
       }
     })
+  }
 
   /** This JVM's root; created, with the stale sweep and the shutdown hook,
     * on first use. */
@@ -80,9 +93,9 @@ object ScratchDirs {
       if (!sys.env.get("SPARK_GRAFT_NO_SHM_LOCAL").contains("1") &&
           shm.isDirectory && shm.canWrite) shm
       else new File(System.getProperty("java.io.tmpdir"))
-    val base = new File(parent, "graft_stage_jvm")
+    val base = new File(parent, Base)
     base.mkdirs()
-    try sweepStale(base) catch { case _: Throwable => () }
+    try sweep(parent) catch { case _: Throwable => () }
     val d = new File(base, s"pid${ProcessHandle.current().pid()}_" +
       java.util.UUID.randomUUID.toString.take(8))
     d.mkdirs()

@@ -14,7 +14,10 @@ import org.apache.spark.sql.types.StringType
   *
   * Each input partition streams to its own `part-NNNNN.xlsx` workbook, one
   * row at a time: the sheet XML is written as rows are consumed, so task
-  * memory is constant regardless of partition size. Cells are written as
+  * memory is constant regardless of partition size. A sheet that
+  * [[XlsxSource]] read as several row ranges therefore converts to one
+  * workbook per range; read in name order, the workbooks hold the rows in
+  * sheet order. Cells are written as
   * `inlineStr` — a shared-strings dictionary would need a global second
   * pass (or task-shared state) to build, which is exactly the kind of
   * coordination a 100 TB distributed write must not have; inline strings

@@ -6,11 +6,13 @@ import java.util.zip.{ZipEntry, ZipFile}
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -262,6 +264,8 @@ object XlsxParsing {
     private var nameKey = 0L
     private var wholeKey = 0L
     private var colon = -1
+    /** Offset in the part of the '<' of the tag [[next]] read last. */
+    var tagAt = 0L
 
     def fail(what: String): Nothing = throw new IllegalArgumentException(
       s"$file: $part at byte ${base + pos}: $what")
@@ -317,6 +321,7 @@ object XlsxParsing {
           if (depth > 0) eof()
           return Eof
         }
+        tagAt = base + pos
         pos += 1 // '<'
         if (nextIs('/')) { pos += 1; endTag(); return End }
         else if (nextIs('?')) skipInstruction()
@@ -352,6 +357,83 @@ object XlsxParsing {
     }
 
     private def nestedElement(): Nothing = fail(s"element inside the text of <$top>")
+
+    /** The structural skip: reads on to the first start tag named `target`
+      * at byte `lo` or later and stops at its '<', unread; the number of
+      * `target` start tags passed on the way is returned. The skip keeps
+      * the markup state a full parse keeps (tags with their quoted
+      * attribute values, comments, CDATA, processing instructions, the
+      * open-element stack, with the same errors), so markup-like bytes
+      * inside a comment, CDATA or a value are never taken for a tag; it
+      * captures no attribute and decodes no text or entity. */
+    def skipTo(lo: Long, target: Name): Long = {
+      require(target.key != 0)
+      pendingEnd = false
+      var passed = 0L
+      while (true) {
+        var at = -1
+        while (at < 0 && (pos < lim || more())) {
+          val a = buf
+          var i = pos
+          while (i < lim && a(i) != '<') i += 1
+          pos = i
+          if (i < lim) at = i
+        }
+        if (at < 0) {
+          if (depth > 0) eof()
+          return passed
+        }
+        if (pos + 1 >= lim && !more()) { pos += 1; eof() }
+        val b = buf(pos + 1)
+        if (b == '/') { pos += 2; endTag() }
+        else if (b == '?') { pos += 1; skipInstruction() }
+        else if (b == '!') { pos += 2; bang(null) }
+        else {
+          var r = trySkipStartTag(target, lo)
+          while (r < 0) { if (!more()) { pos += 1; eof() }; r = trySkipStartTag(target, lo) }
+          if (r == 2) return passed
+          passed += r
+        }
+      }
+      passed
+    }
+
+    /** Skips the start tag whose '<' is at `pos`: -1, nothing consumed,
+      * when the window ends inside it; 2, nothing consumed, when it is a
+      * `target` at `lo` or later; else 1 for a `target` and 0 for any other
+      * name, the tag consumed. */
+    private def trySkipStartTag(target: Name, lo: Long): Int = {
+      val a = buf
+      val l = lim
+      val start = pos + 1
+      val end = scanName(a, start, l)
+      if (end < 0) return -1
+      val isTarget = nameKey == target.key
+      if (isTarget && base + pos >= lo) return 2
+      val whole = wholeKey
+      var p = end
+      var q = 0
+      while (p < l) {
+        val b = a(p)
+        if (q != 0) {
+          if (b == q) q = 0
+          else if (b == '<') failAt(p, "'<' in an attribute value")
+        } else if (b == '"' || b == '\'') q = b
+        else if (b == '>' || b == '/') {
+          if (b == '/') {
+            if (p + 1 >= l) return -1
+            if (a(p + 1) != '>') failAt(p + 1, "expected '>' after '/'")
+          } else {
+            setName(a, start, end)
+            push(whole)
+          }
+          pos = if (b == '/') p + 2 else p + 1
+          return if (isTarget) 1 else 0
+        } else if (b == '<') failAt(p, "malformed name")
+        p += 1
+      }
+      -1
+    }
 
     /** Skips character data up to the next '<' or the end of input. */
     private def skipText(): Unit =
@@ -788,7 +870,12 @@ object XlsxParsing {
     * cell with no value as "". A `<v>` sets the value and every `<t>` in
     * the cell (rich-text and phonetic runs too) appends to it; a `<c>`
     * without `r` takes the previous column + 1; sparse gaps fill with ""
-    * (the blank-normalization contract). A column past XFD is an error.
+    * (the blank-normalization contract); a `<c>` outside a `<row>` belongs
+    * to no row. A column past XFD is an error.
+    *
+    * [[range]] restricts the reader to the rows whose `<row` tag starts in
+    * a byte range of the part, so that readers over ranges that tile the
+    * part read each row exactly once between them.
     *
     * @param sharedCount size of the shared-string table the renderers get */
   final class SheetRows(zip: ZipFile, entry: ZipEntry, sharedCount: Int,
@@ -803,9 +890,29 @@ object XlsxParsing {
     private var offs = new Array[Int](32) // value start in `text`, shared index or 0/1
     private var ends = new Array[Int](32)
     private var maxCol = -1
+    private var rowStarts = 0L // `<row>` tags read or skipped so far
+    private var stopAt = Long.MaxValue // no row starting here or later is read
+    private var done = false
 
-    /** Reads the next physical row; false at the end of the sheet. */
+    /** 0-based place in the part of the row [[next]] read last. */
+    def ordinal: Long = rowStarts - 1
+
+    /** From here on, reads only the rows whose `<row` starts at byte `lo`
+      * or later and before byte `hi`; the rows between are passed by the
+      * structural skip ([[XmlScanner.skipTo]]) but still counted in
+      * [[ordinal]]. The last row read is read to its end, past `hi`, and
+      * so is the markup after it up to the next `<row`: over ranges that
+      * tile the part, every byte is parsed in full by exactly one reader
+      * (the one at `lo` = 0 parses the part's head). */
+    def range(lo: Long, hi: Long): Unit = {
+      if (lo > 0 && !done) rowStarts += xml.skipTo(lo, Row)
+      stopAt = hi
+    }
+
+    /** Reads the next physical row; false at the end of the sheet or of
+      * the [[range]]. */
     def next(): Boolean = {
+      if (done) return false
       n = 0
       text.len = 0
       maxCol = -1
@@ -816,9 +923,17 @@ object XlsxParsing {
       var inCell = false
       while (true) {
         val ev = xml.next()
-        if (ev == Eof) return false
+        if (ev == Eof) { done = true; return false }
         if (ev == Start) {
-          if (xml.is(C)) {
+          if (xml.is(Row)) {
+            if (xml.tagAt >= stopAt) { done = true; return false }
+            rowStarts += 1
+            n = 0
+            text.len = 0
+            maxCol = -1
+            col = -1
+            inCell = false
+          } else if (xml.is(C)) {
             inCell = true
             val r = xml.attr(0)
             col = if (r != null) colIndex(r.arr, r.len) else col + 1
@@ -932,15 +1047,21 @@ object XlsxParsing {
         if (inline) decodeCellEscapes(s) else s
       })
 
-    /** The current row as UTF8Strings, copied from the row's bytes without a
-      * String in between (except an inline string holding `_x`). */
-    def utf8(shared: Array[UTF8String]): Array[UTF8String] =
+    /** The current row as UTF8Strings: views into one copy of the row's
+      * bytes, with no String in between (except an inline string holding
+      * `_x`). */
+    def utf8(shared: Array[UTF8String]): Array[UTF8String] = {
+      var bytes: Array[Byte] = null
       render(new Array[UTF8String](width), UTF8String.EMPTY_UTF8, shared, TrueUtf8, FalseUtf8,
         { (from, until, inline) =>
           if (inline && hasEscape(from, until))
             UTF8String.fromString(decodeCellEscapes(text.string(from, until)))
-          else UTF8String.fromBytes(java.util.Arrays.copyOfRange(text.arr, from, until))
+          else {
+            if (bytes == null) bytes = java.util.Arrays.copyOf(text.arr, text.len)
+            UTF8String.fromBytes(bytes, from, until - from)
+          }
         })
+    }
 
     private def hasEscape(from: Int, until: Int): Boolean = {
       var i = from
@@ -976,6 +1097,7 @@ private[sources] final case class XlsxOptions(
     sheetIndex: Int,
     header: Boolean,
     unionSheets: Boolean,
+    headerRow: Int,
     maxEntrySizeBytes: Long,
     minInflateRatio: Double) extends Serializable
 
@@ -997,6 +1119,7 @@ private[sources] object XlsxOptions {
       sheetIndex = get("sheetIndex").map(_.toInt).getOrElse(0),
       header = get("header").forall(_.toBoolean),
       unionSheets = union,
+      headerRow = get("headerRow").map(_.toInt).getOrElse(0),
       maxEntrySizeBytes = get("maxEntrySizeBytes").map(_.toLong)
         .getOrElse(6L * 1024 * 1024 * 1024),
       minInflateRatio = get("minInflateRatio").map(_.toDouble).getOrElse(0.01))
@@ -1006,18 +1129,34 @@ private[sources] object XlsxOptions {
 /** `spark.read.format("xlsx")` — a minimal DataSource V2 over
   * [[XlsxParsing]]. All columns are StringType (the reference's universal
   * all-string row model, T1/T5); header row names columns with the
-  * index-fallback rule (S4). One InputPartition per FILE: a deflate stream
-  * is not splittable, so within-file reads stream sequentially in constant
-  * memory and parallelism comes from the file count — at scale a 100 TB
-  * drop of .xlsx exports parallelizes across its thousands of workbooks,
-  * which is the only shape the container format admits. The one finer
-  * grain that exists — each SHEET is its own deflate stream — is exposed
-  * via `unionSheets=true`: one partition per (file, sheet), all sheets
-  * unioned under the inferred schema (header row consumed per sheet;
-  * narrower sheets pad with ""), so a single many-sheet workbook spreads
-  * across cores. Order guarantee ([[graft.etl.Convert]] relies on it in place
-  * of a sort): partitions follow file-name order (then sheet order under
-  * `unionSheets`), and each reader emits its sheet's rows in sheet order. */
+  * index-fallback rule (S4).
+  *
+  * Partitioning. A deflate stream cannot be entered mid-way, but its
+  * inflated bytes can be split: each sheet is read as K row ranges by
+  * inflated byte offset. K follows Spark's own file-split rule over the
+  * `spark.sql.files.*` confs, with each sheet's uncompressed size `S`
+  * from the zip central directory as its file length: ranges of
+  * `min(maxPartitionBytes, max(openCostInBytes, total / minPartitionNum))`
+  * bytes, so a sheet under 4 MB is one partition at Spark's defaults.
+  * Range `[lo, hi)` inflates the sheet from its start, passes `[0, lo)` with
+  * the scanner's exact structural skip, and reads every row whose `<row`
+  * tag starts in the range, the last one to its end. The last range is
+  * unbounded, so the ranges tile the part whatever its real byte count,
+  * and every row is read by exactly one range. A workbook directory is
+  * planned the same way over all its files; `unionSheets=true` reads every
+  * sheet of each file (header row consumed per sheet; narrower sheets pad
+  * with ""), all under the inferred schema.
+  *
+  * A row's place in its sheet, not its range, decides how it is treated:
+  * the sheet's first row is the header under `header=true`, and
+  * `headerRow=N` drops the first N non-blank data rows of each sheet (the
+  * converter's preamble skip, T3); a range parses the sheet in full until
+  * it has seen those N rows, then skips structurally.
+  *
+  * Order guarantee ([[graft.etl.Convert]] relies on it in place of a
+  * sort): partitions follow file-name order, then sheet order under
+  * `unionSheets`, then range order, and each reader emits its rows in
+  * sheet order. */
 class XlsxSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "xlsx"
   override def supportsExternalMetadata(): Boolean = true
@@ -1103,22 +1242,25 @@ private[sources] class XlsxScan(path: String, tableSchema: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = XlsxParsing.listFiles(path)
-    if (!opts.unionSheets)
-      files.map(f => XlsxFilePartition(f, None): InputPartition).toArray
-    else
-      // one partition per (file, sheet): a multi-sheet workbook's sheets
-      // decompress and parse on separate cores — the only intra-file
-      // parallelism the container admits (each sheet is its own deflate
-      // stream). Enumeration reads only each workbook's central directory
-      // + workbook.xml on the driver — KBs per file, the same metadata
-      // cost class as the file listing itself.
-      files.flatMap { f =>
-        val zip = new java.util.zip.ZipFile(f)
-        try XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes)
-          .map(s => XlsxFilePartition(f, Some(s.name)): InputPartition)
-        finally zip.close()
-      }.toArray
+    // the sheets to read and their inflated sizes: only each workbook's
+    // central directory and workbook.xml are read, on the driver
+    val sheets = XlsxParsing.listFiles(path).flatMap { f =>
+      val zip = new ZipFile(f)
+      try {
+        XlsxParsing.checkEntries(zip, f, opts.maxEntrySizeBytes, opts.minInflateRatio)
+        val all = XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes)
+        val read =
+          if (opts.unionSheets) all.map(s => (Some(s.name), s))
+          else Seq((None, XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)))
+        read.map { case (pinned, s) =>
+          (f, pinned, Option(zip.getEntry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
+        }
+      } finally zip.close()
+    }
+    sheets.zip(XlsxScan.ranges(SparkSession.active, sheets.map(_._3))).flatMap {
+      case ((f, pinned, _), ranges) =>
+        ranges.map { case (lo, hi) => XlsxRangePartition(f, pinned, lo, hi): InputPartition }
+    }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = {
     val ordinals = required.fieldNames.map(tableSchema.fieldIndex)
@@ -1126,52 +1268,79 @@ private[sources] class XlsxScan(path: String, tableSchema: StructType,
   }
 }
 
-private[sources] final case class XlsxFilePartition(file: String,
-    sheet: Option[String]) extends InputPartition
+private[sources] object XlsxScan {
+  /** Spark's file-split rule (`FilePartition.maxSplitBytes` over the
+    * `spark.sql.files.*` confs) applied to sheets of these inflated sizes:
+    * the `[lo, hi)` byte ranges of each sheet, in order, the last one
+    * unbounded. */
+  def ranges(spark: SparkSession, sizes: Seq[Long]): Seq[Seq[(Long, Long)]] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val split = math.max(1L, FilePartition.maxSplitBytes(spark, sizes.map(_ + openCost).sum))
+    sizes.map { size =>
+      val k = math.max(1L, (size + split - 1) / split)
+      (0L until k).map(i => (i * split, if (i == k - 1) Long.MaxValue else (i + 1) * split))
+    }
+  }
+}
+
+/** Rows of one sheet whose `<row` tag starts in `[lo, hi)`; `sheet` pins
+  * the sheet under `unionSheets`, else the options resolve it. */
+private[sources] final case class XlsxRangePartition(file: String,
+    sheet: Option[String], lo: Long, hi: Long) extends InputPartition
 
 private[sources] class XlsxReaderFactory(ordinals: Array[Int], opts: XlsxOptions)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[XlsxFilePartition]
-    new XlsxPartitionReader(p.file, p.sheet, ordinals, opts)
+    new XlsxPartitionReader(partition.asInstanceOf[XlsxRangePartition], ordinals, opts)
   }
 }
 
-/** Streams one workbook's selected sheet: guard pass → sheet resolve →
+/** Streams one range of a workbook's sheet: guard pass → sheet resolve →
   * shared strings → row pull. Rows materialize only the pruned `ordinals`
   * (pad with "" past the physical row end); rows whose cells are ALL blank
   * — judged on the FULL physical row, projection-independent (T2,
-  * core/poi/CatmePoiSheetContentsHandler.java:122-125) — are dropped. */
-private[sources] class XlsxPartitionReader(file: String, pinned: Option[String],
+  * core/poi/CatmePoiSheetContentsHandler.java:122-125) — are dropped, as
+  * are the header and the first `headerRow` non-blank data rows. */
+private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
     ordinals: Array[Int], opts: XlsxOptions) extends PartitionReader[InternalRow] {
 
-  private val zip = new ZipFile(file)
-  XlsxParsing.checkEntries(zip, file, opts.maxEntrySizeBytes, opts.minInflateRatio)
-  // `pinned` = the one sheet this unionSheets partition owns; otherwise the
-  // usual name/index resolution
+  private val zip = new ZipFile(part.file)
+  XlsxParsing.checkEntries(zip, part.file, opts.maxEntrySizeBytes, opts.minInflateRatio)
+  // a pinned sheet is the one this unionSheets partition owns; otherwise
+  // the usual name/index resolution
   private val sheet = XlsxParsing.resolveSheet(
     XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes),
-    pinned.orElse(opts.sheetName), if (pinned.isDefined) 0 else opts.sheetIndex)
+    part.sheet.orElse(opts.sheetName), if (part.sheet.isDefined) 0 else opts.sheetIndex)
   // encoded once per reader: cells are handed to Spark as these instances
   private val shared = XlsxParsing.sharedStrings(zip, opts.maxEntrySizeBytes)
     .map(UTF8String.fromString)
   private val rows = {
     val entry = zip.getEntry(sheet.target)
-    require(entry != null, s"Sheet target ${sheet.target} missing from $file")
+    require(entry != null, s"Sheet target ${sheet.target} missing from ${part.file}")
     new XlsxParsing.SheetRows(zip, entry, shared.length, opts.maxEntrySizeBytes)
   }
-  if (opts.header) rows.next() // consume the header row
 
   private var current: Array[UTF8String] = _
 
-  override def next(): Boolean = {
+  /** The next non-blank data row of the sheet into `current`. */
+  private def nextDataRow(): Boolean = {
     while (rows.next()) {
-      current = rows.utf8(shared)
-      if (current.exists(_.numBytes > 0)) return true // T2 empty-row drop
+      if (!(opts.header && rows.ordinal == 0)) {
+        current = rows.utf8(shared)
+        if (current.exists(_.numBytes > 0)) return true // T2 empty-row drop
+      }
     }
     current = null
     false
   }
+
+  // which rows the preamble skip drops is known only in sheet order, so
+  // every range reads the sheet's prefix in full until it has passed them
+  private var skipped = 0
+  while (skipped < opts.headerRow && nextDataRow()) skipped += 1
+  rows.range(part.lo, part.hi)
+
+  override def next(): Boolean = nextDataRow()
 
   override def get(): InternalRow = {
     val vals = new Array[Any](ordinals.length)

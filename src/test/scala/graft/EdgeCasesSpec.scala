@@ -162,7 +162,7 @@ class EdgeCasesSpec extends AnyFunSuite {
   test("chunkStats and sinks on empty input") {
     val empty = Seq.empty[(Long, String)].toDF("k", "v")
     assert(Sinks.chunkStats(empty, 100, col("k")).count() == 0)
-    val path = java.nio.file.Files.createTempDirectory("edge").toString + "/arr.json"
+    val path = graft.TestDirs.dir("edge").toString + "/arr.json"
     assert(Sinks.jsonArray(empty, path) == 0L)
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == "[]")
   }

@@ -34,7 +34,7 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("end-to-end: CLI-shaped config converts a fixture table to ndjson") {
-    val out = java.nio.file.Files.createTempDirectory("main_e2e").toString + "/orders"
+    val out = graft.TestDirs.dir("main_e2e").toString + "/orders"
     val Right(cfg) = Main.parseArgs(Seq(
       "--output", out, "--format", "ndjson", "--sheet-name", "orders",
       "--overwrite", sf0001)): @unchecked

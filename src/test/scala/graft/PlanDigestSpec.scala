@@ -92,7 +92,7 @@ class PlanDigestSpec extends AnyFunSuite {
   }
 
   test("two StageStore roots give the same digest") {
-    val base = java.nio.file.Files.createTempDirectory("digest").toFile
+    val base = graft.TestDirs.dir("digest").toFile
     val roots = Seq("graft_stage_0a1b2c3d", "graft_stage_9f8e7d6c").map { r =>
       val p = new java.io.File(base, s"$r/rel").getAbsolutePath
       t.write.parquet(p)
@@ -114,7 +114,7 @@ class PlanDigestSpec extends AnyFunSuite {
       .queryExecution.analyzed
   }
   private def streamDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("digest_stream").toString
+    val dir = graft.TestDirs.dir("digest_stream").toString
     Seq((1L, new java.sql.Timestamp(0L), "a")).toDF("id", "ts", "k")
       .write.mode("overwrite").parquet(dir)
     dir

@@ -11,7 +11,7 @@ object SparkTestSession {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.ansi.enabled", "false") // reference parity: bad cells → null, never errors
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      graft.TestDirs.dir("graft-wh").toString)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     // mirror the Verify/Bench sessions: the optimizer extension is live

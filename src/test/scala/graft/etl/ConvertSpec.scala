@@ -13,7 +13,7 @@ import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession.{sf0001, spark}
-import graft.sources.{XlsxParsing, XlsxTestFiles}
+import graft.sources.{FileSplits, XlsxParsing, XlsxTestFiles}
 
 class ConvertSpec extends AnyFunSuite {
 
@@ -26,7 +26,7 @@ class ConvertSpec extends AnyFunSuite {
     outputPath = Some(out), overwrite = true, batchSize = 500)
 
   test("end-to-end ndjson conversion: all rows written, all-string cells") {
-    val out = Files.createTempDirectory("cv").toString + "/nd"
+    val out = graft.TestDirs.dir("cv").toString + "/nd"
     val r = Convert.run(spark, cfg("ndjson", out))
     assert(r.sheet == "orders" && r.rowsWritten == 1500)
     val back = spark.read.json(out)
@@ -35,7 +35,7 @@ class ConvertSpec extends AnyFunSuite {
   }
 
   test("end-to-end chunked csv conversion honors batchSize") {
-    val out = Files.createTempDirectory("cv").toString + "/csv"
+    val out = graft.TestDirs.dir("cv").toString + "/csv"
     val r = Convert.run(spark, cfg("csv", out))
     assert(r.rowsWritten == 1500)
     val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv"))
@@ -47,7 +47,7 @@ class ConvertSpec extends AnyFunSuite {
   }
 
   test("end-to-end json-array conversion writes one well-formed document") {
-    val out = Files.createTempDirectory("cv").toString + "/arr.json"
+    val out = graft.TestDirs.dir("cv").toString + "/arr.json"
     val r = Convert.run(spark, cfg("json", out))
     assert(r.rowsWritten == 1500)
     val txt = Files.readString(java.nio.file.Paths.get(out))
@@ -55,19 +55,19 @@ class ConvertSpec extends AnyFunSuite {
   }
 
   test("headerRow skips leading rows positionally") {
-    val out = Files.createTempDirectory("cv").toString + "/nd2"
+    val out = graft.TestDirs.dir("cv").toString + "/nd2"
     val r = Convert.run(spark, cfg("ndjson", out).copy(headerRow = 100))
     assert(r.rowsWritten == 1400)
   }
 
   test("sheet by index when no name given") {
-    val out = Files.createTempDirectory("cv").toString + "/nd3"
+    val out = graft.TestDirs.dir("cv").toString + "/nd3"
     val r = Convert.run(spark, cfg("ndjson", out).copy(sheetName = None, sheetIndex = 0))
     assert(r.sheet == "region" && r.rowsWritten == 5)
   }
 
   test("end-to-end from a real .xlsx package: scan → header → ndjson sink") {
-    val dir = Files.createTempDirectory("cvx").toString
+    val dir = graft.TestDirs.dir("cvx").toString
     graft.sources.XlsxTestFiles.writeDense(s"$dir/book.xlsx", Seq(
       ("Inventory", Seq(
         Seq("sku", "name", "qty"),
@@ -86,7 +86,7 @@ class ConvertSpec extends AnyFunSuite {
   }
 
   test("xlsx headerRow preamble skip and chunked csv sink compose") {
-    val dir = Files.createTempDirectory("cvx2").toString
+    val dir = graft.TestDirs.dir("cvx2").toString
     graft.sources.XlsxTestFiles.writeDense(s"$dir/book.xlsx", Seq(
       ("S", Seq(
         Seq("col_a", "col_b"),
@@ -157,7 +157,7 @@ class ConvertSpec extends AnyFunSuite {
     overwrite = true)
 
   test("xlsx conversion keeps source order across workbooks without a sort") {
-    val dir = Files.createTempDirectory("cvorder").toString
+    val dir = graft.TestDirs.dir("cvorder").toString
     val in = s"$dir/in"
     new File(in).mkdirs()
     val header = Seq("id", "book", "seq")
@@ -168,17 +168,17 @@ class ConvertSpec extends AnyFunSuite {
         header +: Seq(s"$b-preamble", "skip", "0") +: rows(b, n))))
     }
     val expected = sizes.sortBy(_._1).flatMap { case (b, n) => rows(b, n) }
-    formats.foreach { fmt =>
+    for (k <- Seq(1, 2, 7); fmt <- formats) FileSplits.withRanges(k) {
       val out = outFor(dir, fmt)
       val r = within(Convert.run(spark,
         xlsxCfg(in, fmt, out).copy(headerRow = 1, batchSize = 7)))
-      assert(r.rowsWritten == expected.size, fmt)
-      assert(readBack(fmt, out, header) == expected, fmt)
+      assert(r.rowsWritten == expected.size, s"$fmt K=$k")
+      assert(readBack(fmt, out, header) == expected, s"$fmt K=$k")
     }
   }
 
   test("header-only sheet converts to every format with rowsWritten 0") {
-    val dir = Files.createTempDirectory("cvempty").toString
+    val dir = graft.TestDirs.dir("cvempty").toString
     val header = Seq("a", "b")
     XlsxTestFiles.writeDense(s"$dir/book.xlsx", Seq(("S", Seq(header))))
     formats.foreach { fmt =>
@@ -199,7 +199,7 @@ class ConvertSpec extends AnyFunSuite {
   }
 
   test("K4: converting onto an existing output without overwrite throws, never blocks") {
-    val dir = Files.createTempDirectory("cvk4").toString
+    val dir = graft.TestDirs.dir("cvk4").toString
     XlsxTestFiles.writeDense(s"$dir/book.xlsx", Seq(("S",
       Seq(Seq("a", "b"), Seq("x1", "y1"), Seq("x2", "y2")))))
     formats.foreach { fmt =>
@@ -218,14 +218,16 @@ class ConvertSpec extends AnyFunSuite {
   }
 
   test("chunked csv past 999 chunks in one task: numeric chunk order is source order") {
-    val dir = Files.createTempDirectory("cvchunks").toString
+    val dir = graft.TestDirs.dir("cvchunks").toString
     val rows = (1 to 1200).map(i => Seq(i.toString, s"v$i"))
     XlsxTestFiles.writeDense(s"$dir/book.xlsx", Seq(("S", Seq("n", "v") +: rows)))
     val out = s"$dir/csv"
-    val r = within(Convert.run(spark,
-      xlsxCfg(s"$dir/book.xlsx", "csv", out).copy(batchSize = 1)))
-    assert(r.rowsWritten == 1200)
-    assert(partFiles(out).size == 1200)
-    assert(readBack("csv", out, Seq("n", "v")) == rows)
+    for (k <- Seq(1, 2, 7)) FileSplits.withRanges(k) {
+      val r = within(Convert.run(spark,
+        xlsxCfg(s"$dir/book.xlsx", "csv", out).copy(batchSize = 1)))
+      assert(r.rowsWritten == 1200, s"K=$k")
+      assert(partFiles(out).size == 1200, s"K=$k")
+      assert(readBack("csv", out, Seq("n", "v")) == rows, s"K=$k")
+    }
   }
 }

@@ -42,7 +42,7 @@ class EventTsEncodingSpec extends AnyFunSuite {
   private val expected = Seq((1L, Some(baseUs)), (2L, None))
 
   test("batch table() normalizes ns-long, µs-NTZ, and µs-LTZ ts identically") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tsenc").toString
+    val tmp = graft.TestDirs.dir("graft-tsenc").toString
     // (a) ns-as-long: the DataFrame surface parquet TIMESTAMP(NANOS) presents
     //     under spark.sql.legacy.parquet.nanosAsLong (Spark cannot write NANOS
     //     itself, so write the post-flag LongType surface directly)
@@ -60,7 +60,7 @@ class EventTsEncodingSpec extends AnyFunSuite {
   }
 
   test("streaming readEvents normalizes ns-long, µs-NTZ, and µs-LTZ ts identically") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tsenc-st").toString
+    val tmp = graft.TestDirs.dir("graft-tsenc-st").toString
     writeEvents(s"$tmp/ns/events.parquet", (col("us") * 1000L).cast(LongType))
     writeEvents(s"$tmp/ntz/events.parquet",
       timestamp_micros(col("us")).cast(TimestampNTZType))

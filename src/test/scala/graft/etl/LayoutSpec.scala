@@ -57,7 +57,7 @@ class LayoutSpec extends AnyFunSuite {
         .collect()
       (spans.map(_.getDouble(1)).sum, spans.map(_.getDouble(2)).sum)
     }
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
+    val base = graft.TestDirs.dir("zorder").toString
     Layout.writeZOrdered(ev, s"$base/z", "user_id", "us", numFiles = 8)
     ev.repartitionByRange(8, col("us")).sortWithinPartitions("us")
       .write.parquet(s"$base/t")
@@ -73,7 +73,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("partitioned layout prunes non-matching partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("parted").toString + "/events"
+    val dir = graft.TestDirs.dir("parted").toString + "/events"
     Layout.writePartitioned(
       IngestOps.table(spark, sf0001, "events"), dir, "event_type")
     val clicks = spark.read.parquet(dir).filter(col("event_type") === "click")

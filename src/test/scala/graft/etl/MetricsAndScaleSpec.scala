@@ -29,7 +29,7 @@ class MetricsAndScaleSpec extends AnyFunSuite {
       (4L, null.asInstanceOf[String]), (5L, """{"k":"c"}"""))
     val df = rows.toDF("id", "props")
     val good = ErrorModes.tolerateObserved(df, ErrorModes.corruptJson($"props", "k STRING"))
-    val out = java.nio.file.Files.createTempDirectory("metricsout").toString + "/o"
+    val out = graft.TestDirs.dir("metricsout").toString + "/o"
     good.write.json(out) // write action → listener harvests write metrics too
     val deadline = System.currentTimeMillis() + 10000
     def found = Metrics.all.values.find(_.rowsSkipped == 2L)
@@ -75,7 +75,7 @@ class MetricsAndScaleSpec extends AnyFunSuite {
 
   test("scalable row position spans multiple files in file-path order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("multifile").toString + "/t"
+    val dir = graft.TestDirs.dir("multifile").toString + "/t"
     // 8 files; each row records its original global ordinal
     (0L until 4000L).toDF("ord").repartitionByRange(8, org.apache.spark.sql.functions.col("ord"))
       .write.parquet(dir)

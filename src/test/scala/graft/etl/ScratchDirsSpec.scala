@@ -23,7 +23,7 @@ class ScratchDirsSpec extends AnyFunSuite {
     assume(!sys.env.get("SPARK_GRAFT_NO_STAGE").contains("1"), "memo is off")
     // a fixture dir of its own: the memo is per (query, dir), so the sf0.001
     // entries other suites built would make every call here a hit
-    val fixture = Files.createTempDirectory("graft_scratch_fixture").toFile
+    val fixture = graft.TestDirs.dir("graft_scratch_fixture").toFile
     Files.copy(new File(sf0001, "events.parquet").toPath,
       new File(fixture, "events.parquet").toPath)
     val dir = fixture.getAbsolutePath
@@ -75,8 +75,19 @@ class ScratchDirsSpec extends AnyFunSuite {
     // above Linux's largest pid_max (2^22): no process can own it
     val dead = new File(base, "pid999999999_deadbeef")
     assert(new File(dead, "stage/x").mkdirs())
-    ScratchDirs.sweepStale(base)
+    ScratchDirs.sweep(base.getParentFile)
     assert(!dead.exists(), "a dead pid's root must be swept")
+    assert(root.isDirectory, "the live JVM's root must stay")
+  }
+
+  test("the sweep deletes the scratch directories older builds left beside the base") {
+    val root = ScratchDirs.root
+    val parent = root.getParentFile.getParentFile
+    val left = Seq("graft_upd__spec_fixture_0123456789abcdef_4", "graft_stage_out",
+      "graft_spark_local").map(new File(parent, _))
+    left.foreach { d => new File(d, "x").mkdirs(); assert(d.isDirectory, d) }
+    ScratchDirs.sweep(parent)
+    left.foreach(d => assert(!d.exists(), s"$d must be swept"))
     assert(root.isDirectory, "the live JVM's root must stay")
   }
 }

@@ -10,7 +10,7 @@ import graft.SparkTestSession.{sf0001, spark}
 class SinksSpec extends AnyFunSuite {
   import spark.implicits._
 
-  private def tmpDir(): String = Files.createTempDirectory("graft-sink").toString
+  private def tmpDir(): String = graft.TestDirs.dir("graft-sink").toString
 
   test("K1: ndjson sink writes one JSON object per line, string fields") {
     val out = s"${tmpDir()}/nd"

@@ -14,7 +14,7 @@ class SourceFormatsSpec extends AnyFunSuite {
   test("round-trip: parquet → csv/json/orc → read back preserves data") {
     val orders = IngestOps.table(spark, sf0001, "orders")
     val expect = canon(orders)
-    val base = Files.createTempDirectory("fmt").toString
+    val base = graft.TestDirs.dir("fmt").toString
     for (fmt <- Seq("csv", "json", "orc")) {
       val p = s"$base/$fmt"
       fmt match {
@@ -30,7 +30,7 @@ class SourceFormatsSpec extends AnyFunSuite {
 
   test("FAILFAST mode dies on malformed records; PERMISSIVE tolerates") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("bad").toString + "/data.json"
+    val dir = graft.TestDirs.dir("bad").toString + "/data.json"
     Files.writeString(java.nio.file.Paths.get(dir),
       """{"a": 1}
         |not json at all
@@ -52,7 +52,7 @@ class SourceFormatsSpec extends AnyFunSuite {
   }
 
   test("xlsx flows through the generic read surface with guard options threaded") {
-    val dir = Files.createTempDirectory("ingest_xlsx_").toString
+    val dir = graft.TestDirs.dir("ingest_xlsx_").toString
     graft.sources.XlsxTestFiles.writeDense(s"$dir/a.xlsx",
       Seq(("Sheet1", Seq(Seq("k", "v"), Seq("1", "x"), Seq("2", "y")))))
     val df = IngestOps.read(spark, dir, "xlsx",
@@ -81,7 +81,7 @@ class SourceFormatsSpec extends AnyFunSuite {
     import spark.implicits._
     // 100k identical strings compress ~1000:1 — footer uncompressed size far
     // exceeds the strict ratio below
-    val p = Files.createTempDirectory("inflate").toString + "/t"
+    val p = graft.TestDirs.dir("inflate").toString + "/t"
     // dictionary encoding off → plain pages of repeated bytes, which snappy
     // collapses ~100:1 (the zip-bomb shape parquet can actually express)
     Seq.fill(100000)("abcabcabcabcabcabcabcabcabc").toDF("s")

@@ -102,7 +102,7 @@ class ChunkingSpec extends AnyFunSuite {
     // the SAME call chunks an unbounded stream in append mode
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = graft.etl.IngestOps.table(spark, graft.SparkTestSession.sf0001, "documents")
-    val dir = Files.createTempDirectory("chunk_stream_")
+    val dir = graft.TestDirs.dir("chunk_stream_")
     Files.copy(Paths.get(s"${graft.SparkTestSession.sf0001}/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val streamed = Chunking.chunkDocs(

@@ -271,7 +271,7 @@ class StatsSpec extends AnyFunSuite {
   }
 
   test("profileColumns: each branch scans ONLY its own column (pruned)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-prof").toString
+    val tmp = graft.TestDirs.dir("graft-prof").toString
     graft.etl.IngestOps.table(spark, SparkTestSession.sf0001, "documents")
       .write.mode("overwrite").parquet(tmp)
     val prof = Stats.profileColumns(spark.read.parquet(tmp), Seq("doc_id", "lang"))

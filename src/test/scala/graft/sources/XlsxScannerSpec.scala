@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.{UTF_16, UTF_16LE, UTF_8}
-import java.nio.file.Files
 import java.util.zip.ZipFile
 
 import scala.util.Random
@@ -11,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential test of the byte-level SpreadsheetML scanner against the
   * StAX reader it replaced ([[StaxSheetReader]]): seeded random sheet and
-  * shared-strings parts, written as raw XML, must read to identical rows. */
+  * shared-strings parts, written as raw XML, must read to identical rows,
+  * whole and as the concatenated row ranges of a split sheet. */
 class XlsxScannerSpec extends AnyFunSuite {
 
   private val cap = 1L << 30
@@ -140,12 +140,26 @@ class XlsxScannerSpec extends AnyFunSuite {
         s
       }.toList finally rows.close()
       assert(got == expected, clue)
+      // the range readers of a split sheet, concatenated, read it alike
+      for (k <- Seq(1, 2, 7)) {
+        val ranges = FileSplits.withRanges(k)(FileSplits.ranges(entry.getSize))
+        assert(ranges.size == k, clue)
+        val split = ranges.flatMap { case (lo, hi) =>
+          val rows = new XlsxParsing.SheetRows(zip, entry, shared.length, cap)
+          try {
+            rows.range(lo, hi)
+            Iterator.continually(rows.next()).takeWhile(identity)
+              .map(_ => rows.strings(shared).toSeq).toList
+          } finally rows.close()
+        }
+        assert(split == expected, s"K=$k $ranges\n$clue")
+      }
       got.size
     } finally zip.close()
   }
 
   test("the scanner reads random SpreadsheetML exactly as the StAX reader does") {
-    val dir = Files.createTempDirectory("xlsxdiff")
+    val dir = graft.TestDirs.dir("xlsxdiff")
     val rows = (1 to 400).map(seed => compare(dir, seed, workbook(seed))).sum
     assert(rows > 1000)
   }
@@ -154,7 +168,7 @@ class XlsxScannerSpec extends AnyFunSuite {
     // a few hundred KB per sheet put window ends at random points inside
     // tags, entities, CDATA and CRLFs; the 100 KB attribute outgrows the
     // 64 KB window itself
-    val dir = Files.createTempDirectory("xlsxdiffbig")
+    val dir = graft.TestDirs.dir("xlsxdiffbig")
     val pad = s""" note="${"&amp;x" * 20000}""""
     for (seed <- 1 to 3)
       assert(compare(dir, seed, workbook(seed, _ => 4000, if (seed == 1) pad else "")) > 3000)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +9,7 @@ class XlsxSinkSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(): String = {
-    val d = Files.createTempDirectory("xlsx_sink_").toFile
+    val d = graft.TestDirs.dir("xlsx_sink_").toFile
     d.delete() // the sink creates it (and the guard checks existence)
     d.getPath
   }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -12,7 +11,7 @@ import graft.SparkTestSession.spark
 class XlsxSourceSpec extends AnyFunSuite {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("xlsx").toString + "/" + name
+    graft.TestDirs.dir("xlsx").toString + "/" + name
 
   private val sheet1 = Seq(
     Seq("id", "name", "price"),
@@ -94,7 +93,7 @@ class XlsxSourceSpec extends AnyFunSuite {
   }
 
   test("directory read: one partition per file, rows union in file order") {
-    val dir = Files.createTempDirectory("xlsxdir").toString
+    val dir = graft.TestDirs.dir("xlsxdir").toString
     XlsxTestFiles.writeDense(s"$dir/a.xlsx", Seq(("S", Seq(Seq("v"), Seq("1"), Seq("2")))))
     XlsxTestFiles.writeDense(s"$dir/b.xlsx", Seq(("S", Seq(Seq("v"), Seq("3")))))
     val df = spark.read.format("xlsx").load(dir)
@@ -190,11 +189,16 @@ class XlsxSourceSpec extends AnyFunSuite {
       .getOrElse(fail(s"no IllegalArgumentException in the causes of $e", e))
   }
 
-  /** Fails at load() (schema inference) and, with the schema given, at scan. */
+  /** Fails at load() (schema inference) and, with the schema given, at scan
+    * with the sheet read as 1, 2 and 7 row ranges. */
   private def failsBothWays(f: String, message: String): Unit = {
     val atLoad = typedError(spark.read.format("xlsx").load(f))
-    val atScan = typedError(spark.read.format("xlsx").schema("a STRING").load(f).collect())
-    for (e <- Seq(atLoad, atScan)) {
+    val atScan = Seq(1, 2, 7).map(k => FileSplits.withRanges(k) {
+      val df = spark.read.format("xlsx").schema("a STRING").load(f)
+      assert(df.rdd.getNumPartitions == k)
+      typedError(df.collect())
+    })
+    for (e <- atLoad +: atScan) {
       assert(e.getMessage.contains(message), e.getMessage)
       assert(e.getMessage.contains(f) && e.getMessage.contains("xl/worksheets/sheet1.xml at byte"),
         e.getMessage)
@@ -234,7 +238,13 @@ class XlsxSourceSpec extends AnyFunSuite {
       "mismatched end tag" -> (headRow + """<row r="2"><c r="A2"><v>1</v></row>""" + tail,
         "</row> does not close <c>"),
       "out-of-range shared index" -> (headRow + """<row r="2"><c r="A2" t="s"><v>7</v></c></row>""" + tail,
-        "shared-string index 7 out of range (1 strings)"))
+        "shared-string index 7 out of range (1 strings)"),
+      // before the first row: parsed in full by the range at byte 0 only
+      "undeclared entity in the sheet head" -> (
+        s"""<?xml version="1.0"?><worksheet xmlns="$ns"><dimension ref="&bogus;"/>""" +
+          headRow.drop(headRow.indexOf("<sheetData>")) +
+          """<row r="2"><c r="A2"><v>1</v></c></row>""" + tail,
+        "undeclared entity &bogus;"))
     for (((name, (xml, message)), i) <- cases.zipWithIndex)
       withClue(name)(failsBothWays(rawBook(s"bad$i.xlsx", xml), message))
   }
@@ -250,5 +260,90 @@ class XlsxSourceSpec extends AnyFunSuite {
     assert(df.select("b").collect().map(_.getString(0)).toSeq == Seq("", "y"))
     assert(df.select("c").collect().map(_.getString(0)).toSeq == Seq("", ""))
     assert(df.count() == 2) // no required column at all
+  }
+
+  // ---- split sheets: a range boundary forced onto adversarial bytes ----
+
+  /** A sheet of raw rows after the header row, with no shared strings. */
+  private def rowsBook(name: String, body: String, prolog: String = ""): (String, String) = {
+    val xml = s"""<?xml version="1.0" encoding="UTF-8"?>$prolog<worksheet xmlns="$ns">""" +
+      s"""<sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>h</t></is></c></row>""" +
+      body + tail
+    val f = tmp(name)
+    XlsxTestFiles.writeParts(f, Seq(("S", xml.getBytes("UTF-8"))))
+    (f, xml)
+  }
+
+  private def inline(r: Int, v: String) =
+    s"""<row r="$r"><c r="A$r" t="inlineStr"><is><t>$v</t></is></c></row>"""
+
+  /** Column `h` of `f` read with a range boundary at byte `at` (and at each
+    * multiple of it), over at least two ranges. */
+  private def readSplitAt(f: String, at: Long, options: Map[String, String] = Map.empty)
+      : Seq[String] = FileSplits.withBoundaryEvery(at) {
+    val df = spark.read.format("xlsx").options(options).load(f)
+    assert(df.rdd.getNumPartitions >= 2)
+    df.collect().map(_.getString(0)).toSeq
+  }
+
+  test("split sheets: a literal <row in a comment, CDATA or attribute value is never a row") {
+    val body = inline(2, "a") +
+      """<!-- <row r="90"><c r="A90"><v>comment</v></c></row> -->""" +
+      """<row r="3"><c r="A3" t="inlineStr"><is><t><![CDATA[<row r="91">cdata</row>]]></t>""" +
+      "</is></c></row>" +
+      """<row r="4"><c r="A4" t="inlineStr" note="/>row r=&quot;92&quot;>"><is><t>c</t></is></c></row>""" +
+      inline(5, "d")
+    val (f, xml) = rowsBook("adversarial.xlsx", body)
+    val whole = Seq("a", "<row r=\"91\">cdata</row>", "c", "d")
+    assert(spark.read.format("xlsx").load(f).collect().map(_.getString(0)).toSeq == whole)
+    for (marker <- Seq("<row r=\"90\"", "<row r=\"91\"", "row r=&quot;92", "/>row"))
+      for (d <- -1 to 1) withClue(s"$marker $d") {
+        assert(readSplitAt(f, xml.indexOf(marker) + d) == whole)
+      }
+    // '<' may not appear in an attribute value: a typed error wherever the split
+    val (bad, badXml) = rowsBook("lt_in_attr.xlsx",
+      inline(2, "a") + """<row r="3" note="<row r=4>">""" + "</row>" + inline(5, "b"))
+    for (at <- Seq(badXml.indexOf("<row r=4>"), badXml.indexOf("<row r=\"3\""))) {
+      val e = typedError(FileSplits.withBoundaryEvery(at.toLong)(
+        spark.read.format("xlsx").schema("h STRING").load(bad).collect()))
+      assert(e.getMessage.contains("'<' in an attribute value"), e.getMessage)
+    }
+  }
+
+  test("split sheets: a prolog larger than a range puts the header in a later range") {
+    val (f, xml) = rowsBook("prolog.xlsx", inline(2, "a") + inline(3, "b"),
+      prolog = s"<!-- ${"<row>" * 400} -->")
+    val header = xml.indexOf("""<row r="1">""")
+    assert(header > 1000)
+    // range 0 holds no row; the header row sits in range 1 or later
+    assert(readSplitAt(f, 500) == Seq("a", "b"))
+    assert(readSplitAt(f, header) == Seq("a", "b"))
+    assert(spark.read.format("xlsx").load(f).columns.toSeq == Seq("h"))
+  }
+
+  test("split sheets: headerRow skips are counted in sheet order across ranges") {
+    val blank = (r: Int) => s"""<row r="$r"><c r="A$r"/></row>"""
+    val body = inline(2, "p1") + blank(3) + inline(4, "p2") + blank(5) + blank(6) +
+      inline(7, "p3") + inline(8, "d1") + blank(9) + inline(10, "d2")
+    val (f, xml) = rowsBook("preamble.xlsx", body)
+    val skip3 = Map("headerRow" -> "3")
+    assert(spark.read.format("xlsx").options(skip3).load(f).collect()
+      .map(_.getString(0)).toSeq == Seq("d1", "d2"))
+    for (r <- 2 to 10) withClue(s"boundary at row $r") {
+      assert(readSplitAt(f, xml.indexOf(s"""<row r="$r">"""), skip3) == Seq("d1", "d2"))
+    }
+    for (k <- Seq(2, 7)) FileSplits.withRanges(k) {
+      val df = spark.read.format("xlsx").options(skip3).load(f)
+      assert(df.rdd.getNumPartitions == k)
+      assert(df.collect().map(_.getString(0)).toSeq == Seq("d1", "d2"))
+    }
+  }
+
+  test("split sheets: an all-blank row on a range boundary is dropped once") {
+    val (f, xml) = rowsBook("blank_edge.xlsx",
+      inline(2, "a") + """<row r="3"><c r="A3"/><c r="B3"><v></v></c></row>""" + inline(4, "b"))
+    val at = xml.indexOf("""<row r="3">""")
+    assert(readSplitAt(f, at) == Seq("a", "b"))
+    assert(readSplitAt(f, at + 1) == Seq("a", "b"))
   }
 }

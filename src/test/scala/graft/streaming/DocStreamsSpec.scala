@@ -36,7 +36,7 @@ class DocStreamsSpec extends AnyFunSuite {
 
   test("cross-source duplicate fingerprints count once PER SOURCE (keyed dedup)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docstreams_fix").toString
+    val dir = graft.TestDirs.dir("docstreams_fix").toString
     // same admitted text in two sources + an in-source exact duplicate +
     // one gated-out row (wrong lang)
     val text = "the quick brown fox jumps over the lazy dog again and again"
@@ -57,7 +57,7 @@ class DocStreamsSpec extends AnyFunSuite {
 
   test("bounded dedup: in-window dups drop, expired keys evict, late re-arrival re-admits") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docstreams_bnd").toString
+    val dir = graft.TestDirs.dir("docstreams_bnd").toString
     // ingest_ts = doc_id minutes (DocStreams.withIngestTs); retention 30 min.
     // Timeline (key = (source, md5(text))); note state EVICTION lags one
     // batch behind the watermark advance (a batch consults state before
@@ -112,7 +112,7 @@ class DocStreamsSpec extends AnyFunSuite {
 
   test("streaming LSH near-dup: cross-batch bucket match drops, eviction re-admits") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docstreams_nd").toString
+    val dir = graft.TestDirs.dir("docstreams_nd").toString
     // Same DISTINCT token set => identical MinHash signatures => all band
     // buckets collide; tB/tC are disjoint vocabularies. ingest_ts = doc_id
     // minutes; retention 30 min. Timeline (forced one-file micro-batches):
@@ -168,7 +168,7 @@ class DocStreamsSpec extends AnyFunSuite {
 
   test("LSH near-dup registration keys on (ingest_ts, doc_id): out-of-order arrival, shuffled in-batch order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docstreams_ooo").toString
+    val dir = graft.TestDirs.dir("docstreams_ooo").toString
     // EXPLICIT ingest_ts, NOT monotone in doc_id (withIngestTs passes a
     // caller-supplied axis through): doc 10 ingested at minute 2000, doc 20
     // at minute 1000 — same distinct token set, same batch, and the file
@@ -212,7 +212,7 @@ class DocStreamsSpec extends AnyFunSuite {
 
   test("stream-vs-corpus EXACT: novel fingerprints admit; static side materializes once across batches") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docstreams_vsc").toString
+    val dir = graft.TestDirs.dir("docstreams_vsc").toString
     val tOld1 = "the quick brown fox jumps over the lazy dog again and again"
     val tOld2 = "a completely different admitted document with plenty of words here"
     val tNew1 = "yet another distinct admitted document with many ordinary words inside"
@@ -256,7 +256,7 @@ class DocStreamsSpec extends AnyFunSuite {
 
   test("stream-vs-corpus NEAR-dup: corpus bucket hits drop, within-stream dups pass, buckets materialize once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docstreams_vscn").toString
+    val dir = graft.TestDirs.dir("docstreams_vscn").toString
     val tA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val tA2 = "kappa iota theta eta zeta epsilon delta gamma beta alpha alpha"
     val tB = "lambda mu nu xi omicron pi rho sigma tau upsilon"

@@ -200,7 +200,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("checkpoint restart: a resumed windowed aggregation equals a one-shot run") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_").toString
+    val base = graft.TestDirs.dir("graft_restart_").toString
     val evDir = s"$base/events.parquet"
     val ev = graft.etl.IngestOps.table(spark, sf0001, "events")
       .filter(col("ts").isNotNull)
@@ -422,7 +422,7 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("NDJSON stream restart with the same checkpoint writes no duplicate batches") {
-    val tmp = java.nio.file.Files.createTempDirectory("ndjson_restart").toString
+    val tmp = graft.TestDirs.dir("ndjson_restart").toString
     def runOnce(): Unit = {
       val q = EventStreams.writeNdjsonStream(
         EventStreams.readEvents(spark, sf0001),
@@ -446,7 +446,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // split the fixture into 4 files and feed them one per micro-batch, so
     // the k-minima state provably merges ACROSS batches (a single-batch run
     // would never exercise the incremental path)
-    val dir = java.nio.file.Files.createTempDirectory("qprof_").toString
+    val dir = graft.TestDirs.dir("qprof_").toString
     val ev = graft.etl.IngestOps.table(spark, sf0001, "events")
       .select("event_id", "event_type", "value")
     ev.repartition(4).write.mode("overwrite").parquet(s"$dir/ev")
@@ -477,7 +477,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // the funnelState contract is event-time-ORDERED batches: split the
     // fixture into 4 ts-quartile files written sequentially, so the file
     // source (modification-time order) feeds them as ordered micro-batches
-    val dir = java.nio.file.Files.createTempDirectory("funnel_").toString
+    val dir = graft.TestDirs.dir("funnel_").toString
     val ev = graft.etl.IngestOps.table(spark, sf0001, "events")
       .select("user_id", "event_type", "ts")
     val w = org.apache.spark.sql.expressions.Window.orderBy("ts")
@@ -511,7 +511,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming funnel restart with the same checkpoint recovers state, no duplicates") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("funnel_restart").toString
+    val tmp = graft.TestDirs.dir("funnel_restart").toString
     val ev = graft.etl.IngestOps.table(spark, sf0001, "events")
       .select("user_id", "event_type", "ts")
     val w = org.apache.spark.sql.expressions.Window.orderBy("ts")
@@ -555,7 +555,7 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("stream through the reference NDJSON sink (K1) round-trips all rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("ndjson_stream").toString
+    val tmp = graft.TestDirs.dir("ndjson_stream").toString
     val q = EventStreams.writeNdjsonStream(
       EventStreams.readEvents(spark, sf0001),
       s"$tmp/out", s"$tmp/ckpt", Trigger.AvailableNow())
@@ -602,7 +602,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // arrives after b3 (wm during batch 3 = maxB3 - delay < min b2), and
     // (b) the watermark still rises above the earliest events by the final
     // batch, so permanent finalization provably happens (n_buffered < n_seen).
-    val dir = java.nio.file.Files.createTempDirectory("funnel_ooo").toString
+    val dir = graft.TestDirs.dir("funnel_ooo").toString
     val ev = graft.etl.IngestOps.table(spark, sf0001, "events")
       .select("user_id", "event_type", "ts")
     val w = org.apache.spark.sql.expressions.Window.orderBy("ts")
