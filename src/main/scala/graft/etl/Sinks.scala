@@ -137,7 +137,7 @@ object Sinks {
     * r17 shape: the JSON RENDERING is distributed (one parallel text write
     * of the per-row JSON strings to scratch), and only the unavoidable
     * serial part — streaming the bytes into one file with separators — runs
-    * on the driver, line-buffered. The previous `toJSON.toLocalIterator`
+    * on the driver as a byte copy. The previous `toJSON.toLocalIterator`
     * form serialized the rendering too: the driver pulled each of the N
     * partitions as a separate sequential job (32 mini-jobs per call at the
     * bench session width). Part files sort in partition order, so the
@@ -153,30 +153,45 @@ object Sinks {
     if (p.getParent != null) Files.createDirectories(p.getParent)
     val stage = Paths.get(ScratchDirs.scratchOutputDir,
       s"jsonarray_stage_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = Files.newBufferedWriter(p, StandardCharsets.UTF_8,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    val (open, sep, close) = if (pretty) ("[\n  ", ",\n  ", "\n]") else ("[", ",", "]")
+    val out = new java.io.BufferedOutputStream(Files.newOutputStream(p,
+      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING), 1 << 16)
+    def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
+    val (open, sep, close) =
+      if (pretty) (utf8("[\n  "), utf8(",\n  "), utf8("\n]")) else (utf8("["), utf8(","), utf8("]"))
     var n = 0L
     import scala.jdk.CollectionConverters._
     try {
       // rendered rows never contain a raw newline (JSON escapes them), so
-      // the text sink's one-line-per-row framing round-trips exactly
+      // the text sink's one-line-per-row framing round-trips exactly: the
+      // part files' bytes are copied as they are, with the separator in
+      // place of each row's '\n'
       df.toJSON.write.text(stage.toString)
       out.write(open)
       val parts = Files.list(stage).iterator().asScala
         .filter(_.getFileName.toString.startsWith("part-")).toSeq
         .sortBy(_.getFileName.toString)
+      val buf = new Array[Byte](1 << 16)
+      var inRow = false
+      def rowBytes(from: Int, until: Int): Unit = {
+        if (!inRow) { if (n > 0) out.write(sep); inRow = true }
+        out.write(buf, from, until - from)
+      }
       parts.foreach { part =>
-        val rd = Files.newBufferedReader(part, StandardCharsets.UTF_8)
+        val in = Files.newInputStream(part)
         try {
-          var line = rd.readLine()
-          while (line != null) {
-            if (n > 0) out.write(sep)
-            out.write(line)
-            n += 1
-            line = rd.readLine()
+          var r = in.read(buf)
+          while (r >= 0) {
+            var from = 0
+            var i = 0
+            while (i < r) {
+              if (buf(i) == '\n') { rowBytes(from, i); n += 1; inRow = false; from = i + 1 }
+              i += 1
+            }
+            if (from < r) rowBytes(from, r)
+            r = in.read(buf)
           }
-        } finally rd.close()
+        } finally in.close()
+        if (inRow) { n += 1; inRow = false } // a last row without its '\n'
       }
       out.write(close)
     } finally {

@@ -1,11 +1,14 @@
 package graft.sources
 
-import java.io.{File, FilterInputStream, InputStream, InputStreamReader, PushbackInputStream}
+import java.io.{File, InputStream, InputStreamReader, PushbackInputStream}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.{UTF_16, UTF_16BE, UTF_16LE, UTF_8}
-import java.util.zip.{ZipEntry, ZipFile}
+import java.util.zip.{ZipEntry, ZipException, ZipFile}
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.commons.compress.archivers.zip.{ZipFile => CommonsZipFile}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -20,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.etl.{InflationLimitException, InputTooLargeException}
 
-/** Streaming .xlsx parsing over plain JDK `java.util.zip` and a byte-level
-  * SpreadsheetML scanner — no POI, no StAX.
+/** Streaming .xlsx parsing: a raw-deflate decoder of its own, a
+  * byte-level SpreadsheetML scanner — no POI, no StAX.
   *
   * The reference's Excel surface, re-expressed:
   *  - sheet enumeration/selection with case-insensitive match and the
@@ -32,10 +35,18 @@ import graft.etl.{InflationLimitException, InputTooLargeException}
   *  - all-string cell rendering + blank normalization (T5/T2;
   *    core/poi/CatmePoiSheetContentsHandler.java:122-125);
   *  - zip-bomb guards: central-directory caps BEFORE any inflate plus a
-  *    counting stream that re-checks the cap DURING inflate, because a
-  *    crafted central directory can lie (S7/S8;
+  *    count of the bytes ACTUALLY inflated, checked DURING inflate, because
+  *    a crafted central directory can lie (S7/S8;
   *    core/FallbackZipExtractor.java:31-32,91-165,
   *    core/SafePOIEntryStreamer.java:54-90).
+  *
+  * Entries are looked up and guarded through the JDK's `ZipFile`; every
+  * part (workbook, its rels, shared strings, sheets) is inflated by
+  * [[RawInflate]] from the entry's raw bytes, which commons-compress
+  * locates ([[XlsxPackage]]). The JDK's inflater cannot start inside a
+  * stream; this one can start at any deflate block whose bit offset and
+  * 32 KB history were recorded, which is what lets a range of a sheet
+  * start near its first row ([[AccessPoint]]).
   *
   * Every XML part (workbook, its rels, shared strings, sheets) is read by
   * one pull scanner, [[XmlScanner]], that works on the inflated bytes and
@@ -52,12 +63,15 @@ import graft.etl.{InflationLimitException, InputTooLargeException}
   * DTDs in package parts), so no entity can expand. End tags must match
   * their start tags. Malformed input ends in an `IllegalArgumentException`
   * naming the file, the part and the byte offset, in time linear in the
-  * part's size.
+  * part's size. A corrupt deflate stream ends in a `ZipException`.
   *
-  * Memory contract: one deflate stream and one 64 KB scan window per open
-  * part (larger only while a single tag is), one row's cells at a time,
-  * the shared-strings array resident (the reference holds the same table;
-  * its "lazy provider" S6 trades that residency for re-parses).
+  * Memory contract: per open part one decoder (a 64 KB input buffer and a
+  * 256 KB window, of which 32 KB is history) and one 64 KB scan window
+  * (larger only while a single tag is), one row's cells at a time, the
+  * shared-strings array resident (the reference holds the same table; its
+  * "lazy provider" S6 trades that residency for re-parses). Schema
+  * inference also holds the 32 KB history of each access point it takes,
+  * and of the few block starts the decoder is ahead of the scanner.
   */
 object XlsxParsing {
 
@@ -87,24 +101,542 @@ object XlsxParsing {
     }
   }
 
-  /** The declared sizes can be forged; this stream enforces the cap on the
-    * bytes ACTUALLY inflated (SafePOIEntryStreamer's runtime guard). */
-  private final class CappedStream(in: InputStream, cap: Long, name: String)
-      extends FilterInputStream(in) {
-    private var count = 0L
-    private def bump(n: Int): Unit = if (n > 0) {
-      count += n
-      if (count > cap) throw new InputTooLargeException(
-        s"Zip entry $name inflated beyond maxEntrySizeBytes=$cap")
-    }
-    override def read(): Int = { val b = super.read(); if (b >= 0) bump(1); b }
-    override def read(buf: Array[Byte], off: Int, len: Int): Int = {
-      val n = super.read(buf, off, len); bump(n); n
-    }
+  /** Where a deflate block starts: its bit offset in the entry's compressed
+    * data, its offset in the inflated data, and the inflated bytes before it
+    * that a match may still reach (the last 32 KB, fewer near the start).
+    * [[RawInflate]] can resume decoding there. */
+  private[sources] final case class BlockStart(bit: Long, out: Long, history: Array[Byte])
+
+  private[sources] object BlockStart {
+    val Origin = BlockStart(0L, 0L, Array.emptyByteArray)
   }
 
-  private def entryStream(zip: ZipFile, entry: ZipEntry, cap: Long): InputStream =
-    new CappedStream(zip.getInputStream(entry), cap, entry.getName)
+  /** A raw-deflate (RFC 1951) decoder: `in` holds an entry's compressed
+    * bytes from byte `start.bit / 8` on, and decoding starts at the block
+    * `start` names, with its history in the window. With `stored`, the
+    * entry is not compressed and `in` holds its bytes as they are.
+    *
+    * Stored, fixed-code and dynamic-code blocks are decoded with two-level
+    * lookup tables (a 10-bit root for literal/lengths, 8-bit for distances)
+    * into a 256 KB window whose last 32 KB is kept as the match history
+    * when it slides. The inflated offset is counted against `cap`, with the
+    * entry-size cap's exception. A malformed stream — a bad block type,
+    * code lengths that over-subscribe or leave a code incomplete, a repeat
+    * with nothing to repeat, an invalid symbol, a distance before the
+    * output start, a stored block whose lengths disagree, or input that
+    * ends before the final block — raises a `ZipException`; every step
+    * consumes input or produces output, so decoding ends in time linear in
+    * the input and the output.
+    *
+    * With [[track]] set, every block start is recorded, with its history,
+    * until [[blockAt]] or [[prune]] drops it. */
+  private[sources] final class RawInflate(in: InputStream, start: BlockStart, stored: Boolean,
+      cap: Long, name: String) extends InputStream {
+    import RawInflate._
+
+    // compressed input: inBuf(inPos until inLim), inBuf(0) at offset inBase
+    private val inBuf = new Array[Byte](1 << 16)
+    private val inWords = ByteBuffer.wrap(inBuf).order(ByteOrder.LITTLE_ENDIAN)
+    private var inPos = 0
+    private var inLim = 0
+    private var inBase = start.bit >>> 3
+    // the bit buffer, least significant bit first; bits above `nBits` are
+    // either 0 or the next input bits, so a refill can OR over them
+    private var bits = 0L
+    private var nBits = 0
+    // output: win(0 until wpos), win(0) at inflated offset winBase; the
+    // reader has taken win(0 until rpos)
+    private val win = new Array[Byte](WinSize)
+    private var winBase = start.out - start.history.length
+    private var wpos = start.history.length
+    private var rpos = wpos
+    System.arraycopy(start.history, 0, win, 0, wpos)
+
+    private var state = if (stored) Plain else Header
+    private var last = false
+    private var storedLeft = 0
+    private var copyLen = 0 // the rest of a match the window end cut off
+    private var copyDist = 0
+    private var lit: Array[Int] = FixedLit
+    private var litRoot = 9
+    private var dist: Array[Int] = FixedDist
+    private var distRoot = 5
+    private var dynLit = new Array[Int](1 << 11)
+    private var dynDist = new Array[Int](1 << 9)
+    private val lens = new Array[Int](320)
+    private val clenTab = new Array[Int](1 << 7)
+
+    if (!stored) { val skip = (start.bit & 7).toInt; if (skip > 0) { need(skip); drop(skip) } }
+
+    /** Records every block start from here on. */
+    var track = false
+    private val starts = scala.collection.mutable.ArrayDeque.empty[BlockStart]
+
+    /** The last recorded block start at inflated offset `out` or before;
+      * the ones before it are dropped. For a stored entry, `out` itself. */
+    def blockAt(out: Long): BlockStart =
+      if (stored) BlockStart(out * 8, out, Array.emptyByteArray)
+      else {
+        prune(out)
+        starts.headOption.filter(_.out <= out).orNull
+      }
+
+    /** Drops the recorded block starts a later [[blockAt]] at `out` or
+      * beyond cannot return. */
+    def prune(out: Long): Unit =
+      while (starts.length > 1 && starts(1).out <= out) starts.removeHead()
+
+    /** The block starts recorded and not dropped, in stream order. */
+    def blockStarts: Seq[BlockStart] = starts.toSeq
+
+    private def fail(what: String): Nothing =
+      throw new ZipException(s"invalid deflate data in $name: $what")
+
+    private def truncated(): Nothing = fail("unexpected end of input")
+
+    /** Moves the unread input to the front of `inBuf` and reads more after
+      * it; false when no input is left. */
+    private def fillIn(): Boolean = {
+      if (inPos > 0) {
+        System.arraycopy(inBuf, inPos, inBuf, 0, inLim - inPos)
+        inBase += inPos
+        inLim -= inPos
+        inPos = 0
+      }
+      val n = in.read(inBuf, inLim, inBuf.length - inLim)
+      if (n > 0) inLim += n
+      n > 0
+    }
+
+    /** Tops the bit buffer up to at least 56 bits, or to the end of input. */
+    private def refill(): Unit = {
+      if (inLim - inPos < 8) fillIn()
+      if (inLim - inPos >= 8) {
+        bits |= inWords.getLong(inPos) << nBits
+        val take = (63 - nBits) >>> 3
+        inPos += take
+        nBits += take << 3
+      } else
+        while (nBits <= 56 && inPos < inLim) {
+          bits |= (inBuf(inPos) & 0xffL) << nBits
+          inPos += 1
+          nBits += 8
+        }
+    }
+
+    private def need(n: Int): Unit = if (nBits < n) { refill(); if (nBits < n) truncated() }
+
+    private def drop(n: Int): Unit = { bits >>>= n; nBits -= n }
+
+    private def take(n: Int): Int = {
+      need(n)
+      val v = (bits & ((1L << n) - 1)).toInt
+      drop(n)
+      v
+    }
+
+    /** The next symbol of the code in `tab` (root `root` bits). */
+    private def decode(tab: Array[Int], root: Int): Int = {
+      if (nBits < 15) refill()
+      var e = tab((bits & ((1 << root) - 1)).toInt)
+      if ((e & Link) != 0)
+        e = tab((e >>> 16) + ((bits >>> root).toInt & ((1 << (e & 0xff)) - 1)))
+      val l = e & 0xff
+      if (l == 0) fail("invalid code")
+      if (l > nBits) truncated()
+      drop(l)
+      e >>> 16
+    }
+
+    private def header(): Unit = {
+      if (track) starts += BlockStart((inBase + inPos) * 8 - nBits, winBase + wpos,
+        java.util.Arrays.copyOfRange(win, math.max(0, wpos - History), wpos))
+      val h = take(3)
+      last = (h & 1) != 0
+      h >>> 1 match {
+        case 0 =>
+          drop(nBits & 7)
+          val len = take(16)
+          if (take(16) != (~len & 0xffff)) fail("invalid stored block lengths")
+          storedLeft = len
+          state = Stored
+        case 1 =>
+          lit = FixedLit; litRoot = 9; dist = FixedDist; distRoot = 5
+          state = Codes
+        case 2 =>
+          dynamicTables()
+          state = Codes
+        case _ => fail("invalid block type")
+      }
+    }
+
+    private def dynamicTables(): Unit = {
+      val nLit = take(5) + 257
+      val nDist = take(5) + 1
+      val nClen = take(4) + 4
+      if (nLit > 286 || nDist > 30) fail("too many length or distance symbols")
+      java.util.Arrays.fill(lens, 0, 19, 0)
+      var i = 0
+      while (i < nClen) { lens(ClenOrder(i)) = take(3); i += 1 }
+      build(lens, 0, 19, 7, clenTab, incompleteOk = false, "code lengths")
+      val total = nLit + nDist
+      i = 0
+      while (i < total) {
+        val sym = decode(clenTab, 7)
+        if (sym < 16) { lens(i) = sym; i += 1 }
+        else {
+          val (rep, v) = sym match {
+            case 16 =>
+              if (i == 0) fail("invalid bit length repeat")
+              (3 + take(2), lens(i - 1))
+            case 17 => (3 + take(3), 0)
+            case _ => (11 + take(7), 0)
+          }
+          if (i + rep > total) fail("invalid bit length repeat")
+          java.util.Arrays.fill(lens, i, i + rep, v)
+          i += rep
+        }
+      }
+      if (lens(256) == 0) fail("invalid code -- missing end-of-block")
+      dynLit = build(lens, 0, nLit, 10, dynLit, incompleteOk = true, "literal/lengths")
+      dynDist = build(lens, nLit, nDist, 8, dynDist, incompleteOk = true, "distances")
+      lit = dynLit; litRoot = 10; dist = dynDist; distRoot = 8
+    }
+
+    /** Copies the rest of a stored block into the window, up to `limit`. */
+    private def storedCopy(limit: Int): Unit = {
+      while (storedLeft > 0 && nBits >= 8 && wpos < limit) {
+        win(wpos) = bits.toByte
+        wpos += 1
+        drop(8)
+        storedLeft -= 1
+      }
+      if (nBits == 0) bits = 0L // the bytes above were taken from the buffer
+      while (storedLeft > 0 && wpos < limit) {
+        if (inPos == inLim && !fillIn()) truncated()
+        val n = math.min(math.min(storedLeft, limit - wpos), inLim - inPos)
+        System.arraycopy(inBuf, inPos, win, wpos, n)
+        inPos += n
+        wpos += n
+        storedLeft -= n
+      }
+      if (storedLeft == 0) state = Header
+    }
+
+    /** Copies a match of `len` bytes from `d` back, up to `limit`; what the
+      * limit cuts off is kept for the next call. */
+    private def copy(len: Int, d: Int, limit: Int): Unit = {
+      val n = math.min(len, limit - wpos)
+      val w = win
+      var p = wpos
+      var s = p - d
+      if (d >= n && n >= 32) System.arraycopy(w, s, w, p, n)
+      else {
+        val end = p + n
+        while (p < end) { w(p) = w(s); p += 1; s += 1 }
+      }
+      wpos += n
+      copyLen = len - n
+      copyDist = d
+    }
+
+    /** Decodes symbols of the current block into the window, up to `limit`.
+      * The bit buffer and the write index live in locals here (no closure
+      * may capture them, or they would be boxed), written back on every
+      * way out but an error. */
+    private def codes(limit: Int): Unit = {
+      if (copyLen > 0) { copy(copyLen, copyDist, limit); if (copyLen > 0) return }
+      val lt = lit
+      val lr = litRoot
+      val lm = (1 << lr) - 1
+      val dt = dist
+      val dr = distRoot
+      val dm = (1 << dr) - 1
+      val w = win
+      var b = bits
+      var nb = nBits
+      var p = wpos
+      while (p < limit) {
+        // a literal/length code, its extra bits, a distance code and its
+        // extra bits take at most 15 + 5 + 15 + 13 = 48 bits
+        if (nb < 48) {
+          if (inLim - inPos >= 8) {
+            b |= inWords.getLong(inPos) << nb
+            val t = (63 - nb) >>> 3
+            inPos += t
+            nb += t << 3
+          } else { bits = b; nBits = nb; refill(); b = bits; nb = nBits }
+        }
+        var e = lt((b & lm).toInt)
+        if ((e & Link) != 0) e = lt((e >>> 16) + ((b >>> lr).toInt & ((1 << (e & 0xff)) - 1)))
+        val l = e & 0xff
+        if (l == 0) fail("invalid literal/length code")
+        if (l > nb) truncated()
+        b >>>= l
+        nb -= l
+        val sym = e >>> 16
+        if (sym < 256) {
+          w(p) = sym.toByte
+          p += 1
+          // a second literal needs no refill while 15 bits are left
+          if (nb >= 15 && p < limit) {
+            val e2 = lt((b & lm).toInt)
+            if ((e2 & Link) == 0 && (e2 >>> 16) < 256 && (e2 & 0xff) != 0) {
+              w(p) = (e2 >>> 16).toByte
+              p += 1
+              b >>>= e2 & 0xff
+              nb -= e2 & 0xff
+            }
+          }
+        }
+        else if (sym == 256) { state = Header; bits = b; nBits = nb; wpos = p; return }
+        else {
+          if (sym > 285) fail("invalid literal/length code")
+          val li = sym - 257
+          val lx = LenExtra(li)
+          if (lx > nb) truncated()
+          val len = LenBase(li) + (b & ((1 << lx) - 1)).toInt
+          b >>>= lx
+          nb -= lx
+          var d = dt((b & dm).toInt)
+          if ((d & Link) != 0) d = dt((d >>> 16) + ((b >>> dr).toInt & ((1 << (d & 0xff)) - 1)))
+          val dl = d & 0xff
+          if (dl == 0) fail("invalid distance code")
+          if (dl > nb) truncated()
+          b >>>= dl
+          nb -= dl
+          val ds = d >>> 16
+          if (ds >= 30) fail("invalid distance code")
+          val dx = DistExtra(ds)
+          if (dx > nb) truncated()
+          val dd = DistBase(ds) + (b & ((1 << dx) - 1)).toInt
+          b >>>= dx
+          nb -= dx
+          if (dd > p) fail("invalid distance too far back")
+          val n = math.min(len, limit - p)
+          if (dd >= n && n >= 16) System.arraycopy(w, p - dd, w, p, n)
+          else {
+            var s = p - dd
+            val end = p + n
+            var q = p
+            while (q < end) { w(q) = w(s); q += 1; s += 1 }
+          }
+          p += n
+          if (n < len) {
+            copyLen = len - n
+            copyDist = dd
+            bits = b; nBits = nb; wpos = p
+            return
+          }
+        }
+      }
+      bits = b; nBits = nb; wpos = p
+    }
+
+    /** Decodes into the window until it holds unread output or the stream
+      * ends; false at the end. */
+    private def produce(): Boolean = {
+      while (rpos == wpos && state != Done) {
+        if (wpos == WinSize) {
+          System.arraycopy(win, wpos - History, win, 0, History)
+          winBase += wpos - History
+          wpos = History
+          rpos = History
+        }
+        while (wpos < WinSize && state != Done) state match {
+          case Header => if (last) state = Done else header()
+          case Stored => storedCopy(WinSize)
+          case Codes => codes(WinSize)
+          case _ => // Plain
+            val n = in.read(win, wpos, WinSize - wpos)
+            if (n < 0) state = Done else wpos += n
+        }
+        if (winBase + wpos > cap) throw new InputTooLargeException(
+          s"Zip entry $name inflated beyond maxEntrySizeBytes=$cap")
+      }
+      rpos < wpos
+    }
+
+    override def read(): Int =
+      if (rpos == wpos && !produce()) -1 else { rpos += 1; win(rpos - 1) & 0xff }
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (rpos == wpos && !produce()) -1
+      else {
+        val n = math.min(len, wpos - rpos)
+        System.arraycopy(win, rpos, b, off, n)
+        rpos += n
+        n
+      }
+
+    override def skip(n: Long): Long = {
+      var left = n
+      while (left > 0 && (rpos < wpos || produce())) {
+        val k = math.min(left, (wpos - rpos).toLong).toInt
+        rpos += k
+        left -= k
+      }
+      n - left
+    }
+
+    override def close(): Unit = in.close()
+  }
+
+  private[sources] object RawInflate {
+    private final val WinSize = 1 << 18
+    private final val History = 1 << 15
+    private final val Link = 0x100
+
+    private final val Header = 0
+    private final val Stored = 1
+    private final val Codes = 2
+    private final val Plain = 3
+    private final val Done = 4
+
+    private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31,
+      35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
+    private val LenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2,
+      3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
+    private val DistBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
+      257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193, 12289, 16385, 24577)
+    private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6,
+      7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
+    private val ClenOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
+
+    /** The lookup table of the canonical code with lengths `lens(off until
+      * off + n)`, in `into` or a larger array: entry `sym << 16 | length`,
+      * or, for a root entry whose codes are longer than `root` bits, `start
+      * << 16 | Link | subBits` pointing at a subtable; 0 where no code
+      * decodes. A code must be complete, except that a literal/length or
+      * distance code may be empty or a single one-bit code (as zlib
+      * allows). */
+    private def build(lens: Array[Int], off: Int, n: Int, root: Int, into: Array[Int],
+        incompleteOk: Boolean, what: String): Array[Int] = {
+      val count = new Array[Int](16)
+      var max = 0
+      var i = 0
+      while (i < n) { val l = lens(off + i); count(l) += 1; if (l > max) max = l; i += 1 }
+      count(0) = 0
+      var left = 1
+      var len = 1
+      while (len <= 15) {
+        left = (left << 1) - count(len)
+        if (left < 0) throw new ZipException(s"invalid deflate data: over-subscribed $what code")
+        len += 1
+      }
+      if (left > 0 && max > 0 && !(incompleteOk && max == 1))
+        throw new ZipException(s"invalid deflate data: incomplete $what code")
+      val next = new Array[Int](16)
+      var code = 0
+      len = 1
+      while (len <= 15) { code = (code + count(len - 1)) << 1; next(len) = code; len += 1 }
+      val rev = new Array[Int](n)
+      val rootSize = 1 << root
+      val subBits = new Array[Int](rootSize)
+      i = 0
+      while (i < n) {
+        val l = lens(off + i)
+        if (l > 0) {
+          val r = Integer.reverse(next(l)) >>> (32 - l)
+          next(l) += 1
+          rev(i) = r
+          if (l > root) { val p = r & (rootSize - 1); subBits(p) = math.max(subBits(p), l - root) }
+        }
+        i += 1
+      }
+      val subStart = new Array[Int](rootSize)
+      var size = rootSize
+      var p = 0
+      while (p < rootSize) {
+        if (subBits(p) > 0) { subStart(p) = size; size += 1 << subBits(p) }
+        p += 1
+      }
+      val tab = if (into.length >= size) into else new Array[Int](size)
+      java.util.Arrays.fill(tab, 0, size, 0)
+      i = 0
+      while (i < n) {
+        val l = lens(off + i)
+        if (l > 0) {
+          val r = rev(i)
+          val e = i << 16 | l
+          if (l <= root) {
+            var k = r
+            while (k < rootSize) { tab(k) = e; k += 1 << l }
+          } else {
+            val q = r & (rootSize - 1)
+            val sb = subBits(q)
+            tab(q) = subStart(q) << 16 | Link | sb
+            var k = r >>> root
+            while (k < (1 << sb)) { tab(subStart(q) + k) = e; k += 1 << (l - root) }
+          }
+        }
+        i += 1
+      }
+      tab
+    }
+
+    private val FixedLit: Array[Int] = {
+      val l = Array.tabulate(288)(s => if (s < 144) 8 else if (s < 256) 9 else if (s < 280) 7 else 8)
+      build(l, 0, 288, 9, new Array[Int](1 << 9), incompleteOk = false, "fixed")
+    }
+    private val FixedDist: Array[Int] =
+      build(Array.fill(32)(5), 0, 32, 5, new Array[Int](1 << 5), incompleteOk = false, "fixed")
+  }
+
+  /** Bytes `[at, until)` of a file, read with positioned reads. */
+  private final class ChannelSlice(ch: FileChannel, private var at: Long, until: Long)
+      extends InputStream {
+    override def read(): Int = {
+      val b = new Array[Byte](1)
+      if (read(b, 0, 1) < 0) -1 else b(0) & 0xff
+    }
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (at >= until) -1
+      else {
+        val n = ch.read(ByteBuffer.wrap(b, off, math.min(len.toLong, until - at).toInt), at)
+        if (n > 0) at += n
+        n
+      }
+  }
+
+  /** A workbook's entries, each read through [[RawInflate]] from its raw
+    * bytes, which commons-compress locates in the file. The JDK's
+    * [[ZipFile]] of the same file stays the one place entries are looked up
+    * and guarded ([[checkEntries]]); an entry whose method, sizes or CRC-32
+    * differ between the two readings of the central directory is refused. */
+  private[sources] final class XlsxPackage(val zip: ZipFile) extends AutoCloseable {
+    private val ch = FileChannel.open(new File(zip.getName).toPath)
+    private val raw =
+      try CommonsZipFile.builder().setSeekableByteChannel(ch).get()
+      catch { case e: Throwable => ch.close(); throw e }
+
+    /** The inflated bytes of `entry`, from the start or from the block
+      * `from` names; `cap` bounds the inflated offset. */
+    def open(entry: ZipEntry, cap: Long, from: BlockStart = BlockStart.Origin): RawInflate = {
+      val e = raw.getEntry(entry.getName)
+      if (e == null || e.getMethod != entry.getMethod || e.getSize != entry.getSize ||
+          e.getCompressedSize != entry.getCompressedSize || e.getCrc != entry.getCrc)
+        throw new ZipException(
+          s"${zip.getName}: the central directory entries of ${entry.getName} disagree")
+      val stored = entry.getMethod match {
+        case ZipEntry.STORED => true
+        case ZipEntry.DEFLATED => false
+        case m => throw new ZipException(s"invalid compression method $m of ${entry.getName}")
+      }
+      val at = e.getDataOffset
+      new RawInflate(new ChannelSlice(ch, at + (from.bit >>> 3), at + e.getCompressedSize),
+        from, stored, cap, entry.getName)
+    }
+
+    override def close(): Unit = try raw.close() finally ch.close()
+  }
+
+  private def using[A](zip: ZipFile)(body: XlsxPackage => A): A = {
+    val pkg = new XlsxPackage(zip)
+    try body(pkg) finally pkg.close()
+  }
 
   private def requireEntry(zip: ZipFile, name: String): ZipEntry = {
     val e = zip.getEntry(name)
@@ -154,8 +686,10 @@ object XlsxParsing {
 
   /** The UTF-8 text of a part: a UTF-8 BOM is dropped, and a UTF-16 part —
     * by its BOM, or by the `<?` its declaration starts with — is
-    * transcoded, so the scanner only ever sees UTF-8. */
-  private def utf8View(raw: InputStream): InputStream = {
+    * transcoded, so the scanner only ever sees UTF-8. With it, how many
+    * bytes the part has ahead of the text's (3 after a BOM, else 0), or -1
+    * when the text is transcoded and its offsets are not the part's. */
+  private def utf8View(raw: InputStream): (InputStream, Int) = {
     val in = new PushbackInputStream(raw, 4)
     val head = in.readNBytes(4)
     def starts(bs: Int*): Boolean =
@@ -165,8 +699,10 @@ object XlsxParsing {
       else if (starts(0x3C, 0, 0x3F, 0)) Some(UTF_16LE)
       else if (starts(0, 0x3C, 0, 0x3F)) Some(UTF_16BE)
       else None
-    if (starts(0xEF, 0xBB, 0xBF)) in.unread(head, 3, head.length - 3) else in.unread(head)
-    charset.fold(in: InputStream)(cs => new Utf8Encoder(new InputStreamReader(in, cs)))
+    val bom = starts(0xEF, 0xBB, 0xBF)
+    if (bom) in.unread(head, 3, head.length - 3) else in.unread(head)
+    charset.fold((in: InputStream, if (bom) 3 else 0))(cs =>
+      (new Utf8Encoder(new InputStreamReader(in, cs)), -1))
   }
 
   /** Re-encodes a character stream as UTF-8 bytes. */
@@ -241,13 +777,15 @@ object XlsxParsing {
     *
     * @param part the entry name, for error messages */
   private final class XmlScanner(raw: InputStream, file: String, part: String,
-      attrNames: Array[Name]) {
+      attrNames: Array[Name], from: AccessPoint = null) {
     require(attrNames.forall(_.key != 0))
-    private val in = utf8View(raw)
+    /** `in` is the text scanned; the part has `skew` bytes ahead of it
+      * ([[utf8View]]). From an access point, `raw` is already there. */
+    private val (in: InputStream, skew: Int) = if (from == null) utf8View(raw) else (raw, from.skew)
     private var buf = new Array[Byte](1 << 16)
     private var pos = 0
     private var lim = 0
-    private var base = 0L // offset of buf(0) in the part
+    private var base = if (from == null) 0L else from.rowAt // offset of buf(0) in the text
     private val name = new Bytes(64) // qname of the current element
     private var local = 0 // where its local name starts
     private var localKey = 0L
@@ -264,8 +802,37 @@ object XlsxParsing {
     private var nameKey = 0L
     private var wholeKey = 0L
     private var colon = -1
-    /** Offset in the part of the '<' of the tag [[next]] read last. */
+    /** Offset in the text of the '<' of the tag [[next]] read last. */
     var tagAt = 0L
+    /** Told, each time input is read, the offset of the first byte the
+      * scanner still holds: no later tag starts before it. */
+    var onRead: Long => Unit = null
+
+    if (from != null) {
+      open.append(from.open, 0, from.open.length)
+      depth = from.ends.length
+      ends = java.util.Arrays.copyOf(from.ends, math.max(16, depth))
+      openKeys = java.util.Arrays.copyOf(from.keys, math.max(16, depth))
+    }
+
+    def textSkew: Int = skew
+
+    // the open elements at the '<' of the start tag just read: without it
+    private def outer: Int = if (pendingEnd) depth else depth - 1
+    private def outerLen: Int = if (outer > 0) ends(outer - 1) else 0
+
+    /** The elements open where the start tag just read begins: qnames back
+      * to back, the end of each, their packed keys (what an [[AccessPoint]]
+      * keeps). */
+    def openNames: Array[Byte] = java.util.Arrays.copyOf(open.arr, outerLen)
+    def openEnds: Array[Int] = java.util.Arrays.copyOf(ends, outer)
+    def openKeyArray: Array[Long] = java.util.Arrays.copyOf(openKeys, outer)
+
+    /** Whether [[openNames]] and [[openEnds]] would equal `names` and `until`. */
+    def isOpen(names: Array[Byte], until: Array[Int]): Boolean =
+      until.length == outer && names.length == outerLen &&
+        sameBytes(open.arr, 0, names, names.length) &&
+        java.util.Arrays.equals(until, 0, outer, ends, 0, outer)
 
     def fail(what: String): Nothing = throw new IllegalArgumentException(
       s"$file: $part at byte ${base + pos}: $what")
@@ -292,6 +859,7 @@ object XlsxParsing {
         lim -= pos
         pos = 0
       }
+      if (onRead != null) onRead(base)
       if (lim == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
       val n = in.readNBytes(buf, lim, buf.length - lim)
       lim += n
@@ -710,14 +1278,27 @@ object XlsxParsing {
   private final val Cdata = ascii("CDATA[")
 
   /** Opens `entry` and hands the scanner to `onStart` at every start tag. */
-  private def eachStart(zip: ZipFile, entry: ZipEntry, cap: Long,
+  private def eachStart(pkg: XlsxPackage, entry: ZipEntry, cap: Long,
       attrNames: Array[Name])(onStart: XmlScanner => Unit): Unit = {
-    val stream = entryStream(zip, entry, cap)
+    val stream = pkg.open(entry, cap)
     try {
-      val xml = new XmlScanner(stream, zip.getName, entry.getName, attrNames)
+      val xml = new XmlScanner(stream, pkg.zip.getName, entry.getName, attrNames)
       var ev = xml.next()
       while (ev != Eof) { if (ev == Start) onStart(xml); ev = xml.next() }
     } finally stream.close()
+  }
+
+  /** Where a reader of a sheet can start without the sheet's prefix: at
+    * the `<row` tag at offset `rowAt` of the part's text (offset `rowAt +
+    * skew` of the part), with the scanner's open elements there, and the
+    * `rows` row starts and `dataRows` counted data rows before it, decoded
+    * from `block`, the last deflate block that starts at or before it. The
+    * file, the entry's name, CRC-32 and sizes say which part it belongs to. */
+  private[sources] final case class AccessPoint(file: String, part: String, crc: Long,
+      size: Long, packed: Long, rowAt: Long, skew: Int, rows: Long, dataRows: Int,
+      open: Array[Byte], ends: Array[Int], keys: Array[Long], block: BlockStart) {
+    def fits(entry: ZipEntry): Boolean = entry.getName == part && entry.getCrc == crc &&
+      entry.getSize == size && entry.getCompressedSize == packed
   }
 
   private final val Relationship = new Name("Relationship")
@@ -726,11 +1307,14 @@ object XlsxParsing {
   /** Workbook sheet list in declared order. Targets resolve through
     * xl/_rels/workbook.xml.rels (sheet N is NOT guaranteed to live in
     * sheetN.xml — the rels indirection is part of the OPC format). */
-  def listSheets(zip: ZipFile, cap: Long): Seq[SheetInfo] = {
+  def listSheets(zip: ZipFile, cap: Long): Seq[SheetInfo] = using(zip)(listSheets(_, cap))
+
+  private[sources] def listSheets(pkg: XlsxPackage, cap: Long): Seq[SheetInfo] = {
+    val zip = pkg.zip
     val rels = scala.collection.mutable.Map.empty[String, String]
     val relsEntry = zip.getEntry("xl/_rels/workbook.xml.rels")
     if (relsEntry != null)
-      eachStart(zip, relsEntry, cap, Array(new Name("Id"), new Name("Target"))) { xml =>
+      eachStart(pkg, relsEntry, cap, Array(new Name("Id"), new Name("Target"))) { xml =>
         if (xml.is(Relationship)) {
           val id = xml.attrString(0)
           val target = xml.attrString(1)
@@ -741,7 +1325,7 @@ object XlsxParsing {
       }
     val out = ArrayBuffer.empty[SheetInfo]
     // the r:id attribute is namespaced; it matches by local name
-    eachStart(zip, requireEntry(zip, "xl/workbook.xml"), cap,
+    eachStart(pkg, requireEntry(zip, "xl/workbook.xml"), cap,
         Array(new Name("name"), new Name("id"))) { xml =>
       if (xml.is(Sheet)) {
         val target = Option(xml.attrString(1)).flatMap(rels.get)
@@ -802,15 +1386,17 @@ object XlsxParsing {
 
   /** sharedStrings.xml → dense array; every `<t>` of an `<si>` — rich-text
     * runs and phonetic `<rPh>` runs alike — concatenates. */
-  def sharedStrings(zip: ZipFile, cap: Long): Array[String] = {
-    val entry = zip.getEntry("xl/sharedStrings.xml")
+  def sharedStrings(zip: ZipFile, cap: Long): Array[String] = using(zip)(sharedStrings(_, cap))
+
+  private[sources] def sharedStrings(pkg: XlsxPackage, cap: Long): Array[String] = {
+    val entry = pkg.zip.getEntry("xl/sharedStrings.xml")
     if (entry == null) return Array.empty
     val out = ArrayBuffer.empty[String]
     val text = new Bytes(256)
     var inItem = false
-    val stream = entryStream(zip, entry, cap)
+    val stream = pkg.open(entry, cap)
     try {
-      val xml = new XmlScanner(stream, zip.getName, entry.getName, Array.empty[Name])
+      val xml = new XmlScanner(stream, pkg.zip.getName, entry.getName, Array.empty[Name])
       var ev = xml.next()
       while (ev != Eof) {
         if (ev == Start) {
@@ -877,12 +1463,24 @@ object XlsxParsing {
     * a byte range of the part, so that readers over ranges that tile the
     * part read each row exactly once between them.
     *
-    * @param sharedCount size of the shared-string table the renderers get */
-  final class SheetRows(zip: ZipFile, entry: ZipEntry, sharedCount: Int,
-      cap: Long) extends AutoCloseable {
-    private val stream = entryStream(zip, entry, cap)
-    private val xml = new XmlScanner(stream, zip.getName, entry.getName,
-      Array(new Name("r"), T))
+    * @param sharedCount size of the shared-string table the renderers get
+    * @param from an access point to start at, used only if it [[AccessPoint.fits]]
+    *   the entry; else (and when null) the reader starts at the part's start
+    * @param marks part offsets to take [[accessPoints]] at while reading
+    * @param ownsPackage whether [[close]] closes `pkg` too */
+  final class SheetRows(pkg: XlsxPackage, entry: ZipEntry, sharedCount: Int, cap: Long,
+      from: AccessPoint, marks: Array[Long], ownsPackage: Boolean) extends AutoCloseable {
+
+    /** Reads the part from its start, recording nothing. */
+    def this(zip: ZipFile, entry: ZipEntry, sharedCount: Int, cap: Long) =
+      this(new XlsxPackage(zip), entry, sharedCount, cap, null, Array.emptyLongArray, true)
+
+    private val start = if (from != null && from.fits(entry)) from else null
+    private val stream = pkg.open(entry, cap, if (start != null) start.block else BlockStart.Origin)
+    stream.track = marks.nonEmpty
+    if (start != null) stream.skipNBytes(start.rowAt + start.skew - start.block.out)
+    private val xml = new XmlScanner(stream, pkg.zip.getName, entry.getName,
+      Array(new Name("r"), T), start)
     private val text = new Bytes(1 << 12) // the row's raw and inline values
     private var n = 0 // cells in the current row
     private var cols = new Array[Int](32)
@@ -890,9 +1488,61 @@ object XlsxParsing {
     private var offs = new Array[Int](32) // value start in `text`, shared index or 0/1
     private var ends = new Array[Int](32)
     private var maxCol = -1
-    private var rowStarts = 0L // `<row>` tags read or skipped so far
+    private var rowStarts = if (start != null) start.rows else 0L // `<row>` tags read or skipped
     private var stopAt = Long.MaxValue // no row starting here or later is read
     private var done = false
+
+    /** Data rows the caller has counted (the `headerRow` skip's count); an
+      * access point keeps it for the rows before it. */
+    var dataRows: Int = if (start != null) start.dataRows else 0
+
+    // access points: the next mark to take one at, and the last row start
+    // at or before it, with the state there; a transcoded part gets none
+    private var mark = if (xml.textSkew < 0) marks.length else 0
+    private val points = ArrayBuffer.empty[AccessPoint]
+    private var candAt = -1L
+    private var candRows = 0L
+    private var candData = 0
+    private var candBlock: BlockStart = null
+    private var candOpen: Array[Byte] = null
+    private var candEnds: Array[Int] = null
+    private var candKeys: Array[Long] = null
+    if (mark < marks.length) xml.onRead = at => stream.prune(at + xml.textSkew)
+    else stream.track = false
+
+    /** A `<row` starts at `at`: the candidate for the current mark, or, past
+      * it, the previous candidate is that mark's access point. */
+    private def note(at: Long): Unit = {
+      while (mark < marks.length && at > marks(mark)) { keep(); mark += 1 }
+      if (mark < marks.length) {
+        candAt = at
+        candRows = rowStarts
+        candData = dataRows
+        candBlock = stream.blockAt(at + xml.textSkew)
+        if (candOpen == null || !xml.isOpen(candOpen, candEnds)) {
+          candOpen = xml.openNames
+          candEnds = xml.openEnds
+          candKeys = xml.openKeyArray
+        }
+      } else {
+        stream.track = false
+        xml.onRead = null
+      }
+    }
+
+    private def keep(): Unit =
+      if (candAt >= 0 && (points.isEmpty || points.last.rowAt != candAt))
+        points += AccessPoint(pkg.zip.getName, entry.getName, entry.getCrc, entry.getSize,
+          entry.getCompressedSize, candAt, xml.textSkew, candRows, candData, candOpen,
+          candEnds, candKeys, candBlock)
+
+    /** After the part has been read to its end: one access point for each
+      * mark that has a row start at or before it, the last such row start
+      * (marks that share one share it). */
+    def accessPoints: Seq[AccessPoint] = {
+      while (mark < marks.length) { keep(); mark += 1 }
+      points.toSeq
+    }
 
     /** 0-based place in the part of the row [[next]] read last. */
     def ordinal: Long = rowStarts - 1
@@ -927,6 +1577,7 @@ object XlsxParsing {
         if (ev == Start) {
           if (xml.is(Row)) {
             if (xml.tagAt >= stopAt) { done = true; return false }
+            if (mark < marks.length) note(xml.tagAt)
             rowStarts += 1
             n = 0
             text.len = 0
@@ -1069,7 +1720,7 @@ object XlsxParsing {
       i + 1 < until
     }
 
-    override def close(): Unit = stream.close()
+    override def close(): Unit = try stream.close() finally if (ownsPackage) pkg.close()
   }
 
   /** Resolve the file list for a path option: a single file, or every
@@ -1131,27 +1782,41 @@ private[sources] object XlsxOptions {
   * all-string row model, T1/T5); header row names columns with the
   * index-fallback rule (S4).
   *
-  * Partitioning. A deflate stream cannot be entered mid-way, but its
-  * inflated bytes can be split: each sheet is read as K row ranges by
-  * inflated byte offset. K follows Spark's own file-split rule over the
+  * Partitioning. Each sheet is read as K row ranges by inflated byte
+  * offset. K follows Spark's own file-split rule over the
   * `spark.sql.files.*` confs, with each sheet's uncompressed size `S`
   * from the zip central directory as its file length: ranges of
   * `min(maxPartitionBytes, max(openCostInBytes, total / minPartitionNum))`
   * bytes, so a sheet under 4 MB is one partition at Spark's defaults.
-  * Range `[lo, hi)` inflates the sheet from its start, passes `[0, lo)` with
-  * the scanner's exact structural skip, and reads every row whose `<row`
-  * tag starts in the range, the last one to its end. The last range is
-  * unbounded, so the ranges tile the part whatever its real byte count,
-  * and every row is read by exactly one range. A workbook directory is
-  * planned the same way over all its files; `unionSheets=true` reads every
-  * sheet of each file (header row consumed per sheet; narrower sheets pad
-  * with ""), all under the inferred schema.
+  * Range `[lo, hi)` reads every row whose `<row` tag starts in it, the
+  * last one to its end. The last range is unbounded, so the ranges tile
+  * the part whatever its real byte count, and every row is read by exactly
+  * one range. A workbook directory is planned the same way over all its
+  * files; `unionSheets=true` reads every sheet of each file (header row
+  * consumed per sheet; narrower sheets pad with ""), all under the inferred
+  * schema.
+  *
+  * Access points. Schema inference parses the whole sheet anyway; on the
+  * way it takes an access point at each range boundary `lo` the scan will
+  * plan with the session's confs: the last `<row` start `R ≤ lo` with the
+  * scanner's state there, and the last deflate block start at or before
+  * `R` with its history ([[XlsxParsing.AccessPoint]]). The provider hands
+  * them to its table and scan, and each range starts at the one with the
+  * largest `R ≤ lo`: it decodes from that block, discards the bytes up to
+  * `R`, and passes `[R, lo)` with the scanner's exact structural skip. A
+  * range starts at byte 0 instead, inflating and skipping `[0, lo)`, when
+  * it has no access point that fits: with a schema given (no inference),
+  * in the workbooks after the first, in the sheets other than the inferred
+  * one under `unionSheets`, in a UTF-16 part (its text offsets are not the
+  * part's), or when the entry's CRC-32 or sizes changed since inference.
+  * Either way every byte is parsed in full by exactly one range.
   *
   * A row's place in its sheet, not its range, decides how it is treated:
   * the sheet's first row is the header under `header=true`, and
   * `headerRow=N` drops the first N non-blank data rows of each sheet (the
-  * converter's preamble skip, T3); a range parses the sheet in full until
-  * it has seen those N rows, then skips structurally.
+  * converter's preamble skip, T3); a range parses the sheet in full, from
+  * its start or from an access point that counted the rows before it,
+  * until it has seen those N rows, then skips structurally.
   *
   * Order guarantee ([[graft.etl.Convert]] relies on it in place of a
   * sort): partitions follow file-name order, then sheet order under
@@ -1161,6 +1826,9 @@ class XlsxSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "xlsx"
   override def supportsExternalMetadata(): Boolean = true
 
+  // the access points the last inferSchema recorded, for getTable
+  private var indexed: (String, Seq[XlsxParsing.AccessPoint]) = ("", Nil)
+
   private def pathOf(options: java.util.Map[String, String]): String = {
     val p = options.get("path")
     require(p != null && p.nonEmpty, "xlsx source requires a path")
@@ -1169,25 +1837,42 @@ class XlsxSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = XlsxOptions(options)
-    val first = XlsxParsing.listFiles(pathOf(options)).head
+    val path = pathOf(options)
+    val first = XlsxParsing.listFiles(path).head
     val zip = new ZipFile(first)
+    val pkg = new XlsxParsing.XlsxPackage(zip)
     try {
       XlsxParsing.checkEntries(zip, first, opts.maxEntrySizeBytes, opts.minInflateRatio)
       val sheet = XlsxParsing.resolveSheet(
-        XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes), opts.sheetName, opts.sheetIndex)
-      val shared = XlsxParsing.sharedStrings(zip, opts.maxEntrySizeBytes)
+        XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes), opts.sheetName, opts.sheetIndex)
+      val shared = XlsxParsing.sharedStrings(pkg, opts.maxEntrySizeBytes)
       val entry = zip.getEntry(sheet.target)
       require(entry != null, s"Sheet target ${sheet.target} missing from $first")
-      val rows = new XlsxParsing.SheetRows(zip, entry, shared.length, opts.maxEntrySizeBytes)
+      // the range boundaries the scan will plan for this sheet, to take an
+      // access point at each while the sheet is parsed here anyway
+      val sheets = XlsxScan.sheets(path, opts)
+      val marks = sheets.zip(XlsxScan.ranges(SparkSession.active, sheets.map(_.size)))
+        .collectFirst { case (s, r) if s.file == first && s.target == sheet.target =>
+          r.map(_._1).filter(_ > 0).toArray }
+        .getOrElse(Array.emptyLongArray)
+      val rows = new XlsxParsing.SheetRows(pkg, entry, shared.length, opts.maxEntrySizeBytes,
+        null, marks, ownsPackage = false)
       try {
         // width = max over header AND data rows: the reference names
         // positions beyond the header by their index
-        // (core/writers/JsonDataWriter.java:151-154). Only the header is
-        // rendered; the data rows are parsed and checked for their width.
+        // (core/writers/JsonDataWriter.java:151-154). Only the header and
+        // the first `headerRow` non-blank data rows are rendered (counted
+        // as the readers count them, for the access points); the other
+        // data rows are parsed and checked for their width.
         val header: Array[String] =
           if (opts.header && rows.next()) rows.strings(shared) else Array.empty
         var width = header.length
-        while (rows.next()) width = math.max(width, rows.width)
+        while (rows.next()) {
+          width = math.max(width, rows.width)
+          if (rows.dataRows < opts.headerRow && rows.strings(shared).exists(_.nonEmpty))
+            rows.dataRows += 1
+        }
+        indexed = (path, rows.accessPoints)
         // duplicate header cells would collapse in name-keyed lookups
         // (StructType.fieldIndex — last-wins — would silently map two
         // ordinals to one physical column); uniquify deterministically by
@@ -1204,22 +1889,25 @@ class XlsxSource extends TableProvider with DataSourceRegister {
         }
         StructType(names.map(n => StructField(n, StringType, nullable = false)))
       } finally rows.close()
-    } finally zip.close()
+    } finally try pkg.close() finally zip.close()
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new XlsxTable(pathOf(properties), schema, XlsxOptions(properties))
+      properties: java.util.Map[String, String]): Table = {
+    val path = pathOf(properties)
+    new XlsxTable(path, schema, XlsxOptions(properties),
+      if (indexed._1 == path) indexed._2 else Nil)
+  }
 }
 
 private[sources] class XlsxTable(path: String, tableSchema: StructType,
-    opts: XlsxOptions) extends Table with SupportsRead {
+    opts: XlsxOptions, index: Seq[XlsxParsing.AccessPoint]) extends Table with SupportsRead {
   override def name(): String = s"xlsx:$path"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new XlsxScanBuilder(path, tableSchema, opts)
+    new XlsxScanBuilder(path, tableSchema, opts, index)
 }
 
 /** Column pruning: a projection of k columns builds k-wide rows — Catalyst
@@ -1227,39 +1915,32 @@ private[sources] class XlsxTable(path: String, tableSchema: StructType,
   * ordinals (the XML still streams past every cell; what pruning saves is
   * row width, string allocation, and everything downstream of the scan). */
 private[sources] class XlsxScanBuilder(path: String, tableSchema: StructType,
-    opts: XlsxOptions) extends ScanBuilder
+    opts: XlsxOptions, index: Seq[XlsxParsing.AccessPoint]) extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
   private var required: StructType = tableSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     // intersect in table order; Catalyst only asks for existing columns
     required = StructType(tableSchema.fields.filter(f =>
       requiredSchema.fieldNames.contains(f.name)))
-  override def build(): Scan = new XlsxScan(path, tableSchema, required, opts)
+  override def build(): Scan = new XlsxScan(path, tableSchema, required, opts, index)
 }
 
 private[sources] class XlsxScan(path: String, tableSchema: StructType,
-    required: StructType, opts: XlsxOptions) extends Scan with Batch {
+    required: StructType, opts: XlsxOptions, index: Seq[XlsxParsing.AccessPoint])
+    extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
-    // the sheets to read and their inflated sizes: only each workbook's
-    // central directory and workbook.xml are read, on the driver
-    val sheets = XlsxParsing.listFiles(path).flatMap { f =>
-      val zip = new ZipFile(f)
-      try {
-        XlsxParsing.checkEntries(zip, f, opts.maxEntrySizeBytes, opts.minInflateRatio)
-        val all = XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes)
-        val read =
-          if (opts.unionSheets) all.map(s => (Some(s.name), s))
-          else Seq((None, XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)))
-        read.map { case (pinned, s) =>
-          (f, pinned, Option(zip.getEntry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
+    val sheets = XlsxScan.sheets(path, opts)
+    sheets.zip(XlsxScan.ranges(SparkSession.active, sheets.map(_.size))).flatMap {
+      case (s, ranges) =>
+        ranges.map { case (lo, hi) =>
+          // the nearest access point at or before the range, if any
+          val start = if (lo == 0) None else index
+            .filter(ap => ap.file == s.file && ap.part == s.target && ap.rowAt <= lo)
+            .lastOption
+          XlsxRangePartition(s.file, s.pinned, lo, hi, start): InputPartition
         }
-      } finally zip.close()
-    }
-    sheets.zip(XlsxScan.ranges(SparkSession.active, sheets.map(_._3))).flatMap {
-      case ((f, pinned, _), ranges) =>
-        ranges.map { case (lo, hi) => XlsxRangePartition(f, pinned, lo, hi): InputPartition }
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -1269,6 +1950,28 @@ private[sources] class XlsxScan(path: String, tableSchema: StructType,
 }
 
 private[sources] object XlsxScan {
+  /** A sheet to read: its workbook, the sheet name a `unionSheets` scan
+    * pins, its part and its inflated size. */
+  final case class PlannedSheet(file: String, pinned: Option[String], target: String, size: Long)
+
+  /** The sheets a scan of `path` reads, in order; only each workbook's
+    * central directory and workbook.xml are read. */
+  def sheets(path: String, opts: XlsxOptions): Seq[PlannedSheet] =
+    XlsxParsing.listFiles(path).flatMap { f =>
+      val zip = new ZipFile(f)
+      try {
+        XlsxParsing.checkEntries(zip, f, opts.maxEntrySizeBytes, opts.minInflateRatio)
+        val all = XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes)
+        val read =
+          if (opts.unionSheets) all.map(s => (Some(s.name), s))
+          else Seq((None, XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)))
+        read.map { case (pinned, s) =>
+          PlannedSheet(f, pinned, s.target,
+            Option(zip.getEntry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
+        }
+      } finally zip.close()
+    }
+
   /** Spark's file-split rule (`FilePartition.maxSplitBytes` over the
     * `spark.sql.files.*` confs) applied to sheets of these inflated sizes:
     * the `[lo, hi)` byte ranges of each sheet, in order, the last one
@@ -1284,9 +1987,11 @@ private[sources] object XlsxScan {
 }
 
 /** Rows of one sheet whose `<row` tag starts in `[lo, hi)`; `sheet` pins
-  * the sheet under `unionSheets`, else the options resolve it. */
+  * the sheet under `unionSheets`, else the options resolve it; `start` is
+  * the access point to begin at, if schema inference took one for it. */
 private[sources] final case class XlsxRangePartition(file: String,
-    sheet: Option[String], lo: Long, hi: Long) extends InputPartition
+    sheet: Option[String], lo: Long, hi: Long,
+    start: Option[XlsxParsing.AccessPoint]) extends InputPartition
 
 private[sources] class XlsxReaderFactory(ordinals: Array[Int], opts: XlsxOptions)
     extends PartitionReaderFactory {
@@ -1305,19 +2010,21 @@ private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
     ordinals: Array[Int], opts: XlsxOptions) extends PartitionReader[InternalRow] {
 
   private val zip = new ZipFile(part.file)
+  private val pkg = new XlsxParsing.XlsxPackage(zip)
   XlsxParsing.checkEntries(zip, part.file, opts.maxEntrySizeBytes, opts.minInflateRatio)
   // a pinned sheet is the one this unionSheets partition owns; otherwise
   // the usual name/index resolution
   private val sheet = XlsxParsing.resolveSheet(
-    XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes),
+    XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes),
     part.sheet.orElse(opts.sheetName), if (part.sheet.isDefined) 0 else opts.sheetIndex)
   // encoded once per reader: cells are handed to Spark as these instances
-  private val shared = XlsxParsing.sharedStrings(zip, opts.maxEntrySizeBytes)
+  private val shared = XlsxParsing.sharedStrings(pkg, opts.maxEntrySizeBytes)
     .map(UTF8String.fromString)
   private val rows = {
     val entry = zip.getEntry(sheet.target)
     require(entry != null, s"Sheet target ${sheet.target} missing from ${part.file}")
-    new XlsxParsing.SheetRows(zip, entry, shared.length, opts.maxEntrySizeBytes)
+    new XlsxParsing.SheetRows(pkg, entry, shared.length, opts.maxEntrySizeBytes,
+      part.start.orNull, Array.emptyLongArray, ownsPackage = false)
   }
 
   private var current: Array[UTF8String] = _
@@ -1334,10 +2041,10 @@ private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
     false
   }
 
-  // which rows the preamble skip drops is known only in sheet order, so
-  // every range reads the sheet's prefix in full until it has passed them
-  private var skipped = 0
-  while (skipped < opts.headerRow && nextDataRow()) skipped += 1
+  // which rows the preamble skip drops is known only in sheet order, so a
+  // range reads the sheet in full, from its start or its access point,
+  // until the first `headerRow` non-blank data rows are passed
+  while (rows.dataRows < opts.headerRow && nextDataRow()) rows.dataRows += 1
   rows.range(part.lo, part.hi)
 
   override def next(): Boolean = nextDataRow()
@@ -1353,8 +2060,6 @@ private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
     new GenericInternalRow(vals)
   }
 
-  override def close(): Unit = {
-    rows.close()
-    zip.close()
-  }
+  override def close(): Unit =
+    try rows.close() finally try pkg.close() finally zip.close()
 }

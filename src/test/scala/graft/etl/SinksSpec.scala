@@ -92,4 +92,22 @@ class SinksSpec extends AnyFunSuite {
     assert(Sinks.saveMode(false) == org.apache.spark.sql.SaveMode.ErrorIfExists)
     assert(Sinks.saveMode(true) == org.apache.spark.sql.SaveMode.Overwrite)
   }
+
+  test("K3: jsonArray is the rows' JSON joined by the separator, byte for byte") {
+    val rows = Seq(("1", "plain"), ("2", "naïve 中文 😀"), ("3", "line\u2028sep"),
+      ("4", "cr\rlf\n"), ("5", "quote \" back \\"))
+    // five rows over four partitions, one of them empty, and an empty frame
+    val frames = Seq(
+      rows.toDF("k", "v").repartitionByRange(8, $"k").union(
+        spark.emptyDataset[(String, String)].toDF("k", "v")),
+      spark.emptyDataset[(String, String)].toDF("k", "v"))
+    for (df <- frames; pretty <- Seq(false, true)) {
+      val (open, sep, close) = if (pretty) ("[\n  ", ",\n  ", "\n]") else ("[", ",", "]")
+      val path = s"${tmpDir()}/bytes.json"
+      val n = Sinks.jsonArray(df, path, overwrite = true, pretty = pretty)
+      val json = df.toJSON.collect()
+      assert(n == json.length)
+      assert(Files.readString(Paths.get(path)) == open + json.mkString(sep) + close)
+    }
+  }
 }

@@ -1,8 +1,13 @@
 package graft.sources
 
 
+import java.nio.charset.StandardCharsets.{UTF_16LE, UTF_8}
+
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -345,5 +350,114 @@ class XlsxSourceSpec extends AnyFunSuite {
     val at = xml.indexOf("""<row r="3">""")
     assert(readSplitAt(f, at) == Seq("a", "b"))
     assert(readSplitAt(f, at + 1) == Seq("a", "b"))
+  }
+
+  // ---- access points: ranges that start where schema inference recorded ----
+
+  /** The partitions a scan of `f` plans after schema inference, as load()
+    * plans them, or with the schema given. */
+  private def planned(f: String, options: Map[String, String] = Map.empty,
+      infer: Boolean = true): Seq[XlsxRangePartition] = {
+    val all = options + ("path" -> f)
+    val src = new XlsxSource
+    val opts = new CaseInsensitiveStringMap(all.asJava)
+    val schema = src.inferSchema(opts)
+    val table = (if (infer) src else new XlsxSource).getTable(schema, Array.empty, all.asJava)
+    table.asInstanceOf[XlsxTable].newScanBuilder(opts).build().toBatch.planInputPartitions()
+      .map(_.asInstanceOf[XlsxRangePartition]).toSeq
+  }
+
+  /** At K = 1, 2 and 7, load() — ranges from access points — and a scan
+    * with the schema given — ranges from the part's start — read the same
+    * rows; returns them. */
+  private def bothWays(f: String, options: Map[String, String] = Map.empty): Seq[Seq[String]] =
+    Seq(1, 2, 7).map { k =>
+      FileSplits.withRanges(k) {
+        val indexed = spark.read.format("xlsx").options(options).load(f)
+        assert(indexed.rdd.getNumPartitions == k)
+        val plain = spark.read.format("xlsx").options(options).schema(indexed.schema).load(f)
+        val rows = indexed.collect().map(_.toSeq.map(_.toString)).toSeq
+        assert(rows == plain.collect().map(_.toSeq.map(_.toString)).toSeq, s"K=$k")
+        rows
+      }
+    }.distinct match {
+      case Seq(one) => one
+      case many => fail(s"rows differ between K = 1, 2, 7: ${many.map(_.size)}")
+    }
+
+  private def bigBook(name: String, rows: Int, salt: String = ""): (String, Seq[Seq[String]]) = {
+    val f = tmp(name)
+    val data = (1 to rows).map(i => Seq(i.toString, s"name $salt${i % 97}", s"v${i * 7}$salt",
+      if (i % 5 == 0) "" else s"t${i % 13}"))
+    // every 17th row all blank, dropped
+    XlsxTestFiles.write(f, Seq(("S", Seq(Seq("id", "name", "v", "t")).map(_.map(Option(_))) ++
+      data.zipWithIndex.map { case (r, i) => if (i % 17 == 3) r.map(_ => None) else r.map(Option(_)) })))
+    (f, data.zipWithIndex.filter(_._2 % 17 != 3).map(_._1))
+  }
+
+  test("access points: load() and a given schema read the split cases alike at K = 1, 2, 7") {
+    val (f, expected) = bigBook("ap_big.xlsx", 30000)
+    val sheetSize = {
+      val zip = new java.util.zip.ZipFile(f)
+      try zip.getEntry("xl/worksheets/sheet1.xml").getSize finally zip.close()
+    }
+    assert(sheetSize > 1000000) // several deflate blocks
+    assert(bothWays(f) == expected)
+    assert(bothWays(f, Map("headerRow" -> "3")) == expected.drop(3))
+    assert(bothWays(f, Map("header" -> "false")).size == expected.size + 1)
+    FileSplits.withRanges(7) {
+      val parts = planned(f)
+      assert(parts.size == 7 && parts.head.start.isEmpty)
+      for (p <- parts.tail) {
+        val ap = p.start.getOrElse(fail(s"no access point for range ${p.lo}"))
+        assert(ap.rowAt <= p.lo && p.lo - ap.rowAt < 200 && ap.block.out <= ap.rowAt)
+      }
+      assert(parts.tail.map(_.start.get.block.bit).distinct.size > 1) // not all at block 0
+      assert(planned(f, infer = false).forall(_.start.isEmpty))
+    }
+    // the adversarial sheets of the split cases above
+    val body = inline(2, "a") +
+      """<!-- <row r="90"><c r="A90"><v>comment</v></c></row> -->""" +
+      """<row r="3"><c r="A3" t="inlineStr"><is><t><![CDATA[<row r="91">cdata</row>]]></t>""" +
+      "</is></c></row>" + inline(4, "b")
+    assert(bothWays(rowsBook("ap_adversarial.xlsx", body)._1).map(_.head) ==
+      Seq("a", "<row r=\"91\">cdata</row>", "b"))
+    assert(bothWays(rowsBook("ap_prolog.xlsx", inline(2, "a") + inline(3, "b"),
+      prolog = s"<!-- ${"<row>" * 400} -->")._1).map(_.head) == Seq("a", "b"))
+    val blank = (r: Int) => s"""<row r="$r"><c r="A$r"/></row>"""
+    val preamble = rowsBook("ap_preamble.xlsx", inline(2, "p1") + blank(3) + inline(4, "p2") +
+      blank(5) + blank(6) + inline(7, "p3") + inline(8, "d1") + blank(9) + inline(10, "d2"))._1
+    assert(bothWays(preamble, Map("headerRow" -> "3")).map(_.head) == Seq("d1", "d2"))
+  }
+
+  test("access points: a workbook rewritten between load() and collect() reads its new rows") {
+    val (f, _) = bigBook("ap_rewritten.xlsx", 20000)
+    FileSplits.withRanges(7) {
+      val df = spark.read.format("xlsx").load(f)
+      assert(planned(f).tail.forall(_.start.isDefined))
+      val (g, fresh) = bigBook("ap_rewritten_new.xlsx", 15000, salt = "x")
+      java.nio.file.Files.move(java.nio.file.Paths.get(g), java.nio.file.Paths.get(f),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(df.collect().map(_.toSeq.map(_.toString)).toSeq == fresh)
+    }
+  }
+
+  test("access points: UTF-16 and UTF-8-BOM sheets read at K = 7 through load()") {
+    val body = (2 to 600).map(r => inline(r, s"v$r")).mkString
+    def sheet(decl: String) = s"""<?xml version="1.0" encoding="$decl"?><worksheet xmlns="$ns">""" +
+      """<sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>h</t></is></c></row>""" + body + tail
+    val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ sheet("UTF-8").getBytes(UTF_8)
+    val utf16 = Array(0xFF, 0xFE).map(_.toByte) ++ sheet("UTF-16").getBytes(UTF_16LE)
+    for ((name, part, indexed) <- Seq(("bom", bom, true), ("utf16", utf16, false))) withClue(name) {
+      val f = tmp(s"ap_$name.xlsx")
+      XlsxTestFiles.writeParts(f, Seq(("S", part)))
+      FileSplits.withRanges(7) {
+        val df = spark.read.format("xlsx").load(f)
+        assert(df.rdd.getNumPartitions == 7)
+        assert(df.collect().map(_.getString(0)).toSeq == (2 to 600).map(r => s"v$r"))
+        val starts = planned(f).tail.map(_.start)
+        assert(if (indexed) starts.forall(_.exists(_.skew == 3)) else starts.forall(_.isEmpty))
+      }
+    }
   }
 }
