@@ -8,7 +8,7 @@ import java.util.zip.{ZipEntry, ZipException, ZipFile}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.commons.compress.archivers.zip.{ZipFile => CommonsZipFile}
+import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipFile => CommonsZipFile}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -40,10 +40,11 @@ import graft.etl.{InflationLimitException, InputTooLargeException}
   *    core/FallbackZipExtractor.java:31-32,91-165,
   *    core/SafePOIEntryStreamer.java:54-90).
   *
-  * Entries are looked up and guarded through the JDK's `ZipFile`; every
-  * part (workbook, its rels, shared strings, sheets) is inflated by
-  * [[RawInflate]] from the entry's raw bytes, which commons-compress
-  * locates ([[XlsxPackage]]). The JDK's inflater cannot start inside a
+  * Entries are looked up and guarded in the central directory as
+  * commons-compress reads it, and every part (workbook, its rels, shared
+  * strings, sheets) is inflated by [[RawInflate]] from the entry's raw
+  * bytes ([[XlsxPackage]]); the calls that take a JDK `ZipFile` open a
+  * package over its file. The JDK's inflater cannot start inside a
   * stream; this one can start at any deflate block whose bit offset and
   * 32 KB history were recorded, which is what lets a range of a sheet
   * start near its first row ([[AccessPoint]]).
@@ -66,12 +67,12 @@ import graft.etl.{InflationLimitException, InputTooLargeException}
   * part's size. A corrupt deflate stream ends in a `ZipException`.
   *
   * Memory contract: per open part one decoder (a 64 KB input buffer and a
-  * 256 KB window, of which 32 KB is history) and one 64 KB scan window
-  * (larger only while a single tag is), one row's cells at a time, the
+  * window of at most 256 KB, of which 32 KB is history) and one 64 KB scan
+  * window (larger only while a single tag is), one row's cells at a time, the
   * shared-strings array resident (the reference holds the same table; its
   * "lazy provider" S6 trades that residency for re-parses). Schema
   * inference also holds the 32 KB history of each access point it takes,
-  * and of the few block starts the decoder is ahead of the scanner.
+  * and of at most 16 block starts the decoder is ahead of the scanner.
   */
 object XlsxParsing {
 
@@ -80,26 +81,10 @@ object XlsxParsing {
   /** SpreadsheetML's column limit: column XFD. */
   final val MaxColumns = 16384
 
-  /** Central-directory guard pass over every entry — runs before any entry
-    * is inflated (FallbackZipExtractor.java:146-150 / ZipSecureFile caps). */
+  /** [[XlsxPackage.checkEntries]] over `zip`'s file (which `file` names). */
   def checkEntries(zip: ZipFile, file: String, maxEntrySizeBytes: Long,
-      minInflateRatio: Double): Unit = {
-    val es = zip.entries()
-    while (es.hasMoreElements) {
-      val e = es.nextElement()
-      if (!e.isDirectory) {
-        if (e.getSize >= 0 && e.getSize > maxEntrySizeBytes)
-          throw new InputTooLargeException(
-            s"Zip entry ${e.getName} in $file is ${e.getSize} bytes, " +
-              s"exceeding maxEntrySizeBytes=$maxEntrySizeBytes")
-        if (minInflateRatio > 0 && e.getSize > 0 && e.getCompressedSize >= 0 &&
-            e.getCompressedSize.toDouble / e.getSize < minInflateRatio)
-          throw new InflationLimitException(
-            s"Zip entry ${e.getName} in $file inflates ${e.getCompressedSize}B → " +
-              s"${e.getSize}B (ratio below minInflateRatio=$minInflateRatio)")
-      }
-    }
-  }
+      minInflateRatio: Double): Unit =
+    using(zip)(_.checkEntries(maxEntrySizeBytes, minInflateRatio))
 
   /** Where a deflate block starts: its bit offset in the entry's compressed
     * data, its offset in the inflated data, and the inflated bytes before it
@@ -118,18 +103,21 @@ object XlsxParsing {
     *
     * Stored, fixed-code and dynamic-code blocks are decoded with two-level
     * lookup tables (a 10-bit root for literal/lengths, 8-bit for distances)
-    * into a 256 KB window whose last 32 KB is kept as the match history
-    * when it slides. The inflated offset is counted against `cap`, with the
-    * entry-size cap's exception. A malformed stream — a bad block type,
-    * code lengths that over-subscribe or leave a code incomplete, a repeat
-    * with nothing to repeat, an invalid symbol, a distance before the
-    * output start, a stored block whose lengths disagree, or input that
-    * ends before the final block — raises a `ZipException`; every step
-    * consumes input or produces output, so decoding ends in time linear in
-    * the input and the output.
+    * into a window that grows to 256 KB and then slides, keeping its last
+    * 32 KB as the match history. The inflated offset is counted against
+    * `cap`, with the entry-size cap's exception. A malformed stream — a
+    * bad block type, code lengths that over-subscribe or leave a code
+    * incomplete, a repeat with nothing to repeat, an invalid symbol, a
+    * distance before the output start, a stored block whose lengths
+    * disagree, or input that ends before the final block — raises a
+    * `ZipException`; every step consumes input or produces output, so
+    * decoding ends in time linear in the input and the output.
     *
-    * With [[track]] set, every block start is recorded, with its history,
-    * until [[blockAt]] or [[prune]] drops it. */
+    * With [[track]] set, block starts are recorded, with their history,
+    * until [[blockAt]] or [[prune]] drops them: a block start at least 32 KB
+    * of output after the last one recorded, while fewer than 16 are pending
+    * (at most 512 KB of history). A block start not recorded only makes a
+    * later [[blockAt]] return an earlier one. */
   private[sources] final class RawInflate(in: InputStream, start: BlockStart, stored: Boolean,
       cap: Long, name: String) extends InputStream {
     import RawInflate._
@@ -145,8 +133,9 @@ object XlsxParsing {
     private var bits = 0L
     private var nBits = 0
     // output: win(0 until wpos), win(0) at inflated offset winBase; the
-    // reader has taken win(0 until rpos)
-    private val win = new Array[Byte](WinSize)
+    // reader has taken win(0 until rpos). The window starts small, for the
+    // many small parts, and doubles up to WinSize before it slides.
+    private var win = new Array[Byte](math.max(1 << 12, 2 * start.history.length))
     private var winBase = start.out - start.history.length
     private var wpos = start.history.length
     private var rpos = wpos
@@ -168,7 +157,7 @@ object XlsxParsing {
 
     if (!stored) { val skip = (start.bit & 7).toInt; if (skip > 0) { need(skip); drop(skip) } }
 
-    /** Records every block start from here on. */
+    /** Records block starts from here on. */
     var track = false
     private val starts = scala.collection.mutable.ArrayDeque.empty[BlockStart]
 
@@ -249,8 +238,13 @@ object XlsxParsing {
     }
 
     private def header(): Unit = {
-      if (track) starts += BlockStart((inBase + inPos) * 8 - nBits, winBase + wpos,
-        java.util.Arrays.copyOfRange(win, math.max(0, wpos - History), wpos))
+      // a block start is kept only 32 KB of output after the last one kept,
+      // and only while fewer than MaxStarts are pending, so that blocks
+      // with little or no output cannot pile up history copies
+      if (track && starts.length < MaxStarts &&
+          (starts.isEmpty || winBase + wpos - starts.last.out >= History))
+        starts += BlockStart((inBase + inPos) * 8 - nBits, winBase + wpos,
+          java.util.Arrays.copyOfRange(win, math.max(0, wpos - History), wpos))
       val h = take(3)
       last = (h & 1) != 0
       h >>> 1 match {
@@ -340,115 +334,43 @@ object XlsxParsing {
       copyDist = d
     }
 
-    /** Decodes symbols of the current block into the window, up to `limit`.
-      * The bit buffer and the write index live in locals here (no closure
-      * may capture them, or they would be boxed), written back on every
-      * way out but an error. */
+    /** Decodes symbols of the current block into the window, up to `limit`. */
     private def codes(limit: Int): Unit = {
-      if (copyLen > 0) { copy(copyLen, copyDist, limit); if (copyLen > 0) return }
-      val lt = lit
-      val lr = litRoot
-      val lm = (1 << lr) - 1
-      val dt = dist
-      val dr = distRoot
-      val dm = (1 << dr) - 1
-      val w = win
-      var b = bits
-      var nb = nBits
-      var p = wpos
-      while (p < limit) {
-        // a literal/length code, its extra bits, a distance code and its
-        // extra bits take at most 15 + 5 + 15 + 13 = 48 bits
-        if (nb < 48) {
-          if (inLim - inPos >= 8) {
-            b |= inWords.getLong(inPos) << nb
-            val t = (63 - nb) >>> 3
-            inPos += t
-            nb += t << 3
-          } else { bits = b; nBits = nb; refill(); b = bits; nb = nBits }
-        }
-        var e = lt((b & lm).toInt)
-        if ((e & Link) != 0) e = lt((e >>> 16) + ((b >>> lr).toInt & ((1 << (e & 0xff)) - 1)))
-        val l = e & 0xff
-        if (l == 0) fail("invalid literal/length code")
-        if (l > nb) truncated()
-        b >>>= l
-        nb -= l
-        val sym = e >>> 16
-        if (sym < 256) {
-          w(p) = sym.toByte
-          p += 1
-          // a second literal needs no refill while 15 bits are left
-          if (nb >= 15 && p < limit) {
-            val e2 = lt((b & lm).toInt)
-            if ((e2 & Link) == 0 && (e2 >>> 16) < 256 && (e2 & 0xff) != 0) {
-              w(p) = (e2 >>> 16).toByte
-              p += 1
-              b >>>= e2 & 0xff
-              nb -= e2 & 0xff
-            }
-          }
-        }
-        else if (sym == 256) { state = Header; bits = b; nBits = nb; wpos = p; return }
+      if (copyLen > 0) copy(copyLen, copyDist, limit)
+      while (copyLen == 0 && wpos < limit && state == Codes) {
+        val sym = decode(lit, litRoot)
+        if (sym < 256) { win(wpos) = sym.toByte; wpos += 1 }
+        else if (sym == 256) state = Header
         else {
           if (sym > 285) fail("invalid literal/length code")
-          val li = sym - 257
-          val lx = LenExtra(li)
-          if (lx > nb) truncated()
-          val len = LenBase(li) + (b & ((1 << lx) - 1)).toInt
-          b >>>= lx
-          nb -= lx
-          var d = dt((b & dm).toInt)
-          if ((d & Link) != 0) d = dt((d >>> 16) + ((b >>> dr).toInt & ((1 << (d & 0xff)) - 1)))
-          val dl = d & 0xff
-          if (dl == 0) fail("invalid distance code")
-          if (dl > nb) truncated()
-          b >>>= dl
-          nb -= dl
-          val ds = d >>> 16
+          val len = LenBase(sym - 257) + take(LenExtra(sym - 257))
+          val ds = decode(dist, distRoot)
           if (ds >= 30) fail("invalid distance code")
-          val dx = DistExtra(ds)
-          if (dx > nb) truncated()
-          val dd = DistBase(ds) + (b & ((1 << dx) - 1)).toInt
-          b >>>= dx
-          nb -= dx
-          if (dd > p) fail("invalid distance too far back")
-          val n = math.min(len, limit - p)
-          if (dd >= n && n >= 16) System.arraycopy(w, p - dd, w, p, n)
-          else {
-            var s = p - dd
-            val end = p + n
-            var q = p
-            while (q < end) { w(q) = w(s); q += 1; s += 1 }
-          }
-          p += n
-          if (n < len) {
-            copyLen = len - n
-            copyDist = dd
-            bits = b; nBits = nb; wpos = p
-            return
-          }
+          val d = DistBase(ds) + take(DistExtra(ds))
+          if (d > wpos) fail("invalid distance too far back")
+          copy(len, d, limit)
         }
       }
-      bits = b; nBits = nb; wpos = p
     }
 
     /** Decodes into the window until it holds unread output or the stream
       * ends; false at the end. */
     private def produce(): Boolean = {
       while (rpos == wpos && state != Done) {
-        if (wpos == WinSize) {
+        if (wpos == win.length && win.length < WinSize)
+          win = java.util.Arrays.copyOf(win, math.min(2 * win.length, WinSize))
+        else if (wpos == WinSize) {
           System.arraycopy(win, wpos - History, win, 0, History)
           winBase += wpos - History
           wpos = History
           rpos = History
         }
-        while (wpos < WinSize && state != Done) state match {
+        while (wpos < win.length && state != Done) state match {
           case Header => if (last) state = Done else header()
-          case Stored => storedCopy(WinSize)
-          case Codes => codes(WinSize)
+          case Stored => storedCopy(win.length)
+          case Codes => codes(win.length)
           case _ => // Plain
-            val n = in.read(win, wpos, WinSize - wpos)
+            val n = in.read(win, wpos, win.length - wpos)
             if (n < 0) state = Done else wpos += n
         }
         if (winBase + wpos > cap) throw new InputTooLargeException(
@@ -486,6 +408,7 @@ object XlsxParsing {
   private[sources] object RawInflate {
     private final val WinSize = 1 << 18
     private final val History = 1 << 15
+    private final val MaxStarts = 16
     private final val Link = 0x100
 
     private final val Header = 0
@@ -601,45 +524,67 @@ object XlsxParsing {
       }
   }
 
-  /** A workbook's entries, each read through [[RawInflate]] from its raw
-    * bytes, which commons-compress locates in the file. The JDK's
-    * [[ZipFile]] of the same file stays the one place entries are looked up
-    * and guarded ([[checkEntries]]); an entry whose method, sizes or CRC-32
-    * differ between the two readings of the central directory is refused. */
-  private[sources] final class XlsxPackage(val zip: ZipFile) extends AutoCloseable {
-    private val ch = FileChannel.open(new File(zip.getName).toPath)
+  /** A workbook's entries, as commons-compress reads its central
+    * directory, each inflated by [[RawInflate]] from its raw bytes. An
+    * entry's local header is read only when the entry is opened, for where
+    * its data starts. */
+  private[sources] final class XlsxPackage(val file: String) extends AutoCloseable {
+    private val ch = FileChannel.open(new File(file).toPath)
     private val raw =
-      try CommonsZipFile.builder().setSeekableByteChannel(ch).get()
+      try CommonsZipFile.builder().setSeekableByteChannel(ch).setIgnoreLocalFileHeader(true).get()
       catch { case e: Throwable => ch.close(); throw e }
 
-    /** The inflated bytes of `entry`, from the start or from the block
-      * `from` names; `cap` bounds the inflated offset. */
-    def open(entry: ZipEntry, cap: Long, from: BlockStart = BlockStart.Origin): RawInflate = {
-      val e = raw.getEntry(entry.getName)
-      if (e == null || e.getMethod != entry.getMethod || e.getSize != entry.getSize ||
-          e.getCompressedSize != entry.getCompressedSize || e.getCrc != entry.getCrc)
-        throw new ZipException(
-          s"${zip.getName}: the central directory entries of ${entry.getName} disagree")
-      val stored = entry.getMethod match {
+    /** The entry named `name`, or null. */
+    def entry(name: String): ZipArchiveEntry = raw.getEntry(name)
+
+    /** Central-directory guard pass over every entry — runs before any
+      * entry is inflated (FallbackZipExtractor.java:146-150 /
+      * ZipSecureFile caps). */
+    def checkEntries(maxEntrySizeBytes: Long, minInflateRatio: Double): Unit = {
+      val es = raw.getEntries
+      while (es.hasMoreElements) {
+        val e = es.nextElement()
+        if (!e.isDirectory) {
+          if (e.getSize >= 0 && e.getSize > maxEntrySizeBytes)
+            throw new InputTooLargeException(
+              s"Zip entry ${e.getName} in $file is ${e.getSize} bytes, " +
+                s"exceeding maxEntrySizeBytes=$maxEntrySizeBytes")
+          if (minInflateRatio > 0 && e.getSize > 0 && e.getCompressedSize >= 0 &&
+              e.getCompressedSize.toDouble / e.getSize < minInflateRatio)
+            throw new InflationLimitException(
+              s"Zip entry ${e.getName} in $file inflates ${e.getCompressedSize}B → " +
+                s"${e.getSize}B (ratio below minInflateRatio=$minInflateRatio)")
+        }
+      }
+    }
+
+    /** The inflated bytes of `e`, from the start or from the block `from`
+      * names; `cap` bounds the inflated offset. */
+    def open(e: ZipArchiveEntry, cap: Long, from: BlockStart = BlockStart.Origin): RawInflate = {
+      val stored = e.getMethod match {
         case ZipEntry.STORED => true
         case ZipEntry.DEFLATED => false
-        case m => throw new ZipException(s"invalid compression method $m of ${entry.getName}")
+        case m => throw new ZipException(s"invalid compression method $m of ${e.getName}")
       }
+      // reads the local header for the data offset (a stream that holds nothing)
+      if (raw.getRawInputStream(e) == null)
+        throw new ZipException(s"$file: no data offset for ${e.getName}")
       val at = e.getDataOffset
       new RawInflate(new ChannelSlice(ch, at + (from.bit >>> 3), at + e.getCompressedSize),
-        from, stored, cap, entry.getName)
+        from, stored, cap, e.getName)
     }
 
     override def close(): Unit = try raw.close() finally ch.close()
   }
 
+  /** A package over the file a JDK `ZipFile` has open. */
   private def using[A](zip: ZipFile)(body: XlsxPackage => A): A = {
-    val pkg = new XlsxPackage(zip)
+    val pkg = new XlsxPackage(zip.getName)
     try body(pkg) finally pkg.close()
   }
 
-  private def requireEntry(zip: ZipFile, name: String): ZipEntry = {
-    val e = zip.getEntry(name)
+  private def requireEntry(pkg: XlsxPackage, name: String): ZipArchiveEntry = {
+    val e = pkg.entry(name)
     if (e == null) throw new IllegalArgumentException(
       s"Not a valid .xlsx package: missing $name")
     e
@@ -1278,11 +1223,11 @@ object XlsxParsing {
   private final val Cdata = ascii("CDATA[")
 
   /** Opens `entry` and hands the scanner to `onStart` at every start tag. */
-  private def eachStart(pkg: XlsxPackage, entry: ZipEntry, cap: Long,
+  private def eachStart(pkg: XlsxPackage, entry: ZipArchiveEntry, cap: Long,
       attrNames: Array[Name])(onStart: XmlScanner => Unit): Unit = {
     val stream = pkg.open(entry, cap)
     try {
-      val xml = new XmlScanner(stream, pkg.zip.getName, entry.getName, attrNames)
+      val xml = new XmlScanner(stream, pkg.file, entry.getName, attrNames)
       var ev = xml.next()
       while (ev != Eof) { if (ev == Start) onStart(xml); ev = xml.next() }
     } finally stream.close()
@@ -1297,7 +1242,7 @@ object XlsxParsing {
   private[sources] final case class AccessPoint(file: String, part: String, crc: Long,
       size: Long, packed: Long, rowAt: Long, skew: Int, rows: Long, dataRows: Int,
       open: Array[Byte], ends: Array[Int], keys: Array[Long], block: BlockStart) {
-    def fits(entry: ZipEntry): Boolean = entry.getName == part && entry.getCrc == crc &&
+    def fits(entry: ZipArchiveEntry): Boolean = entry.getName == part && entry.getCrc == crc &&
       entry.getSize == size && entry.getCompressedSize == packed
   }
 
@@ -1310,9 +1255,8 @@ object XlsxParsing {
   def listSheets(zip: ZipFile, cap: Long): Seq[SheetInfo] = using(zip)(listSheets(_, cap))
 
   private[sources] def listSheets(pkg: XlsxPackage, cap: Long): Seq[SheetInfo] = {
-    val zip = pkg.zip
     val rels = scala.collection.mutable.Map.empty[String, String]
-    val relsEntry = zip.getEntry("xl/_rels/workbook.xml.rels")
+    val relsEntry = pkg.entry("xl/_rels/workbook.xml.rels")
     if (relsEntry != null)
       eachStart(pkg, relsEntry, cap, Array(new Name("Id"), new Name("Target"))) { xml =>
         if (xml.is(Relationship)) {
@@ -1325,7 +1269,7 @@ object XlsxParsing {
       }
     val out = ArrayBuffer.empty[SheetInfo]
     // the r:id attribute is namespaced; it matches by local name
-    eachStart(pkg, requireEntry(zip, "xl/workbook.xml"), cap,
+    eachStart(pkg, requireEntry(pkg, "xl/workbook.xml"), cap,
         Array(new Name("name"), new Name("id"))) { xml =>
       if (xml.is(Sheet)) {
         val target = Option(xml.attrString(1)).flatMap(rels.get)
@@ -1389,14 +1333,14 @@ object XlsxParsing {
   def sharedStrings(zip: ZipFile, cap: Long): Array[String] = using(zip)(sharedStrings(_, cap))
 
   private[sources] def sharedStrings(pkg: XlsxPackage, cap: Long): Array[String] = {
-    val entry = pkg.zip.getEntry("xl/sharedStrings.xml")
+    val entry = pkg.entry("xl/sharedStrings.xml")
     if (entry == null) return Array.empty
     val out = ArrayBuffer.empty[String]
     val text = new Bytes(256)
     var inItem = false
     val stream = pkg.open(entry, cap)
     try {
-      val xml = new XmlScanner(stream, pkg.zip.getName, entry.getName, Array.empty[Name])
+      val xml = new XmlScanner(stream, pkg.file, entry.getName, Array.empty[Name])
       var ev = xml.next()
       while (ev != Eof) {
         if (ev == Start) {
@@ -1463,23 +1407,28 @@ object XlsxParsing {
     * a byte range of the part, so that readers over ranges that tile the
     * part read each row exactly once between them.
     *
+    * @param part the sheet's entry name in `pkg`
     * @param sharedCount size of the shared-string table the renderers get
     * @param from an access point to start at, used only if it [[AccessPoint.fits]]
     *   the entry; else (and when null) the reader starts at the part's start
     * @param marks part offsets to take [[accessPoints]] at while reading
     * @param ownsPackage whether [[close]] closes `pkg` too */
-  final class SheetRows(pkg: XlsxPackage, entry: ZipEntry, sharedCount: Int, cap: Long,
+  final class SheetRows(pkg: XlsxPackage, part: String, sharedCount: Int, cap: Long,
       from: AccessPoint, marks: Array[Long], ownsPackage: Boolean) extends AutoCloseable {
 
     /** Reads the part from its start, recording nothing. */
     def this(zip: ZipFile, entry: ZipEntry, sharedCount: Int, cap: Long) =
-      this(new XlsxPackage(zip), entry, sharedCount, cap, null, Array.emptyLongArray, true)
+      this(new XlsxPackage(zip.getName), entry.getName, sharedCount, cap, null,
+        Array.emptyLongArray, true)
+
+    private val entry = pkg.entry(part)
+    require(entry != null, s"Sheet target $part missing from ${pkg.file}")
 
     private val start = if (from != null && from.fits(entry)) from else null
     private val stream = pkg.open(entry, cap, if (start != null) start.block else BlockStart.Origin)
     stream.track = marks.nonEmpty
     if (start != null) stream.skipNBytes(start.rowAt + start.skew - start.block.out)
-    private val xml = new XmlScanner(stream, pkg.zip.getName, entry.getName,
+    private val xml = new XmlScanner(stream, pkg.file, part,
       Array(new Name("r"), T), start)
     private val text = new Bytes(1 << 12) // the row's raw and inline values
     private var n = 0 // cells in the current row
@@ -1532,7 +1481,7 @@ object XlsxParsing {
 
     private def keep(): Unit =
       if (candAt >= 0 && (points.isEmpty || points.last.rowAt != candAt))
-        points += AccessPoint(pkg.zip.getName, entry.getName, entry.getCrc, entry.getSize,
+        points += AccessPoint(pkg.file, part, entry.getCrc, entry.getSize,
           entry.getCompressedSize, candAt, xml.textSkew, candRows, candData, candOpen,
           candEnds, candKeys, candBlock)
 
@@ -1839,15 +1788,12 @@ class XlsxSource extends TableProvider with DataSourceRegister {
     val opts = XlsxOptions(options)
     val path = pathOf(options)
     val first = XlsxParsing.listFiles(path).head
-    val zip = new ZipFile(first)
-    val pkg = new XlsxParsing.XlsxPackage(zip)
+    val pkg = new XlsxParsing.XlsxPackage(first)
     try {
-      XlsxParsing.checkEntries(zip, first, opts.maxEntrySizeBytes, opts.minInflateRatio)
+      pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
       val sheet = XlsxParsing.resolveSheet(
         XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes), opts.sheetName, opts.sheetIndex)
       val shared = XlsxParsing.sharedStrings(pkg, opts.maxEntrySizeBytes)
-      val entry = zip.getEntry(sheet.target)
-      require(entry != null, s"Sheet target ${sheet.target} missing from $first")
       // the range boundaries the scan will plan for this sheet, to take an
       // access point at each while the sheet is parsed here anyway
       val sheets = XlsxScan.sheets(path, opts)
@@ -1855,8 +1801,8 @@ class XlsxSource extends TableProvider with DataSourceRegister {
         .collectFirst { case (s, r) if s.file == first && s.target == sheet.target =>
           r.map(_._1).filter(_ > 0).toArray }
         .getOrElse(Array.emptyLongArray)
-      val rows = new XlsxParsing.SheetRows(pkg, entry, shared.length, opts.maxEntrySizeBytes,
-        null, marks, ownsPackage = false)
+      val rows = new XlsxParsing.SheetRows(pkg, sheet.target, shared.length,
+        opts.maxEntrySizeBytes, null, marks, ownsPackage = false)
       try {
         // width = max over header AND data rows: the reference names
         // positions beyond the header by their index
@@ -1889,7 +1835,7 @@ class XlsxSource extends TableProvider with DataSourceRegister {
         }
         StructType(names.map(n => StructField(n, StringType, nullable = false)))
       } finally rows.close()
-    } finally try pkg.close() finally zip.close()
+    } finally pkg.close()
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -1958,18 +1904,18 @@ private[sources] object XlsxScan {
     * central directory and workbook.xml are read. */
   def sheets(path: String, opts: XlsxOptions): Seq[PlannedSheet] =
     XlsxParsing.listFiles(path).flatMap { f =>
-      val zip = new ZipFile(f)
+      val pkg = new XlsxParsing.XlsxPackage(f)
       try {
-        XlsxParsing.checkEntries(zip, f, opts.maxEntrySizeBytes, opts.minInflateRatio)
-        val all = XlsxParsing.listSheets(zip, opts.maxEntrySizeBytes)
+        pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
+        val all = XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes)
         val read =
           if (opts.unionSheets) all.map(s => (Some(s.name), s))
           else Seq((None, XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)))
         read.map { case (pinned, s) =>
           PlannedSheet(f, pinned, s.target,
-            Option(zip.getEntry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
+            Option(pkg.entry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
         }
-      } finally zip.close()
+      } finally pkg.close()
     }
 
   /** Spark's file-split rule (`FilePartition.maxSplitBytes` over the
@@ -2009,9 +1955,8 @@ private[sources] class XlsxReaderFactory(ordinals: Array[Int], opts: XlsxOptions
 private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
     ordinals: Array[Int], opts: XlsxOptions) extends PartitionReader[InternalRow] {
 
-  private val zip = new ZipFile(part.file)
-  private val pkg = new XlsxParsing.XlsxPackage(zip)
-  XlsxParsing.checkEntries(zip, part.file, opts.maxEntrySizeBytes, opts.minInflateRatio)
+  private val pkg = new XlsxParsing.XlsxPackage(part.file)
+  pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
   // a pinned sheet is the one this unionSheets partition owns; otherwise
   // the usual name/index resolution
   private val sheet = XlsxParsing.resolveSheet(
@@ -2020,12 +1965,8 @@ private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
   // encoded once per reader: cells are handed to Spark as these instances
   private val shared = XlsxParsing.sharedStrings(pkg, opts.maxEntrySizeBytes)
     .map(UTF8String.fromString)
-  private val rows = {
-    val entry = zip.getEntry(sheet.target)
-    require(entry != null, s"Sheet target ${sheet.target} missing from ${part.file}")
-    new XlsxParsing.SheetRows(pkg, entry, shared.length, opts.maxEntrySizeBytes,
-      part.start.orNull, Array.emptyLongArray, ownsPackage = false)
-  }
+  private val rows = new XlsxParsing.SheetRows(pkg, sheet.target, shared.length,
+    opts.maxEntrySizeBytes, part.start.orNull, Array.emptyLongArray, ownsPackage = false)
 
   private var current: Array[UTF8String] = _
 
@@ -2061,5 +2002,5 @@ private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
   }
 
   override def close(): Unit =
-    try rows.close() finally try pkg.close() finally zip.close()
+    try rows.close() finally pkg.close()
 }

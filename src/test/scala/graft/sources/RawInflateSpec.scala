@@ -220,6 +220,25 @@ class RawInflateSpec extends AnyFunSuite {
     assert(corrupt(open).getMessage.contains("end of input"))
   }
 
+  test("blocks with little or no output keep only a bounded number of block starts") {
+    // 200 000 empty fixed blocks (10 bits each), 600 000 fixed blocks of one
+    // literal (18 bits each), then an empty final block
+    val b = new Bits()
+    for (_ <- 0 until 200000) b.put(0, 1).put(1, 2).code(0, 7)
+    for (_ <- 0 until 600000) b.put(0, 1).put(1, 2).code(0x30 + 'a', 8).code(0, 7)
+    val comp = b.put(1, 1).put(1, 2).code(0, 7).bytes
+    val d = decoder(comp)
+    d.track = true
+    val out = d.readAllBytes()
+    assert(java.util.Arrays.equals(out, zlib(comp)) && out.length == 600000)
+    val starts = d.blockStarts
+    assert(starts.size <= 16 && starts.map(_.history.length.toLong).sum <= 16L * 32768,
+      s"${starts.size} block starts")
+    assert(starts.map(_.out).distinct.size == starts.size)
+    for (s <- starts)
+      assert(java.util.Arrays.equals(inflate(comp, s), out.drop(s.out.toInt)), s"from ${s.out}")
+  }
+
   test("inflated bytes are counted against the entry-size cap") {
     val comp = deflate(Array.fill(100000)(1.toByte), 9, Deflater.DEFAULT_STRATEGY, Nil, 0)
     val e = intercept[graft.etl.InputTooLargeException](
