@@ -96,6 +96,13 @@ object Main {
     }
   }
 
+  /** The run's one result line: the reference's finally-block duration
+    * metric (:107-113), with the contract §10 counts the sink published. */
+  def report(r: Convert.Result, seconds: Double): String =
+    f"CONVERT sheet=${r.sheet} format=${r.format} rows=${r.rowsWritten} " +
+      f"files=${r.filesWritten} bytes=${r.bytesWritten} " +
+      f"output=${r.outputPath} seconds=$seconds%.3f"
+
   def main(args: Array[String]): Unit = {
     if (args.contains("--help")) { println(Usage); return }
     if (args.contains("--version")) { println("graft-convert 1.0 (Spark " +
@@ -118,9 +125,7 @@ object Main {
           .getOrCreate()
         try {
           val r = Convert.run(spark, config)
-          // the reference's finally-block duration metric (:107-113)
-          println(f"CONVERT sheet=${r.sheet} format=${r.format} rows=${r.rowsWritten} " +
-            f"output=${r.outputPath} seconds=${(System.nanoTime() - t0) / 1e9}%.3f")
+          println(report(r, (System.nanoTime() - t0) / 1e9))
         } catch {
           case e: Throwable =>
             System.err.println(s"conversion failed: ${e.getMessage}")

@@ -1,7 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.{XlsxParsing, XlsxSink}
 
 /** The reference's end-to-end conversion as one engine call — the whole
   * program of HighVolumeExcelConverter.main (SURVEY.md §3.1–§3.3):
@@ -18,10 +20,19 @@ import org.apache.spark.sql.functions._
   * ranges' output in range order (one part file, chunk set or workbook per
   * range; ndjson and json join them into one file). The parquet path sorts
   * on IngestOps.withFileRowPos.
+  *
+  * Every sink writes through [[PartFiles]] to a local output path and
+  * returns what it published, so the result carries the contract §10
+  * counts (rows, files, bytes written) without a re-read or a second job.
   */
 object Convert {
 
-  final case class Result(sheet: String, format: String, outputPath: String, rowsWritten: Long)
+  final case class Result(sheet: String, format: String, outputPath: String,
+      rowsWritten: Long, filesWritten: Int, bytesWritten: Long)
+
+  private def result(sheet: String, config: EngineConfig, out: String,
+      w: PartFiles.Written): Result =
+    Result(sheet, config.format.toLowerCase, out, w.rows, w.files, w.bytes)
 
   def run(spark: SparkSession, config: EngineConfig): Result =
     if (config.inputFormat.equalsIgnoreCase("xlsx")) runXlsx(spark, config.validate())
@@ -51,8 +62,7 @@ object Convert {
       afterHeader.orderBy("_pos").drop("_pos"))
 
     val out = config.outputPath.getOrElse(s"${config.inputDir}-${sheet}-chunks")
-    val rows = writeSink(ordered, out, config)
-    Result(sheet, config.format.toLowerCase, out, rows)
+    result(sheet, config, out, writeSink(ordered, out, config))
   }
 
   /** The reference's native path: a real .xlsx package in, streamed via the
@@ -63,12 +73,10 @@ object Convert {
     * workbook) and the zip-bomb guards (S7/S8/C3) all run inside the
     * source; what remains here is the sink, in one scan → write job. */
   private def runXlsx(spark: SparkSession, config: EngineConfig): Result = {
-    val first = graft.sources.XlsxParsing.listFiles(config.inputDir).head
-    val zip = new java.util.zip.ZipFile(first)
-    val sheet = try graft.sources.XlsxParsing.resolveSheet(
-      graft.sources.XlsxParsing.listSheets(zip, config.maxEntrySizeBytes),
+    val first = XlsxParsing.listFiles(config.inputDir).head
+    val sheet = XlsxParsing.resolveSheet(
+      XlsxParsing.listSheets(first, config.maxEntrySizeBytes),
       config.sheetName, config.sheetIndex).name
-    finally zip.close()
     val rows = spark.read.format("xlsx")
       .option("sheetName", sheet)
       .option("headerRow", config.headerRow.toString)
@@ -76,25 +84,20 @@ object Convert {
       .option("minInflateRatio", config.minInflateRatio.toString)
       .load(config.inputDir)
     val out = config.outputPath.getOrElse(s"${config.inputDir}-${sheet}-chunks")
-    Result(sheet, config.format.toLowerCase, out, writeSink(rows, out, config))
+    result(sheet, config, out, writeSink(rows, out, config))
   }
 
-  private def writeSink(df: DataFrame, out: String, config: EngineConfig): Long =
+  private def writeSink(df: DataFrame, out: String, config: EngineConfig): PartFiles.Written =
     config.format.toLowerCase match {
-      case fmt @ ("ndjson" | "csv") => // the write job itself counts its rows
-        val written = Observation()
-        val counted = df.observe(written, count(lit(1)).as("n"))
-        if (fmt == "ndjson")
-          Sinks.ndjson(counted, out, overwrite = config.overwrite, singleFile = true) // K1
-        else
-          Sinks.chunkedCsv(counted, out, config.batchSize, overwrite = config.overwrite) // K2
-        written.get("n").asInstanceOf[Long]
+      case "ndjson" =>
+        Sinks.ndjson(df, out, overwrite = config.overwrite, singleFile = true) // K1
+      case "csv" =>
+        Sinks.chunkedCsv(df, out, config.batchSize, overwrite = config.overwrite) // K2
       case "json" =>
-        Sinks.jsonArray(df, out, overwrite = config.overwrite,
+        Sinks.writeJsonArray(df, out, overwrite = config.overwrite,
           pretty = config.prettyJson) // K3
       case "xlsx" => // outbound Excel: one workbook per partition (range), streamed
-        graft.sources.XlsxSink.write(df,
-          out, sheetName = config.sheetName.getOrElse("Sheet1"),
+        XlsxSink.writeParts(df, out, sheetName = config.sheetName.getOrElse("Sheet1"),
           overwrite = config.overwrite)
     }
 }

@@ -13,8 +13,9 @@ import java.io.File
   *     local/                     spark.local.dir: shuffle files, spills,
   *                                DISK_ONLY / _SER blocks
   *     warehouse/                 spark.sql.warehouse.dir
-  *     out/                       the e2e sink rows' output files and
-  *                                Sinks.jsonArray's part-file stage
+  *     out/                       the e2e sink rows' output files (a
+  *                                sink stages its parts beside its own
+  *                                output, see PartFiles)
   *     stage/                     StageStore entries: batch stages,
   *                                stream-replay sinks, the update-mode
   *                                input stage

@@ -1,21 +1,36 @@
 package graft.etl
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.io.{OutputStream, OutputStreamWriter}
+import java.nio.charset.{Charset, StandardCharsets}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
 
-/** Sink operators K1–K4 (SURVEY.md §2.3), Spark-native.
+/** Sink operators K1–K4 (SURVEY.md §2.3).
   *
   * Reference: core/writers/{NdjsonDataWriter,CsvDataWriter,JsonDataWriter}.java.
   *
-  * Scale note (100 TB): ndjson/csv sinks are fully distributed (one file per
-  * task, `maxRecordsPerFile` for chunk parity). The JSON-array sink (K3) is
-  * inherently a single sequential `[...]` file — same single-writer design as
-  * the reference (core/writers/JsonDataWriter.java); it streams with bounded
-  * memory via `toLocalIterator`, and is NOT meant for 100 TB outputs (the
-  * reference contract scopes it the same way: NDJSON is "recommended").
+  * The converter's sinks (`ndjson`, `chunkedCsv`, `jsonArray`, and
+  * [[graft.sources.XlsxSink]]) render rows with Spark's own generators —
+  * JacksonGenerator through `to_json` and UnivocityGenerator, each with
+  * the default options of Spark's JSON and CSV writers — and write them
+  * with [[PartFiles]]: each task streams its partition's file (or chunk
+  * files) into a staging directory, and the driver publishes it once the
+  * job has succeeded. Like the reference's writers they write
+  * LOCAL paths only, on a file system the driver and every executor share.
+  * Files keep Spark's names, `part-NNNNN-<job>-cKKK.<ext>`, in partition
+  * order; no `_SUCCESS` or `.crc` file is written.
+  *
+  * Scale note (100 TB): the ndjson and csv sinks write one file per task
+  * (per chunk for csv) at full parallelism. The single-file forms — the
+  * converter's one NDJSON file and the JSON array (K3) — are inherently one
+  * sequential file, as in the reference (core/writers/JsonDataWriter.java);
+  * their one serial part is a driver byte copy of the rendered parts in
+  * partition order. The reference contract scopes the JSON array the same
+  * way: NDJSON is "recommended".
   */
 object Sinks {
 
@@ -24,38 +39,42 @@ object Sinks {
   def saveMode(overwrite: Boolean): SaveMode =
     if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists
 
-  /** K1 — NDJSON sink: Spark's JSON sink *is* NDJSON (one object per line).
-    * `singleFile=true` reproduces the reference's one-output-file reality.
-    *
-    * r17 shape: the previous `coalesce(1)` collapsed the ENTIRE upstream
-    * (sort + all-string render + JSON encode) onto one task; now the
-    * render writes at full parallelism and only the unavoidable serial
-    * part — concatenating the ordered part files into one — runs as a
-    * driver byte-stream copy (part order = partition order, so the line
-    * order is exactly the DataFrame order, byte-identical output). */
-  def ndjson(df: DataFrame, path: String, overwrite: Boolean = false,
-      singleFile: Boolean = false): Unit = {
-    df.write.mode(saveMode(overwrite)).json(path)
-    if (singleFile) {
-      import scala.jdk.CollectionConverters._
-      val dir = Paths.get(path)
-      val parts = Files.list(dir).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
-      if (parts.size > 1) {
-        val merged = dir.resolve(".merge.tmp")
-        val out = Files.newOutputStream(merged, StandardOpenOption.CREATE,
-          StandardOpenOption.TRUNCATE_EXISTING)
-        try parts.foreach(p => Files.copy(p, out)) finally out.close()
-        parts.foreach { p =>
-          Files.delete(p)
-          // the local committer's ChecksumFileSystem sidecar, if present
-          Files.deleteIfExists(p.resolveSibling("." + p.getFileName + ".crc"))
-        }
-        Files.move(merged, dir.resolve(parts.head.getFileName))
-      }
+  /** Streams each rendered row (one string column), each with a '\n'. */
+  private def lines(rows: Iterator[InternalRow], out: OutputStream): Long = {
+    var n = 0L
+    while (rows.hasNext) {
+      rows.next().getUTF8String(0).writeTo(out)
+      out.write('\n')
+      n += 1
     }
+    n
   }
+
+  /** `df`'s rows as Spark's JSON writer renders them (JacksonGenerator,
+    * default options), in one string column. The struct is built from
+    * positional names aliased back to the column names, so any name passes
+    * as it is. */
+  private def json(df: DataFrame): DataFrame = {
+    val pos = df.columns.indices.map(i => s"_$i")
+    val fields = pos.zip(df.columns).map { case (p, n) => col(p).as(n) }
+    df.toDF(pos: _*).select(to_json(struct(fields: _*)))
+  }
+
+  /** K1 — NDJSON sink: one JSON object per line, one
+    * `part-NNNNN-<job>-c000.json` per partition (partition 0 always, the
+    * others when not empty, as Spark's JSON writer). `singleFile=true`
+    * reproduces the reference's one output file: the parts are joined on
+    * the driver in partition order, so the line order is the DataFrame
+    * order. */
+  def ndjson(df: DataFrame, path: String, overwrite: Boolean = false,
+      singleFile: Boolean = false): PartFiles.Written =
+    PartFiles.write(json(df), path, overwrite,
+      finish = (stage, parts) =>
+        if (singleFile && parts.size > 1) Seq(stage.join(parts, parts.head.name)) else parts) {
+      (stage, p, rows) =>
+        if (p != 0 && !rows.hasNext) Nil
+        else Seq(stage.commit(f"part-$p%05d-${stage.id}-c000.json")(lines(rows, _)))
+    }
 
   /** K2 — chunked CSV sink: files of at most `batchSize` rows, header per
     * chunk (core/writers/CsvDataWriter.java:80-103,148-151). Guarantees the
@@ -64,14 +83,36 @@ object Sinks {
     * `part-NNNNN-<job>-cK.csv` with K padded to three digits only, so past
     * 999 chunks in a task a name sort misplaces `c1000`: sort K as a number.
     * File boundaries fall at partition edges, not necessarily at exact
-    * batchSize multiples; use `chunkedCsvNamed` for exact reference chunks. */
+    * batchSize multiples; use `chunkedCsvNamed` for exact reference chunks.
+    * Each file is rendered as Spark's CSV writer renders it, by its
+    * UnivocityGenerator with the writer's default options: the header, then
+    * the rows. */
   def chunkedCsv(df: DataFrame, path: String, batchSize: Int,
-      orderCol: Option[String] = None, overwrite: Boolean = false): Unit = {
+      orderCol: Option[String] = None, overwrite: Boolean = false): PartFiles.Written = {
     val d = orderCol.map(c => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))).getOrElse(df)
-    d.write.mode(saveMode(overwrite))
-      .option("header", "true")
-      .option("maxRecordsPerFile", batchSize.toLong)
-      .csv(path)
+    val schema = d.schema
+    val timeZone = d.sparkSession.sessionState.conf.sessionLocalTimeZone
+    PartFiles.write(d, path, overwrite) { (stage, p, rows) =>
+      if (p != 0 && !rows.hasNext) Nil
+      else {
+        val options = new CSVOptions(Map("header" -> "true"), true, timeZone)
+        val chunks = Seq.newBuilder[PartFiles.Part]
+        var k = 0
+        do {
+          chunks += stage.commit(f"part-$p%05d-${stage.id}-c$k%03d.csv") { out =>
+            val gen = new UnivocityGenerator(schema,
+              new OutputStreamWriter(out, Charset.forName(options.charset)), options)
+            gen.writeHeaders()
+            var n = 0L
+            while (n < batchSize && rows.hasNext) { gen.write(rows.next()); n += 1 }
+            gen.flush()
+            n
+          }
+          k += 1
+        } while (rows.hasNext)
+        chunks.result()
+      }
+    }
   }
 
   /** K2 with exact reference parity: chunk k holds rows
@@ -80,7 +121,9 @@ object Sinks {
     * come from the scalable global position (no single-partition window);
     * each chunk's rows are co-located by a hash repartition on chunk id, and
     * the dynamic-partition write emits one file per chunk. The rename pass
-    * touches file metadata only (driver-side loop over chunk count). */
+    * touches file metadata only (driver-side loop over chunk count). Not on
+    * the converter's path, so it stays on Spark's CSV writer and works on
+    * any Hadoop-supported store. */
   def chunkedCsvNamed(df: DataFrame, dir: String, stem: String, batchSize: Int,
       orderCol: String, overwrite: Boolean = false): Seq[String] = {
     val chunked = IngestOps.withGlobalPos(df, col(orderCol), "_pos")
@@ -131,79 +174,36 @@ object Sinks {
       .agg(count(lit(1)).as("n_rows"), min("_rn").as("min_rn"), max("_rn").as("max_rn"))
 
   /** K3 — single-file JSON array sink (core/writers/JsonDataWriter.java:79-257):
-    * one well-formed `[{...},{...}]` document, single sequential writer with
-    * bounded memory — the reference's single-writer contract.
-    *
-    * r17 shape: the JSON RENDERING is distributed (one parallel text write
-    * of the per-row JSON strings to scratch), and only the unavoidable
-    * serial part — streaming the bytes into one file with separators — runs
-    * on the driver as a byte copy. The previous `toJSON.toLocalIterator`
-    * form serialized the rendering too: the driver pulled each of the N
-    * partitions as a separate sequential job (32 mini-jobs per call at the
-    * bench session width). Part files sort in partition order, so the
-    * element order is exactly the DataFrame order, byte-identical output. */
+    * one well-formed `[{...},{...}]` document, the reference's
+    * single-writer contract, written with bounded memory. Each task writes
+    * its rows' JSON already joined by the separator; the driver writes
+    * `[`, the non-empty parts in partition order with one separator between
+    * each two, then `]`, so the element order is the DataFrame order.
+    * Returns the rows written. */
   def jsonArray(df: DataFrame, path: String, overwrite: Boolean = false,
-      pretty: Boolean = false): Long = {
-    val p = Paths.get(path)
-    if (Files.exists(p)) {
-      if (!overwrite) throw new IllegalStateException(
-        s"Output file exists and overwrite not enabled: $path") // K4 parity
-      Files.delete(p)
-    }
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val stage = Paths.get(ScratchDirs.scratchOutputDir,
-      s"jsonarray_stage_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = new java.io.BufferedOutputStream(Files.newOutputStream(p,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING), 1 << 16)
+      pretty: Boolean = false): Long =
+    writeJsonArray(df, path, overwrite, pretty).rows
+
+  /** [[jsonArray]], with the file and bytes it wrote. */
+  def writeJsonArray(df: DataFrame, path: String, overwrite: Boolean = false,
+      pretty: Boolean = false): PartFiles.Written = {
     def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
     val (open, sep, close) =
       if (pretty) (utf8("[\n  "), utf8(",\n  "), utf8("\n]")) else (utf8("["), utf8(","), utf8("]"))
-    var n = 0L
-    import scala.jdk.CollectionConverters._
-    try {
-      // rendered rows never contain a raw newline (JSON escapes them), so
-      // the text sink's one-line-per-row framing round-trips exactly: the
-      // part files' bytes are copied as they are, with the separator in
-      // place of each row's '\n'
-      df.toJSON.write.text(stage.toString)
-      out.write(open)
-      val parts = Files.list(stage).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-        .sortBy(_.getFileName.toString)
-      val buf = new Array[Byte](1 << 16)
-      var inRow = false
-      def rowBytes(from: Int, until: Int): Unit = {
-        if (!inRow) { if (n > 0) out.write(sep); inRow = true }
-        out.write(buf, from, until - from)
-      }
-      parts.foreach { part =>
-        val in = Files.newInputStream(part)
-        try {
-          var r = in.read(buf)
-          while (r >= 0) {
-            var from = 0
-            var i = 0
-            while (i < r) {
-              if (buf(i) == '\n') { rowBytes(from, i); n += 1; inRow = false; from = i + 1 }
-              i += 1
-            }
-            if (from < r) rowBytes(from, r)
-            r = in.read(buf)
+    val name = Paths.get(path).getFileName.toString
+    PartFiles.write(json(df), path, overwrite, toFile = true,
+      finish = (stage, parts) => Seq(stage.join(parts, name, open, sep, close))) {
+      (stage, p, rows) =>
+        if (!rows.hasNext) Nil
+        else Seq(stage.commit(f"part-$p%05d") { out =>
+          var n = 0L
+          while (rows.hasNext) {
+            if (n > 0) out.write(sep)
+            rows.next().getUTF8String(0).writeTo(out)
+            n += 1
           }
-        } finally in.close()
-        if (inRow) { n += 1; inRow = false } // a last row without its '\n'
-      }
-      out.write(close)
-    } finally {
-      out.close()
-      if (Files.exists(stage)) try { // a failed render may leave no stage
-        Files.walk(stage).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"WARN jsonArray: stage $stage not removed: $e")
-      }
+          n
+        })
     }
-    n
   }
 }

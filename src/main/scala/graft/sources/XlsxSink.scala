@@ -1,12 +1,13 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStreamWriter}
+import java.io.{OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 import java.util.zip.{Deflater, ZipEntry, ZipOutputStream}
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StringType
+
+import graft.etl.PartFiles
 
 /** Distributed .xlsx writer — the outbound half of the Excel surface
   * ([[XlsxSource]] is the inbound half; together they make the container
@@ -84,72 +85,46 @@ object XlsxSink {
   /** Writes `df` (all StringType columns) as one .xlsx per partition under
     * `dir`, first row of every workbook = the column names (the S4 header
     * contract on the way out). Empty partitions produce no file. Returns
-    * the number of data rows written.
+    * the number of data rows written. Each workbook is committed with
+    * [[graft.etl.PartFiles]]'s protocol; a local path only.
     *
     * @throws IllegalStateException existing `dir` without `overwrite` (K4). */
   def write(df: DataFrame, dir: String, sheetName: String = "Sheet1",
-      overwrite: Boolean = false): Long = {
+      overwrite: Boolean = false): Long =
+    writeParts(df, dir, sheetName, overwrite).rows
+
+  /** [[write]], with the files and bytes it wrote. */
+  def writeParts(df: DataFrame, dir: String, sheetName: String = "Sheet1",
+      overwrite: Boolean = false): PartFiles.Written = {
     val nonString = df.schema.fields.filter(_.dataType != StringType).map(_.name)
     require(nonString.isEmpty,
       s"xlsx sink takes the all-string row model (IngestOps.allString); " +
         s"non-string columns: ${nonString.mkString(", ")}")
-    val root = new File(dir)
-    if (root.exists()) {
-      if (!overwrite) throw new IllegalStateException(
-        s"Output directory exists and overwrite not enabled: $dir") // K4 parity
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(root)
-    }
-    root.mkdirs()
     val names = df.columns.toSeq
     val sheet = sheetName
-    val acc = df.sparkSession.sparkContext.longAccumulator("xlsx_rows_written")
-    df.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val pid = TaskContext.getPartitionId()
-        writeCommitted(new File(dir, f"part-$pid%05d.xlsx"), sheet, names, it, acc)
-      }
+    PartFiles.write(df, dir, overwrite,
+      // an all-empty input still yields a READABLE empty dataset: one
+      // header-only workbook keeps the schema (XlsxSource errors on a
+      // fileless directory, and rightly so)
+      finish = (stage, parts) =>
+        if (parts.nonEmpty) parts
+        else Seq(stage.commit("part-00000.xlsx")(writeWorkbook(_, sheet, names, Iterator.empty)))) {
+      (stage, p, rows) =>
+        if (!rows.hasNext) Nil
+        else Seq(stage.commit(f"part-$p%05d.xlsx")(
+          writeWorkbook(_, sheet, names, rows.map(r => (c: Int) => {
+            val v = r.getUTF8String(c)
+            if (v == null) null else v.toString
+          }))))
     }
-    // an all-empty input still yields a READABLE empty dataset: one
-    // header-only workbook keeps the schema (XlsxSource errors on a
-    // fileless directory, and rightly so)
-    if (acc.value == 0L)
-      writeCommitted(new File(dir, "part-00000.xlsx"), sheet, names,
-        Iterator.empty, acc)
-    acc.value
   }
 
-  /** Task-commit protocol: stream the workbook to an attempt-unique temp
-    * file, then atomically rename onto the final name only after a complete,
-    * successful write. Under task retries or speculative execution two
-    * attempts of the same partition may run concurrently — each streams to
-    * its own temp, and whichever renames last wins whole (POSIX same-dir
-    * rename is atomic; both attempts consume the same deterministic rows, so
-    * either winner is a correct workbook). A failed/killed attempt leaves at
-    * worst a `.tmp` orphan, which [[XlsxParsing.listFiles]]'s `.xlsx` filter
-    * never reads. */
-  private def writeCommitted(dest: File, sheet: String, names: Seq[String],
-      it: Iterator[Row], acc: org.apache.spark.util.LongAccumulator): Unit = {
-    val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
-    val tmp = new File(dest.getParentFile, s".${dest.getName}.a$attempt.tmp")
-    var ok = false
-    try {
-      writeWorkbook(tmp, sheet, names, it, acc)
-      java.nio.file.Files.move(tmp.toPath, dest.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ok = true
-    } finally if (!ok) { tmp.delete(); () }
-  }
-
-  private def writeWorkbook(file: File, sheet: String, names: Seq[String],
-      it: Iterator[Row], acc: org.apache.spark.util.LongAccumulator): Unit = {
+  /** Streams one workbook to `out`: the header row, then one row per
+    * element of `rows` (a cell getter by column); returns the data rows. */
+  private def writeWorkbook(out: OutputStream, sheet: String, names: Seq[String],
+      rows: Iterator[Int => String]): Long = {
     var n = 0L
-    val zos = new ZipOutputStream(
-      new BufferedOutputStream(new FileOutputStream(file)))
+    val zos = new ZipOutputStream(out)
     // Level 1: with one task per workbook this writer is on a conversion's
     // critical path. 30 000 x 12 sheet, one task, 4-core box: ~300 vs ~520 ms
     // at level 6, file 2.56 vs 2.08 MB. A fixed level keeps output deterministic.
@@ -189,8 +164,8 @@ object XlsxSink {
       // docProps keep strict OOXML consumers from flagging the package for
       // repair. Timestamps are FIXED, not wall-clock: two writes of the
       // same partition must be byte-identical (speculative attempts, the
-      // task-commit protocol above, and reproducible-output guarantees all
-      // rely on it).
+      // commit protocol of graft.etl.PartFiles, and reproducible-output
+      // guarantees all rely on it).
       entry("docProps/core.xml",
         """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
           |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/" xmlns:dcterms="http://purl.org/dc/terms/" xmlns:xsi="http://www.w3.org/2001/XMLSchema-instance">
@@ -233,15 +208,14 @@ object XlsxSink {
       }
       writeRow(1L, names)
       var r = 2L
-      while (it.hasNext) {
-        val row = it.next()
-        writeRow(r, row.getString)
+      while (rows.hasNext) {
+        writeRow(r, rows.next())
         r += 1; n += 1
       }
       w.write("</sheetData></worksheet>")
       w.flush()
       zos.closeEntry()
     } finally w.close() // closes the zip stream beneath
-    acc.add(n)
+    n
   }
 }

@@ -1254,6 +1254,12 @@ object XlsxParsing {
     * sheetN.xml — the rels indirection is part of the OPC format). */
   def listSheets(zip: ZipFile, cap: Long): Seq[SheetInfo] = using(zip)(listSheets(_, cap))
 
+  /** The sheet list of the workbook `file`, read through one package. */
+  def listSheets(file: String, cap: Long): Seq[SheetInfo] = {
+    val pkg = new XlsxPackage(file)
+    try listSheets(pkg, cap) finally pkg.close()
+  }
+
   private[sources] def listSheets(pkg: XlsxPackage, cap: Long): Seq[SheetInfo] = {
     val rels = scala.collection.mutable.Map.empty[String, String]
     val relsEntry = pkg.entry("xl/_rels/workbook.xml.rels")
@@ -1791,12 +1797,13 @@ class XlsxSource extends TableProvider with DataSourceRegister {
     val pkg = new XlsxParsing.XlsxPackage(first)
     try {
       pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
-      val sheet = XlsxParsing.resolveSheet(
-        XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes), opts.sheetName, opts.sheetIndex)
+      val all = XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes)
+      val sheet = XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)
       val shared = XlsxParsing.sharedStrings(pkg, opts.maxEntrySizeBytes)
       // the range boundaries the scan will plan for this sheet, to take an
-      // access point at each while the sheet is parsed here anyway
-      val sheets = XlsxScan.sheets(path, opts)
+      // access point at each while the sheet is parsed here anyway; this
+      // workbook is planned from the package already open
+      val sheets = XlsxScan.sheets(path, opts, Map(first -> XlsxScan.planned(pkg, all, opts)))
       val marks = sheets.zip(XlsxScan.ranges(SparkSession.active, sheets.map(_.size)))
         .collectFirst { case (s, r) if s.file == first && s.target == sheet.target =>
           r.map(_._1).filter(_ > 0).toArray }
@@ -1901,22 +1908,32 @@ private[sources] object XlsxScan {
   final case class PlannedSheet(file: String, pinned: Option[String], target: String, size: Long)
 
   /** The sheets a scan of `path` reads, in order; only each workbook's
-    * central directory and workbook.xml are read. */
-  def sheets(path: String, opts: XlsxOptions): Seq[PlannedSheet] =
+    * central directory and workbook.xml are read, and only for the
+    * workbooks `known` does not already plan. */
+  def sheets(path: String, opts: XlsxOptions,
+      known: Map[String, Seq[PlannedSheet]] = Map.empty): Seq[PlannedSheet] =
     XlsxParsing.listFiles(path).flatMap { f =>
-      val pkg = new XlsxParsing.XlsxPackage(f)
-      try {
-        pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
-        val all = XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes)
-        val read =
-          if (opts.unionSheets) all.map(s => (Some(s.name), s))
-          else Seq((None, XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)))
-        read.map { case (pinned, s) =>
-          PlannedSheet(f, pinned, s.target,
-            Option(pkg.entry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
-        }
-      } finally pkg.close()
+      known.getOrElse(f, {
+        val pkg = new XlsxParsing.XlsxPackage(f)
+        try {
+          pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
+          planned(pkg, XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes), opts)
+        } finally pkg.close()
+      })
     }
+
+  /** The sheets a scan reads of the open workbook `pkg`, whose sheet list
+    * is `all`. */
+  def planned(pkg: XlsxParsing.XlsxPackage, all: Seq[XlsxParsing.SheetInfo],
+      opts: XlsxOptions): Seq[PlannedSheet] = {
+    val read =
+      if (opts.unionSheets) all.map(s => (Some(s.name), s))
+      else Seq((None, XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)))
+    read.map { case (pinned, s) =>
+      PlannedSheet(pkg.file, pinned, s.target,
+        Option(pkg.entry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
+    }
+  }
 
   /** Spark's file-split rule (`FilePartition.maxSplitBytes` over the
     * `spark.sql.files.*` confs) applied to sheets of these inflated sizes:

@@ -726,9 +726,10 @@ object EventStreams {
     * `etl.Sinks.ndjson` via foreachBatch, closing the loop from the
     * streaming extension back to the reference's sink surface (all-string
     * rows, one JSON object per line). Each micro-batch lands under
-    * `<path>/batch=<id>` — task commit per partition within a batch,
-    * batch directory per epoch, so restarts never half-overwrite a batch.
-    * Returns the started query; callers own awaitTermination/stop. */
+    * `<path>/batch=<id>` — a staged batch directory published by one
+    * rename (etl.PartFiles), so restarts never half-overwrite a batch.
+    * Local paths only. Returns the started query; callers own
+    * awaitTermination/stop. */
   def writeNdjsonStream(df: DataFrame, path: String, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
@@ -742,6 +743,7 @@ object EventStreams {
           batchId: Long) =>
         graft.etl.Sinks.ndjson(graft.etl.IngestOps.allString(batch.toDF()),
           s"$path/batch=$batchId", overwrite = true)
+        ()
       }
       .start()
 }
