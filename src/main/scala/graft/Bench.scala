@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   /** Fixed-point seconds with ms resolution — keeps the JSON line compact
     * (the harness that collects this output keeps only a bounded tail of
@@ -26,22 +24,7 @@ object Bench {
     val wallEntry = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.rangejoin.bucketUs", "600000000")
-      // StageStore read-back parallelism: the 4 MB default open-cost packs
-      // a small staged relation's files into 1-2 splits, serializing every
-      // downstream map stage; on local disk/tmpfs the real open cost is ~0
-      .config("spark.sql.files.openCostInBytes", "16384")
-    // shuffle files / DISK_ONLY blocks / spills on tmpfs (NVMe stand-in;
-    // SPARK_GRAFT_NO_SHM_LOCAL=1 reverts) — see etl.ScratchDirs
-    val spark = graft.etl.ScratchDirs.withLocalDir(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.etl.EngineConfig.localSession(cpus)
 
     // Deterministic query order (Map iteration order is hash-random), and a
     // warmup pass at the smallest SF so JIT + codegen + file-index costs

@@ -1,31 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // reference parity: bad cells → null
-      .config("spark.ui.enabled", "false")
-      // optimizer rung end-to-end: raw-SQL range theta joins rewrite to the
-      // bucketed equi-join (plans.RangeJoinBucketing; events_range_join_sql
-      // plan-asserts the rewrite happened)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.rangejoin.bucketUs", "600000000")
-      // StageStore read-back parallelism: the 4 MB default open-cost packs
-      // a small staged relation's files into 1-2 splits, serializing every
-      // downstream map stage; on local disk/tmpfs the real open cost is ~0
-      .config("spark.sql.files.openCostInBytes", "16384")
-    // shuffle files / DISK_ONLY blocks / spills on tmpfs (NVMe stand-in;
-    // SPARK_GRAFT_NO_SHM_LOCAL=1 reverts) — see etl.ScratchDirs
-    val spark = graft.etl.ScratchDirs.withLocalDir(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.etl.EngineConfig.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // Local iteration aid (the driver never sets it): restrict the dump —
     // and the oracle_sql.json below — to a comma-separated query subset.

@@ -94,10 +94,10 @@ object Convert {
       case "csv" =>
         Sinks.chunkedCsv(df, out, config.batchSize, overwrite = config.overwrite) // K2
       case "json" =>
-        Sinks.writeJsonArray(df, out, overwrite = config.overwrite,
+        Sinks.jsonArray(df, out, overwrite = config.overwrite,
           pretty = config.prettyJson) // K3
       case "xlsx" => // outbound Excel: one workbook per partition (range), streamed
-        XlsxSink.writeParts(df, out, sheetName = config.sheetName.getOrElse("Sheet1"),
+        XlsxSink.write(df, out, sheetName = config.sheetName.getOrElse("Sheet1"),
           overwrite = config.overwrite)
     }
 }

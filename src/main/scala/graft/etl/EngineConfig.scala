@@ -1,8 +1,14 @@
 package graft.etl
 
-/** C2/C3 — engine configuration mirroring the reference CLI surface
-  * (config/ConverterConfig.java:28-191). Validation reproduces the
-  * `validate()` invariant table at config/ConverterConfig.java:170-191.
+import org.apache.spark.sql.SparkSession
+
+/** C2/C3 — engine configuration: the reference CLI surface only
+  * (config/ConverterConfig.java:28-191). Every field is set by a
+  * [[graft.Main.parseArgs]] flag or is its positional input. Operators in
+  * `graft.ext` take their tuning parameters directly; each parameter's
+  * default and its check live in the operator's own signature.
+  * Validation reproduces the `validate()` invariant table at
+  * config/ConverterConfig.java:170-191.
   *
   * The zip-bomb guards (C3, HighVolumeExcelConverter.java:82) become plain
   * numeric source-option validation here: parquet input cannot zip-bomb, but
@@ -22,82 +28,7 @@ final case class EngineConfig(
     memoryThresholdMb: Int = 512,
     minInflateRatio: Double = 0.01,
     maxEntrySizeBytes: Long = 6L * 1024 * 1024 * 1024,
-    prettyJson: Boolean = false,
-    // Skew/scale tunables for the dedup/similarity extensions (the analog of
-    // the reference's --batchSize/threshold tuning surface,
-    // config/ConverterConfig.java:53,77). Defaults match the operators'.
-    dedupSalts: Int = 0, // 0 = adaptive from corpus size (Dedup.adaptiveSalts)
-    dedupMaxDocFreq: Double = graft.ext.Dedup.MaxDocFreq,
-    dedupMinBlockForCap: Int = graft.ext.Dedup.MinBlockForCap,
-    lshSaltBuckets: Int = graft.ext.Dedup.DefaultSaltBuckets,
-    srpPairTables: Int = graft.ext.Similarity.PairTables,
-    srpPairBitsPerTable: Int = graft.ext.Similarity.PairBitsPerTable,
-    // interval-length-scaled bucket width for ext/Ranges.bucketedRangeJoin
-    // and the RangeJoinBucketing optimizer rule (µs); 0 = caller supplies
-    rangeJoinBucketUs: Long = 0L,
-    // k-minimum-values sketch width (ext/Sketch); RSE ≈ 1/sqrt(k-2)
-    sketchK: Int = 64,
-    // sample size for the deterministic quantile sketch
-    // (ext/Sketch.sampleQuantiles); sampling error ≈ 1/sqrt(k)
-    quantileSampleK: Int = 256,
-    // within-doc segment-dedup window, tokens (ext/TextOps.dedupSegments)
-    segmentTokens: Int = 8,
-    // per-group token budget for corpus mixing
-    // (ext/Pipelines.mixByTokenBudget*); 0 = operator caller supplies
-    mixTokenBudget: Long = 0L,
-    // BM25 retrieval-scoring shape (ext/TextOps.bm25)
-    bm25K1: Double = 1.2,
-    bm25B: Double = 0.75,
-    // Bloom prefilter target false-positive rate (ext/TextOps
-    // .decontaminateBloom); filter size scales with ln(1/fpp)
-    bloomFpp: Double = 0.01,
-    // Tukey fence multiplier (ext/Analytics.outliersIqr)
-    iqrFence: Double = 1.5,
-    // posting-list cap and df floor (ext/TextOps.postings)
-    postingsK: Int = 3,
-    postingsMinDf: Long = 2L,
-    // novelty shingle width, tokens (ext/TextOps.novelty)
-    noveltyShingle: Int = 5,
-    // count-min sketch shape (ext/Sketch.countMinTokens): depth hash rows ×
-    // 16^hexDigits buckets; overcount ≈ N·e/width w.h.p. per row
-    countMinDepth: Int = 4,
-    countMinHexDigits: Int = 2,
-    // edit-distance near-dup verify threshold + prefix cap
-    // (ext/Dedup.editDistancePairs); DP cost per pair ∝ maxDist·prefix
-    editDistMax: Int = 10,
-    editDistPrefixTokens: Int = 8,
-    // pruned-tfidf similarity (ext/TextOps.tfidfCosinePairs): terms kept
-    // per doc (candidate volume ∝ posting lengths of the kept terms)
-    tfidfTopM: Int = 10,
-    // trailing z-score anomaly shape (ext/Stats.anomalyZscore)
-    anomalyLookback: Int = 20,
-    anomalyMinN: Int = 10,
-    anomalyZThresh: Double = 2.0,
-    // histogram bucket width for drift comparison (ext/Stats
-    // .driftTotalVariation), value units
-    driftBucketWidth: Long = 25L,
-    // exact prefix-filter similarity join (ext/Dedup.jaccardPrefixJoin):
-    // Jaccard threshold + shingle width (1 = unigram sets)
-    prefixJoinTheta: Double = 0.8,
-    prefixJoinShingleW: Int = 3,
-    // priority sampling size (ext/Pipelines.prioritySample)
-    prioritySampleK: Int = 100,
-    // equi-depth histogram bucket count (ext/Analytics.equidepthHistogram)
-    equidepthBuckets: Int = 8,
-    // PageRank shape (ext/Graph.pageRank): fixed rounds + damping percent
-    pagerankIters: Int = 3,
-    pagerankDampPct: Long = 85L,
-    // CUSUM change-point detection (ext/Stats.cusumChangepoints): slack and
-    // decision threshold as percent of the per-user reference level
-    cusumSlackPct: Long = 50L,
-    cusumThreshPct: Long = 400L,
-    // containment join (ext/Dedup.containmentPrefixJoin): |A∩B|/|A| threshold
-    containmentTheta: Double = 0.8,
-    // link prediction (ext/Graph.linkPrediction): emitted top-k pairs +
-    // wedge-middle degree cap (bounds wedge volume by n·cap²; the
-    // Adamic-Adar rationale — see Graph.linkPrediction)
-    linkPredTopK: Int = 100,
-    linkPredMaxMiddleDeg: Long = 64L) {
+    prettyJson: Boolean = false) {
 
   /** config/ConverterConfig.java:170-191 invariants. */
   def validate(): EngineConfig = {
@@ -107,59 +38,6 @@ final case class EngineConfig(
     require(sheetIndex >= 0, s"sheetIndex must be >= 0, got $sheetIndex")
     require(headerRow >= 0, s"headerRow must be >= 0, got $headerRow")
     require(maxEntrySizeBytes > 0, s"maxEntrySize must be > 0, got $maxEntrySizeBytes")
-    require(dedupSalts >= 0, s"dedupSalts must be >= 0 (0 = adaptive), got $dedupSalts")
-    require(dedupMaxDocFreq > 0 && dedupMaxDocFreq <= 1.0,
-      s"dedupMaxDocFreq must be in (0, 1], got $dedupMaxDocFreq")
-    require(dedupMinBlockForCap >= 2,
-      s"dedupMinBlockForCap must be >= 2, got $dedupMinBlockForCap")
-    require(lshSaltBuckets > 0, s"lshSaltBuckets must be > 0, got $lshSaltBuckets")
-    require(srpPairTables > 0, s"srpPairTables must be > 0, got $srpPairTables")
-    require(srpPairBitsPerTable > 0 && srpPairBitsPerTable <= 62,
-      s"srpPairBitsPerTable must be in [1, 62], got $srpPairBitsPerTable")
-    require(rangeJoinBucketUs >= 0,
-      s"rangeJoinBucketUs must be >= 0 (0 = caller supplies), got $rangeJoinBucketUs")
-    require(sketchK >= 3, s"sketchK must be >= 3, got $sketchK")
-    require(quantileSampleK > 0, s"quantileSampleK must be > 0, got $quantileSampleK")
-    require(segmentTokens > 0, s"segmentTokens must be > 0, got $segmentTokens")
-    require(mixTokenBudget >= 0,
-      s"mixTokenBudget must be >= 0 (0 = caller supplies), got $mixTokenBudget")
-    require(bm25K1 > 0, s"bm25K1 must be > 0, got $bm25K1")
-    require(bm25B >= 0 && bm25B <= 1, s"bm25B must be in [0, 1], got $bm25B")
-    require(bloomFpp > 0 && bloomFpp < 1, s"bloomFpp must be in (0, 1), got $bloomFpp")
-    require(iqrFence > 0, s"iqrFence must be > 0, got $iqrFence")
-    require(postingsK > 0, s"postingsK must be > 0, got $postingsK")
-    require(postingsMinDf >= 1, s"postingsMinDf must be >= 1, got $postingsMinDf")
-    require(noveltyShingle > 0, s"noveltyShingle must be > 0, got $noveltyShingle")
-    require(countMinDepth >= 1 && countMinDepth <= 8,
-      s"countMinDepth must be in [1, 8], got $countMinDepth")
-    require(countMinHexDigits >= 1 && countMinHexDigits <= 4,
-      s"countMinHexDigits must be in [1, 4], got $countMinHexDigits")
-    require(editDistMax >= 0, s"editDistMax must be >= 0, got $editDistMax")
-    require(editDistPrefixTokens > 0,
-      s"editDistPrefixTokens must be > 0, got $editDistPrefixTokens")
-    require(tfidfTopM > 0, s"tfidfTopM must be > 0, got $tfidfTopM")
-    require(anomalyLookback >= 2 && anomalyMinN >= 2 &&
-      anomalyMinN <= anomalyLookback,
-      s"anomaly window needs 2 <= minN <= lookback, got minN=$anomalyMinN lookback=$anomalyLookback")
-    require(anomalyZThresh > 0, s"anomalyZThresh must be > 0, got $anomalyZThresh")
-    require(driftBucketWidth > 0, s"driftBucketWidth must be > 0, got $driftBucketWidth")
-    require(prefixJoinTheta > 0 && prefixJoinTheta <= 1.0,
-      s"prefixJoinTheta must be in (0, 1], got $prefixJoinTheta")
-    require(prefixJoinShingleW >= 1,
-      s"prefixJoinShingleW must be >= 1, got $prefixJoinShingleW")
-    require(prioritySampleK > 0, s"prioritySampleK must be > 0, got $prioritySampleK")
-    require(equidepthBuckets >= 2,
-      s"equidepthBuckets must be >= 2, got $equidepthBuckets")
-    require(pagerankIters >= 1, s"pagerankIters must be >= 1, got $pagerankIters")
-    require(pagerankDampPct >= 0 && pagerankDampPct <= 100,
-      s"pagerankDampPct must be in [0, 100], got $pagerankDampPct")
-    require(cusumSlackPct >= 0, s"cusumSlackPct must be >= 0, got $cusumSlackPct")
-    require(cusumThreshPct > 0, s"cusumThreshPct must be > 0, got $cusumThreshPct")
-    require(containmentTheta > 0 && containmentTheta <= 1.0,
-      s"containmentTheta must be in (0, 1], got $containmentTheta")
-    require(linkPredTopK > 0, s"linkPredTopK must be > 0, got $linkPredTopK")
-    require(linkPredMaxMiddleDeg >= 1,
-      s"linkPredMaxMiddleDeg must be >= 1, got $linkPredMaxMiddleDeg")
     val fmt = format.toLowerCase
     require(Set("ndjson", "csv", "json", "xlsx").contains(fmt), s"unknown format '$format'")
     require(Set("parquet", "xlsx").contains(inputFormat.toLowerCase),
@@ -169,5 +47,33 @@ final case class EngineConfig(
     require(fmt == "csv" || outputPath.isDefined,
       s"outputPath is required for format '$format'")
     this
+  }
+}
+
+object EngineConfig {
+
+  /** The `local[cpus]` session that [[graft.Verify]] and [[graft.Bench]]
+    * run every SparkEntry row in. */
+  def localSession(cpus: String): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false") // reference parity: bad cells → null
+      .config("spark.ui.enabled", "false")
+      // optimizer rung end-to-end: raw-SQL range theta joins rewrite to the
+      // bucketed equi-join (plans.RangeJoinBucketing; events_range_join_sql
+      // plan-asserts the rewrite happened)
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.graft.rangejoin.bucketUs", "600000000")
+      // StageStore read-back parallelism: the 4 MB default open-cost packs
+      // a small staged relation's files into 1-2 splits, serializing every
+      // downstream map stage; on local disk/tmpfs the real open cost is ~0
+      .config("spark.sql.files.openCostInBytes", "16384")
+    // shuffle files / DISK_ONLY blocks / spills on tmpfs (NVMe stand-in;
+    // SPARK_GRAFT_NO_SHM_LOCAL=1 reverts) — see ScratchDirs
+    val spark = ScratchDirs.withLocalDir(builder).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

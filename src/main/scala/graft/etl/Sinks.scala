@@ -179,13 +179,8 @@ object Sinks {
     * its rows' JSON already joined by the separator; the driver writes
     * `[`, the non-empty parts in partition order with one separator between
     * each two, then `]`, so the element order is the DataFrame order.
-    * Returns the rows written. */
+    * Returns the rows, file and bytes written. */
   def jsonArray(df: DataFrame, path: String, overwrite: Boolean = false,
-      pretty: Boolean = false): Long =
-    writeJsonArray(df, path, overwrite, pretty).rows
-
-  /** [[jsonArray]], with the file and bytes it wrote. */
-  def writeJsonArray(df: DataFrame, path: String, overwrite: Boolean = false,
       pretty: Boolean = false): PartFiles.Written = {
     def utf8(s: String) = s.getBytes(StandardCharsets.UTF_8)
     val (open, sep, close) =

@@ -264,10 +264,6 @@ object Analytics {
     * The fence arithmetic happens ONCE on the driver over two collected
     * scalars (the adjudicated bounded-collect shape) in the same textual
     * order as the oracle's — IEEE-identical. */
-  /** Config-tuned entry point (EngineConfig.iqrFence). */
-  def outliersIqr(events: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    outliersIqr(events, fence = cfg.iqrFence)
-
   def outliersIqr(events: DataFrame, valueCol: String = "value",
       fence: Double = 1.5): DataFrame = {
     val q = Sketch.exactQuantileDisc(events, valueCol, Seq(0.25, 0.75))
@@ -706,10 +702,6 @@ object Analytics {
     * aggregation. Bucket i holds values v with b_{i-1} < v ≤ b_i (b_0 =
     * −∞); massive ties can legitimately leave later buckets empty — those
     * rows are kept with n = 0 so the histogram always has exactly k rows. */
-  def equidepthHistogram(df: DataFrame, valueCol: String,
-      cfg: graft.etl.EngineConfig): DataFrame =
-    equidepthHistogram(df, valueCol, cfg.equidepthBuckets)
-
   def equidepthHistogram(df: DataFrame, valueCol: String, k: Int = 8): DataFrame = {
     require(k >= 2, "k must be at least 2")
     val spark = df.sparkSession

@@ -124,17 +124,6 @@ object Dedup {
 
   val DefaultSaltBuckets = 16
 
-  /** Config-tuned entry points: thread the EngineConfig skew tunables into
-    * the operators (the reference analog of its --batchSize/threshold CLI
-    * surface; config/ConverterConfig.java:53,77). */
-  def dropNearDuplicates(docs: DataFrame, cfg: graft.etl.EngineConfig,
-      threshold: Double): DataFrame =
-    dropNearDuplicates(docs, threshold, "text", cfg.dedupMaxDocFreq,
-      cfg.dedupMinBlockForCap, cfg.dedupSalts)
-
-  def lshCandidatePairs(sigs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    lshCandidatePairs(sigs, cfg.lshSaltBuckets)
-
   def lshCandidatePairs(sigs: DataFrame, saltBuckets: Int = DefaultSaltBuckets): DataFrame =
     // the candidate-pair relation is THE shared intermediate of the
     // near-dup family (keep-first, clustering, LPA, link prediction, the
@@ -424,9 +413,6 @@ object Dedup {
     (tok, t, ranked)
   }
 
-  def jaccardPrefixJoin(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    jaccardPrefixJoin(docs, "text", cfg.prefixJoinTheta, cfg.prefixJoinShingleW)
-
   def jaccardPrefixJoin(docs: DataFrame, textCol: String = "text",
       theta: Double = 0.8, shingleW: Int = 3): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, "theta must be in (0, 1]")
@@ -514,9 +500,6 @@ object Dedup {
     * near-dup pair at θ appears in both directions, a strict excerpt in
     * one. Plan: two token-keyed equi-join shuffles + two id-keyed
     * join-backs, nothing quadratic in the corpus. */
-  def containmentPrefixJoin(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    containmentPrefixJoin(docs, "text", cfg.containmentTheta, cfg.prefixJoinShingleW)
-
   def containmentPrefixJoin(docs: DataFrame, textCol: String = "text",
       theta: Double = 0.8, shingleW: Int = 3): DataFrame = {
     require(theta > 0.0 && theta <= 1.0, "theta must be in (0, 1]")
@@ -588,7 +571,7 @@ object Dedup {
     * enumerations) into the capped-empty comparison (bench 7.8s → 13.1s).
     * On a real Zipfian vocabulary the capped-empty population is ~0 and the
     * cap is the difference between a bounded and an unbounded hot-token
-    * reducer — set it (e.g. 0.5) via the parameter/EngineConfig for such
+    * reducer — set it (e.g. 0.5) via the parameter for such
     * corpora. */
   val MaxDocFreq = 1.0
   val MinBlockForCap = 8
@@ -1190,10 +1173,6 @@ object Dedup {
     * a differential in DedupSpec); cost per pair is bounded by the prefix
     * cap, not document length. Docs with no tokens have no prefix and join
     * nowhere (NULL first token on both engines). */
-  def editDistancePairs(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    editDistancePairs(docs, cfg.editDistMax, cfg.editDistPrefixTokens,
-      if (cfg.dedupSalts > 0) cfg.dedupSalts else 8)
-
   def editDistancePairs(docs: DataFrame, maxDist: Int = 10,
       prefixTokens: Int = 8, salts: Int = 8,
       textCol: String = "text"): DataFrame = {

@@ -54,10 +54,6 @@ object Graph {
     * quadratic, no driver state beyond the node count. Rank mass totals
     * ≤ `scale`, so per-node sums never approach Long range at any corpus
     * size. */
-  def pageRank(nodes: DataFrame, pairs: DataFrame,
-      cfg: graft.etl.EngineConfig): DataFrame =
-    pageRank(nodes, pairs, "doc_id", cfg.pagerankIters, cfg.pagerankDampPct)
-
   def pageRank(nodes: DataFrame, pairs: DataFrame, idCol: String = "doc_id",
       iters: Int = 3, dampPct: Long = 85L,
       scale: Long = 1000000000000L): DataFrame = {
@@ -227,9 +223,6 @@ object Graph {
     * little and bounds wedges by n·cap²). The cap is PINNED semantics,
     * mirrored exactly in the oracle; deg_a/deg_b/jaccard still use full
     * degrees, so cn is a lower bound exactly where AA says it should be. */
-  def linkPrediction(pairs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    linkPrediction(pairs, cfg.linkPredTopK, cfg.linkPredMaxMiddleDeg)
-
   def linkPrediction(pairs: DataFrame, topK: Int = 100,
       maxMiddleDeg: Long = 64L): DataFrame = {
     require(topK > 0, s"topK must be > 0, got $topK")

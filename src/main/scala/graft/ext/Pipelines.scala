@@ -802,15 +802,6 @@ object Pipelines {
     *
     * Output is IDENTICAL to [[mixByTokenBudget]] (PipelinesSpec proves
     * equivalence), which is why both share the oracle. */
-  /** Config-tuned entry point (EngineConfig.mixTokenBudget, which must be
-    * set — 0 means the caller supplies the budget explicitly). */
-  def mixByTokenBudgetScalable(df: DataFrame, groupCol: String, keyCol: String,
-      cfg: graft.etl.EngineConfig): DataFrame = {
-    require(cfg.mixTokenBudget > 0,
-      "EngineConfig.mixTokenBudget must be set for the config-tuned mix")
-    mixByTokenBudgetScalable(df, groupCol, keyCol, cfg.mixTokenBudget)
-  }
-
   def mixByTokenBudgetScalable(df: DataFrame, groupCol: String, keyCol: String,
       budgetTokens: Long, textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -941,10 +932,6 @@ object Pipelines {
     * reproducible and oracle-checkable; the top-k is a TakeOrdered
     * (per-partition partial top-k + k-row driver merge), never a global
     * sort. w·2^32 stays exact while w < 2^20, far above any fixture weight. */
-  def prioritySample(df: DataFrame, weightCol: String, keyCol: String,
-      cfg: graft.etl.EngineConfig): DataFrame =
-    prioritySample(df, weightCol, keyCol, cfg.prioritySampleK)
-
   def prioritySample(df: DataFrame, weightCol: String, keyCol: String,
       k: Int): DataFrame = {
     require(k > 0, "k must be positive")

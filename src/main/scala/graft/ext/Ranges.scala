@@ -42,12 +42,6 @@ object Ranges {
     *
     * @param bucketUs bucket width in microseconds (> 0)
     */
-  /** Config-tuned entry point (EngineConfig.rangeJoinBucketUs must be set). */
-  def bucketedRangeJoin(points: DataFrame, pointUs: String,
-      intervals: DataFrame, startUs: String, endUs: String,
-      cfg: graft.etl.EngineConfig): DataFrame =
-    bucketedRangeJoin(points, pointUs, intervals, startUs, endUs, cfg.rangeJoinBucketUs)
-
   def bucketedRangeJoin(points: DataFrame, pointUs: String,
       intervals: DataFrame, startUs: String, endUs: String,
       bucketUs: Long): DataFrame = {

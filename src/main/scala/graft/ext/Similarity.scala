@@ -518,11 +518,6 @@ object Similarity {
     * (recall at cos≥0.9 ≈ 1; at the demo threshold 0.4 ≈ 0.75 with 8×4-bit
     * tables — bitsPerTable grows with corpus size at scale). The oracle
     * replicates the exact bucket arithmetic, so the check is exact. */
-  /** Config-tuned entry point ([[graft.etl.EngineConfig]] srp* tunables). */
-  def cosinePairsBucketed(emb: DataFrame, cfg: graft.etl.EngineConfig,
-      threshold: Double): DataFrame =
-    cosinePairsBucketed(emb, threshold, cfg.srpPairTables, cfg.srpPairBitsPerTable)
-
   def cosinePairsBucketed(emb: DataFrame, threshold: Double = 0.4,
       nTables: Int = PairTables, bitsPerTable: Int = PairBitsPerTable,
       seed: Long = PairSeed): DataFrame = {

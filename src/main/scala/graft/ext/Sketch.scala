@@ -85,10 +85,6 @@ object Sketch {
         col("exact_distinct").cast("long").as("exact_distinct"))
   }
 
-  /** Config-tuned entry point (EngineConfig.sketchK). */
-  def kmvDistinct(df: DataFrame, key: Column, cfg: graft.etl.EngineConfig): DataFrame =
-    kmvDistinct(df, key, cfg.sketchK)
-
   def kmvDistinct(df: DataFrame, key: Column, k: Int): DataFrame = {
     val hashed = df.select(md5(key.cast("string")).as("h"))
     val sk = hashed.agg(minKDistinct(k)(col("h")).as("mins"))
@@ -521,11 +517,6 @@ object Sketch {
     out.toDF(group, "prob", "n", "value")
   }
 
-  /** Config-tuned entry point (EngineConfig.quantileSampleK). */
-  def sampleQuantiles(df: DataFrame, valueCol: String, key: Column,
-      cfg: graft.etl.EngineConfig): DataFrame =
-    sampleQuantiles(df, valueCol, key, cfg.quantileSampleK)
-
   /** Per-group [[sampleQuantiles]]: rank-by-hash inside each group
     * (WindowGroupLimit bounds every map task to k rows per group before the
     * shuffle), keep each group's k hash-minima, aggregate exact sample
@@ -572,9 +563,6 @@ object Sketch {
     *
     * The estimate lookup joins the ≤ depth·width-row cell table back to the
     * candidate tokens — a broadcast join by construction. */
-  def countMinTokens(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    countMinTokens(docs, cfg.countMinDepth, cfg.countMinHexDigits)
-
   def countMinTokens(docs: DataFrame, depth: Int = 4, hexDigits: Int = 2,
       topK: Int = 50, textCol: String = "text"): DataFrame = {
     require(depth >= 1 && depth <= 8, s"depth must be in [1,8], got $depth")

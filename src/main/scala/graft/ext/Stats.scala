@@ -113,9 +113,6 @@ object Stats {
     * Shape: ONE shuffle on user_id, then a single sorted window pass
     * computing all three trailing sums in one frame — the same plan at any
     * scale; per-partition memory is O(lookback). */
-  def anomalyZscore(events: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    anomalyZscore(events, cfg.anomalyLookback, cfg.anomalyMinN, cfg.anomalyZThresh)
-
   def anomalyZscore(events: DataFrame, lookback: Int = 20, minN: Int = 10,
       zThresh: Double = 2.0): DataFrame = {
     val e = events
@@ -203,10 +200,6 @@ object Stats {
     * the distance, plus the scalar TV on every row (broadcast 1-row
     * aggregate). Shape: two map-side-combined histograms + a tiny
     * bucket-keyed full outer join — the corpus is read once per side. */
-  def driftTotalVariation(a: DataFrame, b: DataFrame, valueCol: String,
-      cfg: graft.etl.EngineConfig): DataFrame =
-    driftTotalVariation(a, b, valueCol, cfg.driftBucketWidth)
-
   def driftTotalVariation(a: DataFrame, b: DataFrame, valueCol: String,
       bucketWidth: Long = 25L): DataFrame = {
     def hist(df: DataFrame, n: String) = df
@@ -448,9 +441,6 @@ object Stats {
     * ordered frames hash on user_id alone; per-partition state is O(1).
     * Emits only the alarm rows (S⁺ or S⁻ above h), each labeled with its
     * direction, so output tracks true change points, not the corpus. */
-  def cusumChangepoints(events: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    cusumChangepoints(events, cfg.cusumSlackPct, cfg.cusumThreshPct)
-
   def cusumChangepoints(events: DataFrame, slackPct: Long = 50L,
       hPct: Long = 400L): DataFrame = {
     require(slackPct >= 0L, s"slackPct must be >= 0, got $slackPct")

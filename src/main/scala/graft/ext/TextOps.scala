@@ -385,10 +385,6 @@ object TextOps {
     * same rule on both engines' 1-based `array_position`/`list_position`.
     * Zero-token docs produce no row (no segments — the
     * [[Chunking.chunkDocs]] contract). */
-  /** Config-tuned entry point (EngineConfig.segmentTokens). */
-  def dedupSegments(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    dedupSegments(docs, cfg.segmentTokens)
-
   def dedupSegments(docs: DataFrame, w: Int = 8, textCol: String = "text"): DataFrame = {
     require(w > 0, "w must be positive")
     docs
@@ -1047,9 +1043,6 @@ object TextOps {
     * (An adversarial corpus of identical docs concentrates one posting
     * list; the salted-join treatment of [[Dedup.jaccardPairs]] applies —
     * here the fixture's max posting length is ~25 at sf0.1.) */
-  def tfidfCosinePairs(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    tfidfCosinePairs(docs, topM = cfg.tfidfTopM)
-
   def tfidfCosinePairs(docs: DataFrame, w: Int = 3, topM: Int = 10,
       idfScale: Long = 1000000L, threshold: Double = 0.5,
       textCol: String = "text"): DataFrame = {
@@ -1269,10 +1262,6 @@ object TextOps {
     * 1-row-aggregate crossJoin pattern. No per-term shuffle, no posting
     * lists; linear at any corpus size.
     */
-  /** Config-tuned entry point (EngineConfig.bm25K1/bm25B). */
-  def bm25(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    bm25(docs, k1 = cfg.bm25K1, b = cfg.bm25B)
-
   def bm25(docs: DataFrame, terms: Seq[String] = Seq("spark", "join", "stream"),
       k1: Double = 1.2, b: Double = 0.75, textCol: String = "text"): DataFrame = {
     require(terms.nonEmpty && terms == terms.distinct)
@@ -2115,10 +2104,6 @@ object TextOps {
     * it. Output volume is |vocab| · k, independent of corpus row count.
     * A hot term is one sort-key group, not one reducer's hash entry; AQE
     * skew-split handles the partition if a term dominates. */
-  /** Config-tuned entry point (EngineConfig.postingsK/postingsMinDf). */
-  def postings(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    postings(docs, cfg.postingsK, cfg.postingsMinDf)
-
   def postings(docs: DataFrame, k: Int = 3, minDf: Long = 2,
       textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2167,10 +2152,6 @@ object TextOps {
     * → join back on hash → per-doc counts. All bucketed equi-joins on
     * content hashes; no quadratic pair enumeration anywhere. The ratio is
     * one int/int double division — exact on both engines. */
-  /** Config-tuned entry point (EngineConfig.noveltyShingle). */
-  def novelty(docs: DataFrame, cfg: graft.etl.EngineConfig): DataFrame =
-    novelty(docs, cfg.noveltyShingle)
-
   def novelty(docs: DataFrame, w: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = Dedup.shingles(docs, w)
@@ -2217,11 +2198,6 @@ object TextOps {
     * The eager `count()` runs on the BENCHMARK side only (the small side
     * by contract — benchmark suites are KBs against a 100 TB corpus);
     * sizing the filter from it is one tiny pass, never a corpus scan. */
-  /** Config-tuned entry point (EngineConfig.bloomFpp). */
-  def decontaminateBloom(candidates: DataFrame, benchmark: DataFrame,
-      cfg: graft.etl.EngineConfig): DataFrame =
-    decontaminateBloom(candidates, benchmark, fpp = cfg.bloomFpp)
-
   def decontaminateBloom(candidates: DataFrame, benchmark: DataFrame,
       w: Int = 5, fpp: Double = 0.01): DataFrame = {
     val candSh = Dedup.shingles(candidates, w)

@@ -18,7 +18,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * Generated code caches `broadcast.value()` in a mutable-state field at
   * stage init, so the per-row work is one virtual call on the filter —
   * the expression stays inside the WholeStageCodegen span
-  * (tools/ExplainCheck verifies this for text_decontaminate_bloom).
+  * (text_decontaminate_bloom's executed plan shows it inside the span).
   */
 case class BloomMightContainLong(child: Expression, bloom: Broadcast[BloomFilter])
     extends UnaryExpression {

@@ -85,16 +85,11 @@ object XlsxSink {
   /** Writes `df` (all StringType columns) as one .xlsx per partition under
     * `dir`, first row of every workbook = the column names (the S4 header
     * contract on the way out). Empty partitions produce no file. Returns
-    * the number of data rows written. Each workbook is committed with
+    * the data rows, files and bytes written. Each workbook is committed with
     * [[graft.etl.PartFiles]]'s protocol; a local path only.
     *
     * @throws IllegalStateException existing `dir` without `overwrite` (K4). */
   def write(df: DataFrame, dir: String, sheetName: String = "Sheet1",
-      overwrite: Boolean = false): Long =
-    writeParts(df, dir, sheetName, overwrite).rows
-
-  /** [[write]], with the files and bytes it wrote. */
-  def writeParts(df: DataFrame, dir: String, sheetName: String = "Sheet1",
       overwrite: Boolean = false): PartFiles.Written = {
     val nonString = df.schema.fields.filter(_.dataType != StringType).map(_.name)
     require(nonString.isEmpty,

@@ -163,7 +163,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     val empty = Seq.empty[(Long, String)].toDF("k", "v")
     assert(Sinks.chunkStats(empty, 100, col("k")).count() == 0)
     val path = graft.TestDirs.dir("edge").toString + "/arr.json"
-    assert(Sinks.jsonArray(empty, path) == 0L)
+    assert(Sinks.jsonArray(empty, path).rows == 0L)
     assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == "[]")
   }
 

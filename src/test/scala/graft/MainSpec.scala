@@ -21,6 +21,19 @@ class MainSpec extends AnyFunSuite {
     assert(c.overwrite && c.continueOnError && c.prettyJson && c.minInflateRatio == 0.5)
   }
 
+  test("every EngineConfig field is reachable from the CLI") {
+    val Right(c) = Main.parseArgs(Seq(
+      "--output", "/tmp/x", "--format", "csv", "--input-format", "xlsx",
+      "--sheet-name", "Orders", "--sheet-index", "1", "--header-row", "2",
+      "--batch-size", "100", "--memory-threshold", "256",
+      "--min-inflate-ratio", "0.5", "--max-entry-size", "1024",
+      "--pretty", "--overwrite", "--continue-on-error", "/data/in")): @unchecked
+    val base = graft.etl.EngineConfig(inputDir = "")
+    val unset = c.productElementNames.zip(c.productIterator.zip(base.productIterator))
+      .collect { case (name, (got, default)) if got == default => name }.toSeq
+    assert(unset.isEmpty, "fields no flag sets")
+  }
+
   test("usage errors: unknown flag, missing value, bad number, missing input, validation") {
     assert(Main.parseArgs(Seq("--nope", "x")).isLeft)
     assert(Main.parseArgs(Seq("--output")).isLeft)

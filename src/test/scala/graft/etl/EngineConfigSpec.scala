@@ -21,31 +21,4 @@ class EngineConfigSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ok.copy(outputPath = None).validate())
     ok.copy(outputPath = None, format = "csv").validate() // no throw
   }
-
-  test("skew/scale tunables: defaults match operator constants and validate") {
-    assert(ok.dedupSalts == 0) // adaptive
-    assert(ok.dedupMaxDocFreq == graft.ext.Dedup.MaxDocFreq)
-    assert(ok.dedupMinBlockForCap == graft.ext.Dedup.MinBlockForCap)
-    assert(ok.lshSaltBuckets == 16)
-    assert(ok.srpPairTables == graft.ext.Similarity.PairTables)
-    assert(ok.srpPairBitsPerTable == graft.ext.Similarity.PairBitsPerTable)
-    ok.copy(dedupSalts = 32, dedupMaxDocFreq = 0.5, lshSaltBuckets = 64).validate()
-    intercept[IllegalArgumentException](ok.copy(dedupSalts = -1).validate())
-    intercept[IllegalArgumentException](ok.copy(dedupMaxDocFreq = 0.0).validate())
-    intercept[IllegalArgumentException](ok.copy(dedupMaxDocFreq = 1.5).validate())
-    intercept[IllegalArgumentException](ok.copy(dedupMinBlockForCap = 1).validate())
-    intercept[IllegalArgumentException](ok.copy(lshSaltBuckets = 0).validate())
-    intercept[IllegalArgumentException](ok.copy(srpPairTables = 0).validate())
-    intercept[IllegalArgumentException](ok.copy(srpPairBitsPerTable = 63).validate())
-    assert(ok.rangeJoinBucketUs == 0L) // caller supplies unless configured
-    assert(ok.sketchK == 64)
-    ok.copy(rangeJoinBucketUs = 600000000L, sketchK = 128).validate()
-    intercept[IllegalArgumentException](ok.copy(rangeJoinBucketUs = -1L).validate())
-    intercept[IllegalArgumentException](ok.copy(sketchK = 2).validate())
-    assert(ok.quantileSampleK == 256 && ok.segmentTokens == 8 && ok.mixTokenBudget == 0L)
-    ok.copy(quantileSampleK = 64, segmentTokens = 4, mixTokenBudget = 1000L).validate()
-    intercept[IllegalArgumentException](ok.copy(quantileSampleK = 0).validate())
-    intercept[IllegalArgumentException](ok.copy(segmentTokens = 0).validate())
-    intercept[IllegalArgumentException](ok.copy(mixTokenBudget = -1L).validate())
-  }
 }

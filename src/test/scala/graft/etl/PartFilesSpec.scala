@@ -118,7 +118,7 @@ class PartFilesSpec extends AnyFunSuite {
 
   test("an empty frame writes [] as its JSON array") {
     val path = s"${tmp("pf_arr")}/a.json"
-    val w = Sinks.writeJsonArray(empty, path)
+    val w = Sinks.jsonArray(empty, path)
     assert(Files.readString(new File(path).toPath) == "[]")
     assert(w == PartFiles.Written(0, 1, 2))
   }

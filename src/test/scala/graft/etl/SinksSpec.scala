@@ -72,7 +72,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("K3: jsonArray writes a single well-formed array with bounded memory") {
     val path = s"${tmpDir()}/arr.json"
-    val n = Sinks.jsonArray(IngestOps.table(spark, sf0001, "region").orderBy("r_regionkey"), path)
+    val n = Sinks.jsonArray(IngestOps.table(spark, sf0001, "region").orderBy("r_regionkey"), path).rows
     assert(n == 5)
     val txt = Files.readString(Paths.get(path))
     assert(txt.startsWith("[{") && txt.endsWith("}]"))
@@ -87,7 +87,7 @@ class SinksSpec extends AnyFunSuite {
     val df = IngestOps.table(spark, sf0001, "region")
     Sinks.jsonArray(df, path)
     intercept[IllegalStateException](Sinks.jsonArray(df, path))
-    assert(Sinks.jsonArray(df, path, overwrite = true) == 5)
+    assert(Sinks.jsonArray(df, path, overwrite = true).rows == 5)
     // parquet-style sinks: SaveMode mapping
     assert(Sinks.saveMode(false) == org.apache.spark.sql.SaveMode.ErrorIfExists)
     assert(Sinks.saveMode(true) == org.apache.spark.sql.SaveMode.Overwrite)
@@ -104,7 +104,7 @@ class SinksSpec extends AnyFunSuite {
     for (df <- frames; pretty <- Seq(false, true)) {
       val (open, sep, close) = if (pretty) ("[\n  ", ",\n  ", "\n]") else ("[", ",", "]")
       val path = s"${tmpDir()}/bytes.json"
-      val n = Sinks.jsonArray(df, path, overwrite = true, pretty = pretty)
+      val n = Sinks.jsonArray(df, path, overwrite = true, pretty = pretty).rows
       val json = df.toJSON.collect()
       assert(n == json.length)
       assert(Files.readString(Paths.get(path)) == open + json.mkString(sep) + close)

@@ -127,16 +127,17 @@ class DedupSpec extends AnyFunSuite {
     assert(capped == Seq(1L, 2L, 3L, 4L, 5L, 7L))
   }
 
-  test("EngineConfig tunables thread into dropNearDuplicates") {
+  test("dropNearDuplicates: the df cap holds for adaptive and fixed salt counts") {
     val d = docs(
       (1L, "c1 c2 c3 c4 x"), (2L, "c1 c2 c3 c4 y"),
       (3L, "c1 c2 c3 c4 z"), (4L, "c1 c2 c3 c4 w"),
       (5L, "c1 c2"), (6L, "c1 c2"), (7L, "c1"))
-    val cfg = graft.etl.EngineConfig(inputDir = "/in", outputPath = Some("/o"),
-      dedupMaxDocFreq = 0.5, dedupMinBlockForCap = 3).validate()
-    val capped = Dedup.dropNearDuplicates(d, cfg, threshold = 0.6)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(capped == Seq(1L, 2L, 3L, 4L, 5L, 7L)) // the df-cap semantics engaged
+    for (salts <- Seq(0, 4)) { // 0 = adaptive from corpus size
+      val capped = Dedup.dropNearDuplicates(d, threshold = 0.6, textCol = "text",
+        maxDocFreq = 0.5, minBlockForCap = 3, salts = salts)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(capped == Seq(1L, 2L, 3L, 4L, 5L, 7L), salts) // the df-cap semantics engaged
+    }
   }
 
   test("adaptiveSalts scales with corpus size within [1, 64]") {

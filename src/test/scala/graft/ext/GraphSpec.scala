@@ -58,24 +58,20 @@ class GraphSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("EngineConfig tunables thread into the round-11 operators") {
-    val cfg = graft.etl.EngineConfig(inputDir = "/in", outputPath = Some("/o"),
-      pagerankIters = 1, pagerankDampPct = 0L, prioritySampleK = 1,
-      equidepthBuckets = 2, prefixJoinTheta = 1.0, prefixJoinShingleW = 1)
-      .validate()
+  test("round-11 operators honour explicit shape parameters") {
     val nodes = Seq(1L, 2L).toDF("doc_id")
     val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
     // dampPct 0 → every rank is exactly the teleport base after 1 round
-    val pr = Graph.pageRank(nodes, pairs, cfg)
+    val pr = Graph.pageRank(nodes, pairs, iters = 1, dampPct = 0L)
       .select("pr_scaled").as[Long].collect().toSet
     assert(pr == Set((100L * 1000000000000L / 100L) / 2L))
     val docs = Seq((1L, "a", 5L), (2L, "b", 9L)).toDF("doc_id", "text", "n_chars")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("t"))
-    assert(Pipelines.prioritySample(docs, "n_chars", "doc_id", cfg).count() == 1L)
-    assert(Analytics.equidepthHistogram(docs, "n_chars", cfg).count() == 2L)
+    assert(Pipelines.prioritySample(docs, "n_chars", "doc_id", k = 1).count() == 1L)
+    assert(Analytics.equidepthHistogram(docs, "n_chars", k = 2).count() == 2L)
     // theta 1.0 over unigram sets: only exact-set matches would pair
-    assert(Dedup.jaccardPrefixJoin(docs, cfg).count() == 0L)
+    assert(Dedup.jaccardPrefixJoin(docs, theta = 1.0, shingleW = 1).count() == 0L)
   }
 
   test("pageRank: isolated nodes hold base; partition invariance bit-for-bit") {

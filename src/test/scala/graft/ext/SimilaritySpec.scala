@@ -9,22 +9,21 @@ import graft.functions.VectorExprs
 class SimilaritySpec extends AnyFunSuite {
   import spark.implicits._
 
-  test("EngineConfig srp tunables thread into cosinePairsBucketed") {
+  test("cosinePairsBucketed: more SRP tables only widen the candidate set") {
     val emb = graft.etl.IngestOps.table(graft.SparkTestSession.spark,
       graft.SparkTestSession.sf0001, "embeddings")
-    val cfg = graft.etl.EngineConfig(inputDir = "/in", outputPath = Some("/o")).validate()
-    // defaults through the config overload == the plain defaults
-    val viaCfg = Similarity.cosinePairsBucketed(emb, cfg, 0.4)
+    // the default shape given explicitly == the plain defaults
+    val explicit = Similarity.cosinePairsBucketed(emb, 0.4,
+      nTables = Similarity.PairTables, bitsPerTable = Similarity.PairBitsPerTable)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val plain = Similarity.cosinePairsBucketed(emb, 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(viaCfg == plain)
+    assert(explicit == plain)
     // more tables can only widen the candidate set (recall grows with L)
-    val wider = Similarity.cosinePairsBucketed(emb,
-      cfg.copy(srpPairTables = 16), 0.4)
+    val wider = Similarity.cosinePairsBucketed(emb, 0.4, nTables = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(wider.toSet.size >= viaCfg.toSet.size)
-    assert(viaCfg.toSet.subsetOf(wider.toSet))
+    assert(wider.toSet.size >= explicit.toSet.size)
+    assert(explicit.toSet.subsetOf(wider.toSet))
   }
 
   test("FloatVectorDot matches a manual double-accumulated dot product") {

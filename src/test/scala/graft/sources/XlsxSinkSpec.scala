@@ -18,7 +18,7 @@ class XlsxSinkSpec extends AnyFunSuite {
     val dir = tmpDir()
     val df = Seq(("1", "alpha", "x y"), ("2", "beta", ""), ("3", "gamma", "z"))
       .toDF("id", "name", "note")
-    val n = XlsxSink.write(df, dir, sheetName = "data")
+    val n = XlsxSink.write(df, dir, sheetName = "data").rows
     assert(n == 3L)
     val back = spark.read.format("xlsx").option("sheetName", "data").load(dir)
       .orderBy("id").collect()
@@ -41,7 +41,7 @@ class XlsxSinkSpec extends AnyFunSuite {
   test("multi-partition write: one workbook per non-empty partition, all rows read back") {
     val dir = tmpDir()
     val df = (1 to 100).map(i => (i.toString, s"v$i")).toDF("k", "v").repartition(7)
-    val n = XlsxSink.write(df, dir)
+    val n = XlsxSink.write(df, dir).rows
     assert(n == 100L)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".xlsx"))
     assert(files.nonEmpty && files.length <= 7)
@@ -64,7 +64,7 @@ class XlsxSinkSpec extends AnyFunSuite {
   test("all-empty input yields a readable header-only workbook (schema survives)") {
     val dir = tmpDir()
     val df = Seq(("1", "a")).toDF("id", "v").filter("id = 'nope'")
-    val n = XlsxSink.write(df, dir)
+    val n = XlsxSink.write(df, dir).rows
     assert(n == 0L)
     val back = spark.read.format("xlsx").load(dir)
     assert(back.columns.toSeq == Seq("id", "v"))
