@@ -26,20 +26,15 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.etl.EngineConfig.localSession(cpus)
 
-    // Deterministic query order (Map iteration order is hash-random), and a
-    // warmup pass at the smallest SF so JIT + codegen + file-index costs
-    // don't land on whichever query happens to run first.
-    // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration aid).
-    // dedup_embedding_cosine is the all-pairs BroadcastNestedLoopJoin form,
-    // kept in `queries` ONLY as the fixture-scale oracle cross-check for its
-    // bucketed twin (dedup_embedding_cosine_bucketed, which IS benched).
-    // The standing bench set exercises the 100 TB-shaped plans.
-    val notBenched = Set("dedup_embedding_cosine")
+    // Deterministic query order (name order), and a warmup pass at the
+    // smallest SF so JIT + codegen + file-index costs don't land on
+    // whichever query happens to run first.
+    // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration aid);
+    // without it, every row marked `benched` runs.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-      .filterNot(n => only.isEmpty && notBenched(n))
+    val names = SparkEntry.rows.filter(r => only.fold(r.benched)(_.contains(r.name)))
+      .map(_.name).sorted
     val warmDir = "/root/testdata/sf0.001"
     // failures outside the timed samples are counted, never swallowed
     // silently: warm_failed / prime_failed / fp_err in the JSON line
@@ -66,15 +61,16 @@ object Bench {
       primeSecs(name) = (System.nanoTime() - t0) / 1e9
     }
 
-    // Committed per-query reference mins from the repo's checked-in
-    // fingerprint file — the 3x escalation reference (VERDICT r14 #2b): a
+    // Committed per-query reference mins from the checked-in fingerprint
+    // file of the checkout Bench runs from (`run / fork` starts in the
+    // project root) — the 3x escalation reference (VERDICT r14 #2b): a
     // sample that lands >3x over the committed min on an unchanged plan is
     // a measurement window, not a plan cost; extra samples give min() a
     // chance to see past it. Parsed leniently (the file is this program's
     // own output format); missing file → no committed-min escalations.
     val committedMin: Map[String, Double] = try {
       val src = scala.io.Source.fromFile(
-        sys.env.getOrElse("SPARK_GRAFT_FP_REF", "/root/repo/PLAN_FINGERPRINTS.json"))
+        sys.env.getOrElse("SPARK_GRAFT_FP_REF", "PLAN_FINGERPRINTS.json"))
       val txt = try src.mkString finally src.close()
       val entry = "\"([^\"]+)\": \\{\"fp\":\"[^\"]*\",\"samples\":\\[([^\\]]*)\\]".r
       entry.findAllMatchIn(txt).flatMap { m =>
@@ -182,8 +178,10 @@ object Bench {
     val samples = sampleMap.toSeq.map { case (n, (ts, l1)) => (n, ts, l1) }
     val loadEnd = loadavg()
     // Per-query adjudication record: fingerprint + all samples + 1-min load
-    // at sample time. Kept as a repo file so a judge can diff rounds.
-    val fpOut = sys.env.getOrElse("SPARK_GRAFT_FP_OUT", "/root/repo/PLAN_FINGERPRINTS.json")
+    // at sample time. Kept as a repo file so a judge can diff rounds;
+    // written to the working directory's copy unless SPARK_GRAFT_FP_OUT
+    // names another path.
+    val fpOut = sys.env.getOrElse("SPARK_GRAFT_FP_OUT", "PLAN_FINGERPRINTS.json")
     try {
       val w = new java.io.PrintWriter(fpOut, "UTF-8")
       try {

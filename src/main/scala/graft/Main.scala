@@ -38,14 +38,19 @@ object Main {
       |  --sheet-index N          sheet by 0-based index       (default 0)
       |  --header-row N           0-based header row           (default 0)
       |  --batch-size N           rows per CSV chunk           (default 50000)
-      |  --memory-threshold MB    memory threshold             (default 512)
+      |  --memory-threshold MB    validated, not consumed      (default 512)
       |  --min-inflate-ratio R    zip-bomb inflation guard     (default 0.01)
       |  --max-entry-size BYTES   zip entry size cap
       |  --date-format FMT        accepted, not consumed (reference parity)
       |  --pretty                 pretty-print JSON array sink
       |  --overwrite              replace existing output
-      |  --continue-on-error      tolerate malformed rows
-      |  --help | --version""".stripMargin
+      |  --continue-on-error      accepted, not consumed (reference parity)
+      |  --help | --version
+      |--memory-threshold and --continue-on-error are parsed and validated for
+      |parity with the reference CLI and do not change a conversion: a malformed
+      |sheet fails with a typed error either way (every cell is read as a
+      |string, so no row can fail on its own), and parquet input has no
+      |malformed rows.""".stripMargin
 
   /** Pure arg→config parse; Left = error + exit code (2 parse, 1 validate). */
   def parseArgs(args: Seq[String]): Either[CliError, EngineConfig] = {

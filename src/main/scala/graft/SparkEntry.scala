@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.DecimalType
 import graft.etl.{IngestOps, Sinks}
 import graft.ext.{Dedup, Multimodal, Similarity, TextOps}
 
-/** Driver contract — one query per implemented operator (SURVEY.md §2), each
-  * with equivalent DuckDB SQL for the oracle-differential check.
+/** Driver contract — one registry row per implemented operator (SURVEY.md
+  * §2): its builder, its equivalent DuckDB SQL for the oracle-differential
+  * check, and its per-row facts ([[QueryRow]]).
   *
   * Conventions for oracle stability:
   *  - every column aliased identically in Spark and SQL;
@@ -40,6 +41,35 @@ object SparkEntry {
   private val revenueSql =
     "sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))"
   private val revenueVarcharSql = s"CAST($revenueSql AS VARCHAR)"
+
+  /** lineitem all-string rendering, matching etl.IngestOps.cellToString. */
+  private val lineitemAllStringSql: String = {
+    val cols = Seq(
+      "l_orderkey" -> "i", "l_partkey" -> "i", "l_suppkey" -> "i",
+      "l_linenumber" -> "i", "l_quantity" -> "d", "l_extendedprice" -> "d",
+      "l_discount" -> "d", "l_tax" -> "d", "l_returnflag" -> "s",
+      "l_linestatus" -> "s", "l_shipdate" -> "ts")
+    val sel = cols.map {
+      case (c, "d") => s"CAST(CAST($c AS DECIMAL(18,2)) AS VARCHAR) AS $c"
+      case (c, "ts") => s"strftime($c, '%Y-%m-%d %H:%M:%S') AS $c"
+      case (c, _) => s"CAST($c AS VARCHAR) AS $c"
+    }.mkString(",\n  ")
+    s"SELECT\n  $sel\nFROM lineitem ORDER BY lineitem.l_orderkey, lineitem.l_linenumber"
+  }
+
+  private val ordersAllStringJsonSql: String = {
+    val fields = Seq(
+      "o_orderkey" -> "i", "o_custkey" -> "i", "o_orderstatus" -> "s",
+      "o_totalprice" -> "d", "o_orderdate" -> "ts", "o_orderpriority" -> "s")
+    val packed = fields.map {
+      case (c, "d") => s"$c := CAST(CAST($c AS DECIMAL(18,2)) AS VARCHAR)"
+      case (c, "ts") => s"$c := strftime($c, '%Y-%m-%d %H:%M:%S')"
+      case (c, _) => s"$c := CAST($c AS VARCHAR)"
+    }.mkString(", ")
+    s"""SELECT CAST(o_orderkey AS BIGINT) AS okey,
+       |  CAST(to_json(struct_pack($packed)) AS VARCHAR) AS line
+       |FROM orders ORDER BY okey""".stripMargin
+  }
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     IngestOps.table(s, dir, name)
@@ -118,93 +148,144 @@ object SparkEntry {
     }
   }
 
-  /** The streaming-family row names — the rows [[replayStream]] (or the
-    * emissions memo, for the update-mode row) harnesses. Bench primes
-    * these once per run at the measured SF so every timed sample measures
-    * the steady-state replay read; a spec asserts the set matches the
-    * queries map. */
-  val streamingQueries: Set[String] = Set(
-    "events_stream_sessionize", "events_stream_sliding",
-    "events_stream_windowed_dedup", "events_stream_closed_sessions",
-    "docs_stream_curate", "docs_stream_dedup_bounded",
-    "docs_stream_neardup_lsh", "docs_stream_neardup_rescore",
-    "docs_stream_vs_corpus_exact", "docs_stream_vs_corpus_neardup",
-    "docs_stream_vs_corpus_rescore",
-    "events_stream_tumbling", "events_stream_tumbling_update",
-    "events_stream_distinct_users", "events_stream_range_join",
-    "events_stream_funnel", "events_stream_funnel_o1",
-    "events_stream_user_totals", "events_stream_quantile_profile",
-    "events_stream_dedup", "events_stream_join_inner",
-    "events_stream_join_semi", "events_stream_blocklist",
-    "events_stream_enrich", "events_stream_join_outer",
-    "events_stream_join_full")
+  /** One row of the contract.
+    *
+    * @param name     the row's name: its output directory in a Verify dump
+    *                 and its key in every view below
+    * @param build    the row's DataFrame over a fixture directory
+    * @param sqlText  the equivalent DuckDB query over the same parquet
+    *                 tables; by-name, so the registry does not hold the
+    *                 ~0.9 MB of oracle text for the life of every JVM that
+    *                 only builds rows
+    * @param accepted the plan smells PlanAudit accepts for this row (a
+    *                 '+'-separated set, each member expected) and why
+    * @param benched  whether Bench times the row
+    */
+  final class QueryRow(val name: String, val build: (SparkSession, String) => DataFrame,
+      sqlText: => String, val accepted: Option[(String, String)], val benched: Boolean) {
+    def sql: String = sqlText
+    /** Streaming rows are the ones [[replayStream]] (or, for the update-mode
+      * row, the emissions memo) harnesses; Bench primes them once per run
+      * at the measured SF so every timed sample measures the steady-state
+      * replay read. */
+    def streaming: Boolean = name.contains("_stream")
+  }
+  object QueryRow {
+    def apply(name: String, build: (SparkSession, String) => DataFrame, sql: => String,
+        accepted: Option[(String, String)] = None, benched: Boolean = true): QueryRow =
+      new QueryRow(name, build, sql, accepted, benched)
+  }
+
+  // Views of the rows. The maps are immutable hash maps: their iteration
+  // order is a function of the key set, not of the order of the rows.
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    rows.map(r => r.name -> r.build).toMap
+  def oracleSql: Map[String, String] = rows.map(r => r.name -> r.sql).toMap
+  lazy val streamingQueries: Set[String] = rows.filter(_.streaming).map(_.name).toSet
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   // =====================================================================
-  // Queries
+  // Rows
   // =====================================================================
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every row of the contract, the one list Verify, Bench and PlanAudit
+    * read. Building it fails on a duplicate name. */
+  lazy val rows: Seq[QueryRow] = distinctNames(Seq(
     // ---- ingest / ETL parity (SURVEY.md §2.1–§2.3) ----------------------
-    "s1_scan_allstring" -> ((s, dir) =>
-      IngestOps.allString(t(s, dir, "lineitem").orderBy("l_orderkey", "l_linenumber"))),
+    QueryRow("s1_scan_allstring", (s, dir) =>
+      IngestOps.allString(t(s, dir, "lineitem").orderBy("l_orderkey", "l_linenumber")),
+      lineitemAllStringSql),
 
-    "s3_sheet_selection" -> ((s, dir) =>
+    QueryRow("s3_sheet_selection", (s, dir) =>
       IngestOps.resolveSheet(s, dir, "ORDERS")
         .agg(count(lit(1)).as("n_rows"))
-        .select(lit("orders").as("sheet"), col("n_rows"))),
+        .select(lit("orders").as("sheet"), col("n_rows")),
+      "SELECT 'orders' AS sheet, CAST(count(*) AS BIGINT) AS n_rows FROM orders"),
 
-    "s4_header_fallback" -> ((s, dir) => {
+    QueryRow("s4_header_fallback", (s, dir) => {
       // simulate a headerless sheet, apply a 2-name header to 3 columns:
       // the overflow column falls back to its 0-based index as name
       val raw = t(s, dir, "nation").toDF("_c0", "_c1", "_c2")
       IngestOps.applyHeader(raw, Seq("nation_key", "nation_name")).orderBy("nation_key")
-    }),
+    },
+      """SELECT n_nationkey AS nation_key, n_name AS nation_name, n_regionkey AS "2"
+        |FROM nation ORDER BY nation_key""".stripMargin),
 
-    "t2_blank_normalization" -> ((s, dir) =>
+    QueryRow("t2_blank_normalization", (s, dir) =>
       IngestOps.dropEmptyRows(IngestOps.blanksForNulls(t(s, dir, "documents")))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT * FROM (
+        |  SELECT doc_id, coalesce(text, '') AS text, coalesce(lang, '') AS lang,
+        |         coalesce(source, '') AS source, n_chars
+        |  FROM documents)
+        |WHERE doc_id IS NOT NULL OR (text IS NOT NULL AND trim(text) <> '')
+        |   OR (lang IS NOT NULL AND trim(lang) <> '')
+        |   OR (source IS NOT NULL AND trim(source) <> '') OR n_chars IS NOT NULL
+        |ORDER BY doc_id""".stripMargin),
 
-    "t3_skip_rows" -> ((s, dir) =>
+    QueryRow("t3_skip_rows", (s, dir) =>
       IngestOps.skipRows(t(s, dir, "events").select("event_id", "event_type"),
-        100, col("event_id")).orderBy("event_id")),
+        100, col("event_id")).orderBy("event_id"),
+      """SELECT event_id, event_type FROM (
+        |  SELECT event_id, event_type, row_number() OVER (ORDER BY event_id) AS pos
+        |  FROM events)
+        |WHERE pos > 100 ORDER BY event_id""".stripMargin),
 
-    "t4_projection_rename" -> ((s, dir) =>
+    QueryRow("t4_projection_rename", (s, dir) =>
       t(s, dir, "lineitem")
         .select(col("l_orderkey").as("okey"), col("l_linenumber").as("line_no"),
           col("l_quantity").as("qty"))
-        .orderBy("okey", "line_no")),
+        .orderBy("okey", "line_no"),
+      """SELECT l_orderkey AS okey, l_linenumber AS line_no, l_quantity AS qty
+        |FROM lineitem ORDER BY okey, line_no""".stripMargin),
 
-    "t5_cell_format" -> ((s, dir) =>
+    QueryRow("t5_cell_format", (s, dir) =>
       t(s, dir, "orders").select(
         col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("odate_str"),
         d2(col("o_totalprice")).cast("string").as("price_str"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS odate_str,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS price_str
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
-    "t6_row_metrics" -> ((s, dir) =>
+    QueryRow("t6_row_metrics", (s, dir) =>
       t(s, dir, "lineitem").agg(
         count(lit(1)).as("n_rows"),
         countDistinct(col("l_orderkey")).as("n_orders"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_returned"))),
+        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_returned")),
+      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
+        |  CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_returned
+        |FROM lineitem""".stripMargin,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of 1-row aggregates")),
 
-    "k1_ndjson_lines" -> ((s, dir) => {
+    QueryRow("k1_ndjson_lines", (s, dir) => {
       val o = IngestOps.allString(t(s, dir, "orders"))
       o.select(col("o_orderkey").cast("long").as("okey"),
           to_json(struct(o.columns.map(col).toSeq: _*)).as("line"))
         .orderBy("okey")
-    }),
+    },
+      ordersAllStringJsonSql),
 
-    "k2_csv_chunks" -> ((s, dir) =>
-      Sinks.chunkStats(t(s, dir, "orders"), 1000, col("o_orderkey")).orderBy("chunk_id")),
+    QueryRow("k2_csv_chunks", (s, dir) =>
+      Sinks.chunkStats(t(s, dir, "orders"), 1000, col("o_orderkey")).orderBy("chunk_id"),
+      """SELECT chunk_id, CAST(count(*) AS BIGINT) AS n_rows,
+        |  min(rn) AS min_rn, max(rn) AS max_rn
+        |FROM (
+        |  SELECT CAST((row_number() OVER (ORDER BY o_orderkey) - 1) // 1000 AS BIGINT) AS chunk_id,
+        |         CAST(row_number() OVER (ORDER BY o_orderkey) AS BIGINT) AS rn
+        |  FROM orders)
+        |GROUP BY chunk_id ORDER BY chunk_id""".stripMargin),
 
     // C1..K1 end-to-end through Convert.run: orders → ndjson sink on disk,
     // then the sink's ACTUAL bytes read back line-by-line — each line must
     // byte-match the oracle's independent JSON rendering of the same row
-    "convert_e2e" -> ((s, dir) => {
+    QueryRow("convert_e2e", (s, dir) => {
       val out = s"${graft.etl.ScratchDirs.scratchOutputDir}/graft_convert_e2e_" +
         new java.io.File(dir).getName
       graft.etl.Convert.run(s, graft.etl.EngineConfig(
@@ -214,7 +295,9 @@ object SparkEntry {
         .select(get_json_object(col("value"), "$.o_orderkey").cast("long").as("okey"),
           col("value").as("line"))
         .orderBy("okey")
-    }),
+    },
+      // the written sink bytes equal the declarative rendering — same oracle
+      ordersAllStringJsonSql),
 
     // K3/K4 end-to-end through Convert.run: orders → single-file JSON-ARRAY
     // sink on disk, then the sink's ACTUAL file read back. The query itself
@@ -225,7 +308,7 @@ object SparkEntry {
     // independent rendering, and `file_bytes` (the file's true size) must
     // equal the oracle's 2 + Σ|element| + (n−1) — so the framing is also
     // byte-checked by DuckDB, not just driver-asserted.
-    "jsonarray_e2e" -> ((s, dir) => {
+    QueryRow("jsonarray_e2e", (s, dir) => {
       val out = s"${graft.etl.ScratchDirs.scratchOutputDir}/graft_jsonarray_e2e_" +
         new java.io.File(dir).getName + ".json"
       val res = graft.etl.Convert.run(s, graft.etl.EngineConfig(
@@ -257,14 +340,22 @@ object SparkEntry {
           to_json(struct(orderCols.map(col).toSeq: _*)).as("line"))
         .withColumn("file_bytes", lit(bytes))
         .orderBy("okey")
-    }),
+    },
+      // K3 framing arithmetic: a compact '[e1,e2,…,en]' document is exactly
+      // 2 + Σ|element| + (n−1) bytes — the oracle recomputes the sink file's
+      // true size from the element renderings alone
+      s"""WITH lines AS (${ordersAllStringJsonSql})
+         |SELECT okey, line,
+         |  CAST((SELECT 2 + sum(length(line)) + count(*) - 1 FROM lines)
+         |    AS BIGINT) AS file_bytes
+         |FROM lines ORDER BY okey""".stripMargin),
 
     // the full Excel container roundtrip: orders → formatted all-string →
     // distributed XlsxSink (one workbook per partition, inlineStr cells) →
     // read back through the XlsxSource DataSource V2 → must equal the
     // oracle's independent all-string rendering of the same table. This is
     // the query that oracle-checks the xlsx source+sink pair end-to-end.
-    "xlsx_roundtrip" -> ((s, dir) => {
+    QueryRow("xlsx_roundtrip", (s, dir) => {
       val out = s"${graft.etl.ScratchDirs.scratchOutputDir}/graft_xlsx_roundtrip_" +
         new java.io.File(dir).getName
       val orders = IngestOps.allString(t(s, dir, "orders"))
@@ -272,27 +363,45 @@ object SparkEntry {
         sheetName = "orders", overwrite = true)
       s.read.format("xlsx").option("sheetName", "orders").load(out)
         .orderBy(col("o_orderkey").cast("long"))
-    }),
+    },
+      // what went out through the xlsx container must equal a direct
+      // all-string render of the table (same per-type rules as cellToString)
+      """SELECT CAST(o_orderkey AS VARCHAR) AS o_orderkey,
+        |  CAST(o_custkey AS VARCHAR) AS o_custkey,
+        |  o_orderstatus,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS o_totalprice,
+        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+        |  o_orderpriority
+        |FROM orders ORDER BY orders.o_orderkey""".stripMargin),
 
     // columnar-format roundtrip through Spark's built-in ORC source/sink:
     // the same all-string rendering xlsx_roundtrip checks, written as a
     // partitioned ORC dataset and read back — must equal the oracle's
     // independent all-string render (shared oracle discipline; proves the
     // second columnar format end-to-end, not just parquet)
-    "orc_roundtrip" -> ((s, dir) => {
+    QueryRow("orc_roundtrip", (s, dir) => {
       val out = s"${graft.etl.ScratchDirs.scratchOutputDir}/graft_orc_roundtrip_" +
         new java.io.File(dir).getName
       val orders = IngestOps.allString(t(s, dir, "orders"))
       orders.repartition(4).write.mode("overwrite").orc(out)
       s.read.orc(out).orderBy(col("o_orderkey").cast("long"))
-    }),
+    },
+      // what went out through the ORC dataset must equal the same independent
+      // all-string render (the xlsx_roundtrip oracle, shared discipline)
+      """SELECT CAST(o_orderkey AS VARCHAR) AS o_orderkey,
+        |  CAST(o_custkey AS VARCHAR) AS o_custkey,
+        |  o_orderstatus,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS o_totalprice,
+        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+        |  o_orderpriority
+        |FROM orders ORDER BY orders.o_orderkey""".stripMargin),
 
     // row-format roundtrip through Spark's built-in CSV source/sink: the
     // same all-string rendering, written as a headered CSV dataset and read
     // back with an explicit all-string schema (no inference) — exercises
     // quote/escape fidelity in the text path; emptyValue pinned so "" stays
     // "" instead of null on the way back
-    "csv_roundtrip" -> ((s, dir) => {
+    QueryRow("csv_roundtrip", (s, dir) => {
       val out = s"${graft.etl.ScratchDirs.scratchOutputDir}/graft_csv_roundtrip_" +
         new java.io.File(dir).getName
       val orders = IngestOps.allString(t(s, dir, "orders"))
@@ -302,15 +411,26 @@ object SparkEntry {
         org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
       s.read.option("header", "true").schema(schema).csv(out)
         .orderBy(col("o_orderkey").cast("long"))
-    }),
+    },
+      // what went out through the CSV dataset must equal the same independent
+      // all-string render (the xlsx_roundtrip oracle, shared discipline)
+      """SELECT CAST(o_orderkey AS VARCHAR) AS o_orderkey,
+        |  CAST(o_custkey AS VARCHAR) AS o_custkey,
+        |  o_orderstatus,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS o_totalprice,
+        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+        |  o_orderpriority
+        |FROM orders ORDER BY orders.o_orderkey""".stripMargin),
 
-    "c4_json_tolerant" -> ((s, dir) =>
+    QueryRow("c4_json_tolerant", (s, dir) =>
       t(s, dir, "events")
         .select(col("event_id"), get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+        |FROM events ORDER BY event_id""".stripMargin),
 
     // ---- relational core on top of the ingested frames (SURVEY.md §2.5) --
-    "q1_pricing_summary" -> ((s, dir) =>
+    QueryRow("q1_pricing_summary", (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -318,9 +438,16 @@ object SparkEntry {
           dstr(sum(d2(col("l_extendedprice")))).as("sum_base_price"),
           dstr(revenue()).as("sum_disc_price"),
           count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus"),
+      s"""SELECT l_returnflag, l_linestatus,
+         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
+         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS sum_base_price,
+         |  $revenueVarcharSql AS sum_disc_price,
+         |  CAST(count(*) AS BIGINT) AS count_order
+         |FROM lineitem GROUP BY l_returnflag, l_linestatus
+         |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q3_top_revenue" -> ((s, dir) => {
+    QueryRow("q3_top_revenue", (s, dir) => {
       val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       val o = t(s, dir, "orders")
       val l = t(s, dir, "lineitem")
@@ -337,9 +464,17 @@ object SparkEntry {
         .select(col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("o_orderdate"),
           dstr(col("revenue")).as("revenue"))
-    }),
+    },
+      s"""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+         |  $revenueVarcharSql AS revenue
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN customer ON o_custkey = c_custkey
+         |WHERE c_mktsegment = 'BUILDING'
+         |GROUP BY o_orderkey, o_orderdate
+         |ORDER BY $revenueSql DESC, o_orderkey LIMIT 10""".stripMargin),
 
-    "q5_local_supplier" -> ((s, dir) => {
+    QueryRow("q5_local_supplier", (s, dir) => {
       val r = t(s, dir, "region").filter(col("r_name") === "ASIA")
       val n = t(s, dir, "nation")
       val c = t(s, dir, "customer")
@@ -355,17 +490,31 @@ object SparkEntry {
         .groupBy("n_name")
         .agg(dstr(revenue()).as("revenue"))
         .orderBy("n_name")
-    }),
+    },
+      s"""SELECT n_name, $revenueVarcharSql AS revenue
+         |FROM lineitem
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN supplier ON l_suppkey = s_suppkey
+         |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
+         |JOIN nation ON c_nationkey = n_nationkey
+         |JOIN region ON n_regionkey = r_regionkey
+         |WHERE r_name = 'ASIA'
+         |GROUP BY n_name ORDER BY n_name""".stripMargin),
 
-    "q6_filtered_agg" -> ((s, dir) =>
+    QueryRow("q6_filtered_agg", (s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz") &&
           col("l_quantity") < 24)
         .agg(dstr(sum(d2(col("l_extendedprice")) * d2(col("l_discount")))).as("revenue"),
-          count(lit(1)).as("n_rows"))),
+          count(lit(1)).as("n_rows")),
+      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS VARCHAR) AS revenue,
+        |  CAST(count(*) AS BIGINT) AS n_rows
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_quantity < 24""".stripMargin),
 
-    "q_semi_anti" -> ((s, dir) => {
+    QueryRow("q_semi_anti", (s, dir) => {
       val c = t(s, dir, "customer")
       val o = t(s, dir, "orders")
       val withOrders = c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
@@ -373,14 +522,21 @@ object SparkEntry {
       val withoutOrders = c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
         .agg(count(lit(1)).as("n_without_orders"))
       withOrders.crossJoin(withoutOrders)
-    }),
+    },
+      """SELECT
+        |  (SELECT CAST(count(*) AS BIGINT) FROM customer
+        |    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_with_orders,
+        |  (SELECT CAST(count(*) AS BIGINT) FROM customer
+        |    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_without_orders""".stripMargin,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the two 1-row semi/anti count aggregates")),
 
     // correlated scalar subqueries (Catalyst decorrelates to aggregate+join;
     // see PLANS.md): orders pricier than their customer's average. Exactness
     // trick: compare price*count > sum in DECIMAL — no division, no AVG
     // (Spark and DuckDB disagree on AVG(DECIMAL) result types), no
     // double-summation order dependence.
-    "q_scalar_subquery" -> ((s, dir) => {
+    QueryRow("q_scalar_subquery", (s, dir) => {
       t(s, dir, "orders").createOrReplaceTempView("orders_v")
       s.sql(
         """SELECT o.o_orderkey, o.o_custkey FROM orders_v o
@@ -389,12 +545,20 @@ object SparkEntry {
           |  > (SELECT SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) FROM orders_v i
           |     WHERE i.o_custkey = o.o_custkey)
           |ORDER BY o.o_orderkey""".stripMargin)
-    }),
+    },
+      """SELECT o.o_orderkey, o.o_custkey FROM orders o
+        |WHERE CAST(o.o_totalprice AS DECIMAL(18,2)) *
+        |    (SELECT COUNT(*) FROM orders i WHERE i.o_custkey = o.o_custkey)
+        |  > (SELECT SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) FROM orders i
+        |     WHERE i.o_custkey = o.o_custkey)
+        |ORDER BY o.o_orderkey""".stripMargin,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of a 1-row aggregate")),
 
     // correlated EXISTS / NOT EXISTS (SQL surface): Catalyst decorrelates
     // both to one semi and one anti join on s_suppkey — no per-row subquery
     // execution survives in the plan
-    "q_exists_correlated" -> ((s, dir) => {
+    QueryRow("q_exists_correlated", (s, dir) => {
       t(s, dir, "supplier").createOrReplaceTempView("exc_supplier")
       t(s, dir, "lineitem").createOrReplaceTempView("exc_lineitem")
       s.sql(
@@ -405,12 +569,19 @@ object SparkEntry {
           |                  WHERE l2.l_suppkey = s.s_suppkey
           |                    AND l2.l_returnflag = 'R' AND l2.l_quantity >= 49.5)
           |ORDER BY s_suppkey""".stripMargin)
-    }),
+    },
+      """SELECT s_suppkey, s_nationkey FROM supplier s
+        |WHERE EXISTS (SELECT 1 FROM lineitem l
+        |              WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity >= 48)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l2
+        |                  WHERE l2.l_suppkey = s.s_suppkey
+        |                    AND l2.l_returnflag = 'R' AND l2.l_quantity >= 49.5)
+        |ORDER BY s_suppkey""".stripMargin),
 
     // NOT IN over a nullable subquery column: Spark's only correct plan is
     // the broadcast null-aware anti join (three-valued NOT IN semantics
     // can't be a plain hash anti join unless non-nullability is proven)
-    "q_not_in_nullaware" -> ((s, dir) => {
+    QueryRow("q_not_in_nullaware", (s, dir) => {
       t(s, dir, "orders").createOrReplaceTempView("nin_orders")
       t(s, dir, "customer").createOrReplaceTempView("nin_customer")
       s.sql(
@@ -418,11 +589,15 @@ object SparkEntry {
           |WHERE o_custkey NOT IN
           |  (SELECT c_custkey FROM nin_customer WHERE c_acctbal > 9000)
           |ORDER BY o_orderkey""".stripMargin)
-    }),
+    },
+      """SELECT o_orderkey, o_custkey FROM orders
+        |WHERE o_custkey NOT IN
+        |  (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
+        |ORDER BY o_orderkey""".stripMargin),
 
     // LATERAL correlated subquery with LIMIT (top-2 suppliers per nation):
     // Catalyst decorrelates the per-row LIMIT into a ranked window join
-    "q_lateral_topn" -> ((s, dir) => {
+    QueryRow("q_lateral_topn", (s, dir) => {
       t(s, dir, "nation").createOrReplaceTempView("lat_nation")
       t(s, dir, "supplier").createOrReplaceTempView("lat_supplier")
       s.sql(
@@ -431,11 +606,16 @@ object SparkEntry {
           |         WHERE s.s_nationkey = n.n_nationkey
           |         ORDER BY s_suppkey LIMIT 2) t
           |ORDER BY n_nationkey, s_suppkey""".stripMargin)
-    }),
+    },
+      """SELECT n_nationkey, t.s_suppkey FROM nation n,
+        |LATERAL (SELECT s_suppkey FROM supplier s
+        |         WHERE s.s_nationkey = n.n_nationkey
+        |         ORDER BY s_suppkey LIMIT 2) t
+        |ORDER BY n_nationkey, s_suppkey""".stripMargin),
 
     // SQL-standard aggregate FILTER clause (selective aggregation without
     // CASE scaffolding); one scan, one aggregation
-    "q_agg_filter" -> ((s, dir) => {
+    QueryRow("q_agg_filter", (s, dir) => {
       t(s, dir, "lineitem").createOrReplaceTempView("af_lineitem")
       s.sql(
         """SELECT l_linestatus,
@@ -444,38 +624,66 @@ object SparkEntry {
           |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
           |    FILTER (WHERE l_tax > 0.04) AS STRING) AS qty_taxed
           |FROM af_lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin)
-    }),
+    },
+      """SELECT l_linestatus,
+        |  CAST(count(*) FILTER (WHERE l_returnflag = 'R') AS BIGINT) AS n_returned,
+        |  CAST(count(*) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS n_discounted,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
+        |    FILTER (WHERE l_tax > 0.04) AS VARCHAR) AS qty_taxed
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
 
-    "q_rollup" -> ((s, dir) =>
+    QueryRow("q_rollup", (s, dir) =>
       t(s, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(dstr(sum(d2(col("l_quantity")))).as("sum_qty"), count(lit(1)).as("count_order"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
+        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
+        |  CAST(count(*) AS BIGINT) AS count_order
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
 
-    "q_cube" -> ((s, dir) =>
+    QueryRow("q_cube", (s, dir) =>
       t(s, dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
         .agg(dstr(sum(d2(col("l_quantity")))).as("sum_qty"), count(lit(1)).as("count_order"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
+        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
+        |  CAST(count(*) AS BIGINT) AS count_order
+        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
 
-    "q_grouping_sets" -> ((s, dir) =>
+    QueryRow("q_grouping_sets", (s, dir) =>
       t(s, dir, "lineitem")
         .groupingSets(
           Seq(Seq(col("l_returnflag"), col("l_linestatus")), Seq(col("l_returnflag")), Seq()),
           col("l_returnflag"), col("l_linestatus"))
         .agg(dstr(sum(d2(col("l_quantity")))).as("sum_qty"), count(lit(1)).as("count_order"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))),
+        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
+        |  CAST(count(*) AS BIGINT) AS count_order
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
 
-    "q_datetime_parts" -> ((s, dir) =>
+    QueryRow("q_datetime_parts", (s, dir) =>
       t(s, dir, "orders").select(
         col("o_orderkey"),
         year(col("o_orderdate")).cast("long").as("y"),
         month(col("o_orderdate")).cast("long").as("m"),
         dayofmonth(col("o_orderdate")).cast("long").as("d"),
         quarter(col("o_orderdate")).cast("long").as("q"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """SELECT o_orderkey,
+        |  CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS y,
+        |  CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS m,
+        |  CAST(EXTRACT(day FROM o_orderdate) AS BIGINT) AS d,
+        |  CAST(EXTRACT(quarter FROM o_orderdate) AS BIGINT) AS q
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
-    "q_string_funcs" -> ((s, dir) =>
+    QueryRow("q_string_funcs", (s, dir) =>
       t(s, dir, "customer").select(
         col("c_custkey"),
         upper(col("c_name")).as("uname"),
@@ -483,17 +691,26 @@ object SparkEntry {
         regexp_replace(col("c_name"), "#", "-").as("dashed"),
         length(col("c_name")).cast("long").as("name_len"),
         reverse(col("c_mktsegment")).as("rseg"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      """SELECT c_custkey, upper(c_name) AS uname, substr(c_name, 1, 8) AS prefix,
+        |  replace(c_name, '#', '-') AS dashed,
+        |  CAST(length(c_name) AS BIGINT) AS name_len,
+        |  reverse(c_mktsegment) AS rseg
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q_part_stats" -> ((s, dir) =>
+    QueryRow("q_part_stats", (s, dir) =>
       t(s, dir, "part")
         .groupBy("p_brand", "p_type")
         .agg(count(lit(1)).as("n_parts"),
           dstr(sum(d2(col("p_retailprice")))).as("sum_price"),
           max("p_size").as("max_size"))
-        .orderBy("p_brand", "p_type")),
+        .orderBy("p_brand", "p_type"),
+      """SELECT p_brand, p_type, CAST(count(*) AS BIGINT) AS n_parts,
+        |  CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS VARCHAR) AS sum_price,
+        |  max(p_size) AS max_size
+        |FROM part GROUP BY p_brand, p_type ORDER BY p_brand, p_type""".stripMargin),
 
-    "q14_promo_share" -> ((s, dir) => {
+    QueryRow("q14_promo_share", (s, dir) => {
       val l = t(s, dir, "lineitem")
       val p = t(s, dir, "part")
       l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
@@ -501,12 +718,18 @@ object SparkEntry {
           dstr(sum(when(col("p_type").startsWith("ECONOMY"),
             d2(col("l_extendedprice")) * (d2(lit(1)) - d2(col("l_discount")))))).as("economy_revenue"),
           dstr(revenue()).as("total_revenue"))
-    }),
+    },
+      s"""SELECT
+         |  CAST(sum(CASE WHEN p_type LIKE 'ECONOMY%' THEN
+         |    CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
+         |  END) AS VARCHAR) AS economy_revenue,
+         |  $revenueVarcharSql AS total_revenue
+         |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin),
 
     // TPC-H Q7 shape (volume shipping between a nation pair): 6-way join
     // with a DISJUNCTIVE cross-nation condition, revenue per (supplier
     // nation, customer nation, ship year)
-    "q7_nation_volume" -> ((s, dir) => {
+    QueryRow("q7_nation_volume", (s, dir) => {
       val l = t(s, dir, "lineitem")
       val o = t(s, dir, "orders")
       val c = t(s, dir, "customer")
@@ -524,12 +747,25 @@ object SparkEntry {
           year(col("l_shipdate")).cast("long").as("ship_year"))
         .agg(dstr(revenue()).as("revenue"))
         .orderBy("supp_nation", "cust_nation", "ship_year")
-    }),
+    },
+      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+         |  CAST(year(l_shipdate) AS BIGINT) AS ship_year,
+         |  $revenueVarcharSql AS revenue
+         |FROM lineitem
+         |JOIN supplier ON l_suppkey = s_suppkey
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN customer ON o_custkey = c_custkey
+         |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+         |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+         |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+         |GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
+         |ORDER BY supp_nation, cust_nation, ship_year""".stripMargin),
 
     // TPC-H Q10 shape (returned-item revenue report): 4-way join, revenue
     // aggregation grouped on the wide customer key set, top 20. Revenue in
     // exact DECIMAL rendered to string; ordering ties broken by c_custkey.
-    "q10_returned_items" -> ((s, dir) => {
+    QueryRow("q10_returned_items", (s, dir) => {
       val c = t(s, dir, "customer")
       val o = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1996-01-01") &&
@@ -546,9 +782,22 @@ object SparkEntry {
         .select(col("c_custkey"), col("c_name"), dstr(col("_r")).as("revenue"),
           col("c_acctbal"), col("n_name"), col("c_mktsegment"))
         .orderBy("c_custkey")
-    }),
+    },
+      s"""SELECT c_custkey, c_name, CAST(rev AS VARCHAR) AS revenue,
+         |  c_acctbal, n_name, c_mktsegment
+         |FROM (
+         |  SELECT c_custkey, c_name, c_acctbal, n_name, c_mktsegment, $revenueSql AS rev
+         |  FROM customer
+         |  JOIN orders ON c_custkey = o_custkey
+         |  JOIN lineitem ON o_orderkey = l_orderkey
+         |  JOIN nation ON c_nationkey = n_nationkey
+         |  WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-07-01'
+         |    AND l_returnflag = 'R'
+         |  GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
+         |  ORDER BY rev DESC, c_custkey LIMIT 20)
+         |ORDER BY c_custkey""".stripMargin),
 
-    "q13_custdist" -> ((s, dir) => {
+    QueryRow("q13_custdist", (s, dir) => {
       val c = t(s, dir, "customer")
       val o = t(s, dir, "orders")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_outer")
@@ -557,14 +806,19 @@ object SparkEntry {
         .groupBy("c_count")
         .agg(count(lit(1)).as("custdist"))
         .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
+    },
+      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist FROM (
+        |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
+        |  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
+        |  GROUP BY c_custkey)
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
 
     // TPC-H Q18 shape (large-volume orders): the group-by-HAVING subquery
     // feeds a join back to orders+customer — aggregation as a join input,
     // the "find heavy groups, then enrich them" pattern. The HAVING filter
     // reduces the subquery to a tiny relation BEFORE the join (AQE can then
     // broadcast it), so the expensive side is one lineitem aggregation.
-    "q18_large_orders" -> ((s, dir) => {
+    QueryRow("q18_large_orders", (s, dir) => {
       val big = t(s, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(sum(d2(col("l_quantity"))).as("_sq"))
@@ -577,7 +831,17 @@ object SparkEntry {
           dstr(d2(col("o_totalprice"))).as("total_price"),
           dstr(col("_sq")).as("sum_qty"))
         .orderBy("o_orderkey")
-    }),
+    },
+      """SELECT c_name, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS odate,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS total_price,
+        |  CAST(sq AS VARCHAR) AS sum_qty
+        |FROM orders
+        |JOIN (SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
+        |      FROM lineitem GROUP BY l_orderkey
+        |      HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300) big
+        |  ON o_orderkey = big.l_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin),
 
     // TPC-H Q19 shape (disjunctive predicate join): an OR-of-ANDs predicate
     // spanning both join sides. Catalyst extracts the common join key as an
@@ -585,7 +849,7 @@ object SparkEntry {
     // the part-only conjuncts (p_size >= 1) are pushed below the join — the
     // point of the shape is that the plan stays a hash join, not a
     // nested-loop over the OR.
-    "q19_disjunctive" -> ((s, dir) => {
+    QueryRow("q19_disjunctive", (s, dir) => {
       val l = t(s, dir, "lineitem")
       val p = t(s, dir, "part")
       l.join(p, col("l_partkey") === col("p_partkey"))
@@ -598,13 +862,22 @@ object SparkEntry {
             col("l_quantity").between(20, 30)))
         .agg(dstr(revenue()).as("revenue"),
           count(lit(1)).as("n_lines"))
-    }),
+    },
+      s"""SELECT $revenueVarcharSql AS revenue,
+        |  CAST(count(*) AS BIGINT) AS n_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+        |       AND l_quantity BETWEEN 1 AND 11)
+        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
+        |       AND l_quantity BETWEEN 10 AND 20)
+        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
+        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin),
 
     // TPC-H Q4 shape (order-priority checking): EXISTS with a correlated
     // date-arithmetic residual (late line: shipped >60 days after the order
     // date) → LeftSemi hash join on the order key with the non-equi term as
     // the join residual, then a tiny priority rollup.
-    "q4_order_priority" -> ((s, dir) => {
+    QueryRow("q4_order_priority", (s, dir) => {
       val o = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1997-01-01") &&
           col("o_orderdate") < lit("1997-07-01"))
@@ -614,14 +887,21 @@ object SparkEntry {
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("order_count"))
         .orderBy("o_orderpriority")
-    }),
+    },
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= DATE '1997-01-01' AND o_orderdate < DATE '1997-07-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey
+        |                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // TPC-H Q8 shape (national market share): 8-relation join where nation
     // appears in TWO roles (customer's region gate, supplier's share term),
     // conditional-sum ratio per order year. All small dims broadcast; the
     // only shuffles are the fact-fact joins and the final year rollup.
     // Both sums are exact decimals; the share is one double division.
-    "q8_market_share" -> ((s, dir) => {
+    QueryRow("q8_market_share", (s, dir) => {
       val o = t(s, dir, "orders")
       val c = t(s, dir, "customer")
       val sup = t(s, dir, "supplier")
@@ -646,13 +926,30 @@ object SparkEntry {
             .cast("double") / sum(vol).cast("double")).as("share"),
           count(lit(1)).as("n_lines"))
         .orderBy("o_year")
-    }),
+    },
+      s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+         |  CAST(sum(CASE WHEN n2.n_name = 'NATION_2'
+         |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
+         |      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
+         |    / CAST($revenueSql AS DOUBLE) AS share,
+         |  CAST(count(*) AS BIGINT) AS n_lines
+         |FROM lineitem
+         |JOIN part ON l_partkey = p_partkey
+         |JOIN orders ON l_orderkey = o_orderkey
+         |JOIN customer ON o_custkey = c_custkey
+         |JOIN nation n1 ON c_nationkey = n1.n_nationkey
+         |JOIN region ON n1.n_regionkey = r_regionkey
+         |JOIN supplier ON l_suppkey = s_suppkey
+         |JOIN nation n2 ON s_nationkey = n2.n_nationkey
+         |WHERE r_name = 'ASIA' AND p_type = 'STANDARD'
+         |GROUP BY year(o_orderdate)
+         |ORDER BY o_year""".stripMargin),
 
     // TPC-H Q12 shape (priority classes per line attribute): fact-fact join
     // with a pushed ship-date range, CASE-membership counted into two
     // columns in one pass (the fixtures carry no l_shipmode; l_returnflag
     // stands in as the grouping attribute — the shape is the point).
-    "q12_priority_class" -> ((s, dir) => {
+    QueryRow("q12_priority_class", (s, dir) => {
       val urgent = Seq("1-URGENT", "2-HIGH")
       val l = t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1998-01-01") &&
@@ -666,13 +963,19 @@ object SparkEntry {
           sum(when(!col("o_orderpriority").isin(urgent: _*), 1L).otherwise(0L))
             .as("low_line_count"))
         .orderBy("l_returnflag")
-    }),
+    },
+      """SELECT l_returnflag,
+        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE l_shipdate >= DATE '1998-01-01' AND l_shipdate < DATE '1999-01-01'
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // TPC-H Q15 shape (top supplier): an aggregated subquery used TWICE —
     // once as the join input, once reduced to its max — with the scalar max
     // broadcast back as an equality gate on an EXACT decimal (ties would
     // all surface; no epsilon games).
-    "q15_top_supplier" -> ((s, dir) => {
+    QueryRow("q15_top_supplier", (s, dir) => {
       val rev = t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("2000-01-01") &&
           col("l_shipdate") < lit("2000-07-01"))
@@ -684,14 +987,23 @@ object SparkEntry {
         .join(broadcast(mx), col("_tr") === col("_mx"))
         .select(col("s_suppkey"), col("s_name"), dstr(col("_tr")).as("total_revenue"))
         .orderBy("s_suppkey")
-    }),
+    },
+      s"""WITH revenue AS (
+         |  SELECT l_suppkey AS supplier_no, $revenueSql AS total_revenue
+         |  FROM lineitem
+         |  WHERE l_shipdate >= DATE '2000-01-01' AND l_shipdate < DATE '2000-07-01'
+         |  GROUP BY l_suppkey)
+         |SELECT s_suppkey, s_name, CAST(total_revenue AS VARCHAR) AS total_revenue
+         |FROM supplier JOIN revenue ON s_suppkey = supplier_no
+         |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
+         |ORDER BY s_suppkey""".stripMargin),
 
     // TPC-H Q17 shape (small-quantity revenue): correlated per-part AVG
     // subquery, decorrelated by hand into a partial-aggregated per-part
     // average joined back on the part key — only Brand#3's lineitems are
     // ever aggregated (the correlation key restricts l2 to those parts).
     // l_quantity is integral, so the double avg is an exact sum/count.
-    "q17_small_qty" -> ((s, dir) => {
+    QueryRow("q17_small_qty", (s, dir) => {
       val p = t(s, dir, "part").filter(col("p_brand") === "Brand#3").select("p_partkey")
       val lb = t(s, dir, "lineitem")
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
@@ -701,7 +1013,14 @@ object SparkEntry {
         .agg(
           (sum(d2(col("l_extendedprice"))).cast("double") / lit(7.0)).as("avg_yearly"),
           count(lit(1)).as("n_lines"))
-    }),
+    },
+      """SELECT
+        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
+        |  CAST(count(*) AS BIGINT) AS n_lines
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_brand = 'Brand#3'
+        |  AND l_quantity < (SELECT 0.2 * avg(l_quantity) FROM lineitem l2
+        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin),
 
     // TPC-H Q2 shape (min-cost supplier): the correlated scalar subquery on
     // an AGGREGATE ("suppliers whose cost equals the part's minimum cost"),
@@ -711,7 +1030,7 @@ object SparkEntry {
     // from lineitem — pure per-row double arithmetic (one IEEE mult+div,
     // no aggregation-order dependence), so min() and the equality compare
     // are bit-identical across engines.
-    "q2_min_cost_supplier" -> ((s, dir) => {
+    QueryRow("q2_min_cost_supplier", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window.partitionBy("p_partkey")
       val p = t(s, dir, "part").filter(col("p_size") === 15)
         .select("p_partkey", "p_brand")
@@ -727,7 +1046,23 @@ object SparkEntry {
         .select(col("p_partkey"), col("p_brand"), col("s_suppkey"), col("s_name"),
           col("s_acctbal"), col("best_unit_cost"))
         .orderBy("p_partkey", "s_suppkey")
-    }),
+    },
+      // Q2 shape: correlated scalar subquery on an aggregate (the classic
+      // decorrelation exercise) — per-row double unit cost, so min() and the
+      // equality gate are bit-identical to the Spark window-min form
+      """WITH m AS (
+        |  SELECT p_partkey, p_brand, l_suppkey,
+        |    min((l_extendedprice * (1.0 - l_discount)) / l_quantity)
+        |      AS best_unit_cost
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_size = 15
+        |  GROUP BY 1, 2, 3)
+        |SELECT m.p_partkey, p_brand, s_suppkey, s_name, s_acctbal,
+        |  best_unit_cost
+        |FROM m JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE best_unit_cost = (SELECT min(m2.best_unit_cost) FROM m m2
+        |                        WHERE m2.p_partkey = m.p_partkey)
+        |ORDER BY p_partkey, s_suppkey""".stripMargin),
 
     // TPC-H Q9 shape (profit by nation and year): the 5-way star join with
     // a LIKE-filtered part dimension; profit = exact-decimal revenue minus
@@ -735,7 +1070,7 @@ object SparkEntry {
     // the missing ps_supplycost), summed per (supplier nation, order
     // year). Both dimensions broadcast; the only shuffles are the
     // order-key join and the final small rollup.
-    "q9_profit_by_nation" -> ((s, dir) => {
+    QueryRow("q9_profit_by_nation", (s, dir) => {
       val p = t(s, dir, "part").filter(col("p_name").like("%gear%"))
         .select("p_partkey", "p_retailprice")
       val profit = d2(col("l_extendedprice")) * (d2(lit(1)) - d2(col("l_discount"))) -
@@ -750,7 +1085,20 @@ object SparkEntry {
         .agg(sum(profit).as("_p"))
         .select(col("nation"), col("o_year"), dstr(col("_p")).as("sum_profit"))
         .orderBy(col("nation"), col("o_year").desc)
-    }),
+    },
+      """SELECT n_name AS nation,
+        |  CAST(date_part('year', o_orderdate) AS BIGINT) AS o_year,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+        |      * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
+        |    - CAST(p_retailprice AS DECIMAL(18,2))
+        |      * CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_profit
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE p_name LIKE '%gear%'
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin),
 
     // TPC-H Q11 shape (important stock): per-key value vs a SCALAR subquery
     // over the same aggregate — the 1-row (total, count) aggregate rides
@@ -759,7 +1107,7 @@ object SparkEntry {
     // AVERAGE part value: keep v > 1.25·avg, compared in exact integer
     // decimals (v·n·4 > total·5 — no float fraction anywhere; selects the
     // same ~top-decile at every SF).
-    "q11_important_parts" -> ((s, dir) => {
+    QueryRow("q11_important_parts", (s, dir) => {
       val pv = t(s, dir, "lineitem").groupBy(col("l_partkey"))
         .agg(revenue().as("_v"))
       val tot = pv.agg(sum(col("_v")).as("_tot"), count(lit(1)).as("_n"))
@@ -767,7 +1115,22 @@ object SparkEntry {
         .filter(col("_v") * col("_n") * lit(4) > col("_tot") * lit(5))
         .orderBy(col("_v").desc, col("l_partkey"))
         .select(col("l_partkey").as("p_partkey"), dstr(col("_v")).as("part_value"))
-    }),
+    },
+      // Q11 shape: HAVING against scalar subqueries over the same aggregate;
+      // threshold = 1.25 x the average part value in exact integer decimals
+      // (v*n*4 > total*5), scale-invariant like TPC-H's 1/SF fraction
+      """WITH pv AS (
+        |  SELECT l_partkey AS p_partkey,
+        |    sum(CAST(l_extendedprice AS DECIMAL(18,2))
+        |      * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
+        |      AS v
+        |  FROM lineitem GROUP BY 1)
+        |SELECT p_partkey, CAST(v AS VARCHAR) AS part_value
+        |FROM pv
+        |WHERE v * (SELECT count(*) FROM pv) * 4 > (SELECT sum(v) FROM pv) * 5
+        |ORDER BY v DESC, p_partkey""".stripMargin,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row total-value aggregate (the TPC-H Q11 scalar-subquery shape)")),
 
     // TPC-H Q16 shape (supplier counts with an exclusion subquery): count
     // DISTINCT suppliers per (brand, type, size) bucket, excluding a
@@ -775,7 +1138,7 @@ object SparkEntry {
     // missing comment filter) — LeftAnti against the broadcast exclusion,
     // distinct-then-count so each (bucket, supplier) crosses the exchange
     // once.
-    "q16_supplier_counts" -> ((s, dir) => {
+    QueryRow("q16_supplier_counts", (s, dir) => {
       val bad = t(s, dir, "supplier").filter(col("s_acctbal") < 0)
         .select(col("s_suppkey").as("_bad"))
       val p = t(s, dir, "part")
@@ -790,7 +1153,16 @@ object SparkEntry {
         .agg(count(lit(1)).as("supplier_cnt"))
         .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
           col("p_size"))
-    }),
+    },
+      """SELECT p_brand, p_type, p_size,
+        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE p_type <> 'STANDARD'
+        |  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
+        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
+        |                        WHERE s_acctbal < 0)
+        |GROUP BY 1, 2, 3
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
 
     // TPC-H Q20 shape (excess-share suppliers): the nested correlated
     // quantifier — "suppliers who shipped more than a sixth of some part's
@@ -799,7 +1171,7 @@ object SparkEntry {
     // sf0.01, 10 at sf0.001) — decorrelated into one (part, supplier)
     // aggregate and a part-partitioned window total; the share compare is
     // exact decimal × 6, never a float fraction.
-    "q20_excess_shipments" -> ((s, dir) => {
+    QueryRow("q20_excess_shipments", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window.partitionBy("l_partkey")
       t(s, dir, "lineitem")
         .groupBy("l_partkey", "l_suppkey")
@@ -810,7 +1182,20 @@ object SparkEntry {
         .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"))
         .orderBy("s_suppkey")
-    }),
+    },
+      // Q20 shape: IN over a correlated aggregate comparison (share of a
+      // part's lifetime volume), exact decimal × 6
+      """WITH l00 AS (
+        |  SELECT l_partkey, l_suppkey,
+        |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
+        |  FROM lineitem
+        |  GROUP BY 1, 2)
+        |SELECT s_suppkey, s_name FROM supplier
+        |WHERE s_suppkey IN (
+        |  SELECT l_suppkey FROM l00 a
+        |  WHERE a.sq * 6 > (SELECT sum(b.sq) FROM l00 b
+        |                    WHERE b.l_partkey = a.l_partkey))
+        |ORDER BY s_suppkey""".stripMargin),
 
     // TPC-H Q21 shape (suppliers who kept the order waiting): the DOUBLE
     // correlated quantifier — EXISTS a co-supplier line on the same order,
@@ -818,7 +1203,7 @@ object SparkEntry {
     // pair on the order key with the supplier/date terms as residuals (the
     // fixtures carry no receipt/commit dates; "kept waiting" = this
     // supplier's line shipped strictly last among multi-supplier F-orders).
-    "q21_waiting_supplier" -> ((s, dir) => {
+    QueryRow("q21_waiting_supplier", (s, dir) => {
       val n = t(s, dir, "nation").filter(col("n_name").isin("NATION_1", "NATION_6"))
       val o = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
       val l1 = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
@@ -838,7 +1223,22 @@ object SparkEntry {
         .agg(count(lit(1)).as("numwait"))
         .orderBy(col("numwait").desc, col("s_name"))
         .limit(20)
-    }),
+    },
+      """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
+        |FROM supplier
+        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+        |JOIN orders ON o_orderkey = l1.l_orderkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE o_orderstatus = 'F' AND n_name IN ('NATION_1','NATION_6')
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey
+        |                    AND l3.l_shipdate > l1.l_shipdate)
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin),
 
     // TPC-H Q22 shape (global sales opportunity): customers in selected
     // code groups, above the positive-balance average, with no recent
@@ -847,7 +1247,7 @@ object SparkEntry {
     // average enters the plan; the no-orders quantifier is a LeftAnti join.
     // (No c_phone in the fixtures — the code is the last two digits of
     // c_name; every customer has SOME order, so "idle" is date-scoped.)
-    "q22_idle_customers" -> ((s, dir) => {
+    QueryRow("q22_idle_customers", (s, dir) => {
       val codes = Seq("13", "31", "23", "29", "30", "18", "17")
       val c = t(s, dir, "customer")
         .withColumn("cntrycode", expr("substring(c_name, length(c_name)-1, 2)"))
@@ -863,47 +1263,91 @@ object SparkEntry {
         .agg(count(lit(1)).as("numcust"),
           dstr(sum(d2(col("c_acctbal")))).as("totacctbal"))
         .orderBy("cntrycode")
-    }),
+    },
+      """WITH pos AS (
+        |  SELECT CAST(c_acctbal AS DECIMAL(18,2)) AS b FROM customer
+        |  WHERE c_acctbal > 0.0
+        |    AND substring(c_name, length(c_name)-1, 2) IN ('13','31','23','29','30','18','17'))
+        |SELECT substring(c_name, length(c_name)-1, 2) AS cntrycode,
+        |  CAST(count(*) AS BIGINT) AS numcust,
+        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS totacctbal
+        |FROM customer
+        |WHERE substring(c_name, length(c_name)-1, 2) IN ('13','31','23','29','30','18','17')
+        |  AND CAST(c_acctbal AS DECIMAL(18,2)) * (SELECT count(*) FROM pos)
+        |      > (SELECT sum(b) FROM pos)
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey
+        |                    AND o_orderdate >= DATE '1999-01-01')
+        |GROUP BY substring(c_name, length(c_name)-1, 2)
+        |ORDER BY cntrycode""".stripMargin,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of a 1-row global-average aggregate (the TPC-H Q22 shape)")),
 
-    "q_pivot" -> ((s, dir) =>
+    QueryRow("q_pivot", (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy("l_linestatus")
         .pivot("l_returnflag", Seq("A", "N", "R"))
         .agg(dstr(sum(d2(col("l_quantity")))))
-        .orderBy("l_linestatus")),
+        .orderBy("l_linestatus"),
+      """SELECT l_linestatus,
+        |  CAST(sum(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS "A",
+        |  CAST(sum(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS "N",
+        |  CAST(sum(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS "R"
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
 
     // UNPIVOT (stack): wide per-flag aggregates melted to (flag, metric,
     // value) rows; values already string-rendered decimals
-    "q_unpivot" -> ((s, dir) =>
+    QueryRow("q_unpivot", (s, dir) =>
       t(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(dstr(sum(d2(col("l_quantity")))).as("sum_qty"),
           dstr(sum(d2(col("l_extendedprice")))).as("sum_price"))
         .selectExpr("l_returnflag",
           "stack(2, 'qty', sum_qty, 'price', sum_price) AS (metric, val)")
-        .orderBy("l_returnflag", "metric")),
+        .orderBy("l_returnflag", "metric"),
+      """WITH w AS (
+        |  SELECT l_returnflag,
+        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS sum_price
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l_returnflag, 'qty' AS metric, sum_qty AS val FROM w
+        |UNION ALL
+        |SELECT l_returnflag, 'price' AS metric, sum_price AS val FROM w
+        |ORDER BY l_returnflag, metric""".stripMargin),
 
     // deterministic string aggregation: collect_list is order-nondeterministic
     // under parallelism, so sort_array pins it — the portable equivalent of
     // DuckDB's string_agg(... ORDER BY ...)
-    "q_string_agg" -> ((s, dir) =>
+    QueryRow("q_string_agg", (s, dir) =>
       t(s, dir, "supplier")
         .groupBy("s_nationkey")
         .agg(array_join(sort_array(collect_list(col("s_suppkey").cast("string"))), ",")
           .as("supp_keys"))
-        .orderBy("s_nationkey")),
+        .orderBy("s_nationkey"),
+      """SELECT s_nationkey,
+        |  string_agg(CAST(s_suppkey AS VARCHAR), ','
+        |    ORDER BY CAST(s_suppkey AS VARCHAR)) AS supp_keys
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
 
-    "q_setops" -> ((s, dir) => {
+    QueryRow("q_setops", (s, dir) => {
       val cn = t(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
       val sn = t(s, dir, "supplier").select(col("s_nationkey").as("nationkey"))
       cn.intersect(sn).withColumn("both", lit(true))
         .unionByName(cn.except(sn).withColumn("both", lit(false)))
         .orderBy("nationkey")
-    }),
+    },
+      """SELECT nationkey, true AS both FROM
+        |  (SELECT c_nationkey AS nationkey FROM customer
+        |   INTERSECT SELECT s_nationkey FROM supplier)
+        |UNION ALL
+        |SELECT nationkey, false AS both FROM
+        |  (SELECT c_nationkey AS nationkey FROM customer
+        |   EXCEPT SELECT s_nationkey FROM supplier)
+        |ORDER BY nationkey""".stripMargin),
 
     // full outer join on date: ship dates extend past order dates, so both
     // null sides engage; USING-column semantics coalesce the key
-    "q_full_outer" -> ((s, dir) => {
+    QueryRow("q_full_outer", (s, dir) => {
       val o = t(s, dir, "orders")
         .groupBy(col("o_orderdate").as("d")).agg(count(lit(1)).as("n_orders"))
       val l = t(s, dir, "lineitem")
@@ -913,12 +1357,19 @@ object SparkEntry {
           coalesce(col("n_orders"), lit(0L)).as("n_orders"),
           coalesce(col("n_ships"), lit(0L)).as("n_ships"))
         .orderBy("d")
-    }),
+    },
+      """SELECT CAST(d AS VARCHAR) AS d,
+        |  coalesce(n_orders, 0) AS n_orders, coalesce(n_ships, 0) AS n_ships
+        |FROM (SELECT o_orderdate AS d, CAST(COUNT(*) AS BIGINT) AS n_orders
+        |      FROM orders GROUP BY 1) o
+        |FULL JOIN (SELECT l_shipdate AS d, CAST(COUNT(*) AS BIGINT) AS n_ships
+        |      FROM lineitem GROUP BY 1) l USING (d)
+        |ORDER BY d""".stripMargin),
 
     // lag() window: per-user inter-event gap in seconds (exact integer math
     // on epoch micros; (user_id, ts, event_id) is a unique order so lag
     // peers are deterministic in both engines)
-    "events_lag_delta" -> ((s, dir) => {
+    QueryRow("events_lag_delta", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       t(s, dir, "events")
@@ -927,13 +1378,18 @@ object SparkEntry {
           ((col("_us") - lag(col("_us"), 1).over(w)) / lit(1000000L)).cast("long"))
         .select("user_id", "event_id", "gap_s")
         .orderBy("user_id", "event_id")
-    }),
+    },
+      """SELECT user_id, event_id,
+        |  CAST((epoch_us(ts) - lag(epoch_us(ts), 1) OVER (
+        |    PARTITION BY user_id ORDER BY epoch_us(ts), event_id)) // 1000000
+        |    AS BIGINT) AS gap_s
+        |FROM events ORDER BY user_id, event_id""".stripMargin),
 
     // ROWS-frame moving window (the frame type events_rolling_count's RANGE
     // frame doesn't cover): per-customer 3-order moving total, exact DECIMAL
     // rendered to string; (o_orderdate, o_orderkey) is a unique frame order
     // so ROWS peers are deterministic in both engines
-    "window_moving_sum" -> ((s, dir) => {
+    QueryRow("window_moving_sum", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
@@ -942,9 +1398,14 @@ object SparkEntry {
         .withColumn("mov3", dstr(sum(d2(col("o_totalprice"))).over(w)))
         .select("o_custkey", "o_orderkey", "mov3")
         .orderBy("o_custkey", "o_orderkey")
-    }),
+    },
+      """SELECT o_custkey, o_orderkey,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS VARCHAR) AS mov3
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
 
-    "window_rank_orders" -> ((s, dir) => {
+    QueryRow("window_rank_orders", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
       t(s, dir, "orders")
@@ -952,7 +1413,13 @@ object SparkEntry {
         .filter(col("rn") <= 3)
         .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
         .orderBy("o_custkey", "rn")
-    }),
+    },
+      """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    CAST(row_number() OVER (PARTITION BY o_custkey
+        |      ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rn
+        |  FROM orders)
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
 
     // distribution-rank window functions (ntile / percent_rank / cume_dist):
     // (c_acctbal, c_custkey) is a unique order within each segment, so ranks
@@ -962,7 +1429,7 @@ object SparkEntry {
     // (orderkey, linenumber) order — the remaining SQL window surface;
     // last_value needs the full-partition frame (default frame stops at
     // CURRENT ROW, identical rule in both engines, made explicit here)
-    "window_value_funcs" -> ((s, dir) => {
+    QueryRow("window_value_funcs", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       // (linenumber, partkey, suppkey, extendedprice) is a verified unique
       // order within each orderkey at every SF — bare linenumber TIES at
@@ -982,9 +1449,22 @@ object SparkEntry {
           lag(col("l_linenumber"), 1, -1L).over(w).cast("long").as("prev_line"),
           lead(col("l_linenumber"), 1, -1L).over(w).cast("long").as("next_line"))
         .orderBy("l_orderkey", "l_linenumber")
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(first_value(CAST(l_quantity AS DECIMAL(18,2))) OVER w AS VARCHAR) AS first_qty,
+        |  CAST(last_value(CAST(l_quantity AS DECIMAL(18,2))) OVER wf AS VARCHAR) AS last_qty,
+        |  CAST(nth_value(CAST(l_quantity AS DECIMAL(18,2)), 2) OVER wf AS VARCHAR) AS second_qty,
+        |  CAST(lag(l_linenumber, 1, -1) OVER w AS BIGINT) AS prev_line,
+        |  CAST(lead(l_linenumber, 1, -1) OVER w AS BIGINT) AS next_line
+        |FROM lineitem
+        |WINDOW w AS (PARTITION BY l_orderkey
+        |    ORDER BY l_linenumber, l_partkey, l_suppkey, l_extendedprice),
+        |  wf AS (PARTITION BY l_orderkey
+        |    ORDER BY l_linenumber, l_partkey, l_suppkey, l_extendedprice
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "window_ntile" -> ((s, dir) => {
+    QueryRow("window_ntile", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("c_mktsegment")
         .orderBy(col("c_acctbal"), col("c_custkey"))
@@ -994,14 +1474,21 @@ object SparkEntry {
           percent_rank().over(w).as("pct_rank"),
           cume_dist().over(w).as("cdist"))
         .orderBy("c_custkey")
-    }),
+    },
+      """SELECT c_custkey, c_mktsegment,
+        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+        |  percent_rank() OVER w AS pct_rank,
+        |  cume_dist() OVER w AS cdist
+        |FROM customer
+        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
+        |ORDER BY c_custkey""".stripMargin),
 
     // interval-point range join (see ext/Ranges.scala): 10-minute windows
     // anchored at each purchase event, counting all events inside. Bucket
     // width = interval length, so each interval lands in ≤2 buckets; the
     // oracle runs the same join as a raw non-equi predicate (DuckDB IEJoin),
     // independently checking the bucket decomposition.
-    "events_range_join" -> ((s, dir) => {
+    QueryRow("events_range_join", (s, dir) => {
       val e = t(s, dir, "events")
       val winUs = 600000000L // 10 min
       val anchors = e.filter(col("event_type") === "purchase")
@@ -1015,14 +1502,22 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_events"),
           dstr(sum(d2(col("value")))).as("sum_value"))
         .orderBy("anchor_id")
-    }),
+    },
+      """WITH a AS (SELECT event_id AS anchor_id, epoch_us(ts) AS s_us,
+        |    epoch_us(ts) + 600000000 AS e_us
+        |  FROM events WHERE event_type = 'purchase'),
+        | p AS (SELECT epoch_us(ts) AS p_us, value FROM events)
+        |SELECT anchor_id, CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM a JOIN p ON p.p_us >= a.s_us AND p.p_us < a.e_us
+        |GROUP BY anchor_id ORDER BY anchor_id""".stripMargin),
 
     // the SAME range join through the RAW SQL surface: no library call — the
     // rewrite to a bucketed equi-join must come from the registered
     // optimizer rule (plans.RangeJoinBucketing via GraftExtensions), and the
     // query self-asserts it did: a nested-loop/cartesian plan throws, so a
     // broken optimizer rung shows as a RED correctness row, not a slow one
-    "events_range_join_sql" -> ((s, dir) => {
+    QueryRow("events_range_join_sql", (s, dir) => {
       val e = t(s, dir, "events")
       val winUs = 600000000L // 10 min
       e.filter(col("event_type") === "purchase")
@@ -1049,78 +1544,126 @@ object SparkEntry {
           "(is spark.sql.extensions=graft.plans.GraftExtensions registered and " +
           "spark.graft.rangejoin.bucketUs set?)")
       q
-    }),
+    },
+      // identical semantics to events_range_join — the twin proves the raw-SQL
+      // surface (optimizer-rule path) computes the same relation
+      """WITH a AS (SELECT event_id AS anchor_id, epoch_us(ts) AS s_us,
+        |    epoch_us(ts) + 600000000 AS e_us
+        |  FROM events WHERE event_type = 'purchase'),
+        | p AS (SELECT epoch_us(ts) AS p_us, value FROM events)
+        |SELECT anchor_id, CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM a JOIN p ON p.p_us >= a.s_us AND p.p_us < a.e_us
+        |GROUP BY anchor_id ORDER BY anchor_id""".stripMargin),
 
     // the registered SQL-function surface (GraftExtensions.injectFunction):
     // the codegen'd AsciiRunTokens tokenizer reached from raw SQL as
     // graft_tokens() — token count and canonical fingerprint must match the
     // oracle's regexp formulation (the same equivalence fastTokens relies on)
-    "sql_fn_tokens" -> ((s, dir) => {
+    QueryRow("sql_fn_tokens", (s, dir) => {
       t(s, dir, "documents").createOrReplaceTempView("fn_docs")
       s.sql(
         """SELECT doc_id,
           |  CAST(size(graft_tokens(text)) AS BIGINT) AS n_toks,
           |  md5(array_join(graft_tokens(text), ' ')) AS fp
           |FROM fn_docs ORDER BY doc_id""".stripMargin)
-    }),
+    },
+      s"""SELECT doc_id,
+         |  CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_toks,
+         |  md5(array_to_string(${TextOps.tokensSqlDuck("text")}, ' ')) AS fp
+         |FROM documents ORDER BY doc_id""".stripMargin),
 
     // graft_vec_dot() from raw SQL: the strict-sequential double-accumulation
     // contract means self-dot equals the oracle's explicit 64-term chain
     // bit-for-bit
-    "sql_fn_vec_dot" -> ((s, dir) => {
+    QueryRow("sql_fn_vec_dot", (s, dir) => {
       t(s, dir, "embeddings").createOrReplaceTempView("fn_emb")
       s.sql(
         """SELECT vec_id, graft_vec_dot(embedding, embedding) AS dot
           |FROM fn_emb ORDER BY vec_id""".stripMargin)
-    }),
+    },
+      s"""SELECT vec_id, ${Similarity.dotSqlDuck("embedding", "embedding")} AS dot
+         |FROM embeddings ORDER BY vec_id""".stripMargin),
 
     // the z-order expression through its SQL surface (GraftExtensions
     // injectFunction), over raw ids — the oracle re-derives the interleave
     // bit by bit, so both the function registration and the bit math are
     // independently checked
-    "sql_fn_zorder" -> ((s, dir) => {
+    QueryRow("sql_fn_zorder", (s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("fn_ev")
       s.sql(
         """SELECT event_id, graft_zorder(user_id, event_id) AS zkey
           |FROM fn_ev ORDER BY event_id""".stripMargin)
-    }),
+    },
+      s"""SELECT event_id,
+         |  ${graft.functions.MortonInterleave.sqlDuck(
+               "(user_id & 2147483647)", "(event_id & 2147483647)", 31)} AS zkey
+         |FROM events ORDER BY event_id""".stripMargin),
 
     // KMV distinct-count sketch (see ext/Sketch.scala): deterministic given
     // md5, so — unlike HLL — the ESTIMATE itself is oracle-checked, not just
     // row counts. est_distinct is a double computed from identical hashes on
     // both engines (exact 32-bit fraction), bit-identical.
-    "sketch_kmv_distinct" -> ((s, dir) =>
-      graft.ext.Sketch.kmvDistinct(t(s, dir, "lineitem"), col("l_partkey"), 64)),
+    QueryRow("sketch_kmv_distinct", (s, dir) =>
+      graft.ext.Sketch.kmvDistinct(t(s, dir, "lineitem"), col("l_partkey"), 64),
+      """WITH hs AS (SELECT DISTINCT md5(CAST(l_partkey AS VARCHAR)) AS h
+        |  FROM lineitem),
+        | mink AS (SELECT h FROM hs ORDER BY h LIMIT 64),
+        | kth AS (SELECT max(h) AS kth_hash FROM mink),
+        | ex AS (SELECT CAST(count(*) AS BIGINT) AS exact_distinct FROM hs)
+        |SELECT CAST(64 AS BIGINT) AS k, kth_hash,
+        |  63.0 / (('0x' || substring(kth_hash, 1, 8))::UBIGINT / 4294967296.0)
+        |    AS est_distinct,
+        |  exact_distinct
+        |FROM kth, ex""".stripMargin,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row sketch and 1-row exact-count aggregates")),
 
     // EXACT type-1 quantiles by distributed selection (ext/Sketch
     // .exactQuantileDisc): O(log range) narrow count-passes, O(1) state —
     // the 100 TB-safe exact path (the built-in exact percentile buffers
     // every value in one aggregator's memory)
-    "events_quantile_selection" -> ((s, dir) =>
+    QueryRow("events_quantile_selection", (s, dir) =>
       graft.ext.Sketch.exactQuantileDisc(
-        t(s, dir, "events"), "value", Seq(0.5, 0.9)).orderBy("prob")),
+        t(s, dir, "events"), "value", Seq(0.5, 0.9)).orderBy("prob"),
+      """WITH v AS (SELECT CAST(value AS DOUBLE) AS v FROM events
+        |           WHERE value IS NOT NULL),
+        | s AS (SELECT v, row_number() OVER (ORDER BY v) AS rn,
+        |       count(*) OVER () AS n FROM v)
+        |SELECT CAST(0.5 AS DOUBLE) AS prob, CAST(n AS BIGINT) AS n, v AS value
+        |FROM s WHERE rn = CAST(ceil(0.5 * n) AS BIGINT)
+        |UNION ALL
+        |SELECT CAST(0.9 AS DOUBLE), CAST(n AS BIGINT), v
+        |FROM s WHERE rn = CAST(ceil(0.9 * n) AS BIGINT)
+        |ORDER BY prob""".stripMargin),
 
     // KMV corpus-overlap estimate (ext/Sketch.kmvJaccard): how much 3-shingle
     // vocabulary src1 shares with src0, answered from two k=128 sketches —
     // the dataset-pair contamination triage. Deterministic given md5, so the
     // ESTIMATE hash-checks; exact Jaccard rides along as the differential.
-    "sketch_kmv_overlap" -> ((s, dir) => {
+    QueryRow("sketch_kmv_overlap", (s, dir) => {
       val docs = t(s, dir, "documents")
       val shA = Dedup.shingles(docs.filter(col("source") === "src0"), 3)
       val shB = Dedup.shingles(docs.filter(col("source") === "src1"), 3)
       graft.ext.Sketch.kmvJaccard(shA, col("tok"), shB, col("tok"), 128)
-    }),
+    },
+      graft.ext.Sketch.kmvJaccardShinglesSqlDuck("src0", "src1", 3, 128),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of two 1-row sketch aggregates")),
 
     // KMV set-difference estimate (ext/Sketch.kmvDifference — the
     // DataSketches aNotB): |A\B| and |B\A| from the two k-minima sketches
     // + the merged sketch's union estimate; exact differences as the
     // differential check — the incremental-ingest pricing triage
-    "sketch_kmv_difference" -> ((s, dir) => {
+    QueryRow("sketch_kmv_difference", (s, dir) => {
       val docs = t(s, dir, "documents")
       val shA = Dedup.shingles(docs.filter(col("source") === "src0"), 3)
       val shB = Dedup.shingles(docs.filter(col("source") === "src1"), 3)
       graft.ext.Sketch.kmvDifference(shA, col("tok"), shB, col("tok"), 128)
-    }),
+    },
+      graft.ext.Sketch.kmvDifferenceShinglesSqlDuck("src0", "src1", 3, 128),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the two 1-row k-minima sketches and the 1-row exact-difference aggregate")),
 
     // deterministic hash-min-k sample quantiles (ext/Sketch.sampleQuantiles):
     // the k=256 md5-minima of o_orderkey are a reproducible uniform sample;
@@ -1128,42 +1671,84 @@ object SparkEntry {
     // ESTIMATE is oracle-checked bit-for-bit (percentile ≡ quantile_cont,
     // proven bitwise by events_quantiles). Plan: TakeOrderedAndProject (O(k)
     // per task), never a global sort.
-    "sketch_sample_quantiles" -> ((s, dir) =>
+    QueryRow("sketch_sample_quantiles", (s, dir) =>
       graft.ext.Sketch.sampleQuantiles(
-        t(s, dir, "orders"), "o_totalprice", col("o_orderkey"), 256)),
+        t(s, dir, "orders"), "o_totalprice", col("o_orderkey"), 256),
+      """WITH s AS (SELECT CAST(o_totalprice AS DOUBLE) AS _v FROM orders
+        |           ORDER BY md5(CAST(o_orderkey AS VARCHAR)), CAST(o_totalprice AS DOUBLE)
+        |           LIMIT 256)
+        |SELECT CAST(count(*) AS BIGINT) AS sample_n,
+        |  quantile_cont(_v, 0.25) AS q25, quantile_cont(_v, 0.5) AS q50,
+        |  quantile_cont(_v, 0.75) AS q75, quantile_cont(_v, 0.9) AS q90
+        |FROM s""".stripMargin),
 
     // per-group variant: rank-by-hash inside each priority class
     // (WindowGroupLimit caps map-side state at k rows per group)
-    "sketch_sample_quantiles_grouped" -> ((s, dir) =>
+    QueryRow("sketch_sample_quantiles_grouped", (s, dir) =>
       graft.ext.Sketch.sampleQuantilesByGroup(
-        t(s, dir, "orders"), "o_orderpriority", "o_totalprice", col("o_orderkey"), 64)),
+        t(s, dir, "orders"), "o_orderpriority", "o_totalprice", col("o_orderkey"), 64),
+      """WITH r AS (SELECT o_orderpriority, CAST(o_totalprice AS DOUBLE) AS _v,
+        |    row_number() OVER (PARTITION BY o_orderpriority
+        |      ORDER BY md5(CAST(o_orderkey AS VARCHAR)), CAST(o_totalprice AS DOUBLE)) AS rn
+        |  FROM orders)
+        |SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS sample_n,
+        |  quantile_cont(_v, 0.5) AS q50, quantile_cont(_v, 0.9) AS q90
+        |FROM r WHERE rn <= 64
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // grouped sketch: one KMV estimate per document source (k=16); groups
     // with < k distinct texts yield null estimate on both engines
-    "sketch_kmv_by_source" -> ((s, dir) =>
+    QueryRow("sketch_kmv_by_source", (s, dir) =>
       graft.ext.Sketch.kmvDistinctBy(t(s, dir, "documents"), "source", col("text"), 16)
-        .orderBy("source")),
+        .orderBy("source"),
+      """WITH hs AS (SELECT DISTINCT source, md5(text) AS h FROM documents),
+        | ranked AS (SELECT source, h,
+        |   row_number() OVER (PARTITION BY source ORDER BY h) AS rn FROM hs),
+        | mink AS (SELECT source,
+        |   CASE WHEN count(*) >= 16 THEN max(h) END AS kth_hash
+        |   FROM ranked WHERE rn <= 16 GROUP BY source),
+        | ex AS (SELECT source, CAST(count(*) AS BIGINT) AS exact_distinct
+        |   FROM hs GROUP BY source)
+        |SELECT m.source, CAST(16 AS BIGINT) AS k, kth_hash,
+        |  15.0 / (('0x' || substring(kth_hash, 1, 8))::UBIGINT / 4294967296.0)
+        |    AS est_distinct,
+        |  exact_distinct
+        |FROM mink m JOIN ex USING (source) ORDER BY source""".stripMargin),
 
-    "events_tumbling_agg" -> ((s, dir) =>
+    QueryRow("events_tumbling_agg", (s, dir) =>
       t(s, dir, "events")
         .groupBy(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
         .agg(count(lit(1)).as("n"), dstr(sum(d2(col("value")))).as("sum_value"))
         .orderBy("hr", "event_type")
         .select(date_format(col("hr"), "yyyy-MM-dd HH:mm:ss").as("hr"),
-          col("event_type"), col("n"), col("sum_value"))),
+          col("event_type"), col("n"), col("sum_value")),
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr, event_type,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM events GROUP BY date_trunc('hour', ts), event_type
+        |ORDER BY hr, event_type""".stripMargin),
 
     // sliding event-time windows (1 h window, 30 min slide — every event in
     // exactly 2 overlapping windows) via Spark's native window(); the oracle
     // reconstructs the same windows as two 30-min-offset tumbling grids
-    "events_sliding_agg" -> ((s, dir) =>
+    QueryRow("events_sliding_agg", (s, dir) =>
       t(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"), dstr(sum(d2(col("value")))).as("sum_value"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("event_type"), col("n"), col("sum_value"))
-        .orderBy("w_start", "event_type")),
+        .orderBy("w_start", "event_type"),
+      """WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
+        | w AS (
+        |  SELECT (us // 1800000000) * 1800000000 AS ws, event_type, value FROM e
+        |  UNION ALL
+        |  SELECT (us // 1800000000) * 1800000000 - 1800000000 AS ws, event_type, value FROM e)
+        |SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS w_start,
+        |  event_type, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM w GROUP BY ws, event_type ORDER BY w_start, event_type""".stripMargin),
 
-    "events_sessionize" -> ((s, dir) => {
+    QueryRow("events_sessionize", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val byUser = Window.partitionBy("user_id").orderBy("us", "event_id")
       val cum = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1176,9 +1761,23 @@ object SparkEntry {
         .groupBy("user_id", "session_id")
         .agg(count(lit(1)).as("n_events"), min("us").as("start_us"), max("us").as("end_us"))
         .orderBy("user_id", "session_id")
-    }),
+    },
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        | flags AS (
+        |  SELECT user_id, event_id, us,
+        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
+        |         THEN 1 ELSE 0 END AS is_new
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        | sess AS (
+        |  SELECT user_id, us,
+        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+        |  FROM flags)
+        |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
+        |  min(us) AS start_us, max(us) AS end_us
+        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin),
 
-    "events_asof_join" -> ((s, dir) => {
+    QueryRow("events_asof_join", (s, dir) => {
       val ev = t(s, dir, "events")
       val left = ev.select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
       val clicks = ev.filter(col("event_type") === "click")
@@ -1205,7 +1804,12 @@ object SparkEntry {
         s"as-of join plan degraded: $b in the physical plan — the tag-union + " +
           "running-last composition must partition by key and never theta-join"))
       q
-    }),
+    },
+      """SELECT e.event_id, e.user_id, epoch_us(e.ts) AS us, r.value AS ref_value
+        |FROM events e ASOF JOIN (
+        |  SELECT user_id, ts, value FROM events WHERE event_type = 'click') r
+        |  ON e.user_id = r.user_id AND e.ts >= r.ts
+        |ORDER BY e.event_id""".stripMargin),
 
     // FORWARD as-of join (ext/AsOf.asofJoin forward=true): each event joined
     // to the EARLIEST purchase at-or-after it per user — the "time to next
@@ -1214,7 +1818,7 @@ object SparkEntry {
     // Right side pre-aggregated per (user, us) so coincident-timestamp
     // payload choice is deterministic on both engines. Oracle = DuckDB
     // native ASOF JOIN with the inequality flipped (l.us <= r.us).
-    "events_asof_forward" -> ((s, dir) => {
+    QueryRow("events_asof_forward", (s, dir) => {
       val ev = t(s, dir, "events")
       val left = ev.select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -1224,33 +1828,66 @@ object SparkEntry {
           Map("value" -> "next_value"), forward = true)
         .select("event_id", "user_id", "us", "next_value")
         .orderBy("event_id")
-    }),
+    },
+      """SELECT e.event_id, e.user_id, epoch_us(e.ts) AS us, r.value AS next_value
+        |FROM events e ASOF JOIN (
+        |  SELECT user_id, epoch_us(ts) AS us, max(value) AS value FROM events
+        |  WHERE event_type = 'purchase' GROUP BY user_id, epoch_us(ts)) r
+        |  ON e.user_id = r.user_id AND epoch_us(e.ts) <= r.us
+        |ORDER BY e.event_id""".stripMargin),
 
     // SCD2-style state history (ext/Temporal.stateIntervals): runs of equal
     // event_type per user collapsed to validity intervals — gaps-and-islands
     // via lag + running flag-sum + one aggregate, all inside ONE hash
     // partitioning on user_id
-    "events_state_intervals" -> ((s, dir) => {
+    QueryRow("events_state_intervals", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"),
           col("event_id"))
       graft.ext.Temporal.stateIntervals(ev, "user_id", "event_type", "us", "event_id")
         .orderBy("user_id", "valid_from_us")
-    }),
+    },
+      """WITH o AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id
+        |           FROM events),
+        | f AS (SELECT user_id, event_type, us, event_id,
+        |    CASE WHEN lag(event_type) OVER w IS NULL
+        |         OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg
+        |   FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        | g AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f)
+        |SELECT user_id, event_type, min(us) AS valid_from_us,
+        |  max(us) AS valid_to_us, CAST(count(*) AS BIGINT) AS n_events
+        |FROM g GROUP BY user_id, event_type, grp
+        |ORDER BY user_id, valid_from_us""".stripMargin),
 
     // exponentially-decayed trailing sum (ext/Temporal.decayedTrailingSum):
     // finite-window EWMA numerator per user, decimal-quantized fold so the
     // oracle's row-number self-join recomputation hash-matches exactly; the
     // Spark plan is one window collect_list + codegen'd higher-order fold —
     // no self-join, no second shuffle
-    "events_decayed_sum" -> ((s, dir) => {
+    QueryRow("events_decayed_sum", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
           col("value"))
       graft.ext.Temporal.decayedTrailingSum(ev, "user_id", "us", "event_id", "value")
         .select("event_id", "user_id", "decayed_sum")
         .orderBy("event_id")
-    }),
+    },
+      // independent recomputation by a different plan (row-number self-join vs
+      // Spark's window collect_list + fold); hash-equality holds because both
+      // engines quantize each weighted term to DECIMAL(28,12) — exact for
+      // these products, see Temporal.decayedTrailingSum — before the
+      // order-independent exact decimal sum
+      """WITH e AS (SELECT event_id, user_id, CAST(value AS DOUBLE) AS v,
+        |    row_number() OVER (PARTITION BY user_id
+        |      ORDER BY epoch_us(ts), event_id) AS rn
+        |  FROM events)
+        |SELECT a.event_id, a.user_id,
+        |  CAST(sum(CAST(b.v * pow(0.5, a.rn - b.rn) AS DECIMAL(28,12)))
+        |    AS VARCHAR) AS decayed_sum
+        |FROM e a JOIN e b ON a.user_id = b.user_id AND b.rn BETWEEN a.rn - 9 AND a.rn
+        |GROUP BY a.event_id, a.user_id
+        |ORDER BY a.event_id""".stripMargin),
 
     // COMPOSITION row: point-in-time state lookup — the SCD2 intervals
     // (Temporal.stateIntervals) consumed by the backward as-of join
@@ -1260,7 +1897,7 @@ object SparkEntry {
     // one oracle; the state before a purchase is NOT trivially 'purchase'
     // (a purchase opens a new run only when the previous run was a
     // different type), so the result is informative.
-    "events_state_at_purchase" -> ((s, dir) => {
+    QueryRow("events_state_at_purchase", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"),
           col("event_id"))
@@ -1274,16 +1911,35 @@ object SparkEntry {
           Map("state" -> "state_before"))
         .select(col("event_id"), (col("us") + 1L).as("us"), col("state_before"))
         .orderBy("event_id")
-    }),
+    },
+      """WITH o AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id
+        |           FROM events),
+        | f AS (SELECT user_id, event_type, us, event_id,
+        |    CASE WHEN lag(event_type) OVER w IS NULL
+        |         OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg
+        |   FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        | g AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f),
+        | iv AS (SELECT user_id, min(us) AS ivs, event_type AS state
+        |   FROM g GROUP BY user_id, event_type, grp),
+        | p AS (SELECT event_id, user_id, epoch_us(ts) - 1 AS us FROM events
+        |   WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.us + 1 AS us, iv.state AS state_before
+        |FROM p ASOF JOIN iv ON p.user_id = iv.user_id AND p.us >= iv.ivs
+        |ORDER BY p.event_id""".stripMargin),
 
     // time-windowed telemetry dedup (ext/Temporal.windowedDedup): same-hour
     // (user, type) reports collapsed to one keeper + dup count; built on
     // window() so the streaming twin (events_stream_windowed_dedup) runs
     // the IDENTICAL aggregation and shares this oracle
-    "events_dedup_windowed" -> ((s, dir) =>
+    QueryRow("events_dedup_windowed", (s, dir) =>
       graft.ext.Temporal.windowedDedup(t(s, dir, "events"), "ts", "event_id",
           Seq("user_id", "event_type"))
-        .orderBy("w_us", "user_id", "event_type")),
+        .orderBy("w_us", "user_id", "event_type"),
+      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS w_us, user_id,
+        |  event_type, min(event_id) AS keep_id, CAST(count(*) AS BIGINT) AS n_dups
+        |FROM events GROUP BY 1, 2, 3
+        |ORDER BY w_us, user_id, event_type""".stripMargin),
 
     // z-order (Morton) layout key (etl/Layout.zOrderKey over
     // functions/MortonInterleave, a codegen'd Catalyst expression): both
@@ -1292,22 +1948,36 @@ object SparkEntry {
     // per-file min/max stats selective on BOTH columns at 100 TB
     // (Layout.writeZOrdered sorts by it; LayoutSpec measures the skipping).
     // Oracle recomputes the interleave as an unrolled bit-shift sum.
-    "events_zorder_key" -> ((s, dir) => {
+    QueryRow("events_zorder_key", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
       graft.etl.Layout.zOrderKey(ev, "user_id", "us", bits = 10)
         .select("event_id", "user_id", "us", "zkey")
         .orderBy("event_id")
-    }),
+    },
+      s"""WITH s AS (SELECT min(user_id) AS xmin, max(user_id) AS xmax,
+         |    min(epoch_us(ts)) AS ymin, max(epoch_us(ts)) AS ymax FROM events),
+         | b AS (SELECT event_id, user_id, epoch_us(ts) AS us,
+         |    ((user_id - xmin) * 1024) // (xmax - xmin + 1) AS bx,
+         |    ((epoch_us(ts) - ymin) * 1024) // (ymax - ymin + 1) AS by
+         |  FROM events, s)
+         |SELECT event_id, user_id, us,
+         |  ${graft.functions.MortonInterleave.sqlDuck("bx", "by", 10)} AS zkey
+         |FROM b ORDER BY event_id""".stripMargin,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row min/max bucketization-stats aggregate")),
 
     // Z-order pruning-effectiveness audit (etl/Layout.zorderPruningAudit):
     // per-"file" min/max stats (what parquet footers store) under
     // time-linear vs z-order layout, scanned-file count for the
     // second-quartile rectangle — the measurement that justifies a 100 TB
     // re-layout before running it; exact-ntile file cuts, no global window
-    "layout_zorder_pruning" -> ((s, dir) =>
+    QueryRow("layout_zorder_pruning", (s, dir) =>
       graft.etl.Layout.zorderPruningAudit(t(s, dir, "events"))
-        .orderBy("layout")),
+        .orderBy("layout"),
+      graft.etl.Layout.zorderPruningAuditSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row predicate-bounds aggregate onto the ≤2·files file-stats relation")),
 
     // bucketing end-to-end (etl/Layout.writeBucketed): both fact tables
     // written bucketed+sorted on the join key, then joined WITHOUT any
@@ -1317,7 +1987,7 @@ object SparkEntry {
     // events_range_join_sql precedent). At 100 TB this is the write-once /
     // join-many contract: the pre-shuffle is paid at ingest, every
     // downstream equi-join on the key plans exchange-free.
-    "layout_bucketed_join" -> ((s, dir) => {
+    QueryRow("layout_bucketed_join", (s, dir) => {
       val sfx = new java.io.File(dir).getName.replace('.', '_')
       graft.etl.Layout.writeBucketed(
         t(s, dir, "lineitem").select(col("l_orderkey").as("okey"),
@@ -1358,21 +2028,39 @@ object SparkEntry {
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         s.conf.set("spark.sql.join.preferSortMergeJoin", prevSMJ)
       }
-    }),
+    },
+      // independent recomputation of the bucketed-layout join: DuckDB joins
+      // the raw parquet tables directly — the layout is Spark-side physics,
+      // the RESULT must be layout-invariant
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
+        |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
+        |    AS VARCHAR) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // regular-grid resampling + forward fill (ext/AsOf.resampleFfill): a
     // 1-day grid per user, each point carrying the latest value at or
     // before it — grid from a tiny bounds agg, ONE keyed shuffle, never a
     // grid x observations theta join; oracle = DuckDB generate_series +
     // native ASOF JOIN
-    "events_resample_ffill" -> ((s, dir) => {
+    QueryRow("events_resample_ffill", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
       graft.ext.AsOf.resampleFfill(ev, "user_id", "us", "value", 86400000000L)
         .orderBy("user_id", "grid_us")
-    }),
+    },
+      """WITH p AS (SELECT user_id, epoch_us(ts) AS us,
+        |           max(CAST(value AS DOUBLE)) AS v
+        |           FROM events GROUP BY user_id, epoch_us(ts)),
+        | b AS (SELECT user_id, min(us) AS lo, max(us) AS hi FROM p GROUP BY user_id),
+        | g AS (SELECT user_id, unnest(generate_series(lo, hi, 86400000000)) AS grid_us
+        |       FROM b)
+        |SELECT g.user_id, g.grid_us, p.v AS value_ffill
+        |FROM g ASOF JOIN p ON g.user_id = p.user_id AND g.grid_us >= p.us
+        |ORDER BY g.user_id, g.grid_us""".stripMargin),
 
-    "events_rolling_count" -> ((s, dir) => {
+    QueryRow("events_rolling_count", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy("us")
         .rangeBetween(-3600000000L, 0L)
@@ -1381,27 +2069,36 @@ object SparkEntry {
         .withColumn("n_last_hour", count(lit(1)).over(w).cast("long"))
         .select("event_id", "n_last_hour")
         .orderBy("event_id")
-    }),
+    },
+      """SELECT event_id,
+        |  CAST(count(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
+        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_last_hour
+        |FROM events ORDER BY event_id""".stripMargin),
 
-    "events_quantiles" -> ((s, dir) =>
+    QueryRow("events_quantiles", (s, dir) =>
       t(s, dir, "events")
         .groupBy("event_type")
         .agg(expr("percentile(value, 0.5)").as("med"),
           expr("percentile(value, 0.9)").as("p90"),
           min("value").as("vmin"), max("value").as("vmax"))
-        .orderBy("event_type")),
+        .orderBy("event_type"),
+      """SELECT event_type, quantile_cont(value, 0.5) AS med,
+        |  quantile_cont(value, 0.9) AS p90,
+        |  min(value) AS vmin, max(value) AS vmax
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // stepwise conversion funnel (view → click → purchase, strictly ordered
     // per user): three whole-partition window mins + a per-user rollup, all
     // inside ONE exchange on user_id (see ext/Analytics.scala)
-    "events_funnel" -> ((s, dir) =>
-      graft.ext.Analytics.funnel(t(s, dir, "events")).orderBy("user_id")),
+    QueryRow("events_funnel", (s, dir) =>
+      graft.ext.Analytics.funnel(t(s, dir, "events")).orderBy("user_id"),
+      graft.ext.Analytics.funnelSqlDuck()),
 
     // COMPOSITION row: funnel step latencies → exact grouped quantile
     // selection (Sketch.exactQuantileDiscByGroup bisection, O(1) driver
     // state) — "how long does step n → n+1 take at p50/p90", the metric
     // behind funnel-stage SLAs; the oracle recomputes via rank selection
-    "events_funnel_latency" -> ((s, dir) => {
+    QueryRow("events_funnel_latency", (s, dir) => {
       val f = graft.ext.Analytics.funnel(t(s, dir, "events"))
       val lat = f.filter(col("ts2_us").isNotNull)
         .select(lit("step1_step2").as("transition"),
@@ -1411,31 +2108,52 @@ object SparkEntry {
             (col("ts3_us") - col("ts2_us")).cast("double").as("lat")))
       graft.ext.Sketch.exactQuantileDiscByGroup(lat, "transition", "lat")
         .orderBy("transition", "prob")
-    }),
+    },
+      s"""WITH f AS (SELECT * FROM (${graft.ext.Analytics.funnelSqlDuck()})),
+        | lat AS (
+        |  SELECT 'step1_step2' AS transition,
+        |    CAST(ts2_us - ts1_us AS DOUBLE) AS v FROM f WHERE ts2_us IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'step2_step3', CAST(ts3_us - ts2_us AS DOUBLE)
+        |  FROM f WHERE ts3_us IS NOT NULL),
+        | s AS (SELECT transition, v,
+        |    row_number() OVER (PARTITION BY transition ORDER BY v) AS rn,
+        |    count(*) OVER (PARTITION BY transition) AS n FROM lat)
+        |SELECT transition, CAST(0.5 AS DOUBLE) AS prob, CAST(n AS BIGINT) AS n,
+        |  v AS value
+        |FROM s WHERE rn = CAST(ceil(0.5 * n) AS BIGINT)
+        |UNION ALL
+        |SELECT transition, CAST(0.9 AS DOUBLE), CAST(n AS BIGINT), v
+        |FROM s WHERE rn = CAST(ceil(0.9 * n) AS BIGINT)
+        |ORDER BY transition, prob""".stripMargin),
 
     // per-SESSION funnel: gap-based sessionization then the strict stepwise
     // funnel within each sitting — still one exchange on user_id (the
     // session window's partitioning satisfies the funnel windows and the
     // rollup; see ext/Analytics.sessionFunnel)
-    "events_session_funnel" -> ((s, dir) =>
+    QueryRow("events_session_funnel", (s, dir) =>
       graft.ext.Analytics.sessionFunnel(t(s, dir, "events"))
-        .orderBy("user_id", "session_id")),
+        .orderBy("user_id", "session_id"),
+      graft.ext.Analytics.sessionFunnelSqlDuck()),
 
     // cohort retention triangle: users cohorted by first-seen day; the
     // (cohort, offset) rollup's key space is days², independent of corpus
     // size, so the second shuffle moves only map-combined partials
-    "events_retention_cohort" -> ((s, dir) =>
+    QueryRow("events_retention_cohort", (s, dir) =>
       graft.ext.Analytics.retentionCohorts(t(s, dir, "events"))
-        .orderBy("cohort_day", "offset_d")),
+        .orderBy("cohort_day", "offset_d"),
+      graft.ext.Analytics.retentionCohortsSqlDuck),
 
     // funnel report rolled up to steps rows; exact int/int rate divisions
-    "events_funnel_rates" -> ((s, dir) =>
-      graft.ext.Analytics.funnelRates(t(s, dir, "events")).orderBy("step")),
+    QueryRow("events_funnel_rates", (s, dir) =>
+      graft.ext.Analytics.funnelRates(t(s, dir, "events")).orderBy("step"),
+      graft.ext.Analytics.funnelRatesSqlDuck()),
 
     // the retention triangle as day-0-normalized rates
-    "events_retention_rates" -> ((s, dir) =>
+    QueryRow("events_retention_rates", (s, dir) =>
       graft.ext.Analytics.retentionRates(t(s, dir, "events"))
-        .orderBy("cohort_day", "offset_d")),
+        .orderBy("cohort_day", "offset_d"),
+      graft.ext.Analytics.retentionRatesSqlDuck),
 
     // third streaming row: gap-based sessionization via session_window
     // (30 min inactivity gap) under the same harness. session_window's
@@ -1444,7 +2162,7 @@ object SparkEntry {
     // (user_id, start_us, n_events) — equal by construction, and this
     // row's oracle check confirms it on every fixture. Streaming state: one
     // open session row per (user, gap window), expired by the watermark.
-    "events_stream_sessionize" -> ((s, dir) => {
+    QueryRow("events_stream_sessionize", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_sessionize_verify", "complete")(
         graft.streaming.EventStreams.sessionWindows(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1452,13 +2170,30 @@ object SparkEntry {
         .select(col("user_id"), unix_micros(col("session_start")).as("start_us"),
           col("n_events"))
         .orderBy("user_id", "start_us")
-    }),
+    },
+      // streaming rows: tumblingCounts/slidingCounts/sessionWindows ≡ the
+      // batch window aggregations, so the oracles are the batch twins' SQL.
+      // session_window(start) = the session's first event, so the oracle is
+      // the batch lag/gap sessionization projected to (user_id, start_us, n)
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        | flags AS (
+        |  SELECT user_id, event_id, us,
+        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
+        |         THEN 1 ELSE 0 END AS is_new
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        | sess AS (
+        |  SELECT user_id, us,
+        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+        |  FROM flags)
+        |SELECT user_id, min(us) AS start_us, CAST(count(*) AS BIGINT) AS n_events
+        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, start_us""".stripMargin),
 
     // second streaming row: the sliding-window aggregation (1 h window,
     // 30 min slide — every event in exactly 2 overlapping windows) through
     // the same AvailableNow + complete-mode memory-sink harness; oracle =
     // the batch events_sliding_agg SQL (two offset tumbling grids)
-    "events_stream_sliding" -> ((s, dir) => {
+    QueryRow("events_stream_sliding", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_sliding_verify", "complete")(
         graft.streaming.EventStreams.slidingCounts(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1466,13 +2201,22 @@ object SparkEntry {
         .select(date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("event_type"), col("n"), dstr(col("sum_value")).as("sum_value"))
         .orderBy("w_start", "event_type")
-    }),
+    },
+      """WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
+        | w AS (
+        |  SELECT (us // 1800000000) * 1800000000 AS ws, event_type, value FROM e
+        |  UNION ALL
+        |  SELECT (us // 1800000000) * 1800000000 - 1800000000 AS ws, event_type, value FROM e)
+        |SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS w_start,
+        |  event_type, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM w GROUP BY ws, event_type ORDER BY w_start, event_type""".stripMargin),
 
     // fourth streaming row: time-windowed telemetry dedup through the same
     // AvailableNow + complete-mode memory-sink harness. The streaming agg
     // (EventStreams.windowedDedup) is the IDENTICAL expression as the batch
     // events_dedup_windowed, so both share one oracle SQL.
-    "events_stream_windowed_dedup" -> ((s, dir) => {
+    QueryRow("events_stream_windowed_dedup", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_windedup_verify", "complete")(
         graft.streaming.EventStreams.windowedDedup(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1480,7 +2224,12 @@ object SparkEntry {
         .select(unix_micros(col("w_start")).as("w_us"), col("user_id"),
           col("event_type"), col("keep_id"), col("n_dups"))
         .orderBy("w_us", "user_id", "event_type")
-    }),
+    },
+      // the streaming twin runs the identical aggregation — same oracle
+      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS w_us, user_id,
+        |  event_type, min(event_id) AS keep_id, CAST(count(*) AS BIGINT) AS n_dups
+        |FROM events GROUP BY 1, 2, 3
+        |ORDER BY w_us, user_id, event_type""".stripMargin),
 
     // fifth streaming row — the APPEND-mode arbitrary-stateful shape:
     // flatMapGroupsWithState closed-session emitter (EventStreams
@@ -1491,7 +2240,7 @@ object SparkEntry {
     // sessions, with the timeout ripeness test in Spark's own ms-floor
     // arithmetic. Single data batch here (one fixture file), so gap
     // closures are in-batch and timeouts fire in the final no-data batch.
-    "events_stream_closed_sessions" -> ((s, dir) => {
+    QueryRow("events_stream_closed_sessions", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_closed_verify", "append")(
         graft.streaming.EventStreams.closedSessions(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1499,7 +2248,27 @@ object SparkEntry {
         .select(col("user_id"), col("start_us"), col("end_us"),
           col("n_events"), col("closed_by"))
         .orderBy("user_id", "start_us")
-    }),
+    },
+      // closed sessions: lag/gap islands; a session is closed iff a later
+      // event exists for the user (gap) or the final watermark passed
+      // last + gap — `< wm_ms` after integer ms floor is EXACTLY Spark's
+      // `timeoutTimestamp < eventTimeWatermark` test
+      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        | f AS (SELECT user_id, us, event_id,
+        |    CASE WHEN lag(us) OVER w IS NULL
+        |         OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
+        |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        | g AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM f),
+        | s AS (SELECT user_id, sid, min(us) AS start_us, max(us) AS end_us,
+        |        CAST(count(*) AS BIGINT) AS n_events FROM g GROUP BY user_id, sid),
+        | t AS (SELECT *, max(sid) OVER (PARTITION BY user_id) AS last_sid FROM s),
+        | wm AS (SELECT (max(epoch_us(ts)) // 1000) - 3600000 AS wm_ms FROM events)
+        |SELECT user_id, start_us, end_us, n_events,
+        |  CASE WHEN sid < last_sid THEN 'gap' ELSE 'timeout' END AS closed_by
+        |FROM t, wm
+        |WHERE sid < last_sid OR (end_us + 1800000000) // 1000 < wm_ms
+        |ORDER BY user_id, start_us""".stripMargin),
 
     // STREAMING driver-oracle row: the Structured Streaming tumbling
     // aggregation (streaming/EventStreams.tumblingCounts) run to completion
@@ -1515,12 +2284,26 @@ object SparkEntry {
     // fingerprint dedup (stateful, keyed (source, fp)) → per-source
     // admitted counts in complete mode — the corpus-side streaming shape;
     // oracle = the same gates + count(DISTINCT md5(text)) per source
-    "docs_stream_curate" -> ((s, dir) => {
+    QueryRow("docs_stream_curate", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_docs_curate_verify", "complete")(
         graft.streaming.DocStreams.curatedSourceCounts(
             graft.streaming.DocStreams.readDocuments(s, dir)))
       replayed.orderBy("source")
-    }),
+    },
+      // batch twin of the streaming ingestion rollup: same gate arithmetic
+      // as curateCorpusSqlDuck's q CTE, count(DISTINCT fingerprint) per
+      // source = the stateful (source, fp) dropDuplicates + count
+      s"""WITH q AS (SELECT source, lang, text,
+        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
+        |    CASE WHEN length(text) > 0
+        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
+        |      ELSE 0.0 END AS alpha_ratio
+        |  FROM documents)
+        |SELECT source, CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_admitted
+        |FROM q
+        |WHERE lang = 'en' AND n_tokens >= 10 AND n_tokens <= 100000
+        |  AND alpha_ratio >= 0.5
+        |GROUP BY source ORDER BY source""".stripMargin),
 
     // BOUNDED-STATE twin of docs_stream_curate's dedup (VERDICT r14 #4):
     // retention-window exact dedup via dropDuplicatesWithinWatermark over
@@ -1531,14 +2314,28 @@ object SparkEntry {
     // emitted set then equals the batch DISTINCT over the gated docs.
     // DocStreamsSpec proves the state BOUND across a forced multi-batch
     // run (evicted keys + post-retention re-admission).
-    "docs_stream_dedup_bounded" -> ((s, dir) => {
+    QueryRow("docs_stream_dedup_bounded", (s, dir) => {
       val src = graft.streaming.DocStreams.readDocuments(s, dir)
       val dups = graft.streaming.DocStreams.readDocuments(s, dir)
         .filter(pmod(col("doc_id"), lit(3)) === 0)
       val replayed = replayStream(s, dir, "stream_docs_bounded_verify", "append")(
         graft.streaming.DocStreams.curatedDedupBounded(src.unionByName(dups)))
       replayed.orderBy("source", "fp")
-    }),
+    },
+      // the retention-window dedup admits each (source, fp) exactly once:
+      // the driven duplicates share their original's ingest_ts, so they land
+      // inside the retention window and are state-dropped — final emitted
+      // set = batch DISTINCT over the gated docs
+      s"""WITH q AS (SELECT source, text,
+        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
+        |    CASE WHEN length(text) > 0
+        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
+        |      ELSE 0.0 END AS alpha_ratio
+        |  FROM documents WHERE lang = 'en')
+        |SELECT DISTINCT source, md5(text) AS fp
+        |FROM q
+        |WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5
+        |ORDER BY source, fp""".stripMargin),
 
     // streaming NEAR-dup (VERDICT r15 #2): stateful MinHash-LSH bucket
     // membership (streaming/DocStreams.neardupBandVerdicts) — the stream
@@ -1550,7 +2347,7 @@ object SparkEntry {
     // iff it is the min doc_id in EVERY one of its band buckets; the
     // DocStreamsSpec twin drives eviction + re-admission with a short
     // retention across forced micro-batches.
-    "docs_stream_neardup_lsh" -> ((s, dir) => {
+    QueryRow("docs_stream_neardup_lsh", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_docs_neardup_verify", "append")(
         graft.streaming.DocStreams.neardupBandVerdicts(
           graft.streaming.DocStreams.readDocuments(s, dir)))
@@ -1559,7 +2356,27 @@ object SparkEntry {
         .filter(col("_m") === 0)
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
-    }),
+    },
+      // first-registrant LSH semantics (retention out-spans the fixture):
+      // admitted iff min doc_id in EVERY band bucket — i.e. no earlier doc
+      // shares any (bi, band). Same gates as the rest of the docs_stream
+      // family; same signature/band CTE construction as the batch LSH
+      // oracles (Dedup.sigsCteDuck/bucketsCteDuck) over the gated subset.
+      s"""WITH gd AS (SELECT doc_id, source, text,
+        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
+        |    CASE WHEN length(text) > 0
+        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
+        |      ELSE 0.0 END AS alpha_ratio
+        |  FROM documents WHERE lang = 'en'),
+        | g AS (SELECT doc_id, source, text FROM gd
+        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
+        | ${graft.ext.Dedup.toksCteDuck("g")}, ${graft.ext.Dedup.sigsCteDuck},
+        | ${graft.ext.Dedup.bucketsCteDuck},
+        | matched AS (SELECT DISTINCT y.doc_id FROM buckets x JOIN buckets y
+        |   ON x.bi = y.bi AND x.band = y.band AND x.doc_id < y.doc_id)
+        |SELECT g.doc_id, g.source FROM g
+        |WHERE g.doc_id NOT IN (SELECT doc_id FROM matched)
+        |ORDER BY g.doc_id""".stripMargin),
 
     // candidate-precision seam of the streaming near-dup (VERDICT r16 #3):
     // a matched verdict IS an LSH candidate pair (rep, doc_id), so the
@@ -1570,7 +2387,7 @@ object SparkEntry {
     // and both rows read one sink); oracle derives the candidate set in
     // closed form (rep = min doc_id per bucket) and scores it with the
     // exact distinct-unigram Jaccard.
-    "docs_stream_neardup_rescore" -> ((s, dir) => {
+    QueryRow("docs_stream_neardup_rescore", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_docs_neardup_verify", "append")(
         graft.streaming.DocStreams.neardupBandVerdicts(
           graft.streaming.DocStreams.readDocuments(s, dir)))
@@ -1578,7 +2395,33 @@ object SparkEntry {
         .select(col("rep").as("doc_a"), col("doc_id").as("doc_b")).distinct()
       Dedup.rescorePairs(cands, t(s, dir, "documents"))
         .orderBy("doc_a", "doc_b")
-    }),
+    },
+      // candidate rescore of the streaming near-dup's matched side output:
+      // the closed-form candidate set (rep = min doc_id per gated band
+      // bucket, candidate = every later bucket member) scored with the
+      // exact distinct-unigram Jaccard — |A∪B| = na + nb - |A∩B|, so the
+      // engine's i/(na+nb-i) and the oracle's i/len(union) divide the same
+      // integers
+      s"""WITH gd AS (SELECT doc_id, source, text,
+        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
+        |    CASE WHEN length(text) > 0
+        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
+        |      ELSE 0.0 END AS alpha_ratio
+        |  FROM documents WHERE lang = 'en'),
+        | g AS (SELECT doc_id, source, text FROM gd
+        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
+        | ${graft.ext.Dedup.toksCteDuck("g")}, ${graft.ext.Dedup.sigsCteDuck},
+        | ${graft.ext.Dedup.bucketsCteDuck},
+        | reps AS (SELECT bi, band, min(doc_id) AS rep FROM buckets GROUP BY bi, band),
+        | cands AS (SELECT DISTINCT r.rep AS doc_a, b.doc_id AS doc_b
+        |   FROM buckets b JOIN reps r
+        |   ON b.bi = r.bi AND b.band = r.band AND b.doc_id > r.rep),
+        | dt AS (SELECT doc_id, list_distinct(${TextOps.tokensSqlDuck("text")}) AS toks
+        |   FROM documents)
+        |SELECT c.doc_a, c.doc_b,
+        |  ${graft.ext.Dedup.jaccardExprDuck("a.toks", "b.toks")} AS jaccard
+        |FROM cands c JOIN dt a ON c.doc_a = a.doc_id JOIN dt b ON c.doc_b = b.doc_id
+        |ORDER BY doc_a, doc_b""".stripMargin),
 
     // stream-vs-STANDING-corpus dedup, EXACT tier (VERDICT r16 #1): the
     // nightly-ingest operator — a new-crawl stream anti-joined on content
@@ -1587,7 +2430,7 @@ object SparkEntry {
     // static side is distinct'd + persisted ONCE (DocStreamsSpec proves
     // single materialization across a forced multi-batch run with an
     // accumulator probe) and broadcast to each batch's join.
-    "docs_stream_vs_corpus_exact" -> ((s, dir) => {
+    QueryRow("docs_stream_vs_corpus_exact", (s, dir) => {
       val corpusFps = graft.streaming.DocStreams.corpusFingerprints(
         t(s, dir, "documents").filter(pmod(col("doc_id"), lit(2)) === 0))
       val replayed =
@@ -1596,7 +2439,22 @@ object SparkEntry {
             graft.streaming.DocStreams.readDocuments(s, dir), corpusFps))
         finally corpusFps.unpersist(false)
       replayed.orderBy("doc_id")
-    }),
+    },
+      // exact stream-vs-standing-corpus: admitted = gated crawl docs whose
+      // content fingerprint is absent from the even-doc_id standing corpus
+      s"""WITH gd AS (SELECT doc_id, source, text,
+        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
+        |    CASE WHEN length(text) > 0
+        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
+        |      ELSE 0.0 END AS alpha_ratio
+        |  FROM documents WHERE lang = 'en'),
+        | g AS (SELECT doc_id, source, text FROM gd
+        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
+        | corpus AS (SELECT DISTINCT md5(text) AS fp FROM documents
+        |  WHERE doc_id % 2 = 0)
+        |SELECT g.doc_id, g.source FROM g
+        |WHERE md5(g.text) NOT IN (SELECT fp FROM corpus)
+        |ORDER BY g.doc_id""".stripMargin),
 
     // stream-vs-STANDING-corpus dedup, NEAR-dup tier: band-bucket
     // membership against the static corpus's bucket table (batch-built
@@ -1605,7 +2463,7 @@ object SparkEntry {
     // stream-static join; admission = no band matched, the same sink
     // rollup as the stateful variant. Within-stream near-dups pass by
     // design — this tier answers "is it new vs the corpus".
-    "docs_stream_vs_corpus_neardup" -> ((s, dir) => {
+    QueryRow("docs_stream_vs_corpus_neardup", (s, dir) => {
       val buckets = graft.streaming.DocStreams.corpusBandBuckets(
         t(s, dir, "documents").filter(pmod(col("doc_id"), lit(2)) === 0))
       val replayed =
@@ -1618,7 +2476,28 @@ object SparkEntry {
         .filter(col("_m") === 0)
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
-    }),
+    },
+      // near-dup stream-vs-standing-corpus: signatures are per-document, so
+      // buckets over ALL documents filtered to each side equal per-side
+      // recomputation (the incrementalIngestNearDupSqlDuck rationale);
+      // admitted = gated docs sharing no (bi, band) with the even-doc corpus
+      s"""WITH gd AS (SELECT doc_id, source, text,
+        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
+        |    CASE WHEN length(text) > 0
+        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
+        |      ELSE 0.0 END AS alpha_ratio
+        |  FROM documents WHERE lang = 'en'),
+        | g AS (SELECT doc_id, source, text FROM gd
+        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
+        | ${graft.ext.Dedup.toksCteDuck("documents")}, ${graft.ext.Dedup.sigsCteDuck},
+        | ${graft.ext.Dedup.bucketsCteDuck},
+        | sb AS (SELECT b.doc_id, b.bi, b.band FROM buckets b JOIN g USING (doc_id)),
+        | cb AS (SELECT DISTINCT bi, band FROM buckets WHERE doc_id % 2 = 0),
+        | matched AS (SELECT DISTINCT s.doc_id FROM sb s
+        |   JOIN cb c ON s.bi = c.bi AND s.band = c.band)
+        |SELECT g.doc_id, g.source FROM g
+        |WHERE g.doc_id NOT IN (SELECT doc_id FROM matched)
+        |ORDER BY g.doc_id""".stripMargin),
 
     // precision seam of the CORPUS tier: corpus buckets carry their
     // representative (min corpus doc_id), so a matched stream row is a
@@ -1627,7 +2506,7 @@ object SparkEntry {
     // re-crawled corpus doc legitimately pairs with itself (jaccard 1.0)
     // when it is its own bucket's representative. Shares the stream +
     // staged sink with docs_stream_vs_corpus_neardup.
-    "docs_stream_vs_corpus_rescore" -> ((s, dir) => {
+    QueryRow("docs_stream_vs_corpus_rescore", (s, dir) => {
       val buckets = graft.streaming.DocStreams.corpusBandBuckets(
         t(s, dir, "documents").filter(pmod(col("doc_id"), lit(2)) === 0))
       val replayed =
@@ -1639,9 +2518,34 @@ object SparkEntry {
         .select(col("rep").as("doc_a"), col("doc_id").as("doc_b")).distinct()
       Dedup.rescorePairs(cands, t(s, dir, "documents"))
         .orderBy("doc_a", "doc_b")
-    }),
+    },
+      // corpus-tier candidate rescore: candidates = (corpus bucket rep,
+      // matched stream doc) pairs, rep = min even doc_id per bucket;
+      // self-pairs (a re-crawled corpus doc meeting its own bucket) are
+      // legitimate and score 1.0
+      s"""WITH gd AS (SELECT doc_id, source, text,
+        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
+        |    CASE WHEN length(text) > 0
+        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
+        |      ELSE 0.0 END AS alpha_ratio
+        |  FROM documents WHERE lang = 'en'),
+        | g AS (SELECT doc_id, source, text FROM gd
+        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
+        | ${graft.ext.Dedup.toksCteDuck("documents")}, ${graft.ext.Dedup.sigsCteDuck},
+        | ${graft.ext.Dedup.bucketsCteDuck},
+        | sb AS (SELECT b.doc_id, b.bi, b.band FROM buckets b JOIN g USING (doc_id)),
+        | cb AS (SELECT bi, band, min(doc_id) AS rep FROM buckets
+        |   WHERE doc_id % 2 = 0 GROUP BY bi, band),
+        | cands AS (SELECT DISTINCT c.rep AS doc_a, s.doc_id AS doc_b
+        |   FROM sb s JOIN cb c ON s.bi = c.bi AND s.band = c.band),
+        | dt AS (SELECT doc_id, list_distinct(${TextOps.tokensSqlDuck("text")}) AS toks
+        |   FROM documents)
+        |SELECT c.doc_a, c.doc_b,
+        |  ${graft.ext.Dedup.jaccardExprDuck("a.toks", "b.toks")} AS jaccard
+        |FROM cands c JOIN dt a ON c.doc_a = a.doc_id JOIN dt b ON c.doc_b = b.doc_id
+        |ORDER BY doc_a, doc_b""".stripMargin),
 
-    "events_stream_tumbling" -> ((s, dir) => {
+    QueryRow("events_stream_tumbling", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_tumbling_verify", "complete")(
         graft.streaming.EventStreams.tumblingCounts(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1649,7 +2553,12 @@ object SparkEntry {
         .select(date_format(col("hr"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("event_type"), col("n"), dstr(col("sum_value")).as("sum_value"))
         .orderBy("hr", "event_type")
-    }),
+    },
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr, event_type,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM events GROUP BY date_trunc('hour', ts), event_type
+        |ORDER BY hr, event_type""".stripMargin),
 
     // UPDATE output mode end-to-end (the one OutputMode not previously
     // demonstrated): the fixture replays as time-range-staged files, one
@@ -1657,7 +2566,7 @@ object SparkEntry {
     // id via foreachBatch, and the LAST emission per (hr, event_type) —
     // update mode's final upsert — must equal the batch aggregate exactly
     // (contiguous in-order ranges: the watermark drops nothing)
-    "events_stream_tumbling_update" -> ((s, dir) => {
+    QueryRow("events_stream_tumbling_update", (s, dir) => {
       // driver-resident emissions: bounded by (open hours × event_types) ×
       // micro-batches — the same bound as a memory sink of the aggregate,
       // a verification-harness pull, not the production path (which is the
@@ -1679,13 +2588,21 @@ object SparkEntry {
         .select(date_format(col("hr"), "yyyy-MM-dd HH:mm:ss").as("hr"),
           col("event_type"), col("n"), dstr(col("sum_value")).as("sum_value"))
         .orderBy("hr", "event_type")
-    }),
+    },
+      // update mode's final per-key upsert = the complete aggregate (nothing
+      // is late in the staged in-order replay), so the oracle is the same
+      // batch SQL as events_stream_tumbling
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr, event_type,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM events GROUP BY date_trunc('hour', ts), event_type
+        |ORDER BY hr, event_type""".stripMargin),
 
     // exact distinct users per hour as a TWO-stateful-operator streaming
     // pipeline (streaming/EventStreams.distinctUsers): watermarked dedup on
     // (window, user) → windowed count, append mode — a window emits once
     // its end passes the watermark; the oracle applies the same cut
-    "events_stream_distinct_users" -> ((s, dir) => {
+    QueryRow("events_stream_distinct_users", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_distinct_verify", "append")(
         graft.streaming.EventStreams.distinctUsers(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1693,7 +2610,20 @@ object SparkEntry {
         .select(date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("n_users"))
         .orderBy("w_start")
-    }),
+    },
+      // watermark-finalized windows only: window emits once its END ≤ the
+      // final watermark ((max event-time ms) − 1h, ms-truncated like Spark's
+      // watermark tracker) — the events_stream_join_outer precedent
+      """WITH wm AS (SELECT ((max(epoch_us(ts)) // 1000 - 3600000) * 1000) AS wm_us
+        |   FROM events),
+        | d AS (SELECT DISTINCT (epoch_us(ts) // 3600000000) * 3600000000 AS ws,
+        |     user_id
+        |   FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL)
+        |SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS w_start,
+        |  CAST(count(*) AS BIGINT) AS n_users
+        |FROM d CROSS JOIN wm
+        |WHERE ws + 3600000000 <= wm.wm_us
+        |GROUP BY ws ORDER BY w_start""".stripMargin),
 
     // 9th streaming oracle row — the CHAINED interval-join → windowed-agg
     // shape (two stateful joins feeding a stateful aggregation in one
@@ -1705,7 +2635,7 @@ object SparkEntry {
     // join→agg is engine-internal, so BOTH sides restrict to windows whose
     // end is ≥ 1 h before the last anchor — conservatively inside any
     // propagation rule (the EventStreamsSpec batch-equivalence precedent).
-    "events_stream_range_join" -> ((s, dir) => {
+    QueryRow("events_stream_range_join", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_rangejoin_verify", "append")(
         graft.streaming.EventStreams.rangeJoinCounts(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1721,7 +2651,26 @@ object SparkEntry {
         .select(unix_micros(col("w_end")).as("w_end_us"), col("anchor_id"),
           col("n_events"), dstr(col("sum_value")).as("sum_value"))
         .orderBy("anchor_id")
-    }),
+    },
+      // batch twin of the chained interval-join → windowed-agg streaming
+      // query, restricted to the same conservative finalization cut the
+      // Spark side applies (window end ≥ 1 h before the last anchor)
+      """WITH a AS (SELECT event_id AS anchor_id, user_id AS a_user,
+        |     epoch_us(ts) AS a_us
+        |   FROM events WHERE event_type = 'purchase'
+        |     AND user_id IS NOT NULL AND ts IS NOT NULL),
+        | p AS (SELECT user_id AS p_user, epoch_us(ts) AS p_us, value
+        |   FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        | cut AS (SELECT max(a_us) - 3600000000 AS cutoff_us FROM a),
+        | j AS (SELECT a.anchor_id, a.a_us, p.value
+        |   FROM a JOIN p ON p.p_user = a.a_user
+        |     AND p.p_us >= a.a_us AND p.p_us < a.a_us + 600000000)
+        |SELECT ((a_us // 600000000) + 1) * 600000000 AS w_end_us, anchor_id,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
+        |FROM j CROSS JOIN cut
+        |WHERE ((a_us // 600000000) + 1) * 600000000 <= cut.cutoff_us
+        |GROUP BY 1, 2 ORDER BY anchor_id""".stripMargin),
 
     // 10th streaming oracle row — the watermark-BUFFERED out-of-order
     // funnel (mapGroupsWithState carrying a finalized fold + an
@@ -1732,7 +2681,7 @@ object SparkEntry {
     // freely at any sorted cut; EventStreamsSpec proves the multi-batch
     // disorder case). Sentinel −1 for unreached steps keeps the oracle
     // hash path null-free (the events_stream_join_outer precedent).
-    "events_stream_funnel" -> ((s, dir) => {
+    QueryRow("events_stream_funnel", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_funnel_verify", "update")(
         graft.streaming.EventStreams.funnelStateBuffered(
             graft.streaming.EventStreams.readEvents(s, dir)))
@@ -1746,7 +2695,28 @@ object SparkEntry {
           coalesce(col("ts3_us"), lit(-1L)).as("ts3_us"),
           col("step_reached"), col("n_seen"))
         .orderBy("user_id")
-    }),
+    },
+      // batch funnel with the streaming row's null contract + per-user
+      // arrival count; −1 sentinels for unreached steps (null-free hash)
+      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events
+        |   WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+        |     AND ts IS NOT NULL),
+        | s1 AS (SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
+        |   OVER (PARTITION BY user_id) AS t1 FROM e),
+        | s2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND us > t1
+        |   THEN us END) OVER (PARTITION BY user_id) AS t2 FROM s1),
+        | s3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND us > t2
+        |   THEN us END) OVER (PARTITION BY user_id) AS t3 FROM s2)
+        |SELECT user_id,
+        |  coalesce(min(t1), -1) AS ts1_us,
+        |  coalesce(min(t2), -1) AS ts2_us,
+        |  coalesce(min(t3), -1) AS ts3_us,
+        |  CAST(CASE WHEN min(t3) IS NOT NULL THEN 3
+        |            WHEN min(t2) IS NOT NULL THEN 2
+        |            WHEN min(t1) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
+        |    AS step_reached,
+        |  CAST(count(*) AS BIGINT) AS n_seen
+        |FROM s3 GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // 13th streaming oracle row — the O(1)-state ordered-arrival funnel
     // (mapGroupsWithState holding just three step timestamps). Within one
@@ -1755,7 +2725,7 @@ object SparkEntry {
     // ordered-stream contract by construction; the buffered variant
     // (events_stream_funnel) covers cross-batch disorder. Oracle = the
     // strict-sequence batch funnel with the same null contract.
-    "events_stream_funnel_o1" -> ((s, dir) => {
+    QueryRow("events_stream_funnel_o1", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_funnel1_verify", "update")(
         graft.streaming.EventStreams.funnelState(
             graft.streaming.EventStreams.readEvents(s, dir)).toDF)
@@ -1770,7 +2740,28 @@ object SparkEntry {
           coalesce(col("ts3_us"), lit(-1L)).as("ts3_us"),
           col("step_reached"))
         .orderBy("user_id")
-    }),
+    },
+      // batch twin of the O(1)-state ordered funnel: identical strict-
+      // sequence semantics to events_stream_funnel's oracle minus the
+      // arrival counter
+      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events
+        |   WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+        |     AND ts IS NOT NULL),
+        | s1 AS (SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
+        |   OVER (PARTITION BY user_id) AS t1 FROM e),
+        | s2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND us > t1
+        |   THEN us END) OVER (PARTITION BY user_id) AS t2 FROM s1),
+        | s3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND us > t2
+        |   THEN us END) OVER (PARTITION BY user_id) AS t3 FROM s2)
+        |SELECT user_id,
+        |  coalesce(min(t1), -1) AS ts1_us,
+        |  coalesce(min(t2), -1) AS ts2_us,
+        |  coalesce(min(t3), -1) AS ts3_us,
+        |  CAST(CASE WHEN min(t3) IS NOT NULL THEN 3
+        |            WHEN min(t2) IS NOT NULL THEN 2
+        |            WHEN min(t1) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
+        |    AS step_reached
+        |FROM s3 GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // 11th streaming oracle row — mapGroupsWithState running per-user
     // totals in EXACT BIGINT-cents state (restart-deterministic by
@@ -1778,7 +2769,7 @@ object SparkEntry {
     // exact total, so the oracle's DECIMAL-sum → DOUBLE cast lands on the
     // identical bits). Final row per user = max n_events (strictly
     // increasing per emission).
-    "events_stream_user_totals" -> ((s, dir) => {
+    QueryRow("events_stream_user_totals", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_utotals_verify", "update")(
         graft.streaming.EventStreams.userTotalsState(
             graft.streaming.EventStreams.readEvents(s, dir)).toDF)
@@ -1788,7 +2779,15 @@ object SparkEntry {
         .withColumn("_rk", row_number().over(rk)).filter(col("_rk") === 1)
         .select(col("user_id"), col("n_events"), col("sum_value"))
         .orderBy("user_id")
-    }),
+    },
+      // batch twin of the exact-cents stateful totals: count(*) + null-
+      // skipping DECIMAL sum cast to DOUBLE (the correctly-rounded double of
+      // the exact total = the streaming emission's cents/100.0)
+      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(coalesce(sum(CAST(value AS DECIMAL(18,2))),
+        |    CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events WHERE user_id IS NOT NULL
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // 12th streaming oracle row — the bounded-state quantile sketch
     // (mapGroupsWithState holding the k smallest (md5(event_id), value)
@@ -1797,7 +2796,7 @@ object SparkEntry {
     // sketch bit-for-bit, so the oracle is the same md5-ordered sample +
     // quantile_cont shape the green sketch_sample_quantiles_grouped row
     // uses. Final row per type = max n_seen.
-    "events_stream_quantile_profile" -> ((s, dir) => {
+    QueryRow("events_stream_quantile_profile", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_qprofile_verify", "update")(
         graft.streaming.EventStreams.quantileProfileState(
             graft.streaming.EventStreams.readEvents(s, dir)).toDF)
@@ -1808,14 +2807,30 @@ object SparkEntry {
         .select(col("event_type"), col("n_seen"), col("sample_n"),
           col("q50"), col("q90"))
         .orderBy("event_type")
-    }),
+    },
+      // batch twin of the incremental hash-min-k quantile sketch state: the
+      // same md5-ordered deterministic sample + quantile_cont interpolation
+      // as the green sketch_sample_quantiles_grouped row
+      """WITH e AS (SELECT event_type, md5(CAST(event_id AS VARCHAR)) AS h,
+        |    CAST(value AS DOUBLE) AS v
+        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
+        | n AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_seen
+        |   FROM e GROUP BY 1),
+        | r AS (SELECT event_type, v, row_number() OVER
+        |     (PARTITION BY event_type ORDER BY h, v) AS rn FROM e)
+        |SELECT r.event_type, n.n_seen, CAST(count(*) AS BIGINT) AS sample_n,
+        |  quantile_cont(v, 0.5) AS q50, quantile_cont(v, 0.9) AS q90
+        |FROM r JOIN n ON r.event_type = n.event_type
+        |WHERE rn <= 64
+        |GROUP BY r.event_type, n.n_seen
+        |ORDER BY r.event_type""".stripMargin),
 
     // streaming exact dedup by event id (EventStreams.dedupEvents /
     // dropDuplicatesWithinWatermark) — driven with REAL duplicates: the
     // stream is the source unioned with a re-read of every third event, so
     // the row proves state-backed drop behavior, not a no-op pass-through.
     // Oracle = each event id exactly once (batch DISTINCT).
-    "events_stream_dedup" -> ((s, dir) => {
+    QueryRow("events_stream_dedup", (s, dir) => {
       val src = graft.streaming.EventStreams.readEvents(s, dir)
       val dups = graft.streaming.EventStreams.readEvents(s, dir)
         .filter(pmod(col("event_id"), lit(3)) === 0)
@@ -1824,39 +2839,59 @@ object SparkEntry {
       replayed
         .select(col("event_id"), col("user_id"), col("event_type"))
         .orderBy("event_id")
-    }),
+    },
+      // streaming dedup with injected duplicate copies → exactly one row per
+      // event id survives (the duplicates exist only on the Spark stream
+      // side, so the base table IS the expected output)
+      """SELECT event_id, user_id, event_type FROM events
+        |ORDER BY event_id""".stripMargin),
 
     // stream-stream INNER windowed join (EventStreams.clickPurchaseJoin):
     // each purchase joins same-user clicks in the preceding hour; inner
     // matches emit as soon as both sides arrive, so unlike the LEFT OUTER
     // twin no watermark-finalization cut is needed — oracle is the plain
     // batch range join
-    "events_stream_join_inner" -> ((s, dir) => {
+    QueryRow("events_stream_join_inner", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_joininner_verify", "append")(
         graft.streaming.EventStreams.clickPurchaseJoin(
             graft.streaming.EventStreams.readEvents(s, dir)))
       replayed
         .select(col("purchase_id"), col("click_id"), col("user_id"))
         .orderBy("purchase_id", "click_id")
-    }),
+    },
+      // inner stream-stream join: all matches emit once both sides arrive —
+      // no finalization cut, so the oracle is the plain batch range join
+      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
+        |  p.user_id
+        |FROM events p JOIN events c ON p.user_id = c.user_id
+        |  AND p.event_type = 'purchase' AND c.event_type = 'click'
+        |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
+        |ORDER BY purchase_id, click_id""".stripMargin),
 
     // stream-stream LEFT SEMI join: purchases gated on any same-user click
     // in the preceding hour, emitted at most once (no per-click fan-out) —
     // completes the streaming join matrix; batch twin is the EXISTS form
-    "events_stream_join_semi" -> ((s, dir) => {
+    QueryRow("events_stream_join_semi", (s, dir) => {
       val replayed = replayStream(s, dir, "stream_joinsemi_verify", "append")(
         graft.streaming.EventStreams.clickPurchaseSemi(
             graft.streaming.EventStreams.readEvents(s, dir)))
       replayed
         .select(col("purchase_id"), col("user_id"))
         .orderBy("purchase_id")
-    }),
+    },
+      // stream-stream left semi: the EXISTS twin of the inner join's oracle
+      """SELECT p.event_id AS purchase_id, p.user_id
+        |FROM events p WHERE p.event_type = 'purchase' AND EXISTS (
+        |  SELECT 1 FROM events c WHERE c.event_type = 'click'
+        |    AND c.user_id = p.user_id
+        |    AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts)
+        |ORDER BY purchase_id""".stripMargin),
 
     // stream-static ANTI join (EventStreams.filterBlocklisted): drop every
     // event whose user is on a static blocklist (every 10th user) — the
     // at-ingest curation/PII gate in streaming form; static side broadcast
     // per micro-batch, zero streaming state
-    "events_stream_blocklist" -> ((s, dir) => {
+    QueryRow("events_stream_blocklist", (s, dir) => {
       // persisted (r17): Spark re-evaluates a stream-static join's STATIC
       // side every micro-batch — unpersisted, the events scan + distinct
       // re-ran per batch (the vs_corpus rows already persist their static
@@ -1870,2309 +2905,66 @@ object SparkEntry {
       replayed
         .select(col("event_id"), col("user_id"), col("event_type"))
         .orderBy("event_id")
-    }),
+    },
+      // stream-static anti join: events of blocklisted (user_id % 10 = 3)
+      // users dropped, everything else passes through unchanged
+      """SELECT event_id, user_id, event_type FROM events
+        |WHERE user_id IS NULL OR user_id % 10 <> 3
+        |ORDER BY event_id""".stripMargin),
 
     // Tukey-fence outliers on EXACT type-1 quartiles (value-domain
     // bisection, never a sort): two scalar bounds, one pushed-down filter
-    "events_outliers_iqr" -> ((s, dir) =>
-      graft.ext.Analytics.outliersIqr(t(s, dir, "events")).orderBy("event_id")),
+    QueryRow("events_outliers_iqr", (s, dir) =>
+      graft.ext.Analytics.outliersIqr(t(s, dir, "events")).orderBy("event_id"),
+      graft.ext.Analytics.outliersIqrSqlDuck()),
 
     // per-type min-max scaling: comparisons not sums, so bit-deterministic;
     // tiny stats side broadcast back onto the stream
-    "events_minmax_scale" -> ((s, dir) =>
-      graft.ext.Analytics.minmaxScale(t(s, dir, "events")).orderBy("event_id")),
+    QueryRow("events_minmax_scale", (s, dir) =>
+      graft.ext.Analytics.minmaxScale(t(s, dir, "events")).orderBy("event_id"),
+      graft.ext.Analytics.minmaxScaleSqlDuck),
 
     // winsorization to EXACT [p05, p95] fences (value-domain bisection, two
     // broadcast scalars, least/greatest clip -- every output double is an
     // input double)
-    "events_winsorize" -> ((s, dir) =>
-      graft.ext.Analytics.winsorize(t(s, dir, "events")).orderBy("event_id")),
+    QueryRow("events_winsorize", (s, dir) =>
+      graft.ext.Analytics.winsorize(t(s, dir, "events")).orderBy("event_id"),
+      graft.ext.Analytics.winsorizeSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row quantile-fence aggregate (two broadcast scalars)")),
 
     // robust median/MAD outliers: the exact bisection path composed over a
     // DERIVED column (|v - median|), fences again pushed into the scan
-    "events_outliers_mad" -> ((s, dir) =>
-      graft.ext.Analytics.outliersMad(t(s, dir, "events")).orderBy("event_id")),
+    QueryRow("events_outliers_mad", (s, dir) =>
+      graft.ext.Analytics.outliersMad(t(s, dir, "events")).orderBy("event_id"),
+      graft.ext.Analytics.outliersMadSqlDuck()),
 
     // fixed-width histogram: bucket-count output, map-side combined
-    "events_value_histogram" -> ((s, dir) =>
-      graft.ext.Analytics.valueHistogram(t(s, dir, "events")).orderBy("bucket")),
+    QueryRow("events_value_histogram", (s, dir) =>
+      graft.ext.Analytics.valueHistogram(t(s, dir, "events")).orderBy("bucket"),
+      graft.ext.Analytics.valueHistogramSqlDuck()),
 
     // semi-structured extraction from the events `props` JSON column: the
     // typed parser (from_json, codegen'd JacksonParser) and the path
     // extractor (get_json_object) must agree with each other AND with the
     // oracle's json_extract — three independent JSON readers, one value
-    "events_json_extract" -> ((s, dir) =>
+    QueryRow("events_json_extract", (s, dir) =>
       t(s, dir, "events")
         .select(col("event_id"),
           from_json(col("props"), "k BIGINT", Map.empty[String, String])
             .getField("k").as("k_typed"),
           get_json_object(col("props"), "$.k").cast("long").as("k_path"))
-        .orderBy("event_id")),
-
-    // per-group EXACT quantiles: all (group, prob) brackets bisect in
-    // lockstep — one aggregation per round, O(groups·probs) driver state
-    "events_quantile_selection_grouped" -> ((s, dir) =>
-      graft.ext.Sketch.exactQuantileDiscByGroup(
-        t(s, dir, "events"), "event_type", "value").orderBy("event_type", "prob")),
-
-    // incremental corpus update: accept incoming docs whose canonical
-    // fingerprint is new to the existing corpus AND first within the batch
-    "pipeline_incremental" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ext.Pipelines.incrementalIngest(
-        d.filter(col("source") === "src0"), d.filter(col("source") =!= "src0"))
-        .select("doc_id", "source", "lang").orderBy("doc_id")
-    }),
-
-    // curriculum length-bucketing: quartile edges from the deterministic
-    // sample sketch, binning as one codegen'd CASE over the scan
-    "sample_length_quartiles" -> ((s, dir) =>
-      graft.ext.Pipelines.lengthQuartiles(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // per-source cap (keep best n per source): rank <= n over a partitioned
-    // window -- plans as WindowGroupLimit, map-side pre-pruned to n per
-    // source before the exchange
-    "pipeline_source_cap" -> ((s, dir) =>
-      graft.ext.Pipelines.sourceCap(t(s, dir, "documents"), 15)
-        .orderBy("source", "rank")),
-
-    // deterministic global training-order permutation in md5(doc_id) order
-    // via the bucketed global rank -- reproducible corpus shuffle with no
-    // single-partition sort anywhere
-    "pipeline_shuffle_order" -> ((s, dir) =>
-      graft.ext.Pipelines.shuffleOrder(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
-    // the near-duplicate form of daily ingest: reject incoming docs
-    // LSH+Jaccard-similar to the existing corpus, then keep-first within
-    // the batch — the production shape (salted cross candidates, slim
-    // bucket relations)
-    "pipeline_incremental_neardup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ext.Pipelines.incrementalIngestNearDup(
-        d.filter(col("source") === "src0"), d.filter(col("source") =!= "src0"))
-        .select("doc_id", "source", "lang").orderBy("doc_id")
-    }),
-
-    "s6_dict_lookup" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_customers"))
-        .orderBy("r_name", "n_name")),
-
-    // ---- LLM-pipeline extensions (north star / SURVEY.md §7.2 M5) --------
-    "dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(t(s, dir, "documents")).orderBy("h")),
-
-    "dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashSignatures(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "dedup_lsh_pairs" -> ((s, dir) =>
-      Dedup.lshCandidatePairs(Dedup.minhashSignatures(t(s, dir, "documents")))
-        .orderBy("doc_a", "doc_b")),
-
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhash(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // transitive dup clusters over LSH band buckets: bipartite doc–bucket
-    // label propagation (the candidate-pair graph is never materialized);
-    // the DuckDB oracle recomputes the same components independently via a
-    // recursive reachability CTE over the pair graph
-    "dedup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.clusterByBuckets(docs,
-        Dedup.bandBuckets(Dedup.minhashSignatures(docs))).orderBy("doc_id")
-    }),
-
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.jaccardPairs(t(s, dir, "documents")).orderBy("doc_a", "doc_b")),
-
-    // sorted-neighborhood near-dup pairs (ext/Dedup.sortedNeighborhoodPairs,
-    // Hernández & Stolfo SIGMOD'95): normalized-prefix sort key via the
-    // range-bucketed global position, window-5 neighbor equi-join, exact
-    // Jaccard ≥ 0.5 verify — the linear-candidate blocking alternative
-    "dedup_sorted_neighborhood" -> ((s, dir) =>
-      Dedup.sortedNeighborhoodPairs(t(s, dir, "documents"))
-        .orderBy("doc_a", "doc_b")),
-
-    // EXACT simhash pairs at Hamming ≤ 3 by pigeonhole banding (ext/Dedup
-    // .simhashHammingPairs, Manku et al. WWW'07): 4 bands of 4 bits — a
-    // ≤3-bit difference must leave one band intact, so the (band, value)
-    // equi-join is complete; XOR+popcount verifies, all integer-exact
-    "dedup_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashHammingPairs(t(s, dir, "documents"))
-        .orderBy("doc_a", "doc_b")),
-
-    // PageRank centrality over the LSH near-dup graph (ext/Graph.pageRank):
-    // which docs sit at the CENTER of a duplication neighborhood — fixed
-    // 3-iteration damped walk in exact scaled-BIGINT arithmetic (bit-stable
-    // under any partitioning; oracle unrolls the identical integer rounds)
-    "graph_pagerank" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ext.Graph.pageRank(docs,
-          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
-        .orderBy("doc_id")
-    }),
-
-    // per-node triangle count + clustering coefficient (ext/Graph
-    // .triangles, Suri–Vassilvitskii node-iterator): oriented wedge join
-    // bounded by Σ outdeg² — which docs sit inside near-cliques of mutual
-    // near-dups (template material) vs hub positions
-    "graph_triangles" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ext.Graph.triangles(docs,
-          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
-        .orderBy("doc_id")
-    }),
-
-    // common-neighbor link prediction (ext/Graph.linkPrediction): non-edge
-    // pairs ranked by shared near-dup neighbors — the pairs an LSH pass
-    // likely MISSED and a curation sweep should re-check at lower θ; wedge
-    // middles capped at deg ≤ 64 (Adamic-Adar rationale), so wedge volume
-    // is n·cap²-bounded — template mega-hubs can't blow the join (they did
-    // at sf0.1 uncapped: spill-to-disk exhaustion); TakeOrdered top-k
-    "graph_link_prediction" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ext.Graph.linkPrediction(
-        Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
-    }),
-
-    // k-core peeling (ext/Graph.kCore): dense near-dup neighborhoods that
-    // survive iterative degree-< k deletion — near-cliques stay, hubs
-    // don't; fixed rounds, each one degree agg + survivor semi-join, with
-    // a per-node `converged` bit so insufficient rounds are VISIBLE
-    "graph_kcore" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ext.Graph.kCore(docs,
-          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
-        .orderBy("doc_id")
-    }),
-
-    // synchronous fixed-round label-propagation communities (ext/Graph
-    // .lpaCommunities, Raghavan et al. 2007): per-round edge→label
-    // equi-join + per-node argmax with smallest-label ties — splits a
-    // component along density where CC merges everything reachable
-    "graph_lpa_communities" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ext.Graph.lpaCommunities(docs,
-          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
-        .orderBy("doc_id")
-    }),
-
-    // EXACT all-pairs Jaccard ≥ θ by prefix filtering (ext/Dedup
-    // .jaccardPrefixJoin, SSJoin/AllPairs): rarity-ordered prefixes +
-    // length filter give a complete candidate set with no LSH false
-    // negatives — every join an equi-join; oracle = the quadratic form
-    "dedup_jaccard_prefix" -> ((s, dir) =>
-      Dedup.jaccardPrefixJoin(t(s, dir, "documents"), theta = 0.8)
-        .orderBy("doc_a", "doc_b")),
-
-    // directed containment |A∩B|/|A| ≥ θ (ext/Dedup.containmentPrefixJoin):
-    // quote/excerpt detection the Jaccard length filter structurally hides;
-    // A-prefixes against B's full shingle index, no |B| upper bound
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.containmentPrefixJoin(t(s, dir, "documents"), theta = 0.8)
-        .orderBy("doc_a", "doc_b")),
-
-    // cross-source contamination matrix (ext/Dedup.crossSourceOverlap):
-    // distinct shared w-shingles per source pair + overlap coefficient —
-    // distinct (shingle, source) projection BEFORE the self-join bounds
-    // the per-key fan-out by |sources|, output by |sources|²
-    "dedup_cross_source_overlap" -> ((s, dir) =>
-      Dedup.crossSourceOverlap(t(s, dir, "documents"))),
-
-    // LSH candidate QUALITY eval (ext/Dedup.lshEval): banded-MinHash
-    // candidates scored against the EXACT prefix join at θ over the same
-    // shingle sets — tp / false negatives / precision / recall in one row;
-    // the number that decides whether the band config is safe to ship
-    "dedup_lsh_eval" -> ((s, dir) =>
-      Dedup.lshEval(t(s, dir, "documents"))),
-
-    "dedup_keep_first" -> ((s, dir) =>
-      Dedup.dropNearDuplicates(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // keep-first with LSH candidates (band collisions, not char-length
-    // blocking); pair volume tracks duplicate density
-    "dedup_keep_first_lsh" -> ((s, dir) =>
-      Dedup.dropNearDuplicatesLsh(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // keep-first vs bucket REPRESENTATIVES: candidate volume linear in the
-    // corpus at any duplicate density — the shape that survives 100 TB of
-    // boilerplate (see the round-7 10x probe in NOTES.md)
-    "dedup_keep_first_lsh_rep" -> ((s, dir) =>
-      Dedup.dropNearDuplicatesLshRep(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // quality-aware canonical selection (the RefinedWeb/FineWeb rule): per
-    // LSH-connected cluster keep the best member by an exact-integer key
-    // (n_alpha, n_chars, -doc_id); one max-of-struct aggregate over the
-    // adjudicated bipartite label propagation — no windows
-    "dedup_keep_best" -> ((s, dir) =>
-      Dedup.keepBestInCluster(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "dedup_embedding_cosine" -> ((s, dir) =>
-      Similarity.cosinePairs(t(s, dir, "embeddings")).orderBy("id_a", "id_b")),
-
-    "dedup_embedding_cosine_bucketed" -> ((s, dir) =>
-      Similarity.cosinePairsBucketed(t(s, dir, "embeddings")).orderBy("id_a", "id_b")),
-
-    "sim_topk_bruteforce" -> ((s, dir) =>
-      Similarity.bruteForceTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
-
-    // k-NN label classification eval (ext/Similarity.knnClassify):
-    // majority vote over the exact-cosine top-10 of 64 broadcast query
-    // vectors, per-label accuracy — classification quality of the
-    // embedding space measured, not assumed; linear scoring, never
-    // all-pairs (the dedup_lsh_eval contract)
-    "sim_knn_classify" -> ((s, dir) =>
-      Similarity.knnClassify(t(s, dir, "embeddings")).orderBy("label")),
-
-    // dimension-truncation recall audit (ext/Similarity.matryoshkaRecall):
-    // exact top-10 at 64 dims vs at the first 16 — measures whether a 4×
-    // narrower index would hold recall, per query, before anyone ships it
-    "sim_matryoshka_recall" -> ((s, dir) =>
-      Similarity.matryoshkaRecall(t(s, dir, "embeddings"))),
-
-    // approximate by DESIGN (LSH recall < 1), exact by CHECK: the oracle
-    // replicates the seeded bucket arithmetic, so results hash-match
-    "sim_ann_lsh" -> ((s, dir) =>
-      Similarity.annTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
-
-    "sim_ivf_topk" -> ((s, dir) =>
-      Similarity.ivfTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
-
-    // PQ/ADC top-k (Jégou et al. 2011): per-subspace Lloyd codebooks, m
-    // codes per vector, query-table equi-join on (subspace, code), exact
-    // integer micro-unit distance sums (see Similarity.pqTopK)
-    "sim_pq_adc" -> ((s, dir) =>
-      Similarity.pqTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
-
-    // PQ recall@k against the exact L2 ranking — dual-pass evaluation row
-    // by design (the lshEval / matryoshka precedent)
-    "sim_pq_recall" -> ((s, dir) =>
-      Similarity.pqRecall(t(s, dir, "embeddings"))),
-
-    // IVFADC (§IV of the PQ paper): IVF cluster pruning then ADC re-rank —
-    // the billion-scale composition; ADC runs only on the probed candidates
-    "sim_ivfpq_topk" -> ((s, dir) =>
-      Similarity.ivfPqTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank")),
-
-    // SRP-LSH recall@k vs the exact cosine ranking — the third leg of the
-    // eval trilogy (lsh_eval: Jaccard candidates; pq_recall: quantizer;
-    // this: the SRP bucket structure). Dual-pass by design.
-    "sim_ann_recall" -> ((s, dir) =>
-      Similarity.annRecall(t(s, dir, "embeddings"))),
-
-    // SemDeDup (Abbas et al. 2023): coarse k-means clusters, then drop any
-    // vector with a lower-id cosine>theta neighbor in its own cluster —
-    // the published within-cluster collapse of the all-pairs embedding
-    // dedup; pair volume bounded by the cluster equi-join
-    "dedup_semantic" -> ((s, dir) =>
-      Similarity.semanticDedup(t(s, dir, "embeddings")).orderBy("vec_id")),
-
-    // hard-negative mining (DPR/ANCE): per anchor the most-similar
-    // NON-near-dup neighbors from the IVF pool — near-dups are false
-    // negatives, cut at the dedup family's 0.4 cosine threshold
-    "sim_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(t(s, dir, "embeddings"))
-        .orderBy("query_id", "neg_rank")),
-
-    "text_quality" -> ((s, dir) =>
-      TextOps.quality(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // Gopher/MassiveText rule-bundle filter: word-level rules as exact
-    // cross-multiplied BIGINT comparisons, keep = product of flags — a
-    // map-only pass, zero shuffles (see TextOps.gopherRules)
-    "text_gopher_rules" -> ((s, dir) =>
-      TextOps.gopherRules(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // substring-level duplicate density (Lee et al. 2021 adapted to sliding
-    // 8-gram coverage): fraction of shingle positions also seen in another
-    // doc, exact ppm integer arithmetic (see TextOps.dupFraction)
-    "text_dup_fraction" -> ((s, dir) =>
-      TextOps.dupFraction(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // perplexity-filter slot (CCNet/Gopher/FineWeb): mean inverse bigram
-    // probability under the corpus's own MLE model — log-free rational
-    // form, exact micro-unit integer sums (see TextOps.surprisal)
-    "text_surprisal" -> ((s, dir) =>
-      TextOps.surprisal(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "text_tokens" -> ((s, dir) =>
-      TextOps.tokenCounts(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "text_langid" -> ((s, dir) =>
-      TextOps.langId(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // langid classifier eval: confusion matrix vs the fixture's own lang
-    // labels + per-true-row share (micro-units); ≤ |langs|² output rows
-    "quality_langid_eval" -> ((s, dir) =>
-      TextOps.langIdEval(t(s, dir, "documents"))),
-
-    // within-doc repeated-segment removal (C4/FineWeb line dedup adapted to
-    // 8-token segments): pure per-row array algebra, zero shuffles
-    "text_dedup_segments" -> ((s, dir) =>
-      TextOps.dedupSegments(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // CORPUS-WIDE boilerplate removal (the C4 rule: 4-token segments seen
-    // >= 3 times anywhere are dropped from every doc)
-    "text_dedup_segments_global" -> ((s, dir) =>
-      TextOps.dedupSegmentsGlobal(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // SUBSTRING-level exact dedup with keep-first (Lee et al. 2022
-    // ExactSubstr as a distributed shingle-run sweep): any ≥8-token span
-    // repeated anywhere in the corpus survives only at its first occurrence
-    "text_dedup_substrings" -> ((s, dir) =>
-      TextOps.dedupSubstrings(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "text_fingerprint" -> ((s, dir) =>
-      TextOps.fingerprint(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // Model-based quality filtering dataflow (FineWeb-Edu §3.2): linear
-    // probe over engineered integer features, exact micro-unit score,
-    // threshold keep — a trained probe's weights drop in unchanged
-    // scored with the TRAINED probe (ProbeWeights.TrainedGopherV1, an
-    // offline logistic fit distilling the gopher-rule cascade; VERDICT r14
-    // #5) — the stub weights now live only in the seam's differential specs
-    "quality_classifier_score" -> ((s, dir) =>
-      TextOps.classifierScore(t(s, dir, "documents"),
-        weights = TextOps.ProbeWeights.TrainedGopherV1).orderBy("doc_id")),
-
-    // Unicode NFC normalization (graft.functions.UnicodeNormalize — Spark
-    // has no built-in): the fixture text is ASCII, so each doc gets a
-    // DECOMPOSED-form suffix (combining diaeresis/acute/ring built from
-    // identical code points on both engines); NFC must compose all four
-    // marks (n_nfc = n_raw − 4) and the normalized bytes must md5-match
-    // DuckDB's nfc_normalize
-    "text_unicode_nfc" -> ((s, dir) => {
-      val suffix = " naïve café Å" + "ngström"
-      t(s, dir, "documents")
-        .select(col("doc_id"), concat(col("text"), lit(suffix)).as("raw"))
-        .select(col("doc_id"),
-          length(col("raw")).cast("long").as("n_raw"),
-          length(graft.functions.UnicodeNormalize.nfc(col("raw")))
-            .cast("long").as("n_nfc"),
-          md5(graft.functions.UnicodeNormalize.nfc(col("raw"))).as("md5_nfc"))
-        .orderBy("doc_id")
-    }),
-
-    // URL canonicalization (the crawl-pipeline dedup-key step): the fixture
-    // has no URL column, so each doc derives a deterministic adversarial
-    // URL — uppercased scheme/host, default port, doubled slashes, ./ and
-    // ../ segments, tracking params, fragment — IDENTICALLY on both
-    // engines, and the canonicalizer must reduce it to normal form
-    "text_url_canonicalize" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .selectExpr("doc_id",
-          """concat('HTTPS://Example.COM:443//', source, '/./Docs/',
-            | CAST(doc_id AS STRING), '/../', lang,
-            | '/Page/?utm_source=x&zz=9&b=', CAST(doc_id % 7 AS STRING),
-            | '&a=1&gclid=g#frag') AS url_raw""".stripMargin)
-        .select(col("doc_id"), col("url_raw"),
-          TextOps.urlCanonicalize("url_raw").as("url_canon"))
-        .orderBy("doc_id")),
-
-    "text_tfidf" -> ((s, dir) =>
-      TextOps.tfidfTopTerms(t(s, dir, "documents")).orderBy("doc_id", "rank")),
-
-    "text_clean" -> ((s, dir) =>
-      TextOps.clean(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "dedup_minhash_shingles" -> ((s, dir) =>
-      Dedup.minhashFromTokens(Dedup.shingles(t(s, dir, "documents")))
-        .orderBy("doc_id")),
-
-    "sample_stratified" -> ((s, dir) =>
-      graft.ext.Pipelines.stratifiedSample(
-        t(s, dir, "documents").select("doc_id", "lang", "source"),
-        "lang", "doc_id", 20).orderBy("doc_id")),
-
-    // weighted corpus mixing: src0 gets 2x the share of every other source,
-    // every group downsampled deterministically (hash-ordered rank)
-    // temperature mixing (share ∝ n_tokens^(1/2)): derives the per-source
-    // weights mixSources consumes — sqrt-exact + micro-unit integer
-    // normalization (see Pipelines.temperatureMix)
-    "sample_temperature_mix" -> ((s, dir) =>
-      graft.ext.Pipelines.temperatureMix(t(s, dir, "documents")).orderBy("source")),
-
-    "sample_mix_weighted" -> ((s, dir) =>
-      graft.ext.Pipelines.mixSources(
-        t(s, dir, "documents").select("doc_id", "source"),
-        "source", "doc_id",
-        when(col("source") === "src0", 2.0).otherwise(1.0))
-        .select("doc_id", "source", "sample_rank").orderBy("doc_id")),
-
-    // token-budget mixing: keep docs per source, hash-ordered, until 800
-    // tokens per source are reached (packSequences boundary rule: the doc
-    // that straddles the budget stays). Driver path runs the SCALABLE
-    // bucket-cut formulation (no per-group total order; the doc-level
-    // window touches only the straddling hash bucket) — its output is
-    // proven identical to the simple window form (PipelinesSpec), so one
-    // oracle checks both.
-    "sample_token_budget" -> ((s, dir) =>
-      graft.ext.Pipelines.mixByTokenBudgetScalable(
-        t(s, dir, "documents").select("doc_id", "source", "lang", "text"),
-        "source", "doc_id", 800L)
-        .select("doc_id", "source", "lang", "n_tok").orderBy("doc_id")),
-
-    // deterministic hash-threshold train/val/test split: assignment depends
-    // only on the key — stable across runs, partitionings, and corpus
-    // growth (new docs never reassign old ones, unlike RNG splits)
-    "sample_split_hash" -> ((s, dir) =>
-      graft.ext.Pipelines.splitByHash(
-        t(s, dir, "documents").select("doc_id", "source"),
-        "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .orderBy("doc_id")),
-
-    // leakage-safe split (ext/Pipelines.splitLeakageSafe): near-dup
-    // CLUSTERS are the split unit, so a near-copy of a training doc can
-    // never land in eval — doc-independent hashing (sample_split_hash)
-    // cannot give this guarantee; oracle recomputes the components as a
-    // recursive CTE and applies the identical md5 CASE over cluster_id
-    "sample_split_leakage_safe" -> ((s, dir) =>
-      graft.ext.Pipelines.splitLeakageSafe(t(s, dir, "documents"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .orderBy("doc_id")),
-
-    // Gopher-style duplicate-3-gram repetition signal per doc
-    "text_repetition" -> ((s, dir) =>
-      graft.ext.TextOps.repetition(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // benchmark decontamination: drop docs sharing any 5-token shingle with
-    // the src0 "benchmark" corpus
-    "text_decontaminate" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ext.TextOps.decontaminate(
-        d.filter(col("source") =!= "src0"), d.filter(col("source") === "src0"))
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-
-    // decontamination through the broadcast-Bloom prefilter: result (and
-    // oracle) IDENTICAL to text_decontaminate — the Bloom stage is pure
-    // pre-shuffle reduction, confirmed by the exact join (no false
-    // negatives exist; false positives are filtered by the equi-join)
-    "text_decontaminate_bloom" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ext.TextOps.decontaminateBloom(
-        d.filter(col("source") =!= "src0"), d.filter(col("source") === "src0"))
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-
-    // PII redaction: deterministic doc_id-derived PII appended on BOTH
-    // engines (the fixture text carries none — seeding lives HERE, in the
-    // query; the operator redacts its text column as given)
-    "text_pii_redact" -> ((s, dir) =>
-      graft.ext.TextOps.piiRedact(
-        t(s, dir, "documents").select(col("doc_id"),
-          graft.ext.TextOps.piiSeeded("text").as("text"))).orderBy("doc_id")),
-
-    // BM25 retrieval scoring against a fixed query — rational idf (same
-    // monotone-transform argument as text_tfidf), bit-stable double math
-    // multi-query BM25 retrieval through the inverted index (ext/TextOps
-    // .searchTopK): query terms equi-join the postings — each query touches
-    // only docs sharing a term, partial scores combine map-side, top-k
-    // plans as WindowGroupLimit; per-term doubles floor-quantize to 1e-9
-    // BIGINT nano-units before the (query, doc) sum so ranking is
-    // partitioning-independent (see searchTopK's scaladoc)
-    "search_bm25_topk" -> ((s, dir) =>
-      TextOps.searchTopK(t(s, dir, "documents")).orderBy("query_id", "rank")),
-
-    // Reciprocal Rank Fusion (ext/TextOps.searchRrf, Cormack et al.
-    // SIGIR'09): BM25 list ⊕ distinct-term-overlap list, exact
-    // 1e6 DIV (60+rank) micro-unit fusion — rank-only hybrid retrieval,
-    // fusion join is list-sized (≤ depth per query), never corpus-sized
-    "search_rrf_fusion" -> ((s, dir) =>
-      TextOps.searchRrf(t(s, dir, "documents")).orderBy("query_id", "rank")),
-
-    // RAKE keyword extraction (ext/TextOps.rakeKeywords, Rose et al. 2010):
-    // stopword-delimited candidate phrases, deg/freq word scores in exact
-    // micro-units, corpus top-50 distinct phrases — per-doc running-count
-    // windows only, vocabulary-keyed rollups, TakeOrdered top-k
-    "text_rake_keywords" -> ((s, dir) =>
-      TextOps.rakeKeywords(t(s, dir, "documents")).orderBy("rank")),
-
-    // positional PHRASE search (ext/TextOps.phraseSearch): consecutive-
-    // token matching via anchor-vote postings intersection — each matching
-    // posting votes for pos−off, full occurrences have all offsets; the
-    // operator BM25's bag-of-words scoring cannot express
-    "search_phrase" -> ((s, dir) =>
-      TextOps.phraseSearch(t(s, dir, "documents")).orderBy("phrase_id", "rank")),
-
-    // the APPLY half of BPE (the actual 100 TB workload): encode the corpus
-    // with the learned merges via ONE word-type equi-join + per-source sum
-    "text_bpe_encode" -> ((s, dir) =>
-      TextOps.bpeEncode(t(s, dir, "documents"))),
-
-    // curriculum sharding: surprisal-ranked difficulty cut into 4 shards
-    // via rangeBuckets global rank + closed-form ntile — the
-    // sequence-difficulty warmup manifest, no single-partition windows
-    "pipeline_curriculum" -> ((s, dir) =>
-      graft.ext.Pipelines.curriculumShards(t(s, dir, "documents"))),
-
-    // stratified k-fold CV assignment (md5-prefix mod k, the splitByHash
-    // hash family) + the (fold, source) balance report a CV harness checks
-    "sample_kfold" -> ((s, dir) =>
-      graft.ext.Pipelines.kfoldReport(t(s, dir, "documents"))),
-
-    // DSIR-style importance selection (ext/Pipelines.dsirSelect): hashed-
-    // bigram target-vs-raw ratio model (256 md5 buckets, add-1 smoothed),
-    // arithmetic-mean log-free scoring, deterministic top-100 — broadcast
-    // B-row model join, TakeOrdered, rank over the k survivors only
-    "sample_dsir" -> ((s, dir) =>
-      graft.ext.Pipelines.dsirSelect(t(s, dir, "documents"))
-        .orderBy("rank")),
-
-    // the leakage hash folds DON'T prevent, measured: LSH co-bucket pairs
-    // crossing fold boundaries (≈ (k-1)/k) via closed-form per-bucket fold
-    // counts — NO pair materialization (the distinct-pair form probed 84x
-    // at 10x on the dup-dense replica corpus); 1-row output
-    "sample_kfold_leakage" -> ((s, dir) =>
-      graft.ext.Pipelines.kfoldLeakage(t(s, dir, "documents"))),
-
-    // distributed BPE merge learning: ONE corpus-sized word-frequency
-    // rollup, then 6 rounds of weighted pair counting over the word-TYPE
-    // table (Heaps-bounded) with a 1-row argmax pull per round; merges are
-    // literal leftmost-non-overlapping replaces, counts exact BIGINTs
-    "text_bpe_merges" -> ((s, dir) =>
-      TextOps.bpeMerges(t(s, dir, "documents"))),
-
-    // ranked-retrieval scorecard over the BM25 top-k: graded term-containment
-    // relevance, DCG via pinned 1/log2 literals floor-quantized to nano
-    // BIGINTs, nDCG/MRR as integer DIVs — the 4th eval harness (after LSH
-    // pair eval and PQ/SRP recall@k); output is |queries| rows
-    "search_eval_ndcg" -> ((s, dir) =>
-      TextOps.searchEval(t(s, dir, "documents"))),
-
-    "text_bm25" -> ((s, dir) =>
-      graft.ext.TextOps.bm25(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // capped inverted-index posting lists: |vocab|·k output rows; the
-    // rank cap plans as a WindowGroupLimit, so only k rows per term reach
-    // the row_number window (the tf rows below it are df's information
-    // floor — each crosses the term exchange exactly once)
-    "text_postings" -> ((s, dir) =>
-      graft.ext.TextOps.postings(t(s, dir, "documents")).orderBy("term", "rank")),
-
-    // corpus-order n-gram novelty: fraction of a doc's distinct shingles
-    // first seen IN that doc — keep-first dedup's grading dual
-    "text_novelty" -> ((s, dir) =>
-      graft.ext.TextOps.novelty(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "pipeline_corpus" -> ((s, dir) =>
-      graft.ext.Pipelines.curateCorpus(t(s, dir, "documents")).orderBy("doc_id")),
-
-    "pipeline_corpus_lsh" -> ((s, dir) =>
-      graft.ext.Pipelines.curateCorpusLsh(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // sliding context-window chunking: docs → overlapping 32-token windows
-    // advancing by 24 (narrow explode, shuffle-free at any scale)
-    "text_chunks" -> ((s, dir) =>
-      graft.ext.Chunking.chunkDocs(t(s, dir, "documents"))
-        .orderBy("doc_id", "chunk_id")),
-
-    // token-budget sequence packing by cumulative-offset binning over
-    // (lang, shard) streams — RNG-free, partitioning-invariant
-    "pack_sequences" -> ((s, dir) =>
-      graft.ext.Chunking.packSequences(t(s, dir, "documents"))
-        .orderBy("lang", "shard", "seq_id")),
-
-    // corpus-level top-k bigrams via distributed TakeOrderedAndProject
-    "text_top_ngrams" -> ((s, dir) =>
-      graft.ext.Chunking.topNgrams(t(s, dir, "documents")).orderBy("rank")),
-
-    // the WHOLE doc→training-example flow in one plan: gates → LSH dedup →
-    // chunk → pack; output is the packed-sequence manifest
-    "pipeline_training_examples" -> ((s, dir) =>
-      graft.ext.Pipelines.trainingExamples(t(s, dir, "documents"))
-        .orderBy("shard", "seq_id")),
-
-    "multimodal_features" -> ((s, dir) =>
-      Multimodal.features(Multimodal.asMedia(t(s, dir, "documents"))).orderBy("doc_id")),
-
-    // perceptual average-hash near-dup pairs over the media payload
-    // (ext/Multimodal.phashPairs): aHash on the stub-resampled 32-pixel
-    // grid, pigeonhole (band, value) equi-join, exact XOR+popcount verify
-    // at Hamming ≤ 3 — the image-dedup stage, never all-pairs
-    "multimodal_phash_pairs" -> ((s, dir) =>
-      Multimodal.phashPairs(Multimodal.asMedia(t(s, dir, "documents")))
-        .orderBy("doc_a", "doc_b")),
-
-    "multimodal_decode" -> ((s, dir) => // stub codec is deterministic → oracle-checked
-      Multimodal.decode(Multimodal.asMedia(t(s, dir, "documents"))).toDF.orderBy("doc_id")),
-
-    // nearest-neighbor byte resample: the real resize index arithmetic over
-    // the payload, stub pixel interpretation
-    "multimodal_resize" -> ((s, dir) =>
-      Multimodal.resize(Multimodal.asMedia(t(s, dir, "documents"))).toDF.orderBy("doc_id")),
-
-    // every-2nd stub frame's byte slice — the container→frames→sample shape
-    "multimodal_frame_sample" -> ((s, dir) =>
-      Multimodal.frameSample(Multimodal.asMedia(t(s, dir, "documents"))).toDF
-        .orderBy("doc_id", "frame_idx")),
-
-    // AUDIO tier (VERDICT r15 #3): synthesize one genuine RIFF/WAVE PCM16
-    // payload per doc (sample rate/length/waveform deterministic from
-    // doc_id + n_chars), then REAL-parse it back — chunk walk, LE PCM16
-    // — into integer duration/peak/loudness features. The oracle computes
-    // the same features in CLOSED FORM from the parameters, so any header
-    // layout or parse bug turns the row red; the parse itself is
-    // additionally golden-tested on canonical + padded + rejected byte
-    // fixtures in MultimodalSpec.
-    "audio_wav_features" -> ((s, dir) =>
-      Multimodal.decodeWav(Multimodal.synthWavPcm16(t(s, dir, "documents")))
-        .toDF.orderBy("doc_id")),
-
-    // per-window loudness profile over the same REAL-parsed WAV payloads:
-    // exact integer window energy (Σ sample²) + peak per 50-sample frame —
-    // the silence-detection primitive; map-only (frame indices derive from
-    // sample position, no shuffle at any scale)
-    "audio_loudness_windows" -> ((s, dir) =>
-      Multimodal.loudnessFrames(Multimodal.synthWavPcm16(t(s, dir, "documents")))
-        .toDF.orderBy("doc_id", "frame_idx")),
-
-    // IEEE-float WAV (format 3) + zero-crossing rate (VERDICT r16 #4):
-    // synthesize genuine float32 WAVs (18-byte fmt + fact chunk the walk
-    // must skip), REAL-parse them on the float path (the PCM16 parser
-    // rejects these payloads and vice versa — golden-tested both ways in
-    // MultimodalSpec), count sign transitions between consecutive samples
-    // — the integer-exact spectral proxy; oracle = the same sign-change
-    // count in closed form over the sawtooth via a per-doc lag window
-    "audio_float_zcr" -> ((s, dir) =>
-      Multimodal.decodeWavFloatZcr(Multimodal.synthWavFloat32(t(s, dir, "documents")))
-        .toDF.orderBy("doc_id")),
-
-    // ViT-style patch grid (ext/Multimodal.patches): payload → 16×8
-    // resample → 4×4 patches with exact byte sums and integer-milli means
-    // — the patch-embedding preprocessing interface with the indexing and
-    // batch shape real, only the pixel decode stubbed
-    "multimodal_patches" -> ((s, dir) =>
-      Multimodal.patches(Multimodal.asMedia(t(s, dir, "documents"))).toDF
-        .orderBy("doc_id", "patch_row", "patch_col")),
-
-    // exact-moment Pearson correlation + OLS slope of value vs hour-of-day
-    // per event_type (ext/Stats.pearsonByHour): decimal/bigint moments in
-    // ONE map-side-combined aggregate, textbook formula in double over them
-    // — partitioning-invariant where the builtin corr() is not
-    "events_corr_hour" -> ((s, dir) =>
-      graft.ext.Stats.pearsonByHour(t(s, dir, "events")).orderBy("event_type")),
-
-    // RFM customer segmentation (ext/Analytics.rfm): recency/frequency/
-    // monetary per customer + tie-free 1-5 ntile scores — one customer
-    // rollup, 1-row max-date broadcast, windows over the aggregate only
-    "orders_rfm" -> ((s, dir) =>
-      graft.ext.Analytics.rfm(t(s, dir, "orders")).orderBy("o_custkey")),
-
-    // first-order-cohort LTV matrix: integer year·12+month cohorts,
-    // exact-cents revenue, running cumulative per cohort over the
-    // (cohorts × ages) rollup only — never a window over raw orders
-    "orders_cohort_ltv" -> ((s, dir) =>
-      graft.ext.Analytics.cohortLtv(t(s, dir, "orders"))),
-
-    // vocabulary skew (ext/Stats.keySkew over the token stream): Gini of
-    // token frequencies + top-token share — the log-free Zipf witness a
-    // tokenizer audit wants before committing a vocab budget
-    "quality_token_skew" -> ((s, dir) =>
-      graft.ext.Stats.keySkew(
-        t(s, dir, "documents").select(
-          explode(graft.ext.TextOps.tokensArr("text")).as("tok")), "tok")),
-
-    // Fano factor of hourly event counts per user (ext/Stats.fanoFactor):
-    // exact cross-multiplied integer moments over the corpus hour span —
-    // the arrival-process SHAPE signal botRates' thresholds don't see
-    "events_fano_factor" -> ((s, dir) =>
-      graft.ext.Stats.fanoFactor(t(s, dir, "events")).orderBy("user_id")),
-
-    // Herfindahl revenue concentration per nation (ext/Analytics
-    // .hhiConcentration): exact decimal revenue → micro-unit shares →
-    // integer HHI; supplier→nation broadcast, rollups only, no window
-    "orders_hhi_concentration" -> ((s, dir) =>
-      graft.ext.Analytics.hhiConcentration(t(s, dir, "lineitem"),
-        t(s, dir, "supplier"), t(s, dir, "nation")).orderBy("n_name")),
-
-    // incident × session interval-overlap join (ext/Temporal
-    // .incidentOverlap): top-24 busiest error-hours merged into incidents
-    // (scale-invariant burst definition), hour-bucketed overlap join
-    // against 30-min-gap sessions, exact overlap time per incident
-    "events_incident_overlap" -> ((s, dir) =>
-      graft.ext.Temporal.incidentOverlap(t(s, dir, "events"))
-        .orderBy("h_start")),
-
-    // max drawdown per user over the cumulative value series (ext/
-    // Analytics.maxDrawdown): exact-cents prefix sum + running max, both
-    // windows and the rollup inside ONE user_id exchange
-    "events_max_drawdown" -> ((s, dir) =>
-      graft.ext.Analytics.maxDrawdown(t(s, dir, "events"))
-        .orderBy("user_id")),
-
-    // Kaplan–Meier time-to-conversion survival (ext/Analytics
-    // .kaplanMeier): first signup → first purchase within a 48 h window,
-    // right-censored at window/corpus cutoff; exact integer fixed-point
-    // survival fold over the horizon-bounded step table (libm-free)
-    "events_survival_km" -> ((s, dir) =>
-      graft.ext.Analytics.kaplanMeier(t(s, dir, "events"))),
-
-    // super-human event-rate / burst detection (ext/Stats.botRates): the
-    // abuse gate before user events feed training — sustained milli-rate
-    // and exact sliding-window peak burst, one user_id exchange
-    "events_bot_rates" -> ((s, dir) =>
-      graft.ext.Stats.botRates(t(s, dir, "events")).orderBy("user_id")),
-
-    // stationary distribution of the session transition chain (ext/
-    // Analytics.markovStationary): fixed-round integer power iteration
-    // over the |states|²-row count relation — the corpus is touched once
-    "events_markov_stationary" -> ((s, dir) =>
-      graft.ext.Analytics.markovStationary(t(s, dir, "events")).orderBy("state")),
-
-    // single-touch attribution (ext/Analytics.attribution): per purchase,
-    // trailing-window touch count + FIRST- and LAST-touch types side by
-    // side — three window functions over one RANGE frame in one user_id
-    // exchange, never a purchases × touches join
-    "events_attribution" -> ((s, dir) =>
-      graft.ext.Analytics.attribution(t(s, dir, "events")).orderBy("event_id")),
-
-    // directed brand association rules (ext/Analytics.brandRules):
-    // support/confidence/lift over DISTINCT (order, brand) baskets —
-    // broadcast dim join + order-keyed pair expansion bounded by |brands|²
-    // per order
-    "orders_brand_rules" -> ((s, dir) =>
-      graft.ext.Analytics.brandRules(t(s, dir, "lineitem"), t(s, dir, "part"))
-        .orderBy("brand_a", "brand_b")),
-
-    // weekly-diurnal seasonal profile + R² (ext/Stats.seasonality): the
-    // (dow × hour) mean grid per event type with variance-explained —
-    // "is this metric seasonal or noisy"; calendar math is pure integer
-    // epoch-µs (no locale dayofweek), moments exact, SS_between summed as
-    // quantized decimals
-    "events_seasonality" -> ((s, dir) =>
-      graft.ext.Stats.seasonality(t(s, dir, "events"))
-        .orderBy("event_type", "dow", "hour")),
-
-    // trailing-window z-score anomalies (ext/Stats.anomalyZscore): each
-    // event vs its user's previous 20 events — one user_id shuffle, one
-    // sorted window pass carrying three exact trailing sums
-    "events_anomaly_zscore" -> ((s, dir) =>
-      graft.ext.Stats.anomalyZscore(t(s, dir, "events")).orderBy("event_id")),
-
-    // two-sided CUSUM change points (ext/Stats.cusumChangepoints): level
-    // shifts z-scores miss — the max(0, ·) recurrence as closed-form
-    // running-sum-minus-running-min, exact BIGINT cents, ONE user_id
-    // exchange shared by all frames
-    "events_changepoint_cusum" -> ((s, dir) =>
-      graft.ext.Stats.cusumChangepoints(t(s, dir, "events")).orderBy("event_id")),
-
-    // chi-square lang × source independence audit (ext/Stats
-    // .chiSquareBalance): does language mix depend on source? The full
-    // contingency table incl. zero-observed cells, χ² total from exact
-    // decimal-quantized contributions; margins broadcast, the corpus is
-    // touched once
-    "quality_chi2_balance" -> ((s, dir) =>
-      graft.ext.Stats.chiSquareBalance(t(s, dir, "documents"), "lang", "source")
-        .orderBy("lang", "source")),
-
-    // one-row-per-column dataset profile (ext/Stats.profileColumns):
-    // count / nulls / exact distinct / stringified min-max per column,
-    // each from its own column-pruned scan
-    "profile_documents" -> ((s, dir) =>
-      graft.ext.Stats.profileColumns(t(s, dir, "documents"),
-        Seq("doc_id", "lang", "source", "n_chars", "text")).orderBy("col_name")),
-
-    // count-min sketch over the corpus token stream (ext/Sketch
-    // .countMinTokens): depth×width exact counters via one map-side-combined
-    // aggregation; estimates (min over rows) for the top-50 tokens with the
-    // exact counts riding along as the differential — fixed md5 hash rows
-    // make the sketch itself oracle-checkable, like KMV vs HLL
-    "sketch_countmin" -> ((s, dir) =>
-      graft.ext.Sketch.countMinTokens(t(s, dir, "documents"))
-        .orderBy(col("exact").desc, col("token"))),
-
-    // explicit-register HyperLogLog distinct users per event type
-    // (ext/Sketch.hllDistinctByGroup): 256 max-rank registers per group,
-    // rank capped at 20 so every 2^-rho term and their 256-term sum are
-    // EXACT binary64 -- the estimate is partition- and engine-invariant;
-    // the exact count column validates the sketch at fixture scale
-    "sketch_hll_distinct" -> ((s, dir) =>
-      graft.ext.Sketch.hllDistinctByGroup(t(s, dir, "events"),
-        "event_type", "user_id").orderBy("event_type")),
-
-    // corpus-slice distribution drift as TOTAL-VARIATION distance (ext/
-    // Stats.driftTotalVariation): TV, not PSI/KL — no ln, the per-bucket
-    // |p_a − p_b| cross-multiplies to exact BIGINT numerators and TV is
-    // one final double division; two histograms + tiny bucket outer join
-    "quality_drift_tv" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.ext.Stats.driftTotalVariation(
-          docs.filter(col("source") === "src0"),
-          docs.filter(col("source") === "src1"), "n_chars")
-        .orderBy("bucket")
-    }),
-
-    // exact two-sample Kolmogorov–Smirnov drift (ext/Stats.ksDrift): the
-    // binless sup-CDF-gap companion to quality_drift_tv — integer CDF
-    // numerators via the bucketed running-sum machinery, one TakeOrdered
-    // argmax, one final micro-unit DIV
-    "quality_ks_drift" -> ((s, dir) =>
-      graft.ext.Stats.ksDrift(t(s, dir, "documents"))),
-
-    // vocabulary coverage curve (ext/TextOps.vocabCoverage): minimal
-    // frequency-ranked vocab covering 50/90/99% of token occurrences —
-    // frequency-CLASS collapse (within-class order provably irrelevant),
-    // bucketed n-DESC prefix sums, 3-row broadcast boundary join
-    "text_vocab_coverage" -> ((s, dir) =>
-      TextOps.vocabCoverage(t(s, dir, "documents"))),
-
-    // DAU/WAU engagement + stickiness (ext/Analytics.dauWau): exact
-    // sliding distinct via the bounded ×7 window-end expansion of
-    // (user, day) facts — never a per-day history scan
-    "events_dau_wau" -> ((s, dir) =>
-      graft.ext.Analytics.dauWau(t(s, dir, "events")).orderBy("day")),
-
-    // cumulative unique-user growth curve (ext/Analytics.cumulativeUsers):
-    // first-active-day per user, per-day rollup, bucketed running sum —
-    // exact BIGINTs end to end
-    "events_cumulative_users" -> ((s, dir) =>
-      graft.ext.Analytics.cumulativeUsers(t(s, dir, "events"))),
-
-    // TIME-WEIGHTED average per user (ext/Temporal.timeWeightedAvg): the
-    // irregular-sampling mean — exact BIGINT cents·µs accumulation, one
-    // final double division; one user_id exchange
-    "events_twa" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
-      graft.ext.Temporal.timeWeightedAvg(ev, "user_id", "us", "value")
-        .orderBy("user_id")
-    }),
-
-    // top-20 session path trigrams (ext/Analytics.pathTrigrams): order-3
-    // clickstream mining within gap-sessions — one user_id exchange,
-    // |types|³-bounded rollup, TakeOrdered top-k
-    "events_path_trigrams" -> ((s, dir) =>
-      graft.ext.Analytics.pathTrigrams(t(s, dir, "events"))
-        .orderBy(col("n").desc, col("path"))),
-
-    // key-concentration audit with exact Gini (ext/Stats.keySkew): the
-    // shuffle-planning skew input — rank-weighted sum via the bucketed
-    // global-position machinery, never a single-reducer sort
-    "quality_key_skew" -> ((s, dir) =>
-      graft.ext.Stats.keySkew(t(s, dir, "events"), "user_id")),
-
-    // out-of-order event-time rate per type (ext/Analytics.outOfOrderRate):
-    // the audit that sizes streaming watermark delays — one user_id
-    // exchange for the lag, one |types|-row rollup
-    "quality_out_of_order" -> ((s, dir) =>
-      graft.ext.Analytics.outOfOrderRate(t(s, dir, "events"))
-        .orderBy("event_type")),
-
-    // equi-depth histogram (ext/Analytics.equidepthHistogram): boundaries
-    // from the exact-quantile value-domain bisection (O(log range) narrow
-    // scans), never an ntile over one global window; k boundary scalars →
-    // literal bucketing chain → k-row aggregate
-    "events_equidepth_hist" -> ((s, dir) =>
-      graft.ext.Analytics.equidepthHistogram(t(s, dir, "events"), "value", 8)
-        .orderBy("bucket")),
-
-    // 2-D Pareto frontier (ext/Analytics.paretoFront): skyline of orders
-    // maximizing price / minimizing order time — distinct-pair reduce +
-    // range-bucketed prefix-min instead of the quadratic NOT-EXISTS or a
-    // single-reducer global window
-    "orders_pareto_front" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      // o_orderdate ships as TIMESTAMP_NTZ — same UTC-pinned cast as events.ts
-      graft.ext.Analytics.paretoFront(o, col("o_totalprice"),
-          unix_micros(col("o_orderdate").cast("timestamp")))
-        .orderBy(col("p").desc, col("d_us"))
-    }),
-
-    // one-row corpus DATA CARD (ext/Pipelines.corpusCard): docs/sources/
-    // langs/tokens + the near-dup cluster structure — the release summary
-    // block, every number exact except two divisions
-    "quality_corpus_card" -> ((s, dir) =>
-      graft.ext.Pipelines.corpusCard(t(s, dir, "documents"))),
-
-    // cross-source duplication matrix (ext/Pipelines.sourceOverlap): which
-    // sources copy from which — LSH pair counts per source pair with
-    // possible-pair-normalized rates; |sources|²-bounded output
-    "quality_source_overlap" -> ((s, dir) =>
-      graft.ext.Pipelines.sourceOverlap(t(s, dir, "documents"))
-        .orderBy("source_a", "source_b")),
-
-    // cross-source contamination card (ext/TextOps.contaminationCard): each
-    // source treated as an eval set in turn — per (candidate, benchmark)
-    // source pair, contaminated-doc count, distinct leaked shingles, and
-    // rate; the audit read before configuring text_decontaminate
-    "quality_contamination_card" -> ((s, dir) =>
-      TextOps.contaminationCard(t(s, dir, "documents"))
-        .orderBy("cand_source", "bench_source")),
-
-    // duplicate-aware sampling weights (ext/Pipelines.dedupWeights): every
-    // doc carries 1e6 DIV |near-dup cluster| µ-weight — each cluster
-    // contributes one unit of sampling mass however many copies it has;
-    // the soft alternative to keep-first dropping
-    "sample_dedup_weights" -> ((s, dir) =>
-      graft.ext.Pipelines.dedupWeights(t(s, dir, "documents")).orderBy("doc_id")),
-
-    // weight-proportional k-sample by PRIORITY SAMPLING (ext/Pipelines
-    // .prioritySample, Duffield–Lund–Thorup): q = w/u from md5 — no
-    // transcendentals, so the draw is engine-portable; top-k is a
-    // TakeOrdered partial top-k, never a global sort
-    "sample_priority_weighted" -> ((s, dir) =>
-      graft.ext.Pipelines.prioritySample(t(s, dir, "documents"),
-          "n_chars", "doc_id", 100)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          col("priority"))
-        .orderBy(col("priority").desc, col("doc_id"))),
-
-    // regular-grid resampling with LINEAR interpolation (ext/AsOf
-    // .resampleInterp): the gap-fill twin of events_resample_ffill — same
-    // one-shuffle tagged-union shape, one extra opposite-frame window pass
-    "events_resample_interp" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
-      graft.ext.AsOf.resampleInterp(ev, "user_id", "us", "value", 86400000000L)
-        .orderBy("user_id", "grid_us")
-    }),
-
-    // seventh streaming oracle row — stream-STATIC dimension enrichment:
-    // every event joins the broadcast customer dim (no join state), rolls
-    // up per market segment in complete mode (state = |segments|+1 rows);
-    // oracle = the identical batch LEFT JOIN + GROUP BY in DuckDB
-    "events_stream_enrich" -> ((s, dir) => {
-      val dim = t(s, dir, "customer")
-      val replayed = replayStream(s, dir, "stream_enrich_verify", "complete")(
-        graft.streaming.EventStreams.enrichSegmentCounts(
-            graft.streaming.EventStreams.readEvents(s, dir), dim))
-      replayed
-        .select(col("segment"), col("n"), dstr(col("sum_value")).as("sum_value"))
-        .orderBy("segment")
-    }),
-
-    // SQ8 scalar quantization of the embedding corpus (ext/Similarity
-    // .quantizeSq8): per-dim min/max stats (Dim×2 driver scalars, the
-    // adjudicated bounded pull) → literal arrays → one narrow quantize
-    // pass; per-vector midpoint-reconstruction error left-folds in
-    // dimension order, so even the double accumulation hash-matches
-    "sim_quantize_sq8" -> ((s, dir) =>
-      Similarity.quantizeSq8(t(s, dir, "embeddings")).orderBy("vec_id")),
-
-    // SCD1 key-based upsert (ext/Pipelines.upsertLatest): the incoming
-    // batch re-crawls every third doc (text + ' v2'); latest batch wins
-    // per key, content-hash tie-break, provenance in from_batch
-    "pipeline_upsert_latest" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val incoming = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-        .withColumn("text", concat(col("text"), lit(" v2")))
-        .withColumn("n_chars", col("n_chars") + 3L)
-      graft.ext.Pipelines.upsertLatest(docs, incoming)
-        .select("doc_id", "text", "lang", "source", "n_chars", "from_batch")
-        .orderBy("doc_id")
-    }),
-
-    // corpus snapshot diff (ext/Pipelines.corpusDiff): added/removed/
-    // changed/unchanged counts across two derived snapshot versions —
-    // one co-partitioned full-outer equi-join on doc_id over fixed-width
-    // content hashes, then a ≤4-row rollup
-    "pipeline_corpus_diff" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val v1 = docs.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-      val v2 = docs.filter(pmod(col("doc_id"), lit(10)) =!= 4)
-        .withColumn("text", when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      graft.ext.Pipelines.corpusDiff(v1, v2)
-    }),
-
-    // ABC revenue classification (ext/Analytics.abcAnalysis): who drives
-    // the first 80% / next 15% / tail of revenue — exact-cents spend
-    // classes cumulated DESC via the bucketed prefix machinery, whole-class
-    // deterministic labels, integer cross-multiplied thresholds
-    "orders_abc_analysis" -> ((s, dir) =>
-      graft.ext.Analytics.abcAnalysis(t(s, dir, "orders"))),
-
-    // Benford first-digit audit (ext/Stats.benford): observed first-digit
-    // shares of exact cents vs the hardcoded log10(1+1/d) literals — the
-    // fabricated-amounts smell test; ≤9 groups, broadcast 1-row total
-    "quality_benford" -> ((s, dir) =>
-      graft.ext.Stats.benford(t(s, dir, "orders"))),
-
-    // first-order Markov transition matrix between event types (ext/
-    // Analytics.transitionMatrix): one user_id exchange for the lag pairs,
-    // |types|²-bounded rollup, broadcast per-from totals
-    "events_transition_matrix" -> ((s, dir) =>
-      graft.ext.Analytics.transitionMatrix(t(s, dir, "events"))
-        .orderBy("from_type", "to_type")),
-
-    // session-basket type affinity with lift (ext/Analytics.typeAffinity):
-    // gap-session baskets, within-basket pair enumeration bounded by
-    // |types|² per session, exact counts, double lift
-    "events_type_affinity" -> ((s, dir) =>
-      graft.ext.Analytics.typeAffinity(t(s, dir, "events"))
-        .orderBy("type_a", "type_b")),
-
-    // referential-integrity audit across the star schema (ext/Analytics
-    // .refIntegrity): per declared FK relationship, key-pruned LEFT ANTI
-    // orphan counts — the warehouse-load data-quality gate
-    "quality_ref_integrity" -> ((s, dir) => {
-      val rels = Seq(
-        ("lineitem.l_orderkey->orders", t(s, dir, "lineitem"), "l_orderkey",
-          t(s, dir, "orders"), "o_orderkey"),
-        ("orders.o_custkey->customer", t(s, dir, "orders"), "o_custkey",
-          t(s, dir, "customer"), "c_custkey"),
-        ("customer.c_nationkey->nation", t(s, dir, "customer"), "c_nationkey",
-          t(s, dir, "nation"), "n_nationkey"),
-        ("supplier.s_nationkey->nation", t(s, dir, "supplier"), "s_nationkey",
-          t(s, dir, "nation"), "n_nationkey"),
-        ("nation.n_regionkey->region", t(s, dir, "nation"), "n_regionkey",
-          t(s, dir, "region"), "r_regionkey"),
-        ("events.user_id->customer", t(s, dir, "events"), "user_id",
-          t(s, dir, "customer"), "c_custkey"))
-      graft.ext.Analytics.refIntegrity(rels).orderBy("relationship")
-    }),
-
-    // session concurrency curve (ext/Temporal.intervalConcurrency over
-    // ext/Temporal.sessionIntervals): sweep-line actives count at every
-    // boundary instant — NO pair enumeration (overlap self-joins are
-    // quadratic in busy periods); the running sum is the deterministic
-    // bucketed prefix sum (IngestOps.withGlobalRunningSum), never a
-    // single-reducer global window. Sessions are closed [start,end] in µs,
-    // so the exclusive sweep end is end_us + 1.
-    "events_session_concurrency" -> ((s, dir) => {
-      val sess = graft.ext.Temporal.sessionIntervals(t(s, dir, "events"))
-        .withColumn("end_excl_us", col("end_us") + 1L)
-      graft.ext.Temporal.intervalConcurrency(sess, "start_us", "end_excl_us")
-        .orderBy("us")
-    }),
-
-    // open-order BACKLOG curve: every order is an interval
-    // [orderdate, last lineitem shipdate + 1 day) and the sweep-line
-    // concurrency (Temporal.intervalConcurrency — the distributed
-    // prefix-sum primitive, no pair enumeration, no single-reducer
-    // window) gives orders-in-flight at every boundary instant — the
-    // operations "how deep is the backlog" curve over the TPC-H facts
-    "orders_backlog_curve" -> ((s, dir) => {
-      val o = t(s, dir, "orders").filter(col("o_orderdate").isNotNull)
-        .select(col("o_orderkey"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("start_us"))
-      val ls = t(s, dir, "lineitem").filter(col("l_shipdate").isNotNull)
-        .select(col("l_orderkey").as("o_orderkey"),
-          unix_micros(col("l_shipdate").cast("timestamp")).as("ship_us"))
-        .groupBy("o_orderkey").agg(max(col("ship_us")).as("last_ship_us"))
-      // the (start, end) interval relation is the expensive part (full
-      // lineitem scan + max rollup + orders join) and is deterministic
-      // from the fixture — StageStore it once per JVM (VERDICT r15 #3);
-      // the sweep itself re-runs per action over the slim stage
-      val iv = graft.etl.StageStore.materialize(
-        o.join(ls, "o_orderkey")
-          .select(col("start_us"),
-            (col("last_ship_us") + lit(86400000000L)).as("end_excl_us"))
-          .filter(col("end_excl_us") > col("start_us")), "backlog_iv")
-      graft.ext.Temporal.intervalConcurrency(iv, "start_us", "end_excl_us")
-        .orderBy("us")
-    }),
-
-    // 6th streaming oracle row: stream-stream LEFT OUTER windowed join
-    // (streaming/EventStreams.clickPurchaseLeftOuter) under AvailableNow —
-    // inner matches plus null-click rows for purchases the final watermark
-    // finalized (strictly older than min(side maxima, ms-floored) − delay);
-    // the oracle mirrors that exact rule in SQL
-    "events_stream_join_outer" -> ((s, dir) => {
-      val replayed = replayStream(s, dir, "stream_joinouter_verify", "append")(
-        graft.streaming.EventStreams.clickPurchaseLeftOuter(
-            graft.streaming.EventStreams.readEvents(s, dir)))
-      // no-click sentinel −1: the driver/oracle hash path is only exercised
-      // on null-free columns (mixed null ordering is canon-undefined there)
-      replayed
-        .select(col("purchase_id"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"), col("user_id"))
-        .orderBy("purchase_id", "click_id")
-    }),
-
-    // stream-stream FULL OUTER windowed join (EventStreams
-    // .clickPurchaseFullOuter): the last cell of the streaming join
-    // matrix — matches emit like the inner join; unmatched purchases
-    // finalize at p_ts < wm, unmatched clicks at c_ts + 1h < wm (the
-    // asymmetric two-sided cut the event-time range implies)
-    "events_stream_join_full" -> ((s, dir) => {
-      val replayed = replayStream(s, dir, "stream_joinfull_verify", "append")(
-        graft.streaming.EventStreams.clickPurchaseFullOuter(
-            graft.streaming.EventStreams.readEvents(s, dir)))
-      replayed
-        .select(coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"), col("user_id"))
-        .orderBy("purchase_id", "click_id", "user_id")
-    }),
-
-    // TF-IDF-weighted shingle cosine pairs (ext/TextOps.tfidfCosinePairs):
-    // pruned-inverted-index similarity join — integer tf·(idfScale DIV df)
-    // weights, top-10 shingles per doc, exact BIGINT dots/norms, double
-    // cosine over them; hot shingles self-prune (low idf → never top-M)
-    "sim_tfidf_pairs" -> ((s, dir) =>
-      graft.ext.TextOps.tfidfCosinePairs(t(s, dir, "documents"))
-        .orderBy("doc_a", "doc_b")),
-
-    // Levenshtein near-dup pairs on 8-token prefixes (ext/Dedup
-    // .editDistancePairs): (lang, first-token) blocking + salted slim
-    // self-join + exact DP verify — the entity-resolution string-similarity
-    // complement to the Jaccard/MinHash/SimHash set family
-    "dedup_edit_distance" -> ((s, dir) =>
-      graft.ext.Dedup.editDistancePairs(t(s, dir, "documents"))
-        .orderBy("doc_a", "doc_b")))
-
-  // =====================================================================
-  // Oracle SQL (DuckDB dialect, same parquet tables)
-  // =====================================================================
-
-  /** lineitem all-string rendering, matching etl.IngestOps.cellToString. */
-  private val lineitemAllStringSql: String = {
-    val cols = Seq(
-      "l_orderkey" -> "i", "l_partkey" -> "i", "l_suppkey" -> "i",
-      "l_linenumber" -> "i", "l_quantity" -> "d", "l_extendedprice" -> "d",
-      "l_discount" -> "d", "l_tax" -> "d", "l_returnflag" -> "s",
-      "l_linestatus" -> "s", "l_shipdate" -> "ts")
-    val sel = cols.map {
-      case (c, "d") => s"CAST(CAST($c AS DECIMAL(18,2)) AS VARCHAR) AS $c"
-      case (c, "ts") => s"strftime($c, '%Y-%m-%d %H:%M:%S') AS $c"
-      case (c, _) => s"CAST($c AS VARCHAR) AS $c"
-    }.mkString(",\n  ")
-    s"SELECT\n  $sel\nFROM lineitem ORDER BY lineitem.l_orderkey, lineitem.l_linenumber"
-  }
-
-  private val ordersAllStringJsonSql: String = {
-    val fields = Seq(
-      "o_orderkey" -> "i", "o_custkey" -> "i", "o_orderstatus" -> "s",
-      "o_totalprice" -> "d", "o_orderdate" -> "ts", "o_orderpriority" -> "s")
-    val packed = fields.map {
-      case (c, "d") => s"$c := CAST(CAST($c AS DECIMAL(18,2)) AS VARCHAR)"
-      case (c, "ts") => s"$c := strftime($c, '%Y-%m-%d %H:%M:%S')"
-      case (c, _) => s"$c := CAST($c AS VARCHAR)"
-    }.mkString(", ")
-    s"""SELECT CAST(o_orderkey AS BIGINT) AS okey,
-       |  CAST(to_json(struct_pack($packed)) AS VARCHAR) AS line
-       |FROM orders ORDER BY okey""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "s1_scan_allstring" -> lineitemAllStringSql,
-
-    "s3_sheet_selection" ->
-      "SELECT 'orders' AS sheet, CAST(count(*) AS BIGINT) AS n_rows FROM orders",
-
-    "s4_header_fallback" ->
-      """SELECT n_nationkey AS nation_key, n_name AS nation_name, n_regionkey AS "2"
-        |FROM nation ORDER BY nation_key""".stripMargin,
-
-    "t2_blank_normalization" ->
-      """SELECT * FROM (
-        |  SELECT doc_id, coalesce(text, '') AS text, coalesce(lang, '') AS lang,
-        |         coalesce(source, '') AS source, n_chars
-        |  FROM documents)
-        |WHERE doc_id IS NOT NULL OR (text IS NOT NULL AND trim(text) <> '')
-        |   OR (lang IS NOT NULL AND trim(lang) <> '')
-        |   OR (source IS NOT NULL AND trim(source) <> '') OR n_chars IS NOT NULL
-        |ORDER BY doc_id""".stripMargin,
-
-    "t3_skip_rows" ->
-      """SELECT event_id, event_type FROM (
-        |  SELECT event_id, event_type, row_number() OVER (ORDER BY event_id) AS pos
-        |  FROM events)
-        |WHERE pos > 100 ORDER BY event_id""".stripMargin,
-
-    "t4_projection_rename" ->
-      """SELECT l_orderkey AS okey, l_linenumber AS line_no, l_quantity AS qty
-        |FROM lineitem ORDER BY okey, line_no""".stripMargin,
-
-    "t5_cell_format" ->
-      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS odate_str,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS price_str
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "t6_row_metrics" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_returned
-        |FROM lineitem""".stripMargin,
-
-    // what went out through the xlsx container must equal a direct
-    // all-string render of the table (same per-type rules as cellToString)
-    "xlsx_roundtrip" ->
-      """SELECT CAST(o_orderkey AS VARCHAR) AS o_orderkey,
-        |  CAST(o_custkey AS VARCHAR) AS o_custkey,
-        |  o_orderstatus,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS o_totalprice,
-        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
-        |  o_orderpriority
-        |FROM orders ORDER BY orders.o_orderkey""".stripMargin,
-
-    // what went out through the CSV dataset must equal the same independent
-    // all-string render (the xlsx_roundtrip oracle, shared discipline)
-    "csv_roundtrip" ->
-      """SELECT CAST(o_orderkey AS VARCHAR) AS o_orderkey,
-        |  CAST(o_custkey AS VARCHAR) AS o_custkey,
-        |  o_orderstatus,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS o_totalprice,
-        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
-        |  o_orderpriority
-        |FROM orders ORDER BY orders.o_orderkey""".stripMargin,
-
-    // what went out through the ORC dataset must equal the same independent
-    // all-string render (the xlsx_roundtrip oracle, shared discipline)
-    "orc_roundtrip" ->
-      """SELECT CAST(o_orderkey AS VARCHAR) AS o_orderkey,
-        |  CAST(o_custkey AS VARCHAR) AS o_custkey,
-        |  o_orderstatus,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS o_totalprice,
-        |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
-        |  o_orderpriority
-        |FROM orders ORDER BY orders.o_orderkey""".stripMargin,
-
-    "k1_ndjson_lines" -> ordersAllStringJsonSql,
-    // the written sink bytes equal the declarative rendering — same oracle
-    "convert_e2e" -> ordersAllStringJsonSql,
-
-    // K3 framing arithmetic: a compact '[e1,e2,…,en]' document is exactly
-    // 2 + Σ|element| + (n−1) bytes — the oracle recomputes the sink file's
-    // true size from the element renderings alone
-    "jsonarray_e2e" ->
-      s"""WITH lines AS (${ordersAllStringJsonSql})
-         |SELECT okey, line,
-         |  CAST((SELECT 2 + sum(length(line)) + count(*) - 1 FROM lines)
-         |    AS BIGINT) AS file_bytes
-         |FROM lines ORDER BY okey""".stripMargin,
-
-    "k2_csv_chunks" ->
-      """SELECT chunk_id, CAST(count(*) AS BIGINT) AS n_rows,
-        |  min(rn) AS min_rn, max(rn) AS max_rn
-        |FROM (
-        |  SELECT CAST((row_number() OVER (ORDER BY o_orderkey) - 1) // 1000 AS BIGINT) AS chunk_id,
-        |         CAST(row_number() OVER (ORDER BY o_orderkey) AS BIGINT) AS rn
-        |  FROM orders)
-        |GROUP BY chunk_id ORDER BY chunk_id""".stripMargin,
-
-    "c4_json_tolerant" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q1_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
-         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS sum_base_price,
-         |  $revenueVarcharSql AS sum_disc_price,
-         |  CAST(count(*) AS BIGINT) AS count_order
-         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_top_revenue" ->
-      s"""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
-         |  $revenueVarcharSql AS revenue
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |WHERE c_mktsegment = 'BUILDING'
-         |GROUP BY o_orderkey, o_orderdate
-         |ORDER BY $revenueSql DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q5_local_supplier" ->
-      s"""SELECT n_name, $revenueVarcharSql AS revenue
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |WHERE r_name = 'ASIA'
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q6_filtered_agg" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS VARCHAR) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_semi_anti" ->
-      """SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM customer
-        |    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_with_orders,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM customer
-        |    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)) AS n_without_orders""".stripMargin,
-
-    "q7_nation_volume" ->
-      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |  CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-         |  $revenueVarcharSql AS revenue
-         |FROM lineitem
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-         |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-         |GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
-         |ORDER BY supp_nation, cust_nation, ship_year""".stripMargin,
-
-    "q10_returned_items" ->
-      s"""SELECT c_custkey, c_name, CAST(rev AS VARCHAR) AS revenue,
-         |  c_acctbal, n_name, c_mktsegment
-         |FROM (
-         |  SELECT c_custkey, c_name, c_acctbal, n_name, c_mktsegment, $revenueSql AS rev
-         |  FROM customer
-         |  JOIN orders ON c_custkey = o_custkey
-         |  JOIN lineitem ON o_orderkey = l_orderkey
-         |  JOIN nation ON c_nationkey = n_nationkey
-         |  WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-07-01'
-         |    AND l_returnflag = 'R'
-         |  GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
-         |  ORDER BY rev DESC, c_custkey LIMIT 20)
-         |ORDER BY c_custkey""".stripMargin,
-
-    "q_scalar_subquery" ->
-      """SELECT o.o_orderkey, o.o_custkey FROM orders o
-        |WHERE CAST(o.o_totalprice AS DECIMAL(18,2)) *
-        |    (SELECT COUNT(*) FROM orders i WHERE i.o_custkey = o.o_custkey)
-        |  > (SELECT SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) FROM orders i
-        |     WHERE i.o_custkey = o.o_custkey)
-        |ORDER BY o.o_orderkey""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_datetime_parts" ->
-      """SELECT o_orderkey,
-        |  CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS y,
-        |  CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS m,
-        |  CAST(EXTRACT(day FROM o_orderdate) AS BIGINT) AS d,
-        |  CAST(EXTRACT(quarter FROM o_orderdate) AS BIGINT) AS q
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_string_funcs" ->
-      """SELECT c_custkey, upper(c_name) AS uname, substr(c_name, 1, 8) AS prefix,
-        |  replace(c_name, '#', '-') AS dashed,
-        |  CAST(length(c_name) AS BIGINT) AS name_len,
-        |  reverse(c_mktsegment) AS rseg
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q_part_stats" ->
-      """SELECT p_brand, p_type, CAST(count(*) AS BIGINT) AS n_parts,
-        |  CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS VARCHAR) AS sum_price,
-        |  max(p_size) AS max_size
-        |FROM part GROUP BY p_brand, p_type ORDER BY p_brand, p_type""".stripMargin,
-
-    "q14_promo_share" ->
-      s"""SELECT
-         |  CAST(sum(CASE WHEN p_type LIKE 'ECONOMY%' THEN
-         |    CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-         |  END) AS VARCHAR) AS economy_revenue,
-         |  $revenueVarcharSql AS total_revenue
-         |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin,
-
-    "q13_custdist" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist FROM (
-        |  SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q_exists_correlated" ->
-      """SELECT s_suppkey, s_nationkey FROM supplier s
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity >= 48)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l2
-        |                  WHERE l2.l_suppkey = s.s_suppkey
-        |                    AND l2.l_returnflag = 'R' AND l2.l_quantity >= 49.5)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_not_in_nullaware" ->
-      """SELECT o_orderkey, o_custkey FROM orders
-        |WHERE o_custkey NOT IN
-        |  (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_lateral_topn" ->
-      """SELECT n_nationkey, t.s_suppkey FROM nation n,
-        |LATERAL (SELECT s_suppkey FROM supplier s
-        |         WHERE s.s_nationkey = n.n_nationkey
-        |         ORDER BY s_suppkey LIMIT 2) t
-        |ORDER BY n_nationkey, s_suppkey""".stripMargin,
-
-    "q_agg_filter" ->
-      """SELECT l_linestatus,
-        |  CAST(count(*) FILTER (WHERE l_returnflag = 'R') AS BIGINT) AS n_returned,
-        |  CAST(count(*) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS n_discounted,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
-        |    FILTER (WHERE l_tax > 0.04) AS VARCHAR) AS qty_taxed
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "q18_large_orders" ->
-      """SELECT c_name, o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS odate,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS total_price,
-        |  CAST(sq AS VARCHAR) AS sum_qty
-        |FROM orders
-        |JOIN (SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
-        |      FROM lineitem GROUP BY l_orderkey
-        |      HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300) big
-        |  ON o_orderkey = big.l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q19_disjunctive" ->
-      s"""SELECT $revenueVarcharSql AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= DATE '1997-01-01' AND o_orderdate < DATE '1997-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q8_market_share" ->
-      s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-         |  CAST(sum(CASE WHEN n2.n_name = 'NATION_2'
-         |      THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-         |      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-         |    / CAST($revenueSql AS DOUBLE) AS share,
-         |  CAST(count(*) AS BIGINT) AS n_lines
-         |FROM lineitem
-         |JOIN part ON l_partkey = p_partkey
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-         |JOIN region ON n1.n_regionkey = r_regionkey
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-         |WHERE r_name = 'ASIA' AND p_type = 'STANDARD'
-         |GROUP BY year(o_orderdate)
-         |ORDER BY o_year""".stripMargin,
-
-    "q12_priority_class" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= DATE '1998-01-01' AND l_shipdate < DATE '1999-01-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q15_top_supplier" ->
-      s"""WITH revenue AS (
-         |  SELECT l_suppkey AS supplier_no, $revenueSql AS total_revenue
-         |  FROM lineitem
-         |  WHERE l_shipdate >= DATE '2000-01-01' AND l_shipdate < DATE '2000-07-01'
-         |  GROUP BY l_suppkey)
-         |SELECT s_suppkey, s_name, CAST(total_revenue AS VARCHAR) AS total_revenue
-         |FROM supplier JOIN revenue ON s_suppkey = supplier_no
-         |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-         |ORDER BY s_suppkey""".stripMargin,
-
-    "q17_small_qty" ->
-      """SELECT
-        |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
-        |  CAST(count(*) AS BIGINT) AS n_lines
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#3'
-        |  AND l_quantity < (SELECT 0.2 * avg(l_quantity) FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    // Q2 shape: correlated scalar subquery on an aggregate (the classic
-    // decorrelation exercise) — per-row double unit cost, so min() and the
-    // equality gate are bit-identical to the Spark window-min form
-    "q2_min_cost_supplier" ->
-      """WITH m AS (
-        |  SELECT p_partkey, p_brand, l_suppkey,
-        |    min((l_extendedprice * (1.0 - l_discount)) / l_quantity)
-        |      AS best_unit_cost
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_size = 15
-        |  GROUP BY 1, 2, 3)
-        |SELECT m.p_partkey, p_brand, s_suppkey, s_name, s_acctbal,
-        |  best_unit_cost
-        |FROM m JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE best_unit_cost = (SELECT min(m2.best_unit_cost) FROM m m2
-        |                        WHERE m2.p_partkey = m.p_partkey)
-        |ORDER BY p_partkey, s_suppkey""".stripMargin,
-
-    "q9_profit_by_nation" ->
-      """SELECT n_name AS nation,
-        |  CAST(date_part('year', o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |      * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-        |    - CAST(p_retailprice AS DECIMAL(18,2))
-        |      * CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%gear%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-
-    // Q11 shape: HAVING against scalar subqueries over the same aggregate;
-    // threshold = 1.25 x the average part value in exact integer decimals
-    // (v*n*4 > total*5), scale-invariant like TPC-H's 1/SF fraction
-    "q11_important_parts" ->
-      """WITH pv AS (
-        |  SELECT l_partkey AS p_partkey,
-        |    sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |      * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |      AS v
-        |  FROM lineitem GROUP BY 1)
-        |SELECT p_partkey, CAST(v AS VARCHAR) AS part_value
-        |FROM pv
-        |WHERE v * (SELECT count(*) FROM pv) * 4 > (SELECT sum(v) FROM pv) * 5
-        |ORDER BY v DESC, p_partkey""".stripMargin,
-
-    "q16_supplier_counts" ->
-      """SELECT p_brand, p_type, p_size,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_type <> 'STANDARD'
-        |  AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |                        WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    // Q20 shape: IN over a correlated aggregate comparison (share of a
-    // part's lifetime volume), exact decimal × 6
-    "q20_excess_shipments" ->
-      """WITH l00 AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS sq
-        |  FROM lineitem
-        |  GROUP BY 1, 2)
-        |SELECT s_suppkey, s_name FROM supplier
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM l00 a
-        |  WHERE a.sq * 6 > (SELECT sum(b.sq) FROM l00 b
-        |                    WHERE b.l_partkey = a.l_partkey))
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q21_waiting_supplier" ->
-      """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM supplier
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE o_orderstatus = 'F' AND n_name IN ('NATION_1','NATION_6')
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate > l1.l_shipdate)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-
-    "q22_idle_customers" ->
-      """WITH pos AS (
-        |  SELECT CAST(c_acctbal AS DECIMAL(18,2)) AS b FROM customer
-        |  WHERE c_acctbal > 0.0
-        |    AND substring(c_name, length(c_name)-1, 2) IN ('13','31','23','29','30','18','17'))
-        |SELECT substring(c_name, length(c_name)-1, 2) AS cntrycode,
-        |  CAST(count(*) AS BIGINT) AS numcust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS totacctbal
-        |FROM customer
-        |WHERE substring(c_name, length(c_name)-1, 2) IN ('13','31','23','29','30','18','17')
-        |  AND CAST(c_acctbal AS DECIMAL(18,2)) * (SELECT count(*) FROM pos)
-        |      > (SELECT sum(b) FROM pos)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= DATE '1999-01-01')
-        |GROUP BY substring(c_name, length(c_name)-1, 2)
-        |ORDER BY cntrycode""".stripMargin,
-
-    "window_ntile" ->
-      """SELECT c_custkey, c_mktsegment,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |  percent_rank() OVER w AS pct_rank,
-        |  cume_dist() OVER w AS cdist
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "events_range_join" ->
-      """WITH a AS (SELECT event_id AS anchor_id, epoch_us(ts) AS s_us,
-        |    epoch_us(ts) + 600000000 AS e_us
-        |  FROM events WHERE event_type = 'purchase'),
-        | p AS (SELECT epoch_us(ts) AS p_us, value FROM events)
-        |SELECT anchor_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM a JOIN p ON p.p_us >= a.s_us AND p.p_us < a.e_us
-        |GROUP BY anchor_id ORDER BY anchor_id""".stripMargin,
-
-    // identical semantics to events_range_join — the twin proves the raw-SQL
-    // surface (optimizer-rule path) computes the same relation
-    "events_range_join_sql" ->
-      """WITH a AS (SELECT event_id AS anchor_id, epoch_us(ts) AS s_us,
-        |    epoch_us(ts) + 600000000 AS e_us
-        |  FROM events WHERE event_type = 'purchase'),
-        | p AS (SELECT epoch_us(ts) AS p_us, value FROM events)
-        |SELECT anchor_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM a JOIN p ON p.p_us >= a.s_us AND p.p_us < a.e_us
-        |GROUP BY anchor_id ORDER BY anchor_id""".stripMargin,
-
-    "sketch_kmv_distinct" ->
-      """WITH hs AS (SELECT DISTINCT md5(CAST(l_partkey AS VARCHAR)) AS h
-        |  FROM lineitem),
-        | mink AS (SELECT h FROM hs ORDER BY h LIMIT 64),
-        | kth AS (SELECT max(h) AS kth_hash FROM mink),
-        | ex AS (SELECT CAST(count(*) AS BIGINT) AS exact_distinct FROM hs)
-        |SELECT CAST(64 AS BIGINT) AS k, kth_hash,
-        |  63.0 / (('0x' || substring(kth_hash, 1, 8))::UBIGINT / 4294967296.0)
-        |    AS est_distinct,
-        |  exact_distinct
-        |FROM kth, ex""".stripMargin,
-
-    "sketch_kmv_by_source" ->
-      """WITH hs AS (SELECT DISTINCT source, md5(text) AS h FROM documents),
-        | ranked AS (SELECT source, h,
-        |   row_number() OVER (PARTITION BY source ORDER BY h) AS rn FROM hs),
-        | mink AS (SELECT source,
-        |   CASE WHEN count(*) >= 16 THEN max(h) END AS kth_hash
-        |   FROM ranked WHERE rn <= 16 GROUP BY source),
-        | ex AS (SELECT source, CAST(count(*) AS BIGINT) AS exact_distinct
-        |   FROM hs GROUP BY source)
-        |SELECT m.source, CAST(16 AS BIGINT) AS k, kth_hash,
-        |  15.0 / (('0x' || substring(kth_hash, 1, 8))::UBIGINT / 4294967296.0)
-        |    AS est_distinct,
-        |  exact_distinct
-        |FROM mink m JOIN ex USING (source) ORDER BY source""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT l_linestatus,
-        |  CAST(sum(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS "A",
-        |  CAST(sum(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS "N",
-        |  CAST(sum(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS "R"
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "q_unpivot" ->
-      """WITH w AS (
-        |  SELECT l_returnflag,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS sum_qty,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS sum_price
-        |  FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, 'qty' AS metric, sum_qty AS val FROM w
-        |UNION ALL
-        |SELECT l_returnflag, 'price' AS metric, sum_price AS val FROM w
-        |ORDER BY l_returnflag, metric""".stripMargin,
-
-    "q_string_agg" ->
-      """SELECT s_nationkey,
-        |  string_agg(CAST(s_suppkey AS VARCHAR), ','
-        |    ORDER BY CAST(s_suppkey AS VARCHAR)) AS supp_keys
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-
-    "q_setops" ->
-      """SELECT nationkey, true AS both FROM
-        |  (SELECT c_nationkey AS nationkey FROM customer
-        |   INTERSECT SELECT s_nationkey FROM supplier)
-        |UNION ALL
-        |SELECT nationkey, false AS both FROM
-        |  (SELECT c_nationkey AS nationkey FROM customer
-        |   EXCEPT SELECT s_nationkey FROM supplier)
-        |ORDER BY nationkey""".stripMargin,
-
-    "q_full_outer" ->
-      """SELECT CAST(d AS VARCHAR) AS d,
-        |  coalesce(n_orders, 0) AS n_orders, coalesce(n_ships, 0) AS n_ships
-        |FROM (SELECT o_orderdate AS d, CAST(COUNT(*) AS BIGINT) AS n_orders
-        |      FROM orders GROUP BY 1) o
-        |FULL JOIN (SELECT l_shipdate AS d, CAST(COUNT(*) AS BIGINT) AS n_ships
-        |      FROM lineitem GROUP BY 1) l USING (d)
-        |ORDER BY d""".stripMargin,
-
-    "events_lag_delta" ->
-      """SELECT user_id, event_id,
-        |  CAST((epoch_us(ts) - lag(epoch_us(ts), 1) OVER (
-        |    PARTITION BY user_id ORDER BY epoch_us(ts), event_id)) // 1000000
-        |    AS BIGINT) AS gap_s
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-
-    "window_moving_sum" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS VARCHAR) AS mov3
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "window_rank_orders" ->
-      """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    CAST(row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rn
-        |  FROM orders)
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    "events_tumbling_agg" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type
-        |ORDER BY hr, event_type""".stripMargin,
-
-    "events_sliding_agg" ->
-      """WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
-        | w AS (
-        |  SELECT (us // 1800000000) * 1800000000 AS ws, event_type, value FROM e
-        |  UNION ALL
-        |  SELECT (us // 1800000000) * 1800000000 - 1800000000 AS ws, event_type, value FROM e)
-        |SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS w_start,
-        |  event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM w GROUP BY ws, event_type ORDER BY w_start, event_type""".stripMargin,
-
-    "events_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        | flags AS (
-        |  SELECT user_id, event_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        | sess AS (
-        |  SELECT user_id, us,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flags)
-        |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  min(us) AS start_us, max(us) AS end_us
-        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-
-    "events_asof_join" ->
-      """SELECT e.event_id, e.user_id, epoch_us(e.ts) AS us, r.value AS ref_value
-        |FROM events e ASOF JOIN (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'click') r
-        |  ON e.user_id = r.user_id AND e.ts >= r.ts
-        |ORDER BY e.event_id""".stripMargin,
-
-    // closed sessions: lag/gap islands; a session is closed iff a later
-    // event exists for the user (gap) or the final watermark passed
-    // last + gap — `< wm_ms` after integer ms floor is EXACTLY Spark's
-    // `timeoutTimestamp < eventTimeWatermark` test
-    "events_stream_closed_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        | f AS (SELECT user_id, us, event_id,
-        |    CASE WHEN lag(us) OVER w IS NULL
-        |         OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        | g AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM f),
-        | s AS (SELECT user_id, sid, min(us) AS start_us, max(us) AS end_us,
-        |        CAST(count(*) AS BIGINT) AS n_events FROM g GROUP BY user_id, sid),
-        | t AS (SELECT *, max(sid) OVER (PARTITION BY user_id) AS last_sid FROM s),
-        | wm AS (SELECT (max(epoch_us(ts)) // 1000) - 3600000 AS wm_ms FROM events)
-        |SELECT user_id, start_us, end_us, n_events,
-        |  CASE WHEN sid < last_sid THEN 'gap' ELSE 'timeout' END AS closed_by
-        |FROM t, wm
-        |WHERE sid < last_sid OR (end_us + 1800000000) // 1000 < wm_ms
-        |ORDER BY user_id, start_us""".stripMargin,
-
-    "events_asof_forward" ->
-      """SELECT e.event_id, e.user_id, epoch_us(e.ts) AS us, r.value AS next_value
-        |FROM events e ASOF JOIN (
-        |  SELECT user_id, epoch_us(ts) AS us, max(value) AS value FROM events
-        |  WHERE event_type = 'purchase' GROUP BY user_id, epoch_us(ts)) r
-        |  ON e.user_id = r.user_id AND epoch_us(e.ts) <= r.us
-        |ORDER BY e.event_id""".stripMargin,
-
-    "events_state_intervals" ->
-      """WITH o AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id
-        |           FROM events),
-        | f AS (SELECT user_id, event_type, us, event_id,
-        |    CASE WHEN lag(event_type) OVER w IS NULL
-        |         OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg
-        |   FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        | g AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f)
-        |SELECT user_id, event_type, min(us) AS valid_from_us,
-        |  max(us) AS valid_to_us, CAST(count(*) AS BIGINT) AS n_events
-        |FROM g GROUP BY user_id, event_type, grp
-        |ORDER BY user_id, valid_from_us""".stripMargin,
-
-    // independent recomputation by a different plan (row-number self-join vs
-    // Spark's window collect_list + fold); hash-equality holds because both
-    // engines quantize each weighted term to DECIMAL(28,12) — exact for
-    // these products, see Temporal.decayedTrailingSum — before the
-    // order-independent exact decimal sum
-    "events_decayed_sum" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(value AS DOUBLE) AS v,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id) AS rn
-        |  FROM events)
-        |SELECT a.event_id, a.user_id,
-        |  CAST(sum(CAST(b.v * pow(0.5, a.rn - b.rn) AS DECIMAL(28,12)))
-        |    AS VARCHAR) AS decayed_sum
-        |FROM e a JOIN e b ON a.user_id = b.user_id AND b.rn BETWEEN a.rn - 9 AND a.rn
-        |GROUP BY a.event_id, a.user_id
-        |ORDER BY a.event_id""".stripMargin,
-
-    "layout_zorder_pruning" -> graft.etl.Layout.zorderPruningAuditSqlDuck(),
-    "events_zorder_key" ->
-      s"""WITH s AS (SELECT min(user_id) AS xmin, max(user_id) AS xmax,
-         |    min(epoch_us(ts)) AS ymin, max(epoch_us(ts)) AS ymax FROM events),
-         | b AS (SELECT event_id, user_id, epoch_us(ts) AS us,
-         |    ((user_id - xmin) * 1024) // (xmax - xmin + 1) AS bx,
-         |    ((epoch_us(ts) - ymin) * 1024) // (ymax - ymin + 1) AS by
-         |  FROM events, s)
-         |SELECT event_id, user_id, us,
-         |  ${graft.functions.MortonInterleave.sqlDuck("bx", "by", 10)} AS zkey
-         |FROM b ORDER BY event_id""".stripMargin,
-
-    "events_state_at_purchase" ->
-      """WITH o AS (SELECT user_id, event_type, epoch_us(ts) AS us, event_id
-        |           FROM events),
-        | f AS (SELECT user_id, event_type, us, event_id,
-        |    CASE WHEN lag(event_type) OVER w IS NULL
-        |         OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg
-        |   FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        | g AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp FROM f),
-        | iv AS (SELECT user_id, min(us) AS ivs, event_type AS state
-        |   FROM g GROUP BY user_id, event_type, grp),
-        | p AS (SELECT event_id, user_id, epoch_us(ts) - 1 AS us FROM events
-        |   WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.us + 1 AS us, iv.state AS state_before
-        |FROM p ASOF JOIN iv ON p.user_id = iv.user_id AND p.us >= iv.ivs
-        |ORDER BY p.event_id""".stripMargin,
-
-    "events_dedup_windowed" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS w_us, user_id,
-        |  event_type, min(event_id) AS keep_id, CAST(count(*) AS BIGINT) AS n_dups
-        |FROM events GROUP BY 1, 2, 3
-        |ORDER BY w_us, user_id, event_type""".stripMargin,
-
-    // the streaming twin runs the identical aggregation — same oracle
-    "events_stream_windowed_dedup" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS w_us, user_id,
-        |  event_type, min(event_id) AS keep_id, CAST(count(*) AS BIGINT) AS n_dups
-        |FROM events GROUP BY 1, 2, 3
-        |ORDER BY w_us, user_id, event_type""".stripMargin,
-
-    "events_resample_ffill" ->
-      """WITH p AS (SELECT user_id, epoch_us(ts) AS us,
-        |           max(CAST(value AS DOUBLE)) AS v
-        |           FROM events GROUP BY user_id, epoch_us(ts)),
-        | b AS (SELECT user_id, min(us) AS lo, max(us) AS hi FROM p GROUP BY user_id),
-        | g AS (SELECT user_id, unnest(generate_series(lo, hi, 86400000000)) AS grid_us
-        |       FROM b)
-        |SELECT g.user_id, g.grid_us, p.v AS value_ffill
-        |FROM g ASOF JOIN p ON g.user_id = p.user_id AND g.grid_us >= p.us
-        |ORDER BY g.user_id, g.grid_us""".stripMargin,
-
-    "events_rolling_count" ->
-      """SELECT event_id,
-        |  CAST(count(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_last_hour
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "events_quantiles" ->
-      """SELECT event_type, quantile_cont(value, 0.5) AS med,
-        |  quantile_cont(value, 0.9) AS p90,
-        |  min(value) AS vmin, max(value) AS vmax
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "s6_dict_lookup" ->
-      """SELECT r_name, n_name, CAST(count(*) AS BIGINT) AS n_customers
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT md5(text) AS h, CAST(count(*) AS BIGINT) AS n_dups, min(doc_id) AS keep_id
-        |FROM documents GROUP BY h ORDER BY h""".stripMargin,
-
-    "dedup_minhash" -> Dedup.minhashSqlDuck,
-    "dedup_lsh_pairs" -> Dedup.lshPairsSqlDuck,
-    "dedup_simhash" -> Dedup.simhashSqlDuck,
-    "dedup_clusters" -> Dedup.clustersSqlDuck,
-    "dedup_ngram_jaccard" -> Dedup.jaccardSqlDuck,
-    "dedup_sorted_neighborhood" -> Dedup.sortedNeighborhoodPairsSqlDuck(),
-    "dedup_keep_first" -> Dedup.dropNearDuplicatesSqlDuck(),
-    "dedup_keep_first_lsh" -> Dedup.dropNearDuplicatesLshSqlDuck(),
-    "dedup_keep_first_lsh_rep" -> Dedup.dropNearDuplicatesLshRepSqlDuck(),
-    "dedup_keep_best" -> Dedup.keepBestSqlDuck,
-    "dedup_embedding_cosine" -> Similarity.cosinePairsSqlDuck(),
-    "dedup_embedding_cosine_bucketed" -> Similarity.cosinePairsBucketedSqlDuck(),
-    "sim_topk_bruteforce" -> Similarity.bruteForceTopKSqlDuck(),
-    "sim_knn_classify" -> Similarity.knnClassifySqlDuck(),
-    "sim_ann_lsh" -> Similarity.annTopKSqlDuck(),
-    "sim_ivf_topk" -> Similarity.ivfTopKSqlDuck(),
-    "sim_pq_adc" -> Similarity.pqTopKSqlDuck(),
-    "sim_pq_recall" -> Similarity.pqRecallSqlDuck(),
-    "sim_ivfpq_topk" -> Similarity.ivfPqTopKSqlDuck(),
-    "sim_ann_recall" -> Similarity.annRecallSqlDuck(),
-    "dedup_semantic" -> Similarity.semanticDedupSqlDuck(),
-    "sim_hard_negatives" -> Similarity.hardNegativesSqlDuck(),
-    "text_quality" -> TextOps.qualitySqlDuck,
-    "text_gopher_rules" -> TextOps.gopherRulesSqlDuck,
-    "text_dup_fraction" -> TextOps.dupFractionSqlDuck(),
-    "text_surprisal" -> TextOps.surprisalSqlDuck,
-    "text_tokens" -> TextOps.tokenCountsSqlDuck,
-    "text_langid" -> TextOps.langIdSqlDuck,
-    "quality_langid_eval" -> TextOps.langIdEvalSqlDuck,
-    "text_fingerprint" -> TextOps.fingerprintSqlDuck,
-
-    "text_dedup_segments" -> TextOps.dedupSegmentsSqlDuck(),
-
-    "text_dedup_segments_global" -> TextOps.dedupSegmentsGlobalSqlDuck(),
-
-    "text_dedup_substrings" -> TextOps.dedupSubstringsSqlDuck(),
-
-    "quality_classifier_score" -> TextOps.classifierScoreSqlDuck(
-      weights = TextOps.ProbeWeights.TrainedGopherV1),
-
-    "text_unicode_nfc" ->
-      """WITH r AS (SELECT doc_id,
-        |  text || ' nai' || chr(776) || 've cafe' || chr(769) || ' A' ||
-        |  chr(778) || 'ngstro' || chr(776) || 'm' AS raw
-        | FROM documents)
-        |SELECT doc_id, CAST(length(raw) AS BIGINT) AS n_raw,
-        |  CAST(length(nfc_normalize(raw)) AS BIGINT) AS n_nfc,
-        |  md5(nfc_normalize(raw)) AS md5_nfc
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "text_url_canonicalize" ->
-      s"""WITH r AS (SELECT doc_id,
-         |  'HTTPS://Example.COM:443//' || source || '/./Docs/' ||
-         |  CAST(doc_id AS VARCHAR) || '/../' || lang ||
-         |  '/Page/?utm_source=x&zz=9&b=' || CAST(doc_id % 7 AS VARCHAR) ||
-         |  '&a=1&gclid=g#frag' AS url_raw
-         | FROM documents)
-         |SELECT doc_id, url_raw,
-         |  ${TextOps.urlCanonSqlDuck("url_raw")} AS url_canon
-         |FROM r ORDER BY doc_id""".stripMargin,
-
-    "sketch_kmv_overlap" ->
-      graft.ext.Sketch.kmvJaccardShinglesSqlDuck("src0", "src1", 3, 128),
-    "sketch_kmv_difference" ->
-      graft.ext.Sketch.kmvDifferenceShinglesSqlDuck("src0", "src1", 3, 128),
-
-    "events_quantile_selection" ->
-      """WITH v AS (SELECT CAST(value AS DOUBLE) AS v FROM events
-        |           WHERE value IS NOT NULL),
-        | s AS (SELECT v, row_number() OVER (ORDER BY v) AS rn,
-        |       count(*) OVER () AS n FROM v)
-        |SELECT CAST(0.5 AS DOUBLE) AS prob, CAST(n AS BIGINT) AS n, v AS value
-        |FROM s WHERE rn = CAST(ceil(0.5 * n) AS BIGINT)
-        |UNION ALL
-        |SELECT CAST(0.9 AS DOUBLE), CAST(n AS BIGINT), v
-        |FROM s WHERE rn = CAST(ceil(0.9 * n) AS BIGINT)
-        |ORDER BY prob""".stripMargin,
-
-    "sketch_sample_quantiles" ->
-      """WITH s AS (SELECT CAST(o_totalprice AS DOUBLE) AS _v FROM orders
-        |           ORDER BY md5(CAST(o_orderkey AS VARCHAR)), CAST(o_totalprice AS DOUBLE)
-        |           LIMIT 256)
-        |SELECT CAST(count(*) AS BIGINT) AS sample_n,
-        |  quantile_cont(_v, 0.25) AS q25, quantile_cont(_v, 0.5) AS q50,
-        |  quantile_cont(_v, 0.75) AS q75, quantile_cont(_v, 0.9) AS q90
-        |FROM s""".stripMargin,
-
-    "sketch_sample_quantiles_grouped" ->
-      """WITH r AS (SELECT o_orderpriority, CAST(o_totalprice AS DOUBLE) AS _v,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY md5(CAST(o_orderkey AS VARCHAR)), CAST(o_totalprice AS DOUBLE)) AS rn
-        |  FROM orders)
-        |SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS sample_n,
-        |  quantile_cont(_v, 0.5) AS q50, quantile_cont(_v, 0.9) AS q90
-        |FROM r WHERE rn <= 64
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "text_tfidf" -> TextOps.tfidfSqlDuck(),
-    "text_clean" -> TextOps.cleanSqlDuck(),
-    "dedup_minhash_shingles" -> Dedup.minhashShinglesSqlDuck(),
-    "sample_stratified" -> graft.ext.Pipelines.stratifiedSampleSqlDuck(
-      "lang", "doc_id", 20, "documents", "doc_id, lang, source"),
-    "sample_temperature_mix" -> graft.ext.Pipelines.temperatureMixSqlDuck(),
-    "sample_mix_weighted" -> graft.ext.Pipelines.mixSourcesSqlDuck(
-      "source", "doc_id", "src0", "documents", "doc_id, source"),
-    "sample_token_budget" -> graft.ext.Pipelines.mixByTokenBudgetSqlDuck(
-      "source", "doc_id", 800L, "doc_id, source, lang"),
-    "sample_split_hash" -> graft.ext.Pipelines.splitByHashSqlDuck(
-      "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-      "documents", "doc_id, source"),
-    "sample_split_leakage_safe" -> graft.ext.Pipelines.splitLeakageSafeSqlDuck(
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)),
-    "text_repetition" -> graft.ext.TextOps.repetitionSqlDuck(),
-    "text_decontaminate" -> graft.ext.TextOps.decontaminateSqlDuck("src0"),
-    // IDENTICAL oracle to text_decontaminate: the Bloom prefilter is pure
-    // data reduction — exactness is the point of the check
-    "text_decontaminate_bloom" -> graft.ext.TextOps.decontaminateSqlDuck("src0"),
-    "text_pii_redact" -> graft.ext.TextOps.piiRedactSqlDuck,
-    "text_bm25" -> graft.ext.TextOps.bm25SqlDuck(),
-    "text_postings" -> graft.ext.TextOps.postingsSqlDuck(),
-    "text_novelty" -> graft.ext.TextOps.noveltySqlDuck(),
-    "events_funnel" -> graft.ext.Analytics.funnelSqlDuck(),
-    "events_funnel_latency" ->
-      s"""WITH f AS (SELECT * FROM (${graft.ext.Analytics.funnelSqlDuck()})),
-        | lat AS (
-        |  SELECT 'step1_step2' AS transition,
-        |    CAST(ts2_us - ts1_us AS DOUBLE) AS v FROM f WHERE ts2_us IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'step2_step3', CAST(ts3_us - ts2_us AS DOUBLE)
-        |  FROM f WHERE ts3_us IS NOT NULL),
-        | s AS (SELECT transition, v,
-        |    row_number() OVER (PARTITION BY transition ORDER BY v) AS rn,
-        |    count(*) OVER (PARTITION BY transition) AS n FROM lat)
-        |SELECT transition, CAST(0.5 AS DOUBLE) AS prob, CAST(n AS BIGINT) AS n,
-        |  v AS value
-        |FROM s WHERE rn = CAST(ceil(0.5 * n) AS BIGINT)
-        |UNION ALL
-        |SELECT transition, CAST(0.9 AS DOUBLE), CAST(n AS BIGINT), v
-        |FROM s WHERE rn = CAST(ceil(0.9 * n) AS BIGINT)
-        |ORDER BY transition, prob""".stripMargin,
-    "dedup_simhash_pairs" -> Dedup.simhashHammingPairsSqlDuck(),
-    "dedup_lsh_eval" -> Dedup.lshEvalSqlDuck(),
-    "window_value_funcs" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(first_value(CAST(l_quantity AS DECIMAL(18,2))) OVER w AS VARCHAR) AS first_qty,
-        |  CAST(last_value(CAST(l_quantity AS DECIMAL(18,2))) OVER wf AS VARCHAR) AS last_qty,
-        |  CAST(nth_value(CAST(l_quantity AS DECIMAL(18,2)), 2) OVER wf AS VARCHAR) AS second_qty,
-        |  CAST(lag(l_linenumber, 1, -1) OVER w AS BIGINT) AS prev_line,
-        |  CAST(lead(l_linenumber, 1, -1) OVER w AS BIGINT) AS next_line
-        |FROM lineitem
-        |WINDOW w AS (PARTITION BY l_orderkey
-        |    ORDER BY l_linenumber, l_partkey, l_suppkey, l_extendedprice),
-        |  wf AS (PARTITION BY l_orderkey
-        |    ORDER BY l_linenumber, l_partkey, l_suppkey, l_extendedprice
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "events_session_funnel" -> graft.ext.Analytics.sessionFunnelSqlDuck(),
-    "events_funnel_rates" -> graft.ext.Analytics.funnelRatesSqlDuck(),
-    "events_retention_cohort" -> graft.ext.Analytics.retentionCohortsSqlDuck,
-    "events_retention_rates" -> graft.ext.Analytics.retentionRatesSqlDuck,
-
-    // streaming rows: tumblingCounts/slidingCounts/sessionWindows ≡ the
-    // batch window aggregations, so the oracles are the batch twins' SQL
-
-    // session_window(start) = the session's first event, so the oracle is
-    // the batch lag/gap sessionization projected to (user_id, start_us, n)
-    "events_stream_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        | flags AS (
-        |  SELECT user_id, event_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        | sess AS (
-        |  SELECT user_id, us,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM flags)
-        |SELECT user_id, min(us) AS start_us, CAST(count(*) AS BIGINT) AS n_events
-        |FROM sess GROUP BY user_id, session_id ORDER BY user_id, start_us""".stripMargin,
-    "events_stream_sliding" ->
-      """WITH e AS (SELECT epoch_us(ts) AS us, event_type, value FROM events),
-        | w AS (
-        |  SELECT (us // 1800000000) * 1800000000 AS ws, event_type, value FROM e
-        |  UNION ALL
-        |  SELECT (us // 1800000000) * 1800000000 - 1800000000 AS ws, event_type, value FROM e)
-        |SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS w_start,
-        |  event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM w GROUP BY ws, event_type ORDER BY w_start, event_type""".stripMargin,
-
-    // batch twin of the streaming ingestion rollup: same gate arithmetic
-    // as curateCorpusSqlDuck's q CTE, count(DISTINCT fingerprint) per
-    // source = the stateful (source, fp) dropDuplicates + count
-    "docs_stream_curate" ->
-      s"""WITH q AS (SELECT source, lang, text,
-        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
-        |    CASE WHEN length(text) > 0
-        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-        |      ELSE 0.0 END AS alpha_ratio
-        |  FROM documents)
-        |SELECT source, CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_admitted
-        |FROM q
-        |WHERE lang = 'en' AND n_tokens >= 10 AND n_tokens <= 100000
-        |  AND alpha_ratio >= 0.5
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    // the retention-window dedup admits each (source, fp) exactly once:
-    // the driven duplicates share their original's ingest_ts, so they land
-    // inside the retention window and are state-dropped — final emitted
-    // set = batch DISTINCT over the gated docs
-    "docs_stream_dedup_bounded" ->
-      s"""WITH q AS (SELECT source, text,
-        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
-        |    CASE WHEN length(text) > 0
-        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-        |      ELSE 0.0 END AS alpha_ratio
-        |  FROM documents WHERE lang = 'en')
-        |SELECT DISTINCT source, md5(text) AS fp
-        |FROM q
-        |WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5
-        |ORDER BY source, fp""".stripMargin,
-
-    // first-registrant LSH semantics (retention out-spans the fixture):
-    // admitted iff min doc_id in EVERY band bucket — i.e. no earlier doc
-    // shares any (bi, band). Same gates as the rest of the docs_stream
-    // family; same signature/band CTE construction as the batch LSH
-    // oracles (Dedup.sigsCteDuck/bucketsCteDuck) over the gated subset.
-    "docs_stream_neardup_lsh" ->
-      s"""WITH gd AS (SELECT doc_id, source, text,
-        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
-        |    CASE WHEN length(text) > 0
-        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-        |      ELSE 0.0 END AS alpha_ratio
-        |  FROM documents WHERE lang = 'en'),
-        | g AS (SELECT doc_id, source, text FROM gd
-        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
-        | ${graft.ext.Dedup.toksCteDuck("g")}, ${graft.ext.Dedup.sigsCteDuck},
-        | ${graft.ext.Dedup.bucketsCteDuck},
-        | matched AS (SELECT DISTINCT y.doc_id FROM buckets x JOIN buckets y
-        |   ON x.bi = y.bi AND x.band = y.band AND x.doc_id < y.doc_id)
-        |SELECT g.doc_id, g.source FROM g
-        |WHERE g.doc_id NOT IN (SELECT doc_id FROM matched)
-        |ORDER BY g.doc_id""".stripMargin,
-
-    // candidate rescore of the streaming near-dup's matched side output:
-    // the closed-form candidate set (rep = min doc_id per gated band
-    // bucket, candidate = every later bucket member) scored with the
-    // exact distinct-unigram Jaccard — |A∪B| = na + nb - |A∩B|, so the
-    // engine's i/(na+nb-i) and the oracle's i/len(union) divide the same
-    // integers
-    "docs_stream_neardup_rescore" ->
-      s"""WITH gd AS (SELECT doc_id, source, text,
-        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
-        |    CASE WHEN length(text) > 0
-        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-        |      ELSE 0.0 END AS alpha_ratio
-        |  FROM documents WHERE lang = 'en'),
-        | g AS (SELECT doc_id, source, text FROM gd
-        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
-        | ${graft.ext.Dedup.toksCteDuck("g")}, ${graft.ext.Dedup.sigsCteDuck},
-        | ${graft.ext.Dedup.bucketsCteDuck},
-        | reps AS (SELECT bi, band, min(doc_id) AS rep FROM buckets GROUP BY bi, band),
-        | cands AS (SELECT DISTINCT r.rep AS doc_a, b.doc_id AS doc_b
-        |   FROM buckets b JOIN reps r
-        |   ON b.bi = r.bi AND b.band = r.band AND b.doc_id > r.rep),
-        | dt AS (SELECT doc_id, list_distinct(${TextOps.tokensSqlDuck("text")}) AS toks
-        |   FROM documents)
-        |SELECT c.doc_a, c.doc_b,
-        |  ${graft.ext.Dedup.jaccardExprDuck("a.toks", "b.toks")} AS jaccard
-        |FROM cands c JOIN dt a ON c.doc_a = a.doc_id JOIN dt b ON c.doc_b = b.doc_id
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // exact stream-vs-standing-corpus: admitted = gated crawl docs whose
-    // content fingerprint is absent from the even-doc_id standing corpus
-    "docs_stream_vs_corpus_exact" ->
-      s"""WITH gd AS (SELECT doc_id, source, text,
-        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
-        |    CASE WHEN length(text) > 0
-        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-        |      ELSE 0.0 END AS alpha_ratio
-        |  FROM documents WHERE lang = 'en'),
-        | g AS (SELECT doc_id, source, text FROM gd
-        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
-        | corpus AS (SELECT DISTINCT md5(text) AS fp FROM documents
-        |  WHERE doc_id % 2 = 0)
-        |SELECT g.doc_id, g.source FROM g
-        |WHERE md5(g.text) NOT IN (SELECT fp FROM corpus)
-        |ORDER BY g.doc_id""".stripMargin,
-
-    // near-dup stream-vs-standing-corpus: signatures are per-document, so
-    // buckets over ALL documents filtered to each side equal per-side
-    // recomputation (the incrementalIngestNearDupSqlDuck rationale);
-    // admitted = gated docs sharing no (bi, band) with the even-doc corpus
-    "docs_stream_vs_corpus_neardup" ->
-      s"""WITH gd AS (SELECT doc_id, source, text,
-        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
-        |    CASE WHEN length(text) > 0
-        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-        |      ELSE 0.0 END AS alpha_ratio
-        |  FROM documents WHERE lang = 'en'),
-        | g AS (SELECT doc_id, source, text FROM gd
-        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
-        | ${graft.ext.Dedup.toksCteDuck("documents")}, ${graft.ext.Dedup.sigsCteDuck},
-        | ${graft.ext.Dedup.bucketsCteDuck},
-        | sb AS (SELECT b.doc_id, b.bi, b.band FROM buckets b JOIN g USING (doc_id)),
-        | cb AS (SELECT DISTINCT bi, band FROM buckets WHERE doc_id % 2 = 0),
-        | matched AS (SELECT DISTINCT s.doc_id FROM sb s
-        |   JOIN cb c ON s.bi = c.bi AND s.band = c.band)
-        |SELECT g.doc_id, g.source FROM g
-        |WHERE g.doc_id NOT IN (SELECT doc_id FROM matched)
-        |ORDER BY g.doc_id""".stripMargin,
-
-    // corpus-tier candidate rescore: candidates = (corpus bucket rep,
-    // matched stream doc) pairs, rep = min even doc_id per bucket;
-    // self-pairs (a re-crawled corpus doc meeting its own bucket) are
-    // legitimate and score 1.0
-    "docs_stream_vs_corpus_rescore" ->
-      s"""WITH gd AS (SELECT doc_id, source, text,
-        |    CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_tokens,
-        |    CASE WHEN length(text) > 0
-        |      THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) / length(text)
-        |      ELSE 0.0 END AS alpha_ratio
-        |  FROM documents WHERE lang = 'en'),
-        | g AS (SELECT doc_id, source, text FROM gd
-        |  WHERE n_tokens >= 10 AND n_tokens <= 100000 AND alpha_ratio >= 0.5),
-        | ${graft.ext.Dedup.toksCteDuck("documents")}, ${graft.ext.Dedup.sigsCteDuck},
-        | ${graft.ext.Dedup.bucketsCteDuck},
-        | sb AS (SELECT b.doc_id, b.bi, b.band FROM buckets b JOIN g USING (doc_id)),
-        | cb AS (SELECT bi, band, min(doc_id) AS rep FROM buckets
-        |   WHERE doc_id % 2 = 0 GROUP BY bi, band),
-        | cands AS (SELECT DISTINCT c.rep AS doc_a, s.doc_id AS doc_b
-        |   FROM sb s JOIN cb c ON s.bi = c.bi AND s.band = c.band),
-        | dt AS (SELECT doc_id, list_distinct(${TextOps.tokensSqlDuck("text")}) AS toks
-        |   FROM documents)
-        |SELECT c.doc_a, c.doc_b,
-        |  ${graft.ext.Dedup.jaccardExprDuck("a.toks", "b.toks")} AS jaccard
-        |FROM cands c JOIN dt a ON c.doc_a = a.doc_id JOIN dt b ON c.doc_b = b.doc_id
-        |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "events_stream_tumbling" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type
-        |ORDER BY hr, event_type""".stripMargin,
-    // update mode's final per-key upsert = the complete aggregate (nothing
-    // is late in the staged in-order replay), so the oracle is the same
-    // batch SQL as events_stream_tumbling
-    "events_stream_tumbling_update" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hr, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM events GROUP BY date_trunc('hour', ts), event_type
-        |ORDER BY hr, event_type""".stripMargin,
-    "events_outliers_iqr" -> graft.ext.Analytics.outliersIqrSqlDuck(),
-    "events_outliers_mad" -> graft.ext.Analytics.outliersMadSqlDuck(),
-    "events_value_histogram" -> graft.ext.Analytics.valueHistogramSqlDuck(),
-    "events_minmax_scale" -> graft.ext.Analytics.minmaxScaleSqlDuck,
-    "events_json_extract" ->
+        .orderBy("event_id"),
       """SELECT event_id,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k_typed,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k_path
-        |FROM events ORDER BY event_id""".stripMargin,
-    "events_quantile_selection_grouped" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+
+    // per-group EXACT quantiles: all (group, prob) brackets bisect in
+    // lockstep — one aggregation per round, O(groups·probs) driver state
+    QueryRow("events_quantile_selection_grouped", (s, dir) =>
+      graft.ext.Sketch.exactQuantileDiscByGroup(
+        t(s, dir, "events"), "event_type", "value").orderBy("event_type", "prob"),
       """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS v FROM events
         |           WHERE value IS NOT NULL),
         | s AS (SELECT event_type, v,
@@ -4183,139 +2975,1145 @@ object SparkEntry {
         |UNION ALL
         |SELECT event_type, CAST(0.9 AS DOUBLE), CAST(n AS BIGINT), v
         |FROM s WHERE rn = CAST(ceil(0.9 * n) AS BIGINT)
-        |ORDER BY event_type, prob""".stripMargin,
-    "pipeline_incremental" ->
-      graft.ext.Pipelines.incrementalIngestSqlDuck("src0", "doc_id, source, lang"),
-    "pipeline_incremental_neardup" ->
-      graft.ext.Pipelines.incrementalIngestNearDupSqlDuck(
-        "src0", 0.8, "doc_id, source, lang"),
-    "sample_length_quartiles" -> graft.ext.Pipelines.lengthQuartilesSqlDuck(),
-    "sql_fn_tokens" ->
-      s"""SELECT doc_id,
-         |  CAST(len(${TextOps.tokensSqlDuck("text")}) AS BIGINT) AS n_toks,
-         |  md5(array_to_string(${TextOps.tokensSqlDuck("text")}, ' ')) AS fp
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "sql_fn_vec_dot" ->
-      s"""SELECT vec_id, ${Similarity.dotSqlDuck("embedding", "embedding")} AS dot
-         |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "sql_fn_zorder" ->
-      s"""SELECT event_id,
-         |  ${graft.functions.MortonInterleave.sqlDuck(
-               "(user_id & 2147483647)", "(event_id & 2147483647)", 31)} AS zkey
-         |FROM events ORDER BY event_id""".stripMargin,
-    "pipeline_corpus" -> graft.ext.Pipelines.curateCorpusSqlDuck(),
-    "pipeline_corpus_lsh" -> graft.ext.Pipelines.curateCorpusLshSqlDuck(),
-    "text_chunks" -> graft.ext.Chunking.chunkDocsSqlDuck(),
-    "pack_sequences" -> graft.ext.Chunking.packSequencesSqlDuck(),
-    "text_top_ngrams" -> graft.ext.Chunking.topNgramsSqlDuck(),
-    "pipeline_training_examples" -> graft.ext.Pipelines.trainingExamplesSqlDuck(),
-    "multimodal_features" -> Multimodal.featuresSqlDuck,
-    "multimodal_phash_pairs" -> Multimodal.phashPairsSqlDuck(),
-    "multimodal_decode" -> Multimodal.decodeSqlDuck,
-    "audio_wav_features" -> Multimodal.wavFeaturesSqlDuck,
-    "audio_loudness_windows" -> Multimodal.loudnessFramesSqlDuck(),
-    "audio_float_zcr" -> Multimodal.wavFloatZcrSqlDuck,
-    "multimodal_patches" -> Multimodal.patchesSqlDuck(),
-    "multimodal_resize" -> Multimodal.resizeSqlDuck(),
-    "multimodal_frame_sample" -> Multimodal.frameSampleSqlDuck(),
-    "events_corr_hour" -> graft.ext.Stats.pearsonByHourSqlDuck,
-    "events_anomaly_zscore" -> graft.ext.Stats.anomalyZscoreSqlDuck(),
-    "profile_documents" -> graft.ext.Stats.profileColumnsSqlDuck("documents",
-      Seq("doc_id", "lang", "source", "n_chars", "text")),
-    "sketch_countmin" -> graft.ext.Sketch.countMinTokensSqlDuck(),
-    "sketch_hll_distinct" -> graft.ext.Sketch.hllDistinctByGroupSqlDuck(
-      "events", "event_type", "user_id"),
-    "pipeline_source_cap" -> graft.ext.Pipelines.sourceCapSqlDuck(15),
-    "events_winsorize" -> graft.ext.Analytics.winsorizeSqlDuck(),
-    "pipeline_shuffle_order" -> graft.ext.Pipelines.shuffleOrderSqlDuck,
-    "quality_drift_tv" -> graft.ext.Stats.driftTvSqlDuck("src0", "src1"),
-    "quality_ks_drift" -> graft.ext.Stats.ksDriftSqlDuck(),
-    "text_vocab_coverage" -> TextOps.vocabCoverageSqlDuck(),
-    "events_dau_wau" -> graft.ext.Analytics.dauWauSqlDuck(),
-    "events_cumulative_users" -> graft.ext.Analytics.cumulativeUsersSqlDuck,
-    "orders_abc_analysis" -> graft.ext.Analytics.abcAnalysisSqlDuck(),
-    "quality_benford" -> graft.ext.Stats.benfordSqlDuck,
-    "quality_out_of_order" -> graft.ext.Analytics.outOfOrderRateSqlDuck,
-    "events_twa" -> graft.ext.Temporal.timeWeightedAvgSqlDuck,
-    "dedup_jaccard_prefix" -> Dedup.jaccardPrefixJoinSqlDuck(0.8),
-    "dedup_containment" -> Dedup.containmentPrefixJoinSqlDuck(0.8),
-    "dedup_cross_source_overlap" -> Dedup.crossSourceOverlapSqlDuck(),
-    "graph_pagerank" -> graft.ext.Graph.pageRankLshSqlDuck(),
-    "graph_triangles" -> graft.ext.Graph.trianglesLshSqlDuck,
-    "graph_link_prediction" -> graft.ext.Graph.linkPredictionLshSqlDuck(),
-    "graph_kcore" -> graft.ext.Graph.kCoreLshSqlDuck(),
-    "graph_lpa_communities" -> graft.ext.Graph.lpaCommunitiesLshSqlDuck(),
-    "events_changepoint_cusum" -> graft.ext.Stats.cusumChangepointsSqlDuck(),
-    "events_seasonality" -> graft.ext.Stats.seasonalitySqlDuck(),
-    "events_attribution" -> graft.ext.Analytics.attributionSqlDuck(),
-    "events_markov_stationary" -> graft.ext.Analytics.markovStationarySqlDuck(),
-    "orders_rfm" -> graft.ext.Analytics.rfmSqlDuck,
-    "orders_cohort_ltv" -> graft.ext.Analytics.cohortLtvSqlDuck,
-    "events_survival_km" -> graft.ext.Analytics.kaplanMeierSqlDuck(),
-    "events_max_drawdown" -> graft.ext.Analytics.maxDrawdownSqlDuck,
-    "events_incident_overlap" -> graft.ext.Temporal.incidentOverlapSqlDuck(),
-    "events_fano_factor" -> graft.ext.Stats.fanoFactorSqlDuck,
-    "orders_hhi_concentration" -> graft.ext.Analytics.hhiConcentrationSqlDuck,
-    "quality_token_skew" -> graft.ext.Stats.keySkewTokensSqlDuck,
-    "orders_backlog_curve" ->
-      """WITH o AS (SELECT o_orderkey, epoch_us(o_orderdate) AS start_us
-        |  FROM orders WHERE o_orderdate IS NOT NULL),
-        | ls AS (SELECT l_orderkey AS o_orderkey,
-        |    max(epoch_us(l_shipdate)) AS last_ship_us
-        |  FROM lineitem WHERE l_shipdate IS NOT NULL GROUP BY l_orderkey),
-        | iv AS (SELECT o.start_us,
-        |    ls.last_ship_us + 86400000000 AS end_excl_us
-        |  FROM o JOIN ls USING (o_orderkey)
-        |  WHERE ls.last_ship_us + 86400000000 > o.start_us),
-        | d AS (SELECT us, CAST(sum(dd) AS BIGINT) AS delta,
-        |    CAST(sum(CASE WHEN dd > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_starts,
-        |    CAST(sum(CASE WHEN dd < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_ends
-        |  FROM (SELECT start_us AS us, 1 AS dd FROM iv
-        |        UNION ALL SELECT end_excl_us AS us, -1 AS dd FROM iv)
-        |  GROUP BY us)
-        |SELECT us, n_starts, n_ends, delta,
-        |  CAST(sum(delta) OVER (ORDER BY us
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS n_active
-        |FROM d ORDER BY us""".stripMargin,
-    "text_rake_keywords" -> TextOps.rakeKeywordsSqlDuck(),
-    "events_bot_rates" -> graft.ext.Stats.botRatesSqlDuck(),
-    "sample_dedup_weights" -> graft.ext.Pipelines.dedupWeightsSqlDuck,
-    "quality_corpus_card" -> graft.ext.Pipelines.corpusCardSqlDuck,
-    "quality_source_overlap" -> graft.ext.Pipelines.sourceOverlapSqlDuck,
-    "quality_contamination_card" -> TextOps.contaminationCardSqlDuck(),
-    "orders_brand_rules" -> graft.ext.Analytics.brandRulesSqlDuck(),
+        |ORDER BY event_type, prob""".stripMargin),
 
-    // independent recomputation of the bucketed-layout join: DuckDB joins
-    // the raw parquet tables directly — the layout is Spark-side physics,
-    // the RESULT must be layout-invariant
-    "layout_bucketed_join" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-        |    AS VARCHAR) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "quality_chi2_balance" ->
+    // incremental corpus update: accept incoming docs whose canonical
+    // fingerprint is new to the existing corpus AND first within the batch
+    QueryRow("pipeline_incremental", (s, dir) => {
+      val d = t(s, dir, "documents")
+      graft.ext.Pipelines.incrementalIngest(
+        d.filter(col("source") === "src0"), d.filter(col("source") =!= "src0"))
+        .select("doc_id", "source", "lang").orderBy("doc_id")
+    },
+      graft.ext.Pipelines.incrementalIngestSqlDuck("src0", "doc_id, source, lang")),
+
+    // curriculum length-bucketing: quartile edges from the deterministic
+    // sample sketch, binning as one codegen'd CASE over the scan
+    QueryRow("sample_length_quartiles", (s, dir) =>
+      graft.ext.Pipelines.lengthQuartiles(t(s, dir, "documents")).orderBy("doc_id"),
+      graft.ext.Pipelines.lengthQuartilesSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row quartile-edges aggregate")),
+
+    // per-source cap (keep best n per source): rank <= n over a partitioned
+    // window -- plans as WindowGroupLimit, map-side pre-pruned to n per
+    // source before the exchange
+    QueryRow("pipeline_source_cap", (s, dir) =>
+      graft.ext.Pipelines.sourceCap(t(s, dir, "documents"), 15)
+        .orderBy("source", "rank"),
+      graft.ext.Pipelines.sourceCapSqlDuck(15)),
+
+    // deterministic global training-order permutation in md5(doc_id) order
+    // via the bucketed global rank -- reproducible corpus shuffle with no
+    // single-partition sort anywhere
+    QueryRow("pipeline_shuffle_order", (s, dir) =>
+      graft.ext.Pipelines.shuffleOrder(t(s, dir, "documents"))
+        .orderBy("doc_id"),
+      graft.ext.Pipelines.shuffleOrderSqlDuck),
+
+    // the near-duplicate form of daily ingest: reject incoming docs
+    // LSH+Jaccard-similar to the existing corpus, then keep-first within
+    // the batch — the production shape (salted cross candidates, slim
+    // bucket relations)
+    QueryRow("pipeline_incremental_neardup", (s, dir) => {
+      val d = t(s, dir, "documents")
+      graft.ext.Pipelines.incrementalIngestNearDup(
+        d.filter(col("source") === "src0"), d.filter(col("source") =!= "src0"))
+        .select("doc_id", "source", "lang").orderBy("doc_id")
+    },
+      graft.ext.Pipelines.incrementalIngestNearDupSqlDuck(
+        "src0", 0.8, "doc_id, source, lang")),
+
+    QueryRow("s6_dict_lookup", (s, dir) =>
+      t(s, dir, "customer")
+        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+        .groupBy("r_name", "n_name")
+        .agg(count(lit(1)).as("n_customers"))
+        .orderBy("r_name", "n_name"),
+      """SELECT r_name, n_name, CAST(count(*) AS BIGINT) AS n_customers
+        |FROM customer
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+
+    // ---- LLM-pipeline extensions (north star / SURVEY.md §7.2 M5) --------
+    QueryRow("dedup_exact", (s, dir) =>
+      Dedup.exactGroups(t(s, dir, "documents")).orderBy("h"),
+      """SELECT md5(text) AS h, CAST(count(*) AS BIGINT) AS n_dups, min(doc_id) AS keep_id
+        |FROM documents GROUP BY h ORDER BY h""".stripMargin),
+
+    QueryRow("dedup_minhash", (s, dir) =>
+      Dedup.minhashSignatures(t(s, dir, "documents")).orderBy("doc_id"),
+      Dedup.minhashSqlDuck),
+
+    QueryRow("dedup_lsh_pairs", (s, dir) =>
+      Dedup.lshCandidatePairs(Dedup.minhashSignatures(t(s, dir, "documents")))
+        .orderBy("doc_a", "doc_b"),
+      Dedup.lshPairsSqlDuck),
+
+    QueryRow("dedup_simhash", (s, dir) =>
+      Dedup.simhash(t(s, dir, "documents")).orderBy("doc_id"),
+      Dedup.simhashSqlDuck),
+
+    // transitive dup clusters over LSH band buckets: bipartite doc–bucket
+    // label propagation (the candidate-pair graph is never materialized);
+    // the DuckDB oracle recomputes the same components independently via a
+    // recursive reachability CTE over the pair graph
+    QueryRow("dedup_clusters", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      Dedup.clusterByBuckets(docs,
+        Dedup.bandBuckets(Dedup.minhashSignatures(docs))).orderBy("doc_id")
+    },
+      Dedup.clustersSqlDuck),
+
+    QueryRow("dedup_ngram_jaccard", (s, dir) =>
+      Dedup.jaccardPairs(t(s, dir, "documents")).orderBy("doc_a", "doc_b"),
+      Dedup.jaccardSqlDuck),
+
+    // sorted-neighborhood near-dup pairs (ext/Dedup.sortedNeighborhoodPairs,
+    // Hernández & Stolfo SIGMOD'95): normalized-prefix sort key via the
+    // range-bucketed global position, window-5 neighbor equi-join, exact
+    // Jaccard ≥ 0.5 verify — the linear-candidate blocking alternative
+    QueryRow("dedup_sorted_neighborhood", (s, dir) =>
+      Dedup.sortedNeighborhoodPairs(t(s, dir, "documents"))
+        .orderBy("doc_a", "doc_b"),
+      Dedup.sortedNeighborhoodPairsSqlDuck()),
+
+    // EXACT simhash pairs at Hamming ≤ 3 by pigeonhole banding (ext/Dedup
+    // .simhashHammingPairs, Manku et al. WWW'07): 4 bands of 4 bits — a
+    // ≤3-bit difference must leave one band intact, so the (band, value)
+    // equi-join is complete; XOR+popcount verifies, all integer-exact
+    QueryRow("dedup_simhash_pairs", (s, dir) =>
+      Dedup.simhashHammingPairs(t(s, dir, "documents"))
+        .orderBy("doc_a", "doc_b"),
+      Dedup.simhashHammingPairsSqlDuck()),
+
+    // PageRank centrality over the LSH near-dup graph (ext/Graph.pageRank):
+    // which docs sit at the CENTER of a duplication neighborhood — fixed
+    // 3-iteration damped walk in exact scaled-BIGINT arithmetic (bit-stable
+    // under any partitioning; oracle unrolls the identical integer rounds)
+    QueryRow("graph_pagerank", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.ext.Graph.pageRank(docs,
+          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
+        .orderBy("doc_id")
+    },
+      graft.ext.Graph.pageRankLshSqlDuck()),
+
+    // per-node triangle count + clustering coefficient (ext/Graph
+    // .triangles, Suri–Vassilvitskii node-iterator): oriented wedge join
+    // bounded by Σ outdeg² — which docs sit inside near-cliques of mutual
+    // near-dups (template material) vs hub positions
+    QueryRow("graph_triangles", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.ext.Graph.triangles(docs,
+          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
+        .orderBy("doc_id")
+    },
+      graft.ext.Graph.trianglesLshSqlDuck),
+
+    // common-neighbor link prediction (ext/Graph.linkPrediction): non-edge
+    // pairs ranked by shared near-dup neighbors — the pairs an LSH pass
+    // likely MISSED and a curation sweep should re-check at lower θ; wedge
+    // middles capped at deg ≤ 64 (Adamic-Adar rationale), so wedge volume
+    // is n·cap²-bounded — template mega-hubs can't blow the join (they did
+    // at sf0.1 uncapped: spill-to-disk exhaustion); TakeOrdered top-k
+    QueryRow("graph_link_prediction", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.ext.Graph.linkPrediction(
+        Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
+    },
+      graft.ext.Graph.linkPredictionLshSqlDuck()),
+
+    // k-core peeling (ext/Graph.kCore): dense near-dup neighborhoods that
+    // survive iterative degree-< k deletion — near-cliques stay, hubs
+    // don't; fixed rounds, each one degree agg + survivor semi-join, with
+    // a per-node `converged` bit so insufficient rounds are VISIBLE
+    QueryRow("graph_kcore", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.ext.Graph.kCore(docs,
+          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
+        .orderBy("doc_id")
+    },
+      graft.ext.Graph.kCoreLshSqlDuck()),
+
+    // synchronous fixed-round label-propagation communities (ext/Graph
+    // .lpaCommunities, Raghavan et al. 2007): per-round edge→label
+    // equi-join + per-node argmax with smallest-label ties — splits a
+    // component along density where CC merges everything reachable
+    QueryRow("graph_lpa_communities", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.ext.Graph.lpaCommunities(docs,
+          Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs)))
+        .orderBy("doc_id")
+    },
+      graft.ext.Graph.lpaCommunitiesLshSqlDuck()),
+
+    // EXACT all-pairs Jaccard ≥ θ by prefix filtering (ext/Dedup
+    // .jaccardPrefixJoin, SSJoin/AllPairs): rarity-ordered prefixes +
+    // length filter give a complete candidate set with no LSH false
+    // negatives — every join an equi-join; oracle = the quadratic form
+    QueryRow("dedup_jaccard_prefix", (s, dir) =>
+      Dedup.jaccardPrefixJoin(t(s, dir, "documents"), theta = 0.8)
+        .orderBy("doc_a", "doc_b"),
+      Dedup.jaccardPrefixJoinSqlDuck(0.8)),
+
+    // directed containment |A∩B|/|A| ≥ θ (ext/Dedup.containmentPrefixJoin):
+    // quote/excerpt detection the Jaccard length filter structurally hides;
+    // A-prefixes against B's full shingle index, no |B| upper bound
+    QueryRow("dedup_containment", (s, dir) =>
+      Dedup.containmentPrefixJoin(t(s, dir, "documents"), theta = 0.8)
+        .orderBy("doc_a", "doc_b"),
+      Dedup.containmentPrefixJoinSqlDuck(0.8)),
+
+    // cross-source contamination matrix (ext/Dedup.crossSourceOverlap):
+    // distinct shared w-shingles per source pair + overlap coefficient —
+    // distinct (shingle, source) projection BEFORE the self-join bounds
+    // the per-key fan-out by |sources|, output by |sources|²
+    QueryRow("dedup_cross_source_overlap", (s, dir) =>
+      Dedup.crossSourceOverlap(t(s, dir, "documents")),
+      Dedup.crossSourceOverlapSqlDuck()),
+
+    // LSH candidate QUALITY eval (ext/Dedup.lshEval): banded-MinHash
+    // candidates scored against the EXACT prefix join at θ over the same
+    // shingle sets — tp / false negatives / precision / recall in one row;
+    // the number that decides whether the band config is safe to ship
+    QueryRow("dedup_lsh_eval", (s, dir) =>
+      Dedup.lshEval(t(s, dir, "documents")),
+      Dedup.lshEvalSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of three 1-row count aggregates (exact/candidates/tp)")),
+
+    QueryRow("dedup_keep_first", (s, dir) =>
+      Dedup.dropNearDuplicates(t(s, dir, "documents")).orderBy("doc_id"),
+      Dedup.dropNearDuplicatesSqlDuck()),
+
+    // keep-first with LSH candidates (band collisions, not char-length
+    // blocking); pair volume tracks duplicate density
+    QueryRow("dedup_keep_first_lsh", (s, dir) =>
+      Dedup.dropNearDuplicatesLsh(t(s, dir, "documents")).orderBy("doc_id"),
+      Dedup.dropNearDuplicatesLshSqlDuck()),
+
+    // keep-first vs bucket REPRESENTATIVES: candidate volume linear in the
+    // corpus at any duplicate density — the shape that survives 100 TB of
+    // boilerplate (see the round-7 10x probe in NOTES.md)
+    QueryRow("dedup_keep_first_lsh_rep", (s, dir) =>
+      Dedup.dropNearDuplicatesLshRep(t(s, dir, "documents")).orderBy("doc_id"),
+      Dedup.dropNearDuplicatesLshRepSqlDuck()),
+
+    // quality-aware canonical selection (the RefinedWeb/FineWeb rule): per
+    // LSH-connected cluster keep the best member by an exact-integer key
+    // (n_alpha, n_chars, -doc_id); one max-of-struct aggregate over the
+    // adjudicated bipartite label propagation — no windows
+    QueryRow("dedup_keep_best", (s, dir) =>
+      Dedup.keepBestInCluster(t(s, dir, "documents")).orderBy("doc_id"),
+      Dedup.keepBestSqlDuck),
+
+    QueryRow("dedup_embedding_cosine", (s, dir) =>
+      Similarity.cosinePairs(t(s, dir, "embeddings")).orderBy("id_a", "id_b"),
+      Similarity.cosinePairsSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "all-pairs by design; fixture-scale oracle twin of the bucketed form, excluded from bench"),
+      // the all-pairs BroadcastNestedLoopJoin form, kept only as the
+      // fixture-scale oracle cross-check for its bucketed twin
+      // (dedup_embedding_cosine_bucketed, which Bench times); the benched
+      // set exercises the 100 TB-shaped plans
+      benched = false),
+
+    QueryRow("dedup_embedding_cosine_bucketed", (s, dir) =>
+      Similarity.cosinePairsBucketed(t(s, dir, "embeddings")).orderBy("id_a", "id_b"),
+      Similarity.cosinePairsBucketedSqlDuck()),
+
+    QueryRow("sim_topk_bruteforce", (s, dir) =>
+      Similarity.bruteForceTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank"),
+      Similarity.bruteForceTopKSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "broadcast QUERY side (8 rows) vs streamed candidates — the intended brute-force baseline")),
+
+    // k-NN label classification eval (ext/Similarity.knnClassify):
+    // majority vote over the exact-cosine top-10 of 64 broadcast query
+    // vectors, per-label accuracy — classification quality of the
+    // embedding space measured, not assumed; linear scoring, never
+    // all-pairs (the dedup_lsh_eval contract)
+    QueryRow("sim_knn_classify", (s, dir) =>
+      Similarity.knnClassify(t(s, dir, "embeddings")).orderBy("label"),
+      Similarity.knnClassifySqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "broadcast 64-row query side vs streamed candidates — the sim_topk_bruteforce eval shape (the dedup_lsh_eval contract); production swaps in the ANN rankers")),
+
+    // dimension-truncation recall audit (ext/Similarity.matryoshkaRecall):
+    // exact top-10 at 64 dims vs at the first 16 — measures whether a 4×
+    // narrower index would hold recall, per query, before anyone ships it
+    QueryRow("sim_matryoshka_recall", (s, dir) =>
+      Similarity.matryoshkaRecall(t(s, dir, "embeddings")),
+      Similarity.matryoshkaRecallSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "two brute-force rankings by design (the audit must not confound truncation with ANN loss); broadcast 8-row query side")),
+
+    // approximate by DESIGN (LSH recall < 1), exact by CHECK: the oracle
+    // replicates the seeded bucket arithmetic, so results hash-match
+    QueryRow("sim_ann_lsh", (s, dir) =>
+      Similarity.annTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank"),
+      Similarity.annTopKSqlDuck()),
+
+    QueryRow("sim_ivf_topk", (s, dir) =>
+      Similarity.ivfTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank"),
+      Similarity.ivfTopKSqlDuck()),
+
+    // PQ/ADC top-k (Jégou et al. 2011): per-subspace Lloyd codebooks, m
+    // codes per vector, query-table equi-join on (subspace, code), exact
+    // integer micro-unit distance sums (see Similarity.pqTopK)
+    QueryRow("sim_pq_adc", (s, dir) =>
+      Similarity.pqTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank"),
+      Similarity.pqTopKSqlDuck()),
+
+    // PQ recall@k against the exact L2 ranking — dual-pass evaluation row
+    // by design (the lshEval / matryoshka precedent)
+    QueryRow("sim_pq_recall", (s, dir) =>
+      Similarity.pqRecall(t(s, dir, "embeddings")),
+      Similarity.pqRecallSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "the exact-truth ranking pass: broadcast 8-row query side vs streamed corpus (the sim_topk_bruteforce shape) — the evaluation harness half of the dual-pass recall audit, not the production path")),
+
+    // IVFADC (§IV of the PQ paper): IVF cluster pruning then ADC re-rank —
+    // the billion-scale composition; ADC runs only on the probed candidates
+    QueryRow("sim_ivfpq_topk", (s, dir) =>
+      Similarity.ivfPqTopK(t(s, dir, "embeddings")).orderBy("query_id", "rank"),
+      Similarity.ivfPqTopKSqlDuck()),
+
+    // SRP-LSH recall@k vs the exact cosine ranking — the third leg of the
+    // eval trilogy (lsh_eval: Jaccard candidates; pq_recall: quantizer;
+    // this: the SRP bucket structure). Dual-pass by design.
+    QueryRow("sim_ann_recall", (s, dir) =>
+      Similarity.annRecall(t(s, dir, "embeddings")),
+      Similarity.annRecallSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "same exact-truth ranking pass as sim_pq_recall (broadcast 8-row query side) — the evaluation harness half of the SRP recall audit")),
+
+    // SemDeDup (Abbas et al. 2023): coarse k-means clusters, then drop any
+    // vector with a lower-id cosine>theta neighbor in its own cluster —
+    // the published within-cluster collapse of the all-pairs embedding
+    // dedup; pair volume bounded by the cluster equi-join
+    QueryRow("dedup_semantic", (s, dir) =>
+      Similarity.semanticDedup(t(s, dir, "embeddings")).orderBy("vec_id"),
+      Similarity.semanticDedupSqlDuck()),
+
+    // hard-negative mining (DPR/ANCE): per anchor the most-similar
+    // NON-near-dup neighbors from the IVF pool — near-dups are false
+    // negatives, cut at the dedup family's 0.4 cosine threshold
+    QueryRow("sim_hard_negatives", (s, dir) =>
+      Similarity.hardNegatives(t(s, dir, "embeddings"))
+        .orderBy("query_id", "neg_rank"),
+      Similarity.hardNegativesSqlDuck()),
+
+    QueryRow("text_quality", (s, dir) =>
+      TextOps.quality(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.qualitySqlDuck),
+
+    // Gopher/MassiveText rule-bundle filter: word-level rules as exact
+    // cross-multiplied BIGINT comparisons, keep = product of flags — a
+    // map-only pass, zero shuffles (see TextOps.gopherRules)
+    QueryRow("text_gopher_rules", (s, dir) =>
+      TextOps.gopherRules(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.gopherRulesSqlDuck),
+
+    // substring-level duplicate density (Lee et al. 2021 adapted to sliding
+    // 8-gram coverage): fraction of shingle positions also seen in another
+    // doc, exact ppm integer arithmetic (see TextOps.dupFraction)
+    QueryRow("text_dup_fraction", (s, dir) =>
+      TextOps.dupFraction(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.dupFractionSqlDuck()),
+
+    // perplexity-filter slot (CCNet/Gopher/FineWeb): mean inverse bigram
+    // probability under the corpus's own MLE model — log-free rational
+    // form, exact micro-unit integer sums (see TextOps.surprisal)
+    QueryRow("text_surprisal", (s, dir) =>
+      TextOps.surprisal(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.surprisalSqlDuck),
+
+    QueryRow("text_tokens", (s, dir) =>
+      TextOps.tokenCounts(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.tokenCountsSqlDuck),
+
+    QueryRow("text_langid", (s, dir) =>
+      TextOps.langId(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.langIdSqlDuck),
+
+    // langid classifier eval: confusion matrix vs the fixture's own lang
+    // labels + per-true-row share (micro-units); ≤ |langs|² output rows
+    QueryRow("quality_langid_eval", (s, dir) =>
+      TextOps.langIdEval(t(s, dir, "documents")),
+      TextOps.langIdEvalSqlDuck),
+
+    // within-doc repeated-segment removal (C4/FineWeb line dedup adapted to
+    // 8-token segments): pure per-row array algebra, zero shuffles
+    QueryRow("text_dedup_segments", (s, dir) =>
+      TextOps.dedupSegments(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.dedupSegmentsSqlDuck()),
+
+    // CORPUS-WIDE boilerplate removal (the C4 rule: 4-token segments seen
+    // >= 3 times anywhere are dropped from every doc)
+    QueryRow("text_dedup_segments_global", (s, dir) =>
+      TextOps.dedupSegmentsGlobal(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.dedupSegmentsGlobalSqlDuck()),
+
+    // SUBSTRING-level exact dedup with keep-first (Lee et al. 2022
+    // ExactSubstr as a distributed shingle-run sweep): any ≥8-token span
+    // repeated anywhere in the corpus survives only at its first occurrence
+    QueryRow("text_dedup_substrings", (s, dir) =>
+      TextOps.dedupSubstrings(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.dedupSubstringsSqlDuck()),
+
+    QueryRow("text_fingerprint", (s, dir) =>
+      TextOps.fingerprint(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.fingerprintSqlDuck),
+
+    // Model-based quality filtering dataflow (FineWeb-Edu §3.2): linear
+    // probe over engineered integer features, exact micro-unit score,
+    // threshold keep — a trained probe's weights drop in unchanged
+    // scored with the TRAINED probe (ProbeWeights.TrainedGopherV1, an
+    // offline logistic fit distilling the gopher-rule cascade; VERDICT r14
+    // #5) — the stub weights now live only in the seam's differential specs
+    QueryRow("quality_classifier_score", (s, dir) =>
+      TextOps.classifierScore(t(s, dir, "documents"),
+        weights = TextOps.ProbeWeights.TrainedGopherV1).orderBy("doc_id"),
+      TextOps.classifierScoreSqlDuck(
+      weights = TextOps.ProbeWeights.TrainedGopherV1)),
+
+    // Unicode NFC normalization (graft.functions.UnicodeNormalize — Spark
+    // has no built-in): the fixture text is ASCII, so each doc gets a
+    // DECOMPOSED-form suffix (combining diaeresis/acute/ring built from
+    // identical code points on both engines); NFC must compose all four
+    // marks (n_nfc = n_raw − 4) and the normalized bytes must md5-match
+    // DuckDB's nfc_normalize
+    QueryRow("text_unicode_nfc", (s, dir) => {
+      val suffix = " naïve café Å" + "ngström"
+      t(s, dir, "documents")
+        .select(col("doc_id"), concat(col("text"), lit(suffix)).as("raw"))
+        .select(col("doc_id"),
+          length(col("raw")).cast("long").as("n_raw"),
+          length(graft.functions.UnicodeNormalize.nfc(col("raw")))
+            .cast("long").as("n_nfc"),
+          md5(graft.functions.UnicodeNormalize.nfc(col("raw"))).as("md5_nfc"))
+        .orderBy("doc_id")
+    },
+      """WITH r AS (SELECT doc_id,
+        |  text || ' nai' || chr(776) || 've cafe' || chr(769) || ' A' ||
+        |  chr(778) || 'ngstro' || chr(776) || 'm' AS raw
+        | FROM documents)
+        |SELECT doc_id, CAST(length(raw) AS BIGINT) AS n_raw,
+        |  CAST(length(nfc_normalize(raw)) AS BIGINT) AS n_nfc,
+        |  md5(nfc_normalize(raw)) AS md5_nfc
+        |FROM r ORDER BY doc_id""".stripMargin),
+
+    // URL canonicalization (the crawl-pipeline dedup-key step): the fixture
+    // has no URL column, so each doc derives a deterministic adversarial
+    // URL — uppercased scheme/host, default port, doubled slashes, ./ and
+    // ../ segments, tracking params, fragment — IDENTICALLY on both
+    // engines, and the canonicalizer must reduce it to normal form
+    QueryRow("text_url_canonicalize", (s, dir) =>
+      t(s, dir, "documents")
+        .selectExpr("doc_id",
+          """concat('HTTPS://Example.COM:443//', source, '/./Docs/',
+            | CAST(doc_id AS STRING), '/../', lang,
+            | '/Page/?utm_source=x&zz=9&b=', CAST(doc_id % 7 AS STRING),
+            | '&a=1&gclid=g#frag') AS url_raw""".stripMargin)
+        .select(col("doc_id"), col("url_raw"),
+          TextOps.urlCanonicalize("url_raw").as("url_canon"))
+        .orderBy("doc_id"),
+      s"""WITH r AS (SELECT doc_id,
+         |  'HTTPS://Example.COM:443//' || source || '/./Docs/' ||
+         |  CAST(doc_id AS VARCHAR) || '/../' || lang ||
+         |  '/Page/?utm_source=x&zz=9&b=' || CAST(doc_id % 7 AS VARCHAR) ||
+         |  '&a=1&gclid=g#frag' AS url_raw
+         | FROM documents)
+         |SELECT doc_id, url_raw,
+         |  ${TextOps.urlCanonSqlDuck("url_raw")} AS url_canon
+         |FROM r ORDER BY doc_id""".stripMargin),
+
+    QueryRow("text_tfidf", (s, dir) =>
+      TextOps.tfidfTopTerms(t(s, dir, "documents")).orderBy("doc_id", "rank"),
+      TextOps.tfidfSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row corpus-size aggregate")),
+
+    QueryRow("text_clean", (s, dir) =>
+      TextOps.clean(t(s, dir, "documents")).orderBy("doc_id"),
+      TextOps.cleanSqlDuck()),
+
+    QueryRow("dedup_minhash_shingles", (s, dir) =>
+      Dedup.minhashFromTokens(Dedup.shingles(t(s, dir, "documents")))
+        .orderBy("doc_id"),
+      Dedup.minhashShinglesSqlDuck()),
+
+    QueryRow("sample_stratified", (s, dir) =>
+      graft.ext.Pipelines.stratifiedSample(
+        t(s, dir, "documents").select("doc_id", "lang", "source"),
+        "lang", "doc_id", 20).orderBy("doc_id"),
+      graft.ext.Pipelines.stratifiedSampleSqlDuck(
+      "lang", "doc_id", 20, "documents", "doc_id, lang, source")),
+
+    // weighted corpus mixing: src0 gets 2x the share of every other source,
+    // every group downsampled deterministically (hash-ordered rank)
+    // temperature mixing (share ∝ n_tokens^(1/2)): derives the per-source
+    // weights mixSources consumes — sqrt-exact + micro-unit integer
+    // normalization (see Pipelines.temperatureMix)
+    QueryRow("sample_temperature_mix", (s, dir) =>
+      graft.ext.Pipelines.temperatureMix(t(s, dir, "documents")).orderBy("source"),
+      graft.ext.Pipelines.temperatureMixSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row weight-normalizer aggregate over the |sources|-row rollup")),
+
+    QueryRow("sample_mix_weighted", (s, dir) =>
+      graft.ext.Pipelines.mixSources(
+        t(s, dir, "documents").select("doc_id", "source"),
+        "source", "doc_id",
+        when(col("source") === "src0", 2.0).otherwise(1.0))
+        .select("doc_id", "source", "sample_rank").orderBy("doc_id"),
+      graft.ext.Pipelines.mixSourcesSqlDuck(
+      "source", "doc_id", "src0", "documents", "doc_id, source"),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "per-group count relation (|groups| rows) x 1-row min-scale aggregate")),
+
+    // token-budget mixing: keep docs per source, hash-ordered, until 800
+    // tokens per source are reached (packSequences boundary rule: the doc
+    // that straddles the budget stays). Driver path runs the SCALABLE
+    // bucket-cut formulation (no per-group total order; the doc-level
+    // window touches only the straddling hash bucket) — its output is
+    // proven identical to the simple window form (PipelinesSpec), so one
+    // oracle checks both.
+    QueryRow("sample_token_budget", (s, dir) =>
+      graft.ext.Pipelines.mixByTokenBudgetScalable(
+        t(s, dir, "documents").select("doc_id", "source", "lang", "text"),
+        "source", "doc_id", 800L)
+        .select("doc_id", "source", "lang", "n_tok").orderBy("doc_id"),
+      graft.ext.Pipelines.mixByTokenBudgetSqlDuck(
+      "source", "doc_id", 800L, "doc_id, source, lang")),
+
+    // deterministic hash-threshold train/val/test split: assignment depends
+    // only on the key — stable across runs, partitionings, and corpus
+    // growth (new docs never reassign old ones, unlike RNG splits)
+    QueryRow("sample_split_hash", (s, dir) =>
+      graft.ext.Pipelines.splitByHash(
+        t(s, dir, "documents").select("doc_id", "source"),
+        "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        .orderBy("doc_id"),
+      graft.ext.Pipelines.splitByHashSqlDuck(
+      "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
+      "documents", "doc_id, source")),
+
+    // leakage-safe split (ext/Pipelines.splitLeakageSafe): near-dup
+    // CLUSTERS are the split unit, so a near-copy of a training doc can
+    // never land in eval — doc-independent hashing (sample_split_hash)
+    // cannot give this guarantee; oracle recomputes the components as a
+    // recursive CTE and applies the identical md5 CASE over cluster_id
+    QueryRow("sample_split_leakage_safe", (s, dir) =>
+      graft.ext.Pipelines.splitLeakageSafe(t(s, dir, "documents"),
+          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        .orderBy("doc_id"),
+      graft.ext.Pipelines.splitLeakageSafeSqlDuck(
+      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))),
+
+    // Gopher-style duplicate-3-gram repetition signal per doc
+    QueryRow("text_repetition", (s, dir) =>
+      graft.ext.TextOps.repetition(t(s, dir, "documents")).orderBy("doc_id"),
+      graft.ext.TextOps.repetitionSqlDuck()),
+
+    // benchmark decontamination: drop docs sharing any 5-token shingle with
+    // the src0 "benchmark" corpus
+    QueryRow("text_decontaminate", (s, dir) => {
+      val d = t(s, dir, "documents")
+      graft.ext.TextOps.decontaminate(
+        d.filter(col("source") =!= "src0"), d.filter(col("source") === "src0"))
+        .select("doc_id", "source").orderBy("doc_id")
+    },
+      graft.ext.TextOps.decontaminateSqlDuck("src0")),
+
+    // decontamination through the broadcast-Bloom prefilter: result (and
+    // oracle) IDENTICAL to text_decontaminate — the Bloom stage is pure
+    // pre-shuffle reduction, confirmed by the exact join (no false
+    // negatives exist; false positives are filtered by the equi-join)
+    QueryRow("text_decontaminate_bloom", (s, dir) => {
+      val d = t(s, dir, "documents")
+      graft.ext.TextOps.decontaminateBloom(
+        d.filter(col("source") =!= "src0"), d.filter(col("source") === "src0"))
+        .select("doc_id", "source").orderBy("doc_id")
+    },
+      // IDENTICAL oracle to text_decontaminate: the Bloom prefilter is pure
+      // data reduction — exactness is the point of the check
+      graft.ext.TextOps.decontaminateSqlDuck("src0")),
+
+    // PII redaction: deterministic doc_id-derived PII appended on BOTH
+    // engines (the fixture text carries none — seeding lives HERE, in the
+    // query; the operator redacts its text column as given)
+    QueryRow("text_pii_redact", (s, dir) =>
+      graft.ext.TextOps.piiRedact(
+        t(s, dir, "documents").select(col("doc_id"),
+          graft.ext.TextOps.piiSeeded("text").as("text"))).orderBy("doc_id"),
+      graft.ext.TextOps.piiRedactSqlDuck),
+
+    // BM25 retrieval scoring against a fixed query — rational idf (same
+    // monotone-transform argument as text_tfidf), bit-stable double math
+    // multi-query BM25 retrieval through the inverted index (ext/TextOps
+    // .searchTopK): query terms equi-join the postings — each query touches
+    // only docs sharing a term, partial scores combine map-side, top-k
+    // plans as WindowGroupLimit; per-term doubles floor-quantize to 1e-9
+    // BIGINT nano-units before the (query, doc) sum so ranking is
+    // partitioning-independent (see searchTopK's scaladoc)
+    QueryRow("search_bm25_topk", (s, dir) =>
+      TextOps.searchTopK(t(s, dir, "documents")).orderBy("query_id", "rank"),
+      TextOps.searchTopKSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row corpus-stats aggregate onto the postings join")),
+
+    // Reciprocal Rank Fusion (ext/TextOps.searchRrf, Cormack et al.
+    // SIGIR'09): BM25 list ⊕ distinct-term-overlap list, exact
+    // 1e6 DIV (60+rank) micro-unit fusion — rank-only hybrid retrieval,
+    // fusion join is list-sized (≤ depth per query), never corpus-sized
+    QueryRow("search_rrf_fusion", (s, dir) =>
+      TextOps.searchRrf(t(s, dir, "documents")).orderBy("query_id", "rank"),
+      TextOps.searchRrfSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "inherits searchTopK's crossJoin of the 1-row corpus-stats aggregate; the fusion join itself is a (query, doc)-keyed equi-join of ≤ depth-per-query lists")),
+
+    // RAKE keyword extraction (ext/TextOps.rakeKeywords, Rose et al. 2010):
+    // stopword-delimited candidate phrases, deg/freq word scores in exact
+    // micro-units, corpus top-50 distinct phrases — per-doc running-count
+    // windows only, vocabulary-keyed rollups, TakeOrdered top-k
+    QueryRow("text_rake_keywords", (s, dir) =>
+      TextOps.rakeKeywords(t(s, dir, "documents")).orderBy("rank"),
+      TextOps.rakeKeywordsSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "triangular rank self-join over the k=50 surviving phrases — the text_top_ngrams idiom; the distributed part is TakeOrderedAndProject")),
+
+    // positional PHRASE search (ext/TextOps.phraseSearch): consecutive-
+    // token matching via anchor-vote postings intersection — each matching
+    // posting votes for pos−off, full occurrences have all offsets; the
+    // operator BM25's bag-of-words scoring cannot express
+    QueryRow("search_phrase", (s, dir) =>
+      TextOps.phraseSearch(t(s, dir, "documents")).orderBy("phrase_id", "rank"),
+      TextOps.phraseSearchSqlDuck()),
+
+    // the APPLY half of BPE (the actual 100 TB workload): encode the corpus
+    // with the learned merges via ONE word-type equi-join + per-source sum
+    QueryRow("text_bpe_encode", (s, dir) =>
+      TextOps.bpeEncode(t(s, dir, "documents")),
+      TextOps.bpeEncodeSqlDuck()),
+
+    // curriculum sharding: surprisal-ranked difficulty cut into 4 shards
+    // via rangeBuckets global rank + closed-form ntile — the
+    // sequence-difficulty warmup manifest, no single-partition windows
+    QueryRow("pipeline_curriculum", (s, dir) =>
+      graft.ext.Pipelines.curriculumShards(t(s, dir, "documents")),
+      graft.ext.Pipelines.curriculumShardsSqlDuck()),
+
+    // stratified k-fold CV assignment (md5-prefix mod k, the splitByHash
+    // hash family) + the (fold, source) balance report a CV harness checks
+    QueryRow("sample_kfold", (s, dir) =>
+      graft.ext.Pipelines.kfoldReport(t(s, dir, "documents")),
+      graft.ext.Pipelines.kfoldReportSqlDuck()),
+
+    // DSIR-style importance selection (ext/Pipelines.dsirSelect): hashed-
+    // bigram target-vs-raw ratio model (256 md5 buckets, add-1 smoothed),
+    // arithmetic-mean log-free scoring, deterministic top-100 — broadcast
+    // B-row model join, TakeOrdered, rank over the k survivors only
+    QueryRow("sample_dsir", (s, dir) =>
+      graft.ext.Pipelines.dsirSelect(t(s, dir, "documents"))
+        .orderBy("rank"),
+      graft.ext.Pipelines.dsirSelectSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row (R,T) totals aggregate + the text_top_ngrams-style triangular rank self-join over the k=100 survivors; the distributed part is TakeOrderedAndProject")),
+
+    // the leakage hash folds DON'T prevent, measured: LSH co-bucket pairs
+    // crossing fold boundaries (≈ (k-1)/k) via closed-form per-bucket fold
+    // counts — NO pair materialization (the distinct-pair form probed 84x
+    // at 10x on the dup-dense replica corpus); 1-row output
+    QueryRow("sample_kfold_leakage", (s, dir) =>
+      graft.ext.Pipelines.kfoldLeakage(t(s, dir, "documents")),
+      graft.ext.Pipelines.kfoldLeakageSqlDuck()),
+
+    // distributed BPE merge learning: ONE corpus-sized word-frequency
+    // rollup, then 6 rounds of weighted pair counting over the word-TYPE
+    // table (Heaps-bounded) with a 1-row argmax pull per round; merges are
+    // literal leftmost-non-overlapping replaces, counts exact BIGINTs
+    QueryRow("text_bpe_merges", (s, dir) =>
+      TextOps.bpeMerges(t(s, dir, "documents")),
+      TextOps.bpeMergesSqlDuck()),
+
+    // ranked-retrieval scorecard over the BM25 top-k: graded term-containment
+    // relevance, DCG via pinned 1/log2 literals floor-quantized to nano
+    // BIGINTs, nDCG/MRR as integer DIVs — the 4th eval harness (after LSH
+    // pair eval and PQ/SRP recall@k); output is |queries| rows
+    QueryRow("search_eval_ndcg", (s, dir) =>
+      TextOps.searchEval(t(s, dir, "documents")),
+      TextOps.searchEvalSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "the searchTopK scoring pass it evaluates carries the same 1-row corpus-stats crossJoin; the eval layers are broadcast k-row joins")),
+
+    QueryRow("text_bm25", (s, dir) =>
+      graft.ext.TextOps.bm25(t(s, dir, "documents")).orderBy("doc_id"),
+      graft.ext.TextOps.bm25SqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row corpus-stats aggregate")),
+
+    // capped inverted-index posting lists: |vocab|·k output rows; the
+    // rank cap plans as a WindowGroupLimit, so only k rows per term reach
+    // the row_number window (the tf rows below it are df's information
+    // floor — each crosses the term exchange exactly once)
+    QueryRow("text_postings", (s, dir) =>
+      graft.ext.TextOps.postings(t(s, dir, "documents")).orderBy("term", "rank"),
+      graft.ext.TextOps.postingsSqlDuck()),
+
+    // corpus-order n-gram novelty: fraction of a doc's distinct shingles
+    // first seen IN that doc — keep-first dedup's grading dual
+    QueryRow("text_novelty", (s, dir) =>
+      graft.ext.TextOps.novelty(t(s, dir, "documents")).orderBy("doc_id"),
+      graft.ext.TextOps.noveltySqlDuck()),
+
+    QueryRow("pipeline_corpus", (s, dir) =>
+      graft.ext.Pipelines.curateCorpus(t(s, dir, "documents")).orderBy("doc_id"),
+      graft.ext.Pipelines.curateCorpusSqlDuck()),
+
+    QueryRow("pipeline_corpus_lsh", (s, dir) =>
+      graft.ext.Pipelines.curateCorpusLsh(t(s, dir, "documents")).orderBy("doc_id"),
+      graft.ext.Pipelines.curateCorpusLshSqlDuck()),
+
+    // sliding context-window chunking: docs → overlapping 32-token windows
+    // advancing by 24 (narrow explode, shuffle-free at any scale)
+    QueryRow("text_chunks", (s, dir) =>
+      graft.ext.Chunking.chunkDocs(t(s, dir, "documents"))
+        .orderBy("doc_id", "chunk_id"),
+      graft.ext.Chunking.chunkDocsSqlDuck()),
+
+    // token-budget sequence packing by cumulative-offset binning over
+    // (lang, shard) streams — RNG-free, partitioning-invariant
+    QueryRow("pack_sequences", (s, dir) =>
+      graft.ext.Chunking.packSequences(t(s, dir, "documents"))
+        .orderBy("lang", "shard", "seq_id"),
+      graft.ext.Chunking.packSequencesSqlDuck()),
+
+    // corpus-level top-k bigrams via distributed TakeOrderedAndProject
+    QueryRow("text_top_ngrams", (s, dir) =>
+      graft.ext.Chunking.topNgrams(t(s, dir, "documents")).orderBy("rank"),
+      graft.ext.Chunking.topNgramsSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "triangular rank self-join over the k=100 survivors (k² bounded pairs) — replaced the r11 unpartitioned rank window; the distributed part is TakeOrderedAndProject")),
+
+    // the WHOLE doc→training-example flow in one plan: gates → LSH dedup →
+    // chunk → pack; output is the packed-sequence manifest
+    QueryRow("pipeline_training_examples", (s, dir) =>
+      graft.ext.Pipelines.trainingExamples(t(s, dir, "documents"))
+        .orderBy("shard", "seq_id"),
+      graft.ext.Pipelines.trainingExamplesSqlDuck()),
+
+    QueryRow("multimodal_features", (s, dir) =>
+      Multimodal.features(Multimodal.asMedia(t(s, dir, "documents"))).orderBy("doc_id"),
+      Multimodal.featuresSqlDuck),
+
+    // perceptual average-hash near-dup pairs over the media payload
+    // (ext/Multimodal.phashPairs): aHash on the stub-resampled 32-pixel
+    // grid, pigeonhole (band, value) equi-join, exact XOR+popcount verify
+    // at Hamming ≤ 3 — the image-dedup stage, never all-pairs
+    QueryRow("multimodal_phash_pairs", (s, dir) =>
+      Multimodal.phashPairs(Multimodal.asMedia(t(s, dir, "documents")))
+        .orderBy("doc_a", "doc_b"),
+      Multimodal.phashPairsSqlDuck()),
+
+    QueryRow("multimodal_decode", (s, dir) => // stub codec is deterministic → oracle-checked
+      Multimodal.decode(Multimodal.asMedia(t(s, dir, "documents"))).toDF.orderBy("doc_id"),
+      Multimodal.decodeSqlDuck),
+
+    // nearest-neighbor byte resample: the real resize index arithmetic over
+    // the payload, stub pixel interpretation
+    QueryRow("multimodal_resize", (s, dir) =>
+      Multimodal.resize(Multimodal.asMedia(t(s, dir, "documents"))).toDF.orderBy("doc_id"),
+      Multimodal.resizeSqlDuck()),
+
+    // every-2nd stub frame's byte slice — the container→frames→sample shape
+    QueryRow("multimodal_frame_sample", (s, dir) =>
+      Multimodal.frameSample(Multimodal.asMedia(t(s, dir, "documents"))).toDF
+        .orderBy("doc_id", "frame_idx"),
+      Multimodal.frameSampleSqlDuck()),
+
+    // AUDIO tier (VERDICT r15 #3): synthesize one genuine RIFF/WAVE PCM16
+    // payload per doc (sample rate/length/waveform deterministic from
+    // doc_id + n_chars), then REAL-parse it back — chunk walk, LE PCM16
+    // — into integer duration/peak/loudness features. The oracle computes
+    // the same features in CLOSED FORM from the parameters, so any header
+    // layout or parse bug turns the row red; the parse itself is
+    // additionally golden-tested on canonical + padded + rejected byte
+    // fixtures in MultimodalSpec.
+    QueryRow("audio_wav_features", (s, dir) =>
+      Multimodal.decodeWav(Multimodal.synthWavPcm16(t(s, dir, "documents")))
+        .toDF.orderBy("doc_id"),
+      Multimodal.wavFeaturesSqlDuck),
+
+    // per-window loudness profile over the same REAL-parsed WAV payloads:
+    // exact integer window energy (Σ sample²) + peak per 50-sample frame —
+    // the silence-detection primitive; map-only (frame indices derive from
+    // sample position, no shuffle at any scale)
+    QueryRow("audio_loudness_windows", (s, dir) =>
+      Multimodal.loudnessFrames(Multimodal.synthWavPcm16(t(s, dir, "documents")))
+        .toDF.orderBy("doc_id", "frame_idx"),
+      Multimodal.loudnessFramesSqlDuck()),
+
+    // IEEE-float WAV (format 3) + zero-crossing rate (VERDICT r16 #4):
+    // synthesize genuine float32 WAVs (18-byte fmt + fact chunk the walk
+    // must skip), REAL-parse them on the float path (the PCM16 parser
+    // rejects these payloads and vice versa — golden-tested both ways in
+    // MultimodalSpec), count sign transitions between consecutive samples
+    // — the integer-exact spectral proxy; oracle = the same sign-change
+    // count in closed form over the sawtooth via a per-doc lag window
+    QueryRow("audio_float_zcr", (s, dir) =>
+      Multimodal.decodeWavFloatZcr(Multimodal.synthWavFloat32(t(s, dir, "documents")))
+        .toDF.orderBy("doc_id"),
+      Multimodal.wavFloatZcrSqlDuck),
+
+    // ViT-style patch grid (ext/Multimodal.patches): payload → 16×8
+    // resample → 4×4 patches with exact byte sums and integer-milli means
+    // — the patch-embedding preprocessing interface with the indexing and
+    // batch shape real, only the pixel decode stubbed
+    QueryRow("multimodal_patches", (s, dir) =>
+      Multimodal.patches(Multimodal.asMedia(t(s, dir, "documents"))).toDF
+        .orderBy("doc_id", "patch_row", "patch_col"),
+      Multimodal.patchesSqlDuck()),
+
+    // exact-moment Pearson correlation + OLS slope of value vs hour-of-day
+    // per event_type (ext/Stats.pearsonByHour): decimal/bigint moments in
+    // ONE map-side-combined aggregate, textbook formula in double over them
+    // — partitioning-invariant where the builtin corr() is not
+    QueryRow("events_corr_hour", (s, dir) =>
+      graft.ext.Stats.pearsonByHour(t(s, dir, "events")).orderBy("event_type"),
+      graft.ext.Stats.pearsonByHourSqlDuck),
+
+    // RFM customer segmentation (ext/Analytics.rfm): recency/frequency/
+    // monetary per customer + tie-free 1-5 ntile scores — one customer
+    // rollup, 1-row max-date broadcast, windows over the aggregate only
+    QueryRow("orders_rfm", (s, dir) =>
+      graft.ext.Analytics.rfm(t(s, dir, "orders")).orderBy("o_custkey"),
+      graft.ext.Analytics.rfmSqlDuck,
+      accepted = Some("BroadcastNestedLoopJoin+SinglePartitionWindow" ->
+        "1-row max-date crossJoin, and global ntile windows over the per-customer AGGREGATE (|customers| rows), never raw orders")),
+
+    // first-order-cohort LTV matrix: integer year·12+month cohorts,
+    // exact-cents revenue, running cumulative per cohort over the
+    // (cohorts × ages) rollup only — never a window over raw orders
+    QueryRow("orders_cohort_ltv", (s, dir) =>
+      graft.ext.Analytics.cohortLtv(t(s, dir, "orders")),
+      graft.ext.Analytics.cohortLtvSqlDuck),
+
+    // vocabulary skew (ext/Stats.keySkew over the token stream): Gini of
+    // token frequencies + top-token share — the log-free Zipf witness a
+    // tokenizer audit wants before committing a vocab budget
+    QueryRow("quality_token_skew", (s, dir) =>
+      graft.ext.Stats.keySkew(
+        t(s, dir, "documents").select(
+          explode(graft.ext.TextOps.tokensArr("text")).as("tok")), "tok"),
+      graft.ext.Stats.keySkewTokensSqlDuck),
+
+    // Fano factor of hourly event counts per user (ext/Stats.fanoFactor):
+    // exact cross-multiplied integer moments over the corpus hour span —
+    // the arrival-process SHAPE signal botRates' thresholds don't see
+    QueryRow("events_fano_factor", (s, dir) =>
+      graft.ext.Stats.fanoFactor(t(s, dir, "events")).orderBy("user_id"),
+      graft.ext.Stats.fanoFactorSqlDuck,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row corpus-hour-span aggregate")),
+
+    // Herfindahl revenue concentration per nation (ext/Analytics
+    // .hhiConcentration): exact decimal revenue → micro-unit shares →
+    // integer HHI; supplier→nation broadcast, rollups only, no window
+    QueryRow("orders_hhi_concentration", (s, dir) =>
+      graft.ext.Analytics.hhiConcentration(t(s, dir, "lineitem"),
+        t(s, dir, "supplier"), t(s, dir, "nation")).orderBy("n_name"),
+      graft.ext.Analytics.hhiConcentrationSqlDuck),
+
+    // incident × session interval-overlap join (ext/Temporal
+    // .incidentOverlap): top-24 busiest error-hours merged into incidents
+    // (scale-invariant burst definition), hour-bucketed overlap join
+    // against 30-min-gap sessions, exact overlap time per incident
+    QueryRow("events_incident_overlap", (s, dir) =>
+      graft.ext.Temporal.incidentOverlap(t(s, dir, "events"))
+        .orderBy("h_start"),
+      graft.ext.Temporal.incidentOverlapSqlDuck()),
+
+    // max drawdown per user over the cumulative value series (ext/
+    // Analytics.maxDrawdown): exact-cents prefix sum + running max, both
+    // windows and the rollup inside ONE user_id exchange
+    QueryRow("events_max_drawdown", (s, dir) =>
+      graft.ext.Analytics.maxDrawdown(t(s, dir, "events"))
+        .orderBy("user_id"),
+      graft.ext.Analytics.maxDrawdownSqlDuck),
+
+    // Kaplan–Meier time-to-conversion survival (ext/Analytics
+    // .kaplanMeier): first signup → first purchase within a 48 h window,
+    // right-censored at window/corpus cutoff; exact integer fixed-point
+    // survival fold over the horizon-bounded step table (libm-free)
+    QueryRow("events_survival_km", (s, dir) =>
+      graft.ext.Analytics.kaplanMeier(t(s, dir, "events")),
+      graft.ext.Analytics.kaplanMeierSqlDuck()),
+
+    // super-human event-rate / burst detection (ext/Stats.botRates): the
+    // abuse gate before user events feed training — sustained milli-rate
+    // and exact sliding-window peak burst, one user_id exchange
+    QueryRow("events_bot_rates", (s, dir) =>
+      graft.ext.Stats.botRates(t(s, dir, "events")).orderBy("user_id"),
+      graft.ext.Stats.botRatesSqlDuck()),
+
+    // stationary distribution of the session transition chain (ext/
+    // Analytics.markovStationary): fixed-round integer power iteration
+    // over the |states|²-row count relation — the corpus is touched once
+    QueryRow("events_markov_stationary", (s, dir) =>
+      graft.ext.Analytics.markovStationary(t(s, dir, "events")).orderBy("state"),
+      graft.ext.Analytics.markovStationarySqlDuck()),
+
+    // single-touch attribution (ext/Analytics.attribution): per purchase,
+    // trailing-window touch count + FIRST- and LAST-touch types side by
+    // side — three window functions over one RANGE frame in one user_id
+    // exchange, never a purchases × touches join
+    QueryRow("events_attribution", (s, dir) =>
+      graft.ext.Analytics.attribution(t(s, dir, "events")).orderBy("event_id"),
+      graft.ext.Analytics.attributionSqlDuck()),
+
+    // directed brand association rules (ext/Analytics.brandRules):
+    // support/confidence/lift over DISTINCT (order, brand) baskets —
+    // broadcast dim join + order-keyed pair expansion bounded by |brands|²
+    // per order
+    QueryRow("orders_brand_rules", (s, dir) =>
+      graft.ext.Analytics.brandRules(t(s, dir, "lineitem"), t(s, dir, "part"))
+        .orderBy("brand_a", "brand_b"),
+      graft.ext.Analytics.brandRulesSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row basket-count aggregate onto the |brands|²-bounded rule rollup")),
+
+    // weekly-diurnal seasonal profile + R² (ext/Stats.seasonality): the
+    // (dow × hour) mean grid per event type with variance-explained —
+    // "is this metric seasonal or noisy"; calendar math is pure integer
+    // epoch-µs (no locale dayofweek), moments exact, SS_between summed as
+    // quantized decimals
+    QueryRow("events_seasonality", (s, dir) =>
+      graft.ext.Stats.seasonality(t(s, dir, "events"))
+        .orderBy("event_type", "dow", "hour"),
+      graft.ext.Stats.seasonalitySqlDuck()),
+
+    // trailing-window z-score anomalies (ext/Stats.anomalyZscore): each
+    // event vs its user's previous 20 events — one user_id shuffle, one
+    // sorted window pass carrying three exact trailing sums
+    QueryRow("events_anomaly_zscore", (s, dir) =>
+      graft.ext.Stats.anomalyZscore(t(s, dir, "events")).orderBy("event_id"),
+      graft.ext.Stats.anomalyZscoreSqlDuck()),
+
+    // two-sided CUSUM change points (ext/Stats.cusumChangepoints): level
+    // shifts z-scores miss — the max(0, ·) recurrence as closed-form
+    // running-sum-minus-running-min, exact BIGINT cents, ONE user_id
+    // exchange shared by all frames
+    QueryRow("events_changepoint_cusum", (s, dir) =>
+      graft.ext.Stats.cusumChangepoints(t(s, dir, "events")).orderBy("event_id"),
+      graft.ext.Stats.cusumChangepointsSqlDuck()),
+
+    // chi-square lang × source independence audit (ext/Stats
+    // .chiSquareBalance): does language mix depend on source? The full
+    // contingency table incl. zero-observed cells, χ² total from exact
+    // decimal-quantized contributions; margins broadcast, the corpus is
+    // touched once
+    QueryRow("quality_chi2_balance", (s, dir) =>
+      graft.ext.Stats.chiSquareBalance(t(s, dir, "documents"), "lang", "source")
+        .orderBy("lang", "source"),
       graft.ext.Stats.chiSquareBalanceSqlDuck("documents", "lang", "source"),
-    "sim_matryoshka_recall" -> Similarity.matryoshkaRecallSqlDuck(),
-    "search_bm25_topk" -> TextOps.searchTopKSqlDuck(),
-    "search_phrase" -> TextOps.phraseSearchSqlDuck(),
-    "search_rrf_fusion" -> TextOps.searchRrfSqlDuck(),
-    "search_eval_ndcg" -> TextOps.searchEvalSqlDuck(),
-    "text_bpe_merges" -> TextOps.bpeMergesSqlDuck(),
-    "text_bpe_encode" -> TextOps.bpeEncodeSqlDuck(),
-    "sample_kfold" -> graft.ext.Pipelines.kfoldReportSqlDuck(),
-    "sample_dsir" -> graft.ext.Pipelines.dsirSelectSqlDuck(),
-    "sample_kfold_leakage" -> graft.ext.Pipelines.kfoldLeakageSqlDuck(),
-    "pipeline_curriculum" -> graft.ext.Pipelines.curriculumShardsSqlDuck(),
-    "events_path_trigrams" -> graft.ext.Analytics.pathTrigramsSqlDuck(),
-    "quality_key_skew" -> graft.ext.Stats.keySkewSqlDuck("events", "user_id"),
-    "events_equidepth_hist" ->
-      graft.ext.Analytics.equidepthHistogramSqlDuck("events", "value", 8),
-    "orders_pareto_front" -> graft.ext.Analytics.paretoFrontSqlDuck,
-    "sample_priority_weighted" -> graft.ext.Pipelines.prioritySampleSqlDuck(100),
-    "events_resample_interp" ->
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "margin cross product |A|×|B| plus the 1-row n aggregate — contingency cells, never the corpus")),
+
+    // one-row-per-column dataset profile (ext/Stats.profileColumns):
+    // count / nulls / exact distinct / stringified min-max per column,
+    // each from its own column-pruned scan
+    QueryRow("profile_documents", (s, dir) =>
+      graft.ext.Stats.profileColumns(t(s, dir, "documents"),
+        Seq("doc_id", "lang", "source", "n_chars", "text")).orderBy("col_name"),
+      graft.ext.Stats.profileColumnsSqlDuck("documents",
+      Seq("doc_id", "lang", "source", "n_chars", "text"))),
+
+    // count-min sketch over the corpus token stream (ext/Sketch
+    // .countMinTokens): depth×width exact counters via one map-side-combined
+    // aggregation; estimates (min over rows) for the top-50 tokens with the
+    // exact counts riding along as the differential — fixed md5 hash rows
+    // make the sketch itself oracle-checkable, like KMV vs HLL
+    QueryRow("sketch_countmin", (s, dir) =>
+      graft.ext.Sketch.countMinTokens(t(s, dir, "documents"))
+        .orderBy(col("exact").desc, col("token")),
+      graft.ext.Sketch.countMinTokensSqlDuck()),
+
+    // explicit-register HyperLogLog distinct users per event type
+    // (ext/Sketch.hllDistinctByGroup): 256 max-rank registers per group,
+    // rank capped at 20 so every 2^-rho term and their 256-term sum are
+    // EXACT binary64 -- the estimate is partition- and engine-invariant;
+    // the exact count column validates the sketch at fixture scale
+    QueryRow("sketch_hll_distinct", (s, dir) =>
+      graft.ext.Sketch.hllDistinctByGroup(t(s, dir, "events"),
+        "event_type", "user_id").orderBy("event_type"),
+      graft.ext.Sketch.hllDistinctByGroupSqlDuck(
+      "events", "event_type", "user_id")),
+
+    // corpus-slice distribution drift as TOTAL-VARIATION distance (ext/
+    // Stats.driftTotalVariation): TV, not PSI/KL — no ln, the per-bucket
+    // |p_a − p_b| cross-multiplies to exact BIGINT numerators and TV is
+    // one final double division; two histograms + tiny bucket outer join
+    QueryRow("quality_drift_tv", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.ext.Stats.driftTotalVariation(
+          docs.filter(col("source") === "src0"),
+          docs.filter(col("source") === "src1"), "n_chars")
+        .orderBy("bucket")
+    },
+      graft.ext.Stats.driftTvSqlDuck("src0", "src1"),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoins of the 1-row totals and 1-row numerator-sum aggregates onto the bucket-count histogram")),
+
+    // exact two-sample Kolmogorov–Smirnov drift (ext/Stats.ksDrift): the
+    // binless sup-CDF-gap companion to quality_drift_tv — integer CDF
+    // numerators via the bucketed running-sum machinery, one TakeOrdered
+    // argmax, one final micro-unit DIV
+    QueryRow("quality_ks_drift", (s, dir) =>
+      graft.ext.Stats.ksDrift(t(s, dir, "documents")),
+      graft.ext.Stats.ksDriftSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row sample-totals aggregate onto the per-value CDF relation")),
+
+    // vocabulary coverage curve (ext/TextOps.vocabCoverage): minimal
+    // frequency-ranked vocab covering 50/90/99% of token occurrences —
+    // frequency-CLASS collapse (within-class order provably irrelevant),
+    // bucketed n-DESC prefix sums, 3-row broadcast boundary join
+    QueryRow("text_vocab_coverage", (s, dir) =>
+      TextOps.vocabCoverage(t(s, dir, "documents")),
+      TextOps.vocabCoverageSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "3 threshold rows crossJoin the 1-row corpus-total aggregate, then broadcast-range-join the frequency-class relation (one boundary row each)")),
+
+    // DAU/WAU engagement + stickiness (ext/Analytics.dauWau): exact
+    // sliding distinct via the bounded ×7 window-end expansion of
+    // (user, day) facts — never a per-day history scan
+    QueryRow("events_dau_wau", (s, dir) =>
+      graft.ext.Analytics.dauWau(t(s, dir, "events")).orderBy("day"),
+      graft.ext.Analytics.dauWauSqlDuck()),
+
+    // cumulative unique-user growth curve (ext/Analytics.cumulativeUsers):
+    // first-active-day per user, per-day rollup, bucketed running sum —
+    // exact BIGINTs end to end
+    QueryRow("events_cumulative_users", (s, dir) =>
+      graft.ext.Analytics.cumulativeUsers(t(s, dir, "events")),
+      graft.ext.Analytics.cumulativeUsersSqlDuck),
+
+    // TIME-WEIGHTED average per user (ext/Temporal.timeWeightedAvg): the
+    // irregular-sampling mean — exact BIGINT cents·µs accumulation, one
+    // final double division; one user_id exchange
+    QueryRow("events_twa", (s, dir) => {
+      val ev = t(s, dir, "events")
+        .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
+      graft.ext.Temporal.timeWeightedAvg(ev, "user_id", "us", "value")
+        .orderBy("user_id")
+    },
+      graft.ext.Temporal.timeWeightedAvgSqlDuck),
+
+    // top-20 session path trigrams (ext/Analytics.pathTrigrams): order-3
+    // clickstream mining within gap-sessions — one user_id exchange,
+    // |types|³-bounded rollup, TakeOrdered top-k
+    QueryRow("events_path_trigrams", (s, dir) =>
+      graft.ext.Analytics.pathTrigrams(t(s, dir, "events"))
+        .orderBy(col("n").desc, col("path")),
+      graft.ext.Analytics.pathTrigramsSqlDuck()),
+
+    // key-concentration audit with exact Gini (ext/Stats.keySkew): the
+    // shuffle-planning skew input — rank-weighted sum via the bucketed
+    // global-position machinery, never a single-reducer sort
+    QueryRow("quality_key_skew", (s, dir) =>
+      graft.ext.Stats.keySkew(t(s, dir, "events"), "user_id"),
+      graft.ext.Stats.keySkewSqlDuck("events", "user_id")),
+
+    // out-of-order event-time rate per type (ext/Analytics.outOfOrderRate):
+    // the audit that sizes streaming watermark delays — one user_id
+    // exchange for the lag, one |types|-row rollup
+    QueryRow("quality_out_of_order", (s, dir) =>
+      graft.ext.Analytics.outOfOrderRate(t(s, dir, "events"))
+        .orderBy("event_type"),
+      graft.ext.Analytics.outOfOrderRateSqlDuck),
+
+    // equi-depth histogram (ext/Analytics.equidepthHistogram): boundaries
+    // from the exact-quantile value-domain bisection (O(log range) narrow
+    // scans), never an ntile over one global window; k boundary scalars →
+    // literal bucketing chain → k-row aggregate
+    QueryRow("events_equidepth_hist", (s, dir) =>
+      graft.ext.Analytics.equidepthHistogram(t(s, dir, "events"), "value", 8)
+        .orderBy("bucket"),
+      graft.ext.Analytics.equidepthHistogramSqlDuck("events", "value", 8)),
+
+    // 2-D Pareto frontier (ext/Analytics.paretoFront): skyline of orders
+    // maximizing price / minimizing order time — distinct-pair reduce +
+    // range-bucketed prefix-min instead of the quadratic NOT-EXISTS or a
+    // single-reducer global window
+    QueryRow("orders_pareto_front", (s, dir) => {
+      val o = t(s, dir, "orders")
+      // o_orderdate ships as TIMESTAMP_NTZ — same UTC-pinned cast as events.ts
+      graft.ext.Analytics.paretoFront(o, col("o_totalprice"),
+          unix_micros(col("o_orderdate").cast("timestamp")))
+        .orderBy(col("p").desc, col("d_us"))
+    },
+      graft.ext.Analytics.paretoFrontSqlDuck),
+
+    // one-row corpus DATA CARD (ext/Pipelines.corpusCard): docs/sources/
+    // langs/tokens + the near-dup cluster structure — the release summary
+    // block, every number exact except two divisions
+    QueryRow("quality_corpus_card", (s, dir) =>
+      graft.ext.Pipelines.corpusCard(t(s, dir, "documents")),
+      graft.ext.Pipelines.corpusCardSqlDuck,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row corpus aggregate and 1-row cluster-structure aggregate")),
+
+    // cross-source duplication matrix (ext/Pipelines.sourceOverlap): which
+    // sources copy from which — LSH pair counts per source pair with
+    // possible-pair-normalized rates; |sources|²-bounded output
+    QueryRow("quality_source_overlap", (s, dir) =>
+      graft.ext.Pipelines.sourceOverlap(t(s, dir, "documents"))
+        .orderBy("source_a", "source_b"),
+      graft.ext.Pipelines.sourceOverlapSqlDuck),
+
+    // cross-source contamination card (ext/TextOps.contaminationCard): each
+    // source treated as an eval set in turn — per (candidate, benchmark)
+    // source pair, contaminated-doc count, distinct leaked shingles, and
+    // rate; the audit read before configuring text_decontaminate
+    QueryRow("quality_contamination_card", (s, dir) =>
+      TextOps.contaminationCard(t(s, dir, "documents"))
+        .orderBy("cand_source", "bench_source"),
+      TextOps.contaminationCardSqlDuck()),
+
+    // duplicate-aware sampling weights (ext/Pipelines.dedupWeights): every
+    // doc carries 1e6 DIV |near-dup cluster| µ-weight — each cluster
+    // contributes one unit of sampling mass however many copies it has;
+    // the soft alternative to keep-first dropping
+    QueryRow("sample_dedup_weights", (s, dir) =>
+      graft.ext.Pipelines.dedupWeights(t(s, dir, "documents")).orderBy("doc_id"),
+      graft.ext.Pipelines.dedupWeightsSqlDuck),
+
+    // weight-proportional k-sample by PRIORITY SAMPLING (ext/Pipelines
+    // .prioritySample, Duffield–Lund–Thorup): q = w/u from md5 — no
+    // transcendentals, so the draw is engine-portable; top-k is a
+    // TakeOrdered partial top-k, never a global sort
+    QueryRow("sample_priority_weighted", (s, dir) =>
+      graft.ext.Pipelines.prioritySample(t(s, dir, "documents"),
+          "n_chars", "doc_id", 100)
+        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
+          col("priority"))
+        .orderBy(col("priority").desc, col("doc_id")),
+      graft.ext.Pipelines.prioritySampleSqlDuck(100)),
+
+    // regular-grid resampling with LINEAR interpolation (ext/AsOf
+    // .resampleInterp): the gap-fill twin of events_resample_ffill — same
+    // one-shuffle tagged-union shape, one extra opposite-frame window pass
+    QueryRow("events_resample_interp", (s, dir) => {
+      val ev = t(s, dir, "events")
+        .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
+      graft.ext.AsOf.resampleInterp(ev, "user_id", "us", "value", 86400000000L)
+        .orderBy("user_id", "grid_us")
+    },
       """WITH p AS (SELECT user_id, epoch_us(ts) AS us, max(CAST(value AS DOUBLE)) AS v
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
         | b AS (SELECT user_id, min(us) AS lo, max(us) AS hi FROM p GROUP BY user_id),
@@ -4337,30 +4135,146 @@ object SparkEntry {
         |  CASE WHEN t1 IS NULL THEN v0
         |       ELSE v0 + (v1 - v0) * (CAST(us - t0 AS DOUBLE) / CAST(t1 - t0 AS DOUBLE)) END
         |    AS value_interp
-        |FROM w WHERE tag = 1 ORDER BY user_id, grid_us""".stripMargin,
-    "events_stream_enrich" ->
+        |FROM w WHERE tag = 1 ORDER BY user_id, grid_us""".stripMargin),
+
+    // seventh streaming oracle row — stream-STATIC dimension enrichment:
+    // every event joins the broadcast customer dim (no join state), rolls
+    // up per market segment in complete mode (state = |segments|+1 rows);
+    // oracle = the identical batch LEFT JOIN + GROUP BY in DuckDB
+    QueryRow("events_stream_enrich", (s, dir) => {
+      val dim = t(s, dir, "customer")
+      val replayed = replayStream(s, dir, "stream_enrich_verify", "complete")(
+        graft.streaming.EventStreams.enrichSegmentCounts(
+            graft.streaming.EventStreams.readEvents(s, dir), dim))
+      replayed
+        .select(col("segment"), col("n"), dstr(col("sum_value")).as("sum_value"))
+        .orderBy("segment")
+    },
       """SELECT coalesce(c_mktsegment, 'unmatched') AS segment,
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
         |FROM events LEFT JOIN customer ON user_id = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "sim_quantize_sq8" -> Similarity.quantizeSq8SqlDuck,
-    "pipeline_upsert_latest" -> graft.ext.Pipelines.upsertLatestSqlDuck(
-      "doc_id, text, lang, source, n_chars"),
-    "pipeline_corpus_diff" -> graft.ext.Pipelines.corpusDiffSqlDuck,
-    "events_transition_matrix" -> graft.ext.Analytics.transitionMatrixSqlDuck,
-    "events_type_affinity" -> graft.ext.Analytics.typeAffinitySqlDuck(),
-    "quality_ref_integrity" -> graft.ext.Analytics.refIntegritySqlDuck(Seq(
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // SQ8 scalar quantization of the embedding corpus (ext/Similarity
+    // .quantizeSq8): per-dim min/max stats (Dim×2 driver scalars, the
+    // adjudicated bounded pull) → literal arrays → one narrow quantize
+    // pass; per-vector midpoint-reconstruction error left-folds in
+    // dimension order, so even the double accumulation hash-matches
+    QueryRow("sim_quantize_sq8", (s, dir) =>
+      Similarity.quantizeSq8(t(s, dir, "embeddings")).orderBy("vec_id"),
+      Similarity.quantizeSq8SqlDuck),
+
+    // SCD1 key-based upsert (ext/Pipelines.upsertLatest): the incoming
+    // batch re-crawls every third doc (text + ' v2'); latest batch wins
+    // per key, content-hash tie-break, provenance in from_batch
+    QueryRow("pipeline_upsert_latest", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val incoming = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+        .withColumn("text", concat(col("text"), lit(" v2")))
+        .withColumn("n_chars", col("n_chars") + 3L)
+      graft.ext.Pipelines.upsertLatest(docs, incoming)
+        .select("doc_id", "text", "lang", "source", "n_chars", "from_batch")
+        .orderBy("doc_id")
+    },
+      graft.ext.Pipelines.upsertLatestSqlDuck(
+      "doc_id, text, lang, source, n_chars")),
+
+    // corpus snapshot diff (ext/Pipelines.corpusDiff): added/removed/
+    // changed/unchanged counts across two derived snapshot versions —
+    // one co-partitioned full-outer equi-join on doc_id over fixed-width
+    // content hashes, then a ≤4-row rollup
+    QueryRow("pipeline_corpus_diff", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val v1 = docs.filter(pmod(col("doc_id"), lit(10)) =!= 7)
+      val v2 = docs.filter(pmod(col("doc_id"), lit(10)) =!= 4)
+        .withColumn("text", when(pmod(col("doc_id"), lit(3)) === 0,
+          concat(col("text"), lit(" v2"))).otherwise(col("text")))
+      graft.ext.Pipelines.corpusDiff(v1, v2)
+    },
+      graft.ext.Pipelines.corpusDiffSqlDuck),
+
+    // ABC revenue classification (ext/Analytics.abcAnalysis): who drives
+    // the first 80% / next 15% / tail of revenue — exact-cents spend
+    // classes cumulated DESC via the bucketed prefix machinery, whole-class
+    // deterministic labels, integer cross-multiplied thresholds
+    QueryRow("orders_abc_analysis", (s, dir) =>
+      graft.ext.Analytics.abcAnalysis(t(s, dir, "orders")),
+      graft.ext.Analytics.abcAnalysisSqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row revenue-total aggregate onto the spend-class relation")),
+
+    // Benford first-digit audit (ext/Stats.benford): observed first-digit
+    // shares of exact cents vs the hardcoded log10(1+1/d) literals — the
+    // fabricated-amounts smell test; ≤9 groups, broadcast 1-row total
+    QueryRow("quality_benford", (s, dir) =>
+      graft.ext.Stats.benford(t(s, dir, "orders")),
+      graft.ext.Stats.benfordSqlDuck,
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row total aggregate onto the ≤9-row digit rollup")),
+
+    // first-order Markov transition matrix between event types (ext/
+    // Analytics.transitionMatrix): one user_id exchange for the lag pairs,
+    // |types|²-bounded rollup, broadcast per-from totals
+    QueryRow("events_transition_matrix", (s, dir) =>
+      graft.ext.Analytics.transitionMatrix(t(s, dir, "events"))
+        .orderBy("from_type", "to_type"),
+      graft.ext.Analytics.transitionMatrixSqlDuck),
+
+    // session-basket type affinity with lift (ext/Analytics.typeAffinity):
+    // gap-session baskets, within-basket pair enumeration bounded by
+    // |types|² per session, exact counts, double lift
+    QueryRow("events_type_affinity", (s, dir) =>
+      graft.ext.Analytics.typeAffinity(t(s, dir, "events"))
+        .orderBy("type_a", "type_b"),
+      graft.ext.Analytics.typeAffinitySqlDuck(),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "crossJoin of the 1-row session-count aggregate onto the |types|²-bounded pair rollup")),
+
+    // referential-integrity audit across the star schema (ext/Analytics
+    // .refIntegrity): per declared FK relationship, key-pruned LEFT ANTI
+    // orphan counts — the warehouse-load data-quality gate
+    QueryRow("quality_ref_integrity", (s, dir) => {
+      val rels = Seq(
+        ("lineitem.l_orderkey->orders", t(s, dir, "lineitem"), "l_orderkey",
+          t(s, dir, "orders"), "o_orderkey"),
+        ("orders.o_custkey->customer", t(s, dir, "orders"), "o_custkey",
+          t(s, dir, "customer"), "c_custkey"),
+        ("customer.c_nationkey->nation", t(s, dir, "customer"), "c_nationkey",
+          t(s, dir, "nation"), "n_nationkey"),
+        ("supplier.s_nationkey->nation", t(s, dir, "supplier"), "s_nationkey",
+          t(s, dir, "nation"), "n_nationkey"),
+        ("nation.n_regionkey->region", t(s, dir, "nation"), "n_regionkey",
+          t(s, dir, "region"), "r_regionkey"),
+        ("events.user_id->customer", t(s, dir, "events"), "user_id",
+          t(s, dir, "customer"), "c_custkey"))
+      graft.ext.Analytics.refIntegrity(rels).orderBy("relationship")
+    },
+      graft.ext.Analytics.refIntegritySqlDuck(Seq(
       ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
       ("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
       ("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
       ("supplier.s_nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
       ("nation.n_regionkey->region", "nation", "n_regionkey", "region", "r_regionkey"),
       ("events.user_id->customer", "events", "user_id", "customer", "c_custkey"))),
+      accepted = Some("BroadcastNestedLoopJoin" ->
+        "per-relationship crossJoin of two 1-row aggregates (totals × orphan count)")),
 
-    // same sessionization CTEs as events_sessionize, then the sweep:
-    // net delta per distinct boundary instant, running sum in us order
-    "events_session_concurrency" ->
+    // session concurrency curve (ext/Temporal.intervalConcurrency over
+    // ext/Temporal.sessionIntervals): sweep-line actives count at every
+    // boundary instant — NO pair enumeration (overlap self-joins are
+    // quadratic in busy periods); the running sum is the deterministic
+    // bucketed prefix sum (IngestOps.withGlobalRunningSum), never a
+    // single-reducer global window. Sessions are closed [start,end] in µs,
+    // so the exclusive sweep end is end_us + 1.
+    QueryRow("events_session_concurrency", (s, dir) => {
+      val sess = graft.ext.Temporal.sessionIntervals(t(s, dir, "events"))
+        .withColumn("end_excl_us", col("end_us") + 1L)
+      graft.ext.Temporal.intervalConcurrency(sess, "start_us", "end_excl_us")
+        .orderBy("us")
+    },
+      // same sessionization CTEs as events_sessionize, then the sweep:
+      // net delta per distinct boundary instant, running sum in us order
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
         | flags AS (
         |  SELECT user_id, event_id, us,
@@ -4384,12 +4298,74 @@ object SparkEntry {
         |SELECT us, n_starts, n_ends, delta,
         |  CAST(sum(delta) OVER (ORDER BY us
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n_active
-        |FROM d ORDER BY us""".stripMargin,
+        |FROM d ORDER BY us""".stripMargin),
 
-    // streaming left-outer finalization: null rows appear exactly for
-    // purchases strictly below the final global watermark = (least of the
-    // two sides' ms-floored max event time − 1 h); matched rows always
-    "events_stream_join_outer" ->
+    // open-order BACKLOG curve: every order is an interval
+    // [orderdate, last lineitem shipdate + 1 day) and the sweep-line
+    // concurrency (Temporal.intervalConcurrency — the distributed
+    // prefix-sum primitive, no pair enumeration, no single-reducer
+    // window) gives orders-in-flight at every boundary instant — the
+    // operations "how deep is the backlog" curve over the TPC-H facts
+    QueryRow("orders_backlog_curve", (s, dir) => {
+      val o = t(s, dir, "orders").filter(col("o_orderdate").isNotNull)
+        .select(col("o_orderkey"),
+          unix_micros(col("o_orderdate").cast("timestamp")).as("start_us"))
+      val ls = t(s, dir, "lineitem").filter(col("l_shipdate").isNotNull)
+        .select(col("l_orderkey").as("o_orderkey"),
+          unix_micros(col("l_shipdate").cast("timestamp")).as("ship_us"))
+        .groupBy("o_orderkey").agg(max(col("ship_us")).as("last_ship_us"))
+      // the (start, end) interval relation is the expensive part (full
+      // lineitem scan + max rollup + orders join) and is deterministic
+      // from the fixture — StageStore it once per JVM (VERDICT r15 #3);
+      // the sweep itself re-runs per action over the slim stage
+      val iv = graft.etl.StageStore.materialize(
+        o.join(ls, "o_orderkey")
+          .select(col("start_us"),
+            (col("last_ship_us") + lit(86400000000L)).as("end_excl_us"))
+          .filter(col("end_excl_us") > col("start_us")), "backlog_iv")
+      graft.ext.Temporal.intervalConcurrency(iv, "start_us", "end_excl_us")
+        .orderBy("us")
+    },
+      """WITH o AS (SELECT o_orderkey, epoch_us(o_orderdate) AS start_us
+        |  FROM orders WHERE o_orderdate IS NOT NULL),
+        | ls AS (SELECT l_orderkey AS o_orderkey,
+        |    max(epoch_us(l_shipdate)) AS last_ship_us
+        |  FROM lineitem WHERE l_shipdate IS NOT NULL GROUP BY l_orderkey),
+        | iv AS (SELECT o.start_us,
+        |    ls.last_ship_us + 86400000000 AS end_excl_us
+        |  FROM o JOIN ls USING (o_orderkey)
+        |  WHERE ls.last_ship_us + 86400000000 > o.start_us),
+        | d AS (SELECT us, CAST(sum(dd) AS BIGINT) AS delta,
+        |    CAST(sum(CASE WHEN dd > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_starts,
+        |    CAST(sum(CASE WHEN dd < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_ends
+        |  FROM (SELECT start_us AS us, 1 AS dd FROM iv
+        |        UNION ALL SELECT end_excl_us AS us, -1 AS dd FROM iv)
+        |  GROUP BY us)
+        |SELECT us, n_starts, n_ends, delta,
+        |  CAST(sum(delta) OVER (ORDER BY us
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |    AS n_active
+        |FROM d ORDER BY us""".stripMargin),
+
+    // 6th streaming oracle row: stream-stream LEFT OUTER windowed join
+    // (streaming/EventStreams.clickPurchaseLeftOuter) under AvailableNow —
+    // inner matches plus null-click rows for purchases the final watermark
+    // finalized (strictly older than min(side maxima, ms-floored) − delay);
+    // the oracle mirrors that exact rule in SQL
+    QueryRow("events_stream_join_outer", (s, dir) => {
+      val replayed = replayStream(s, dir, "stream_joinouter_verify", "append")(
+        graft.streaming.EventStreams.clickPurchaseLeftOuter(
+            graft.streaming.EventStreams.readEvents(s, dir)))
+      // no-click sentinel −1: the driver/oracle hash path is only exercised
+      // on null-free columns (mixed null ordering is canon-undefined there)
+      replayed
+        .select(col("purchase_id"),
+          coalesce(col("click_id"), lit(-1L)).as("click_id"), col("user_id"))
+        .orderBy("purchase_id", "click_id")
+    },
+      // streaming left-outer finalization: null rows appear exactly for
+      // purchases strictly below the final global watermark = (least of the
+      // two sides' ms-floored max event time − 1 h); matched rows always
       """WITH c AS (SELECT user_id AS c_user, ts AS c_ts, event_id AS click_id
         |   FROM events WHERE event_type = 'click'),
         | p AS (SELECT user_id AS p_user, ts AS p_ts, event_id AS purchase_id
@@ -4403,12 +4379,26 @@ object SparkEntry {
         |  AND c.c_ts >= p.p_ts - INTERVAL 1 HOUR AND c.c_ts <= p.p_ts
         |CROSS JOIN wm
         |WHERE c.click_id IS NOT NULL OR epoch_us(p.p_ts) < wm.wm_us
-        |ORDER BY purchase_id, click_id""".stripMargin,
-    // full-outer finalization: matched rows always; null-click rows for
-    // purchases strictly below the final watermark (the left-outer cut);
-    // null-purchase rows for clicks whose whole forward match range
-    // [c_ts, c_ts+1h] is below it — the asymmetric two-sided contract
-    "events_stream_join_full" ->
+        |ORDER BY purchase_id, click_id""".stripMargin),
+
+    // stream-stream FULL OUTER windowed join (EventStreams
+    // .clickPurchaseFullOuter): the last cell of the streaming join
+    // matrix — matches emit like the inner join; unmatched purchases
+    // finalize at p_ts < wm, unmatched clicks at c_ts + 1h < wm (the
+    // asymmetric two-sided cut the event-time range implies)
+    QueryRow("events_stream_join_full", (s, dir) => {
+      val replayed = replayStream(s, dir, "stream_joinfull_verify", "append")(
+        graft.streaming.EventStreams.clickPurchaseFullOuter(
+            graft.streaming.EventStreams.readEvents(s, dir)))
+      replayed
+        .select(coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
+          coalesce(col("click_id"), lit(-1L)).as("click_id"), col("user_id"))
+        .orderBy("purchase_id", "click_id", "user_id")
+    },
+      // full-outer finalization: matched rows always; null-click rows for
+      // purchases strictly below the final watermark (the left-outer cut);
+      // null-purchase rows for clicks whose whole forward match range
+      // [c_ts, c_ts+1h] is below it — the asymmetric two-sided contract
       """WITH c AS (SELECT user_id AS c_user, ts AS c_ts, event_id AS click_id
         |   FROM events WHERE event_type = 'click'),
         | p AS (SELECT user_id AS p_user, ts AS p_ts, event_id AS purchase_id
@@ -4426,146 +4416,29 @@ object SparkEntry {
         |   OR (c.click_id IS NULL AND epoch_us(p.p_ts) < wm.wm_us)
         |   OR (p.purchase_id IS NULL
         |       AND epoch_us(c.c_ts) + 3600000000 < wm.wm_us)
-        |ORDER BY purchase_id, click_id, user_id""".stripMargin,
-    // streaming dedup with injected duplicate copies → exactly one row per
-    // event id survives (the duplicates exist only on the Spark stream
-    // side, so the base table IS the expected output)
-    "events_stream_dedup" ->
-      """SELECT event_id, user_id, event_type FROM events
-        |ORDER BY event_id""".stripMargin,
-    // inner stream-stream join: all matches emit once both sides arrive —
-    // no finalization cut, so the oracle is the plain batch range join
-    "events_stream_join_inner" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-        |  p.user_id
-        |FROM events p JOIN events c ON p.user_id = c.user_id
-        |  AND p.event_type = 'purchase' AND c.event_type = 'click'
-        |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
-        |ORDER BY purchase_id, click_id""".stripMargin,
-    // stream-stream left semi: the EXISTS twin of the inner join's oracle
-    "events_stream_join_semi" ->
-      """SELECT p.event_id AS purchase_id, p.user_id
-        |FROM events p WHERE p.event_type = 'purchase' AND EXISTS (
-        |  SELECT 1 FROM events c WHERE c.event_type = 'click'
-        |    AND c.user_id = p.user_id
-        |    AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts)
-        |ORDER BY purchase_id""".stripMargin,
-    // stream-static anti join: events of blocklisted (user_id % 10 = 3)
-    // users dropped, everything else passes through unchanged
-    "events_stream_blocklist" ->
-      """SELECT event_id, user_id, event_type FROM events
-        |WHERE user_id IS NULL OR user_id % 10 <> 3
-        |ORDER BY event_id""".stripMargin,
-    "sim_tfidf_pairs" -> graft.ext.TextOps.tfidfCosinePairsSqlDuck(),
-    "dedup_edit_distance" -> graft.ext.Dedup.editDistancePairsSqlDuck(),
+        |ORDER BY purchase_id, click_id, user_id""".stripMargin),
 
-    // watermark-finalized windows only: window emits once its END ≤ the
-    // final watermark ((max event-time ms) − 1h, ms-truncated like Spark's
-    // watermark tracker) — the events_stream_join_outer precedent
-    "events_stream_distinct_users" ->
-      """WITH wm AS (SELECT ((max(epoch_us(ts)) // 1000 - 3600000) * 1000) AS wm_us
-        |   FROM events),
-        | d AS (SELECT DISTINCT (epoch_us(ts) // 3600000000) * 3600000000 AS ws,
-        |     user_id
-        |   FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL)
-        |SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS w_start,
-        |  CAST(count(*) AS BIGINT) AS n_users
-        |FROM d CROSS JOIN wm
-        |WHERE ws + 3600000000 <= wm.wm_us
-        |GROUP BY ws ORDER BY w_start""".stripMargin,
+    // TF-IDF-weighted shingle cosine pairs (ext/TextOps.tfidfCosinePairs):
+    // pruned-inverted-index similarity join — integer tf·(idfScale DIV df)
+    // weights, top-10 shingles per doc, exact BIGINT dots/norms, double
+    // cosine over them; hot shingles self-prune (low idf → never top-M)
+    QueryRow("sim_tfidf_pairs", (s, dir) =>
+      graft.ext.TextOps.tfidfCosinePairs(t(s, dir, "documents"))
+        .orderBy("doc_a", "doc_b"),
+      graft.ext.TextOps.tfidfCosinePairsSqlDuck()),
 
-    // batch twin of the chained interval-join → windowed-agg streaming
-    // query, restricted to the same conservative finalization cut the
-    // Spark side applies (window end ≥ 1 h before the last anchor)
-    "events_stream_range_join" ->
-      """WITH a AS (SELECT event_id AS anchor_id, user_id AS a_user,
-        |     epoch_us(ts) AS a_us
-        |   FROM events WHERE event_type = 'purchase'
-        |     AND user_id IS NOT NULL AND ts IS NOT NULL),
-        | p AS (SELECT user_id AS p_user, epoch_us(ts) AS p_us, value
-        |   FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        | cut AS (SELECT max(a_us) - 3600000000 AS cutoff_us FROM a),
-        | j AS (SELECT a.anchor_id, a.a_us, p.value
-        |   FROM a JOIN p ON p.p_user = a.a_user
-        |     AND p.p_us >= a.a_us AND p.p_us < a.a_us + 600000000)
-        |SELECT ((a_us // 600000000) + 1) * 600000000 AS w_end_us, anchor_id,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS sum_value
-        |FROM j CROSS JOIN cut
-        |WHERE ((a_us // 600000000) + 1) * 600000000 <= cut.cutoff_us
-        |GROUP BY 1, 2 ORDER BY anchor_id""".stripMargin,
+    // Levenshtein near-dup pairs on 8-token prefixes (ext/Dedup
+    // .editDistancePairs): (lang, first-token) blocking + salted slim
+    // self-join + exact DP verify — the entity-resolution string-similarity
+    // complement to the Jaccard/MinHash/SimHash set family
+    QueryRow("dedup_edit_distance", (s, dir) =>
+      graft.ext.Dedup.editDistancePairs(t(s, dir, "documents"))
+        .orderBy("doc_a", "doc_b"),
+      graft.ext.Dedup.editDistancePairsSqlDuck())))
 
-    // batch funnel with the streaming row's null contract + per-user
-    // arrival count; −1 sentinels for unreached steps (null-free hash)
-    "events_stream_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events
-        |   WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-        |     AND ts IS NOT NULL),
-        | s1 AS (SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
-        |   OVER (PARTITION BY user_id) AS t1 FROM e),
-        | s2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND us > t1
-        |   THEN us END) OVER (PARTITION BY user_id) AS t2 FROM s1),
-        | s3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND us > t2
-        |   THEN us END) OVER (PARTITION BY user_id) AS t3 FROM s2)
-        |SELECT user_id,
-        |  coalesce(min(t1), -1) AS ts1_us,
-        |  coalesce(min(t2), -1) AS ts2_us,
-        |  coalesce(min(t3), -1) AS ts3_us,
-        |  CAST(CASE WHEN min(t3) IS NOT NULL THEN 3
-        |            WHEN min(t2) IS NOT NULL THEN 2
-        |            WHEN min(t1) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-        |    AS step_reached,
-        |  CAST(count(*) AS BIGINT) AS n_seen
-        |FROM s3 GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // batch twin of the O(1)-state ordered funnel: identical strict-
-    // sequence semantics to events_stream_funnel's oracle minus the
-    // arrival counter
-    "events_stream_funnel_o1" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events
-        |   WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-        |     AND ts IS NOT NULL),
-        | s1 AS (SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
-        |   OVER (PARTITION BY user_id) AS t1 FROM e),
-        | s2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND us > t1
-        |   THEN us END) OVER (PARTITION BY user_id) AS t2 FROM s1),
-        | s3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND us > t2
-        |   THEN us END) OVER (PARTITION BY user_id) AS t3 FROM s2)
-        |SELECT user_id,
-        |  coalesce(min(t1), -1) AS ts1_us,
-        |  coalesce(min(t2), -1) AS ts2_us,
-        |  coalesce(min(t3), -1) AS ts3_us,
-        |  CAST(CASE WHEN min(t3) IS NOT NULL THEN 3
-        |            WHEN min(t2) IS NOT NULL THEN 2
-        |            WHEN min(t1) IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-        |    AS step_reached
-        |FROM s3 GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // batch twin of the exact-cents stateful totals: count(*) + null-
-    // skipping DECIMAL sum cast to DOUBLE (the correctly-rounded double of
-    // the exact total = the streaming emission's cents/100.0)
-    "events_stream_user_totals" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(coalesce(sum(CAST(value AS DECIMAL(18,2))),
-        |    CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events WHERE user_id IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // batch twin of the incremental hash-min-k quantile sketch state: the
-    // same md5-ordered deterministic sample + quantile_cont interpolation
-    // as the green sketch_sample_quantiles_grouped row
-    "events_stream_quantile_profile" ->
-      """WITH e AS (SELECT event_type, md5(CAST(event_id AS VARCHAR)) AS h,
-        |    CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        | n AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_seen
-        |   FROM e GROUP BY 1),
-        | r AS (SELECT event_type, v, row_number() OVER
-        |     (PARTITION BY event_type ORDER BY h, v) AS rn FROM e)
-        |SELECT r.event_type, n.n_seen, CAST(count(*) AS BIGINT) AS sample_n,
-        |  quantile_cont(v, 0.5) AS q50, quantile_cont(v, 0.9) AS q90
-        |FROM r JOIN n ON r.event_type = n.event_type
-        |WHERE rn <= 64
-        |GROUP BY r.event_type, n.n_seen
-        |ORDER BY r.event_type""".stripMargin)
+  private[graft] def distinctNames(rows: Seq[QueryRow]): Seq[QueryRow] = {
+    val dups = rows.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate SparkEntry row names: ${dups.toSeq.sorted.mkString(", ")}")
+    rows
+  }
 }

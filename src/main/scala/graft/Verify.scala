@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry row's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -12,11 +12,11 @@ object Verify {
     // and the oracle_sql.json below — to a comma-separated query subset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.rows.filter(r => selected(r.name)).foreach { r =>
+      try r.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${r.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: $e")
+        System.err.println(s"[verify] ${r.name} failed: $e")
         e.getStackTrace.take(8).foreach(f => System.err.println(s"[verify]   at $f"))
       }
       finally graft.etl.CacheRegistry.releaseAll()

@@ -24,6 +24,11 @@ final case class EngineConfig(
     format: String = "ndjson", // ndjson | csv | json
     batchSize: Int = 50000,
     overwrite: Boolean = false,
+    // continueOnError and memoryThresholdMb are parsed and validated for
+    // parity with the reference CLI and do not change a conversion: a
+    // malformed sheet fails with a typed error either way (every cell is
+    // read as a string, so no row can fail on its own), and parquet input
+    // has no malformed rows
     continueOnError: Boolean = false,
     memoryThresholdMb: Int = 512,
     minInflateRatio: Double = 0.01,

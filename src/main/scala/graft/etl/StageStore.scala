@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * stage target would be HDFS/object storage, tmpfs is the local-mode
   * stand-in).
   *
-  * Three kinds of entry share it, each built at most once per key per JVM:
+  * Four kinds of entry share it, each built at most once per key per JVM:
   *  - batch stages ([[materialize]] / [[materializeBy]]): several public
   *    operators share one expensive deterministic intermediate — the LSH
   *    candidate-pair relation feeds near-dup dedup, keep-first collapse,
@@ -19,10 +19,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    of materialization lets them share work across separate actions. The
   *    key is the analyzed plan, confirmed with `sameResult` so a 32-bit
   *    `semanticHash` collision computes directly instead of returning the
-  *    wrong relation (the TrainerMemo lesson, ADVICE r13);
+  *    wrong relation (ADVICE r13);
   *  - stream-replay sinks (SparkEntry.replayStream), keyed by (query, dir);
   *  - the update-mode input stage and its emissions
-  *    (EventStreams.tumblingUpdateEmissions), keyed by (dir, parts).
+  *    (EventStreams.tumblingUpdateEmissions), keyed by (dir, parts);
+  *  - driver-resident trainer outputs (the IVF and PQ codebooks of
+  *    ext/Similarity), keyed `trainer|<tag>|<semanticHash>` and confirmed
+  *    with `sameResult` the same way; they write no files.
   *
   * Layout: every entry's files live under `ScratchDirs.root/stage/`, one
   * directory per entry named `<sanitized key>_<n>` (n unique per JVM), and
@@ -36,7 +39,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * Off-switch: `SPARK_GRAFT_NO_STAGE=1` turns the whole memo off (A/B
   * adjudication aid: compare a query's result/plan with and without
   * staging) — batch stages compute directly, streaming rows re-run their
-  * stream on every call.
+  * stream and trainers train on every call. It is the engine's one memo
+  * off-switch.
   *
   * Soundness: a key is a pure function of the computation's inputs, the
   * input fixtures are immutable for the JVM lifetime, and a parquet

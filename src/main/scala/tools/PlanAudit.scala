@@ -3,96 +3,11 @@ import org.apache.spark.sql.SparkSession
 /** Whole-surface plan audit: executes every SparkEntry query at the given
   * SF and reports scale smells — BroadcastNestedLoopJoin / CartesianProduct
   * (all-pairs at any cluster size) and partition-less Window sorts (single
-  * reducer). Known, documented exceptions are listed with their
-  * adjudication so a regression is distinguishable from a design decision.
+  * reducer). Known, documented exceptions are each row's `accepted` smells
+  * with their adjudication, so a regression is distinguishable from a
+  * design decision.
   */
 object PlanAudit {
-  // query → (smell substring, why it is accepted)
-  val adjudicated: Map[String, (String, String)] = Map(
-    "dedup_embedding_cosine" -> ("BroadcastNestedLoopJoin",
-      "all-pairs by design; fixture-scale oracle twin of the bucketed form, excluded from bench"),
-    "sim_topk_bruteforce" -> ("BroadcastNestedLoopJoin",
-      "broadcast QUERY side (8 rows) vs streamed candidates — the intended brute-force baseline"),
-    "sim_pq_recall" -> ("BroadcastNestedLoopJoin",
-      "the exact-truth ranking pass: broadcast 8-row query side vs streamed corpus (the sim_topk_bruteforce shape) — the evaluation harness half of the dual-pass recall audit, not the production path"),
-    "sim_ann_recall" -> ("BroadcastNestedLoopJoin",
-      "same exact-truth ranking pass as sim_pq_recall (broadcast 8-row query side) — the evaluation harness half of the SRP recall audit"),
-    "q22_idle_customers" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of a 1-row global-average aggregate (the TPC-H Q22 shape)"),
-    "q_scalar_subquery" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of a 1-row aggregate"),
-    "text_bm25" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row corpus-stats aggregate"),
-    "sketch_kmv_overlap" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of two 1-row sketch aggregates"),
-    "t6_row_metrics" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of 1-row aggregates"),
-    "q_semi_anti" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the two 1-row semi/anti count aggregates"),
-    "sketch_kmv_distinct" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row sketch and 1-row exact-count aggregates"),
-    "text_tfidf" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row corpus-size aggregate"),
-    "sample_mix_weighted" -> ("BroadcastNestedLoopJoin",
-      "per-group count relation (|groups| rows) x 1-row min-scale aggregate"),
-    "text_top_ngrams" -> ("BroadcastNestedLoopJoin",
-      "triangular rank self-join over the k=100 survivors (k² bounded pairs) — replaced the r11 unpartitioned rank window; the distributed part is TakeOrderedAndProject"),
-    "events_fano_factor" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row corpus-hour-span aggregate"),
-    "layout_zorder_pruning" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row predicate-bounds aggregate onto the ≤2·files file-stats relation"),
-    "sample_dsir" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row (R,T) totals aggregate + the text_top_ngrams-style triangular rank self-join over the k=100 survivors; the distributed part is TakeOrderedAndProject"),
-    "search_rrf_fusion" -> ("BroadcastNestedLoopJoin",
-      "inherits searchTopK's crossJoin of the 1-row corpus-stats aggregate; the fusion join itself is a (query, doc)-keyed equi-join of ≤ depth-per-query lists"),
-    "sim_knn_classify" -> ("BroadcastNestedLoopJoin",
-      "broadcast 64-row query side vs streamed candidates — the sim_topk_bruteforce eval shape (the dedup_lsh_eval contract); production swaps in the ANN rankers"),
-    "sketch_kmv_difference" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the two 1-row k-minima sketches and the 1-row exact-difference aggregate"),
-    "text_rake_keywords" -> ("BroadcastNestedLoopJoin",
-      "triangular rank self-join over the k=50 surviving phrases — the text_top_ngrams idiom; the distributed part is TakeOrderedAndProject"),
-    "q11_important_parts" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row total-value aggregate (the TPC-H Q11 scalar-subquery shape)"),
-    "events_winsorize" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row quantile-fence aggregate (two broadcast scalars)"),
-    "quality_ks_drift" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row sample-totals aggregate onto the per-value CDF relation"),
-    "orders_abc_analysis" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row revenue-total aggregate onto the spend-class relation"),
-    "quality_benford" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row total aggregate onto the ≤9-row digit rollup"),
-    "text_vocab_coverage" -> ("BroadcastNestedLoopJoin",
-      "3 threshold rows crossJoin the 1-row corpus-total aggregate, then broadcast-range-join the frequency-class relation (one boundary row each)"),
-    "sample_temperature_mix" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row weight-normalizer aggregate over the |sources|-row rollup"),
-    "sample_length_quartiles" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row quartile-edges aggregate"),
-    "events_zorder_key" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row min/max bucketization-stats aggregate"),
-    "events_type_affinity" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row session-count aggregate onto the |types|²-bounded pair rollup"),
-    "quality_ref_integrity" -> ("BroadcastNestedLoopJoin",
-      "per-relationship crossJoin of two 1-row aggregates (totals × orphan count)"),
-    "quality_drift_tv" -> ("BroadcastNestedLoopJoin",
-      "crossJoins of the 1-row totals and 1-row numerator-sum aggregates onto the bucket-count histogram"),
-    "orders_brand_rules" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row basket-count aggregate onto the |brands|²-bounded rule rollup"),
-    "quality_chi2_balance" -> ("BroadcastNestedLoopJoin",
-      "margin cross product |A|×|B| plus the 1-row n aggregate — contingency cells, never the corpus"),
-    "search_bm25_topk" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row corpus-stats aggregate onto the postings join"),
-    "search_eval_ndcg" -> ("BroadcastNestedLoopJoin",
-      "the searchTopK scoring pass it evaluates carries the same 1-row corpus-stats crossJoin; the eval layers are broadcast k-row joins"),
-    "sim_matryoshka_recall" -> ("BroadcastNestedLoopJoin",
-      "two brute-force rankings by design (the audit must not confound truncation with ANN loss); broadcast 8-row query side"),
-    "dedup_lsh_eval" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of three 1-row count aggregates (exact/candidates/tp)"),
-    "quality_corpus_card" -> ("BroadcastNestedLoopJoin",
-      "crossJoin of the 1-row corpus aggregate and 1-row cluster-structure aggregate"),
-    // compound adjudication: '+'-separated smell set, each member expected
-    "orders_rfm" -> ("BroadcastNestedLoopJoin+SinglePartitionWindow",
-      "1-row max-date crossJoin, and global ntile windows over the per-customer AGGREGATE (|customers| rows), never raw orders"))
-
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -105,17 +20,10 @@ object PlanAudit {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     var unexplained = 0
-    // a stale adjudication key silently stops explaining anything — the
-    // exact failure mode that masked the r10 dedup_lsh_pairs plan drift;
-    // fail loudly on any key that no longer names a live query
-    val stale = adjudicated.keySet -- graft.SparkEntry.queries.keySet
-    stale.toSeq.sorted.foreach { k =>
-      unexplained += 1
-      println(f"AUDIT $k%-36s STALE_ADJUDICATION_KEY (no such query)")
-    }
-    for (name <- graft.SparkEntry.queries.keys.toSeq.sorted) {
+    for (row <- graft.SparkEntry.rows.sortBy(_.name)) {
+      val name = row.name
       try {
-        val df = graft.SparkEntry.queries(name)(spark, dir)
+        val df = row.build(spark, dir)
         df.collect()
         val smells = scala.collection.mutable.ListBuffer[String]()
         graft.etl.PlanWalk.visit(df.queryExecution.executedPlan) { p =>
@@ -131,7 +39,7 @@ object PlanAudit {
         }
         val distinctSmells = smells.distinct
         if (distinctSmells.isEmpty) println(f"AUDIT $name%-36s clean")
-        else adjudicated.get(name) match {
+        else row.accepted match {
           case Some((expected, why))
               if distinctSmells.forall(expected.split('+').contains(_)) =>
             println(f"AUDIT $name%-36s adjudicated: $expected ($why)")

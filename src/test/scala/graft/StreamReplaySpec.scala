@@ -11,13 +11,6 @@ import graft.SparkTestSession.{sf0001, spark}
   * stream's checkpoint + durable sink are queried, never recomputed). */
 class StreamReplaySpec extends AnyFunSuite {
 
-  test("streamingQueries set is exactly the stream-named rows of the contract") {
-    val streamNamed = SparkEntry.queries.keySet.filter(_.contains("_stream"))
-    assert(streamNamed == SparkEntry.streamingQueries,
-      s"set drift: only-in-queries=${streamNamed -- SparkEntry.streamingQueries} " +
-        s"only-in-set=${SparkEntry.streamingQueries -- streamNamed}")
-  }
-
   test("second invocation replays the staged sink: identical rows, no new stream") {
     val starts = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {

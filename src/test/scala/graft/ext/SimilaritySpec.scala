@@ -341,4 +341,44 @@ class SimilaritySpec extends AnyFunSuite {
       .map(_.toString).sorted.toSeq
     assert(out.map(_.toString).sorted.toSeq == again)
   }
+
+  /** Spark jobs started while `body` runs. Marker jobs before and after are
+    * awaited on the listener bus, so every job event of `body` (and none
+    * from before it) has been counted when this returns. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse("?")); ()
+      }
+    }
+    def marker(tag: String): Unit = {
+      sc.setJobGroup(tag, tag)
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!jobs.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-during-pre")
+      jobs.clear()
+      val a = body
+      marker("jobs-during-post")
+      (a, jobs.size - 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ivfCentroids trains once per relation: a repeat call runs no job") {
+    val emb = graft.etl.IngestOps.table(spark, sf0001, "embeddings")
+    def firstN(n: Int) = emb.filter(col("vec_id") < n)
+    val (first, _) = jobsDuring(Similarity.ivfCentroids(firstN(300), 4, 1))
+    val (again, againJobs) = jobsDuring(Similarity.ivfCentroids(firstN(300), 4, 1))
+    assert(againJobs == 0)
+    assert(again.map(_.toSeq).toSeq == first.map(_.toSeq).toSeq)
+    // a different relation is a different key: it trains its own
+    val (_, otherJobs) = jobsDuring(Similarity.ivfCentroids(firstN(200), 4, 1))
+    assert(otherJobs > 0)
+  }
 }

@@ -1,4 +1,4 @@
-import duckdb, json, sys, glob
+import duckdb, json, os, sys, glob
 
 # Local mimic of the driver's oracle compare. Round-2 lesson (VERDICT r2):
 # the driver canonicalizes the two sides ASYMMETRICALLY for decimals — one
@@ -39,8 +39,19 @@ def described_types(rel_sql):
     # compare below.
     return [(r[0], r[1]) for r in con.sql(f"DESCRIBE {rel_sql}").fetchall()]
 
-fails = []
+# Every row directory of the dump must have SQL and every SQL entry must
+# have a row directory with parquet output; name each side's strays (a row
+# without SQL would otherwise go unchecked, and SQL without output would
+# only surface as a read_parquet([]) error).
+dumped = {os.path.basename(os.path.dirname(f))
+          for f in glob.glob(f'{outdir}/*/*.parquet')}
+fails = [(name, 'output but no SQL in oracle_sql.json')
+         for name in sorted(dumped - oracle.keys())]
+fails += [(name, 'SQL but no parquet output in the dump')
+          for name in sorted(oracle.keys() - dumped)]
 for name, sql in sorted(oracle.items()):
+    if name not in dumped:
+        continue
     try:
         spark_files = glob.glob(f'{outdir}/{name}/*.parquet')
         spark_rel = f"SELECT * FROM read_parquet({spark_files!r})"
@@ -89,5 +100,6 @@ for name, sql in sorted(oracle.items()):
 
 for name, msg in fails:
     print(f'FAIL {name}: {msg}')
-print(f'\n{len(oracle)-len(fails)}/{len(oracle)} queries match')
+total = len(dumped | oracle.keys())
+print(f'\n{total-len(fails)}/{total} queries match')
 sys.exit(1 if fails else 0)
