@@ -50,7 +50,8 @@ object Main {
       |parity with the reference CLI and do not change a conversion: a malformed
       |sheet fails with a typed error either way (every cell is read as a
       |string, so no row can fail on its own), and parquet input has no
-      |malformed rows.""".stripMargin
+      |malformed rows. For the same reason the CONVERT line's
+      |excel.rows.skipped is always 0.""".stripMargin
 
   /** Pure arg→config parse; Left = error + exit code (2 parse, 1 validate). */
   def parseArgs(args: Seq[String]): Either[CliError, EngineConfig] = {
@@ -102,11 +103,15 @@ object Main {
   }
 
   /** The run's one result line: the reference's finally-block duration
-    * metric (:107-113), with the contract §10 counts the sink published. */
-  def report(r: Convert.Result, seconds: Double): String =
-    f"CONVERT sheet=${r.sheet} format=${r.format} rows=${r.rowsWritten} " +
-      f"files=${r.filesWritten} bytes=${r.bytesWritten} " +
-      f"output=${r.outputPath} seconds=$seconds%.3f"
+    * metric (:107-113) and the contract §10 metrics under their names
+    * (HighVolumeExcelConverter-Contract-v2.0.1.md:195-211), from what the
+    * sink published. A batch is one written file; no row is ever skipped
+    * (see [[Usage]]). */
+  def report(r: Convert.Result, millis: Long): String =
+    s"CONVERT sheet=${r.sheet} format=${r.format} output=${r.outputPath} " +
+      s"excel.rows.processed=${r.rowsWritten} excel.rows.skipped=0 " +
+      s"excel.batches.written=${r.filesWritten} excel.bytes.written=${r.bytesWritten} " +
+      s"excel.time.total=$millis"
 
   def main(args: Array[String]): Unit = {
     if (args.contains("--help")) { println(Usage); return }
@@ -130,7 +135,7 @@ object Main {
           .getOrCreate()
         try {
           val r = Convert.run(spark, config)
-          println(report(r, (System.nanoTime() - t0) / 1e9))
+          println(report(r, (System.nanoTime() - t0) / 1000000))
         } catch {
           case e: Throwable =>
             System.err.println(s"conversion failed: ${e.getMessage}")

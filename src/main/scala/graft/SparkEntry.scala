@@ -1946,7 +1946,7 @@ object SparkEntry {
     // dims range-bucketized by exact BIGINT arithmetic from one broadcast
     // stats agg, then bit-interleaved — the clustering key that makes
     // per-file min/max stats selective on BOTH columns at 100 TB
-    // (Layout.writeZOrdered sorts by it; LayoutSpec measures the skipping).
+    // (layout_zorder_pruning measures the skipping).
     // Oracle recomputes the interleave as an unrolled bit-shift sum.
     QueryRow("events_zorder_key", (s, dir) => {
       val ev = t(s, dir, "events")
@@ -2278,8 +2278,7 @@ object SparkEntry {
     // watermark misconfig, window misalignment) turns THIS row red instead
     // of only failing ScalaTest. Memory sink is driver-resident but the
     // result space is (hours × event_types) — bounded by time span, not
-    // corpus size; the production sink is foreachBatch→ndjson
-    // (EventStreams.writeNdjsonStream).
+    // corpus size.
     // streaming DOCUMENT ingestion (streaming/DocStreams): gate → exact
     // fingerprint dedup (stateful, keyed (source, fp)) → per-source
     // admitted counts in complete mode — the corpus-side streaming shape;

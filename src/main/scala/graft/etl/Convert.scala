@@ -48,8 +48,12 @@ object Convert {
         IngestOps.knownTables(config.sheetIndex)
     }
 
+    // S7/S8/C3: size and inflation caps from file metadata, before the scan
+    val path = s"${config.inputDir}/$sheet.parquet"
+    InputGuards.validate(spark, path, config.maxEntrySizeBytes, config.minInflateRatio)
+
     // S1 + order invariant: scan with scalable per-file row positions
-    val positioned = IngestOps.withFileRowPos(spark, s"${config.inputDir}/$sheet.parquet")
+    val positioned = IngestOps.withFileRowPos(spark, path)
 
     // T3: skip-before-header (the fixture tables carry their schema, so the
     // "header row" contributes no names here — only the positional skip)

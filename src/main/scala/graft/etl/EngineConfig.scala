@@ -10,9 +10,11 @@ import org.apache.spark.sql.SparkSession
   * Validation reproduces the `validate()` invariant table at
   * config/ConverterConfig.java:170-191.
   *
-  * The zip-bomb guards (C3, HighVolumeExcelConverter.java:82) become plain
-  * numeric source-option validation here: parquet input cannot zip-bomb, but
-  * the limits remain part of the public config contract.
+  * The zip-bomb guards (C3, HighVolumeExcelConverter.java:82) hold for both
+  * input formats: the xlsx source checks `maxEntrySizeBytes` and
+  * `minInflateRatio` against the package's zip entries, and a parquet
+  * conversion checks them against each file's size and its footer's
+  * compressed-to-uncompressed ratio ([[InputGuards]]) before the scan.
   */
 final case class EngineConfig(
     inputDir: String,

@@ -58,38 +58,6 @@ object IngestOps {
       case _ => df // already TimestampType, or no ts column
     }
 
-  /** Generic format reader — the engine's source surface beyond the parquet
-    * fixtures (csv with header semantics, ndjson, orc). CSV/JSON mode maps
-    * the reference's continueOnError (C4): PERMISSIVE skips nothing and
-    * nulls bad fields, FAILFAST dies on the first malformed record. */
-  def read(spark: SparkSession, path: String, format: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      continueOnError: Boolean = true,
-      guards: Option[EngineConfig] = None): DataFrame = {
-    // S7/S8 input-sanity guards, enforced before any scan task is planned
-    // (xlsx runs its own central-directory + counting-stream guards inside
-    // the source — see the case below)
-    if (!format.equalsIgnoreCase("xlsx")) guards.foreach(g =>
-      InputGuards.validate(spark, path, g.maxEntrySizeBytes, g.minInflateRatio))
-    val mode = if (continueOnError) "PERMISSIVE" else "FAILFAST"
-    val r0 = spark.read
-    val r = schema.map(r0.schema).getOrElse(r0)
-    format.toLowerCase match {
-      case "parquet" => r.parquet(path)
-      case "orc" => r.orc(path)
-      case "csv" => r.option("header", "true").option("mode", mode).csv(path)
-      case "json" | "ndjson" => r.option("mode", mode).json(path)
-      case "xlsx" => // guards run INSIDE the source (central-directory caps
-        // + counting-stream re-check); thread the limits through as options
-        guards.foldLeft(r.format("xlsx")) { (rd, g) =>
-          rd.option("maxEntrySizeBytes", g.maxEntrySizeBytes.toString)
-            .option("minInflateRatio", g.minInflateRatio.toString)
-        }.load(path)
-      case other => throw new IllegalArgumentException(
-        s"Unknown format '$other'. Supported: parquet, orc, csv, json, xlsx")
-    }
-  }
-
   /** ns-long `ts` (from nanosAsLong) → µs TimestampType; integral division
     * avoids the double-precision loss of `/` on epoch-nanos magnitudes.
     * Shared by the batch loader above and streaming.EventStreams. */

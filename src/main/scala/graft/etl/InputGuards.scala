@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   * `maxEntrySizeBytes`, and the compression ratio from parquet footers
   * (compressed vs. total uncompressed block bytes) against
   * `minInflateRatio`. Driver-side metadata reads only: one FileSystem
-  * listing plus one footer per file, never data.
+  * listing plus one footer per file, never data. [[Convert]] runs the pass
+  * on a parquet conversion's sheet before it plans the scan.
   */
 class InputTooLargeException(msg: String) extends RuntimeException(msg)
 class InflationLimitException(msg: String) extends RuntimeException(msg)

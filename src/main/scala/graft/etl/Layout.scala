@@ -1,16 +1,13 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Physical data layout for scale (SURVEY.md §7 / build brief): bucketing
-  * for co-located joins and partitioned directories for partition pruning.
+  * for co-located joins, and the z-order key with its pruning audit.
   *
-  * At 100 TB these two knobs carry most of the shuffle/scan savings:
-  *  - bucketing pre-shuffles both join sides ONCE at write time; every
-  *    subsequent equi-join on the bucket key plans with no Exchange;
-  *  - directory partitioning turns selective filters into partition pruning
-  *    (the scan never lists, opens, or reads non-matching directories).
+  * Bucketing pre-shuffles both join sides ONCE at write time; every
+  * subsequent equi-join on the bucket key plans with no Exchange.
   */
 object Layout {
 
@@ -59,11 +56,6 @@ object Layout {
       .saveAsTable(table)
   }
 
-  /** Write a directory-partitioned dataset; filters on the partition
-    * columns prune at planning time. */
-  def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(cols: _*).parquet(path)
-
   /** Z-order key over two long columns: each column range-bucketized into
     * `1 << bits` equal-width buckets from a global min/max (one tiny agg,
     * broadcast back onto the stream — same shape as Analytics.minmaxScale),
@@ -94,22 +86,6 @@ object Layout {
       .drop("_xmin", "_xmax", "_ymin", "_ymax")
   }
 
-  /** Write `df` globally sorted by the z-order key of (xCol, yCol): rows
-    * close in BOTH dimensions land in the same files, so per-file min/max
-    * statistics prune scans filtered on EITHER column — the multi-dim
-    * clustering a single-column sort can't give (it makes the second
-    * column's per-file ranges span everything). The sort is one range
-    * exchange; the key is dropped before write. */
-  def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
-      bits: Int = 10, numFiles: Int = 0): Unit = {
-    val keyed = zOrderKey(df, xCol, yCol, bits)
-    val sorted =
-      if (numFiles > 0) keyed.repartitionByRange(numFiles, col("zkey"))
-        .sortWithinPartitions("zkey")
-      else keyed.orderBy("zkey")
-    sorted.drop("zkey").write.mode("overwrite").parquet(path)
-  }
-
   /** Z-order pruning-effectiveness AUDIT: measures, from statistics alone,
     * how many "files" a rectangle predicate would actually scan under two
     * physical layouts of the SAME rows — time-linear (the natural ingest
@@ -117,7 +93,7 @@ object Layout {
     * equal-count buckets, collecting per-bucket min/max of both predicate
     * columns (exactly what parquet footers store), and counting buckets
     * whose stats overlap the rectangle. This is the measurement that
-    * justifies [[writeZOrdered]] before anyone rewrites 100 TB: the linear
+    * justifies a z-ordered write before anyone rewrites 100 TB: the linear
     * layout prunes only on time (every time-slice file spans all users),
     * the z-order layout prunes on both dimensions.
     *
@@ -204,12 +180,5 @@ object Layout {
        |    / CAST(count(*) AS DOUBLE) AS scan_fraction
        |FROM st CROSS JOIN pred
        |GROUP BY layout ORDER BY layout""".stripMargin
-  }
-
-  /** Final executed plan node names (descends AQE wrappers) for plan tests. */
-  def finalPlanString(df: DataFrame): String = {
-    val sb = new StringBuilder
-    PlanWalk.visit(df.queryExecution.executedPlan)(p => sb.append(p.nodeName).append('\n'))
-    sb.toString
   }
 }

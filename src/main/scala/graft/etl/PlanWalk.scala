@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DataType
 
 /** Shared executed-plan traversal that descends through AQE wrappers (the
   * adaptive root and materialized query stages hide their final plans from
-  * plain `foreach`). Used by Metrics and Layout plan assertions, and by the
+  * plain `foreach`). Used by the plan checks of rows and specs, and by the
   * structural plan digest Bench fingerprints rows with. */
 object PlanWalk {
   def visit(node: SparkPlan)(f: SparkPlan => Unit): Unit = {

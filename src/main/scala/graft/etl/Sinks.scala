@@ -4,7 +4,7 @@ import java.io.{OutputStream, OutputStreamWriter}
 import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
@@ -33,11 +33,6 @@ import org.apache.spark.sql.functions._
   * way: NDJSON is "recommended".
   */
 object Sinks {
-
-  /** K4 — overwrite guard (core/writers/NdjsonDataWriter.java:73-77):
-    * existing output without overwrite → error; with overwrite → truncate. */
-  def saveMode(overwrite: Boolean): SaveMode =
-    if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists
 
   /** Streams each rendered row (one string column), each with a '\n'. */
   private def lines(rows: Iterator[InternalRow], out: OutputStream): Long = {
@@ -83,7 +78,7 @@ object Sinks {
     * `part-NNNNN-<job>-cK.csv` with K padded to three digits only, so past
     * 999 chunks in a task a name sort misplaces `c1000`: sort K as a number.
     * File boundaries fall at partition edges, not necessarily at exact
-    * batchSize multiples; use `chunkedCsvNamed` for exact reference chunks.
+    * batchSize multiples.
     * Each file is rendered as Spark's CSV writer renders it, by its
     * UnivocityGenerator with the writer's default options: the header, then
     * the rows. */
@@ -113,52 +108,6 @@ object Sinks {
         chunks.result()
       }
     }
-  }
-
-  /** K2 with exact reference parity: chunk k holds rows
-    * [k*batchSize, (k+1)*batchSize) of the key-ordered stream, named
-    * `<stem>-chunk-N.csv` (core/writers/CsvDataWriter.java:87-90). Chunk ids
-    * come from the scalable global position (no single-partition window);
-    * each chunk's rows are co-located by a hash repartition on chunk id, and
-    * the dynamic-partition write emits one file per chunk. The rename pass
-    * touches file metadata only (driver-side loop over chunk count). Not on
-    * the converter's path, so it stays on Spark's CSV writer and works on
-    * any Hadoop-supported store. */
-  def chunkedCsvNamed(df: DataFrame, dir: String, stem: String, batchSize: Int,
-      orderCol: String, overwrite: Boolean = false): Seq[String] = {
-    val chunked = IngestOps.withGlobalPos(df, col(orderCol), "_pos")
-      .withColumn("_chunk", floor((col("_pos") - 1) / batchSize).cast("long"))
-      .drop("_pos")
-    chunked.repartition(col("_chunk"))
-      .sortWithinPartitions(col("_chunk"), col(orderCol))
-      .write.mode(saveMode(overwrite))
-      .option("header", "true")
-      .partitionBy("_chunk")
-      .csv(dir)
-    // Rename pass through the Hadoop FileSystem resolved from the path (as
-    // InputGuards does), so the parity sink works on any supported store
-    // (local, HDFS; object stores turn rename into copy — metadata-bounded
-    // either way, one op per chunk).
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
-    val chunkDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_chunk="))
-      .sortBy(s => s.getPath.getName.stripPrefix("_chunk=").toLong)
-    chunkDirs.map { cd =>
-      val n = cd.getPath.getName.stripPrefix("_chunk=").toLong
-      val part = fs.listStatus(cd.getPath)
-        .filter(_.getPath.getName.endsWith(".csv")) match {
-        case Array(one) => one.getPath
-        case many => throw new IllegalStateException(
-          s"expected one csv per chunk dir ${cd.getPath.getName}, found ${many.length}")
-      }
-      val target = new org.apache.hadoop.fs.Path(root, s"$stem-chunk-$n.csv")
-      if (!fs.rename(part, target))
-        throw new java.io.IOException(s"rename failed: $part -> $target")
-      fs.delete(cd.getPath, true)
-      target.getName
-    }.toSeq
   }
 
   /** Chunk assignment as data: which chunk each row of an ordered stream

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the near-dup pair graph — the structural view of a
-  * corpus the dedup family only looks at locally: [[Dedup.duplicateClusters]]
+  * corpus the dedup family only looks at locally: [[Dedup.clusterByBuckets]]
   * answers "which component", PageRank answers "which documents sit at the
   * CENTER of a duplication neighborhood" (the natural cluster
   * representatives, and the first signal for template/boilerplate mining).

@@ -7,13 +7,10 @@ import org.apache.spark.sql.functions._
   * opaque `binary` columns with a typed metadata struct; decode / feature
   * extraction runs as narrow per-row transforms.
   *
-  * Two codec tiers: [[decodeImages]]/[[resizeImages]] decode PNG/BMP/GIF/
-  * JPEG payloads to REAL pixels through the JDK's `javax.imageio` (golden-
-  * tested on deterministic in-test fixtures in MultimodalSpec); the
-  * byte-arithmetic stub tier ([[decode]]/[[resize]]/[[frameSample]]/...)
-  * derives "decoded" properties purely from the bytes and REMAINS the
-  * oracle-expressible twin for non-image payloads (the parquet text
-  * fixtures). Everything Spark-side is identical across tiers: the binary
+  * The byte-arithmetic transforms ([[decode]]/[[resize]]/[[frameSample]]/
+  * ...) derive "decoded" properties purely from the bytes, so the DuckDB
+  * oracle can express them over the parquet text fixtures; WAV payloads
+  * decode for real ([[decodeWav]]). Every transform shares the binary
   * schema, the metadata struct, the partition-parallel transform shape,
   * and the content-hash features (oracle-checkable).
   *
@@ -85,117 +82,6 @@ object Multimodal {
       n_frames = (bytes.length % 30) + 1,
       codec = if (bytes.nonEmpty && (bytes(0) & 1) == 1) "fake/odd" else "fake/even",
       byte_sum = sum)
-  }
-
-  // ------------------------------------------------------------------
-  // REAL image decode (VERDICT r13 #3) — javax.imageio is in the JDK
-  // (offline, public), so PNG/BMP/GIF/JPEG payloads decode to actual
-  // pixels. The byte-arithmetic stubs above REMAIN as the
-  // oracle-expressible twins for the text-payload parquet fixtures (which
-  // are not images); the real path is golden-tested in MultimodalSpec on
-  // deterministic in-test PNG/BMP fixtures. Same plumbing either way:
-  // partition-parallel batch transform, no driver involvement.
-  // ------------------------------------------------------------------
-
-  /** Decoded-image record: real dimensions + exact integer luma stats
-    * (BT.601 milli-weights 299/587/114 — integer-exact, no float). */
-  final case class DecodedImage(
-      doc_id: Long, format: String, width: Int, height: Int,
-      n_px: Long, luma_milli_sum: Long, luma_milli_min: Long,
-      luma_milli_max: Long)
-
-  /** Magic-byte sniff — gate ImageIO behind explicit signatures so an
-    * arbitrary binary payload can never be mis-decoded by a permissive
-    * reader (the JDK's WBMP reader accepts near-arbitrary headers). */
-  private[ext] def sniffImageFormat(bytes: Array[Byte]): Option[String] = {
-    def at(i: Int, v: Int) = i < bytes.length && (bytes(i) & 0xff) == v
-    if (at(0, 0x89) && at(1, 'P') && at(2, 'N') && at(3, 'G')) Some("png")
-    else if (at(0, 'B') && at(1, 'M')) Some("bmp")
-    else if (at(0, 0xff) && at(1, 0xd8) && at(2, 0xff)) Some("jpeg")
-    else if (at(0, 'G') && at(1, 'I') && at(2, 'F') && at(3, '8')) Some("gif")
-    else None
-  }
-
-  private def readImage(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] = {
-    javax.imageio.ImageIO.setUseCache(false) // no tmp-file spill per decode
-    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-    catch { case _: Throwable => None }
-  }
-
-  /** Integer BT.601 luma in milli-units: 299·R + 587·G + 114·B. */
-  private def lumaMilli(rgb: Int): Long =
-    299L * ((rgb >> 16) & 0xff) + 587L * ((rgb >> 8) & 0xff) + 114L * (rgb & 0xff)
-
-  /** REAL image decode: payloads whose magic bytes identify a supported
-    * format decode through the JDK codec to actual pixels; everything else
-    * is skipped (a curation pipeline routes non-images elsewhere — the
-    * stub [[decode]] stays the all-payload twin). Emits exact integer luma
-    * statistics per image. */
-  def decodeImages(media: DataFrame): org.apache.spark.sql.Dataset[DecodedImage] = {
-    import media.sparkSession.implicits._
-    val idIdx = media.schema.fieldIndex("doc_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        if (bytes == null) Iterator.empty
-        else sniffImageFormat(bytes).flatMap(fmt =>
-          readImage(bytes).map { img =>
-            val (w, h) = (img.getWidth, img.getHeight)
-            var sum = 0L
-            var mn = Long.MaxValue
-            var mx = Long.MinValue
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val l = lumaMilli(img.getRGB(x, y))
-                sum += l
-                if (l < mn) mn = l
-                if (l > mx) mx = l
-                x += 1
-              }
-              y += 1
-            }
-            DecodedImage(r.getLong(idIdx), fmt, w, h, w.toLong * h, sum, mn, mx)
-          }).iterator
-      }
-    }
-  }
-
-  /** Resized-image record: real nearest-neighbor PIXEL resize summary. */
-  final case class ResizedImage(
-      doc_id: Long, out_w: Int, out_h: Int, luma_milli_sum: Long,
-      head_hex: String)
-
-  /** REAL nearest-neighbor image resize: out(x,y) = in(⌊x·w/W⌋, ⌊y·h/H⌋) —
-    * the SAME index map as the stub [[resize]], applied to decoded pixels
-    * instead of raw bytes. Emits the resized grid's exact luma-milli sum
-    * and the first 8 luma BYTES (luma_milli DIV 1000) as a hex fingerprint,
-    * mirroring [[Resized]]'s summary shape. */
-  def resizeImages(media: DataFrame, outW: Int = 8, outH: Int = 4):
-      org.apache.spark.sql.Dataset[ResizedImage] = {
-    import media.sparkSession.implicits._
-    require(outW > 0 && outH > 0, "output dims must be positive")
-    val idIdx = media.schema.fieldIndex("doc_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](payloadIdx)
-        if (bytes == null) Iterator.empty
-        else sniffImageFormat(bytes).flatMap(_ =>
-          readImage(bytes).map { img =>
-            val (w, h) = (img.getWidth, img.getHeight)
-            val lumas = Array.tabulate(outH, outW) { (y, x) =>
-              lumaMilli(img.getRGB(
-                (x.toLong * w / outW).toInt, (y.toLong * h / outH).toInt))
-            }
-            val flat = lumas.flatten
-            ResizedImage(r.getLong(idIdx), outW, outH, flat.sum,
-              flat.take(8).map(l => f"${l / 1000}%02x").mkString)
-          }).iterator
-      }
-    }
   }
 
   /** Resized-media record: nearest-neighbor byte resample of the payload. */
@@ -651,8 +537,8 @@ object Multimodal {
 
   /** REAL WAV decode: RIFF chunk walk (not fixed offsets — a valid WAV may
     * carry LIST/fact chunks before data), PCM16 only, integer features.
-    * Malformed or non-WAV payloads yield None and are filtered — the same
-    * reject-don't-misparse stance as [[sniffImageFormat]]. */
+    * Malformed or non-WAV payloads yield None and are filtered, never
+    * misparsed. */
   def decodeWav(media: org.apache.spark.sql.Dataset[WavDoc]
       ): org.apache.spark.sql.Dataset[WavFeatures] = {
     import media.sparkSession.implicits._

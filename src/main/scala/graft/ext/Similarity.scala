@@ -451,7 +451,7 @@ object Similarity {
        |ORDER BY query_id, neg_rank""".stripMargin
 
   /** Embedding-cosine near-duplicate pairs above `threshold`. All-pairs on
-    * the oracle path; for scale use [[srpBuckets]] first. */
+    * the oracle path; for scale use [[cosinePairsBucketed]]. */
   def cosinePairs(emb: DataFrame, threshold: Double = 0.4): DataFrame = {
     val v = withNorm(emb)
     val a = v.select(col("vec_id").as("id_a"), col("embedding").as("va"), col("nrm").as("na"))
@@ -554,18 +554,6 @@ object Similarity {
        |  FROM cand c JOIN v a ON a.vec_id = c.id_a JOIN v b ON b.vec_id = c.id_b)
        |WHERE cos > $threshold
        |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** Signed-random-projection LSH bucket key for one table. Hyperplanes are
-    * drawn from a seeded PRNG on the driver — deterministic across runs. */
-  def srpBuckets(emb: DataFrame, nPlanes: Int = 12, seed: Long = 42L): DataFrame = {
-    val rnd = new scala.util.Random(seed)
-    val planes = Array.fill(nPlanes, Dim)(rnd.nextGaussian())
-    val bits = planes.zipWithIndex.map { case (p, j) =>
-      val proj = graft.functions.VectorExprs.dotConst(col("embedding"), p)
-      when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    emb.withColumn("bucket", bits.reduce(_ + _))
   }
 
   val AnnTables = 8

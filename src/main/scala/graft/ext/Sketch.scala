@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * smallest distinct hashes seen by a partition — partial states are k-item
   * arrays, so the reduction ships O(k) per map task regardless of input
   * size; no global distinct/shuffle of the full key set ever happens. This
-  * is the same single-pass merge-of-bounded-states shape as
-  * [[graft.functions.TopKAgg]], and exactly how you'd sketch 100 TB: one
-  * narrow pass, one k-sized state per partition.
+  * is exactly how you'd sketch 100 TB: one narrow pass, one k-sized state
+  * per partition.
   */
 object Sketch {
 

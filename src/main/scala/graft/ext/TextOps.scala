@@ -139,7 +139,7 @@ object TextOps {
     * then a vocab-keyed rollup (C(w1·)), an observed-bigram rollup
     * (C(w1,w2)), a model-sized equi-join back onto the bigram stream on
     * (w1, w2) — Zipf-hot head bigrams are the skew axis; AQE's skew split
-    * or etl/Skew salting applies, and the model side is vocabulary-sized,
+    * applies, and the model side is vocabulary-sized,
     * never corpus-sized — and a doc-keyed rollup. */
   def surprisal(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val big = graft.etl.CacheRegistry.persist(

@@ -51,5 +51,4 @@ case class UnicodeNormalize(child: Expression, form: String)
 object UnicodeNormalize {
   import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
   def nfc(c: Column): Column = toColumn(UnicodeNormalize(toExpression(c), "NFC"))
-  def nfkc(c: Column): Column = toColumn(UnicodeNormalize(toExpression(c), "NFKC"))
 }

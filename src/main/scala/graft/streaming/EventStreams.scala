@@ -721,29 +721,4 @@ object EventStreams {
       .groupBy("segment")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).as("sum_value"))
-
-  /** Stream → reference NDJSON sink (K1): every micro-batch appends through
-    * `etl.Sinks.ndjson` via foreachBatch, closing the loop from the
-    * streaming extension back to the reference's sink surface (all-string
-    * rows, one JSON object per line). Each micro-batch lands under
-    * `<path>/batch=<id>` — a staged batch directory published by one
-    * rename (etl.PartFiles), so restarts never half-overwrite a batch.
-    * Local paths only. Returns the started query; callers own
-    * awaitTermination/stop. */
-  def writeNdjsonStream(df: DataFrame, path: String, checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
-      outputMode: String = "append"): // "update" for stateful upstreams
-      org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(outputMode)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        graft.etl.Sinks.ndjson(graft.etl.IngestOps.allString(batch.toDF()),
-          s"$path/batch=$batchId", overwrite = true)
-        ()
-      }
-      .start()
 }

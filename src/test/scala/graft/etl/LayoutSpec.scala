@@ -19,7 +19,9 @@ class LayoutSpec extends AnyFunSuite {
     try {
       val j = spark.table("li_bucketed").join(spark.table("o_bucketed"), "l_orderkey")
       assert(j.count() == 6000)
-      val plan = Layout.finalPlanString(j)
+      val nodes = Seq.newBuilder[String]
+      PlanWalk.visit(j.queryExecution.executedPlan)(p => nodes += p.nodeName)
+      val plan = nodes.result().mkString("\n")
       assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
@@ -44,48 +46,6 @@ class LayoutSpec extends AnyFunSuite {
     val df = cases.toDF("x", "y")
       .withColumn("z", graft.functions.MortonInterleave(col("x"), col("y")))
     df.collect().foreach(r => assert(r.getLong(2) == naive(r.getLong(0), r.getLong(1))))
-  }
-
-  test("z-ordered layout clusters BOTH dimensions tighter than a 1-D sort") {
-    val ev = IngestOps.table(spark, sf0001, "events")
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-    def perFileSpanSum(dir: String): (Double, Double) = {
-      val spans = spark.read.parquet(dir)
-        .groupBy(input_file_name())
-        .agg((max("user_id") - min("user_id")).cast("double").as("uspan"),
-          (max("us") - min("us")).cast("double").as("tspan"))
-        .collect()
-      (spans.map(_.getDouble(1)).sum, spans.map(_.getDouble(2)).sum)
-    }
-    val base = graft.TestDirs.dir("zorder").toString
-    Layout.writeZOrdered(ev, s"$base/z", "user_id", "us", numFiles = 8)
-    ev.repartitionByRange(8, col("us")).sortWithinPartitions("us")
-      .write.parquet(s"$base/t")
-    // same rows either way
-    assert(spark.read.parquet(s"$base/z").count() ==
-      spark.read.parquet(s"$base/t").count())
-    val (zU, _) = perFileSpanSum(s"$base/z")
-    val (tU, _) = perFileSpanSum(s"$base/t")
-    // time-sorted files each span ~the whole user domain; z-ordered files
-    // must do strictly better on the user dimension while staying clustered
-    // in time by construction of the curve
-    assert(zU < tU, s"z-order user-span $zU not tighter than time-sort $tU")
-  }
-
-  test("partitioned layout prunes non-matching partitions at the scan") {
-    val dir = graft.TestDirs.dir("parted").toString + "/events"
-    Layout.writePartitioned(
-      IngestOps.table(spark, sf0001, "events"), dir, "event_type")
-    val clicks = spark.read.parquet(dir).filter(col("event_type") === "click")
-    val n = clicks.count()
-    val batchCount = IngestOps.table(spark, sf0001, "events")
-      .filter(col("event_type") === "click").count()
-    assert(n == batchCount && n > 0)
-    // partition pruning shows up as a partition filter on the file scan
-    val scan = clicks.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(scan.contains("PartitionFilters") && scan.contains("event_type"),
-      s"no partition pruning in scan:\n$scan")
   }
 
   test("zorderPruningAudit: z-order scans fewer files than the time-linear " +

@@ -6,62 +6,6 @@ import graft.SparkTestSession.{sf0001, spark}
 
 class MetricsAndScaleSpec extends AnyFunSuite {
 
-  test("C7: QueryExecutionListener harvests scan rows and bytes after actions") {
-    Metrics.clear()
-    Metrics.install(spark)
-    IngestOps.table(spark, sf0001, "lineitem").count()
-    // listener fires asynchronously; poll briefly
-    val deadline = System.currentTimeMillis() + 10000
-    while (Metrics.all.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    val m = Metrics.all.values
-    assert(m.nonEmpty)
-    assert(m.exists(_.rowsProcessed == 6000L), s"got: $m")
-  }
-
-  test("C7: contract §10 metric names — skipped rows, batches/bytes written, strategy") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    Metrics.clear()
-    Metrics.install(spark)
-    // corpus with 2 structurally-corrupt JSON rows; tolerate via observe
-    val rows = Seq(
-      (1L, """{"k":"a"}"""), (2L, "not json"), (3L, """{"k":"b"}"""),
-      (4L, null.asInstanceOf[String]), (5L, """{"k":"c"}"""))
-    val df = rows.toDF("id", "props")
-    val good = ErrorModes.tolerateObserved(df, ErrorModes.corruptJson($"props", "k STRING"))
-    val out = graft.TestDirs.dir("metricsout").toString + "/o"
-    good.write.json(out) // write action → listener harvests write metrics too
-    val deadline = System.currentTimeMillis() + 10000
-    def found = Metrics.all.values.find(_.rowsSkipped == 2L)
-    while (found.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    val m = found.getOrElse(fail(s"no metrics with rowsSkipped=2; got ${Metrics.all}"))
-    val view = Metrics.contractView(m)
-    assert(view("excel.rows.skipped") == 2L)
-    assert(view("excel.batches.written").asInstanceOf[Long] >= 1L)
-    assert(view("excel.bytes.written").asInstanceOf[Long] > 0L)
-    assert(view.keySet == Set("excel.converter.strategy", "excel.rows.processed",
-      "excel.rows.skipped", "excel.bytes.read", "excel.bytes.written",
-      "excel.batches.written", "excel.time.total"))
-    // and the codegen-friendly tolerate path actually dropped the bad rows
-    assert(spark.read.json(out).count() == 3L)
-  }
-
-  test("C7: two tolerant sources compose in one query; skips sum across observations") {
-    import spark.implicits._
-    Metrics.clear()
-    Metrics.install(spark)
-    val a = Seq((1L, """{"k":"a"}"""), (2L, "bad")).toDF("id", "props")
-    val b = Seq((3L, "also bad"), (4L, "worse"), (5L, """{"k":"c"}""")).toDF("id", "props")
-    // distinct suffixes: same observation name twice in one query throws
-    val ga = ErrorModes.tolerateObserved(a, ErrorModes.corruptJson($"props", "k STRING"), "src_a")
-    val gb = ErrorModes.tolerateObserved(b, ErrorModes.corruptJson($"props", "k STRING"), "src_b")
-    assert(ga.unionByName(gb).count() == 2L)
-    val deadline = System.currentTimeMillis() + 10000
-    def found = Metrics.all.values.find(_.rowsSkipped == 3L) // 1 + 2 summed
-    while (found.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(found.nonEmpty, s"expected summed rowsSkipped=3; got ${Metrics.all}")
-  }
-
   test("scalable per-file row position covers 0..n-1 exactly once") {
     val df = IngestOps.withFileRowPos(spark, s"$sf0001/lineitem.parquet")
     val n = df.count()

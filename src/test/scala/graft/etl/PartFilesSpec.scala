@@ -211,7 +211,9 @@ class PartFilesSpec extends AnyFunSuite {
 
   test("graft.Main's CONVERT line reports the files and bytes written") {
     val line = graft.Main.report(
-      Convert.Result("S", "csv", "/out", 500, 6, 12345), 1.5)
-    assert(line == "CONVERT sheet=S format=csv rows=500 files=6 bytes=12345 output=/out seconds=1.500")
+      Convert.Result("S", "csv", "/out", 500, 6, 12345), 1500)
+    assert(line == "CONVERT sheet=S format=csv output=/out excel.rows.processed=500 " +
+      "excel.rows.skipped=0 excel.batches.written=6 excel.bytes.written=12345 " +
+      "excel.time.total=1500")
   }
 }

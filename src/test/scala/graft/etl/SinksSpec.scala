@@ -44,20 +44,6 @@ class SinksSpec extends AnyFunSuite {
     assert(stats.map(_.getAs[Long]("n_rows")).sum == 1500)
   }
 
-  test("K2: chunkedCsvNamed produces reference-style chunk names in row order") {
-    val out = s"${tmpDir()}/named"
-    val orders = IngestOps.table(spark, sf0001, "orders")
-    val names = Sinks.chunkedCsvNamed(orders, out, "orders", 400, "o_orderkey")
-    assert(names.zipWithIndex.forall { case (n, i) => n == s"orders-chunk-$i.csv" })
-    // concatenating chunks in name order must reproduce ascending key order
-    val keys = names.flatMap { n =>
-      val src = scala.io.Source.fromFile(s"$out/$n")
-      try src.getLines().drop(1).map(_.split(",")(0).toLong).toList finally src.close()
-    }
-    assert(keys.length == 1500)
-    assert(keys == keys.sorted)
-  }
-
   test("K1: ndjson single-file output is byte-stable across runs") {
     val df = IngestOps.allString(IngestOps.table(spark, sf0001, "region").orderBy("r_regionkey"))
     def writeAndHash(path: String): String = {
@@ -88,9 +74,6 @@ class SinksSpec extends AnyFunSuite {
     Sinks.jsonArray(df, path)
     intercept[IllegalStateException](Sinks.jsonArray(df, path))
     assert(Sinks.jsonArray(df, path, overwrite = true).rows == 5)
-    // parquet-style sinks: SaveMode mapping
-    assert(Sinks.saveMode(false) == org.apache.spark.sql.SaveMode.ErrorIfExists)
-    assert(Sinks.saveMode(true) == org.apache.spark.sql.SaveMode.Overwrite)
   }
 
   test("K3: jsonArray is the rows' JSON joined by the separator, byte for byte") {

@@ -2,7 +2,7 @@ package graft.etl
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** The sinks that [[Sinks.ndjson]] and [[Sinks.chunkedCsv]] replaced,
@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   * reference their part files are tested against. */
 object SparkWriterSinks {
 
+  private def saveMode(overwrite: Boolean): SaveMode =
+    if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists
+
   def ndjson(df: DataFrame, path: String, overwrite: Boolean = false,
       singleFile: Boolean = false): Unit = {
-    df.write.mode(Sinks.saveMode(overwrite)).json(path)
+    df.write.mode(saveMode(overwrite)).json(path)
     if (singleFile) {
       import scala.jdk.CollectionConverters._
       val dir = Paths.get(path)
@@ -36,7 +39,7 @@ object SparkWriterSinks {
   def chunkedCsv(df: DataFrame, path: String, batchSize: Int,
       orderCol: Option[String] = None, overwrite: Boolean = false): Unit = {
     val d = orderCol.map(c => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))).getOrElse(df)
-    d.write.mode(Sinks.saveMode(overwrite))
+    d.write.mode(saveMode(overwrite))
       .option("header", "true")
       .option("maxRecordsPerFile", batchSize.toLong)
       .csv(path)

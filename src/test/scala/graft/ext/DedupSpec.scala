@@ -79,7 +79,7 @@ class DedupSpec extends AnyFunSuite {
     // chain 1-2, 2-3 (1 and 3 never paired directly); 4-5; 6 isolated
     val d = (1L to 6L).map(i => (i, s"doc$i")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val clusters = Dedup.duplicateClusters(d, pairs)
+    val clusters = PairGraphClusters.duplicateClusters(d, pairs)
       .as[(Long, Long)].collect().toMap
     assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L))
   }
@@ -90,7 +90,7 @@ class DedupSpec extends AnyFunSuite {
     val sigs = Dedup.minhashSignatures(docs)
     val viaBuckets = Dedup.clusterByBuckets(docs, Dedup.bandBuckets(sigs))
       .as[(Long, Long)].collect().toMap
-    val viaPairs = Dedup.duplicateClusters(docs, Dedup.lshCandidatePairs(sigs))
+    val viaPairs = PairGraphClusters.duplicateClusters(docs, Dedup.lshCandidatePairs(sigs))
       .as[(Long, Long)].collect().toMap
     assert(viaBuckets == viaPairs)
   }
@@ -99,7 +99,7 @@ class DedupSpec extends AnyFunSuite {
     val docs = graft.etl.IngestOps.table(graft.SparkTestSession.spark,
       graft.SparkTestSession.sf0001, "documents")
     val pairs = Dedup.lshCandidatePairs(Dedup.minhashSignatures(docs))
-    val clusters = Dedup.duplicateClusters(docs, pairs).as[(Long, Long)].collect()
+    val clusters = PairGraphClusters.duplicateClusters(docs, pairs).as[(Long, Long)].collect()
     assert(clusters.length == 500)
     // every cluster id is a member of its own cluster, and is its minimum
     val byCluster = clusters.groupBy(_._2)

@@ -421,26 +421,6 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(streamed == batch && batch.nonEmpty)
   }
 
-  test("NDJSON stream restart with the same checkpoint writes no duplicate batches") {
-    val tmp = graft.TestDirs.dir("ndjson_restart").toString
-    def runOnce(): Unit = {
-      val q = EventStreams.writeNdjsonStream(
-        EventStreams.readEvents(spark, sf0001),
-        s"$tmp/out", s"$tmp/ckpt", Trigger.AvailableNow())
-      q.awaitTermination(120000)
-    }
-    runOnce()
-    val rows1 = spark.read.json(s"$tmp/out/batch=*").count()
-    val batches1 = new java.io.File(s"$tmp/out").listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("batch="))
-    runOnce() // restart over the same checkpoint: source exhausted → no new batches
-    val rows2 = spark.read.json(s"$tmp/out/batch=*").count()
-    val batches2 = new java.io.File(s"$tmp/out").listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("batch="))
-    assert(rows1 > 0 && rows2 == rows1)
-    assert(batches2 == batches1)
-  }
-
   test("bounded-state streaming quantile profile equals the batch sketch bit-for-bit") {
     import org.apache.spark.sql.functions._
     // split the fixture into 4 files and feed them one per micro-batch, so
@@ -526,9 +506,18 @@ class EventStreamsSpec extends AnyFunSuite {
       val stream = spark.readStream
         .schema(spark.read.parquet(s"$tmp/ev/b1").schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/ev/b*")
-      val q = EventStreams.writeNdjsonStream(
-        EventStreams.funnelState(stream).toDF(),
-        s"$tmp/out", s"$tmp/ckpt", Trigger.AvailableNow(), outputMode = "update")
+      // each micro-batch lands, all-string, in its own batch=<id> directory
+      val q = EventStreams.funnelState(stream).toDF().writeStream
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .outputMode("update")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          graft.etl.Sinks.ndjson(graft.etl.IngestOps.allString(batch),
+            s"$tmp/out/batch=$batchId", overwrite = true)
+          ()
+        }
+        .start()
       q.awaitTermination(120000)
     }
     runOnce()
@@ -552,23 +541,6 @@ class EventStreamsSpec extends AnyFunSuite {
       .select("user_id", "ts1_us", "ts2_us", "ts3_us", "step_reached")
       .collect().map(_.toSeq).toSet
     assert(streamed == batch)
-  }
-
-  test("stream through the reference NDJSON sink (K1) round-trips all rows") {
-    val tmp = graft.TestDirs.dir("ndjson_stream").toString
-    val q = EventStreams.writeNdjsonStream(
-      EventStreams.readEvents(spark, sf0001),
-      s"$tmp/out", s"$tmp/ckpt", Trigger.AvailableNow())
-    q.awaitTermination(120000)
-    // every batch directory is NDJSON (one all-string JSON object per line)
-    val back = spark.read.json(s"$tmp/out/batch=*")
-    val batch = graft.etl.IngestOps.table(spark, sf0001, "events")
-    assert(back.count() == batch.count())
-    assert(back.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.StringType))
-    val streamedIds = back.select("event_id").collect().map(_.getString(0)).toSet
-    val batchIds = batch.select("event_id").collect().map(_.getLong(0).toString).toSet
-    assert(streamedIds == batchIds)
   }
 
   test("funnel fold splits freely at any sorted boundary (buffered-variant invariant)") {
