@@ -42,8 +42,11 @@ object Bench {
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir).count()
       catch { case _: Throwable => warmFailed += 1 }
-      finally graft.etl.CacheRegistry.releaseAll()
+      finally spark.catalog.clearCache()
     }
+    // the warm-up's own stage builds (stages are keyed per fixture dir)
+    // stay out of stage_prime
+    val warmStagePrime = graft.etl.StageStore.primeSeconds
 
     // Staged-replay prime (VERDICT r14 #1): run each streaming-family row
     // once at the MEASURED SF so the once-per-JVM full stream computation
@@ -57,7 +60,7 @@ object Bench {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).count()
       catch { case _: Throwable => primeFailed += 1 }
-      finally graft.etl.CacheRegistry.releaseAll()
+      finally spark.catalog.clearCache()
       primeSecs(name) = (System.nanoTime() - t0) / 1e9
     }
 
@@ -94,7 +97,7 @@ object Bench {
       val ok =
         try { SparkEntry.queries(name)(spark, sfDir).count(); true }
         catch { case _: Throwable => false }
-        finally graft.etl.CacheRegistry.releaseAll()
+        finally spark.catalog.clearCache()
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     // Physical-plan fingerprint: PlanWalk.digest of the pre-execution
@@ -133,7 +136,7 @@ object Bench {
         }
         graft.etl.PlanWalk.digest(plans: _*)
       } catch { case _: Throwable => fpErr += 1; "err" }
-      finally graft.etl.CacheRegistry.releaseAll()
+      finally spark.catalog.clearCache()
     val loadStart = loadavg()
     var escalated = 0
     val sampleMap =
@@ -255,13 +258,12 @@ object Bench {
     // family's full cost out of `value` by design — this field keeps a
     // round-over-round-comparable "everything ran once" number in the
     // same line so the drop in `value` cannot be misread as a plan win
-    // stage_prime (VERDICT r17 #6) = cumulative once-per-JVM StageStore
-    // materialization seconds (this run built its batch stages during the
-    // first timed samples; min-of-N then reports the stage-scan), the
-    // staged-batch analog of prime_s — on record so the fan-out build cost
-    // is never invisible. NOTE: includes stage builds from the sf0.001
-    // warmup pass too (stages are keyed per fixture dir).
-    val stagePrime = graft.etl.StageStore.primeSeconds
+    // stage_prime (VERDICT r17 #6) = once-per-JVM StageStore
+    // materialization seconds after the warm-up (this run built the
+    // measured fixture's batch stages during the first timed samples;
+    // min-of-N then reports the stage-scan), the staged-batch analog of
+    // prime_s — on record so the fan-out build cost is never invisible.
+    val stagePrime = graft.etl.StageStore.primeSeconds - warmStagePrime
     println(
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":[$failedJson],"flaky":{$flaky},"iters":$iters,"load_entry":"$loadEntry","steal_s":$stealS,"steal_pct":$stealPct,"load_start":"$loadStart","load_end":"$loadEnd","escalated":$escalated,"warm_failed":$warmFailed,"prime_failed":$primeFailed,"fp_err":$fpErr,"prime_s":${fmt(primeSecs.values.sum)},"total_with_prime":${fmt(total + primeSecs.values.sum)},"stage_prime":${fmt(stagePrime)},"noisy":{$noisy},"omitted_fastest":$omitted,"omitted_sec":$omittedSec,"queries":{${sb.toString}},"sf":"$sfDir"}"""
     )

@@ -19,7 +19,7 @@ object Verify {
         System.err.println(s"[verify] ${r.name} failed: $e")
         e.getStackTrace.take(8).foreach(f => System.err.println(s"[verify]   at $f"))
       }
-      finally graft.etl.CacheRegistry.releaseAll()
+      finally spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,43 +1,16 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 
-/** Session-scoped registry for DataFrames persisted inside lazily-returned
-  * operators ([[graft.ext.Dedup.dropNearDuplicates]] persists its token
-  * stream, [[graft.ext.Dedup.lshCandidatePairs]] its bucket table). The
-  * operator cannot unpersist before its result is materialized — the caller
-  * owns the action — so repeated calls in one session would otherwise
-  * accumulate cached blocks for the session lifetime. Drivers (`Verify`,
-  * `Bench`) call [[releaseAll]] after each query's action.
-  */
+/** Operators persist the intermediates they reuse with `Dataset.persist`,
+  * and Spark's CacheManager is the one list of them. The caller that owns
+  * the action drops them all afterwards; Verify, Bench and PlanAudit call
+  * `spark.catalog.clearCache()` themselves, and this is the same release
+  * for a caller that holds no session. */
 object CacheRegistry {
-  private val active = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Persist `df` (MEMORY_AND_DISK) and track it for later release. */
-  def persist(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    active += p
-    p
-  }
-
-  /** Persist `df` DISK_ONLY (serialized, zero heap residency) and track it.
-    * For relations that are LARGE relative to executor memory but reused
-    * across iterative rounds — e.g. the near-dup EDGE list, whose mega-hub
-    * buckets make it O(Σ bucket²): keeping it deserialized on-heap starves
-    * the per-round aggregation hash maps (observed as a 10× StressProbe
-    * OOM in graph LPA), while disk blocks cost one re-read per round. */
-  def persistDisk(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    active += p
-    p
-  }
-
-  /** Unpersist every tracked DataFrame (non-blocking) and clear the registry.
-    * localCheckpoint'ed frames are deliberately NOT tracked: Dataset.unpersist
-    * cannot free their blocks — the ContextCleaner does, once all references
-    * drop, which a registry entry would only delay. */
-  def releaseAll(): Unit = synchronized {
-    active.foreach(_.unpersist(blocking = false))
-    active.clear()
-  }
+  /** `catalog.clearCache()` (non-blocking) on the active session, else on
+    * the default one. */
+  def releaseAll(): Unit =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(_.catalog.clearCache())
 }

@@ -77,8 +77,8 @@ object EngineConfig {
       // a small staged relation's files into 1-2 splits, serializing every
       // downstream map stage; on local disk/tmpfs the real open cost is ~0
       .config("spark.sql.files.openCostInBytes", "16384")
-    // shuffle files / DISK_ONLY blocks / spills on tmpfs (NVMe stand-in;
-    // SPARK_GRAFT_NO_SHM_LOCAL=1 reverts) — see ScratchDirs
+    // shuffle files / DISK_ONLY blocks / spills on tmpfs (NVMe stand-in)
+    // — see ScratchDirs
     val spark = ScratchDirs.withLocalDir(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

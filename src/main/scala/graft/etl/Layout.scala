@@ -109,7 +109,7 @@ object Layout {
     require(files >= 2 && files <= 100000, s"files out of range: $files")
     val e = events.filter(col("user_id").isNotNull && col("ts").isNotNull)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-    val keyed = CacheRegistry.persist(zOrderKey(e, "user_id", "us", bits))
+    val keyed = zOrderKey(e, "user_id", "us", bits).persist()
     val n = keyed.count()
     def fileStats(key: Column, order: Seq[Column], layout: String): DataFrame =
       IngestOps.withGlobalPos(keyed, key, "_pos", order = order)

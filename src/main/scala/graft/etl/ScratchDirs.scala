@@ -24,8 +24,7 @@ import java.io.File
   * }}}
   *
   * `<parent>` is /dev/shm when it is a writable directory, else
-  * java.io.tmpdir; `SPARK_GRAFT_NO_SHM_LOCAL=1` forces java.io.tmpdir. That
-  * is the one placement switch. The one memo switch is StageStore's
+  * java.io.tmpdir. The one memo switch is StageStore's
   * `SPARK_GRAFT_NO_STAGE`; the memo works wherever the root is placed.
   *
   * Why tmpfs: java.io.tmpdir on this host is disk-backed, and the
@@ -91,8 +90,7 @@ object ScratchDirs {
   lazy val root: File = {
     val shm = new File("/dev/shm")
     val parent =
-      if (!sys.env.get("SPARK_GRAFT_NO_SHM_LOCAL").contains("1") &&
-          shm.isDirectory && shm.canWrite) shm
+      if (shm.isDirectory && shm.canWrite) shm
       else new File(System.getProperty("java.io.tmpdir"))
     val base = new File(parent, Base)
     base.mkdirs()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * stage target would be HDFS/object storage, tmpfs is the local-mode
   * stand-in).
   *
-  * Four kinds of entry share it, each built at most once per key per JVM:
+  * Five kinds of entry share it, each built at most once per key per JVM:
   *  - batch stages ([[materialize]] / [[materializeBy]]): several public
   *    operators share one expensive deterministic intermediate — the LSH
   *    candidate-pair relation feeds near-dup dedup, keep-first collapse,
@@ -25,7 +25,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    (EventStreams.tumblingUpdateEmissions), keyed by (dir, parts);
   *  - driver-resident trainer outputs (the IVF and PQ codebooks of
   *    ext/Similarity), keyed `trainer|<tag>|<semanticHash>` and confirmed
-  *    with `sameResult` the same way; they write no files.
+  *    with `sameResult` the same way; they write no files;
+  *  - driver-resident scalars: the last purchase instant of a fixture's
+  *    events (SparkEntry's events_stream_range_join cut), keyed
+  *    `lastPurchaseUs|<dir>`; no files either.
   *
   * Layout: every entry's files live under `ScratchDirs.root/stage/`, one
   * directory per entry named `<sanitized key>_<n>` (n unique per JVM), and
@@ -39,8 +42,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * Off-switch: `SPARK_GRAFT_NO_STAGE=1` turns the whole memo off (A/B
   * adjudication aid: compare a query's result/plan with and without
   * staging) — batch stages compute directly, streaming rows re-run their
-  * stream and trainers train on every call. It is the engine's one memo
-  * off-switch.
+  * stream, and trainers and scalars are recomputed on every call. It is
+  * the engine's one memo off-switch.
   *
   * Soundness: a key is a pure function of the computation's inputs, the
   * input fixtures are immutable for the JVM lifetime, and a parquet

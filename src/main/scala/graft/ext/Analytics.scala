@@ -500,7 +500,7 @@ object Analytics {
       // rows = distinct (user_id, session_id) either way.
       .groupBy(col("user_id"), col("session_id"))
       .agg(array_sort(collect_set(col("event_type"))).as("types"))
-    val cached = graft.etl.CacheRegistry.persist(typed)
+    val cached = typed.persist()
     val nSess = cached.agg(count(lit(1)).as("n_sessions"))
     val perType = cached.select(explode(col("types")).as("event_type"))
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_type"))
@@ -589,8 +589,7 @@ object Analytics {
       .groupBy("user_id").agg(min(to_date(col("ts"))).as("day"))
     // persisted (r17): |days| rows; saves the prefix machinery's passes
     // from re-running the per-user first-seen aggregation each time
-    val perDay = graft.etl.CacheRegistry.persist(
-      firstSeen.groupBy("day").agg(count(lit(1)).as("n_new")))
+    val perDay = firstSeen.groupBy("day").agg(count(lit(1)).as("n_new")).persist()
     graft.etl.IngestOps.withGlobalRunningSum(
         perDay, col("day"), col("n_new"), "cum_users")
       .select("day", "n_new", "cum_users")
@@ -951,14 +950,14 @@ object Analytics {
         sum(col("o_totalprice").cast(DecimalType182)).as("_spend"))
     // cached: the global-rank recipe passes over the rollup several times
     // per score (bucket sample + bucket counts + the ranking window)
-    val scored = graft.etl.CacheRegistry.persist(
+    val scored =
       per.crossJoin(broadcast(maxD))
         .select(col("o_custkey"),
           expr("(unix_micros(_maxd) - unix_micros(_last)) DIV 86400000000")
             .as("recency_days"),
           col("frequency"),
           col("_spend").cast("string").as("monetary"),
-          col("_spend").as("_spendd")))
+          col("_spend").as("_spendd")).persist()
     val n = scored.count()
     // statsOn=scored (r17): the three scores compose (d2 = d1 + window
     // column …), so the prefix machinery's count/sample/bucket passes on
@@ -1031,9 +1030,9 @@ object Analytics {
     // persisted (r17): the prefix machinery + totals agg + final pass make
     // ~5 passes over cls — unpersisted, each one re-ran the per-customer
     // orders rollup. cls is one slim row per distinct spend value.
-    val cls = graft.etl.CacheRegistry.persist(
+    val cls =
       perCust.groupBy("cents").agg(count(lit(1)).as("nc"))
-        .withColumn("mass", col("cents") * col("nc")))
+        .withColumn("mass", col("cents") * col("nc")).persist()
     val cum = graft.etl.IngestOps.withGlobalRunningSum(
       cls, -col("cents"), col("mass"), "cm")
     val tot = cls.agg(sum("mass").as("total"))
@@ -1101,11 +1100,10 @@ object Analytics {
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
     val totals = pairs.groupBy("from_type").agg(sum(col("n")).as("n_from"))
-    val counts = graft.etl.CacheRegistry.persist(
-      pairs.join(broadcast(totals), "from_type"))
-    val states = graft.etl.CacheRegistry.persist(
+    val counts = pairs.join(broadcast(totals), "from_type").persist()
+    val states =
       counts.select(col("from_type").as("state"))
-        .unionByName(counts.select(col("to_type").as("state"))).distinct())
+        .unionByName(counts.select(col("to_type").as("state"))).distinct().persist()
     val nStates = states.count()
     require(nStates > 0, "no transitions observed")
     var pi = states.withColumn("pi", lit(scale / nStates))
@@ -1245,12 +1243,12 @@ object Analytics {
     // reached the old output (pairs required a.brand =!= b.brand, and supp
     // rows only surfaced through joins on pair keys), and nOrders counts
     // grouped rows = distinct okey either way.
-    val baskets = graft.etl.CacheRegistry.persist(
+    val baskets =
       lineitem.select(col("l_orderkey").as("okey"), col("l_partkey"))
         .join(broadcast(part.select(col("p_partkey").as("l_partkey"),
           col("p_brand"))), "l_partkey")
         .groupBy(col("okey"))
-        .agg(array_sort(collect_set(col("p_brand"))).as("brands")))
+        .agg(array_sort(collect_set(col("p_brand"))).as("brands")).persist()
     val nOrders = baskets.agg(count(lit(1)).as("n"))
     val supp = baskets.select(explode(col("brands")).as("brand"))
       .groupBy("brand").agg(count(lit(1)).as("supp"))

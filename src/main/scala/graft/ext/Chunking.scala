@@ -147,7 +147,7 @@ object Chunking {
     * engine-invariant. */
   def topNgrams(docs: DataFrame, k: Int = 100, textCol: String = "text"): DataFrame = {
     require(k > 0, "k must be positive")
-    val topK = graft.etl.CacheRegistry.persist(docs
+    val topK = docs
       .select(TextOps.fastTokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(explode(expr(
@@ -155,7 +155,7 @@ object Chunking {
       )).as("ngram"))
       .groupBy("ngram").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("ngram"))
-      .limit(k))
+      .limit(k).persist()
     val ahead = broadcast(topK.select(col("ngram").as("_bn"), col("cnt").as("_bc")))
     topK.join(ahead,
         col("_bc") > col("cnt") ||

@@ -132,7 +132,7 @@ object Dedup {
     // salted self-join → distinct for every consumer
     graft.etl.StageStore.materialize(
       lshCandidatePairsFromBuckets(
-        graft.etl.CacheRegistry.persist(bandBuckets(sigs)), saltBuckets),
+        bandBuckets(sigs).persist(), saltBuckets),
       s"lsh_pairs_$saltBuckets")
 
   /** Salted within-bucket pair generation over a PRE-BUILT (doc_id, bi,
@@ -206,7 +206,7 @@ object Dedup {
       val lens = Seq.tabulate(bands)(b => base + (if (b < extra) 1 else 0))
       lens.scanLeft(0)(_ + _).zip(lens).take(bands)
     }
-    val sigs = graft.etl.CacheRegistry.persist(simhash(docs, textCol))
+    val sigs = simhash(docs, textCol).persist()
     val banded = bandBitsList.zipWithIndex.map { case ((lo, len), b) =>
       sigs.select(col("doc_id"), col("simhash16"), lit(b).as("band"),
         (shiftright(col("simhash16"), lo) % (1L << len)).as("bval"))
@@ -248,12 +248,12 @@ object Dedup {
     * the pair key, three 1-row aggregates crossJoined (adjudicated). */
   def lshEval(docs: DataFrame, theta: Double = 0.8,
       shingleW: Int = 3): DataFrame = {
-    val exact = graft.etl.CacheRegistry.persist(
+    val exact =
       jaccardPrefixJoin(docs, "text", theta, shingleW)
-        .select(col("doc_a"), col("doc_b")))
-    val cand = graft.etl.CacheRegistry.persist(
+        .select(col("doc_a"), col("doc_b")).persist()
+    val cand =
       lshCandidatePairs(minhashFromTokens(shingles(docs, shingleW)))
-        .select(col("doc_a"), col("doc_b")))
+        .select(col("doc_a"), col("doc_b")).persist()
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val nCand = cand.agg(count(lit(1)).as("n_candidates"))
     val tp = exact.join(cand, Seq("doc_a", "doc_b"), "left_semi")
@@ -341,9 +341,9 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, textCol: String = "text",
       salts: Int = 8): DataFrame = {
     // persisted: the slim pair side plus BOTH array join-backs read it
-    val t = graft.etl.CacheRegistry.persist(docs.select(col("doc_id"), col("lang"),
+    val t = docs.select(col("doc_id"), col("lang"),
       expr("CAST(n_chars DIV 100 AS BIGINT)").as("bkt"),
-      array_sort(array_distinct(TextOps.fastTokens(col(textCol)))).as("toks")))
+      array_sort(array_distinct(TextOps.fastTokens(col(textCol)))).as("toks")).persist()
     val slim = t.select("doc_id", "lang", "bkt")
     val x = slim.withColumn("_salt", pmod(hash(col("doc_id")), lit(salts)))
     val y = slim.withColumn("_salt", explode(array((0 until salts).map(lit(_)): _*)))
@@ -399,7 +399,7 @@ object Dedup {
       else shingles(docs, shingleW, textCol).distinct()
     def staged(tag: String)(df: => DataFrame): DataFrame =
       graft.etl.StageStore.materializeBy(s"${tag}_$shingleW", Seq(tok0))(df)
-        .getOrElse(graft.etl.CacheRegistry.persist(df))
+        .getOrElse(df.persist())
     val tok = staged("pj_tok")(tok0)
     val t = staged("pj_sets")(
       tok.groupBy("doc_id").agg(sort_array(collect_set(col("tok"))).as("toks")))
@@ -647,8 +647,7 @@ object Dedup {
             .otherwise(array_except(col("toks0"), col("_hot"))))
           .drop("_hot")
       }
-    val tt = graft.etl.CacheRegistry.persist(
-      t.withColumn("_n", size(col("toks"))).withColumn("_n0", size(col("toks0"))))
+    val tt = t.withColumn("_n", size(col("toks"))).withColumn("_n0", size(col("toks0"))).persist()
     // Slim salted pair enumeration — identical construction to jaccardPairs:
     // a hot (lang, bkt) block costs k²/salts per reducer, and the ×salts
     // replication only touches 3-column rows.
@@ -716,8 +715,8 @@ object Dedup {
     // ONE tokenizer pass: the cached distinct-token arrays feed both the
     // signature build (exploded back to a (doc_id, tok) stream — sort order
     // is irrelevant to the min aggregates) and the exact re-score below
-    val t = graft.etl.CacheRegistry.persist(docs.select(col("doc_id"),
-      array_sort(array_distinct(TextOps.fastTokens(col(textCol)))).as("toks")))
+    val t = docs.select(col("doc_id"),
+      array_sort(array_distinct(TextOps.fastTokens(col(textCol)))).as("toks")).persist()
     val pairs = lshCandidatePairs(
       minhashFromTokens(t.select(col("doc_id"), explode(col("toks")).as("tok"))))
     val sim = pairs
@@ -758,10 +757,10 @@ object Dedup {
     * exactly, so the check stays exact. */
   def dropNearDuplicatesLshRep(docs: DataFrame, threshold: Double = 0.8,
       textCol: String = "text"): DataFrame = {
-    val t = graft.etl.CacheRegistry.persist(docs.select(col("doc_id"),
-      array_sort(array_distinct(TextOps.fastTokens(col(textCol)))).as("toks")))
-    val buckets = graft.etl.CacheRegistry.persist(bandBuckets(
-      minhashFromTokens(t.select(col("doc_id"), explode(col("toks")).as("tok")))))
+    val t = docs.select(col("doc_id"),
+      array_sort(array_distinct(TextOps.fastTokens(col(textCol)))).as("toks")).persist()
+    val buckets = bandBuckets(
+      minhashFromTokens(t.select(col("doc_id"), explode(col("toks")).as("tok")))).persist()
     val reps = buckets.groupBy("bi", "band").agg(min("doc_id").as("doc_a"))
     val pairs = buckets.join(reps, Seq("bi", "band"))
       .filter(col("doc_id") =!= col("doc_a"))
@@ -799,9 +798,9 @@ object Dedup {
 
   private def clusterByBucketsCompute(docs: DataFrame, memberships: DataFrame,
       maxIters: Int): DataFrame = {
-    val m = graft.etl.CacheRegistry.persist(
+    val m =
       memberships.select(col("doc_id"),
-        concat_ws(":", col("bi"), col("band")).as("bucket")))
+        concat_ws(":", col("bi"), col("band")).as("bucket")).persist()
     var labels = docs.select(col("doc_id"), col("doc_id").as("cluster_id"))
     // prop carries the round's INPUT label alongside the output (`_prev`), so
     // the convergence test below is a scan-side aggregate over the round's
@@ -1128,12 +1127,12 @@ object Dedup {
     // persisted (r17): both sides of the salted self-join derive from t —
     // unpersisted, the corpus tokenize ran twice; t is a slim ~60 B/doc
     // (id, lang, tok1, prefix) relation
-    val t = graft.etl.CacheRegistry.persist(
+    val t =
       docs.select(col("doc_id"), col("lang"),
         TextOps.fastTokens(col(textCol)).as("_toks"))
       .select(col("doc_id"), col("lang"), element_at(col("_toks"), 1).as("tok1"),
         array_join(slice(col("_toks"), 1, prefixTokens), " ").as("pfx"))
-      .filter(col("tok1").isNotNull))
+      .filter(col("tok1").isNotNull).persist()
     val x = t.withColumn("_salt", pmod(hash(col("doc_id")), lit(salts)))
     val y = t.withColumn("_salt", explode(array((0 until salts).map(lit(_)): _*)))
     x.as("a").join(y.as("b"),
@@ -1207,13 +1206,13 @@ object Dedup {
       .filter(col("source").isNotNull)
       .groupBy(md5(col("tok")).as("h"))
       .agg(array_sort(collect_set(col("source"))).as("srcs"))
-    val cnt = graft.etl.CacheRegistry.persist(sets
+    val cnt = sets
       .select(explode(expr(
         """flatten(transform(srcs, (a, i) ->
           |  transform(slice(srcs, i + 1, size(srcs) - i), b ->
           |    named_struct('src_a', a, 'src_b', b))))""".stripMargin)).as("p"))
       .groupBy(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"))
-      .agg(count(lit(1)).as("n")))
+      .agg(count(lit(1)).as("n")).persist()
     val perSrc = cnt.filter(col("src_a") === col("src_b"))
       .select(col("src_a").as("source"), col("n"))
     cnt.filter(col("src_a") =!= col("src_b"))
@@ -1265,11 +1264,11 @@ object Dedup {
       textCol: String = "text"): DataFrame = {
     require(window >= 2 && window <= 1000, s"window out of range: $window")
     require(keyLen >= 1 && keyLen <= 1000, s"keyLen out of range: $keyLen")
-    val t = graft.etl.CacheRegistry.persist(docs.filter(col("doc_id").isNotNull)
+    val t = docs.filter(col("doc_id").isNotNull)
       .select(col("doc_id"),
         array_sort(array_distinct(TextOps.fastTokens(col(textCol)))).as("toks"),
         substring(array_join(TextOps.fastTokens(col(textCol)), " "), 1, keyLen)
-          .as("snkey")))
+          .as("snkey")).persist()
     val pos = graft.etl.IngestOps.withGlobalPos(t.select("doc_id", "snkey"),
       col("snkey"), "_pos", order = Seq(col("snkey"), col("doc_id")))
     val right = pos.select(col("doc_id").as("doc_b"), col("_pos").as("pb"))

@@ -26,16 +26,17 @@ object Graph {
     * vectorized parquet scan off tmpfs beats re-deserializing a
     * java-serialized DISK_ONLY block each time (measured on LPA: the
     * per-round InMemoryTableScan of 8.8M cached rows dominated the round).
-    * Falls back to the previous DISK_ONLY persist when staging is
-    * unavailable (same safety rationale: the edge list is O(Σ bucket²) —
-    * deserialized on-heap it starves the aggregation maps; the 10× probe
-    * OOM'd before DISK_ONLY). */
+    * Falls back to a DISK_ONLY persist when staging is unavailable: with
+    * mega-hub buckets the edge list is O(Σ bucket²), and deserialized
+    * on-heap it starves the per-round aggregation hash maps (the 10× probe
+    * OOM'd in LPA before DISK_ONLY), while disk blocks cost one re-read per
+    * round. */
   private def symEdges(pairs: DataFrame): DataFrame = {
     val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"),
         col("doc_a").as("dst")))
     graft.etl.StageStore.materializeBy("graph_sym_edges", Seq(sym))(sym)
-      .getOrElse(graft.etl.CacheRegistry.persistDisk(sym))
+      .getOrElse(sym.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
   }
 
   /** Damped PageRank with a FIXED iteration count over an undirected pair
@@ -58,10 +59,9 @@ object Graph {
       iters: Int = 3, dampPct: Long = 85L,
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampPct >= 0 && dampPct <= 100 && scale > 0)
-    val ids = graft.etl.CacheRegistry.persist(nodes.select(col(idCol).as("id")))
+    val ids = nodes.select(col(idCol).as("id")).persist()
     val edges = symEdges(pairs)
-    val deg = graft.etl.CacheRegistry.persist(
-      edges.groupBy("src").agg(count(lit(1)).as("d")))
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("d")).persist()
     val n = ids.count()
     require(n > 0, "pageRank needs at least one node")
     val base = ((100L - dampPct) * scale / 100L) / n
@@ -103,8 +103,7 @@ object Graph {
     * integers once — identical doubles on any engine. */
   def triangles(nodes: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id"): DataFrame = {
-    val e = graft.etl.CacheRegistry.persist(
-      pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
+    val e = pairs.select(col("doc_a").as("a"), col("doc_b").as("b")).persist()
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.b") === col("e2.a"))
       .join(e.as("e3"),
@@ -146,8 +145,7 @@ object Graph {
       idCol: String = "doc_id"): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1; got k=$k rounds=$rounds")
     val e = symEdges(pairs)
-    var alive = graft.etl.CacheRegistry.persist(
-      e.select(col("src").as("id")).distinct())
+    var alive = e.select(col("src").as("id")).distinct().persist()
     // (r17) deliberately NOT eager-materialized — see the pageRank note:
     // the lazy single action reuses one edge Exchange across all rounds.
     for (_ <- 1 to rounds) {
@@ -156,8 +154,7 @@ object Graph {
         .join(alive.select(col("id").as("dst")), "dst")
         .groupBy("src").agg(count(lit(1)).as("deg"))
         .select(col("src").as("id"), col("deg"))
-      alive = graft.etl.CacheRegistry.persist(
-        deg.filter(col("deg") >= k).select("id"))
+      alive = deg.filter(col("deg") >= k).select("id").persist()
     }
     // converged = one more half-round removes nothing: every survivor still
     // has degree >= k within the final survivor set
@@ -231,12 +228,10 @@ object Graph {
     // persisted (r17): deg is consumed three times (the middle-degree
     // filter and the two per-endpoint joins below) — unpersisted, each
     // consumer re-ran the edge-list aggregation; |V| slim rows
-    val deg = graft.etl.CacheRegistry.persist(
-      e.groupBy("src").agg(count(lit(1)).as("d")))
+    val deg = e.groupBy("src").agg(count(lit(1)).as("d")).persist()
     // wedges centered only on low-degree middles: edge (m→x) survives iff
     // deg(m) <= cap, so the self-join's key distribution is cap-bounded
-    val eMid = graft.etl.CacheRegistry.persist(
-      e.join(deg.filter(col("d") <= maxMiddleDeg).select(col("src")), "src"))
+    val eMid = e.join(deg.filter(col("d") <= maxMiddleDeg).select(col("src")), "src").persist()
     val cand = eMid.as("e1").join(eMid.as("e2"), col("e1.src") === col("e2.src"))
       .filter(col("e1.dst") < col("e2.dst"))
       .select(col("e1.dst").as("a"), col("e2.dst").as("c"))
@@ -368,9 +363,9 @@ object Graph {
     // O(Σ bucket²) aggregate state — the 10× probe OOM'd on exactly that
     // before this rewrite. From round 2 on, labels have collapsed along
     // cliques, so the (src, label) key space combines map-side to ~|V|.
-    var lab = graft.etl.CacheRegistry.persist(
+    var lab =
       e.groupBy("src").agg(min(col("dst")).as("label"))
-        .select(col("src").as("id"), col("label")))
+        .select(col("src").as("id"), col("label")).persist()
     // eager materialization (r17, guide §3.1): left lazy, EVERY round's
     // label cache has unknown size when the final action plans, so each
     // edge⋈label join statically plans SortMergeJoin and pays a full map-
@@ -387,12 +382,12 @@ object Graph {
       // argmax as max(struct(count, −label)) — map-side combinable on both
       // aggregates (the window row_number form sorts per node and buffers
       // the whole (node, label) relation through one sort exchange)
-      lab = graft.etl.CacheRegistry.persist(
+      lab =
         e.join(lab.select(col("id").as("dst"), col("label")), "dst")
           .groupBy("src", "label").agg(count(lit(1)).as("c"))
           .groupBy("src")
           .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-          .select(col("src").as("id"), (-col("m.nl")).as("label")))
+          .select(col("src").as("id"), (-col("m.nl")).as("label")).persist()
       lab.count()
     }
     val sizes = lab.groupBy("label").agg(count(lit(1)).as("n"))

@@ -358,7 +358,7 @@ object Multimodal {
       val lens = Seq.tabulate(bands)(b => base + (if (b < extra) 1 else 0))
       lens.scanLeft(0)(_ + _).zip(lens).take(bands)
     }
-    val sigs = graft.etl.CacheRegistry.persist(perceptualHash(media, n).toDF)
+    val sigs = perceptualHash(media, n).toDF.persist()
     val banded = bandBitsList.zipWithIndex.map { case ((lo, len), b) =>
       sigs.select(col("doc_id"), col("phash"), lit(b).as("band"),
         (shiftright(col("phash"), lo) % (1L << len)).as("bval"))

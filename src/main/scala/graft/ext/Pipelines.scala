@@ -360,13 +360,13 @@ object Pipelines {
     val salts = Dedup.DefaultSaltBuckets
     val tagged = existing.select(col("doc_id"), lit(true).as("_ex"), col("text"))
       .unionByName(incoming.select(col("doc_id"), lit(false).as("_ex"), col("text")))
-    val toks = graft.etl.CacheRegistry.persist(tagged.select(col("doc_id"), col("_ex"),
-      array_sort(array_distinct(TextOps.fastTokens(col("text")))).as("toks")))
-    val b = graft.etl.CacheRegistry.persist(Dedup.bandBuckets(
+    val toks = tagged.select(col("doc_id"), col("_ex"),
+      array_sort(array_distinct(TextOps.fastTokens(col("text")))).as("toks")).persist()
+    val b = Dedup.bandBuckets(
       Dedup.minhashFromTokens(
         toks.select(col("doc_id"), col("_ex"), explode(col("toks")).as("tok")),
         carry = Seq("_ex")),
-      carry = Seq("_ex")))
+      carry = Seq("_ex")).persist()
     val x = b.withColumn("_salt", pmod(hash(col("doc_id")), lit(salts)))
     val y = b.withColumn("_salt", explode(array((0 until salts).map(lit(_)): _*)))
     // NO pair-level distinct: a pair can collide in at most NumBands (=2)
@@ -415,7 +415,7 @@ object Pipelines {
     // stage (the salt count is a module constant, same every call)
     val sim = graft.etl.StageStore
       .materializeBy(s"incr_neardup_sim_$threshold", Seq(toks, b))(simDirect)
-      .getOrElse(graft.etl.CacheRegistry.persist(simDirect))
+      .getOrElse(simDirect.persist())
     // cross stage: an incoming doc similar to ANY existing doc loses.
     // Loser id sets are DISTINCT and ⊆ the incoming batch — the increment
     // is the small side of this pipeline by contract (daily batch vs
@@ -500,7 +500,7 @@ object Pipelines {
     * not scheduled (both engines). */
   def curriculumShards(docs: DataFrame, nShards: Int = 4): DataFrame = {
     require(nShards >= 2 && nShards <= 100, s"nShards out of range: $nShards")
-    // StageStore, NOT CacheRegistry (r16): the scored relation feeds a
+    // StageStore, NOT a persist (r16): the scored relation feeds a
     // construction-time count(), the rank-bucket scalar pulls AND the
     // final plan — a memory cache here embeds an InMemoryRelation whose
     // AQE/cache-wrapper nodes print differently depending on
@@ -510,7 +510,7 @@ object Pipelines {
     // (graft_stage_ paths normalize); cache only as the no-tmpfs fallback.
     val surp = TextOps.surprisal(docs)
     val scored = graft.etl.StageStore.materializeBy("curriculum_scored",
-      Seq(surp))(surp).getOrElse(graft.etl.CacheRegistry.persist(surp))
+      Seq(surp))(surp).getOrElse(surp.persist())
     val n = scored.count()
     graft.etl.IngestOps.withGlobalPos(scored, col("mean_inv_prob"), "_rk",
         order = Seq(col("mean_inv_prob"), col("doc_id")))
@@ -770,27 +770,14 @@ object Pipelines {
     * kept iff its cumulative token offset within the group's hash-ordered
     * stream STARTS before the budget (the [[Chunking.packSequences]]
     * boundary rule: the budget may overflow by at most one document, never
-    * silently undershoot). RNG-free, partitioning-invariant; one window
-    * shuffle keyed by the group. */
-  def mixByTokenBudget(df: DataFrame, groupCol: String, keyCol: String,
-      budgetTokens: Long, textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(budgetTokens > 0, "budgetTokens must be positive")
-    val w = Window.partitionBy(groupCol)
-      .orderBy(md5(col(keyCol).cast("string")), col(keyCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("n_tok", size(TextOps.fastTokens(col(textCol))).cast("long"))
-      .withColumn("cum_tok", sum("n_tok").over(w))
-      .filter(col("cum_tok") - col("n_tok") < budgetTokens)
-      .drop("cum_tok")
-  }
-
-  /** [[mixByTokenBudget]] without the per-group total order — the 100 TB
-    * formulation. The group window above funnels EVERY document of a group
-    * through one reducer; at scale a hot domain is a straight bottleneck.
-    * But the hash order is lexicographic, and the first two hex digits of
-    * the hash split each group into 256 buckets whose numeric order IS the
-    * hash order — so the budget cut happens in two cheap phases:
+    * silently undershoot). RNG-free, partitioning-invariant.
+    *
+    * No per-group total order — the 100 TB formulation. One group window
+    * would funnel EVERY document of a group through one reducer; at scale
+    * a hot domain is a straight bottleneck. But the hash order is
+    * lexicographic, and the first two hex digits of the hash split each
+    * group into 256 buckets whose numeric order IS the hash order — so the
+    * budget cut happens in two cheap phases:
     *
     *   1. per (group, bucket) token sums — map-side partial agg, then a
     *      window over ≤256 ROWS per group (bucket summaries, not docs) to
@@ -800,8 +787,8 @@ object Pipelines {
     *      window at all. Only the ONE straddling bucket per group (≈1/256
     *      of that group) runs the exact intra-bucket window.
     *
-    * Output is IDENTICAL to [[mixByTokenBudget]] (PipelinesSpec proves
-    * equivalence), which is why both share the oracle. */
+    * Output is IDENTICAL to the one-window form (PipelinesSpec checks it
+    * against that reference). */
   def mixByTokenBudgetScalable(df: DataFrame, groupCol: String, keyCol: String,
       budgetTokens: Long, textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -831,7 +818,7 @@ object Pipelines {
     wholly.unionByName(straddle).drop("_h", "_b", "_bt", "_pre")
   }
 
-  /** DuckDB oracle for [[mixByTokenBudget]] over the documents table. */
+  /** DuckDB oracle for [[mixByTokenBudgetScalable]] over the documents table. */
   def mixByTokenBudgetSqlDuck(groupCol: String, keyCol: String,
       budgetTokens: Long, cols: String): String =
     s"""WITH c AS (
@@ -1123,9 +1110,9 @@ object Pipelines {
        |GROUP BY status ORDER BY status""".stripMargin
 
   def dedupWeights(docs: DataFrame): DataFrame = {
-    val cl = graft.etl.CacheRegistry.persist(
+    val cl =
       Dedup.clusterByBuckets(docs,
-        Dedup.bandBuckets(Dedup.minhashSignatures(docs))))
+        Dedup.bandBuckets(Dedup.minhashSignatures(docs))).persist()
     val sizes = cl.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     cl.join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
@@ -1175,7 +1162,7 @@ object Pipelines {
       buckets: Int = 256, k: Int = 100): DataFrame = {
     require(buckets >= 2 && buckets <= 1000000, s"buckets out of range: $buckets")
     require(k >= 1 && k <= 100000, s"k out of range: $k")
-    val bg = graft.etl.CacheRegistry.persist(
+    val bg =
       docs.filter(col("doc_id").isNotNull)
         .select(col("doc_id"), col("source"), TextOps.tokensArr("text").as("_t"))
         .filter(size(col("_t")) >= 2)
@@ -1184,7 +1171,7 @@ object Pipelines {
             "(a, b) -> concat(a, ' ', b))")).as("g"))
         .select(col("doc_id"), col("source"),
           pmod(conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long"),
-            lit(buckets.toLong)).as("b")))
+            lit(buckets.toLong)).as("b")).persist()
     // (r18) ONE bucket rollup replaces three corpus passes: raw counts,
     // target counts and the global totals all derive from the same ≤B-row
     // (c_r, c_t) relation — c_t rides the raw rollup as a conditional sum
@@ -1194,10 +1181,10 @@ object Pipelines {
     // exactly twice (rollup, scored) instead of four times. The tiny
     // rollup is persisted for its two consumers (model, totals) — the
     // r17 slim-rollup pattern, orders of magnitude under corpus size.
-    val rollup = graft.etl.CacheRegistry.persist(bg.groupBy("b").agg(
+    val rollup = bg.groupBy("b").agg(
       count(lit(1)).as("c_r"),
       sum(when(col("source") === targetSource, lit(1L)).otherwise(lit(0L)))
-        .as("c_t")))
+        .as("c_t")).persist()
     val model = rollup.select(col("b"), expr(
       "((c_t + 1) * CAST(1000000 AS BIGINT)) DIV (c_r + 1)").as("q"))
     val totals = rollup.agg(sum(col("c_r")).as("r_total"),
@@ -1210,8 +1197,7 @@ object Pipelines {
         (col("sum_ratio").cast("double") / col("n_bigrams").cast("double") /
           lit(1000000.0)).as("mr"),
         col("r_total"), col("t_total"))
-    val topK = graft.etl.CacheRegistry.persist(
-      scored.orderBy(col("mr").desc, col("doc_id")).limit(k))
+    val topK = scored.orderBy(col("mr").desc, col("doc_id")).limit(k).persist()
     val ahead = broadcast(topK.select(col("mr").as("_bm"), col("doc_id").as("_bid")))
     topK.join(ahead, col("_bm") > col("mr") ||
         (col("_bm") === col("mr") && col("_bid") < col("doc_id")), "left_outer")

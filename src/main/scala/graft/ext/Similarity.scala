@@ -376,9 +376,9 @@ object Similarity {
     require(kClusters >= 1 && iters >= 1, "need kClusters >= 1, iters >= 1")
     require(threshold > -1 && threshold < 1, "cosine threshold must be in (-1, 1)")
     val cents = ivfCentroids(emb, kClusters, iters)
-    val v = graft.etl.CacheRegistry.persist(
+    val v =
       ivfAssign(withNorm(emb), cents)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cluster")))
+        .select(col("vec_id"), col("embedding"), col("nrm"), col("cluster")).persist()
     val a = v.select(col("cluster"), col("vec_id").as("id_a"),
       col("embedding").as("va"), col("nrm").as("na"))
     val b = v.select(col("cluster"), col("vec_id").as("id_b"),
@@ -1074,7 +1074,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     // Both trainers plus the encode/query passes rescan the corpus —
     // 2·iters Lloyd passes + 3 consumers. One persist feeds them all.
-    val emb = graft.etl.CacheRegistry.persist(embRaw)
+    val emb = embRaw.persist()
     // coarse stage: candidate pairs from the probed clusters
     val cents = ivfCentroids(emb, kClusters, iters)
     val v = ivfAssign(emb, cents)

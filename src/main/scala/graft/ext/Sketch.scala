@@ -310,10 +310,11 @@ object Sketch {
     val spark = df.sparkSession
     import spark.implicits._
     // the loop re-aggregates the same single-column projection ~log(range)
-    // times — persist it for the duration (released via CacheRegistry, the
-    // library's standard lifecycle for operator-internal caches)
-    val vals = graft.etl.CacheRegistry.persist(
-      df.select(col(valueCol).cast("double").as("_v")).filter(col("_v").isNotNull))
+    // times — persist it for the duration (the caller's clearCache after
+    // its action releases it, the standard lifecycle for operator-internal
+    // caches)
+    val vals =
+      df.select(col(valueCol).cast("double").as("_v")).filter(col("_v").isNotNull).persist()
     // the head aggregation also carries a GK quantile sketch probed at
     // p ± 2ε per requested probability: its rank guarantee (±εn) makes
     // [approx(p−2ε), approx(p+2ε)] a PROVABLE bracket for the answer, so
@@ -443,9 +444,9 @@ object Sketch {
       "probs must be in (0, 1]")
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = graft.etl.CacheRegistry.persist(
+    val vals =
       df.select(col(group).cast("string").as("_g"),
-        col(valueCol).cast("double").as("_v")).filter(col("_v").isNotNull))
+        col(valueCol).cast("double").as("_v")).filter(col("_v").isNotNull).persist()
     // per-group head aggregation also carries the GK seed sketch probed at
     // p ± 2ε — provable round-1 brackets for every (group, prob) at zero
     // extra jobs (see [[exactQuantileDisc]]). The cardinality guard rides

@@ -272,10 +272,10 @@ object Stats {
     val f = docs.filter(col("source").isin(srcA, srcB) && col(valueCol).isNotNull)
     // persisted (r17): one row per distinct value; the nested prefix-sum
     // passes below would otherwise re-run the corpus rollup ~6×
-    val g = graft.etl.CacheRegistry.persist(
+    val g =
       f.groupBy(col(valueCol).as("v")).agg(
         sum(when(col("source") === srcA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("source") === srcB, 1L).otherwise(0L)).as("cb")))
+        sum(when(col("source") === srcB, 1L).otherwise(0L)).as("cb")).persist()
     val c = graft.etl.IngestOps.withGlobalRunningSum(
       graft.etl.IngestOps.withGlobalRunningSum(g, col("v"), col("ca"), "cuma"),
       col("v"), col("cb"), "cumb")
@@ -388,9 +388,9 @@ object Stats {
   def keySkew(df: DataFrame, keyCol: String): DataFrame = {
     // persisted (r17): one row per distinct key; saves the prefix
     // machinery's passes from re-running the corpus key rollup each time
-    val counts = graft.etl.CacheRegistry.persist(
+    val counts =
       df.filter(col(keyCol).isNotNull)
-        .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt")))
+        .groupBy(col(keyCol)).agg(count(lit(1)).as("cnt")).persist()
     val ranked = graft.etl.IngestOps.withGlobalPos(counts, col("cnt"), "_pos")
     ranked.agg(
         sum(col("_pos") * col("cnt")).as("s"),
@@ -544,7 +544,7 @@ object Stats {
     // The total rides back as a 1-row broadcast (not a partition-less
     // window): the cell relation is an aggregate already, but the audit
     // shape stays the adjudicated crossJoin-of-1-row-aggregate
-    val cellsFull = graft.etl.CacheRegistry.persist(full)
+    val cellsFull = full.persist()
     val totAgg = cellsFull.agg(
       sum(floor(col("contrib") * lit(1000000000.0)).cast("long")).as("_nano"))
     cellsFull.crossJoin(broadcast(totAgg))

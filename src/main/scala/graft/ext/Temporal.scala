@@ -116,13 +116,13 @@ object Temporal {
     // caller's whole interval chain (for the session-concurrency row that
     // was the 2-window sessionization, 4×). The rollup is one slim row per
     // distinct boundary instant, far smaller than its input.
-    val deltas = graft.etl.CacheRegistry.persist(
+    val deltas =
       intervals.select(col(startUs).as("us"), lit(1L).as("_d"))
       .union(intervals.select(col(endUs).as("us"), lit(-1L).as("_d")))
       .groupBy("us").agg(
         sum(col("_d")).as("delta"),
         sum(when(col("_d") > 0, 1L).otherwise(0L)).as("n_starts"),
-        sum(when(col("_d") < 0, 1L).otherwise(0L)).as("n_ends")))
+        sum(when(col("_d") < 0, 1L).otherwise(0L)).as("n_ends")).persist()
     graft.etl.IngestOps
       .withGlobalRunningSum(deltas, col("us"), col("delta"), "n_active")
       .select("us", "n_starts", "n_ends", "delta", "n_active")
@@ -223,11 +223,11 @@ object Temporal {
     require(topHours >= 1 && topHours <= 100000, s"topHours: $topHours")
     val hourUs = 3600000000L
     val e = events.filter(col("ts").isNotNull)
-    val hot = graft.etl.CacheRegistry.persist(
+    val hot =
       e.filter(col("event_type") === "error")
         .select(expr(s"unix_micros(ts) DIV $hourUs").as("h"))
         .groupBy("h").agg(count(lit(1)).as("n_err"))
-        .orderBy(col("n_err").desc, col("h")).limit(topHours))
+        .orderBy(col("n_err").desc, col("h")).limit(topHours).persist()
     val incidents = graft.etl.IngestOps.withGlobalPos(hot, col("h"), "_pos")
       .withColumn("isl", col("h") - col("_pos"))
       .groupBy("isl")

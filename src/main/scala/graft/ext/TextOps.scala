@@ -142,13 +142,13 @@ object TextOps {
     * applies, and the model side is vocabulary-sized,
     * never corpus-sized — and a doc-keyed rollup. */
   def surprisal(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val big = graft.etl.CacheRegistry.persist(
+    val big =
       docs.select(col("doc_id"), tokensArr(textCol).as("_t"))
         .filter(size(col("_t")) >= 2)
         .select(col("doc_id"), explode(expr(
           "zip_with(slice(_t, 1, size(_t) - 1), slice(_t, 2, size(_t) - 1), " +
             "(a, b) -> named_struct('w1', a, 'w2', b))")).as("_bg"))
-        .select(col("doc_id"), col("_bg.w1").as("w1"), col("_bg.w2").as("w2")))
+        .select(col("doc_id"), col("_bg.w1").as("w1"), col("_bg.w2").as("w2")).persist()
     val uni = big.groupBy("w1").agg(count(lit(1)).as("c1"))
     val bi = big.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val model = bi.join(uni, "w1")
@@ -478,10 +478,10 @@ object TextOps {
       textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(w > 0, "w must be positive")
-    val t = graft.etl.CacheRegistry.persist(docs
+    val t = docs
       .select(col("doc_id"), fastTokens(col(textCol)).as("toks"))
       .withColumn("n", size(col("toks")))
-      .filter(col("n") > 0))
+      .filter(col("n") > 0).persist()
     val tokpos = t.select(col("doc_id"),
       posexplode(col("toks")).as(Seq("pos", "tok")))
     val parts = (1 to w).map(j => s"element_at(toks, i + ${j - 1})")
@@ -506,9 +506,9 @@ object TextOps {
       .groupBy("doc_id", "pos").agg(sum("dlt").as("dlt"))
     val wCov = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cv = graft.etl.CacheRegistry.persist(
+    val cv =
       tokpos.join(deltas, Seq("doc_id", "pos"), "left")
-        .withColumn("cov", sum(coalesce(col("dlt"), lit(0L))).over(wCov)))
+        .withColumn("cov", sum(coalesce(col("dlt"), lit(0L))).over(wCov)).persist()
     // gaps-and-islands: consecutive covered positions share pos − rank
     val isl = cv.filter(col("cov") > 0L)
       .withColumn("grp", col("pos") -
@@ -836,8 +836,7 @@ object TextOps {
     * stream is cached so the join probe doesn't re-tokenize. */
   def dupFraction(docs: DataFrame, w: Int = 8, textCol: String = "text"): DataFrame = {
     require(w > 0, "w must be positive")
-    val sh = graft.etl.CacheRegistry.persist(
-      Dedup.shingles(docs, w, textCol).select(col("doc_id"), col("tok").as("s")))
+    val sh = Dedup.shingles(docs, w, textCol).select(col("doc_id"), col("tok").as("s")).persist()
     // shingles present in >= 2 distinct docs (doc-distinct first so a
     // within-doc repeat doesn't count as cross-doc duplication)
     val dup = sh.distinct()
@@ -1057,12 +1056,12 @@ object TextOps {
     // later consumer/action scans the slim stage instead of re-running
     // shingle → tf → df → window; persist keeps the within-action fan-out
     // from re-scanning even when tmpfs is unavailable
-    val topm = graft.etl.CacheRegistry.persist(graft.etl.StageStore.materialize(
+    val topm = graft.etl.StageStore.materialize(
       tf.join(dfq, "term")
         .select(col("doc_id"), col("term"),
           (col("tf") * expr(s"$idfScale DIV df")).as("iw"))
         .withColumn("_rn", row_number().over(win)).filter(col("_rn") <= topM)
-        .drop("_rn"), "tfidf_topm"))
+        .drop("_rn"), "tfidf_topm").persist()
     val norms = topm.groupBy("doc_id").agg(sum(col("iw") * col("iw")).as("n2"))
     topm.as("a").join(topm.as("b"),
         col("a.term") === col("b.term") && col("a.doc_id") < col("b.doc_id"))
@@ -1346,9 +1345,8 @@ object TextOps {
     * to tokenize the corpus 2-4 times per action through differently-
     * shaped projections of the same token stream). */
   private def bm25Tf(docs: DataFrame, textCol: String): DataFrame =
-    graft.etl.CacheRegistry.persist(
-      docs.select(col("doc_id"), explode(tokensArr(textCol)).as("term"))
-        .groupBy("term", "doc_id").agg(count(lit(1)).as("tf")))
+    docs.select(col("doc_id"), explode(tokensArr(textCol)).as("term"))
+      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf")).persist()
 
   def searchTopK(docs: DataFrame,
       queries: Seq[(String, String)] = Seq(
@@ -1431,20 +1429,20 @@ object TextOps {
     val stops = LangProfiles.head._2
     val w = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pt = graft.etl.CacheRegistry.persist(
+    val pt =
       docs.filter(col("doc_id").isNotNull)
         .select(col("doc_id"), posexplode(tokensArr(textCol)).as(Seq("pos", "w")))
         .withColumn("is_stop", col("w").isin(stops: _*).cast("int"))
         .withColumn("run", sum(col("is_stop")).over(w))
         .filter(col("is_stop") === 0)
-        .select(col("doc_id"), col("run"), col("pos"), col("w")))
+        .select(col("doc_id"), col("run"), col("pos"), col("w")).persist()
     // persisted (r17): plen feeds both the word-stats join and the final
     // phrase rollup — unpersisted, the collect_list phrase assembly ran
     // twice; one slim row per candidate phrase
-    val plen = graft.etl.CacheRegistry.persist(pt.groupBy("doc_id", "run")
+    val plen = pt.groupBy("doc_id", "run")
       .agg(count(lit(1)).as("len"),
         array_join(expr("transform(sort_array(collect_list(" +
-          "struct(pos, w))), x -> x.w)"), " ").as("phrase")))
+          "struct(pos, w))), x -> x.w)"), " ").as("phrase")).persist()
     val ws = pt.join(plen.select(col("doc_id"), col("run"), col("len")),
         Seq("doc_id", "run"))
       .groupBy("w")
@@ -1457,8 +1455,7 @@ object TextOps {
       .groupBy("phrase")
       .agg(max(col("len")).as("n_words"), max(col("score_micro")).as("score_micro"),
         count(lit(1)).as("n_occurrences"))
-    val topK = graft.etl.CacheRegistry.persist(
-      agg.orderBy(col("score_micro").desc, col("phrase")).limit(k))
+    val topK = agg.orderBy(col("score_micro").desc, col("phrase")).limit(k).persist()
     val ahead = broadcast(topK.select(col("score_micro").as("_bs"),
       col("phrase").as("_bp")))
     topK.join(ahead, col("_bs") > col("score_micro") ||
@@ -1783,9 +1780,9 @@ object TextOps {
   private[ext] def bpeLearn(docs: DataFrame, rounds: Int, textCol: String)
       : (DataFrame, Seq[(Long, String, String, Long)]) = {
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1,32], got $rounds")
-    val wf = graft.etl.CacheRegistry.persist(
+    val wf =
       docs.select(explode(tokensArr(textCol)).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("freq")))
+        .groupBy("word").agg(count(lit(1)).as("freq")).persist()
     var w = wf.select(col("word"),
       concat(lit("|"), regexp_replace(col("word"), "(.)", "$1|")).as("s"),
       col("freq"))
@@ -1968,9 +1965,9 @@ object TextOps {
     // terms — instead of a second tokenize of the corpus through
     // array_distinct; CacheManager plan-matches this onto searchTopK's
     // cached tf within the same action.
-    val rel = graft.etl.CacheRegistry.persist(
+    val rel =
       bm25Tf(docs, textCol).join(qTerms, "term")
-        .groupBy("query_id", "doc_id").agg(count(lit(1)).as("rel")))
+        .groupBy("query_id", "doc_id").agg(count(lit(1)).as("rel")).persist()
     val topk = searchTopK(docs, queries, k, k1, b, textCol)
       .join(rel, Seq("query_id", "doc_id"), "left")
       .select(col("query_id"), col("rank"), coalesce(col("rel"), lit(0L)).as("rel"))
@@ -2250,9 +2247,9 @@ object TextOps {
     // machinery below makes ~8 driver-bounded passes over it (2× count/
     // sample/sums + the totals agg + the final join) — unpersisted, each
     // pass re-ran the full corpus tokenize + term aggregation.
-    val cls = graft.etl.CacheRegistry.persist(
+    val cls =
       tf.groupBy("n").agg(count(lit(1)).as("c"))
-        .withColumn("mass", col("n") * col("c")))
+        .withColumn("mass", col("n") * col("c")).persist()
     val cum = graft.etl.IngestOps.withGlobalRunningSum(
       graft.etl.IngestOps.withGlobalRunningSum(cls, -col("n"), col("mass"), "cm"),
       -col("n"), col("c"), "ct")

@@ -1,5 +1,3 @@
-import org.apache.spark.sql.SparkSession
-
 /** Whole-surface plan audit: executes every SparkEntry query at the given
   * SF and reports scale smells — BroadcastNestedLoopJoin / CartesianProduct
   * (all-pairs at any cluster size) and partition-less Window sorts (single
@@ -9,15 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.rangejoin.bucketUs", "600000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.etl.EngineConfig.localSession("8")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     var unexplained = 0
     for (row <- graft.SparkEntry.rows.sortBy(_.name)) {
@@ -51,7 +41,7 @@ object PlanAudit {
         case e: Throwable =>
           unexplained += 1
           println(f"AUDIT $name%-36s ERROR: ${e.getMessage.take(120)}")
-      } finally graft.etl.CacheRegistry.releaseAll()
+      } finally spark.catalog.clearCache()
     }
     println(s"AUDIT_SUMMARY unexplained=$unexplained")
     spark.stop()

@@ -224,7 +224,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(Stats.anomalyZscore(emptyEv).count() == 0)
     assert(Analytics.transitionMatrix(emptyEv).count() == 0)
     assert(Analytics.typeAffinity(emptyEv).count() == 0)
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     assert(Temporal.sessionIntervals(emptyEv).count() == 0)
     assert(Temporal.intervalConcurrency(
       Seq.empty[(Long, Long)].toDF("s", "e"), "s", "e").count() == 0)
@@ -237,7 +237,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(Sketch.countMinTokens(emptyDocs).count() == 0)
     assert(Dedup.editDistancePairs(emptyDocs).count() == 0)
     assert(TextOps.tfidfCosinePairs(emptyDocs).count() == 0)
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     // single-user single-event: no transitions, no anomalies, one session
     val one = Seq((1L, 7L, java.sql.Timestamp.from(java.time.Instant.EPOCH),
       "view", Some(1.0))).toDF("event_id", "user_id", "ts", "event_type", "value")

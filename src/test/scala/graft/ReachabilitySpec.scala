@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The walk reads the compiled main classes (the directory `graft.Main` was
   * loaded from) and starts at the programs: the `main` of `graft.Main`,
-  * `Verify`, `Bench` and the four mains under `tools/`, every public method of
+  * `Verify`, `Bench` and the two mains under `tools/`, every public method of
   * `SparkEntry` (the driver's surface), and the two classes Spark loads by
   * name, `XlsxSource` (the service file) and `GraftExtensions`
   * (`spark.sql.extensions`). From each reached method it follows method
@@ -42,14 +42,21 @@ class ReachabilitySpec extends AnyFunSuite {
     "sources.XlsxParsing.colIndex(String)" ->
       "test seam: XlsxScannerSpec checks the byte-level column parse through it",
     "sources.XlsxParsing.MaxColumns()" ->
-      "a constant: scalac inlines its value, so no caller reads the accessor")
+      "a constant: scalac inlines its value, so no caller reads the accessor",
+    "ext.TextOps.ProbeWeights.Stub()" ->
+      "classifierScore's default weights: only specs score without naming a probe",
+    "etl.CacheRegistry.releaseAll()" ->
+      "perfbench releases each op's caches through it")
 
   private lazy val walk = Walk(Paths.get(
     classOf[graft.Main.CliError].getProtectionDomain.getCodeSource.getLocation.toURI))
 
   test("every src/main unit is reached from a program entry point") {
-    assert(walk.unreachedUnits.isEmpty,
-      s"units no program reaches: ${walk.unreachedUnits.mkString(", ")}")
+    // a unit that holds only allow-listed methods stays for their reasons
+    val kept = allowed.keySet.map(m =>
+      "graft." + m.substring(0, m.lastIndexOf('.', m.indexOf('('))))
+    val unreached = walk.unreachedUnits.filterNot(kept)
+    assert(unreached.isEmpty, s"units no program reaches: ${unreached.mkString(", ")}")
   }
 
   test("the public object methods no program reaches are exactly the allow-list") {
@@ -63,7 +70,7 @@ class ReachabilitySpec extends AnyFunSuite {
 object ReachabilitySpec {
 
   private val mains = Seq("graft/Main", "graft/Verify", "graft/Bench", "EntrySmoke",
-    "PlanAudit", "StressProbe", "StressRun")
+    "PlanAudit")
   private val loadedByName = Seq("graft/sources/XlsxSource", "graft/plans/GraftExtensions")
   private val driverSurface = "graft/SparkEntry$"
 

@@ -31,7 +31,9 @@ class ScratchDirsSpec extends AnyFunSuite {
     val stageDir = ScratchDirs.dir("stage")
     // engine scratch used to appear beside the base (graft_stage_*,
     // graft_ck_*, graft_upd_*): watch the base's parent and java.io.tmpdir
-    // for any entry created while the three run, deleted or not
+    // for any entry created while the three run, deleted or not. The test
+    // JVM's java.io.tmpdir is its own (build.sbt), so any entry there is
+    // this JVM's.
     val watched = Seq(root.getParentFile.getParentFile,
       new File(System.getProperty("java.io.tmpdir"))).map(_.getCanonicalFile).distinct
     // the session's temp dirs and the parquet codec's native library (which

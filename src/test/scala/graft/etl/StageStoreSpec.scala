@@ -13,7 +13,8 @@ import graft.SparkTestSession.spark
 
 /** StageStore's lock is per key: a build may stage another key, and builds
   * of different keys run side by side. Each case runs under a timeout, so a
-  * lock that serializes all keys fails instead of hanging the suite. */
+  * lock that serializes all keys fails instead of hanging the suite. Beside
+  * the memo, the engine's one list of per-action caches is Spark's own. */
 class StageStoreSpec extends AnyFunSuite {
 
   private def memoOn(): Unit =
@@ -52,5 +53,24 @@ class StageStoreSpec extends AnyFunSuite {
     }
     val counts = Await.result(Future.sequence(Seq(build(3), build(5))), 2.minutes)
     assert(counts == Seq(Some(3L), Some(5L)))
+  }
+
+  test("an operator's persists are Spark's cache list, and clearCache empties it") {
+    import spark.implicits._
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    // localCheckpoints other suites left stay until the ContextCleaner
+    // drops them; only this case's RDDs are counted
+    val before = sc.getPersistentRDDs.keySet
+    val nodes = (1L to 5L).toDF("doc_id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L)).toDF("doc_a", "doc_b")
+    assert(graft.ext.Graph.pageRank(nodes, pairs).collect().length == 5)
+    assert(!cache.isEmpty, "pageRank persists its node and degree relations")
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+    spark.catalog.clearCache()
+    assert(cache.isEmpty)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 }

@@ -209,14 +209,14 @@ class AnalyticsSpec extends AnyFunSuite {
       .withColumn("ts", timestamp_micros(col("us")))
     val got = Analytics.typeAffinity(e)
       .as[(String, String, Long, Long, Long, Double)].collect().toSeq
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     // 3 sessions; A in 2, B in 2, {A,B} together in 1 → lift = 1·3/(2·2)
     assert(got === Seq(("B", "A", 1L, 2L, 2L, 0.75)) ||
       got === Seq(("A", "B", 1L, 2L, 2L, 0.75)))
     // r18 grouped-sets shape: the session relation is never self-joined —
     // the only joins left are broadcasts of the |types|²-bounded rollup
     val plan = Analytics.typeAffinity(e).queryExecution.executedPlan.toString
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"))
   }
 
@@ -514,7 +514,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // joins left are the broadcast dim join and broadcasts of the
     // |brands|²-bounded rollups
     val plan = Analytics.brandRules(li, part).queryExecution.executedPlan.toString
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"))
   }
 

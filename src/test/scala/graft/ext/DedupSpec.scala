@@ -478,10 +478,9 @@ class DedupSpec extends AnyFunSuite {
     // |sources|²-bounded rollup, so no shuffle-side join may appear.
     // Release the rollups the collects above persisted first, so the
     // asserted plan is the fresh shape, not a cache-substituted one.
-    graft.etl.CacheRegistry.releaseAll()
     spark.catalog.clearCache()
     val plan = Dedup.crossSourceOverlap(fx).queryExecution.executedPlan.toString
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"))
   }
 

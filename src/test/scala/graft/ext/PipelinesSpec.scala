@@ -121,18 +121,18 @@ class PipelinesSpec extends AnyFunSuite {
         Seq.fill(rnd.nextInt(10) + 3)("t").mkString(" "))
     }
     val df = docs.toDF("doc_id", "g", "text")
-    val out = Pipelines.mixByTokenBudget(df, "g", "doc_id", 60L)
+    val out = Pipelines.mixByTokenBudgetScalable(df, "g", "doc_id", 60L)
     val byG = out.groupBy("g").agg(sum("n_tok").as("tot")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byG.keySet == Set("a", "b"))
     // straddle rule: never undershoots the budget, overflows < one max doc
     byG.values.foreach(t => assert(t >= 60L && t < 60L + 12L, s"tot=$t"))
     val ids1 = out.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val ids2 = Pipelines.mixByTokenBudget(df.repartition(7), "g", "doc_id", 60L)
+    val ids2 = Pipelines.mixByTokenBudgetScalable(df.repartition(7), "g", "doc_id", 60L)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(ids1 == ids2)
     // budget larger than the corpus: everything kept
-    assert(Pipelines.mixByTokenBudget(df, "g", "doc_id", 100000L).count() == 100)
+    assert(Pipelines.mixByTokenBudgetScalable(df, "g", "doc_id", 100000L).count() == 100)
   }
 
   test("incrementalIngest: content-keyed accept; whitespace variants rejected; growth-stable") {
@@ -256,7 +256,7 @@ class PipelinesSpec extends AnyFunSuite {
     def ids(out: org.apache.spark.sql.DataFrame) =
       out.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     Seq(1L, 17L, 100L, 500L, 1000L, 100000L).foreach { b =>
-      val simple = ids(Pipelines.mixByTokenBudget(df, "g", "doc_id", b))
+      val simple = ids(WindowTokenBudget.mix(df, "g", "doc_id", b))
       val scalable = ids(Pipelines.mixByTokenBudgetScalable(df, "g", "doc_id", b))
       assert(simple == scalable, s"budget=$b")
     }

@@ -303,7 +303,7 @@ class TextOpsSpec extends AnyFunSuite {
       (4L, s"another unrelated document body four entirely so $common"))
     val pairs = TextOps.tfidfCosinePairs(d, threshold = 0.0)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     // each doc's OWN df=1 shingles outweigh the shared df=2 phrase, so the
     // absolute cosine is modest — the property under test is the ORDERING
     val rarePair = pairs((1L, 2L))
@@ -317,10 +317,10 @@ class TextOpsSpec extends AnyFunSuite {
   test("tfidfCosinePairs: partitioning-invariant (exact integer sums)") {
     val d = graft.etl.IngestOps.table(spark, graft.SparkTestSession.sf0001, "documents")
     val a = TextOps.tfidfCosinePairs(d).orderBy("doc_a", "doc_b").collect().toSeq
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     val b = TextOps.tfidfCosinePairs(d.repartition(7)).orderBy("doc_a", "doc_b")
       .collect().toSeq
-    graft.etl.CacheRegistry.releaseAll()
+    spark.catalog.clearCache()
     assert(a === b && a.nonEmpty)
   }
 
