@@ -27,15 +27,15 @@ object Bench {
     val spark = graft.etl.EngineConfig.localSession(cpus)
 
     // Deterministic query order (name order), and a warmup pass at the
-    // smallest SF so JIT + codegen + file-index costs don't land on
-    // whichever query happens to run first.
+    // smallest SF, the measured fixture's sf0.001 sibling, so JIT + codegen
+    // + file-index costs don't land on whichever query happens to run first.
     // SPARK_GRAFT_ONLY=name1,name2 restricts the run (local iteration aid);
     // without it, every row marked `benched` runs.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt.max(1)
     val names = SparkEntry.rows.filter(r => only.fold(r.benched)(_.contains(r.name)))
       .map(_.name).sorted
-    val warmDir = "/root/testdata/sf0.001"
+    val warmDir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString
     // failures outside the timed samples are counted, never swallowed
     // silently: warm_failed / prime_failed / fp_err in the JSON line
     var warmFailed, primeFailed, fpErr = 0

@@ -79,7 +79,7 @@ object Convert {
   private def runXlsx(spark: SparkSession, config: EngineConfig): Result = {
     val first = XlsxParsing.listFiles(config.inputDir).head
     val sheet = XlsxParsing.resolveSheet(
-      XlsxParsing.listSheets(first, config.maxEntrySizeBytes),
+      XlsxParsing.listSheets(first, config.maxEntrySizeBytes, config.minInflateRatio),
       config.sheetName, config.sheetIndex).name
     val rows = spark.read.format("xlsx")
       .option("sheetName", sheet)

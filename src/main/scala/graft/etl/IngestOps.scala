@@ -287,15 +287,13 @@ object IngestOps {
     * FILE (not per row) through a tiny window — no global shuffle of the
     * data, unlike `skipRows`'s row_number window. Position order = file-path
     * order, matching a deterministic multi-file scan. */
-  def withFileRowPos(spark: SparkSession, path: String, posCol: String = "_pos",
-      keepFileCol: Boolean = false): DataFrame = {
+  def withFileRowPos(spark: SparkSession, path: String, posCol: String = "_pos"): DataFrame = {
     val df = spark.read.parquet(path)
       .withColumn("_file", col("_metadata.file_path"))
       .withColumn("_idx", col("_metadata.row_index"))
-    val joined = df.join(broadcast(cumulativeOffsets(df, "_file")), "_file")
+    df.join(broadcast(cumulativeOffsets(df, "_file")), "_file")
       .withColumn(posCol, col("_offset") + col("_idx"))
-      .drop("_idx", "_offset", "_n")
-    if (keepFileCol) joined else joined.drop("_file")
+      .drop("_idx", "_offset", "_n", "_file")
   }
 
   /** S4/T4 — header application with the index-fallback rule: positions

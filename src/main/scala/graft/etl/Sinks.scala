@@ -83,11 +83,10 @@ object Sinks {
     * UnivocityGenerator with the writer's default options: the header, then
     * the rows. */
   def chunkedCsv(df: DataFrame, path: String, batchSize: Int,
-      orderCol: Option[String] = None, overwrite: Boolean = false): PartFiles.Written = {
-    val d = orderCol.map(c => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))).getOrElse(df)
-    val schema = d.schema
-    val timeZone = d.sparkSession.sessionState.conf.sessionLocalTimeZone
-    PartFiles.write(d, path, overwrite) { (stage, p, rows) =>
+      overwrite: Boolean = false): PartFiles.Written = {
+    val schema = df.schema
+    val timeZone = df.sparkSession.sessionState.conf.sessionLocalTimeZone
+    PartFiles.write(df, path, overwrite) { (stage, p, rows) =>
       if (p != 0 && !rows.hasNext) Nil
       else {
         val options = new CSVOptions(Map("header" -> "true"), true, timeZone)

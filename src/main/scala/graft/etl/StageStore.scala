@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * stage target would be HDFS/object storage, tmpfs is the local-mode
   * stand-in).
   *
-  * Five kinds of entry share it, each built at most once per key per JVM:
+  * Six kinds of entry share it, each built at most once per key per JVM:
   *  - batch stages ([[materialize]] / [[materializeBy]]): several public
   *    operators share one expensive deterministic intermediate — the LSH
   *    candidate-pair relation feeds near-dup dedup, keep-first collapse,
@@ -28,7 +28,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    with `sameResult` the same way; they write no files;
   *  - driver-resident scalars: the last purchase instant of a fixture's
   *    events (SparkEntry's events_stream_range_join cut), keyed
-  *    `lastPurchaseUs|<dir>`; no files either.
+  *    `lastPurchaseUs|<dir>`; no files either;
+  *  - the parquet footer schemas the streaming sources read their files
+  *    with (EventStreams.footerSchema), keyed `schema|<path>`; no files
+  *    either.
   *
   * Layout: every entry's files live under `ScratchDirs.root/stage/`, one
   * directory per entry named `<sanitized key>_<n>` (n unique per JVM), and

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object AsOf {
 
-  /** @param rightPayload right columns to carry (aliased as given)
-    * @param inner drop left rows with no as-of match (ASOF JOIN default)
+  /** Left rows with no as-of match are dropped (ASOF JOIN's inner form).
+    *
+    * @param rightPayload right columns to carry (aliased as given)
     *
     * Null-payload correctness: the running `last` carries a single non-null
     * match STRUCT per right row (its time + payloads), never the payload
@@ -30,8 +31,7 @@ object AsOf {
     * "a right row exists", not payload nullity. One running last regardless
     * of payload arity. */
   def asofJoin(left: DataFrame, right: DataFrame, key: String, time: String,
-      rightPayload: Map[String, String], inner: Boolean = true,
-      forward: Boolean = false): DataFrame = {
+      rightPayload: Map[String, String], forward: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
     val leftCols = left.columns.filterNot(c => c == key || c == time)
     val payloadSrc = rightPayload.keys.toSeq
@@ -63,8 +63,7 @@ object AsOf {
     val filledCols = Seq(col(key), col("_t"), col("_tag")) ++
       leftCols.map(col) :+ last(col("_m"), ignoreNulls = true).over(w).as("_m")
     val filled = l.unionByName(r).select(filledCols: _*)
-    val onlyLeft = filled.filter(col("_tag") === 1)
-    val matched = if (inner) onlyLeft.filter(col("_m").isNotNull) else onlyLeft
+    val matched = filled.filter(col("_tag") === 1).filter(col("_m").isNotNull)
     val outCols = Seq(col(key), col("_t").as(time)) ++ leftCols.map(col) ++
       payloadSrc.zip(payloadDst).map { case (src, dst) =>
         col("_m").getField(s"_p_$src").as(dst)

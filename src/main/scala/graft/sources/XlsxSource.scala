@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder,
+  SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -575,6 +576,16 @@ object XlsxParsing {
     }
 
     override def close(): Unit = try raw.close() finally ch.close()
+  }
+
+  /** The package of `file`, its central directory checked against the caps
+    * ([[XlsxPackage.checkEntries]]) before anything of it is inflated. */
+  private[sources] def guarded(file: String, maxEntrySizeBytes: Long,
+      minInflateRatio: Double): XlsxPackage = {
+    val pkg = new XlsxPackage(file)
+    try pkg.checkEntries(maxEntrySizeBytes, minInflateRatio)
+    catch { case e: Throwable => pkg.close(); throw e }
+    pkg
   }
 
   /** A package over the file a JDK `ZipFile` has open. */
@@ -1254,10 +1265,12 @@ object XlsxParsing {
     * sheetN.xml — the rels indirection is part of the OPC format). */
   def listSheets(zip: ZipFile, cap: Long): Seq[SheetInfo] = using(zip)(listSheets(_, cap))
 
-  /** The sheet list of the workbook `file`, read through one package. */
-  def listSheets(file: String, cap: Long): Seq[SheetInfo] = {
-    val pkg = new XlsxPackage(file)
-    try listSheets(pkg, cap) finally pkg.close()
+  /** The sheet list of the workbook `file`, read through one package after
+    * its central-directory guard pass; `maxEntrySizeBytes` also caps what
+    * is inflated. */
+  def listSheets(file: String, maxEntrySizeBytes: Long, minInflateRatio: Double): Seq[SheetInfo] = {
+    val pkg = guarded(file, maxEntrySizeBytes, minInflateRatio)
+    try listSheets(pkg, maxEntrySizeBytes) finally pkg.close()
   }
 
   private[sources] def listSheets(pkg: XlsxPackage, cap: Long): Seq[SheetInfo] = {
@@ -1700,9 +1713,6 @@ object XlsxParsing {
 /** Options bundle shared by driver (inference) and executors (readers). */
 private[sources] final case class XlsxOptions(
     sheetName: Option[String],
-    sheetIndex: Int,
-    header: Boolean,
-    unionSheets: Boolean,
     headerRow: Int,
     maxEntrySizeBytes: Long,
     minInflateRatio: Double) extends Serializable
@@ -1717,14 +1727,8 @@ private[sources] object XlsxOptions {
     options.forEach((k, v) => lower.put(k.toLowerCase(java.util.Locale.ROOT), v))
     def get(k: String): Option[String] =
       Option(lower.get(k.toLowerCase(java.util.Locale.ROOT)))
-    val union = get("unionSheets").exists(_.toBoolean)
-    require(!(union && get("sheetName").exists(_.nonEmpty)),
-      "unionSheets reads EVERY sheet; it cannot be combined with sheetName")
     XlsxOptions(
       sheetName = get("sheetName").filter(_.nonEmpty),
-      sheetIndex = get("sheetIndex").map(_.toInt).getOrElse(0),
-      header = get("header").forall(_.toBoolean),
-      unionSheets = union,
       headerRow = get("headerRow").map(_.toInt).getOrElse(0),
       maxEntrySizeBytes = get("maxEntrySizeBytes").map(_.toLong)
         .getOrElse(6L * 1024 * 1024 * 1024),
@@ -1734,8 +1738,9 @@ private[sources] object XlsxOptions {
 
 /** `spark.read.format("xlsx")` — a minimal DataSource V2 over
   * [[XlsxParsing]]. All columns are StringType (the reference's universal
-  * all-string row model, T1/T5); header row names columns with the
-  * index-fallback rule (S4).
+  * all-string row model, T1/T5); the sheet's first row names the columns
+  * with the index-fallback rule (S4). Options: `sheetName` (else the first
+  * sheet), `headerRow`, `maxEntrySizeBytes` and `minInflateRatio`.
   *
   * Partitioning. Each sheet is read as K row ranges by inflated byte
   * offset. K follows Spark's own file-split rule over the
@@ -1747,42 +1752,44 @@ private[sources] object XlsxOptions {
   * last one to its end. The last range is unbounded, so the ranges tile
   * the part whatever its real byte count, and every row is read by exactly
   * one range. A workbook directory is planned the same way over all its
-  * files; `unionSheets=true` reads every sheet of each file (header row
-  * consumed per sheet; narrower sheets pad with ""), all under the inferred
-  * schema.
+  * files, all read under the inferred schema.
+  *
+  * One plan per load(). The table's partitions are worked out when
+  * `load()` resolves the table, with the confs in force then: each
+  * workbook is opened once, guarded and its sheet resolved
+  * ([[XlsxScan.sheet]]), and the sheets are cut into ranges
+  * ([[XlsxScan.plan]]). Every scan of that DataFrame maps the same plan to
+  * its partitions and opens no file on the driver.
   *
   * Access points. Schema inference parses the whole sheet anyway; on the
-  * way it takes an access point at each range boundary `lo` the scan will
-  * plan with the session's confs: the last `<row` start `R ≤ lo` with the
-  * scanner's state there, and the last deflate block start at or before
-  * `R` with its history ([[XlsxParsing.AccessPoint]]). The provider hands
-  * them to its table and scan, and each range starts at the one with the
+  * way it takes an access point at each range boundary `lo` of the plan:
+  * the last `<row` start `R ≤ lo` with the scanner's state there, and the
+  * last deflate block start at or before `R` with its history
+  * ([[XlsxParsing.AccessPoint]]). Each range starts at the one with the
   * largest `R ≤ lo`: it decodes from that block, discards the bytes up to
   * `R`, and passes `[R, lo)` with the scanner's exact structural skip. A
   * range starts at byte 0 instead, inflating and skipping `[0, lo)`, when
   * it has no access point that fits: with a schema given (no inference),
-  * in the workbooks after the first, in the sheets other than the inferred
-  * one under `unionSheets`, in a UTF-16 part (its text offsets are not the
-  * part's), or when the entry's CRC-32 or sizes changed since inference.
-  * Either way every byte is parsed in full by exactly one range.
+  * in the workbooks after the first, in a UTF-16 part (its text offsets are
+  * not the part's), or when the entry's CRC-32 or sizes changed since
+  * inference. Either way every byte is parsed in full by exactly one range.
   *
   * A row's place in its sheet, not its range, decides how it is treated:
-  * the sheet's first row is the header under `header=true`, and
-  * `headerRow=N` drops the first N non-blank data rows of each sheet (the
-  * converter's preamble skip, T3); a range parses the sheet in full, from
-  * its start or from an access point that counted the rows before it,
-  * until it has seen those N rows, then skips structurally.
+  * the sheet's first row is the header, and `headerRow=N` drops the first
+  * N non-blank data rows of each sheet (the converter's preamble skip,
+  * T3); a range parses the sheet in full, from its start or from an access
+  * point that counted the rows before it, until it has seen those N rows,
+  * then skips structurally.
   *
   * Order guarantee ([[graft.etl.Convert]] relies on it in place of a
-  * sort): partitions follow file-name order, then sheet order under
-  * `unionSheets`, then range order, and each reader emits its rows in
-  * sheet order. */
+  * sort): partitions follow file-name order, then range order, and each
+  * reader emits its rows in sheet order. */
 class XlsxSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "xlsx"
   override def supportsExternalMetadata(): Boolean = true
 
-  // the access points the last inferSchema recorded, for getTable
-  private var indexed: (String, Seq[XlsxParsing.AccessPoint]) = ("", Nil)
+  // the plan the last inferSchema made, with its access points, for getTable
+  private var inferred: (String, Seq[XlsxRangePartition]) = ("", Nil)
 
   private def pathOf(options: java.util.Map[String, String]): String = {
     val p = options.get("path")
@@ -1793,22 +1800,18 @@ class XlsxSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = XlsxOptions(options)
     val path = pathOf(options)
-    val first = XlsxParsing.listFiles(path).head
-    val pkg = new XlsxParsing.XlsxPackage(first)
+    val files = XlsxParsing.listFiles(path)
+    val pkg = XlsxParsing.guarded(files.head, opts.maxEntrySizeBytes, opts.minInflateRatio)
     try {
-      pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
-      val all = XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes)
-      val sheet = XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)
+      // the first workbook is planned from the package parsed here
+      val first = XlsxScan.sheet(pkg, opts)
+      val plan = XlsxScan.plan(SparkSession.active,
+        first +: files.tail.map(XlsxScan.sheet(_, opts)))
+      // the range boundaries of the first sheet, to take an access point at
+      // each while the sheet is parsed here anyway
+      val marks = plan.filter(p => p.file == pkg.file && p.lo > 0).map(_.lo).toArray
       val shared = XlsxParsing.sharedStrings(pkg, opts.maxEntrySizeBytes)
-      // the range boundaries the scan will plan for this sheet, to take an
-      // access point at each while the sheet is parsed here anyway; this
-      // workbook is planned from the package already open
-      val sheets = XlsxScan.sheets(path, opts, Map(first -> XlsxScan.planned(pkg, all, opts)))
-      val marks = sheets.zip(XlsxScan.ranges(SparkSession.active, sheets.map(_.size)))
-        .collectFirst { case (s, r) if s.file == first && s.target == sheet.target =>
-          r.map(_._1).filter(_ > 0).toArray }
-        .getOrElse(Array.emptyLongArray)
-      val rows = new XlsxParsing.SheetRows(pkg, sheet.target, shared.length,
+      val rows = new XlsxParsing.SheetRows(pkg, first.part, shared.length,
         opts.maxEntrySizeBytes, null, marks, ownsPackage = false)
       try {
         // width = max over header AND data rows: the reference names
@@ -1817,15 +1820,18 @@ class XlsxSource extends TableProvider with DataSourceRegister {
         // the first `headerRow` non-blank data rows are rendered (counted
         // as the readers count them, for the access points); the other
         // data rows are parsed and checked for their width.
-        val header: Array[String] =
-          if (opts.header && rows.next()) rows.strings(shared) else Array.empty
+        val header: Array[String] = if (rows.next()) rows.strings(shared) else Array.empty
         var width = header.length
         while (rows.next()) {
           width = math.max(width, rows.width)
           if (rows.dataRows < opts.headerRow && rows.strings(shared).exists(_.nonEmpty))
             rows.dataRows += 1
         }
-        indexed = (path, rows.accessPoints)
+        // each later range of the sheet starts at the nearest access point
+        // at or before it
+        val index = rows.accessPoints
+        inferred = (path, plan.map(p => if (p.lo == 0) p else p.copy(start = index.filter(ap =>
+          ap.file == p.file && ap.part == p.part && ap.rowAt <= p.lo).lastOption)))
         // duplicate header cells would collapse in name-keyed lookups
         // (StructType.fieldIndex — last-wins — would silently map two
         // ordinals to one physical column); uniquify deterministically by
@@ -1848,54 +1854,41 @@ class XlsxSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val path = pathOf(properties)
-    new XlsxTable(path, schema, XlsxOptions(properties),
-      if (indexed._1 == path) indexed._2 else Nil)
+    val opts = XlsxOptions(properties)
+    new XlsxTable(path, schema, opts,
+      if (inferred._1 == path) inferred._2
+      else XlsxScan.plan(SparkSession.active,
+        XlsxParsing.listFiles(path).map(XlsxScan.sheet(_, opts))))
   }
 }
 
 private[sources] class XlsxTable(path: String, tableSchema: StructType,
-    opts: XlsxOptions, index: Seq[XlsxParsing.AccessPoint]) extends Table with SupportsRead {
+    opts: XlsxOptions, plan: Seq[XlsxRangePartition]) extends Table with SupportsRead {
   override def name(): String = s"xlsx:$path"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new XlsxScanBuilder(path, tableSchema, opts, index)
+    new XlsxScan(tableSchema, opts, plan)
 }
 
-/** Column pruning: a projection of k columns builds k-wide rows — Catalyst
-  * hands the required schema down and the reader materializes only those
-  * ordinals (the XML still streams past every cell; what pruning saves is
-  * row width, string allocation, and everything downstream of the scan). */
-private[sources] class XlsxScanBuilder(path: String, tableSchema: StructType,
-    opts: XlsxOptions, index: Seq[XlsxParsing.AccessPoint]) extends ScanBuilder
-    with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
+/** The table's scan over its plan, built by itself. Column pruning: a
+  * projection of k columns builds k-wide rows — Catalyst hands the required
+  * schema down and the reader materializes only those ordinals (the XML
+  * still streams past every cell; what pruning saves is row width, string
+  * allocation, and everything downstream of the scan). */
+private[sources] class XlsxScan(tableSchema: StructType, opts: XlsxOptions,
+    plan: Seq[XlsxRangePartition]) extends ScanBuilder with SupportsPushDownRequiredColumns
+    with Scan with Batch {
   private var required: StructType = tableSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     // intersect in table order; Catalyst only asks for existing columns
     required = StructType(tableSchema.fields.filter(f =>
       requiredSchema.fieldNames.contains(f.name)))
-  override def build(): Scan = new XlsxScan(path, tableSchema, required, opts, index)
-}
-
-private[sources] class XlsxScan(path: String, tableSchema: StructType,
-    required: StructType, opts: XlsxOptions, index: Seq[XlsxParsing.AccessPoint])
-    extends Scan with Batch {
+  override def build(): Scan = this
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val sheets = XlsxScan.sheets(path, opts)
-    sheets.zip(XlsxScan.ranges(SparkSession.active, sheets.map(_.size))).flatMap {
-      case (s, ranges) =>
-        ranges.map { case (lo, hi) =>
-          // the nearest access point at or before the range, if any
-          val start = if (lo == 0) None else index
-            .filter(ap => ap.file == s.file && ap.part == s.target && ap.rowAt <= lo)
-            .lastOption
-          XlsxRangePartition(s.file, s.pinned, lo, hi, start): InputPartition
-        }
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] = plan.toArray
   override def createReaderFactory(): PartitionReaderFactory = {
     val ordinals = required.fieldNames.map(tableSchema.fieldIndex)
     new XlsxReaderFactory(ordinals, opts)
@@ -1903,37 +1896,30 @@ private[sources] class XlsxScan(path: String, tableSchema: StructType,
 }
 
 private[sources] object XlsxScan {
-  /** A sheet to read: its workbook, the sheet name a `unionSheets` scan
-    * pins, its part and its inflated size. */
-  final case class PlannedSheet(file: String, pinned: Option[String], target: String, size: Long)
+  /** A sheet a scan reads: its workbook, its part and its inflated size. */
+  final case class Sheet(file: String, part: String, size: Long)
 
-  /** The sheets a scan of `path` reads, in order; only each workbook's
-    * central directory and workbook.xml are read, and only for the
-    * workbooks `known` does not already plan. */
-  def sheets(path: String, opts: XlsxOptions,
-      known: Map[String, Seq[PlannedSheet]] = Map.empty): Seq[PlannedSheet] =
-    XlsxParsing.listFiles(path).flatMap { f =>
-      known.getOrElse(f, {
-        val pkg = new XlsxParsing.XlsxPackage(f)
-        try {
-          pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
-          planned(pkg, XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes), opts)
-        } finally pkg.close()
-      })
-    }
-
-  /** The sheets a scan reads of the open workbook `pkg`, whose sheet list
-    * is `all`. */
-  def planned(pkg: XlsxParsing.XlsxPackage, all: Seq[XlsxParsing.SheetInfo],
-      opts: XlsxOptions): Seq[PlannedSheet] = {
-    val read =
-      if (opts.unionSheets) all.map(s => (Some(s.name), s))
-      else Seq((None, XlsxParsing.resolveSheet(all, opts.sheetName, opts.sheetIndex)))
-    read.map { case (pinned, s) =>
-      PlannedSheet(pkg.file, pinned, s.target,
-        Option(pkg.entry(s.target)).fold(0L)(e => math.max(e.getSize, 0L)))
-    }
+  /** The sheet a scan reads of the workbook `pkg`, whose central directory
+    * is already guarded; only workbook.xml and its rels are inflated. */
+  def sheet(pkg: XlsxParsing.XlsxPackage, opts: XlsxOptions): Sheet = {
+    val part = XlsxParsing.resolveSheet(
+      XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes), opts.sheetName, 0).target
+    Sheet(pkg.file, part, Option(pkg.entry(part)).fold(0L)(e => math.max(e.getSize, 0L)))
   }
+
+  /** [[sheet]] of the workbook `file`, opened and guarded for it alone. */
+  def sheet(file: String, opts: XlsxOptions): Sheet = {
+    val pkg = XlsxParsing.guarded(file, opts.maxEntrySizeBytes, opts.minInflateRatio)
+    try sheet(pkg, opts) finally pkg.close()
+  }
+
+  /** The partitions of a scan of `sheets`, in read order: each sheet cut
+    * into [[ranges]] by its inflated size; none starts at an access point
+    * yet. */
+  def plan(spark: SparkSession, sheets: Seq[Sheet]): Seq[XlsxRangePartition] =
+    sheets.zip(ranges(spark, sheets.map(_.size))).flatMap { case (s, rs) =>
+      rs.map { case (lo, hi) => XlsxRangePartition(s.file, s.part, lo, hi, None) }
+    }
 
   /** Spark's file-split rule (`FilePartition.maxSplitBytes` over the
     * `spark.sql.files.*` confs) applied to sheets of these inflated sizes:
@@ -1949,12 +1935,11 @@ private[sources] object XlsxScan {
   }
 }
 
-/** Rows of one sheet whose `<row` tag starts in `[lo, hi)`; `sheet` pins
-  * the sheet under `unionSheets`, else the options resolve it; `start` is
-  * the access point to begin at, if schema inference took one for it. */
-private[sources] final case class XlsxRangePartition(file: String,
-    sheet: Option[String], lo: Long, hi: Long,
-    start: Option[XlsxParsing.AccessPoint]) extends InputPartition
+/** Rows of the sheet `part` of `file` whose `<row` tag starts in
+  * `[lo, hi)`; `start` is the access point to begin at, if schema
+  * inference took one for it. */
+private[sources] final case class XlsxRangePartition(file: String, part: String,
+    lo: Long, hi: Long, start: Option[XlsxParsing.AccessPoint]) extends InputPartition
 
 private[sources] class XlsxReaderFactory(ordinals: Array[Int], opts: XlsxOptions)
     extends PartitionReaderFactory {
@@ -1963,26 +1948,20 @@ private[sources] class XlsxReaderFactory(ordinals: Array[Int], opts: XlsxOptions
   }
 }
 
-/** Streams one range of a workbook's sheet: guard pass → sheet resolve →
-  * shared strings → row pull. Rows materialize only the pruned `ordinals`
-  * (pad with "" past the physical row end); rows whose cells are ALL blank
-  * — judged on the FULL physical row, projection-independent (T2,
+/** Streams one range of a workbook's sheet: guard pass → shared strings →
+  * row pull. Rows materialize only the pruned `ordinals` (pad with "" past
+  * the physical row end); rows whose cells are ALL blank — judged on the
+  * FULL physical row, projection-independent (T2,
   * core/poi/CatmePoiSheetContentsHandler.java:122-125) — are dropped, as
   * are the header and the first `headerRow` non-blank data rows. */
 private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
     ordinals: Array[Int], opts: XlsxOptions) extends PartitionReader[InternalRow] {
 
-  private val pkg = new XlsxParsing.XlsxPackage(part.file)
-  pkg.checkEntries(opts.maxEntrySizeBytes, opts.minInflateRatio)
-  // a pinned sheet is the one this unionSheets partition owns; otherwise
-  // the usual name/index resolution
-  private val sheet = XlsxParsing.resolveSheet(
-    XlsxParsing.listSheets(pkg, opts.maxEntrySizeBytes),
-    part.sheet.orElse(opts.sheetName), if (part.sheet.isDefined) 0 else opts.sheetIndex)
+  private val pkg = XlsxParsing.guarded(part.file, opts.maxEntrySizeBytes, opts.minInflateRatio)
   // encoded once per reader: cells are handed to Spark as these instances
   private val shared = XlsxParsing.sharedStrings(pkg, opts.maxEntrySizeBytes)
     .map(UTF8String.fromString)
-  private val rows = new XlsxParsing.SheetRows(pkg, sheet.target, shared.length,
+  private val rows = new XlsxParsing.SheetRows(pkg, part.part, shared.length,
     opts.maxEntrySizeBytes, part.start.orNull, Array.emptyLongArray, ownsPackage = false)
 
   private var current: Array[UTF8String] = _
@@ -1990,7 +1969,7 @@ private[sources] class XlsxPartitionReader(part: XlsxRangePartition,
   /** The next non-blank data row of the sheet into `current`. */
   private def nextDataRow(): Boolean = {
     while (rows.next()) {
-      if (!(opts.header && rows.ordinal == 0)) {
+      if (rows.ordinal != 0) {
         current = rows.utf8(shared)
         if (current.exists(_.numBytes > 0)) return true // T2 empty-row drop
       }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Streaming DOCUMENT ingestion — the incremental twin of the batch
   * curation pipeline's gate stage ([[graft.ext.Pipelines.curateCorpus]]):
@@ -27,21 +26,13 @@ import org.apache.spark.sql.types.StructType
   * sources would otherwise credit whichever arrival won the race. */
 object DocStreams {
 
-  /** Footer schemas memoized per path (immutable fixtures — same
-    * rationale as the events-side memo). */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  def readDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val schema = schemaMemo.computeIfAbsent(s"$dir/documents.parquet",
-      p => spark.read.parquet(p).schema)
+  def readDocuments(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(schema)
+      .schema(EventStreams.footerSchema(spark, s"$dir/documents.parquet"))
       .option("basePath", dir)
       // glob form: FileStreamSource rejects a bare file path; composed via
       // the shared metachar-guarded helper (ADVICE r14)
       .parquet(EventStreams.fileGlob(dir, "documents.parquet"))
-  }
 
   /** The map-only admission gates — identical expressions to the batch
     * curation path, shared by both dedup variants so "batch output is the
@@ -260,13 +251,11 @@ object DocStreams {
   // never the corpus files: the corpus-side scan+shuffle runs exactly one
   // time per JVM however many batches the stream runs (DocStreamsSpec
   // proves this with a row-counting accumulator spliced into the static
-  // plan). With `broadcastStatic` (default) each batch's join is a
-  // broadcast hash join on the slim persisted relation — right while the
-  // distinct fingerprint/bucket table fits the broadcast budget; at true
-  // 100 TB corpus size pass false and the join becomes a shuffled
-  // stream-static hash join whose static side still reads cache, or swap
-  // the static relation for an external fingerprint store (the same
-  // tradeoff curatedDedupBounded documents).
+  // plan). Each batch's join is a broadcast hash join on the slim
+  // persisted relation — right while the distinct fingerprint/bucket table
+  // fits the broadcast budget; past it, swap the static relation for an
+  // external fingerprint store (the same tradeoff curatedDedupBounded
+  // documents).
 
   /** Splice a materialization probe into `df`: every row the plan actually
     * COMPUTES bumps the accumulator, a cache hit computes nothing — so
@@ -295,15 +284,12 @@ object DocStreams {
     * watermark, no state store, per-batch cost = gate (map-only) + the
     * membership join. */
   def streamVsCorpusExact(docs: DataFrame, corpusFps: DataFrame,
-      broadcastStatic: Boolean = true,
       lang: String = "en", minTokens: Long = 10, maxTokens: Long = 100000,
-      minAlphaRatio: Double = 0.5): DataFrame = {
-    val statics = if (broadcastStatic) broadcast(corpusFps) else corpusFps
+      minAlphaRatio: Double = 0.5): DataFrame =
     gated(docs, lang, minTokens, maxTokens, minAlphaRatio)
       .select(col("doc_id"), col("source"), md5(col("text")).as("fp"))
-      .join(statics, Seq("fp"), "left_anti")
+      .join(broadcast(corpusFps), Seq("fp"), "left_anti")
       .select(col("doc_id"), col("source"))
-  }
 
   /** The standing corpus's LSH band buckets, persisted — the static side
     * of [[streamVsCorpusNeardup]]. Built with the BATCH family machinery
@@ -336,13 +322,10 @@ object DocStreams {
     * the stateful tier downstream when within-stream dedup is also
     * wanted. */
   def streamVsCorpusNeardup(docs: DataFrame, corpusBuckets: DataFrame,
-      broadcastStatic: Boolean = true,
       lang: String = "en", minTokens: Long = 10, maxTokens: Long = 100000,
-      minAlphaRatio: Double = 0.5): DataFrame = {
-    val statics = if (broadcastStatic) broadcast(corpusBuckets) else corpusBuckets
+      minAlphaRatio: Double = 0.5): DataFrame =
     bandRows(docs, lang, minTokens, maxTokens, minAlphaRatio)
-      .join(statics, Seq("bi", "band"), "left_outer")
+      .join(broadcast(corpusBuckets), Seq("bi", "band"), "left_outer")
       .select(col("doc_id"), col("source"), col("bi"),
         col("rep").isNotNull.as("matched"), col("rep"))
-  }
 }

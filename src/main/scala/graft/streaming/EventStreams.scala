@@ -19,15 +19,14 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  /** Parquet footer schemas by path — the fixtures are immutable and every
-    * streaming query re-reads the same footer once per invocation (19
-    * queries × 2 bench samples), so the driver-side footer read is memoized
-    * per JVM. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private def footerSchema(spark: SparkSession, path: String): StructType =
-    schemaMemo.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+  /** The parquet footer schema of `path` — the fixtures are immutable and
+    * every streaming query re-reads the same footer once per invocation
+    * (19 queries × 2 bench samples), so the driver-side footer read is
+    * kept once per JVM in [[graft.etl.StageStore]]. */
+  private[streaming] def footerSchema(spark: SparkSession, path: String): StructType = {
+    def read = spark.read.parquet(path).schema
+    graft.etl.StageStore.once(s"schema|$path")(_ => read).getOrElse(read)
+  }
 
   /** Compose the FileStreamSource pattern for one fixture file: the source
     * accepts globs but rejects a bare file path ("'basePath' must be a

@@ -48,6 +48,17 @@ class ReachabilitySpec extends AnyFunSuite {
     "etl.CacheRegistry.releaseAll()" ->
       "perfbench releases each op's caches through it")
 
+  /** Boolean and Option parameter defaults that every program call takes
+    * (`Object.method(ParamTypes) #N`, N counted from 1), and why each
+    * stays. A new one and a stale entry both fail the third case. */
+  private val seams: Map[String, String] = Map(
+    "streaming.DocStreams.corpusFingerprints(Dataset, Option) #2" ->
+      "test seam: DocStreamsSpec counts the static side's materializations through scanProbe",
+    "streaming.DocStreams.corpusBandBuckets(Dataset, Option) #2" ->
+      "test seam: DocStreamsSpec counts the static side's materializations through scanProbe",
+    "ext.Analytics.funnel(Dataset, Seq, boolean) #3" ->
+      "test seam: AnalyticsSpec reads the unstaged plan and compares the staged one against it")
+
   private lazy val walk = Walk(Paths.get(
     classOf[graft.Main.CliError].getProtectionDomain.getCodeSource.getLocation.toURI))
 
@@ -64,6 +75,13 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(unreached == allowed.keySet,
       s"unreached, not allowed: ${(unreached -- allowed.keySet).toSeq.sorted.mkString("; ")}" +
         s" | allowed, but reached or gone: ${(allowed.keySet -- unreached).toSeq.sorted.mkString("; ")}")
+  }
+
+  test("every Boolean or Option default is passed by some program call") {
+    val unpassed = walk.unpassedDefaults
+    assert(unpassed == seams.keySet,
+      s"a fork no program takes: ${(unpassed -- seams.keySet).toSeq.sorted.mkString("; ")}" +
+        s" | listed, but passed or gone: ${(seams.keySet -- unpassed).toSeq.sorted.mkString("; ")}")
   }
 }
 
@@ -85,6 +103,8 @@ object ReachabilitySpec {
     // (graft owner, name + descriptor) of each virtual call seen so far
     private val virtualCalls = mutable.Set.empty[(String, String)]
     private val externalMethods = mutable.Map.empty[String, Set[String]]
+    // call instructions per target, over the reached methods
+    private val calls = mutable.Map.empty[Method, Int].withDefaultValue(0)
 
     private def supers(n: ClassNode): Seq[String] =
       Option(n.superName).toSeq ++ n.interfaces.asScala
@@ -165,8 +185,10 @@ object ReachabilitySpec {
       val node = classes(m.owner).methods.asScala.find(x => x.name == m.name && x.desc == m.desc).get
       node.tryCatchBlocks.asScala.foreach(b => Option(b.`type`).foreach(reachClass))
       node.instructions.iterator().asScala.foreach {
-        case i: MethodInsnNode => call(i.owner, i.name, i.desc,
-          i.getOpcode == Opcodes.INVOKEVIRTUAL || i.getOpcode == Opcodes.INVOKEINTERFACE)
+        case i: MethodInsnNode =>
+          calls(Method(i.owner, i.name, i.desc)) += 1
+          call(i.owner, i.name, i.desc,
+            i.getOpcode == Opcodes.INVOKEVIRTUAL || i.getOpcode == Opcodes.INVOKEINTERFACE)
         case i: InvokeDynamicInsnNode =>
           handle(i.bsm)
           i.bsmArgs.foreach(constant)
@@ -225,6 +247,31 @@ object ReachabilitySpec {
       if !(caseCompanion(n) && Set("apply", "unapply", "toString")(m.name))
       if !reached(Method(n.name, m.name, m.desc))
     } yield key(n.name, m)).toSet
+
+    private val DefaultGetter = """(.+)\$default\$(\d+)""".r
+
+    /** Boolean and Option parameters of public object methods whose default
+      * every reached call takes, as `pkg.Object.method(ParamTypes) #N`. A
+      * call that leaves parameter N out calls its `$default$N` getter, so no
+      * reached call passes it exactly when the getter is called as often as
+      * the method. Constructors and case-class `apply` are left out. */
+    def unpassedDefaults: Set[String] = (for {
+      n <- classes.values if isModule(n)
+      g <- n.methods.asScala
+      (name, k) <- (g.name match {
+        case DefaultGetter(name, k) => Some((name, k.toInt))
+        case _ => None
+      }).toSeq
+      if name != "$lessinit$greater" && !(caseCompanion(n) && name == "apply")
+      flag = Type.getReturnType(g.desc)
+      if flag == Type.BOOLEAN_TYPE || flag.getDescriptor == "Lscala/Option;"
+      m <- n.methods.asScala
+      if m.name == name && has(m.access, Opcodes.ACC_PUBLIC)
+      args = Type.getArgumentTypes(m.desc)
+      if args.length >= k && args(k - 1) == flag
+      uses = calls(Method(n.name, m.name, m.desc))
+      if uses > 0 && calls(Method(n.name, g.name, g.desc)) == uses
+    } yield s"${key(n.name, m)} #$k").toSet
   }
 
   object Walk {

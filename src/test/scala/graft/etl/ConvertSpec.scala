@@ -103,6 +103,36 @@ class ConvertSpec extends AnyFunSuite {
       Seq(("a1", "b1"), ("a2", "b2")))
   }
 
+  test("xlsx sheet by index, and the reference's error past the last sheet") {
+    val dir = graft.TestDirs.dir("cvidx").toString
+    graft.sources.XlsxTestFiles.writeDense(s"$dir/book.xlsx", Seq(
+      ("First", Seq(Seq("a"), Seq("1"))),
+      ("Second", Seq(Seq("b"), Seq("2"), Seq("3")))))
+    def convert(index: Int) = Convert.run(spark, EngineConfig(
+      inputDir = s"$dir/book.xlsx", inputFormat = "xlsx", sheetIndex = index,
+      format = "ndjson", outputPath = Some(s"$dir/nd$index"), overwrite = true))
+    val r = convert(1)
+    assert(r.sheet == "Second" && r.rowsWritten == 2)
+    val e = intercept[IllegalArgumentException](convert(5))
+    assert(e.getMessage.contains("Invalid sheet index: 5") &&
+      e.getMessage.contains("File contains 2 sheets"), e.getMessage)
+  }
+
+  test("xlsx conversion checks the zip guards before it inflates workbook.xml") {
+    val dir = graft.TestDirs.dir("cvbomb").toString
+    val book = s"$dir/book.xlsx"
+    val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(book))
+    try {
+      // malformed, and a few MB of spaces deflate far below minInflateRatio
+      zos.putNextEntry(new java.util.zip.ZipEntry("xl/workbook.xml"))
+      zos.write(("<workbook" + " " * (4 << 20)).getBytes("UTF-8"))
+      zos.closeEntry()
+    } finally zos.close()
+    intercept[InflationLimitException](Convert.run(spark, EngineConfig(
+      inputDir = book, inputFormat = "xlsx", format = "ndjson",
+      outputPath = Some(s"$dir/nd"), overwrite = true)))
+  }
+
   // ---- reading outputs back in write order, with no sort ----
 
   private val PartName = """part-(\d+)(?:-.*-c(\d+))?\.[a-z]+""".r

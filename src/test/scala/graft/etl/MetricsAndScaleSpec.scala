@@ -23,15 +23,18 @@ class MetricsAndScaleSpec extends AnyFunSuite {
     // 8 files; each row records its original global ordinal
     (0L until 4000L).toDF("ord").repartitionByRange(8, org.apache.spark.sql.functions.col("ord"))
       .write.parquet(dir)
-    val pos = IngestOps.withFileRowPos(spark, dir, keepFileCol = true)
+    val pos = IngestOps.withFileRowPos(spark, dir)
     assert(pos.count() == 4000)
     val stats = pos.agg(
       org.apache.spark.sql.functions.min("_pos"),
       org.apache.spark.sql.functions.max("_pos"),
       org.apache.spark.sql.functions.countDistinct("_pos")).head()
     assert(stats.getLong(0) == 0L && stats.getLong(1) == 3999L && stats.getLong(2) == 4000L)
-    // within every file, _pos must be contiguous (offset + local index)
-    val perFile = pos
+    // within every file, _pos must be contiguous (offset + local index);
+    // `ord` is unique, so it names each row's file
+    val files = spark.read.parquet(dir)
+      .select(org.apache.spark.sql.functions.col("_metadata.file_path").as("_file"), $"ord")
+    val perFile = pos.join(files, "ord")
       .groupBy("_file")
       .agg(org.apache.spark.sql.functions.min("_pos").as("lo"),
         org.apache.spark.sql.functions.max("_pos").as("hi"),

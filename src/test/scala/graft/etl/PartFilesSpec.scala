@@ -90,10 +90,10 @@ class PartFilesSpec extends AnyFunSuite {
 
   test("chunked csv files are Spark's CSV writer's, byte for byte, each with its header") {
     val dir = tmp("pf_csv")
-    def same(name: String, batch: Int, frame: () => DataFrame, orderCol: Option[String] = None): Unit = {
+    def same(name: String, batch: Int, frame: () => DataFrame): Unit = {
       val (a, b) = (s"$dir/ours_$name$batch", s"$dir/spark_$name$batch")
-      val w = Sinks.chunkedCsv(frame(), a, batch, orderCol)
-      SparkWriterSinks.chunkedCsv(frame(), b, batch, orderCol)
+      val w = Sinks.chunkedCsv(frame(), a, batch)
+      SparkWriterSinks.chunkedCsv(frame(), b, batch)
       val ours = files(a)
       assert(ours == files(b), s"$name batch=$batch")
       val header = ours.head._2.takeWhile(_ != '\n') + "\n"
@@ -105,7 +105,8 @@ class PartFilesSpec extends AnyFunSuite {
       // inside each range, and one chunk per range
       for (batch <- Seq(1, 7, 1000)) same("xlsx", batch, () => xlsxFrame(tmp("pf_csvx"), 3))
     }
-    for (batch <- Seq(1, 37)) same("orders", batch, () => orders, Some("o_orderkey"))
+    val byKey = () => orders.repartitionByRange(col("o_orderkey")).sortWithinPartitions("o_orderkey")
+    for (batch <- Seq(1, 37)) same("orders", batch, byKey)
     same("sparse", 2, () => sparse)
     // one column: a null renders as an empty line, "" as a quoted one
     same("onecol", 3, () => Seq("a", null, "", "b").toDF("c").repartition(1))

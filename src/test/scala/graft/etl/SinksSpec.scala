@@ -27,7 +27,7 @@ class SinksSpec extends AnyFunSuite {
   test("K2: chunked CSV — every chunk file has at most batchSize data rows") {
     val out = s"${tmpDir()}/csv"
     val orders = IngestOps.table(spark, sf0001, "orders") // 1500 rows
-    Sinks.chunkedCsv(orders, out, batchSize = 400, orderCol = Some("o_orderkey"))
+    Sinks.chunkedCsv(orders, out, batchSize = 400)
     val back = spark.read.option("header", "true").csv(out)
     assert(back.count() == 1500)
     val perFile = back.groupBy(input_file_name()).count().as[(String, Long)].collect()

@@ -3,7 +3,6 @@ package graft.etl
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
 
 /** The sinks that [[Sinks.ndjson]] and [[Sinks.chunkedCsv]] replaced,
   * written through Spark's own JSON and CSV writers, kept unchanged as the
@@ -37,11 +36,9 @@ object SparkWriterSinks {
   }
 
   def chunkedCsv(df: DataFrame, path: String, batchSize: Int,
-      orderCol: Option[String] = None, overwrite: Boolean = false): Unit = {
-    val d = orderCol.map(c => df.repartitionByRange(col(c)).sortWithinPartitions(col(c))).getOrElse(df)
-    d.write.mode(saveMode(overwrite))
+      overwrite: Boolean = false): Unit =
+    df.write.mode(saveMode(overwrite))
       .option("header", "true")
       .option("maxRecordsPerFile", batchSize.toLong)
       .csv(path)
-  }
 }

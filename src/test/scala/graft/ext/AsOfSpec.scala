@@ -21,13 +21,6 @@ class AsOfSpec extends AnyFunSuite {
     // "a" (t=5, before first quote) and "e" (t=14 < 15) dropped: inner semantics
   }
 
-  test("as-of left join keeps unmatched rows with null payload") {
-    val out = AsOf.asofJoin(trades, quotes, "k", "t", Map("px" -> "ref"), inner = false)
-      .select("id", "ref").collect()
-      .map(r => r.getString(0) -> Option(r.get(1))).toMap
-    assert(out("a").isEmpty && out("e").isEmpty && out.size == 6)
-  }
-
   test("equal timestamps: the right row at the same instant is visible") {
     val out = AsOf.asofJoin(trades, quotes, "k", "t", Map("px" -> "ref"))
       .filter($"id" === "b").select("ref").as[Double].head()

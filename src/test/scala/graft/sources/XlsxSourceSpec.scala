@@ -57,25 +57,20 @@ class XlsxSourceSpec extends AnyFunSuite {
     assert(rows.toSeq == Seq(("1", "", "3"), ("", "", "z")))
   }
 
-  test("sheet selection: case-insensitive name; index; reference error surface") {
+  test("sheet selection: case-insensitive name, else the first sheet") {
     val f = tmp("multi.xlsx")
     XlsxTestFiles.writeDense(f, Seq(
       ("First", Seq(Seq("a"), Seq("1"))),
       ("Second", Seq(Seq("b"), Seq("2")))))
     val byName = spark.read.format("xlsx").option("sheetName", "second").load(f)
     assert(byName.columns.toSeq == Seq("b") && byName.collect().map(_.getString(0)).toSeq == Seq("2"))
-    val byIdx = spark.read.format("xlsx").option("sheetIndex", "1").load(f)
-    assert(byIdx.columns.toSeq == Seq("b"))
+    val first = spark.read.format("xlsx").load(f)
+    assert(first.columns.toSeq == Seq("a") && first.collect().map(_.getString(0)).toSeq == Seq("1"))
     val e1 = intercept[IllegalArgumentException] {
       spark.read.format("xlsx").option("sheetName", "Missing").load(f)
     }
     assert(e1.getMessage.contains("Sheet with name 'Missing' not found") &&
       e1.getMessage.contains("Available sheets: [First, Second]"))
-    val e2 = intercept[IllegalArgumentException] {
-      spark.read.format("xlsx").option("sheetIndex", "5").load(f)
-    }
-    assert(e2.getMessage.contains("Invalid sheet index: 5") &&
-      e2.getMessage.contains("File contains 2 sheets"))
   }
 
   test("header fallback: blank header cells and width overflow name by index") {
@@ -87,14 +82,6 @@ class XlsxSourceSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("name", "1", "2"))
     assert(df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
       Seq(("x", "y", "z")))
-  }
-
-  test("header=false names every column by index and keeps row one") {
-    val f = tmp("nohdr.xlsx")
-    XlsxTestFiles.writeDense(f, Seq(("S", Seq(Seq("a", "b"), Seq("c", "d")))))
-    val df = spark.read.format("xlsx").option("header", "false").load(f)
-    assert(df.columns.toSeq == Seq("0", "1"))
-    assert(df.count() == 2)
   }
 
   test("directory read: one partition per file, rows union in file order") {
@@ -132,32 +119,6 @@ class XlsxSourceSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("c1", "c2", "c3"))
     assert(df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
       Seq(("a", "b", "")))
-  }
-
-  test("unionSheets: one partition per (file, sheet); headers per sheet; pad narrow") {
-    val f = tmp("union.xlsx")
-    XlsxTestFiles.writeDense(f, Seq(
-      ("Jan", Seq(Seq("id", "v"), Seq("1", "a"), Seq("2", "b"))),
-      ("Feb", Seq(Seq("id", "v"), Seq("3", "c"))),
-      ("Mar", Seq(Seq("id"), Seq("4"))))) // narrower sheet pads with ""
-    val df = spark.read.format("xlsx").option("unionSheets", "true").load(f)
-    assert(df.columns.toSeq == Seq("id", "v"))
-    assert(df.rdd.getNumPartitions == 3) // the intra-file parallelism grain
-    assert(df.collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq ==
-      Seq(("1", "a"), ("2", "b"), ("3", "c"), ("4", "")))
-    val e = intercept[IllegalArgumentException] {
-      spark.read.format("xlsx").option("unionSheets", "true")
-        .option("sheetName", "Jan").load(f).collect()
-    }
-    assert(e.getMessage.contains("cannot be combined"))
-    // partitioning must not change CONTENT (VERDICT r15 #4): the sheet-level
-    // partition scan equals the union of the three single-sheet reads
-    val perSheet = Seq("Jan", "Feb", "Mar").flatMap { sn =>
-      spark.read.format("xlsx").option("sheetName", sn).load(f).collect()
-        .map(r => (r.getString(0), if (r.schema.size > 1) r.getString(1) else ""))
-    }.sorted
-    assert(df.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-      == perSheet)
   }
 
   test("column reference arithmetic: AA27 and friends") {
@@ -404,7 +365,6 @@ class XlsxSourceSpec extends AnyFunSuite {
     assert(sheetSize > 1000000) // several deflate blocks
     assert(bothWays(f) == expected)
     assert(bothWays(f, Map("headerRow" -> "3")) == expected.drop(3))
-    assert(bothWays(f, Map("header" -> "false")).size == expected.size + 1)
     FileSplits.withRanges(7) {
       val parts = planned(f)
       assert(parts.size == 7 && parts.head.start.isEmpty)
@@ -428,6 +388,20 @@ class XlsxSourceSpec extends AnyFunSuite {
     val preamble = rowsBook("ap_preamble.xlsx", inline(2, "p1") + blank(3) + inline(4, "p2") +
       blank(5) + blank(6) + inline(7, "p3") + inline(8, "d1") + blank(9) + inline(10, "d2"))._1
     assert(bothWays(preamble, Map("headerRow" -> "3")).map(_.head) == Seq("d1", "d2"))
+  }
+
+  test("one plan per load(): collect() runs it whatever the confs") {
+    val (f, expected) = bigBook("plan_once.xlsx", 20000)
+    val df = FileSplits.withRanges(7)(spark.read.format("xlsx").load(f))
+    FileSplits.withRanges(2) {
+      assert(df.rdd.getNumPartitions == 7)
+      assert(df.collect().map(_.toSeq.map(_.toString)).toSeq == expected)
+    }
+    val given = FileSplits.withRanges(7)(spark.read.format("xlsx").schema(df.schema).load(f))
+    FileSplits.withRanges(2) {
+      assert(given.rdd.getNumPartitions == 7)
+      assert(given.collect().map(_.toSeq.map(_.toString)).toSeq == expected)
+    }
   }
 
   test("access points: a workbook rewritten between load() and collect() reads its new rows") {
