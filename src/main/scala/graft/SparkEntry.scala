@@ -3549,27 +3549,30 @@ object SparkEntry {
 
     // BM25 retrieval scoring against a fixed query — rational idf (same
     // monotone-transform argument as text_tfidf), bit-stable double math
-    // multi-query BM25 retrieval through the inverted index (ext/TextOps
-    // .searchTopK): query terms equi-join the postings — each query touches
-    // only docs sharing a term, partial scores combine map-side, top-k
-    // plans as WindowGroupLimit; per-term doubles floor-quantize to 1e-9
-    // BIGINT nano-units before the (query, doc) sum so ranking is
-    // partitioning-independent (see searchTopK's scaladoc)
+    // multi-query BM25 retrieval (ext/TextOps.searchTopK): one narrow
+    // per-document pass scores each (query, doc) pair that shares a term
+    // against a broadcast 1-row corpus-stats aggregate, and top-k plans as
+    // a partial WindowGroupLimit before the one exchange on query_id;
+    // per-term doubles floor-quantize to 1e-9 BIGINT nano-units before the
+    // (query, doc) sum so ranking is partitioning-independent (see
+    // searchTopK's scaladoc)
     QueryRow("search_bm25_topk", (s, dir) =>
       TextOps.searchTopK(t(s, dir, "documents")).orderBy("query_id", "rank"),
       TextOps.searchTopKSqlDuck(),
       accepted = Some("BroadcastNestedLoopJoin" ->
-        "crossJoin of the 1-row corpus-stats aggregate onto the postings join")),
+        "crossJoin of the 1-row corpus-stats aggregate onto the per-document term counts")),
 
     // Reciprocal Rank Fusion (ext/TextOps.searchRrf, Cormack et al.
     // SIGIR'09): BM25 list ⊕ distinct-term-overlap list, exact
-    // 1e6 DIV (60+rank) micro-unit fusion — rank-only hybrid retrieval,
-    // fusion join is list-sized (≤ depth per query), never corpus-sized
+    // 1e6 DIV (60+rank) micro-unit fusion — rank-only hybrid retrieval;
+    // both lists rank the one scoring relation and fuse in a (query, doc)
+    // max over their union, list-sized (≤ depth per query) and clustered
+    // by the lists' shared query_id partitioning
     QueryRow("search_rrf_fusion", (s, dir) =>
       TextOps.searchRrf(t(s, dir, "documents")).orderBy("query_id", "rank"),
       TextOps.searchRrfSqlDuck(),
       accepted = Some("BroadcastNestedLoopJoin" ->
-        "inherits searchTopK's crossJoin of the 1-row corpus-stats aggregate; the fusion join itself is a (query, doc)-keyed equi-join of ≤ depth-per-query lists")),
+        "inherits searchTopK's crossJoin of the 1-row corpus-stats aggregate; the fusion is a (query, doc)-keyed aggregate of ≤ depth-per-query lists, no join")),
 
     // RAKE keyword extraction (ext/TextOps.rakeKeywords, Rose et al. 2010):
     // stopword-delimited candidate phrases, deg/freq word scores in exact
@@ -3638,12 +3641,14 @@ object SparkEntry {
     // ranked-retrieval scorecard over the BM25 top-k: graded term-containment
     // relevance, DCG via pinned 1/log2 literals floor-quantized to nano
     // BIGINTs, nDCG/MRR as integer DIVs — the 4th eval harness (after LSH
-    // pair eval and PQ/SRP recall@k); output is |queries| rows
+    // pair eval and PQ/SRP recall@k); the BM25 and ideal rankings and the
+    // rel ≥ 2 count read searchTopK's scoring relation and meet in one
+    // query_id-keyed aggregate; output is |queries| rows
     QueryRow("search_eval_ndcg", (s, dir) =>
       TextOps.searchEval(t(s, dir, "documents")),
       TextOps.searchEvalSqlDuck(),
       accepted = Some("BroadcastNestedLoopJoin" ->
-        "the searchTopK scoring pass it evaluates carries the same 1-row corpus-stats crossJoin; the eval layers are broadcast k-row joins")),
+        "the searchTopK scoring pass it evaluates carries the same 1-row corpus-stats crossJoin; the eval layers join nothing")),
 
     QueryRow("text_bm25", (s, dir) =>
       graft.ext.TextOps.bm25(t(s, dir, "documents")).orderBy("doc_id"),

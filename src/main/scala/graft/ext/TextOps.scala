@@ -1273,23 +1273,32 @@ object TextOps {
       count(lit(1)).as("n_docs"),
       sum(col("dl")).as("sum_dl") +: terms.map(t =>
         sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t")): _*)
-    // constants rendered through Double.toString on BOTH engines (round-trip
-    // exact), so k1+1 parses to the identical double in the SQL twin. Every
-    // operand is cast to DOUBLE explicitly BEFORE any arithmetic: DuckDB
-    // parses `0.5`-style literals as exact DECIMAL and would carry wider
-    // intermediates than IEEE double, diverging by an ulp.
-    val k1p1 = k1 + 1
-    val oneMinusB = 1 - b
-    def termScore(t: String): Column =
-      col(s"tf_$t").cast("double") * lit(k1p1) /
-        (col(s"tf_$t").cast("double") + lit(k1) * (lit(oneMinusB) + lit(b) *
-          ((col("dl") * col("n_docs")).cast("double") / col("sum_dl").cast("double")))) *
-        (((col("n_docs") - col(s"df_$t")).cast("double") + lit(0.5)) /
-          (col(s"df_$t").cast("double") + lit(0.5)))
     perDoc.crossJoin(broadcast(stats))
       .select(Seq(col("doc_id")) ++ terms.map(t => col(s"tf_$t")) :+
-        terms.map(termScore).reduce(_ + _).as("bm25"): _*)
+        terms.map(t => bm25Term(col(s"tf_$t"), bm25Norm(k1, b),
+          bm25Idf(col(s"df_$t")), k1)).reduce(_ + _).as("bm25"): _*)
   }
+
+  /** One BM25 term contribution, `tf·(k1+1) / (tf + norm) · idf`: Robertson
+    * tf saturation ([[bm25Norm]] is the doc-length part of its denominator)
+    * times the ln-free rational idf ([[bm25Idf]]). The constants render
+    * through Double.toString on BOTH engines (round-trip exact), so k1+1
+    * parses to the identical double in the SQL twins. Every operand is cast
+    * to DOUBLE explicitly BEFORE any arithmetic: DuckDB parses `0.5`-style
+    * literals as exact DECIMAL and would carry wider intermediates than
+    * IEEE double, diverging by an ulp. A part computed once into a column
+    * gives the same double as the same part written inline. */
+  private def bm25Term(tf: Column, norm: Column, idf: Column, k1: Double): Column =
+    tf.cast("double") * lit(k1 + 1) / (tf.cast("double") + norm) * idf
+
+  /** `k1·(1 − b + b·dl/avgdl)`, reading `dl`, `n_docs` and `sum_dl`. */
+  private def bm25Norm(k1: Double, b: Double): Column =
+    lit(k1) * (lit(1 - b) + lit(b) *
+      ((col("dl") * col("n_docs")).cast("double") / col("sum_dl").cast("double")))
+
+  /** `(N − df + 0.5) / (df + 0.5)`, reading `n_docs`. */
+  private def bm25Idf(df: Column): Column =
+    ((col("n_docs") - df).cast("double") + lit(0.5)) / (df.cast("double") + lit(0.5))
 
   def bm25SqlDuck(terms: Seq[String] = Seq("spark", "join", "stream"),
       k1: Double = 1.2, b: Double = 0.75): String = {
@@ -1318,13 +1327,91 @@ object TextOps {
        |FROM d CROSS JOIN st ORDER BY doc_id""".stripMargin
   }
 
-  /** Multi-query BM25 retrieval: rank the corpus against a SET of queries
-    * through the inverted index — the serving-path complement to [[bm25]]
-    * (which scores every doc against one fixed term list). The plan is the
-    * canonical sharded-retrieval shape: query terms equi-join the (term,
-    * doc, tf) postings relation, so each query touches only docs
-    * containing at least one of its terms, and per-(query, doc) partial
-    * scores combine map-side — never a queries × corpus cross product.
+  /** Each query's distinct whitespace-split terms, in first-seen order. */
+  private def queryTerms(queries: Seq[(String, String)]): Seq[(String, Seq[String])] =
+    queries.map { case (qid, text) =>
+      qid -> text.split("\\s+").filter(_.nonEmpty).distinct.toSeq }
+
+  /** The scoring relation of the search family ([[searchTopK]],
+    * [[searchRrf]], [[searchEval]]): one row per (query, doc) pair that
+    * shares at least one query term, (query_id, doc_id, score_nano, rel).
+    * `rel` is the number of the query's distinct terms in the doc;
+    * `score_nano` is the BM25 score, each term's contribution floor-
+    * quantized to 1e-9 units before an exact BIGINT sum (null for a null
+    * doc_id, which never reaches a BM25 list but counts in the corpus
+    * stats and can reach a `rel` ranking).
+    *
+    * Built the way [[bm25]] is built. One narrow pass counts each query
+    * term in each document's tokens ([[graft.functions.TermCounts]]: one
+    * hash lookup per token); rows sharing a doc_id merge into one
+    * document through a doc_id-keyed sum of one slim row per document, and
+    * only documents with a token survive it (n_docs counts only those).
+    * The corpus stats (N,
+    * total length, each query term's df) are ONE single-row aggregate over
+    * the merged documents, broadcast back; the doc_id exchange under both
+    * is the same plan, so Spark reuses it and the corpus is tokenized once
+    * per action. No (term, doc) relation exists. */
+  private def bm25Scored(docs: DataFrame, queries: Seq[(String, String)],
+      k1: Double, b: Double, textCol: String): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
+    require(queries.nonEmpty && queries.map(_._1).distinct.size == queries.size)
+    val qTerms = queryTerms(queries)
+    val terms = qTerms.flatMap(_._2).distinct
+    val tf = terms.indices.map(i => s"_tf$i")
+    val df = terms.indices.map(i => s"_df$i")
+    // dl > 0 is tested after the doc_id sum: a filter below it would be
+    // pushed into the scan and tokenize every document twice
+    val perDoc = docs.filter(col(textCol).isNotNull)
+      .select(col("doc_id"), tokensArr(textCol).as("_toks"))
+      .select(col("doc_id"), size(col("_toks")).cast("long").as("dl"),
+        toColumn(graft.functions.TermCounts(toExpression(col("_toks")), terms)).as("_tfs"))
+      .groupBy("doc_id")
+      .agg(sum(col("dl")).as("dl"), tf.indices.map(i => sum(col("_tfs")(i)).as(tf(i))): _*)
+      .filter(col("dl") > 0)
+    // each term's idf once, in the 1-row stats; each doc's length norm once
+    val idf = terms.indices.map(i => s"_idf$i")
+    val stats = perDoc.agg(count(lit(1)).as("n_docs"),
+        sum(col("dl")).as("sum_dl") +: tf.zip(df).map { case (t, d) =>
+          sum(when(col(t) > 0, 1L).otherwise(0L)).as(d) }: _*)
+      .select(col("n_docs") +: col("sum_dl") +:
+        df.zip(idf).map { case (d, i) => bm25Idf(col(d)).as(i) }: _*)
+    val index = terms.zipWithIndex.toMap
+    def has(i: Int): Column = col(tf(i)) > 0
+    val perQuery = qTerms.map { case (qid, ts) =>
+      val is = ts.map(index)
+      struct(lit(qid).as("query_id"),
+        when(col("doc_id").isNotNull, is.map(i =>
+          when(has(i), floor(bm25Term(col(tf(i)), col("_norm"), col(idf(i)), k1) *
+            lit(1000000000.0)).cast("long")).otherwise(0L))
+          .foldLeft(lit(0L))(_ + _)).as("score_nano"),
+        is.map(i => when(has(i), 1L).otherwise(0L))
+          .foldLeft(lit(0L))(_ + _).as("rel"))
+    }
+    perDoc.crossJoin(broadcast(stats))
+      .withColumn("_norm", bm25Norm(k1, b))
+      .select(col("doc_id"), explode(array(perQuery: _*)).as("_q"))
+      .filter(col("_q.rel") > 0)
+      .select(col("_q.query_id"), col("doc_id"), col("_q.score_nano"), col("_q.rel"))
+  }
+
+  /** The first `k` rows per query by `by` descending, then doc_id: a
+    * row_number filter, which Spark plans as a partial WindowGroupLimit
+    * before the one exchange on query_id. */
+  private def topPerQuery(scored: DataFrame, by: String, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("query_id").orderBy(col(by).desc, col("doc_id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** The BM25 list of every query: its top `k` docs by score_nano. */
+  private def bm25List(scored: DataFrame, k: Int): DataFrame =
+    topPerQuery(scored.filter(col("score_nano").isNotNull), "score_nano", k)
+
+  /** Multi-query BM25 retrieval: rank the corpus against a SET of queries —
+    * the serving-path complement to [[bm25]] (which scores every doc
+    * against one fixed term list). Each query touches only docs sharing at
+    * least one of its terms; never a queries × corpus cross product.
     *
     * Determinism: each per-term contribution is one fixed-order double
     * expression (identical text in the oracle), FLOOR-quantized to 1e-9
@@ -1333,21 +1420,12 @@ object TextOps {
     * (unlike a decimal CAST, which rounds Spark's shortest-repr string but
     * DuckDB's exact binary value) is representation-insensitive. The ≤
     * 1e-9-per-term bias is pinned into the score's semantics on both
-    * engines. IDF is the same ln-free rational form as [[bm25]].
+    * engines. IDF is the same ln-free rational form as [[bm25]]. Rows that
+    * share a doc_id are one document; a null doc_id is never ranked.
     *
-    * Top-k per query plans as a WindowGroupLimit (partial top-k before the
-    * rank window), so only k candidates per query survive each partition. */
-  /** Shared BM25 term-frequency relation: one row per distinct (term, doc)
-    * with its occurrence count — THE corpus pass of the whole search
-    * family. Persisted; built identically by searchTopK and the eval/rrf
-    * graded-relevance consumers, so within one action Spark's CacheManager
-    * plan-matches every use onto ONE materialization (the search rows used
-    * to tokenize the corpus 2-4 times per action through differently-
-    * shaped projections of the same token stream). */
-  private def bm25Tf(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(col("doc_id"), explode(tokensArr(textCol)).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf")).persist()
-
+    * Shape: the one-pass scoring relation [[bm25Scored]], then top-k per
+    * query as a WindowGroupLimit (partial top-k before the one exchange on
+    * query_id), so only k candidates per query leave each partition. */
   def searchTopK(docs: DataFrame,
       queries: Seq[(String, String)] = Seq(
         "q_hash" -> "hash join stream",
@@ -1355,47 +1433,8 @@ object TextOps {
         "q_sort" -> "window sort order"),
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(queries.nonEmpty && queries.map(_._1).distinct.size == queries.size)
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val k1p1 = k1 + 1
-    val oneMinusB = 1 - b
-    // (r18) dl derives from the CACHED tf (Σ tf per doc = the doc's token
-    // count — identical by definition) instead of from the raw token
-    // stream: dl was evaluated twice (score join + corpus stats), and each
-    // evaluation re-ran the corpus tokenize+explode. Now the tokenize runs
-    // exactly once per action (into tf); dl's two evaluations are cheap
-    // cache scans (NOT persisted — an A/B of the persisted form measured
-    // the extra slim-rollup materialization as a net loss here, unlike the
-    // r17 slim-rollup cases whose upstreams were unpersisted).
-    val tf = bm25Tf(docs, textCol)
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val qTerms = queries
-      .flatMap { case (qid, text) =>
-        text.split("\\s+").filter(_.nonEmpty).distinct.map(qid -> _) }
-      .toDF("query_id", "term")
-    val contrib =
-      col("tf").cast("double") * lit(k1p1) /
-        (col("tf").cast("double") + lit(k1) * (lit(oneMinusB) + lit(b) *
-          ((col("dl") * col("n_docs")).cast("double") / col("sum_dl").cast("double")))) *
-        (((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5)))
-    val scored = tf
-      .join(broadcast(qTerms), "term")
-      .join(broadcast(df), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("query_id"), col("doc_id"),
-        floor(contrib * lit(1000000000.0)).cast("long").as("c"))
-      .groupBy("query_id", "doc_id").agg(sum(col("c")).as("score_nano"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score_nano").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    bm25List(bm25Scored(docs, queries, k1, b, textCol), k)
       .select(col("query_id"), col("rank"), col("doc_id"),
         (col("score_nano").cast("double") / lit(1000000000.0)).as("score"))
   }
@@ -1586,7 +1625,6 @@ object TextOps {
        |WHERE rank <= $k ORDER BY phrase_id, rank""".stripMargin
   }
 
-  /** Oracle twin of [[searchTopK]]: postings join + quantized sum as SQL. */
   /** The BM25 scoring chain as a reusable CTE body ending in
     * `sc(query_id, doc_id, score_nano)` — shared by [[searchTopKSqlDuck]]
     * and oracles that build ON the BM25 ranking (RRF fusion, nDCG). */
@@ -1594,10 +1632,8 @@ object TextOps {
       queries: Seq[(String, String)], k1: Double, b: Double): String = {
     val k1p1 = k1 + 1
     val oneMinusB = 1 - b
-    val qRows = queries
-      .flatMap { case (qid, text) =>
-        text.split("\\s+").filter(_.nonEmpty).distinct.map(qid -> _) }
-      .map { case (qid, t) => s"('$qid', '$t')" }.mkString(", ")
+    val qRows = queryTerms(queries)
+      .flatMap { case (qid, ts) => ts.map(t => s"('$qid', '$t')") }.mkString(", ")
     s""" toks AS (SELECT doc_id, unnest(${tokensSqlDuck("text")}) AS term
        |    FROM documents),
        | tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
@@ -1651,10 +1687,11 @@ object TextOps {
     * absent from a list contributes 0 from it); output is the fused top-k
     * per query with both source ranks (0 = not on that list).
     *
-    * Scale shape: BM25 reuses the postings chain; the overlap ranking is a
-    * broadcast query-term join + per-query WindowGroupLimit; fusion is one
-    * (query, doc)-keyed full-outer join of two ≤ depth-per-query lists —
-    * list-sized, never corpus-sized. */
+    * Scale shape: both rankings read the one scoring relation
+    * ([[bm25Scored]]), each a partial WindowGroupLimit before its exchange
+    * on query_id; fusion is a (query, doc)-keyed max over the union of the
+    * two ≤ depth-per-query lists, which that shared partitioning already
+    * clusters — list-sized, never corpus-sized, and no further exchange. */
   def searchRrf(docs: DataFrame,
       queries: Seq[(String, String)] = Seq(
         "q_hash" -> "hash join stream",
@@ -1662,39 +1699,23 @@ object TextOps {
         "q_sort" -> "window sort order"),
       k: Int = 10, kRrf: Int = 60, depth: Int = 50,
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && kRrf >= 1 && depth >= k,
       s"bad params: k=$k kRrf=$kRrf depth=$depth")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bm = searchTopK(docs, queries, k = depth, textCol = textCol)
-      .select(col("query_id"), col("doc_id"), col("rank").as("r1"))
-    val qTerms = queries
-      .flatMap { case (qid, text) =>
-        text.split("\\s+").filter(_.nonEmpty).distinct.map(qid -> _) }
-      .toDF("query_id", "term")
-    // (r18) same tf-derivation as searchEval's rel: one row per distinct
-    // (term, doc) in tf, so matched-row counts ≡ matched-distinct-term
-    // counts, and the corpus tokenize plan-matches onto searchTopK's
-    // cached tf instead of running a second time
-    val rel = bm25Tf(docs, textCol)
-      .join(broadcast(qTerms), "term")
-      .groupBy("query_id", "doc_id").agg(count(lit(1)).as("rel"))
-    val wOv = Window.partitionBy("query_id").orderBy(col("rel").desc, col("doc_id"))
-    val ov = rel.withColumn("r2", row_number().over(wOv).cast("long"))
-      .filter(col("r2") <= depth)
-      .select("query_id", "doc_id", "r2")
-    val fused = bm.join(ov, Seq("query_id", "doc_id"), "full_outer")
+    val scored = bm25Scored(docs, queries, 1.2, 0.75, textCol)
+    val none = lit(null).cast("long")
+    val bm = bm25List(scored, depth)
+      .select(col("query_id"), col("doc_id"), col("rank").as("r1"), none.as("r2"))
+    val ov = topPerQuery(scored, "rel", depth)
+      .select(col("query_id"), col("doc_id"), none.as("r1"), col("rank").as("r2"))
+    val fused = bm.union(ov)
+      .groupBy("query_id", "doc_id").agg(max(col("r1")).as("r1"), max(col("r2")).as("r2"))
       .select(col("query_id"), col("doc_id"),
         (coalesce(expr(s"CAST(1000000 AS BIGINT) DIV ($kRrf + r1)"), lit(0L)) +
           coalesce(expr(s"CAST(1000000 AS BIGINT) DIV ($kRrf + r2)"), lit(0L)))
           .as("rrf_micro"),
         coalesce(col("r1"), lit(0L)).as("bm_rank"),
         coalesce(col("r2"), lit(0L)).as("ov_rank"))
-    val wF = Window.partitionBy("query_id")
-      .orderBy(col("rrf_micro").desc, col("doc_id"))
-    fused.withColumn("rank", row_number().over(wF).cast("long"))
-      .filter(col("rank") <= k)
+    topPerQuery(fused, "rrf_micro", k)
       .select("query_id", "rank", "doc_id", "rrf_micro", "bm_rank", "ov_rank")
   }
 
@@ -1935,12 +1956,13 @@ object TextOps {
     * anywhere. IDCG ranks ONLY the rel ≥ 1 docs (absent docs gain 0 in both
     * engines).
     *
-    * Shape: the ranking is [[searchTopK]] unchanged (WindowGroupLimit
-    * top-k); rel is one broadcast join of the ≤|q|·|terms| query-term list
-    * against distinct doc tokens + a (query, doc)-keyed count; the ideal
-    * ranking is a per-query WindowGroupLimit over rel (k rows survive);
-    * discounts join via a broadcast k-row table. Output is |queries| rows —
-    * driver-safe at any corpus size. */
+    * Shape: the BM25 ranking, the ideal ranking and the rel ≥ 2 count all
+    * read the one scoring relation ([[bm25Scored]]), whose rows carry rel,
+    * so no join looks rel up; each ranking is a partial WindowGroupLimit
+    * before its exchange on query_id, the discount is an element of a
+    * k-literal array, and the three parts meet in one query_id-keyed
+    * aggregate over their union, which that shared partitioning already
+    * clusters. Output is |queries| rows — driver-safe at any corpus size. */
   def searchEval(docs: DataFrame,
       queries: Seq[(String, String)] = Seq(
         "q_hash" -> "hash join stream",
@@ -1948,47 +1970,29 @@ object TextOps {
         "q_sort" -> "window sort order"),
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && k <= DcgDiscounts.size,
       s"k must be in [1, ${DcgDiscounts.size}], got $k")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val wdf = broadcast(DcgDiscounts.take(k)
-      .map { case (r, s) => (r, s.toDouble) }.toDF("rank", "w"))
-    val qTerms = broadcast(queries
-      .flatMap { case (qid, text) =>
-        text.split("\\s+").filter(_.nonEmpty).distinct.map(qid -> _) }
-      .toDF("query_id", "term"))
-    // graded relevance: distinct-term containment count per (query, doc).
-    // (r18) derived from the shared tf relation — one row per distinct
-    // (term, doc), so counting matched rows ≡ counting matched distinct
-    // terms — instead of a second tokenize of the corpus through
-    // array_distinct; CacheManager plan-matches this onto searchTopK's
-    // cached tf within the same action.
-    val rel =
-      bm25Tf(docs, textCol).join(qTerms, "term")
-        .groupBy("query_id", "doc_id").agg(count(lit(1)).as("rel")).persist()
-    val topk = searchTopK(docs, queries, k, k1, b, textCol)
-      .join(rel, Seq("query_id", "doc_id"), "left")
-      .select(col("query_id"), col("rank"), coalesce(col("rel"), lit(0L)).as("rel"))
-    val dcg = topk.join(wdf, "rank")
-      .groupBy("query_id")
-      .agg(sum(floor(col("rel").cast("double") * col("w") * lit(1000000000.0))
-        .cast("long")).as("dcg_nano"),
-        min(when(col("rel") >= 2, col("rank"))).as("first_rel_rank"))
-    val idealW = Window.partitionBy("query_id")
-      .orderBy(col("rel").desc, col("doc_id"))
-    val idcg = rel.withColumn("rank", row_number().over(idealW).cast("long"))
-      .filter(col("rank") <= k)
-      .join(wdf, "rank")
-      .groupBy("query_id")
-      .agg(sum(floor(col("rel").cast("double") * col("w") * lit(1000000000.0))
-        .cast("long")).as("idcg_nano"),
-        count(lit(1)).as("n_ideal"))
-    val nRel = rel.filter(col("rel") >= 2)
+    val scored = bm25Scored(docs, queries, k1, b, textCol)
+    val discounts = typedLit(DcgDiscounts.take(k).map(_._2.toDouble))
+    val gainNano = floor(col("rel").cast("double") *
+      element_at(discounts, col("rank").cast("int")) * lit(1000000000.0)).cast("long")
+    val none = lit(null).cast("long")
+    // the three per-query parts, each already partitioned on query_id, meet
+    // in one query_id-keyed aggregate; a query with no BM25 list (its only
+    // match a null doc_id) has no dcg and no row
+    val bm = bm25List(scored, k).select(col("query_id"), gainNano.as("dcg"),
+      when(col("rel") >= 2, col("rank")).as("first_rel"), none.as("idcg"),
+      none.as("n_rel"))
+    val ideal = topPerQuery(scored, "rel", k)
+      .select(col("query_id"), none, none, gainNano, none)
+    val nRel = scored.filter(col("rel") >= 2)
       .groupBy("query_id").agg(count(lit(1)).as("n_rel"))
-    dcg.join(idcg, Seq("query_id"), "left")
-      .join(nRel, Seq("query_id"), "left")
+      .select(col("query_id"), none, none, none, col("n_rel"))
+    bm.union(ideal).union(nRel)
+      .groupBy("query_id")
+      .agg(sum(col("dcg")).as("dcg_nano"), min(col("first_rel")).as("first_rel_rank"),
+        sum(col("idcg")).as("idcg_nano"), sum(col("n_rel")).as("n_rel"))
+      .filter(col("dcg_nano").isNotNull)
       .select(col("query_id"),
         coalesce(col("n_rel"), lit(0L)).as("n_rel"),
         col("dcg_nano"),
@@ -2000,48 +2004,19 @@ object TextOps {
       .orderBy("query_id")
   }
 
-  /** Oracle twin of [[searchEval]]: the [[searchTopKSqlDuck]] scoring CTEs
-    * verbatim, a rel CTE, the same pinned discount VALUES table, identical
-    * floor-to-nano quantization and integer DIVs. */
+  /** Oracle twin of [[searchEval]]: the shared BM25 scoring CTEs, a rel
+    * CTE, the same pinned discount VALUES table, identical floor-to-nano
+    * quantization and integer DIVs. */
   def searchEvalSqlDuck(
       queries: Seq[(String, String)] = Seq(
         "q_hash" -> "hash join stream",
         "q_scan" -> "scan filter batch",
         "q_sort" -> "window sort order"),
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75): String = {
-    val k1p1 = k1 + 1
-    val oneMinusB = 1 - b
-    val qRows = queries
-      .flatMap { case (qid, text) =>
-        text.split("\\s+").filter(_.nonEmpty).distinct.map(qid -> _) }
-      .map { case (qid, t) => s"('$qid', '$t')" }.mkString(", ")
     val wRows = DcgDiscounts.take(k)
       .map { case (r, s) => s"($r, CAST($s AS DOUBLE))" }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, unnest(${tokensSqlDuck("text")}) AS term
-       |    FROM documents),
-       | tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
-       |   FROM toks GROUP BY term, doc_id),
-       | dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-       |   FROM toks GROUP BY doc_id),
-       | df AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-       |   FROM tf GROUP BY term),
-       | st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       |     CAST(sum(dl) AS BIGINT) AS sum_dl FROM dl),
-       | q(query_id, term) AS (VALUES $qRows),
+    s"""WITH${bm25CteDuck(queries, k1, b)},
        | w(rank, w) AS (VALUES $wRows),
-       | sc AS (SELECT q.query_id, tf.doc_id,
-       |    CAST(sum(CAST(floor((
-       |      CAST(tf.tf AS DOUBLE) * CAST($k1p1 AS DOUBLE) /
-       |      (CAST(tf.tf AS DOUBLE) + CAST($k1 AS DOUBLE) * (CAST($oneMinusB AS DOUBLE) + CAST($b AS DOUBLE) *
-       |        (CAST(dl.dl * st.n_docs AS DOUBLE) / CAST(st.sum_dl AS DOUBLE)))) *
-       |      ((CAST(st.n_docs - df.df AS DOUBLE) + CAST(0.5 AS DOUBLE)) /
-       |       (CAST(df.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-       |      ) * 1000000000.0E0) AS BIGINT)) AS BIGINT) AS score_nano
-       |   FROM tf JOIN q ON tf.term = q.term
-       |   JOIN df ON df.term = tf.term
-       |   JOIN dl ON dl.doc_id = tf.doc_id
-       |   CROSS JOIN st
-       |   GROUP BY q.query_id, tf.doc_id),
        | topk AS (SELECT query_id, doc_id, rank FROM (
        |   SELECT query_id, doc_id,
        |     CAST(row_number() OVER (PARTITION BY query_id

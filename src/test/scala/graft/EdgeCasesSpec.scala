@@ -258,6 +258,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(Dedup.simhashHammingPairs(emptyDocs).count() == 0)
     assert(Graph.linkPrediction(emptyPairs).count() == 0)
     assert(TextOps.searchTopK(emptyDocs).count() == 0)
+    assert(TextOps.searchRrf(emptyDocs).count() == 0)
     assert(Pipelines.sourceOverlap(emptyDocs).count() == 0)
     assert(Pipelines.dedupWeights(emptyDocs).count() == 0)
     assert(Multimodal.patches(Multimodal.asMedia(emptyDocs)).count() == 0)

@@ -67,7 +67,7 @@ class SparkEntryRegistrySpec extends AnyFunSuite {
       r.accepted.map { case (smells, why) => s"${r.name}|$smells|$why" })
     assert(accepted.size == 41)
     assert(sha256(accepted.sorted) ==
-      "955234cf27f0ad6c0ddbe197c1c2f8a9c869e59d7049150346776f88b75c1ad9")
+      "1c80112af2f472a55d11c2ab8dc49d5ce1219b001560f01ba50eb56dbaa89d3f")
     assert(SparkEntry.rows.filterNot(_.benched).map(_.name) == Seq("dedup_embedding_cosine"))
   }
 }
