@@ -1346,11 +1346,11 @@ object TextOps {
     * hash lookup per token); rows sharing a doc_id merge into one
     * document through a doc_id-keyed sum of one slim row per document, and
     * only documents with a token survive it (n_docs counts only those).
-    * The corpus stats (N,
-    * total length, each query term's df) are ONE single-row aggregate over
-    * the merged documents, broadcast back; the doc_id exchange under both
-    * is the same plan, so Spark reuses it and the corpus is tokenized once
-    * per action. No (term, doc) relation exists. */
+    * The corpus stats (N, total length, each query term's df) are ONE
+    * single-row aggregate over the merged documents, broadcast back; the
+    * doc_id exchange under both is the same plan, so Spark reuses it and
+    * the corpus is tokenized once per action. No (term, doc) relation
+    * exists. */
   private def bm25Scored(docs: DataFrame, queries: Seq[(String, String)],
       k1: Double, b: Double, textCol: String): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}

@@ -36,7 +36,7 @@ case class TermCounts(child: Expression, terms: Seq[String]) extends UnaryExpres
     TermCounts.count(tokens.asInstanceOf[ArrayData], index)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idx = ctx.addReferenceObj("termIndex", TermCounts.index(terms), "java.util.HashMap")
+    val idx = ctx.addReferenceObj("termIndex", index, "java.util.HashMap")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.TermCounts.count($c, $idx);")
   }
